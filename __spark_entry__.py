@@ -12,6 +12,10 @@ package; this module is a thin adapter over its query registry.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,204 +30,37 @@ def entry(spark: SparkSession) -> DataFrame:
     return registry.q_star_revenue(spark, "/root/testdata/sf0.001")
 
 
-# Queries with a GREEN row in any past round's CORRECTNESS_r{N}.json
-# (r1+r2 block, then the 48 round-3 greens). The driver verifies only
-# the first 50 entries of queries() per round, so ordering is a
-# coverage rotation: anything NOT yet driver-verified (new queries and
-# the two round-3 hash-fails whose oracles were re-cast this round) is
-# emitted FIRST; already-hard-verified queries rotate to the back. All
-# entries stay selfcheck-verified regardless of order. After each
-# round, fold the new green rows into this set (CLAUDE.md rule).
-_DRIVER_VERIFIED = frozenset(
-    {
-        # rounds 1-2
-        "pricing_summary", "star_revenue", "coord_projection_cast",
-        "dedup_load", "duplicate_audit", "orders_without_lineitems",
-        "fk_semi_urgent", "freshness_latest_hour", "fuzzy_best_match",
-        "cdc_last_write_wins", "hourly_event_stats", "json_props_extract",
-        "text_stats", "text_quality", "lang_id", "doc_fingerprint",
-        "token_topk", "dedup_exact_text", "ngram_jaccard_pairs",
-        "minhash_lsh_pairs", "simhash_near_dup", "ann_cosine_topk",
-        "ann_ivf_topk", "embedding_near_dup", "multimodal_features",
-        "dlq_split_fk", "reconcile_counts", "gmt7_hourly", "set_ops",
-        "top_customers_by_balance", "rollup_revenue",
-        "window_running_metrics", "asof_purchase_click", "sessionize",
-        "priority_late_orders", "customer_order_distribution",
-        "top_customer_per_nation", "large_orders", "embedding_stats",
-        "dedup_clusters", "grouped_pct_rank", "value_percentiles",
-        "value_moments", "value_histogram", "string_functions",
-        "orders_pivot", "ann_ivf_learned", "conditional_aggregates",
-        "pattern_filters",
-        # round 4 (50 green rows in CORRECTNESS_r04.json)
-        "ann_lsh_topk", "ann_recall_eval", "approx_quantile_check",
-        "array_functions", "arrow_vector_norms", "brand_exclusion_counts",
-        "brands_listagg", "corpus_curation", "corpus_curation_v2",
-        "cube_revenue", "dedup_keep_best", "doc_chunks",
-        "doc_feature_matrix", "forecast_revenue_delta",
-        "gapfill_hourly_series", "grouping_sets_revenue", "hard_negatives",
-        "incremental_dedup", "jaccard_histogram", "large_quantity_orders",
-        "lateral_top_orders", "lineitem_unpivot", "lm_quality_filter",
-        "min_price_per_type", "multimodal_decode",
-        "multimodal_frame_sample", "multimodal_resize",
-        "nation_pair_volume", "normalized_fingerprints",
-        "pandas_api_counts", "promo_revenue_share", "purchase_pagerank",
-        "python_datasource_scan", "rate_limit_audit", "recursive_doc_tree",
-        "returned_revenue_customers", "safe_arithmetic",
-        "semantic_dedup_keep", "sequence_packing", "shard_manifest",
-        "sole_returning_supplier", "stream_attribution_join",
-        "stream_session_windows", "stream_static_enrich",
-        "token_budget_apportionment", "train_split_stats",
-        "udtf_ngram_counts", "variant_props_extract", "xml_roundtrip",
-        "zorder_keys",
-        # round 3 (48 green rows in CORRECTNESS_r03.json)
-        "approx_distinct_check", "bm25_top_terms", "boilerplate_flags",
-        "bpe_token_budget", "bucketed_join_revenue", "cohort_retention",
-        "compaction_roundtrip", "concurrency_peaks",
-        "content_checksum_parity", "csv_ingest_with_dlq",
-        "decontamination_flags", "dq_orders_report",
-        "embedding_quantize_audit", "event_funnel",
-        "event_transition_matrix", "global_value_ntile",
-        "global_value_rank", "hourly_value_regression",
-        "incremental_rollup", "json_sink_roundtrip", "keyword_and_search",
-        "label_centroids", "mixture_weights", "orc_roundtrip",
-        "pii_redaction", "pit_enriched_purchases", "pmi_collocations",
-        "raw_zone_landing", "repetition_stats", "rolling_hour_metrics",
-        "salted_revenue", "scd2_user_type", "schema_evolution_merge",
-        "session_window_stats", "sliding_hour_windows",
-        "snapshot_diff_customers", "stratified_sample",
-        "stream_batch_hourly", "stream_dedup_counts",
-        "stream_sliding_quarters", "tfidf_top_terms",
-        "top_unshipped_orders", "user_inactivity_gaps", "value_band_join",
-        "value_drift_ks", "value_drift_psi", "value_outlier_flags",
-        "value_winsorized",
-        # round 5 (50 green rows in CORRECTNESS_r05.json)
-        "bloom_filtered_join", "bpe_apply_topk", "bpe_merge_pairs",
-        "chunk_level_dedup", "collated_brand_counts", "containment_pairs",
-        "contrastive_triplets", "copurchase_triangles",
-        "corpus_pack_pipeline", "dataset_card", "dedup_cluster_stats",
-        "discriminative_tokens", "disjunctive_predicate_join",
-        "dpp_pruned_join", "embedding_covariance", "event_rate_anomalies",
-        "event_target_encoding", "file_metadata_audit",
-        "hll_sketch_mergeability", "idle_customer_balance", "jw_best_match",
-        "k_anonymity_audit", "l_diversity_audit", "label_scatter",
-        "lateral_alias_pricing", "market_share_ratio",
-        "nested_rebuild_roundtrip", "observed_scan_metrics",
-        "packing_efficiency", "pandas_udaf_median", "parameterized_sql",
-        "part_value_share", "product_profit_rollup", "pyds_writer_roundtrip",
-        "resampling_plan", "semantic_decontamination",
-        "small_quantity_revenue", "sole_late_supplier",
-        "source_lang_entropy", "sql_script_rollup", "sql_variables_rollup",
-        "stream_join_then_window", "stream_outer_attribution",
-        "stream_restart_hourly", "stream_update_merge_hourly",
-        "temporal_split_audit", "tfidf_cosine_topk", "top_revenue_suppliers",
-        "user_modal_event", "vocab_oov_rate",
-        # round 6 (50 green rows in CORRECTNESS_r06.json: the 5 new
-        # queries below plus 45 fragile-first re-verifications)
-        "ann_ranking_quality", "bpe_fertility_by_lang",
-        "excess_volume_suppliers", "null_safe_reconcile",
-        "stream_incremental_dedup",
-        # round 7 (50 green rows in CORRECTNESS_r07.json — all 50 were
-        # never-before-verified; the 16 r7 queries that missed the
-        # window lead the r8 rotation)
-        "ab_test_report", "benford_audit", "bpe_train_merges",
-        "cheapest_supplier_per_part", "cms_heavy_hitters",
-        "cms_merge_parity", "cumulative_unique_users",
-        "cusum_change_detection", "entity_resolution",
-        "ewma_event_anomalies", "feature_hash_features",
-        "fk_orphan_matrix", "generalization_ladder",
-        "hilbert_layout_keys", "hybrid_search_rrf",
-        "incremental_rollup_cdc", "interval_overlap_pairs",
-        "iso_week_revenue", "item_cooccurrence_similarity",
-        "kcore_copurchase", "layout_locality_audit",
-        "local_supplier_volume", "mad_by_type",
-        "markov_prediction_accuracy", "merkle_bucket_diff",
-        "minhash_signature_merge", "order_priority_counts",
-        "pareto_revenue_curve", "phrase_search",
-        "proration_allocation", "recursive_ancestor_rollup",
-        "rendezvous_shards", "resampling_executed",
-        "revenue_seasonality_yoy", "rfm_segments", "shingle_novelty",
-        "spatial_grid_nearest", "statestore_introspection",
-        "stream_cms_topk", "stream_dedup_then_window",
-        "stream_drift_monitor", "stream_evolving_enrich",
-        "stream_ivf_ingest", "stream_scd2_maintenance",
-        "stream_semi_attribution", "stream_union_hourly",
-        "t_closeness_audit", "timed_funnel", "weekend_revenue_split",
-        # round 8 (49 green rows in CORRECTNESS_r08.json — the 16 r7
-        # stragglers plus the 18 r8 queries plus fragile re-checks; the
-        # round's lone red, subsample_ci_revenue, had its variance
-        # rebuilt on exact decimal moments and leads the r9 window)
-        "asof_tolerance_attribution", "audience_overlap_matrix",
-        "bigram_familiarity", "blocking_quality_report",
-        "cascade_delete_plan", "chunk_retrieval_agreement",
-        "curriculum_plan", "decile_lift_curve",
-        "dp_noisy_histogram", "embedding_truncation_audit",
-        "group_by_all_rollup", "heaps_vocab_growth",
-        "histogram_selectivity", "ivf_pq_search", "join_skew_report",
-        "knn_label_eval", "modal_imputation", "mv_rewrite_rollup",
-        "order_streaks", "part_skyline", "percentile_cont_parity",
-        "pipe_syntax_rollup", "pq_recall_eval", "range_frame_smoothing",
-        "rolling_distinct_users", "span_corruption_plan",
-        "sql_udf_rollup",
-        "time_weighted_average", "two_hop_reach", "woe_binning",
-        "zipf_rank_frequency",
-        # round 9 (50 green rows in CORRECTNESS_r09.json — the 23 new
-        # r9 queries below plus 27 fragile-first re-verifications;
-        # cumulative 308/308 distinct queries driver-green)
-        "acf_hourly_lags", "association_rules", "audio_signal_features",
-        "forecast_conformal_band", "gini_concentration",
-        "grouped_exact_median", "grouped_value_quartiles",
-        "identifier_clause_rollup", "image_ahash_neardup",
-        "incremental_join_maintenance", "kmv_sketch_overlap",
-        "map_functions", "percentile_disc_parity", "recursive_cte_depth",
-        "seasonal_naive_mase", "stream_full_outer_attribution",
-        "stream_restart_attribution", "stream_restart_dedup",
-        "stream_restart_sessions", "subsample_ci_revenue",
-        "theil_sen_trend", "touch_attribution_split", "winnowing_overlap",
-        # round 10 (50 green rows in CORRECTNESS_r10.json — the 46 new
-        # r10 queries below plus 4 fragile-first re-verifications;
-        # cumulative 354/354 distinct queries driver-green)
-        "auc_rank_eval", "bitemporal_asof", "brier_score",
-        "calibration_ece", "cdc_chunk_dedup", "clustering_ari",
-        "cohens_kappa", "cuped_adjustment", "degree_assortativity",
-        "dhondt_apportionment", "dispersion_index", "doubly_robust_ope",
-        "dp_clipped_mean", "dynamic_gap_sessions", "emd_value_drift",
-        "functional_dependency_audit", "golden_record_survivorship",
-        "grouped_kfold_audit", "happens_before_pairs", "ips_policy_eval",
-        "isotonic_calibration", "jsd_source_divergence",
-        "kaplan_meier_churn", "levenshtein_pairs", "limit_offset_page",
-        "local_clustering_topk", "mann_kendall_trend",
-        "pinball_loss_eval", "pps_sample", "pr_curve_deciles",
-        "python_datasource_stream", "rake_keyphrases",
-        "reciprocal_best_match", "rle_compression_estimate",
-        "seasonal_profile", "shapley_attribution",
-        "stream_cdc_merge_replay", "stream_cdc_merge_restart",
-        "stream_rocksdb_halfhourly", "stream_rocksdb_restart",
-        "stream_two_level_hourly", "stream_two_level_restart",
-        "top_user_paths", "weighted_median_price", "weighted_price_band",
-        "zone_map_skipping",
-        # round 11 (47 green rows in CORRECTNESS_r11.json: the 2 new
-        # queries below plus 45 fragile-first re-verifications; the 3
-        # hash-fails — cms_join_size, spearman_rank_correlation,
-        # pq_codebook_audit, all decimal-output casualties of the r11
-        # overflow sweep — were REMOVED from this set until they
-        # re-verify green under the r12 string-output convention)
-        "quality_classifier_scores", "dsir_importance_resample",
-        # round 12 (50 green rows in CORRECTNESS_r12.json, 0 failures:
-        # the three r11 decimal-output hash-fails re-verified green
-        # under the string-of-scale-0-decimal convention, plus the 3
-        # new r12 queries; cumulative 359/359 distinct driver-green)
-        "cms_join_size", "spearman_rank_correlation", "pq_codebook_audit",
-        "substring_dedup_spans", "substring_dedup_apply",
-        "contamination_span_report",
-        # round 13 (50 green rows in CORRECTNESS_r13.json, 0 failures:
-        # the 8 new build-round queries below plus 42 rotation
-        # re-verifications; cumulative 367/367 distinct driver-green)
-        "lsh_scurve_eval", "semdedup_centroid_prune",
-        "semdedup_verified_prune", "ssl_prototypes_prune",
-        "d4_pipeline_prune", "kn_perplexity_filter",
-        "substring_dedup_apply_exact", "unimax_mixture",
-    }
-)
+_HERE = os.path.dirname(os.path.abspath(__file__))
+
+
+def _correctness_files(directory: str = _HERE) -> list[str]:
+    """The driver's per-round ``CORRECTNESS_r{N}.json`` files in
+    ``directory``, oldest round first."""
+    paths = glob.glob(os.path.join(directory, "CORRECTNESS_r*.json"))
+    return sorted(paths, key=lambda p: int(re.search(r"_r(\d+)\.json$", p)[1]))
+
+
+def _driver_verified(directory: str = _HERE) -> frozenset[str]:
+    """Names whose row in the LATEST round that checked them is green
+    (``rows_match``, ``schema_match`` and ``hash_match`` all true).
+
+    The driver verifies only the first 50 entries of queries() per
+    round, so ordering is a coverage rotation: anything NOT verified
+    (new queries, and names that went red in their latest check) is
+    emitted FIRST; verified queries rotate to the back. All entries
+    stay selfcheck-verified regardless of order."""
+    latest: dict[str, bool] = {}
+    for path in _correctness_files(directory):
+        with open(path) as f:
+            for name, row in json.load(f).items():
+                latest[name] = all(
+                    row.get(k) is True for k in ("rows_match", "schema_match", "hash_match")
+                )
+    return frozenset(name for name, green in latest.items() if green)
+
+
+_DRIVER_VERIFIED = _driver_verified()
+
 
 # Deliberate re-verification policy for the driver's 50-query window.
 # With every registry query driver-verified at least once, the window
@@ -319,11 +156,7 @@ def _round_number() -> int:
     it advances exactly once per round regardless of how many times the
     entrypoint is imported within a round.
     """
-    import glob
-    import os
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    return len(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))) + 1
+    return len(_correctness_files()) + 1
 
 
 def _rotated(mapping: dict) -> dict:

@@ -1,8 +1,21 @@
 """Named query registry — the driver contract surface.
 
 Each entry pairs a Spark DataFrame query (built from the operator
-library) with a DuckDB-runnable ANSI-SQL oracle. Conventions that make
-the order-insensitive value-hash comparison deterministic:
+library) with a DuckDB-runnable ANSI-SQL oracle. Both halves are
+registered in one step by decorating the query function::
+
+    @query(oracle="SELECT ... FROM lineitem ...")
+    def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+        ...
+
+which puts ``q_pricing_summary`` in :data:`QUERIES` and the SQL in
+:data:`ORACLES`, both under ``pricing_summary``, in definition order.
+An oracle text shared with another query or run through ``spark.sql``
+stays a named constant and is passed by name; a computed oracle is
+built by an ``_oracle_*()`` call in the decorator argument.
+
+Conventions that make the order-insensitive value-hash comparison
+deterministic:
 
 - **Float sums are aggregated in scaled integers** (basis points /
   cents): ``sum(cast(round(x * 10^k) as bigint)) / 10^k`` — integer
@@ -66,6 +79,32 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.plans
     star_revenue,
 )
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources import load_table, parallelize
+
+
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+ORACLES: dict[str, str] = {}
+
+
+def query(oracle: str) -> Callable[[Callable], Callable]:
+    """Register the decorated ``q_<name>`` in :data:`QUERIES` under
+    ``<name>`` and its DuckDB oracle SQL in :data:`ORACLES` under the
+    same name; the function is returned unchanged. Registration order
+    is definition order (the driver's rotation windows depend on it).
+    Raises ``ValueError`` on a function not named ``q_<name>`` or a
+    name already registered."""
+
+    def register(fn: Callable) -> Callable:
+        fname = fn.__name__
+        if not fname.startswith("q_"):
+            raise ValueError(f"query function must be named q_<name>, got {fname!r}")
+        name = fname[2:]
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
+        QUERIES[name] = fn
+        ORACLES[name] = oracle
+        return fn
+
+    return register
 
 
 def _scaled_sum(col: F.Column, scale: int, alias: str) -> F.Column:
@@ -148,6 +187,17 @@ def _materialized_layout(tag: str, sf_dir: str, write) -> str:
 
 # ---------------------------------------------------------------- queries
 
+@query(oracle="""
+SELECT l_returnflag, l_linestatus,
+       CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_qty,
+       CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_base_price,
+       CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_disc_price,
+       CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_charge,
+       COUNT(*) AS count_order
+FROM lineitem
+WHERE l_shipdate <= TIMESTAMP '2000-09-02'
+GROUP BY l_returnflag, l_linestatus
+""")
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan-filter-aggregate over the fact table.
 
@@ -181,19 +231,17 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PRICING = """
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_qty,
-       CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_base_price,
-       CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_disc_price,
-       CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_charge,
-       COUNT(*) AS count_order
+@query(oracle="""
+SELECT r_name, n_name,
+       CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS revenue
 FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '2000-09-02'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
+JOIN orders   ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation   ON c_nationkey = n_nationkey
+JOIN region   ON n_regionkey = r_regionkey
+WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
+GROUP BY r_name, n_name
+""")
 def q_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship star-schema join+aggregate (see plans.pipeline)."""
     return star_revenue(
@@ -205,19 +253,14 @@ def q_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STAR_REVENUE = """
-SELECT r_name, n_name,
-       CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS revenue
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
-GROUP BY r_name, n_name
-"""
-
-
+@query(oracle="""
+SELECT n_name,
+       n_nationkey::VARCHAR || '.' || n_regionkey::VARCHAR || 'N' AS lat_raw,
+       n_regionkey::VARCHAR || '.' || n_nationkey::VARCHAR || 'E' AS lon_raw,
+       CAST(regexp_replace(n_nationkey::VARCHAR || '.' || n_regionkey::VARCHAR || 'N', '[NSEWnsew]$', '') AS DOUBLE) AS lat,
+       CAST(regexp_replace(n_regionkey::VARCHAR || '.' || n_nationkey::VARCHAR || 'E', '[NSEWnsew]$', '') AS DOUBLE) AS lon
+FROM nation
+""")
 def q_coord_projection_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.3 P1-P3: projection + dirty-string→double cast
     (reference ``src/extract_coordinates.py:17-18``). The dirty value is
@@ -238,16 +281,12 @@ def q_coord_projection_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_COORD = """
-SELECT n_name,
-       n_nationkey::VARCHAR || '.' || n_regionkey::VARCHAR || 'N' AS lat_raw,
-       n_regionkey::VARCHAR || '.' || n_nationkey::VARCHAR || 'E' AS lon_raw,
-       CAST(regexp_replace(n_nationkey::VARCHAR || '.' || n_regionkey::VARCHAR || 'N', '[NSEWnsew]$', '') AS DOUBLE) AS lat,
-       CAST(regexp_replace(n_regionkey::VARCHAR || '.' || n_nationkey::VARCHAR || 'E', '[NSEWnsew]$', '') AS DOUBLE) AS lon
-FROM nation
-"""
-
-
+@query(oracle="""
+SELECT * FROM customer c
+WHERE NOT EXISTS (
+  SELECT 1 FROM customer t WHERE t.c_custkey % 10 = 0 AND t.c_custkey = c.c_custkey
+)
+""")
 def q_dedup_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.4 J5: within-batch dedup + anti-join vs target keys
     (reference ``check_duplicates``,
@@ -258,14 +297,10 @@ def q_dedup_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_against_target(c, target, "c_custkey")
 
 
-ORACLE_DEDUP_LOAD = """
-SELECT * FROM customer c
-WHERE NOT EXISTS (
-  SELECT 1 FROM customer t WHERE t.c_custkey % 10 = 0 AND t.c_custkey = c.c_custkey
-)
-"""
-
-
+@query(oracle="""
+SELECT l_orderkey, COUNT(*) AS occurrences
+FROM lineitem GROUP BY l_orderkey HAVING COUNT(*) > 1
+""")
 def q_duplicate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.5 A1/A2: duplicate-key audit
     (``src/process_insert_places_data.py:36-48``)."""
@@ -273,12 +308,12 @@ def q_duplicate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duplicate_audit(l, "l_orderkey")
 
 
-ORACLE_DUP_AUDIT = """
-SELECT l_orderkey, COUNT(*) AS occurrences
-FROM lineitem GROUP BY l_orderkey HAVING COUNT(*) > 1
-"""
-
-
+@query(oracle="""
+SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
+       epoch_us(o_orderdate) AS o_orderdate_us, o_orderpriority
+FROM orders o
+WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)
+""")
 def q_orders_without_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.4 J1 as anti-join: keys in one set absent from another
     (the PK existence probe, set-oriented)."""
@@ -291,14 +326,15 @@ def q_orders_without_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ORDERS_NO_LINEITEMS = """
-SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-       epoch_us(o_orderdate) AS o_orderdate_us, o_orderpriority
-FROM orders o
-WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)
-"""
-
-
+@query(oracle="""
+SELECT l_returnflag, COUNT(*) AS n_items,
+       CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_qty
+FROM lineitem l
+WHERE EXISTS (
+  SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey AND o.o_orderpriority = '1-URGENT'
+)
+GROUP BY l_returnflag
+""")
 def q_fk_semi_urgent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.4 J2: FK semi-join (planner-sized; the urgent-orders
     key set is data-proportional, so no broadcast hint — r11 audit)
@@ -316,17 +352,11 @@ def q_fk_semi_urgent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_FK_SEMI = """
-SELECT l_returnflag, COUNT(*) AS n_items,
-       CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_qty
-FROM lineitem l
-WHERE EXISTS (
-  SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey AND o.o_orderpriority = '1-URGENT'
-)
-GROUP BY l_returnflag
-"""
-
-
+@query(oracle="""
+SELECT event_id, user_id, event_type, value, epoch_us(ts) AS ts_us
+FROM events
+WHERE date_trunc('hour', ts) = (SELECT date_trunc('hour', max(ts)) FROM events)
+""")
 def q_freshness_latest_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.3 P8/P9: freshness filter — keep only events in the
     newest hour bucket (reference ``src/ingest_weather_data.py:64-71,142``)."""
@@ -338,12 +368,6 @@ def q_freshness_latest_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_FRESHNESS = """
-SELECT event_id, user_id, event_type, value, epoch_us(ts) AS ts_us
-FROM events
-WHERE date_trunc('hour', ts) = (SELECT date_trunc('hour', max(ts)) FROM events)
-"""
-
 FUZZY_QUERY_NAMES = [
     "Custoner#000000042",
     "customer#00000001",
@@ -351,22 +375,6 @@ FUZZY_QUERY_NAMES = [
     "Customer#000000123",
     "CUSTOMER#000000999x",
 ]
-
-
-def q_fuzzy_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.4 J4: fuzzy similarity join + per-query argmax
-    (reference place-name matching ``src/ingest_places_data.py:50-67``),
-    Levenshtein-ratio semantics."""
-    c = load_table(spark, sf_dir, "customer")
-    queries = spark.createDataFrame(
-        [(q,) for q in FUZZY_QUERY_NAMES], ["query_name"]
-    )
-    best = fuzzy_best_match(queries, c, "query_name", "c_name")
-    return best.select(
-        "query_name",
-        F.col("c_name").alias("best_match"),
-        F.round(F.col("similarity"), 6).alias("similarity"),
-    )
 
 
 def _oracle_fuzzy() -> str:
@@ -385,6 +393,28 @@ QUALIFY row_number() OVER (PARTITION BY query_name ORDER BY sim DESC, c_name ASC
 """
 
 
+@query(oracle=_oracle_fuzzy())
+def q_fuzzy_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §2.4 J4: fuzzy similarity join + per-query argmax
+    (reference place-name matching ``src/ingest_places_data.py:50-67``),
+    Levenshtein-ratio semantics."""
+    c = load_table(spark, sf_dir, "customer")
+    queries = spark.createDataFrame(
+        [(q,) for q in FUZZY_QUERY_NAMES], ["query_name"]
+    )
+    best = fuzzy_best_match(queries, c, "query_name", "c_name")
+    return best.select(
+        "query_name",
+        F.col("c_name").alias("best_match"),
+        F.round(F.col("similarity"), 6).alias("similarity"),
+    )
+
+
+@query(oracle="""
+SELECT user_id, event_id, event_type, value, epoch_us(ts) AS ts_us
+FROM events
+QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
+""")
 def q_cdc_last_write_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.7 T2 (batch form): collapse an update stream to the
     newest version per key — the in-batch half of the CDC merge
@@ -398,13 +428,14 @@ def q_cdc_last_write_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_LWW = """
-SELECT user_id, event_id, event_type, value, epoch_us(ts) AS ts_us
+@query(oracle="""
+SELECT epoch_us(date_trunc('hour', ts)) AS hour_us, event_type,
+       COUNT(*) AS n_events,
+       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_value,
+       COUNT(DISTINCT user_id) AS n_users
 FROM events
-QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
-"""
-
-
+GROUP BY 1, 2
+""")
 def q_hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.7 T4 (batch form): 1-hour tumbling-window aggregation
     per event type."""
@@ -423,16 +454,15 @@ def q_hourly_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_HOURLY = """
-SELECT epoch_us(date_trunc('hour', ts)) AS hour_us, event_type,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_value,
-       COUNT(DISTINCT user_id) AS n_users
+@query(oracle="""
+SELECT event_type,
+       CAST(SUM(CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT)) AS BIGINT) AS sum_k,
+       COUNT(*) AS n,
+       CAST(SUM(CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT)) AS BIGINT)
+         / CAST(COUNT(*) AS BIGINT) AS avg_k
 FROM events
-GROUP BY 1, 2
-"""
-
-
+GROUP BY event_type
+""")
 def q_json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.8 JSON functions: extract a field from a JSON string
     column (``get_json_object``), then aggregate."""
@@ -447,50 +477,6 @@ def q_json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("k_val") / F.count(F.lit(1))).alias("avg_k"),
         )
     )
-
-
-ORACLE_JSON = """
-SELECT event_type,
-       CAST(SUM(CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT)) AS BIGINT) AS sum_k,
-       COUNT(*) AS n,
-       CAST(SUM(CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT)) AS BIGINT)
-         / CAST(COUNT(*) AS BIGINT) AS avg_k
-FROM events
-GROUP BY event_type
-"""
-
-
-# ---------------------------------------------------------------- registry
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "pricing_summary": q_pricing_summary,
-    "star_revenue": q_star_revenue,
-    "coord_projection_cast": q_coord_projection_cast,
-    "dedup_load": q_dedup_load,
-    "duplicate_audit": q_duplicate_audit,
-    "orders_without_lineitems": q_orders_without_lineitems,
-    "fk_semi_urgent": q_fk_semi_urgent,
-    "freshness_latest_hour": q_freshness_latest_hour,
-    "fuzzy_best_match": q_fuzzy_best_match,
-    "cdc_last_write_wins": q_cdc_last_write_wins,
-    "hourly_event_stats": q_hourly_event_stats,
-    "json_props_extract": q_json_props_extract,
-}
-
-ORACLES: dict[str, str] = {
-    "pricing_summary": ORACLE_PRICING,
-    "star_revenue": ORACLE_STAR_REVENUE,
-    "coord_projection_cast": ORACLE_COORD,
-    "dedup_load": ORACLE_DEDUP_LOAD,
-    "duplicate_audit": ORACLE_DUP_AUDIT,
-    "orders_without_lineitems": ORACLE_ORDERS_NO_LINEITEMS,
-    "fk_semi_urgent": ORACLE_FK_SEMI,
-    "freshness_latest_hour": ORACLE_FRESHNESS,
-    "fuzzy_best_match": _oracle_fuzzy(),
-    "cdc_last_write_wins": ORACLE_LWW,
-    "hourly_event_stats": ORACLE_HOURLY,
-    "json_props_extract": ORACLE_JSON,
-}
 
 
 # ------------------------------------------------------- LLM-pipeline ops
@@ -524,13 +510,7 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.opera
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
 
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token statistics per document (tokenize, distinct, TTR, mean
-    token length) — text-analysis primitive for corpus curation."""
-    return text_stats(load_table(spark, sf_dir, "documents"))
-
-
-ORACLE_TEXT_STATS = """
+@query(oracle="""
 SELECT doc_id,
        CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
        CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct_tokens,
@@ -539,15 +519,14 @@ SELECT doc_id,
        round(CAST(list_aggregate(list_transform(string_split(text, ' '), x -> length(x)), 'sum') AS BIGINT)
              / CAST(len(string_split(text, ' ')) AS BIGINT), 6) AS avg_token_len
 FROM documents
-"""
+""")
+def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token statistics per document (tokenize, distinct, TTR, mean
+    token length) — text-analysis primitive for corpus curation."""
+    return text_stats(load_table(spark, sf_dir, "documents"))
 
 
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic quality score (stopword density × length factor)."""
-    return quality_score(load_table(spark, sf_dir, "documents"))
-
-
-ORACLE_TEXT_QUALITY = f"""
+@query(oracle=f"""
 SELECT doc_id, n_tokens, n_stopwords,
        round(n_stopwords / n_tokens, 6) AS stop_ratio,
        round((1.0 - n_stopwords / n_tokens) * least(1.0, n_tokens / 50.0), 6) AS quality
@@ -557,12 +536,10 @@ FROM (
          CAST(len(list_filter(string_split(text, ' '), x -> x IN ({_STOP_SQL}))) AS BIGINT) AS n_stopwords
   FROM documents
 )
-"""
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyword-marker language identification heuristic."""
-    return lang_id(load_table(spark, sf_dir, "documents"))
+""")
+def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Heuristic quality score (stopword density × length factor)."""
+    return quality_score(load_table(spark, sf_dir, "documents"))
 
 
 def _oracle_lang_id() -> str:
@@ -592,35 +569,42 @@ FROM (
 """
 
 
+@query(oracle=_oracle_lang_id())
+def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Keyword-marker language identification heuristic."""
+    return lang_id(load_table(spark, sf_dir, "documents"))
+
+
+@query(oracle=r"""
+SELECT doc_id,
+       md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS text_fp,
+       md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS vocab_fp
+FROM documents
+""")
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content fingerprints: normalized-text md5 + sorted-vocabulary md5."""
     return fingerprint(load_table(spark, sf_dir, "documents"))
 
 
-ORACLE_FINGERPRINT = r"""
-SELECT doc_id,
-       md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS text_fp,
-       md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS vocab_fp
-FROM documents
-"""
-
-
-def q_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus top-20 token frequencies (wordcount + ordered head)."""
-    out = token_frequencies(load_table(spark, sf_dir, "documents"), k=20)
-    return out.select("token", "n_occurrences", F.col("rank").cast("long").alias("rank"))
-
-
-ORACLE_TOKEN_TOPK = """
+@query(oracle="""
 SELECT token, n_occurrences, rank FROM (
   SELECT token, COUNT(*) AS n_occurrences,
          CAST(row_number() OVER (ORDER BY COUNT(*) DESC, token ASC) AS BIGINT) AS rank
   FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
   GROUP BY token
 ) WHERE rank <= 20
-"""
+""")
+def q_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus top-20 token frequencies (wordcount + ordered head)."""
+    out = token_frequencies(load_table(spark, sf_dir, "documents"), k=20)
+    return out.select("token", "n_occurrences", F.col("rank").cast("long").alias("rank"))
 
 
+@query(oracle="""
+SELECT doc_id, md5(text) AS content_hash
+FROM documents
+QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) = 1
+""")
 def q_dedup_exact_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact content dedup on the documents table: md5(text) hash,
     keep min doc_id per hash (deterministic representative)."""
@@ -628,20 +612,7 @@ def q_dedup_exact_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "content_hash")
 
 
-ORACLE_DEDUP_EXACT_TEXT = """
-SELECT doc_id, md5(text) AS content_hash
-FROM documents
-QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) = 1
-"""
-
-
-def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact near-dup pairs: Jaccard ≥ 0.2 over 3-gram shingles via the
-    inverted shingle index (see operators.dedup_near)."""
-    return ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"), threshold=0.2)
-
-
-ORACLE_NGRAM_JACCARD = """
+@query(oracle="""
 WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
 sh AS (
   SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
@@ -657,9 +628,30 @@ SELECT d1, d2, shared, s1.n_sh AS n1, s2.n_sh AS n2,
        round(shared / (s1.n_sh + s2.n_sh - shared), 6) AS jaccard
 FROM shared JOIN sizes s1 ON d1 = s1.doc_id JOIN sizes s2 ON d2 = s2.doc_id
 WHERE round(shared / (s1.n_sh + s2.n_sh - shared), 6) >= 0.2
-"""
+""")
+def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact near-dup pairs: Jaccard ≥ 0.2 over 3-gram shingles via the
+    inverted shingle index (see operators.dedup_near)."""
+    return ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"), threshold=0.2)
 
 
+@query(oracle="""
+WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+sh AS (
+  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
+  FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i) g
+),
+sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
+shared AS (
+  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS shared
+  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+)
+SELECT d1, d2,
+       round(shared / (s1.n_sh + s2.n_sh - shared), 6) AS jaccard
+FROM shared JOIN sizes s1 ON d1 = s1.doc_id JOIN sizes s2 ON d2 = s2.doc_id
+WHERE round(shared / (s1.n_sh + s2.n_sh - shared), 6) >= 0.5
+""")
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs via AND-OR banded MinHash LSH (JVM built-ins:
     seeded xxhash64 + array HOFs) with exact-Jaccard verification of
@@ -677,60 +669,11 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_MINHASH_LSH = """
-WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i) g
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-shared AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS shared
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT d1, d2,
-       round(shared / (s1.n_sh + s2.n_sh - shared), 6) AS jaccard
-FROM shared JOIN sizes s1 ON d1 = s1.doc_id JOIN sizes s2 ON d2 = s2.doc_id
-WHERE round(shared / (s1.n_sh + s2.n_sh - shared), 6) >= 0.5
-"""
-
-
-def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup: 64-bit fingerprints (Arrow pandas UDF, md5
-    token hashes), LSH banding on 16-bit sub-keys, Hamming ≤ 3
-    confirm. With 4 bands and ≤ 3 flipped bits, the pigeonhole
-    guarantees at least one band is identical — the banded join is
-    provably LOSSLESS vs the full O(n²) compare, which is exactly what
-    the DuckDB oracle runs (md5 is replicated bit-for-bit in SQL)."""
-    d = parallelize(load_table(spark, sf_dir, "documents")).select(
-        "doc_id", simhash64(F.col("text")).alias("sh")
-    )
-    banded = d.select(
-        "doc_id", "sh",
-        F.posexplode(F.array(*[band("sh", i) for i in range(4)])).alias("band_idx", "band_val"),
-    )
-    a = banded.select(
-        F.col("doc_id").alias("d1"), F.col("sh").alias("sh1"), "band_idx", "band_val"
-    )
-    b = banded.select(
-        F.col("doc_id").alias("d2"), F.col("sh").alias("sh2"), "band_idx", "band_val"
-    )
-    pairs = (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("d1") < F.col("d2"))
-        .select("d1", "d2", hamming64("sh1", "sh2").cast("long").alias("hamming"))
-        .dropDuplicates(["d1", "d2"])
-        .filter(F.col("hamming") <= 3)
-    )
-    return pairs
-
-
 # DuckDB replica of functions/hashing.py:_simhash64_one — token hash is
 # the first 8 bytes of md5 (big-endian), per-bit ±1 votes, bit set iff
 # vote sum > 0, fingerprint reinterpreted as int64 two's complement —
 # then the full O(n²) Hamming join the banded Spark plan provably equals.
-ORACLE_SIMHASH = """
+@query(oracle="""
 WITH toks AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS tok
   FROM documents WHERE text IS NOT NULL AND text <> ''
@@ -762,21 +705,38 @@ SELECT a.doc_id AS d1, b.doc_id AS d2,
        CAST(bit_count(xor(a.fp, b.fp)) AS BIGINT) AS hamming
 FROM fp a JOIN fp b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.fp, b.fp)) <= 3
-"""
-
-
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force top-10 cosine neighbors for 5 query vectors
-    (similarity-search baseline; queries broadcast, corpus map-only)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+""")
+def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash near-dup: 64-bit fingerprints (Arrow pandas UDF, md5
+    token hashes), LSH banding on 16-bit sub-keys, Hamming ≤ 3
+    confirm. With 4 bands and ≤ 3 flipped bits, the pigeonhole
+    guarantees at least one band is identical — the banded join is
+    provably LOSSLESS vs the full O(n²) compare, which is exactly what
+    the DuckDB oracle runs (md5 is replicated bit-for-bit in SQL)."""
+    d = parallelize(load_table(spark, sf_dir, "documents")).select(
+        "doc_id", simhash64(F.col("text")).alias("sh")
     )
-    out = cosine_topk(emb, q, k=10)
-    return out.select("q_id", "vec_id", "similarity", F.col("rank").cast("long").alias("rank"))
+    banded = d.select(
+        "doc_id", "sh",
+        F.posexplode(F.array(*[band("sh", i) for i in range(4)])).alias("band_idx", "band_val"),
+    )
+    a = banded.select(
+        F.col("doc_id").alias("d1"), F.col("sh").alias("sh1"), "band_idx", "band_val"
+    )
+    b = banded.select(
+        F.col("doc_id").alias("d2"), F.col("sh").alias("sh2"), "band_idx", "band_val"
+    )
+    pairs = (
+        a.join(b, ["band_idx", "band_val"])
+        .filter(F.col("d1") < F.col("d2"))
+        .select("d1", "d2", hamming64("sh1", "sh2").cast("long").alias("hamming"))
+        .dropDuplicates(["d1", "d2"])
+        .filter(F.col("hamming") <= 3)
+    )
+    return pairs
 
 
-ORACLE_ANN_COSINE = """
+@query(oracle="""
 WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5),
 scored AS (
   SELECT q.q_id, e.vec_id,
@@ -788,21 +748,19 @@ SELECT q_id, vec_id, similarity, rank FROM (
          CAST(row_number() OVER (PARTITION BY q_id ORDER BY similarity DESC, vec_id ASC) AS BIGINT) AS rank
   FROM scored
 ) WHERE rank <= 10
-"""
-
-
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style top-5 neighbors: candidates restricted to the query's
-    coarse cluster (label) — the scale path for ANN."""
+""")
+def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force top-10 cosine neighbors for 5 query vectors
+    (similarity-search baseline; queries broadcast, corpus map-only)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("label"), F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    q = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
-    out = ivf_topk(emb, q, k=5)
+    out = cosine_topk(emb, q, k=10)
     return out.select("q_id", "vec_id", "similarity", F.col("rank").cast("long").alias("rank"))
 
 
-ORACLE_ANN_IVF = """
+@query(oracle="""
 WITH q AS (SELECT label, vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
 scored AS (
   SELECT q.q_id, e.vec_id,
@@ -814,56 +772,28 @@ SELECT q_id, vec_id, similarity, rank FROM (
          CAST(row_number() OVER (PARTITION BY q_id ORDER BY similarity DESC, vec_id ASC) AS BIGINT) AS rank
   FROM scored
 ) WHERE rank <= 5
-"""
+""")
+def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-style top-5 neighbors: candidates restricted to the query's
+    coarse cluster (label) — the scale path for ANN."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 10).select(
+        F.col("label"), F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    )
+    out = ivf_topk(emb, q, k=5)
+    return out.select("q_id", "vec_id", "similarity", F.col("rank").cast("long").alias("rank"))
 
 
-def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-duplicate pairs (cosine ≥ 0.3) blocked by the
-    coarse cluster id — |n|²/|blocks| pair space."""
-    return cosine_near_dup_pairs(load_table(spark, sf_dir, "embeddings"), threshold=0.3)
-
-
-ORACLE_EMB_NEAR_DUP = """
+@query(oracle="""
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS similarity
 FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
 WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >= 0.3
-"""
-
-
-QUERIES.update(
-    {
-        "text_stats": q_text_stats,
-        "text_quality": q_text_quality,
-        "lang_id": q_lang_id,
-        "doc_fingerprint": q_doc_fingerprint,
-        "token_topk": q_token_topk,
-        "dedup_exact_text": q_dedup_exact_text,
-        "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-        "minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "simhash_near_dup": q_simhash_near_dup,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "embedding_near_dup": q_embedding_near_dup,
-    }
-)
-
-ORACLES.update(
-    {
-        "text_stats": ORACLE_TEXT_STATS,
-        "text_quality": ORACLE_TEXT_QUALITY,
-        "lang_id": _oracle_lang_id(),
-        "doc_fingerprint": ORACLE_FINGERPRINT,
-        "token_topk": ORACLE_TOKEN_TOPK,
-        "dedup_exact_text": ORACLE_DEDUP_EXACT_TEXT,
-        "ngram_jaccard_pairs": ORACLE_NGRAM_JACCARD,
-        "minhash_lsh_pairs": ORACLE_MINHASH_LSH,
-        "simhash_near_dup": ORACLE_SIMHASH,
-        "ann_cosine_topk": ORACLE_ANN_COSINE,
-        "ann_ivf_topk": ORACLE_ANN_IVF,
-        "embedding_near_dup": ORACLE_EMB_NEAR_DUP,
-    }
-)
+""")
+def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding near-duplicate pairs (cosine ≥ 0.3) blocked by the
+    coarse cluster id — |n|²/|blocks| pair space."""
+    return cosine_near_dup_pairs(load_table(spark, sf_dir, "embeddings"), threshold=0.3)
 
 
 # ------------------------------------------------------- multimodal plumbing
@@ -873,6 +803,12 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.opera
 )
 
 
+@query(oracle="""
+SELECT doc_id,
+       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+       md5(text) AS payload_md5
+FROM documents
+""")
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-payload feature extraction via mapInPandas (Arrow batch
     plumbing; decode step stubbed — see operators.multimodal). Payload
@@ -884,17 +820,27 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_features(d).select("doc_id", "n_bytes", "payload_md5")
 
 
-ORACLE_MULTIMODAL = """
+# Arithmetic twin of build_png/build_wav + parse_media: every field the
+# parser recovers from the bytes is predicted here from doc_id alone.
+@query(oracle="""
 SELECT doc_id,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-       md5(text) AS payload_md5
+       CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'wav' END AS kind,
+       CASE WHEN doc_id % 2 = 0 THEN 1 + doc_id % 64 END AS width,
+       CASE WHEN doc_id % 2 = 0 THEN 1 + (doc_id // 64) % 64 END AS height,
+       CASE WHEN doc_id % 2 = 0 THEN 8 ELSE 16 END AS bit_depth,
+       CAST(1 AS BIGINT) AS channels,
+       CASE WHEN doc_id % 2 = 1 THEN
+         CASE doc_id % 4 WHEN 1 THEN 16000 WHEN 3 THEN 44100 END
+       END AS sample_rate,
+       CASE WHEN doc_id % 2 = 1 THEN 100 + doc_id % 400 END AS n_samples,
+       CASE WHEN doc_id % 2 = 1 THEN
+         ((100 + doc_id % 400) * 1000000) // (CASE doc_id % 4 WHEN 1 THEN 16000
+                                              WHEN 3 THEN 44100 END)
+       END AS duration_us,
+       CASE WHEN doc_id % 2 = 0 THEN CAST(doc_id % 256 AS DOUBLE)
+            ELSE CAST((doc_id % 100) * 10 AS DOUBLE) END AS mean_value
 FROM documents
-"""
-
-QUERIES["multimodal_features"] = q_multimodal_features
-ORACLES["multimodal_features"] = ORACLE_MULTIMODAL
-
-
+""")
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL byte-level media decode (operators.multimodal.decode_media):
     synthesize genuine PNG/WAV container bytes per doc (even doc_id →
@@ -928,32 +874,6 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Arithmetic twin of build_png/build_wav + parse_media: every field the
-# parser recovers from the bytes is predicted here from doc_id alone.
-ORACLE_MULTIMODAL_DECODE = """
-SELECT doc_id,
-       CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'wav' END AS kind,
-       CASE WHEN doc_id % 2 = 0 THEN 1 + doc_id % 64 END AS width,
-       CASE WHEN doc_id % 2 = 0 THEN 1 + (doc_id // 64) % 64 END AS height,
-       CASE WHEN doc_id % 2 = 0 THEN 8 ELSE 16 END AS bit_depth,
-       CAST(1 AS BIGINT) AS channels,
-       CASE WHEN doc_id % 2 = 1 THEN
-         CASE doc_id % 4 WHEN 1 THEN 16000 WHEN 3 THEN 44100 END
-       END AS sample_rate,
-       CASE WHEN doc_id % 2 = 1 THEN 100 + doc_id % 400 END AS n_samples,
-       CASE WHEN doc_id % 2 = 1 THEN
-         ((100 + doc_id % 400) * 1000000) // (CASE doc_id % 4 WHEN 1 THEN 16000
-                                              WHEN 3 THEN 44100 END)
-       END AS duration_us,
-       CASE WHEN doc_id % 2 = 0 THEN CAST(doc_id % 256 AS DOUBLE)
-            ELSE CAST((doc_id % 100) * 10 AS DOUBLE) END AS mean_value
-FROM documents
-"""
-
-QUERIES["multimodal_decode"] = q_multimodal_decode
-ORACLES["multimodal_decode"] = ORACLE_MULTIMODAL_DECODE
-
-
 # ------------------------------------------ batch 3: temporal/relational ops
 
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.asof import (  # noqa: E402
@@ -967,6 +887,14 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.opera
 )
 
 
+@query(oracle="""
+SELECT l_orderkey, l_linenumber, 'fk_missing:orders_urgent' AS reject_reason
+FROM lineitem l
+WHERE NOT EXISTS (
+  SELECT 1 FROM orders o
+  WHERE o.o_orderkey = l.l_orderkey AND o.o_orderpriority = '1-URGENT'
+)
+""")
 def q_dlq_split_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.2 K6/K8: dead-letter split — the rows REJECTED by a
     referential-integrity check, tagged with a reason (the reference
@@ -986,31 +914,7 @@ def q_dlq_split_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DLQ_SPLIT = """
-SELECT l_orderkey, l_linenumber, 'fk_missing:orders_urgent' AS reject_reason
-FROM lineitem l
-WHERE NOT EXISTS (
-  SELECT 1 FROM orders o
-  WHERE o.o_orderkey = l.l_orderkey AND o.o_orderpriority = '1-URGENT'
-)
-"""
-
-
-def q_reconcile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §5.2: lake/warehouse count-reconciliation audit
-    (``README.md:140`` — row counts, key counts, key-set diffs)."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.integrity import (
-        reconcile_counts,
-    )
-
-    l = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("k")
-    )
-    o = load_table(spark, sf_dir, "orders").select(F.col("o_orderkey").alias("k"))
-    return reconcile_counts(l, o, "k")
-
-
-ORACLE_RECONCILE = """
+@query(oracle="""
 SELECT
   (SELECT COUNT(*) FROM lineitem) AS source_rows,
   (SELECT COUNT(DISTINCT l_orderkey) FROM lineitem) AS source_keys,
@@ -1026,9 +930,26 @@ SELECT
   (SELECT COUNT(*) FROM (SELECT DISTINCT o_orderkey FROM orders
     WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey))) = 0
   AS consistent
-"""
+""")
+def q_reconcile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SURVEY §5.2: lake/warehouse count-reconciliation audit
+    (``README.md:140`` — row counts, key counts, key-set diffs)."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.integrity import (
+        reconcile_counts,
+    )
+
+    l = load_table(spark, sf_dir, "lineitem").select(
+        F.col("l_orderkey").alias("k")
+    )
+    o = load_table(spark, sf_dir, "orders").select(F.col("o_orderkey").alias("k"))
+    return reconcile_counts(l, o, "k")
 
 
+@query(oracle="""
+SELECT epoch_us(date_trunc('hour', ts + INTERVAL 7 HOUR)) AS hour7_us,
+       COUNT(*) AS n_events, COUNT(DISTINCT user_id) AS n_users
+FROM events GROUP BY 1
+""")
 def q_gmt7_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.3 P8: the reference's GMT+7 wall-clock hour bucket
     (``src/ingest_weather_data.py:142``) as a timezone-shifted
@@ -1044,13 +965,19 @@ def q_gmt7_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_GMT7 = """
-SELECT epoch_us(date_trunc('hour', ts + INTERVAL 7 HOUR)) AS hour7_us,
-       COUNT(*) AS n_events, COUNT(DISTINCT user_id) AS n_users
-FROM events GROUP BY 1
-"""
-
-
+@query(oracle="""
+SELECT 'a_minus_b' AS set_op, COUNT(*) AS n FROM (
+  SELECT c_custkey FROM customer WHERE c_custkey % 3 = 0
+  EXCEPT ALL SELECT c_custkey FROM customer WHERE c_custkey % 5 = 0)
+UNION ALL
+SELECT 'a_intersect_b', COUNT(*) FROM (
+  SELECT c_custkey FROM customer WHERE c_custkey % 3 = 0
+  INTERSECT SELECT c_custkey FROM customer WHERE c_custkey % 5 = 0)
+UNION ALL
+SELECT 'a_union_b', COUNT(*) FROM (
+  SELECT c_custkey FROM customer WHERE c_custkey % 3 = 0
+  UNION SELECT c_custkey FROM customer WHERE c_custkey % 5 = 0)
+""")
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.6 O1/O2: set difference / intersection / union over
     key sets, as a 3-row summary."""
@@ -1070,21 +997,13 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SET_OPS = """
-SELECT 'a_minus_b' AS set_op, COUNT(*) AS n FROM (
-  SELECT c_custkey FROM customer WHERE c_custkey % 3 = 0
-  EXCEPT ALL SELECT c_custkey FROM customer WHERE c_custkey % 5 = 0)
-UNION ALL
-SELECT 'a_intersect_b', COUNT(*) FROM (
-  SELECT c_custkey FROM customer WHERE c_custkey % 3 = 0
-  INTERSECT SELECT c_custkey FROM customer WHERE c_custkey % 5 = 0)
-UNION ALL
-SELECT 'a_union_b', COUNT(*) FROM (
-  SELECT c_custkey FROM customer WHERE c_custkey % 3 = 0
-  UNION SELECT c_custkey FROM customer WHERE c_custkey % 5 = 0)
-"""
-
-
+@query(oracle="""
+SELECT c_custkey, c_name, c_acctbal, rank FROM (
+  SELECT c_custkey, c_name, c_acctbal,
+         CAST(row_number() OVER (ORDER BY c_acctbal DESC, c_custkey ASC) AS BIGINT) AS rank
+  FROM customer
+) WHERE rank <= 100
+""")
 def q_top_customers_by_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2.6 O3: ordered top-k with a total-order tiebreak."""
     c = load_table(spark, sf_dir, "customer")
@@ -1100,15 +1019,17 @@ def q_top_customers_by_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_TOP_CUSTOMERS = """
-SELECT c_custkey, c_name, c_acctbal, rank FROM (
-  SELECT c_custkey, c_name, c_acctbal,
-         CAST(row_number() OVER (ORDER BY c_acctbal DESC, c_custkey ASC) AS BIGINT) AS rank
-  FROM customer
-) WHERE rank <= 100
-"""
-
-
+@query(oracle="""
+SELECT coalesce(r_name, 'ALL') AS region, coalesce(n_name, 'ALL') AS nation,
+       CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS revenue,
+       COUNT(*) AS n_items
+FROM lineitem
+JOIN orders   ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation   ON c_nationkey = n_nationkey
+JOIN region   ON n_regionkey = r_regionkey
+GROUP BY ROLLUP (r_name, n_name)
+""")
 def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical ROLLUP aggregate (region → nation → grand total) —
     free in Spark; the engine ships it even though the reference never
@@ -1144,19 +1065,14 @@ def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ROLLUP = """
-SELECT coalesce(r_name, 'ALL') AS region, coalesce(n_name, 'ALL') AS nation,
-       CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS revenue,
-       COUNT(*) AS n_items
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-GROUP BY ROLLUP (r_name, n_name)
-"""
-
-
+@query(oracle="""
+SELECT user_id, event_id,
+       CAST(row_number() OVER w AS BIGINT) AS rn,
+       lag(event_id) OVER w AS prev_event_id,
+       epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_us
+FROM events
+WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
+""")
 def q_window_running_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window-frame analytics per user over event time: row index,
     previous-event pointer, inter-event gap (all integer-exact)."""
@@ -1174,16 +1090,28 @@ def q_window_running_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_RUNNING = """
-SELECT user_id, event_id,
-       CAST(row_number() OVER w AS BIGINT) AS rn,
-       lag(event_id) OVER w AS prev_event_id,
-       epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_us
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-"""
-
-
+@query(oracle="""
+WITH tagged AS (
+  SELECT user_id, ts, 1 AS is_left, event_id,
+         NULL::BIGINT AS r_click_id, NULL::TIMESTAMP AS r_ts
+  FROM events WHERE event_type = 'purchase'
+  UNION ALL
+  SELECT user_id, ts, 0 AS is_left, NULL::BIGINT AS event_id,
+         event_id AS r_click_id, ts AS r_ts
+  FROM events WHERE event_type = 'click'
+),
+carried AS (
+  SELECT user_id, ts, is_left, event_id,
+         last_value(r_click_id IGNORE NULLS) OVER w AS click_event_id,
+         last_value(r_ts IGNORE NULLS) OVER w AS click_ts
+  FROM tagged
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, is_left ASC, r_click_id ASC NULLS FIRST
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+)
+SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+       click_event_id, epoch_us(click_ts) AS click_ts_us
+FROM carried WHERE is_left = 1
+""")
 def q_asof_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each purchase event paired with the same user's most
     recent click at-or-before it (union-tag + carried-state window —
@@ -1208,38 +1136,7 @@ def q_asof_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ASOF = """
-WITH tagged AS (
-  SELECT user_id, ts, 1 AS is_left, event_id,
-         NULL::BIGINT AS r_click_id, NULL::TIMESTAMP AS r_ts
-  FROM events WHERE event_type = 'purchase'
-  UNION ALL
-  SELECT user_id, ts, 0 AS is_left, NULL::BIGINT AS event_id,
-         event_id AS r_click_id, ts AS r_ts
-  FROM events WHERE event_type = 'click'
-),
-carried AS (
-  SELECT user_id, ts, is_left, event_id,
-         last_value(r_click_id IGNORE NULLS) OVER w AS click_event_id,
-         last_value(r_ts IGNORE NULLS) OVER w AS click_ts
-  FROM tagged
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, is_left ASC, r_click_id ASC NULLS FIRST
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-       click_event_id, epoch_us(click_ts) AS click_ts_us
-FROM carried WHERE is_left = 1
-"""
-
-
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-minute inactivity gap) per user."""
-    e = load_table(spark, sf_dir, "events")
-    out = sessionize(e, "user_id", "ts", gap="30 minutes", tiebreak="event_id")
-    return out.select("user_id", "event_id", epoch_us("ts").alias("ts_us"), "session_idx")
-
-
-ORACLE_SESSIONIZE = """
+@query(oracle="""
 WITH g AS (
   SELECT user_id, event_id, ts,
          CASE WHEN lag(ts) OVER w IS NULL
@@ -1252,40 +1149,25 @@ SELECT user_id, event_id, epoch_us(ts) AS ts_us,
        CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
 FROM g
-"""
-
-
-QUERIES.update(
-    {
-        "dlq_split_fk": q_dlq_split_fk,
-        "reconcile_counts": q_reconcile_counts,
-        "gmt7_hourly": q_gmt7_hourly,
-        "set_ops": q_set_ops,
-        "top_customers_by_balance": q_top_customers_by_balance,
-        "rollup_revenue": q_rollup_revenue,
-        "window_running_metrics": q_window_running_metrics,
-        "asof_purchase_click": q_asof_purchase_click,
-        "sessionize": q_sessionize,
-    }
-)
-
-ORACLES.update(
-    {
-        "dlq_split_fk": ORACLE_DLQ_SPLIT,
-        "reconcile_counts": ORACLE_RECONCILE,
-        "gmt7_hourly": ORACLE_GMT7,
-        "set_ops": ORACLE_SET_OPS,
-        "top_customers_by_balance": ORACLE_TOP_CUSTOMERS,
-        "rollup_revenue": ORACLE_ROLLUP,
-        "window_running_metrics": ORACLE_RUNNING,
-        "asof_purchase_click": ORACLE_ASOF,
-        "sessionize": ORACLE_SESSIONIZE,
-    }
-)
+""")
+def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gap-based sessionization (30-minute inactivity gap) per user."""
+    e = load_table(spark, sf_dir, "events")
+    out = sessionize(e, "user_id", "ts", gap="30 minutes", tiebreak="event_id")
+    return out.select("user_id", "event_id", epoch_us("ts").alias("ts_us"), "session_idx")
 
 
 # ---------------------------------------- batch 4: relational breadth
 
+@query(oracle="""
+SELECT o_orderpriority, COUNT(*) AS order_count
+FROM orders o
+WHERE EXISTS (
+  SELECT 1 FROM lineitem l
+  WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
+)
+GROUP BY o_orderpriority
+""")
 def q_priority_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS-style semi-join with a range predicate
     (orders having any lineitem shipped >60 days after order date),
@@ -1302,17 +1184,13 @@ def q_priority_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return late.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("order_count"))
 
 
-ORACLE_Q4 = """
-SELECT o_orderpriority, COUNT(*) AS order_count
-FROM orders o
-WHERE EXISTS (
-  SELECT 1 FROM lineitem l
-  WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-)
-GROUP BY o_orderpriority
-"""
-
-
+@query(oracle="""
+SELECT c_count, COUNT(*) AS custdist FROM (
+  SELECT c_custkey, COUNT(o_orderkey) AS c_count
+  FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey
+  GROUP BY c_custkey
+) GROUP BY c_count
+""")
 def q_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: LEFT OUTER join + two-level aggregation —
     distribution of customers by how many orders they have (including
@@ -1327,15 +1205,14 @@ def q_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
     return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
 
 
-ORACLE_Q13 = """
-SELECT c_count, COUNT(*) AS custdist FROM (
-  SELECT c_custkey, COUNT(o_orderkey) AS c_count
-  FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey
-  GROUP BY c_custkey
-) GROUP BY c_count
-"""
-
-
+@query(oracle="""
+SELECT n_name, c_custkey, c_name, c_acctbal FROM (
+  SELECT c_nationkey, c_custkey, c_name, c_acctbal,
+         row_number() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
+  FROM customer
+) c JOIN nation ON c.c_nationkey = n_nationkey
+WHERE rn = 1
+""")
 def q_top_customer_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group argmax joined to dims: richest customer per nation
     (window row_number with total-order tiebreak, broadcast dim)."""
@@ -1352,16 +1229,17 @@ def q_top_customer_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_TOP_PER_NATION = """
-SELECT n_name, c_custkey, c_name, c_acctbal FROM (
-  SELECT c_nationkey, c_custkey, c_name, c_acctbal,
-         row_number() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
-  FROM customer
-) c JOIN nation ON c.c_nationkey = n_nationkey
-WHERE rn = 1
-"""
-
-
+@query(oracle="""
+SELECT o_orderkey, c_custkey, c_name, o_totalprice, total_qty
+FROM (
+  SELECT l_orderkey,
+         CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) / 100.0 AS total_qty
+  FROM lineitem GROUP BY l_orderkey
+  HAVING CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) / 100.0 > 200
+) b
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+""")
 def q_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: HAVING on a grouped sum, joined back to the
     order+customer context."""
@@ -1380,19 +1258,14 @@ def q_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_LARGE_ORDERS = """
-SELECT o_orderkey, c_custkey, c_name, o_totalprice, total_qty
-FROM (
-  SELECT l_orderkey,
-         CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) / 100.0 AS total_qty
-  FROM lineitem GROUP BY l_orderkey
-  HAVING CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) / 100.0 > 200
-) b
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-"""
-
-
+@query(oracle="""
+SELECT label, COUNT(*) AS n_vecs,
+       CAST(SUM(CAST(round(sqrt(list_aggregate(list_transform(embedding::DOUBLE[], x -> x*x), 'sum')) * 10000) AS BIGINT)) AS BIGINT)
+         / CAST(COUNT(*) AS BIGINT) / 10000.0 AS mean_norm,
+       CAST(SUM(CAST(round(embedding[1]::DOUBLE * 1000000) AS BIGINT)) AS BIGINT)
+         / CAST(COUNT(*) AS BIGINT) / 1000000.0 AS mean_first
+FROM embeddings GROUP BY label
+""")
 def q_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector-column statistics per cluster: count, mean L2 norm, mean
     of first component — all via JVM array HOF expressions."""
@@ -1413,37 +1286,6 @@ def q_embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EMB_STATS = """
-SELECT label, COUNT(*) AS n_vecs,
-       CAST(SUM(CAST(round(sqrt(list_aggregate(list_transform(embedding::DOUBLE[], x -> x*x), 'sum')) * 10000) AS BIGINT)) AS BIGINT)
-         / CAST(COUNT(*) AS BIGINT) / 10000.0 AS mean_norm,
-       CAST(SUM(CAST(round(embedding[1]::DOUBLE * 1000000) AS BIGINT)) AS BIGINT)
-         / CAST(COUNT(*) AS BIGINT) / 1000000.0 AS mean_first
-FROM embeddings GROUP BY label
-"""
-
-
-QUERIES.update(
-    {
-        "priority_late_orders": q_priority_late_orders,
-        "customer_order_distribution": q_customer_order_distribution,
-        "top_customer_per_nation": q_top_customer_per_nation,
-        "large_orders": q_large_orders,
-        "embedding_stats": q_embedding_stats,
-    }
-)
-
-ORACLES.update(
-    {
-        "priority_late_orders": ORACLE_Q4,
-        "customer_order_distribution": ORACLE_Q13,
-        "top_customer_per_nation": ORACLE_TOP_PER_NATION,
-        "large_orders": ORACLE_LARGE_ORDERS,
-        "embedding_stats": ORACLE_EMB_STATS,
-    }
-)
-
-
 # --------------------------------- batch 5: clustering + grouped pandas
 
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.graph import (  # noqa: E402
@@ -1452,18 +1294,6 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.opera
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.grouped_pandas import (  # noqa: E402
     grouped_percent_rank,
 )
-
-
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs (jaccard ≥ 0.5) resolved into clusters via
-    contraction-based connected components
-    (operators.graph.partitioned_components: one block-local union-find
-    shuffle + iterative propagation on the contracted label graph
-    only); each doc labeled with its cluster representative (min
-    doc_id in the component)."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, threshold=0.5).select("d1", "d2")
-    return dedup_clusters(docs, pairs)
 
 
 ORACLE_DEDUP_CLUSTERS = """
@@ -1494,6 +1324,24 @@ FROM reach GROUP BY node
 """
 
 
+@query(oracle=ORACLE_DEDUP_CLUSTERS)
+def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup pairs (jaccard ≥ 0.5) resolved into clusters via
+    contraction-based connected components
+    (operators.graph.partitioned_components: one block-local union-find
+    shuffle + iterative propagation on the contracted label graph
+    only); each doc labeled with its cluster representative (min
+    doc_id in the component)."""
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = ngram_jaccard_pairs(docs, threshold=0.5).select("d1", "d2")
+    return dedup_clusters(docs, pairs)
+
+
+@query(oracle="""
+SELECT doc_id, source, n_chars,
+       round(percent_rank() OVER (PARTITION BY source ORDER BY n_chars), 6) AS pct_rank
+FROM documents
+""")
 def q_grouped_pct_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-wise pandas transform (applyInPandas): per-source
     percent_rank of document length — SQL-exact semantics, Arrow
@@ -1502,28 +1350,15 @@ def q_grouped_pct_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grouped_percent_rank(docs, "source", "n_chars", "doc_id")
 
 
-ORACLE_GROUPED_PCT = """
-SELECT doc_id, source, n_chars,
-       round(percent_rank() OVER (PARTITION BY source ORDER BY n_chars), 6) AS pct_rank
-FROM documents
-"""
-
-QUERIES.update(
-    {
-        "dedup_clusters": q_dedup_clusters,
-        "grouped_pct_rank": q_grouped_pct_rank,
-    }
-)
-ORACLES.update(
-    {
-        "dedup_clusters": ORACLE_DEDUP_CLUSTERS,
-        "grouped_pct_rank": ORACLE_GROUPED_PCT,
-    }
-)
-
-
 # --------------------------------- batch 6: statistical aggregates
 
+@query(oracle="""
+SELECT event_type,
+       round(quantile_cont(value, 0.5), 6) AS p50,
+       round(quantile_cont(value, 0.9), 6) AS p90,
+       round(quantile_cont(value, 0.99), 6) AS p99
+FROM events GROUP BY event_type
+""")
 def q_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentiles (linear interpolation) of event value per
     type, mirrored by DuckDB `quantile_cont` — computed via
@@ -1553,15 +1388,18 @@ def q_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PERCENTILES = """
-SELECT event_type,
-       round(quantile_cont(value, 0.5), 6) AS p50,
-       round(quantile_cont(value, 0.9), 6) AS p90,
-       round(quantile_cont(value, 0.99), 6) AS p99
-FROM events GROUP BY event_type
-"""
-
-
+@query(oracle="""
+SELECT event_type, n,
+       round(s1 / n / 10000.0, 6) AS mean_value,
+       round((s2 / n - (s1 / n) * (s1 / n)) / 100000000.0, 6) AS var_value,
+       round(sqrt((s2 / n - (s1 / n) * (s1 / n)) / 100000000.0), 6) AS std_value
+FROM (
+  SELECT event_type, COUNT(*) AS n,
+         CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS DOUBLE) AS s1,
+         CAST(SUM(CAST(round(value * 10000) AS BIGINT) * CAST(round(value * 10000) AS BIGINT)) AS DOUBLE) AS s2
+  FROM events GROUP BY event_type
+)
+""")
 def q_value_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean/variance/stddev derived from scaled-integer power sums —
     bit-deterministic under any partitioning (built-in stddev is a
@@ -1595,35 +1433,12 @@ def q_value_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_MOMENTS = """
-SELECT event_type, n,
-       round(s1 / n / 10000.0, 6) AS mean_value,
-       round((s2 / n - (s1 / n) * (s1 / n)) / 100000000.0, 6) AS var_value,
-       round(sqrt((s2 / n - (s1 / n) * (s1 / n)) / 100000000.0), 6) AS std_value
-FROM (
-  SELECT event_type, COUNT(*) AS n,
-         CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS DOUBLE) AS s1,
-         CAST(SUM(CAST(round(value * 10000) AS BIGINT) * CAST(round(value * 10000) AS BIGINT)) AS DOUBLE) AS s2
-  FROM events GROUP BY event_type
-)
-"""
-
-QUERIES.update(
-    {
-        "value_percentiles": q_value_percentiles,
-        "value_moments": q_value_moments,
-    }
-)
-ORACLES.update(
-    {
-        "value_percentiles": ORACLE_PERCENTILES,
-        "value_moments": ORACLE_MOMENTS,
-    }
-)
-
-
 # --------------------------------- batch 7: binning, strings, pivot
 
+@query(oracle="""
+SELECT event_type, CAST(floor(value / 10) AS BIGINT) AS bin, COUNT(*) AS n
+FROM events GROUP BY 1, 2
+""")
 def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram of event values (bin = floor(v/10)) per
     event type — the binning primitive behind data-quality dashboards."""
@@ -1635,12 +1450,16 @@ def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_HISTOGRAM = """
-SELECT event_type, CAST(floor(value / 10) AS BIGINT) AS bin, COUNT(*) AS n
-FROM events GROUP BY 1, 2
-"""
-
-
+@query(oracle="""
+SELECT p_partkey,
+       upper(p_name) AS name_upper,
+       reverse(p_name) AS name_rev,
+       lpad(p_brand, 12, '*') AS brand_padded,
+       translate(p_type, 'AEIOU', 'aeiou') AS type_translated,
+       string_split(p_name, ' ')[1] AS first_word,
+       CAST(length(p_name) AS BIGINT) AS name_len
+FROM part
+""")
 def q_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar string-function surface (SURVEY §2.8 breadth): case
     mapping, padding, reversal, character translation, splitting,
@@ -1657,20 +1476,18 @@ def q_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STRINGS = """
-SELECT p_partkey,
-       upper(p_name) AS name_upper,
-       reverse(p_name) AS name_rev,
-       lpad(p_brand, 12, '*') AS brand_padded,
-       translate(p_type, 'AEIOU', 'aeiou') AS type_translated,
-       string_split(p_name, ' ')[1] AS first_word,
-       CAST(length(p_name) AS BIGINT) AS name_len
-FROM part
-"""
-
 _PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 
 
+@query(oracle="""
+SELECT o_orderstatus,
+       COUNT(*) FILTER (o_orderpriority = '1-URGENT') AS n_1,
+       COUNT(*) FILTER (o_orderpriority = '2-HIGH') AS n_2,
+       COUNT(*) FILTER (o_orderpriority = '3-MEDIUM') AS n_3,
+       COUNT(*) FILTER (o_orderpriority = '4-NOT SPECIFIED') AS n_4,
+       COUNT(*) FILTER (o_orderpriority = '5-LOW') AS n_5
+FROM orders GROUP BY o_orderstatus
+""")
 def q_orders_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: order counts per status × priority (wide layout) — the
     crosstab shape; fixed pivot values so the schema is static."""
@@ -1689,32 +1506,19 @@ def q_orders_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PIVOT = """
-SELECT o_orderstatus,
-       COUNT(*) FILTER (o_orderpriority = '1-URGENT') AS n_1,
-       COUNT(*) FILTER (o_orderpriority = '2-HIGH') AS n_2,
-       COUNT(*) FILTER (o_orderpriority = '3-MEDIUM') AS n_3,
-       COUNT(*) FILTER (o_orderpriority = '4-NOT SPECIFIED') AS n_4,
-       COUNT(*) FILTER (o_orderpriority = '5-LOW') AS n_5
-FROM orders GROUP BY o_orderstatus
-"""
-
-QUERIES.update(
-    {
-        "value_histogram": q_value_histogram,
-        "string_functions": q_string_functions,
-        "orders_pivot": q_orders_pivot,
-    }
+@query(oracle="""
+WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5),
+scored AS (
+  SELECT q.q_id, e.vec_id,
+         round(list_cosine_similarity(e.embedding::DOUBLE[], q.q_emb::DOUBLE[]), 6) AS similarity
+  FROM embeddings e CROSS JOIN q
 )
-ORACLES.update(
-    {
-        "value_histogram": ORACLE_HISTOGRAM,
-        "string_functions": ORACLE_STRINGS,
-        "orders_pivot": ORACLE_PIVOT,
-    }
-)
-
-
+SELECT q_id, vec_id, similarity, rank FROM (
+  SELECT q_id, vec_id, similarity,
+         CAST(row_number() OVER (PARTITION BY q_id ORDER BY similarity DESC, vec_id ASC) AS BIGINT) AS rank
+  FROM scored
+) WHERE rank <= 5
+""")
 def q_ann_ivf_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN with a LEARNED coarse quantizer: deterministic Lloyd fit on
     a content-defined bounded sample (the FAISS-style 100 TB recipe),
@@ -1757,24 +1561,15 @@ def q_ann_ivf_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ANN_IVF_LEARNED = """
-WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5),
-scored AS (
-  SELECT q.q_id, e.vec_id,
-         round(list_cosine_similarity(e.embedding::DOUBLE[], q.q_emb::DOUBLE[]), 6) AS similarity
-  FROM embeddings e CROSS JOIN q
-)
-SELECT q_id, vec_id, similarity, rank FROM (
-  SELECT q_id, vec_id, similarity,
-         CAST(row_number() OVER (PARTITION BY q_id ORDER BY similarity DESC, vec_id ASC) AS BIGINT) AS rank
-  FROM scored
-) WHERE rank <= 5
-"""
-
-QUERIES["ann_ivf_learned"] = q_ann_ivf_learned
-ORACLES["ann_ivf_learned"] = ORACLE_ANN_IVF_LEARNED
-
-
+@query(oracle="""
+SELECT event_type,
+       COUNT(*) FILTER (value > 50) AS n_gt50,
+       bool_or(value > 99) AS any_gt99,
+       bool_and(value >= 0) AS all_nonneg,
+       MIN(value) AS min_value,
+       MAX(value) AS max_value
+FROM events GROUP BY event_type
+""")
 def q_conditional_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional/boolean aggregate surface: filtered counts, ANY/ALL
     predicates, exact min/max per group."""
@@ -1788,17 +1583,12 @@ def q_conditional_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CONDITIONAL = """
-SELECT event_type,
-       COUNT(*) FILTER (value > 50) AS n_gt50,
-       bool_or(value > 99) AS any_gt99,
-       bool_and(value >= 0) AS all_nonneg,
-       MIN(value) AS min_value,
-       MAX(value) AS max_value
-FROM events GROUP BY event_type
-"""
-
-
+@query(oracle="""
+SELECT p_partkey, p_name, p_type FROM part
+WHERE p_name LIKE '%bolt%'
+   OR regexp_matches(p_name, '^red ')
+   OR contains(p_type, 'ECONOMY')
+""")
 def q_pattern_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL pattern-matching surface: LIKE, anchored regex, substring
     containment — all pushed/codegen'd predicates."""
@@ -1810,23 +1600,16 @@ def q_pattern_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("p_partkey", "p_name", "p_type")
 
 
-ORACLE_PATTERNS = """
-SELECT p_partkey, p_name, p_type FROM part
-WHERE p_name LIKE '%bolt%'
-   OR regexp_matches(p_name, '^red ')
-   OR contains(p_type, 'ECONOMY')
-"""
-
-QUERIES.update(
-    {"conditional_aggregates": q_conditional_aggregates, "pattern_filters": q_pattern_filters}
-)
-ORACLES.update(
-    {"conditional_aggregates": ORACLE_CONDITIONAL, "pattern_filters": ORACLE_PATTERNS}
-)
-
-
 # ----------------------------------------------- streaming/batch equivalence
 
+@query(oracle="""
+SELECT epoch_us(date_trunc('hour', ts)) AS hour_us, event_type,
+       COUNT(*) AS n_events,
+       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_value,
+       MIN(value) AS min_value,
+       MAX(value) AS max_value
+FROM events GROUP BY 1, 2
+""")
 def q_stream_batch_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming/batch equivalence (SURVEY §2.7 T4/T5): the hourly
     tumbling aggregation executed as an ACTUAL Structured Streaming job
@@ -1860,21 +1643,16 @@ def q_stream_batch_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_BATCH_HOURLY = """
-SELECT epoch_us(date_trunc('hour', ts)) AS hour_us, event_type,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_value,
-       MIN(value) AS min_value,
-       MAX(value) AS max_value
-FROM events GROUP BY 1, 2
-"""
-
-QUERIES["stream_batch_hourly"] = q_stream_batch_hourly
-ORACLES["stream_batch_hourly"] = ORACLE_STREAM_BATCH_HOURLY
-
-
 # ------------------------------------------------ K5 JSON projection sink
 
+@query(oracle="""
+SELECT n_name,
+       CAST(substr(concat(CAST(n_nationkey AS VARCHAR), '.', CAST(n_regionkey AS VARCHAR), 'N'), 1,
+                   length(concat(CAST(n_nationkey AS VARCHAR), '.', CAST(n_regionkey AS VARCHAR), 'N')) - 1) AS DOUBLE) AS lat,
+       CAST(substr(concat(CAST(n_regionkey AS VARCHAR), '.', CAST(n_nationkey AS VARCHAR), 'E'), 1,
+                   length(concat(CAST(n_regionkey AS VARCHAR), '.', CAST(n_nationkey AS VARCHAR), 'E')) - 1) AS DOUBLE) AS lon
+FROM nation
+""")
 def q_json_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K5 sink (reference ``src/extract_coordinates.py:21-25``): project
     the coordinate columns, export as a single JSON file under a
@@ -1908,21 +1686,23 @@ def q_json_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.schema("n_name string, lat double, lon double").json(path)
 
 
-ORACLE_JSON_SINK = """
-SELECT n_name,
-       CAST(substr(concat(CAST(n_nationkey AS VARCHAR), '.', CAST(n_regionkey AS VARCHAR), 'N'), 1,
-                   length(concat(CAST(n_nationkey AS VARCHAR), '.', CAST(n_regionkey AS VARCHAR), 'N')) - 1) AS DOUBLE) AS lat,
-       CAST(substr(concat(CAST(n_regionkey AS VARCHAR), '.', CAST(n_nationkey AS VARCHAR), 'E'), 1,
-                   length(concat(CAST(n_regionkey AS VARCHAR), '.', CAST(n_nationkey AS VARCHAR), 'E')) - 1) AS DOUBLE) AS lon
-FROM nation
-"""
-
-QUERIES["json_sink_roundtrip"] = q_json_sink_roundtrip
-ORACLES["json_sink_roundtrip"] = ORACLE_JSON_SINK
-
-
 # ---------------------------------------------- S1/S2 raw-zone landing job
 
+@query(oracle="""
+WITH parsed AS (
+  SELECT event_id AS obs_id,
+         CAST(strftime(ts, '%Y-%m-%d %H:%M:%S') AS TIMESTAMP) AS obs_ts,
+         user_id % 30 AS place_key,
+         value
+  FROM events
+), exp AS (SELECT date_trunc('hour', max(obs_ts)) AS h FROM parsed)
+SELECT obs_id, n_name AS place_name, epoch_us(obs_ts) AS obs_us, value,
+       strftime(date_trunc('hour', obs_ts), '%Y%m%d%H') AS obs_hour
+FROM parsed
+CROSS JOIN exp
+JOIN nation ON parsed.place_key = nation.n_nationkey
+WHERE obs_ts >= exp.h - INTERVAL 23 HOUR
+""")
 def q_raw_zone_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1/S2 lifecycle closure (SURVEY §3.1): landed API responses →
     freshness gate → broadcast place tag → hive-partitioned raw zone.
@@ -1983,62 +1763,7 @@ def q_raw_zone_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_RAW_ZONE_LANDING = """
-WITH parsed AS (
-  SELECT event_id AS obs_id,
-         CAST(strftime(ts, '%Y-%m-%d %H:%M:%S') AS TIMESTAMP) AS obs_ts,
-         user_id % 30 AS place_key,
-         value
-  FROM events
-), exp AS (SELECT date_trunc('hour', max(obs_ts)) AS h FROM parsed)
-SELECT obs_id, n_name AS place_name, epoch_us(obs_ts) AS obs_us, value,
-       strftime(date_trunc('hour', obs_ts), '%Y%m%d%H') AS obs_hour
-FROM parsed
-CROSS JOIN exp
-JOIN nation ON parsed.place_key = nation.n_nationkey
-WHERE obs_ts >= exp.h - INTERVAL 23 HOUR
-"""
-
-QUERIES["raw_zone_landing"] = q_raw_zone_landing
-ORACLES["raw_zone_landing"] = ORACLE_RAW_ZONE_LANDING
-
-
 # ------------------------------------------- corpus curation (composite)
-
-def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end training-corpus curation, composed from the operator
-    library with ZERO self-joins: quality gate → exact-dedup
-    representative keep → language ID → per-language corpus stats.
-    Every step is a column expression or a single keyed window/agg over
-    ONE scan of the documents table — the 100 TB plan is scan →
-    window shuffle on content hash → final (tiny) group-by, with the
-    quality filter applied BEFORE the dedup shuffle so rejected
-    documents never move.
-    """
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup import (
-        exact_dedup,
-    )
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
-        lang_id,
-        quality_score,
-    )
-
-    d = load_table(spark, sf_dir, "documents")
-    scored = quality_score(d, id_cols=["doc_id", "text"]).filter(
-        F.col("quality") >= 0.5
-    )
-    rep = exact_dedup(scored, ["text"], "doc_id")
-    tagged = lang_id(rep, id_cols=["doc_id", "n_tokens", "quality"])
-    return tagged.groupBy("predicted_lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("total_tokens"),
-        F.round(
-            F.sum(F.round(F.col("quality") * 1000000).cast("long"))
-            / F.count(F.lit(1)) / 1000000.0,
-            6,
-        ).alias("avg_quality"),
-    )
-
 
 def _oracle_corpus_curation() -> str:
     # same marker/stopword constants as the Spark operators — the
@@ -2084,12 +1809,50 @@ FROM tagged GROUP BY predicted_lang
 """
 
 
-QUERIES["corpus_curation"] = q_corpus_curation
-ORACLES["corpus_curation"] = _oracle_corpus_curation()
+@query(oracle=_oracle_corpus_curation())
+def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end training-corpus curation, composed from the operator
+    library with ZERO self-joins: quality gate → exact-dedup
+    representative keep → language ID → per-language corpus stats.
+    Every step is a column expression or a single keyed window/agg over
+    ONE scan of the documents table — the 100 TB plan is scan →
+    window shuffle on content hash → final (tiny) group-by, with the
+    quality filter applied BEFORE the dedup shuffle so rejected
+    documents never move.
+    """
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup import (
+        exact_dedup,
+    )
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
+        lang_id,
+        quality_score,
+    )
+
+    d = load_table(spark, sf_dir, "documents")
+    scored = quality_score(d, id_cols=["doc_id", "text"]).filter(
+        F.col("quality") >= 0.5
+    )
+    rep = exact_dedup(scored, ["text"], "doc_id")
+    tagged = lang_id(rep, id_cols=["doc_id", "n_tokens", "quality"])
+    return tagged.groupBy("predicted_lang").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("total_tokens"),
+        F.round(
+            F.sum(F.round(F.col("quality") * 1000000).cast("long"))
+            / F.count(F.lit(1)) / 1000000.0,
+            6,
+        ).alias("avg_quality"),
+    )
 
 
 # ---------------------------------------------------- skew-resistant join
 
+@query(oracle="""
+SELECT o_orderpriority, COUNT(*) AS n_items,
+       CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_revenue
+FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+GROUP BY o_orderpriority
+""")
 def q_salted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-resistant fact⋈dim join via key salting
     (operators.skew.salted_join): lineitem joined to orders with the
@@ -2118,19 +1881,22 @@ def q_salted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SALTED_REVENUE = """
-SELECT o_orderpriority, COUNT(*) AS n_items,
-       CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_revenue
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-GROUP BY o_orderpriority
-"""
-
-QUERIES["salted_revenue"] = q_salted_revenue
-ORACLES["salted_revenue"] = ORACLE_SALTED_REVENUE
-
-
 # ------------------------------------- deterministic split / SCD2 / decontam
 
+def _oracle_train_split() -> str:
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.sampling import (
+        split_sql_case,
+    )
+
+    case = split_sql_case("doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}, salt="v1")
+    return f"""
+SELECT {case} AS split, COUNT(*) AS n_docs,
+       CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT) AS total_tokens
+FROM documents GROUP BY 1
+"""
+
+
+@query(oracle=_oracle_train_split())
 def q_train_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic content-addressed train/val/test split
     (operators.sampling): assignment is a pure function of
@@ -2155,23 +1921,27 @@ def q_train_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_train_split() -> str:
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.sampling import (
-        split_sql_case,
-    )
-
-    case = split_sql_case("doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}, salt="v1")
-    return f"""
-SELECT {case} AS split, COUNT(*) AS n_docs,
-       CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT) AS total_tokens
-FROM documents GROUP BY 1
+ORACLE_SCD2 = """
+WITH ordered AS (
+  SELECT user_id, event_type, ts, event_id,
+         lag(ts) OVER w IS NULL
+           OR event_type IS DISTINCT FROM lag(event_type) OVER w AS _open
+  FROM events
+  WHERE user_id < 200
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+), versions AS (
+  SELECT user_id, event_type, ts, event_id FROM ordered WHERE _open
+)
+SELECT user_id, event_type,
+       epoch_us(ts) AS valid_from_us,
+       epoch_us(lead(ts) OVER w2) AS valid_to_us,
+       lead(ts) OVER w2 IS NULL AS is_current
+FROM versions
+WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
 """
 
 
-QUERIES["train_split_stats"] = q_train_split_stats
-ORACLES["train_split_stats"] = _oracle_train_split()
-
-
+@query(oracle=ORACLE_SCD2)
 def q_scd2_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD Type-2 history from the event stream (operators.scd): per
     user, every run of consecutive identical event_type observations
@@ -2194,29 +1964,18 @@ def q_scd2_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SCD2 = """
-WITH ordered AS (
-  SELECT user_id, event_type, ts, event_id,
-         lag(ts) OVER w IS NULL
-           OR event_type IS DISTINCT FROM lag(event_type) OVER w AS _open
-  FROM events
-  WHERE user_id < 200
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), versions AS (
-  SELECT user_id, event_type, ts, event_id FROM ordered WHERE _open
-)
-SELECT user_id, event_type,
-       epoch_us(ts) AS valid_from_us,
-       epoch_us(lead(ts) OVER w2) AS valid_to_us,
-       lead(ts) OVER w2 IS NULL AS is_current
-FROM versions
-WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
-"""
-
-QUERIES["scd2_user_type"] = q_scd2_user_type
-ORACLES["scd2_user_type"] = ORACLE_SCD2
-
-
+@query(oracle="""
+WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+sh AS (
+  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS gram
+  FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i) g
+),
+bench AS (SELECT DISTINCT gram FROM sh WHERE doc_id % 97 = 0)
+SELECT s.doc_id, COUNT(*) AS n_shared_grams
+FROM sh s JOIN bench b ON s.gram = b.gram
+WHERE s.doc_id % 97 <> 0
+GROUP BY s.doc_id
+""")
 def q_decontamination_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (operators.decontaminate): corpus
     documents sharing any 3-gram with a (deterministically chosen)
@@ -2233,25 +1992,15 @@ def q_decontamination_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_overlap(corpus, bench, n=3)
 
 
-ORACLE_DECONTAM = """
-WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS gram
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i) g
-),
-bench AS (SELECT DISTINCT gram FROM sh WHERE doc_id % 97 = 0)
-SELECT s.doc_id, COUNT(*) AS n_shared_grams
-FROM sh s JOIN bench b ON s.gram = b.gram
-WHERE s.doc_id % 97 <> 0
-GROUP BY s.doc_id
-"""
-
-QUERIES["decontamination_flags"] = q_decontamination_flags
-ORACLES["decontamination_flags"] = ORACLE_DECONTAM
-
-
 # --------------------------------------- maintenance / incremental rollup
 
+@query(oracle="""
+SELECT event_type, COUNT(*) AS n_events,
+       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_value,
+       MIN(epoch_us(ts)) AS first_us,
+       MAX(epoch_us(ts)) AS last_us
+FROM events GROUP BY event_type
+""")
 def q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction (sources.maintenance): the events table is
     deliberately fragmented into 64 tiny files, then compacted back to
@@ -2284,18 +2033,13 @@ def q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_COMPACTION = """
-SELECT event_type, COUNT(*) AS n_events,
-       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_value,
-       MIN(epoch_us(ts)) AS first_us,
-       MAX(epoch_us(ts)) AS last_us
+@query(oracle="""
+SELECT event_type, COUNT(*) AS n,
+       MIN(value) AS vmin, MAX(value) AS vmax,
+       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS vsum,
+       round(CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS DOUBLE) / COUNT(*) / 10000.0, 6) AS vavg
 FROM events GROUP BY event_type
-"""
-
-QUERIES["compaction_roundtrip"] = q_compaction_roundtrip
-ORACLES["compaction_roundtrip"] = ORACLE_COMPACTION
-
-
+""")
 def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental aggregate maintenance (operators.incremental): the
     events table is split into three disjoint 'ingest batches' (by
@@ -2320,20 +2064,16 @@ def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_INCREMENTAL = """
-SELECT event_type, COUNT(*) AS n,
-       MIN(value) AS vmin, MAX(value) AS vmax,
-       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS vsum,
-       round(CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS DOUBLE) / COUNT(*) / 10000.0, 6) AS vavg
-FROM events GROUP BY event_type
-"""
-
-QUERIES["incremental_rollup"] = q_incremental_rollup
-ORACLES["incremental_rollup"] = ORACLE_INCREMENTAL
-
-
 # ------------------------------------ rolling range window / stratified cap
 
+@query(oracle="""
+SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+       COUNT(*) OVER w AS n_trailing_hour,
+       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) OVER w AS BIGINT) / 10000.0 AS sum_trailing_hour
+FROM events
+WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
+             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
+""")
 def q_rolling_hour_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-RANGE window frame (value-based, not row-based): per user,
     count and exact sum of events in the TRAILING HOUR of each event.
@@ -2361,19 +2101,13 @@ def q_rolling_hour_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ROLLING_HOUR = """
-SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-       COUNT(*) OVER w AS n_trailing_hour,
-       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) OVER w AS BIGINT) / 10000.0 AS sum_trailing_hour
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-"""
-
-QUERIES["rolling_hour_metrics"] = q_rolling_hour_metrics
-ORACLES["rolling_hour_metrics"] = ORACLE_ROLLING_HOUR
-
-
+@query(oracle="""
+SELECT doc_id, source, lang FROM documents
+QUALIFY row_number() OVER (
+  PARTITION BY source
+  ORDER BY md5('v1' || chr(31) || CAST(doc_id AS VARCHAR)) ASC, doc_id ASC
+) <= 10
+""")
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-source document cap (operators.sampling
     .stratified_cap): at most 10 documents per source, chosen by
@@ -2390,36 +2124,9 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STRATIFIED = """
-SELECT doc_id, source, lang FROM documents
-QUALIFY row_number() OVER (
-  PARTITION BY source
-  ORDER BY md5('v1' || chr(31) || CAST(doc_id AS VARCHAR)) ASC, doc_id ASC
-) <= 10
-"""
-
-QUERIES["stratified_sample"] = q_stratified_sample
-ORACLES["stratified_sample"] = ORACLE_STRATIFIED
-
-
 # ------------------------------- repetition filter / binned range join
 
-def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition metrics (operators.text
-    .repetition_stats): top-word share, top-bigram share, longest
-    same-token run, and the drop flag. Map-only — all three metrics
-    are array-local higher-order expressions, zero shuffles. The
-    interpreted fold is expression-dense per row, so the single-file
-    fixture scan goes through the gated ``parallelize`` (no-op on a
-    well-split production table)."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
-        repetition_stats,
-    )
-
-    return repetition_stats(parallelize(load_table(spark, sf_dir, "documents")))
-
-
-ORACLE_REPETITION = """
+@query(oracle="""
 WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
 base AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens FROM toks),
 words AS (
@@ -2467,10 +2174,20 @@ FROM base b
 JOIN wc USING (doc_id)
 LEFT JOIN bc USING (doc_id)
 JOIN runs USING (doc_id)
-"""
+""")
+def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher-style repetition metrics (operators.text
+    .repetition_stats): top-word share, top-bigram share, longest
+    same-token run, and the drop flag. Map-only — all three metrics
+    are array-local higher-order expressions, zero shuffles. The
+    interpreted fold is expression-dense per row, so the single-file
+    fixture scan goes through the gated ``parallelize`` (no-op on a
+    well-split production table)."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
+        repetition_stats,
+    )
 
-QUERIES["repetition_stats"] = q_repetition_stats
-ORACLES["repetition_stats"] = ORACLE_REPETITION
+    return repetition_stats(parallelize(load_table(spark, sf_dir, "documents")))
 
 
 # Overlapping value bands for the range-join demo: deliberately
@@ -2487,6 +2204,18 @@ VALUE_BANDS: list[tuple[int, float, float]] = [
 ]
 
 
+def _oracle_value_band_join() -> str:
+    rows = ", ".join(f"({b}, {lo}, {hi})" for b, lo, hi in VALUE_BANDS)
+    return f"""
+WITH bands(band_id, lo, hi) AS (VALUES {rows})
+SELECT CAST(band_id AS BIGINT) AS band_id, COUNT(*) AS n_events,
+       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_value
+FROM events e JOIN bands b ON e.value >= b.lo AND e.value < b.hi
+GROUP BY band_id
+"""
+
+
+@query(oracle=_oracle_value_band_join())
 def q_value_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-containment join (operators.rangejoin.bin_range_join):
     every event joined to every OVERLAPPING value band via the
@@ -2507,21 +2236,6 @@ def q_value_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_value_band_join() -> str:
-    rows = ", ".join(f"({b}, {lo}, {hi})" for b, lo, hi in VALUE_BANDS)
-    return f"""
-WITH bands(band_id, lo, hi) AS (VALUES {rows})
-SELECT CAST(band_id AS BIGINT) AS band_id, COUNT(*) AS n_events,
-       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_value
-FROM events e JOIN bands b ON e.value >= b.lo AND e.value < b.hi
-GROUP BY band_id
-"""
-
-
-QUERIES["value_band_join"] = q_value_band_join
-ORACLES["value_band_join"] = _oracle_value_band_join()
-
-
 # ----------------------- PII, cohort/funnel analytics, mixture weights
 
 # The synthetic lake carries no real PII, so the PII queries construct
@@ -2530,30 +2244,6 @@ ORACLES["value_band_join"] = _oracle_value_band_join()
 # expression in the Spark plan and the oracle — then run the engine's
 # scan/redaction over it. Patterns live in operators/pii.py and are
 # valid in both Java regex and RE2.
-
-def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII audit + masking (operators.pii.pii_scan): per-row counts by
-    category and the redacted text, map-only, zero shuffles."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.pii import (
-        pii_scan,
-    )
-
-    c = load_table(spark, sf_dir, "customer")
-    key = F.col("c_custkey").cast("string")
-    contact = F.concat(
-        F.col("c_name"),
-        F.lit(" <user"), key, F.lit("@example.com> from 10."),
-        (F.col("c_custkey") % 256).cast("string"),
-        F.lit(".0."), F.col("c_nationkey").cast("string"),
-        F.lit(" card 4242-4242-4242-"),
-        F.lpad((F.col("c_custkey") % 10000).cast("string"), 4, "0"),
-        F.lit(" tel 555-"),
-        F.lpad((F.col("c_custkey") % 1000).cast("string"), 3, "0"),
-        F.lit("-"),
-        F.lpad((F.col("c_custkey") % 10000).cast("string"), 4, "0"),
-    )
-    return pii_scan(c.select("c_custkey", contact.alias("text")), id_cols=["c_custkey"])
-
 
 def _oracle_pii_redaction() -> str:
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.pii import (
@@ -2587,10 +2277,39 @@ FROM t
 """
 
 
-QUERIES["pii_redaction"] = q_pii_redaction
-ORACLES["pii_redaction"] = _oracle_pii_redaction()
+@query(oracle=_oracle_pii_redaction())
+def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PII audit + masking (operators.pii.pii_scan): per-row counts by
+    category and the redacted text, map-only, zero shuffles."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.pii import (
+        pii_scan,
+    )
+
+    c = load_table(spark, sf_dir, "customer")
+    key = F.col("c_custkey").cast("string")
+    contact = F.concat(
+        F.col("c_name"),
+        F.lit(" <user"), key, F.lit("@example.com> from 10."),
+        (F.col("c_custkey") % 256).cast("string"),
+        F.lit(".0."), F.col("c_nationkey").cast("string"),
+        F.lit(" card 4242-4242-4242-"),
+        F.lpad((F.col("c_custkey") % 10000).cast("string"), 4, "0"),
+        F.lit(" tel 555-"),
+        F.lpad((F.col("c_custkey") % 1000).cast("string"), 3, "0"),
+        F.lit("-"),
+        F.lpad((F.col("c_custkey") % 10000).cast("string"), 4, "0"),
+    )
+    return pii_scan(c.select("c_custkey", contact.alias("text")), id_cols=["c_custkey"])
 
 
+@query(oracle="""
+WITH act AS (SELECT DISTINCT user_id AS u, date_trunc('week', ts) AS p FROM events),
+c AS (SELECT u, p, min(p) OVER (PARTITION BY u) AS cohort FROM act)
+SELECT epoch_us(CAST(cohort AS TIMESTAMP)) AS cohort_us,
+       CAST(date_diff('day', cohort, p) / 7 AS BIGINT) AS period_offset,
+       COUNT(*) AS n_users
+FROM c GROUP BY 1, 2
+""")
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly retention triangle (operators.cohort.cohort_retention):
     distinct (user, week) reduce -> per-user MIN window -> triangle
@@ -2602,31 +2321,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cohort_retention(load_table(spark, sf_dir, "events"), period="week")
 
 
-ORACLE_COHORT = """
-WITH act AS (SELECT DISTINCT user_id AS u, date_trunc('week', ts) AS p FROM events),
-c AS (SELECT u, p, min(p) OVER (PARTITION BY u) AS cohort FROM act)
-SELECT epoch_us(CAST(cohort AS TIMESTAMP)) AS cohort_us,
-       CAST(date_diff('day', cohort, p) / 7 AS BIGINT) AS period_offset,
-       COUNT(*) AS n_users
-FROM c GROUP BY 1, 2
-"""
-
-QUERIES["cohort_retention"] = q_cohort_retention
-ORACLES["cohort_retention"] = ORACLE_COHORT
-
-
-def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered conversion funnel view -> click -> purchase
-    (operators.cohort.funnel): one per-user conditional aggregation,
-    strict timestamp ordering between stages."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.cohort import (
-        funnel,
-    )
-
-    return funnel(load_table(spark, sf_dir, "events"))
-
-
-ORACLE_FUNNEL = """
+@query(oracle="""
 WITH pu AS (
   SELECT user_id,
          min(CASE WHEN event_type = 'view' THEN ts END) AS t0,
@@ -2644,12 +2339,29 @@ f AS (
 SELECT CAST(0 AS BIGINT) AS stage_idx, 'view' AS stage, n0 AS n_users FROM f
 UNION ALL SELECT 1, 'click', n1 FROM f
 UNION ALL SELECT 2, 'purchase', n2 FROM f
-"""
+""")
+def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered conversion funnel view -> click -> purchase
+    (operators.cohort.funnel): one per-user conditional aggregation,
+    strict timestamp ordering between stages."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.cohort import (
+        funnel,
+    )
 
-QUERIES["event_funnel"] = q_event_funnel
-ORACLES["event_funnel"] = ORACLE_FUNNEL
+    return funnel(load_table(spark, sf_dir, "events"))
 
 
+@query(oracle="""
+WITH g AS (
+  SELECT source, lang, COUNT(*) AS n_docs,
+         CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
+  FROM documents GROUP BY source, lang
+),
+w AS (SELECT *, CAST(round(sqrt(n_tokens) * 1000000) AS BIGINT) AS w_scaled FROM g)
+SELECT source, lang, n_docs, n_tokens, w_scaled,
+       round(w_scaled / (SELECT SUM(w_scaled) FROM w), 6) AS weight
+FROM w
+""")
 def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-mixture weights per (source, lang)
     (operators.sampling.mixture_weights): sqrt-of-tokens temperature
@@ -2665,22 +2377,10 @@ def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mixture_weights(d, ["source", "lang"], F.size(tokens("text")))
 
 
-ORACLE_MIXTURE = """
-WITH g AS (
-  SELECT source, lang, COUNT(*) AS n_docs,
-         CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-  FROM documents GROUP BY source, lang
-),
-w AS (SELECT *, CAST(round(sqrt(n_tokens) * 1000000) AS BIGINT) AS w_scaled FROM g)
-SELECT source, lang, n_docs, n_tokens, w_scaled,
-       round(w_scaled / (SELECT SUM(w_scaled) FROM w), 6) AS weight
-FROM w
-"""
-
-QUERIES["mixture_weights"] = q_mixture_weights
-ORACLES["mixture_weights"] = ORACLE_MIXTURE
-
-
+@query(oracle="""
+SELECT event_type, COUNT(DISTINCT user_id) AS exact_users, TRUE AS sketch_ok
+FROM events GROUP BY event_type
+""")
 def q_approx_distinct_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog++ sketch vs exact distinct per event type: emits the
     exact count plus a boolean asserting the rsd=0.01 sketch landed
@@ -2698,17 +2398,17 @@ def q_approx_distinct_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_APPROX_DISTINCT = """
-SELECT event_type, COUNT(DISTINCT user_id) AS exact_users, TRUE AS sketch_ok
-FROM events GROUP BY event_type
-"""
-
-QUERIES["approx_distinct_check"] = q_approx_distinct_check
-ORACLES["approx_distinct_check"] = ORACLE_APPROX_DISTINCT
-
-
 # --------------------------- gaps-and-islands / interval concurrency
 
+@query(oracle="""
+WITH x AS (
+  SELECT user_id, epoch_us(ts) AS t,
+         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev
+  FROM events
+)
+SELECT user_id, prev AS gap_start_us, t AS gap_end_us, t - prev AS gap_us
+FROM x WHERE prev IS NOT NULL AND t - prev > 21600000000
+""")
 def q_user_inactivity_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gaps-and-islands (operators.windows.inactivity_gaps): per-user
     inactivity spans longer than 6 hours, exact epoch-micros bounds.
@@ -2722,20 +2422,18 @@ def q_user_inactivity_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     return inactivity_gaps(e, "user_id", "ts", "event_id", min_gap_seconds=6 * 3600)
 
 
-ORACLE_INACTIVITY = """
-WITH x AS (
-  SELECT user_id, epoch_us(ts) AS t,
-         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev
+@query(oracle="""
+WITH iv AS (
+  SELECT epoch_us(ts) AS s,
+         epoch_us(ts) + CAST(round(value) AS BIGINT) * 1000000 AS e
   FROM events
-)
-SELECT user_id, prev AS gap_start_us, t AS gap_end_us, t - prev AS gap_us
-FROM x WHERE prev IS NOT NULL AND t - prev > 21600000000
-"""
-
-QUERIES["user_inactivity_gaps"] = q_user_inactivity_gaps
-ORACLES["user_inactivity_gaps"] = ORACLE_INACTIVITY
-
-
+),
+d AS (SELECT s AS t, 1 AS delta FROM iv UNION ALL SELECT e, -1 FROM iv),
+r AS (SELECT t, delta, SUM(delta) OVER (ORDER BY t, delta) AS running FROM d)
+SELECT (t // 3600000000) * 3600000000 AS bucket_us,
+       CAST(max(running) AS BIGINT) AS peak
+FROM r GROUP BY 1
+""")
 def q_concurrency_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peak concurrent open intervals per hour
     (operators.windows.max_concurrency): each event opens a half-open
@@ -2756,39 +2454,9 @@ def q_concurrency_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return max_concurrency(iv, "s", "en")
 
 
-ORACLE_CONCURRENCY = """
-WITH iv AS (
-  SELECT epoch_us(ts) AS s,
-         epoch_us(ts) + CAST(round(value) AS BIGINT) * 1000000 AS e
-  FROM events
-),
-d AS (SELECT s AS t, 1 AS delta FROM iv UNION ALL SELECT e, -1 FROM iv),
-r AS (SELECT t, delta, SUM(delta) OVER (ORDER BY t, delta) AS running FROM d)
-SELECT (t // 3600000000) * 3600000000 AS bucket_us,
-       CAST(max(running) AS BIGINT) AS peak
-FROM r GROUP BY 1
-"""
-
-QUERIES["concurrency_peaks"] = q_concurrency_peaks
-ORACLES["concurrency_peaks"] = ORACLE_CONCURRENCY
-
-
 # --------------------------------------- term weighting / keyword search
 
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Smoothed TF-IDF top-5 terms per document (operators.tfidf).
-    Document frequencies attach via agg+equi-join rather than a
-    term-partitioned window so Zipf head terms can't create a hot
-    sort partition; corpus scalars ride a 1-row broadcast. Score is
-    rounded to 6dp BEFORE the ranking window (term-name tiebreak)."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.tfidf import (
-        tfidf_topk,
-    )
-
-    return tfidf_topk(load_table(spark, sf_dir, "documents"), k=5)
-
-
-ORACLE_TFIDF = """
+@query(oracle="""
 WITH toks AS (
   SELECT doc_id, len(string_split(text, ' ')) AS dl,
          unnest(string_split(text, ' ')) AS term
@@ -2807,25 +2475,21 @@ SELECT doc_id, term, tf, df, tfidf FROM (
          ) AS rank
   FROM tf t JOIN dfreq d USING (term) CROSS JOIN g
 ) WHERE rank <= 5
-"""
-
-QUERIES["tfidf_top_terms"] = q_tfidf_top_terms
-ORACLES["tfidf_top_terms"] = ORACLE_TFIDF
-
-
-def q_bm25_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 top-5 terms per document (operators.tfidf.bm25_topk,
-    k1=1.2, b=0.75). Same three-exchange shape as TF-IDF; length
-    normalization uses the exact corpus token total so avgdl is
-    reproducible on both engines."""
+""")
+def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Smoothed TF-IDF top-5 terms per document (operators.tfidf).
+    Document frequencies attach via agg+equi-join rather than a
+    term-partitioned window so Zipf head terms can't create a hot
+    sort partition; corpus scalars ride a 1-row broadcast. Score is
+    rounded to 6dp BEFORE the ranking window (term-name tiebreak)."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.tfidf import (
-        bm25_topk,
+        tfidf_topk,
     )
 
-    return bm25_topk(load_table(spark, sf_dir, "documents"), k=5)
+    return tfidf_topk(load_table(spark, sf_dir, "documents"), k=5)
 
 
-ORACLE_BM25 = """
+@query(oracle="""
 WITH toks AS (
   SELECT doc_id, len(string_split(text, ' ')) AS dl,
          unnest(string_split(text, ' ')) AS term
@@ -2860,12 +2524,29 @@ SELECT doc_id, term, tf, df, dl, bm25 FROM (
          ) AS rank
   FROM tf t JOIN dfreq d USING (term) CROSS JOIN g
 ) WHERE rank <= 5
-"""
+""")
+def q_bm25_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Okapi BM25 top-5 terms per document (operators.tfidf.bm25_topk,
+    k1=1.2, b=0.75). Same three-exchange shape as TF-IDF; length
+    normalization uses the exact corpus token total so avgdl is
+    reproducible on both engines."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.tfidf import (
+        bm25_topk,
+    )
 
-QUERIES["bm25_top_terms"] = q_bm25_top_terms
-ORACLES["bm25_top_terms"] = ORACLE_BM25
+    return bm25_topk(load_table(spark, sf_dir, "documents"), k=5)
 
 
+@query(oracle="""
+WITH tok AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
+)
+SELECT doc_id, count(*) AS n_hits
+FROM tok
+WHERE term IN ('join', 'stream', 'filter')
+GROUP BY doc_id
+HAVING count(DISTINCT term) = 3
+""")
 def q_keyword_and_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive keyword search (operators.search): documents
     containing ALL of {join, stream, filter}, scored by total query
@@ -2880,23 +2561,33 @@ def q_keyword_and_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keyword_and_search(d, ["join", "stream", "filter"])
 
 
-ORACLE_KEYWORD_AND = """
-WITH tok AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-)
-SELECT doc_id, count(*) AS n_hits
-FROM tok
-WHERE term IN ('join', 'stream', 'filter')
-GROUP BY doc_id
-HAVING count(DISTINCT term) = 3
-"""
-
-QUERIES["keyword_and_search"] = q_keyword_and_search
-ORACLES["keyword_and_search"] = ORACLE_KEYWORD_AND
-
-
 # ------------------------------- point-in-time join / snapshot diff
 
+@query(oracle="""
+WITH e AS (SELECT * FROM events WHERE user_id < 200),
+ordered AS (
+  SELECT user_id, event_type, ts, event_id,
+         lag(ts) OVER w IS NULL
+           OR event_type IS DISTINCT FROM lag(event_type) OVER w AS _open
+  FROM e WHERE event_type <> 'purchase'
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+), versions AS (
+  SELECT user_id, event_type, ts, event_id FROM ordered WHERE _open
+), hist AS (
+  SELECT user_id, event_type AS state, ts AS valid_from,
+         lead(ts) OVER w2 AS valid_to
+  FROM versions WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
+)
+SELECT f.event_id, f.user_id, epoch_us(f.ts) AS ts_us,
+       h.state AS asof_state,
+       epoch_us(h.valid_from) AS asof_valid_from_us
+FROM e f
+LEFT JOIN hist h
+  ON f.user_id = h.user_id
+ AND h.valid_from <= f.ts
+ AND (h.valid_to IS NULL OR f.ts < h.valid_to)
+WHERE f.event_type = 'purchase'
+""")
 def q_pit_enriched_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time enrichment (operators.asof.point_in_time_join):
     each purchase event picks up the SCD2 user-state version
@@ -2926,36 +2617,33 @@ def q_pit_enriched_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PIT = """
-WITH e AS (SELECT * FROM events WHERE user_id < 200),
-ordered AS (
-  SELECT user_id, event_type, ts, event_id,
-         lag(ts) OVER w IS NULL
-           OR event_type IS DISTINCT FROM lag(event_type) OVER w AS _open
-  FROM e WHERE event_type <> 'purchase'
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), versions AS (
-  SELECT user_id, event_type, ts, event_id FROM ordered WHERE _open
-), hist AS (
-  SELECT user_id, event_type AS state, ts AS valid_from,
-         lead(ts) OVER w2 AS valid_to
-  FROM versions WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
+@query(oracle="""
+WITH old AS (
+  SELECT c_custkey, c_mktsegment, round(c_acctbal, 2) AS c_acctbal
+  FROM customer WHERE c_custkey % 10 <> 0
+), new AS (
+  SELECT c_custkey, c_mktsegment,
+         round(CASE WHEN c_custkey % 10 = 2 THEN c_acctbal + 100.0
+                    ELSE c_acctbal END, 2) AS c_acctbal
+  FROM customer WHERE c_custkey % 10 <> 1
 )
-SELECT f.event_id, f.user_id, epoch_us(f.ts) AS ts_us,
-       h.state AS asof_state,
-       epoch_us(h.valid_from) AS asof_valid_from_us
-FROM e f
-LEFT JOIN hist h
-  ON f.user_id = h.user_id
- AND h.valid_from <= f.ts
- AND (h.valid_to IS NULL OR f.ts < h.valid_to)
-WHERE f.event_type = 'purchase'
-"""
-
-QUERIES["pit_enriched_purchases"] = q_pit_enriched_purchases
-ORACLES["pit_enriched_purchases"] = ORACLE_PIT
-
-
+SELECT COALESCE(o.c_custkey, n.c_custkey) AS c_custkey,
+       CASE WHEN o.c_custkey IS NULL THEN 'added'
+            WHEN n.c_custkey IS NULL THEN 'removed'
+            WHEN o.c_mktsegment IS DISTINCT FROM n.c_mktsegment
+              OR o.c_acctbal IS DISTINCT FROM n.c_acctbal THEN 'changed'
+            ELSE 'unchanged' END AS change_type,
+       o.c_mktsegment AS old_c_mktsegment,
+       o.c_acctbal AS old_c_acctbal,
+       n.c_mktsegment AS new_c_mktsegment,
+       n.c_acctbal AS new_c_acctbal
+FROM old o FULL OUTER JOIN new n ON o.c_custkey = n.c_custkey
+WHERE CASE WHEN o.c_custkey IS NULL THEN 'added'
+           WHEN n.c_custkey IS NULL THEN 'removed'
+           WHEN o.c_mktsegment IS DISTINCT FROM n.c_mktsegment
+             OR o.c_acctbal IS DISTINCT FROM n.c_acctbal THEN 'changed'
+           ELSE 'unchanged' END <> 'unchanged'
+""")
 def q_snapshot_diff_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot diff / change-data-feed (operators.diff): two
     deterministically-derived customer snapshots (keys ending in 0
@@ -2983,68 +2671,9 @@ def q_snapshot_diff_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snapshot_diff(old, new, ["c_custkey"], ["c_mktsegment", "c_acctbal"])
 
 
-ORACLE_SNAPSHOT_DIFF = """
-WITH old AS (
-  SELECT c_custkey, c_mktsegment, round(c_acctbal, 2) AS c_acctbal
-  FROM customer WHERE c_custkey % 10 <> 0
-), new AS (
-  SELECT c_custkey, c_mktsegment,
-         round(CASE WHEN c_custkey % 10 = 2 THEN c_acctbal + 100.0
-                    ELSE c_acctbal END, 2) AS c_acctbal
-  FROM customer WHERE c_custkey % 10 <> 1
-)
-SELECT COALESCE(o.c_custkey, n.c_custkey) AS c_custkey,
-       CASE WHEN o.c_custkey IS NULL THEN 'added'
-            WHEN n.c_custkey IS NULL THEN 'removed'
-            WHEN o.c_mktsegment IS DISTINCT FROM n.c_mktsegment
-              OR o.c_acctbal IS DISTINCT FROM n.c_acctbal THEN 'changed'
-            ELSE 'unchanged' END AS change_type,
-       o.c_mktsegment AS old_c_mktsegment,
-       o.c_acctbal AS old_c_acctbal,
-       n.c_mktsegment AS new_c_mktsegment,
-       n.c_acctbal AS new_c_acctbal
-FROM old o FULL OUTER JOIN new n ON o.c_custkey = n.c_custkey
-WHERE CASE WHEN o.c_custkey IS NULL THEN 'added'
-           WHEN n.c_custkey IS NULL THEN 'removed'
-           WHEN o.c_mktsegment IS DISTINCT FROM n.c_mktsegment
-             OR o.c_acctbal IS DISTINCT FROM n.c_acctbal THEN 'changed'
-           ELSE 'unchanged' END <> 'unchanged'
-"""
-
-QUERIES["snapshot_diff_customers"] = q_snapshot_diff_customers
-ORACLES["snapshot_diff_customers"] = ORACLE_SNAPSHOT_DIFF
-
-
 # ------------------------------ data-quality suite / grouped regression
 
-def q_dq_orders_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declarative data-quality suite (operators.dq): six expectations
-    over orders — nullability, domain membership, range, format,
-    single-column uniqueness, and referential integrity against
-    customer. All row-local rules + uniqueness fold into ONE
-    conditional-aggregate scan; the FK rule is a broadcast semi-join
-    probe. Generalizes the reference's scattered validate.py /
-    pre-insert FK checks into one report."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dq import (
-        expectations_report,
-    )
-
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    return expectations_report(
-        o,
-        row_rules={
-            "not_null_custkey": F.col("o_custkey").isNull(),
-            "status_domain": ~F.col("o_orderstatus").isin("F", "O", "P"),
-            "positive_price": F.col("o_totalprice") <= 0,
-            "priority_format": ~F.col("o_orderpriority").rlike("^[1-5]-"),
-        },
-        unique_rules={"unique_orderkey": "o_orderkey"},
-        fk_rules={"fk_custkey": ("o_custkey", c, "c_custkey")},
-    )
-
-
-ORACLE_DQ = """
+@query(oracle="""
 SELECT 'not_null_custkey' AS rule, CAST(count(*) AS BIGINT) AS n_checked,
        CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_violations,
        CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) = 0 AS ok
@@ -3074,30 +2703,35 @@ SELECT 'fk_custkey', CAST(count(*) AS BIGINT),
        CAST(sum(CASE WHEN o_custkey IN (SELECT c_custkey FROM customer) THEN 0 ELSE 1 END) AS BIGINT),
        CAST(sum(CASE WHEN o_custkey IN (SELECT c_custkey FROM customer) THEN 0 ELSE 1 END) AS BIGINT) = 0
 FROM orders
-"""
-
-QUERIES["dq_orders_report"] = q_dq_orders_report
-ORACLES["dq_orders_report"] = ORACLE_DQ
-
-
-def q_hourly_value_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type OLS of value on hour-of-day
-    (operators.regression.grouped_linreg): slope/intercept/R² from
-    exact scaled-integer power sums — one combiner-reduced aggregate,
-    reproducible under any partitioning (unlike the built-in
-    regr_slope streaming estimator)."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.regression import (
-        grouped_linreg,
+""")
+def q_dq_orders_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Declarative data-quality suite (operators.dq): six expectations
+    over orders — nullability, domain membership, range, format,
+    single-column uniqueness, and referential integrity against
+    customer. All row-local rules + uniqueness fold into ONE
+    conditional-aggregate scan; the FK rule is a broadcast semi-join
+    probe. Generalizes the reference's scattered validate.py /
+    pre-insert FK checks into one report."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dq import (
+        expectations_report,
     )
 
-    e = load_table(spark, sf_dir, "events").select(
-        "event_type", epoch_us("ts").alias("_us"), "value"
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    return expectations_report(
+        o,
+        row_rules={
+            "not_null_custkey": F.col("o_custkey").isNull(),
+            "status_domain": ~F.col("o_orderstatus").isin("F", "O", "P"),
+            "positive_price": F.col("o_totalprice") <= 0,
+            "priority_format": ~F.col("o_orderpriority").rlike("^[1-5]-"),
+        },
+        unique_rules={"unique_orderkey": "o_orderkey"},
+        fk_rules={"fk_custkey": ("o_custkey", c, "c_custkey")},
     )
-    x = F.expr("_us div 3600000000") % 24
-    return grouped_linreg(e, ["event_type"], x, F.col("value"), y_scale=100)
 
 
-ORACLE_LINREG = """
+@query(oracle="""
 WITH b AS (
   SELECT event_type, (epoch_us(ts) // 3600000000) % 24 AS x,
          CAST(round(value * 100) AS BIGINT) AS y
@@ -3124,14 +2758,39 @@ SELECT event_type, n,
        round(((syd - (num / den) * sxd) / nd) / 100, 6) AS intercept,
        round((num * num) / (den * (nd * syyd - syd * syd)), 6) AS r2
 FROM f
-"""
+""")
+def q_hourly_value_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-event-type OLS of value on hour-of-day
+    (operators.regression.grouped_linreg): slope/intercept/R² from
+    exact scaled-integer power sums — one combiner-reduced aggregate,
+    reproducible under any partitioning (unlike the built-in
+    regr_slope streaming estimator)."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.regression import (
+        grouped_linreg,
+    )
 
-QUERIES["hourly_value_regression"] = q_hourly_value_regression
-ORACLES["hourly_value_regression"] = ORACLE_LINREG
+    e = load_table(spark, sf_dir, "events").select(
+        "event_type", epoch_us("ts").alias("_us"), "value"
+    )
+    x = F.expr("_us div 3600000000") % 24
+    return grouped_linreg(e, ["event_type"], x, F.col("value"), y_scale=100)
 
 
 # ----------------------------- sliding windows / outlier handling
 
+@query(oracle="""
+WITH e AS (
+  SELECT epoch_us(ts) AS t, CAST(round(value * 100) AS BIGINT) AS v FROM events
+), x AS (
+  SELECT t, v,
+         unnest(generate_series(t // 900000000 - 3, t // 900000000)) AS k
+  FROM e
+)
+SELECT k * 900000000 AS window_start_us,
+       CAST(count(*) AS BIGINT) AS n_events,
+       CAST(sum(v) AS BIGINT) / 100.0 AS sum_value
+FROM x GROUP BY k
+""")
 def q_sliding_hour_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 1h windows every 15min over events
     (operators.windows.sliding_agg): pane-sliced two-level aggregation
@@ -3159,24 +2818,18 @@ def q_sliding_hour_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SLIDING = """
-WITH e AS (
-  SELECT epoch_us(ts) AS t, CAST(round(value * 100) AS BIGINT) AS v FROM events
-), x AS (
-  SELECT t, v,
-         unnest(generate_series(t // 900000000 - 3, t // 900000000)) AS k
-  FROM e
+@query(oracle="""
+WITH b AS (
+  SELECT event_type,
+         quantile_cont(value, 0.05) AS lo,
+         quantile_cont(value, 0.95) AS hi
+  FROM events GROUP BY event_type
 )
-SELECT k * 900000000 AS window_start_us,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(v) AS BIGINT) / 100.0 AS sum_value
-FROM x GROUP BY k
-"""
-
-QUERIES["sliding_hour_windows"] = q_sliding_hour_windows
-ORACLES["sliding_hour_windows"] = ORACLE_SLIDING
-
-
+SELECT e.event_id, e.event_type, round(e.value, 6) AS value,
+       round(least(greatest(e.value, b.lo), b.hi), 6) AS value_clipped,
+       (e.value < b.lo OR e.value > b.hi) AS was_clipped
+FROM events e JOIN b USING (event_type)
+""")
 def q_value_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type winsorization (operators.outliers.winsorize): clip
     event values into the exact [p05, p95] band of their type. Bounds
@@ -3199,38 +2852,7 @@ def q_value_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_WINSOR = """
-WITH b AS (
-  SELECT event_type,
-         quantile_cont(value, 0.05) AS lo,
-         quantile_cont(value, 0.95) AS hi
-  FROM events GROUP BY event_type
-)
-SELECT e.event_id, e.event_type, round(e.value, 6) AS value,
-       round(least(greatest(e.value, b.lo), b.hi), 6) AS value_clipped,
-       (e.value < b.lo OR e.value > b.hi) AS was_clipped
-FROM events e JOIN b USING (event_type)
-"""
-
-QUERIES["value_winsorized"] = q_value_winsorized
-ORACLES["value_winsorized"] = ORACLE_WINSOR
-
-
-def q_value_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-row z-scores against per-type moments
-    (operators.outliers.zscore_flags): moments from exact
-    scaled-integer power sums (order-independent), broadcast back,
-    map-only flagging at |z| > 3."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.outliers import (
-        zscore_flags,
-    )
-
-    e = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    out = zscore_flags(e, ["event_type"], "value", threshold=3.0)
-    return out.select("event_id", "event_type", "zscore", "is_outlier")
-
-
-ORACLE_ZSCORE = """
+@query(oracle="""
 WITH s AS (
   SELECT event_type, count(*) AS n,
          sum(CAST(round(value * 10000) AS BIGINT)) AS s1,
@@ -3249,28 +2871,24 @@ SELECT e.event_id, e.event_type,
             THEN abs((e.value - m.mean) / sqrt(m.var)) > 3.0 END,
             FALSE) AS is_outlier
 FROM events e JOIN m USING (event_type)
-"""
+""")
+def q_value_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-row z-scores against per-type moments
+    (operators.outliers.zscore_flags): moments from exact
+    scaled-integer power sums (order-independent), broadcast back,
+    map-only flagging at |z| > 3."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.outliers import (
+        zscore_flags,
+    )
 
-QUERIES["value_outlier_flags"] = q_value_outlier_flags
-ORACLES["value_outlier_flags"] = ORACLE_ZSCORE
+    e = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
+    out = zscore_flags(e, ["event_type"], "value", threshold=3.0)
+    return out.select("event_id", "event_type", "zscore", "is_outlier")
 
 
 # ----------------------------- collocations / transition analytics
 
-def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-50 PMI collocations over the corpus
-    (operators.collocations.pmi_collocations, min_count=5): two
-    wordcount aggregates + vocabulary-sized joins (AQE-broadcast),
-    min-count filter BEFORE the joins, ln-PMI rounded to 6dp before
-    the global top-k."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.collocations import (
-        pmi_collocations,
-    )
-
-    return pmi_collocations(load_table(spark, sf_dir, "documents"), min_count=5, k=50)
-
-
-ORACLE_PMI = """
+@query(oracle="""
 WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents),
 uni AS (SELECT unnest(t) AS w FROM toks),
 u AS (SELECT w, count(*) AS n_w FROM uni GROUP BY w),
@@ -3293,26 +2911,21 @@ SELECT w1, w2, n_pair, n_w1, n_w2, pmi FROM (
          ) AS rank
   FROM b JOIN u u1 ON b.w1 = u1.w JOIN u u2 ON b.w2 = u2.w CROSS JOIN n
 ) WHERE rank <= 50
-"""
-
-QUERIES["pmi_collocations"] = q_pmi_collocations
-ORACLES["pmi_collocations"] = ORACLE_PMI
-
-
-def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over per-user event
-    sequences (operators.collocations.transition_matrix): one key
-    shuffle for the lag window, a |states|²-sized count aggregate,
-    row-normalized via broadcast join (no hot window)."""
+""")
+def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-50 PMI collocations over the corpus
+    (operators.collocations.pmi_collocations, min_count=5): two
+    wordcount aggregates + vocabulary-sized joins (AQE-broadcast),
+    min-count filter BEFORE the joins, ln-PMI rounded to 6dp before
+    the global top-k."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.collocations import (
-        transition_matrix,
+        pmi_collocations,
     )
 
-    e = load_table(spark, sf_dir, "events")
-    return transition_matrix(e, "user_id", "ts", "event_type", "event_id")
+    return pmi_collocations(load_table(spark, sf_dir, "documents"), min_count=5, k=50)
 
 
-ORACLE_TRANSITIONS = """
+@query(oracle="""
 WITH s AS (
   SELECT lag(event_type) OVER (
            PARTITION BY user_id ORDER BY ts, event_id
@@ -3328,26 +2941,21 @@ WITH s AS (
 SELECT c.from_state, c.to_state, c.n_transitions,
        round(c.n_transitions / t.n_from, 6) AS p
 FROM c JOIN t USING (from_state)
-"""
-
-QUERIES["event_transition_matrix"] = q_event_transition_matrix
-ORACLES["event_transition_matrix"] = ORACLE_TRANSITIONS
-
-
-def q_embedding_quantize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric int8 quantization audit (operators.quantize): per
-    vector, the quantization scale, reconstruction cosine, and worst
-    per-dimension error — map-only higher-order expressions, metrics
-    chosen to be accumulation-order-free so the audit is
-    oracle-checkable."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.quantize import (
-        quantize_audit,
+""")
+def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First-order Markov transition matrix over per-user event
+    sequences (operators.collocations.transition_matrix): one key
+    shuffle for the lag window, a |states|²-sized count aggregate,
+    row-normalized via broadcast join (no hot window)."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.collocations import (
+        transition_matrix,
     )
 
-    return quantize_audit(load_table(spark, sf_dir, "embeddings"))
+    e = load_table(spark, sf_dir, "events")
+    return transition_matrix(e, "user_id", "ts", "event_type", "event_id")
 
 
-ORACLE_QUANTIZE = """
+@query(oracle="""
 WITH d AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
 s AS (
   SELECT vec_id, e,
@@ -3363,14 +2971,43 @@ SELECT vec_id, round(scale, 6) AS scale,
        round(list_max(list_transform(range(1, len(e) + 1),
              i -> abs(e[i] - r[i]))), 6) AS max_abs_err
 FROM q
-"""
+""")
+def q_embedding_quantize_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Symmetric int8 quantization audit (operators.quantize): per
+    vector, the quantization scale, reconstruction cosine, and worst
+    per-dimension error — map-only higher-order expressions, metrics
+    chosen to be accumulation-order-free so the audit is
+    oracle-checkable."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.quantize import (
+        quantize_audit,
+    )
 
-QUERIES["embedding_quantize_audit"] = q_embedding_quantize_audit
-ORACLES["embedding_quantize_audit"] = ORACLE_QUANTIZE
+    return quantize_audit(load_table(spark, sf_dir, "embeddings"))
 
 
 # ------------------------- built-in session windows / Q3-style join
 
+@query(oracle="""
+WITH g AS (
+  SELECT user_id, ts, value, event_id,
+         CASE WHEN lag(ts) OVER w IS NULL
+                OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE
+              THEN 1 ELSE 0 END AS new_s
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+), s AS (
+  SELECT user_id, ts, value,
+         SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                          ROWS UNBOUNDED PRECEDING) AS sid
+  FROM g
+)
+SELECT user_id,
+       epoch_us(min(ts)) AS session_start_us,
+       epoch_us(max(ts)) + 1800000000 AS session_end_us,
+       CAST(count(*) AS BIGINT) AS n_events,
+       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_value
+FROM s GROUP BY user_id, sid
+""")
 def q_session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-session aggregates via Spark's BUILT-IN session_window
     (30-min gap) — the declarative dual of operators.sessions (which
@@ -3392,32 +3029,20 @@ def q_session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SESSION_WINDOW = """
-WITH g AS (
-  SELECT user_id, ts, value, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR ts > lag(ts) OVER w + INTERVAL 30 MINUTE
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), s AS (
-  SELECT user_id, ts, value,
-         SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS sid
-  FROM g
-)
-SELECT user_id,
-       epoch_us(min(ts)) AS session_start_us,
-       epoch_us(max(ts)) + 1800000000 AS session_end_us,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_value
-FROM s GROUP BY user_id, sid
-"""
-
-QUERIES["session_window_stats"] = q_session_window_stats
-ORACLES["session_window_stats"] = ORACLE_SESSION_WINDOW
-
-
+@query(oracle="""
+SELECT l_orderkey, epoch_us(o_orderdate) AS o_orderdate_us,
+       CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT))
+            AS BIGINT) / 10000.0 AS revenue
+FROM lineitem
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+WHERE c_mktsegment = 'BUILDING'
+  AND o_orderdate < TIMESTAMP '1995-03-15'
+  AND l_shipdate > TIMESTAMP '1995-03-15'
+GROUP BY l_orderkey, o_orderdate
+ORDER BY revenue DESC, l_orderkey ASC
+LIMIT 10
+""")
 def q_top_unshipped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: customer ⋈ orders ⋈ lineitem with selective
     filters on all three tables, revenue aggregate per order, top 10.
@@ -3451,25 +3076,13 @@ def q_top_unshipped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q3 = """
-SELECT l_orderkey, epoch_us(o_orderdate) AS o_orderdate_us,
+@query(oracle="""
+SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_items,
        CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT))
             AS BIGINT) / 10000.0 AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1995-03-15'
-  AND l_shipdate > TIMESTAMP '1995-03-15'
-GROUP BY l_orderkey, o_orderdate
-ORDER BY revenue DESC, l_orderkey ASC
-LIMIT 10
-"""
-
-QUERIES["top_unshipped_orders"] = q_top_unshipped_orders
-ORACLES["top_unshipped_orders"] = ORACLE_Q3
-
-
+FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+GROUP BY o_orderpriority
+""")
 def q_bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed co-located join as a driver-checked query
     (sources.layout.write_bucketed_table): orders and lineitem are
@@ -3540,18 +3153,19 @@ def q_bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_BUCKETED = """
-SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_items,
-       CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT))
-            AS BIGINT) / 10000.0 AS revenue
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-GROUP BY o_orderpriority
-"""
-
-QUERIES["bucketed_join_revenue"] = q_bucketed_join_revenue
-ORACLES["bucketed_join_revenue"] = ORACLE_BUCKETED
-
-
+@query(oracle="""
+WITH e AS (
+  SELECT epoch_us(ts) AS t, CAST(round(value * 10000) AS BIGINT) AS v FROM events
+), x AS (
+  SELECT t, v,
+         unnest(generate_series(t // 900000000 - 3, t // 900000000)) AS k
+  FROM e
+)
+SELECT k * 900000000 AS window_start_us,
+       CAST(count(*) AS BIGINT) AS n_events,
+       CAST(sum(v) AS BIGINT) / 10000.0 AS sum_value
+FROM x GROUP BY k
+""")
 def q_stream_sliding_quarters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming/batch equivalence for SLIDING windows: a 1h window
     sliding every 15min executed as an actual Structured Streaming job
@@ -3583,45 +3197,7 @@ def q_stream_sliding_quarters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_SLIDING = """
-WITH e AS (
-  SELECT epoch_us(ts) AS t, CAST(round(value * 10000) AS BIGINT) AS v FROM events
-), x AS (
-  SELECT t, v,
-         unnest(generate_series(t // 900000000 - 3, t // 900000000)) AS k
-  FROM e
-)
-SELECT k * 900000000 AS window_start_us,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(v) AS BIGINT) / 10000.0 AS sum_value
-FROM x GROUP BY k
-"""
-
-QUERIES["stream_sliding_quarters"] = q_stream_sliding_quarters
-ORACLES["stream_sliding_quarters"] = ORACLE_STREAM_SLIDING
-
-
-def q_value_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution drift alarm (operators.drift.ks_drift): exact
-    two-sample KS statistic per event type between the first and
-    second half of the month. The corpus reduces to per-(type,
-    quantized value) conditional counts before any window runs, so
-    CDF construction is support-bounded, not row-bounded."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.drift import (
-        ks_drift,
-    )
-
-    e = load_table(spark, sf_dir, "events")
-    return ks_drift(
-        e,
-        ["event_type"],
-        "value",
-        sample_a=F.col("ts") < F.lit("2024-01-16"),
-        scale=100,
-    )
-
-
-ORACLE_KS_DRIFT = """
+@query(oracle="""
 WITH per_v AS (
   SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v,
          CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END) AS BIGINT) AS a,
@@ -3644,34 +3220,28 @@ SELECT event_type,
                  THEN abs(CAST(ca AS DOUBLE) / ta - CAST(cb AS DOUBLE) / tb)
             END), 6) AS ks
 FROM stepped GROUP BY event_type
-"""
-
-QUERIES["value_drift_ks"] = q_value_drift_ks
-ORACLES["value_drift_ks"] = ORACLE_KS_DRIFT
-
-
-def q_value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population Stability Index per event type between month halves
-    (operators.drift.psi_drift, 10 fixed-width bins over [0,1000)).
-    Count shuffle bounded by |types| × 10 bins; zero-mass bins are
-    skipped per the standard definition."""
+""")
+def q_value_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distribution drift alarm (operators.drift.ks_drift): exact
+    two-sample KS statistic per event type between the first and
+    second half of the month. The corpus reduces to per-(type,
+    quantized value) conditional counts before any window runs, so
+    CDF construction is support-bounded, not row-bounded."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.drift import (
-        psi_drift,
+        ks_drift,
     )
 
     e = load_table(spark, sf_dir, "events")
-    return psi_drift(
+    return ks_drift(
         e,
         ["event_type"],
         "value",
         sample_a=F.col("ts") < F.lit("2024-01-16"),
-        n_bins=10,
-        lo=0.0,
-        hi=1000.0,
+        scale=100,
     )
 
 
-ORACLE_PSI_DRIFT = """
+@query(oracle="""
 WITH per_bin AS (
   SELECT event_type,
          least(9, greatest(0, CAST(floor((value - 0.0) / 100.0) AS BIGINT))) AS b,
@@ -3696,14 +3266,36 @@ SELECT event_type,
        round(CAST(sum(CAST(round(term * 1000000000.0) AS BIGINT)) AS BIGINT)
              / 1000000000.0, 6) AS psi
 FROM stepped GROUP BY event_type
-"""
+""")
+def q_value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Population Stability Index per event type between month halves
+    (operators.drift.psi_drift, 10 fixed-width bins over [0,1000)).
+    Count shuffle bounded by |types| × 10 bins; zero-mass bins are
+    skipped per the standard definition."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.drift import (
+        psi_drift,
+    )
 
-QUERIES["value_drift_psi"] = q_value_drift_psi
-ORACLES["value_drift_psi"] = ORACLE_PSI_DRIFT
+    e = load_table(spark, sf_dir, "events")
+    return psi_drift(
+        e,
+        ["event_type"],
+        "value",
+        sample_a=F.col("ts") < F.lit("2024-01-16"),
+        n_bins=10,
+        lo=0.0,
+        hi=1000.0,
+    )
 
 
 # --------------------------- lake ingest discipline: CSV DLQ, evolution
 
+@query(oracle="""
+SELECT CAST(count(*) AS BIGINT) AS n_parsed,
+       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_price,
+       CAST(7 AS BIGINT) AS n_quarantined
+FROM orders WHERE o_orderkey % 3 = 0
+""")
 def q_csv_ingest_with_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Malformed-record quarantine on a text-format ingest (K8
     generalized to CSV): a mixed landing directory (valid CSV rows +
@@ -3764,17 +3356,13 @@ def q_csv_ingest_with_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CSV_DLQ = """
-SELECT CAST(count(*) AS BIGINT) AS n_parsed,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_price,
-       CAST(7 AS BIGINT) AS n_quarantined
-FROM orders WHERE o_orderkey % 3 = 0
-"""
-
-QUERIES["csv_ingest_with_dlq"] = q_csv_ingest_with_dlq
-ORACLES["csv_ingest_with_dlq"] = ORACLE_CSV_DLQ
-
-
+@query(oracle="""
+SELECT COALESCE(CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END,
+                '<pre-evolution>') AS priority,
+       CAST(count(*) AS BIGINT) AS n_orders,
+       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_price
+FROM orders GROUP BY 1
+""")
 def q_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parquet schema evolution (mergeSchema): two snapshot
     generations of the orders lake — an early 2-column layout and a
@@ -3808,20 +3396,13 @@ def q_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SCHEMA_EVO = """
-SELECT COALESCE(CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END,
-                '<pre-evolution>') AS priority,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_price
-FROM orders GROUP BY 1
-"""
-
-QUERIES["schema_evolution_merge"] = q_schema_evolution_merge
-ORACLES["schema_evolution_merge"] = ORACLE_SCHEMA_EVO
-
-
 # --------------------------------------- round 3: distributed rank / ntile
 
+@query(oracle="""
+SELECT event_id,
+       CAST(row_number() OVER (ORDER BY value ASC, event_id ASC) AS BIGINT) AS rank
+FROM events
+""")
 def q_global_value_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact global rank over the full events table via the two-phase
     distributed form (operators.windows.global_rank: repartitionByRange
@@ -3837,13 +3418,11 @@ def q_global_value_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return global_rank(e, ["value", "event_id"]).select("event_id", "rank")
 
 
-ORACLE_GLOBAL_RANK = """
+@query(oracle="""
 SELECT event_id,
-       CAST(row_number() OVER (ORDER BY value ASC, event_id ASC) AS BIGINT) AS rank
+       CAST(ntile(16) OVER (ORDER BY value ASC, event_id ASC) AS BIGINT) AS bucket
 FROM events
-"""
-
-
+""")
 def q_global_value_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact equal-frequency binning (SQL NTILE semantics) built on the
     distributed global rank — the 100 TB-safe form of
@@ -3858,31 +3437,7 @@ def q_global_value_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_GLOBAL_NTILE = """
-SELECT event_id,
-       CAST(ntile(16) OVER (ORDER BY value ASC, event_id ASC) AS BIGINT) AS bucket
-FROM events
-"""
-
-QUERIES["global_value_rank"] = q_global_value_rank
-ORACLES["global_value_rank"] = ORACLE_GLOBAL_RANK
-QUERIES["global_value_ntile"] = q_global_value_ntile
-ORACLES["global_value_ntile"] = ORACLE_GLOBAL_NTILE
-
-
 # ------------------------------------------- round 3: BPE token accounting
-
-def q_bpe_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document training-token budget under the BPE-ish
-    pre-tokenizer (operators.text.bpe_token_stats): pre-token count,
-    whitespace-token count, fertility, chars/token. Map-only — the
-    regex runs inside whole-stage codegen, no UDF, no shuffle."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
-        bpe_token_stats,
-    )
-
-    return bpe_token_stats(load_table(spark, sf_dir, "documents"))
-
 
 def _oracle_bpe_budget() -> str:
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
@@ -3906,12 +3461,36 @@ FROM t
     return sql.replace("__PAT__", BPE_PRETOKEN_PATTERN.replace("'", "''"))
 
 
-QUERIES["bpe_token_budget"] = q_bpe_token_budget
-ORACLES["bpe_token_budget"] = _oracle_bpe_budget()
+@query(oracle=_oracle_bpe_budget())
+def q_bpe_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document training-token budget under the BPE-ish
+    pre-tokenizer (operators.text.bpe_token_stats): pre-token count,
+    whitespace-token count, fertility, chars/token. Map-only — the
+    regex runs inside whole-stage codegen, no UDF, no shuffle."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
+        bpe_token_stats,
+    )
+
+    return bpe_token_stats(load_table(spark, sf_dir, "documents"))
 
 
 # --------------------------------------- round 3: content checksum parity
 
+@query(oracle="""
+WITH h AS (
+  SELECT o_orderpriority,
+         CAST(concat('0x', substring(md5(concat_ws('|',
+              CAST(o_orderkey AS VARCHAR), CAST(o_custkey AS VARCHAR),
+              o_orderstatus, o_orderpriority)), 1, 8)) AS BIGINT) AS hv
+  FROM orders
+)
+SELECT o_orderpriority,
+       CAST(count(*) AS BIGINT) AS n_rows,
+       CAST(sum(hv) AS BIGINT) AS checksum,
+       MIN(hv) AS min_digest,
+       MAX(hv) AS max_digest
+FROM h GROUP BY o_orderpriority
+""")
 def q_content_checksum_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti-entropy CONTENT audit (operators.integrity.content_checksum),
     generalizing the reference's count-only load verification
@@ -3930,28 +3509,21 @@ def q_content_checksum_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CONTENT_CHECKSUM = """
-WITH h AS (
-  SELECT o_orderpriority,
-         CAST(concat('0x', substring(md5(concat_ws('|',
-              CAST(o_orderkey AS VARCHAR), CAST(o_custkey AS VARCHAR),
-              o_orderstatus, o_orderpriority)), 1, 8)) AS BIGINT) AS hv
-  FROM orders
-)
-SELECT o_orderpriority,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(hv) AS BIGINT) AS checksum,
-       MIN(hv) AS min_digest,
-       MAX(hv) AS max_digest
-FROM h GROUP BY o_orderpriority
-"""
-
-QUERIES["content_checksum_parity"] = q_content_checksum_parity
-ORACLES["content_checksum_parity"] = ORACLE_CONTENT_CHECKSUM
-
-
 # ------------------------------------------- round 3: per-label centroids
 
+@query(oracle="""
+WITH e AS (
+  SELECT CAST(label AS BIGINT) AS label,
+         CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS dim,
+         unnest(embedding) AS val
+  FROM embeddings
+)
+SELECT label, dim,
+       CAST(count(*) AS BIGINT) AS n_vectors,
+       round(CAST(sum(CAST(round(CAST(val AS DOUBLE) * 1000000) AS BIGINT)) AS DOUBLE)
+             / count(*) / 1000000, 6) AS centroid
+FROM e GROUP BY label, dim
+""")
 def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroids (operators.similarity.
     label_centroids): posexplode to (label, dim, val) + ONE bounded hash
@@ -3973,42 +3545,9 @@ def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_LABEL_CENTROIDS = """
-WITH e AS (
-  SELECT CAST(label AS BIGINT) AS label,
-         CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS dim,
-         unnest(embedding) AS val
-  FROM embeddings
-)
-SELECT label, dim,
-       CAST(count(*) AS BIGINT) AS n_vectors,
-       round(CAST(sum(CAST(round(CAST(val AS DOUBLE) * 1000000) AS BIGINT)) AS DOUBLE)
-             / count(*) / 1000000, 6) AS centroid
-FROM e GROUP BY label, dim
-"""
-
-QUERIES["label_centroids"] = q_label_centroids
-ORACLES["label_centroids"] = ORACLE_LABEL_CENTROIDS
-
-
 # ------------------------------------- round 3: boilerplate shingle scores
 
-def q_boilerplate_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-common shingle scoring (operators.boilerplate): fraction
-    of each document's distinct 8-gram shingles that occur in ≥2
-    documents — the CCNet/Gopher template-detection primitive. Two
-    bounded shuffles (per-doc-distinct explode, shingle DF aggregate);
-    the common-shingle join is AQE-broadcastable by construction."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.boilerplate import (
-        boilerplate_scores,
-    )
-
-    return boilerplate_scores(
-        load_table(spark, sf_dir, "documents"), n=8, min_docs=2
-    )
-
-
-ORACLE_BOILERPLATE = """
+@query(oracle="""
 WITH tok AS (
   SELECT doc_id, string_split(text, ' ') AS t FROM documents
 ), sh AS (
@@ -4029,14 +3568,29 @@ SELECT d.doc_id,
             THEN round(n_common / CAST(n_shingles AS DOUBLE), 6)
             ELSE 0.0 END AS boilerplate_ratio
 FROM (SELECT DISTINCT doc_id FROM documents) d LEFT JOIN scored USING (doc_id)
-"""
+""")
+def q_boilerplate_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus-common shingle scoring (operators.boilerplate): fraction
+    of each document's distinct 8-gram shingles that occur in ≥2
+    documents — the CCNet/Gopher template-detection primitive. Two
+    bounded shuffles (per-doc-distinct explode, shingle DF aggregate);
+    the common-shingle join is AQE-broadcastable by construction."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.boilerplate import (
+        boilerplate_scores,
+    )
 
-QUERIES["boilerplate_flags"] = q_boilerplate_flags
-ORACLES["boilerplate_flags"] = ORACLE_BOILERPLATE
+    return boilerplate_scores(
+        load_table(spark, sf_dir, "documents"), n=8, min_docs=2
+    )
 
 
 # --------------------------------------- round 3: stream-side deduplication
 
+@query(oracle="""
+SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
+       CAST(sum(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_value
+FROM events GROUP BY event_type
+""")
 def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark-bounded streaming dedup executed as a REAL streaming
     job (streaming.dedup.stream_dedup_once): the events table is
@@ -4063,18 +3617,17 @@ def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_DEDUP = """
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_value
-FROM events GROUP BY event_type
-"""
-
-QUERIES["stream_dedup_counts"] = q_stream_dedup_counts
-ORACLES["stream_dedup_counts"] = ORACLE_STREAM_DEDUP
-
-
 # ----------------------------------------------- round 3: ORC sink/source
 
+@query(oracle="""
+SELECT o_orderpriority,
+       CAST(count(*) AS BIGINT) AS n_orders,
+       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_price,
+       MIN(o_orderkey) AS min_key,
+       MAX(o_orderkey) AS max_key,
+       epoch_us(MIN(o_orderdate)) AS min_date_us
+FROM orders GROUP BY o_orderpriority
+""")
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Columnar-format portability: project orders, write ORC (Spark's
     second built-in columnar format — zlib, vectorized reader), read it
@@ -4101,22 +3654,24 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ORC_ROUNDTRIP = """
-SELECT o_orderpriority,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_price,
-       MIN(o_orderkey) AS min_key,
-       MAX(o_orderkey) AS max_key,
-       epoch_us(MIN(o_orderdate)) AS min_date_us
-FROM orders GROUP BY o_orderpriority
-"""
-
-QUERIES["orc_roundtrip"] = q_orc_roundtrip
-ORACLES["orc_roundtrip"] = ORACLE_ORC_ROUNDTRIP
-
-
 # --------------------------------------- round 3: nation-pair trade volume
 
+@query(oracle="""
+SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
+       CAST(year(l_shipdate) AS BIGINT) AS l_year,
+       CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS revenue,
+       CAST(count(*) AS BIGINT) AS n_items
+FROM lineitem
+JOIN supplier ON l_suppkey = s_suppkey
+JOIN nation ns ON s_nationkey = ns.n_nationkey
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation nc ON c_nationkey = nc.n_nationkey
+WHERE ns.n_name <> nc.n_name
+  AND l_shipdate >= TIMESTAMP '1995-01-01'
+  AND l_shipdate <= TIMESTAMP '1996-12-31'
+GROUP BY 1, 2, 3
+""")
 def q_nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: revenue shipped between distinct nation pairs by
     year — a 6-table star with TWO independent dimension legs (supplier
@@ -4153,29 +3708,22 @@ def q_nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_NATION_PAIR = """
-SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
-       CAST(year(l_shipdate) AS BIGINT) AS l_year,
-       CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS revenue,
-       CAST(count(*) AS BIGINT) AS n_items
-FROM lineitem
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ns ON s_nationkey = ns.n_nationkey
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation nc ON c_nationkey = nc.n_nationkey
-WHERE ns.n_name <> nc.n_name
-  AND l_shipdate >= TIMESTAMP '1995-01-01'
-  AND l_shipdate <= TIMESTAMP '1996-12-31'
-GROUP BY 1, 2, 3
-"""
-
-QUERIES["nation_pair_volume"] = q_nation_pair_volume
-ORACLES["nation_pair_volume"] = ORACLE_NATION_PAIR
-
-
 # ------------------------------------------- round 3: semantic dedup keep
 
+@query(oracle="""
+WITH RECURSIVE pairs AS (
+  SELECT a.vec_id AS d1, b.vec_id AS d2
+  FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
+  WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >= 0.3
+), edges AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs),
+reach(node, lbl) AS (
+  SELECT vec_id, vec_id FROM embeddings
+  UNION
+  SELECT e.a, r.lbl FROM reach r JOIN edges e ON e.b = r.node
+)
+SELECT node AS vec_id, MIN(lbl) AS cluster_id, node = MIN(lbl) AS is_representative
+FROM reach GROUP BY node
+""")
 def q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic (embedding-space) deduplication end-to-end: blocked
     cosine near-dup pairs (≥0.3 within the coarse cluster) resolved
@@ -4210,27 +3758,17 @@ def q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SEMANTIC_DEDUP = """
-WITH RECURSIVE pairs AS (
-  SELECT a.vec_id AS d1, b.vec_id AS d2
-  FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-  WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >= 0.3
-), edges AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2, d1 FROM pairs),
-reach(node, lbl) AS (
-  SELECT vec_id, vec_id FROM embeddings
-  UNION
-  SELECT e.a, r.lbl FROM reach r JOIN edges e ON e.b = r.node
-)
-SELECT node AS vec_id, MIN(lbl) AS cluster_id, node = MIN(lbl) AS is_representative
-FROM reach GROUP BY node
-"""
-
-QUERIES["semantic_dedup_keep"] = q_semantic_dedup_keep
-ORACLES["semantic_dedup_keep"] = ORACLE_SEMANTIC_DEDUP
-
-
 # ---------------------------------------------- round 3: CUBE / grouping id
 
+@query(oracle="""
+SELECT COALESCE(o_orderpriority, '<all>') AS priority,
+       COALESCE(l_returnflag, '<all>') AS returnflag,
+       CAST(GROUPING(o_orderpriority, l_returnflag) AS BIGINT) AS gid,
+       CAST(count(*) AS BIGINT) AS n_items,
+       CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS revenue
+FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+GROUP BY CUBE(o_orderpriority, l_returnflag)
+""")
 def q_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE aggregation (all 4 grouping sets of priority × returnflag)
     with ``grouping_id`` disambiguation — completes the multi-level
@@ -4261,22 +3799,17 @@ def q_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CUBE = """
-SELECT COALESCE(o_orderpriority, '<all>') AS priority,
-       COALESCE(l_returnflag, '<all>') AS returnflag,
-       CAST(GROUPING(o_orderpriority, l_returnflag) AS BIGINT) AS gid,
-       CAST(count(*) AS BIGINT) AS n_items,
-       CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS revenue
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-GROUP BY CUBE(o_orderpriority, l_returnflag)
-"""
-
-QUERIES["cube_revenue"] = q_cube_revenue
-ORACLES["cube_revenue"] = ORACLE_CUBE
-
-
 # -------------------------------------- round 3: quantile sketch vs exact
 
+@query(oracle="""
+SELECT event_type,
+       CAST(count(*) AS BIGINT) AS n_events,
+       round(quantile_cont(value, 0.5), 6) AS exact_p50,
+       round(quantile_cont(value, 0.9), 6) AS exact_p90,
+       TRUE AS p50_in_tolerance,
+       TRUE AS p90_in_tolerance
+FROM events GROUP BY event_type
+""")
 def q_approx_quantile_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-accuracy audit, the quantile sibling of
     `approx_distinct_check`: per event type, the EXACT p50/p90 (the
@@ -4326,22 +3859,18 @@ def q_approx_quantile_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_APPROX_QUANTILE = """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       round(quantile_cont(value, 0.5), 6) AS exact_p50,
-       round(quantile_cont(value, 0.9), 6) AS exact_p90,
-       TRUE AS p50_in_tolerance,
-       TRUE AS p90_in_tolerance
-FROM events GROUP BY event_type
-"""
-
-QUERIES["approx_quantile_check"] = q_approx_quantile_check
-ORACLES["approx_quantile_check"] = ORACLE_APPROX_QUANTILE
-
-
 # ------------------------------------- round 3: higher-order array surface
 
+@query(oracle="""
+WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
+SELECT vec_id,
+       round(sqrt(list_aggregate(list_transform(e, x -> x * x), 'sum')), 6) AS l2_norm,
+       CAST(len(list_filter(e, x -> x > 0)) AS BIGINT) AS n_positive,
+       len(list_filter(e, x -> abs(x) > 0.5)) > 0 AS any_large,
+       len(list_filter(e, x -> abs(x) >= 1.0)) = 0 AS all_unit,
+       round(list_dot_product(e, list_reverse(e)), 6) AS dot_reversed
+FROM v
+""")
 def q_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order-function surface over the vector column — the
     lambda-expression toolkit (transform / filter / exists / forall /
@@ -4366,23 +3895,15 @@ def q_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ARRAY_FUNCS = """
+# ------------------------------------ round 3: mapInArrow / Python UDTF
+
+@query(oracle="""
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
 SELECT vec_id,
        round(sqrt(list_aggregate(list_transform(e, x -> x * x), 'sum')), 6) AS l2_norm,
-       CAST(len(list_filter(e, x -> x > 0)) AS BIGINT) AS n_positive,
-       len(list_filter(e, x -> abs(x) > 0.5)) > 0 AS any_large,
-       len(list_filter(e, x -> abs(x) >= 1.0)) = 0 AS all_unit,
-       round(list_dot_product(e, list_reverse(e)), 6) AS dot_reversed
+       round(list_aggregate(e, 'sum'), 6) AS component_sum
 FROM v
-"""
-
-QUERIES["array_functions"] = q_array_functions
-ORACLES["array_functions"] = ORACLE_ARRAY_FUNCS
-
-
-# ------------------------------------ round 3: mapInArrow / Python UDTF
-
+""")
 def q_arrow_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mapInArrow vector math (operators.udx.vector_norms_arrow):
     numpy reductions directly over the Arrow list buffers — the
@@ -4397,18 +3918,16 @@ def q_arrow_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vector_norms_arrow(emb)
 
 
-ORACLE_ARROW_NORMS = """
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
-SELECT vec_id,
-       round(sqrt(list_aggregate(list_transform(e, x -> x * x), 'sum')), 6) AS l2_norm,
-       round(list_aggregate(e, 'sum'), 6) AS component_sum
-FROM v
-"""
-
-QUERIES["arrow_vector_norms"] = q_arrow_vector_norms
-ORACLES["arrow_vector_norms"] = ORACLE_ARROW_NORMS
-
-
+@query(oracle="""
+WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+g AS (
+  SELECT array_to_string(t[i:i+2], ' ') AS ngram
+  FROM tok, UNNEST(range(1, greatest(len(t)-2, 0)+1)) AS u(i)
+)
+SELECT ngram, CAST(count(*) AS BIGINT) AS n_occurrences
+FROM g GROUP BY ngram
+ORDER BY n_occurrences DESC, ngram ASC LIMIT 20
+""")
 def q_udtf_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF surface (operators.udx.ngram_udtf_class): per-doc
     trigram expansion via SQL LATERAL join, then the standard two-phase
@@ -4424,23 +3943,15 @@ def q_udtf_ngram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy(F.col("n_occurrences").desc(), F.col("ngram").asc()).limit(20)
 
 
-ORACLE_UDTF_NGRAMS = """
-WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-g AS (
-  SELECT array_to_string(t[i:i+2], ' ') AS ngram
-  FROM tok, UNNEST(range(1, greatest(len(t)-2, 0)+1)) AS u(i)
-)
-SELECT ngram, CAST(count(*) AS BIGINT) AS n_occurrences
-FROM g GROUP BY ngram
-ORDER BY n_occurrences DESC, ngram ASC LIMIT 20
-"""
-
-QUERIES["udtf_ngram_counts"] = q_udtf_ngram_counts
-ORACLES["udtf_ngram_counts"] = ORACLE_UDTF_NGRAMS
-
-
 # ----------------------------------------- round 3: keep-best exact dedup
 
+@query(oracle="""
+SELECT doc_id, md5(text) AS fingerprint,
+       CAST(count(*) OVER (PARTITION BY md5(text)) AS BIGINT) AS n_copies,
+       row_number() OVER (PARTITION BY md5(text)
+                          ORDER BY length(text) DESC, doc_id ASC) = 1 AS is_kept
+FROM documents
+""")
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curation-grade exact dedup: within each identical-content group
     (md5 fingerprint) keep the BEST copy — longest text, then lowest
@@ -4462,20 +3973,23 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DEDUP_KEEP_BEST = """
-SELECT doc_id, md5(text) AS fingerprint,
-       CAST(count(*) OVER (PARTITION BY md5(text)) AS BIGINT) AS n_copies,
-       row_number() OVER (PARTITION BY md5(text)
-                          ORDER BY length(text) DESC, doc_id ASC) = 1 AS is_kept
-FROM documents
-"""
-
-QUERIES["dedup_keep_best"] = q_dedup_keep_best
-ORACLES["dedup_keep_best"] = ORACLE_DEDUP_KEEP_BEST
-
-
 # -------------------------------------------- round 3: Z-order clustering
 
+def _oracle_zorder() -> str:
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources.layout import (
+        zorder_oracle_sql,
+    )
+
+    zx = "((user_id % 1024) + 1024) % 1024"
+    zy = "((CAST(round(value * 10) AS BIGINT) % 1024) + 1024) % 1024"
+    return (
+        "SELECT event_id, "
+        + zorder_oracle_sql(zx, zy, bits=10)
+        + " AS zkey FROM events"
+    )
+
+
+@query(oracle=_oracle_zorder())
 def q_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton/Z-order clustering key (sources.layout.zorder_key) over
     two quantized event dimensions — the multi-dimensional sort key a
@@ -4496,26 +4010,15 @@ def q_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_zorder() -> str:
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources.layout import (
-        zorder_oracle_sql,
-    )
-
-    zx = "((user_id % 1024) + 1024) % 1024"
-    zy = "((CAST(round(value * 10) AS BIGINT) % 1024) + 1024) % 1024"
-    return (
-        "SELECT event_id, "
-        + zorder_oracle_sql(zx, zy, bits=10)
-        + " AS zkey FROM events"
-    )
-
-
-QUERIES["zorder_keys"] = q_zorder_keys
-ORACLES["zorder_keys"] = _oracle_zorder()
-
-
 # ------------------------------------- round 3: TPC-H classics Q6/Q10/Q14
 
+@query(oracle="""
+SELECT CAST(sum(CAST(round(l_extendedprice * l_discount * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS revenue_delta,
+       CAST(count(*) AS BIGINT) AS n_items
+FROM lineitem
+WHERE l_shipdate >= TIMESTAMP '1994-01-01' AND l_shipdate < TIMESTAMP '1995-01-01'
+  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
+""")
 def q_forecast_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure scan-filter-aggregate 'what-if' — revenue
     delta from discount changes in a date/quantity/discount band. ALL
@@ -4540,15 +4043,18 @@ def q_forecast_revenue_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q6 = """
-SELECT CAST(sum(CAST(round(l_extendedprice * l_discount * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS revenue_delta,
-       CAST(count(*) AS BIGINT) AS n_items
+@query(oracle="""
+SELECT c_custkey, c_name, n_name,
+       CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS lost_revenue,
+       CAST(count(*) AS BIGINT) AS n_returned_items
 FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1994-01-01' AND l_shipdate < TIMESTAMP '1995-01-01'
-  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
-"""
-
-
+JOIN orders ON l_orderkey = o_orderkey
+JOIN customer ON o_custkey = c_custkey
+JOIN nation ON c_nationkey = n_nationkey
+WHERE l_returnflag = 'R'
+GROUP BY 1, 2, 3
+ORDER BY lost_revenue DESC, c_custkey ASC LIMIT 20
+""")
 def q_returned_revenue_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: top-20 customers by revenue lost to returns —
     returnflag filter pushed to the fact scan, nation broadcast, one
@@ -4576,20 +4082,19 @@ def q_returned_revenue_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q10 = """
-SELECT c_custkey, c_name, n_name,
-       CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS lost_revenue,
-       CAST(count(*) AS BIGINT) AS n_returned_items
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-GROUP BY 1, 2, 3
-ORDER BY lost_revenue DESC, c_custkey ASC LIMIT 20
-"""
-
-
+@query(oracle="""
+WITH s AS (
+  SELECT CAST(sum(CASE WHEN p_type LIKE 'PROMO%'
+                  THEN CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)
+                  ELSE 0 END) AS BIGINT) / 10000.0 AS promo_revenue,
+         CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS total_revenue
+  FROM lineitem JOIN part ON l_partkey = p_partkey
+  WHERE l_shipdate >= TIMESTAMP '1995-09-01' AND l_shipdate < TIMESTAMP '1995-10-01'
+)
+SELECT promo_revenue, total_revenue,
+       round(promo_revenue / total_revenue, 6) AS promo_share
+FROM s
+""")
 def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: promotional revenue share — two-branch
     conditional aggregate over the part⋈lineitem join. The part join
@@ -4615,38 +4120,19 @@ def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q14 = """
-WITH s AS (
-  SELECT CAST(sum(CASE WHEN p_type LIKE 'PROMO%'
-                  THEN CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)
-                  ELSE 0 END) AS BIGINT) / 10000.0 AS promo_revenue,
-         CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS total_revenue
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE l_shipdate >= TIMESTAMP '1995-09-01' AND l_shipdate < TIMESTAMP '1995-10-01'
-)
-SELECT promo_revenue, total_revenue,
-       round(promo_revenue / total_revenue, 6) AS promo_share
-FROM s
-"""
-
-QUERIES.update(
-    {
-        "forecast_revenue_delta": q_forecast_revenue_delta,
-        "returned_revenue_customers": q_returned_revenue_customers,
-        "promo_revenue_share": q_promo_revenue_share,
-    }
-)
-ORACLES.update(
-    {
-        "forecast_revenue_delta": ORACLE_Q6,
-        "returned_revenue_customers": ORACLE_Q10,
-        "promo_revenue_share": ORACLE_Q14,
-    }
-)
-
-
 # ------------------------------------- round 3: stream-stream join e2e
 
+@query(oracle="""
+SELECT c.user_id,
+       CAST(count(*) AS BIGINT) AS n_attributed,
+       CAST(sum(epoch_us(p.ts) - epoch_us(c.ts)) AS BIGINT) AS sum_gap_us,
+       CAST(sum(CAST(round(p.value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS attributed_value
+FROM events c JOIN events p
+  ON c.user_id = p.user_id
+ AND c.event_type = 'click' AND p.event_type = 'purchase'
+ AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
+GROUP BY c.user_id
+""")
 def q_stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join executed as a REAL streaming job
     (streaming.joins.attribution_join_once): click→purchase attribution
@@ -4671,24 +4157,17 @@ def q_stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("k", "user_id")
 
 
-ORACLE_STREAM_ATTRIBUTION = """
-SELECT c.user_id,
-       CAST(count(*) AS BIGINT) AS n_attributed,
-       CAST(sum(epoch_us(p.ts) - epoch_us(c.ts)) AS BIGINT) AS sum_gap_us,
-       CAST(sum(CAST(round(p.value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS attributed_value
-FROM events c JOIN events p
-  ON c.user_id = p.user_id
- AND c.event_type = 'click' AND p.event_type = 'purchase'
- AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
-GROUP BY c.user_id
-"""
-
-QUERIES["stream_attribution_join"] = q_stream_attribution_join
-ORACLES["stream_attribution_join"] = ORACLE_STREAM_ATTRIBUTION
-
-
 # -------------------------------------- round 3: custom Python DataSource
 
+def _oracle_python_datasource() -> str:
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources.pyds import (
+        weather_api_oracle_sql,
+    )
+
+    return weather_api_oracle_sql(places=30, hours=24)
+
+
+@query(oracle=_oracle_python_datasource())
 def q_python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom Python DataSource scan (sources.pyds): the reference's
     driver-side REST fetch loop re-expressed as a partitioned source —
@@ -4711,20 +4190,29 @@ def q_python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_python_datasource() -> str:
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources.pyds import (
-        weather_api_oracle_sql,
-    )
-
-    return weather_api_oracle_sql(places=30, hours=24)
-
-
-QUERIES["python_datasource_scan"] = q_python_datasource_scan
-ORACLES["python_datasource_scan"] = _oracle_python_datasource()
-
-
 # ------------------------------------------- round 3: hourly gap-filling
 
+@query(oracle="""
+WITH hourly AS (
+  SELECT ((user_id % 8) + 8) % 8 AS bucket,
+         epoch_us(ts) // 3600000000 * 3600000000 AS hour_us,
+         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS hour_value
+  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
+), bounds AS (
+  SELECT bucket, min(hour_us) AS lo, max(hour_us) AS hi FROM hourly GROUP BY 1
+), spine AS (
+  SELECT bucket, unnest(generate_series(lo, hi, 3600000000)) AS hour_us FROM bounds
+), j AS (
+  SELECT s.bucket, s.hour_us, h.hour_value
+  FROM spine s LEFT JOIN hourly h USING (bucket, hour_us)
+)
+SELECT bucket, hour_us,
+       last_value(hour_value IGNORE NULLS) OVER (
+         PARTITION BY bucket ORDER BY hour_us
+         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hour_value,
+       hour_value IS NULL AS was_gap
+FROM j
+""")
 def q_gapfill_hourly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style gap-fill (operators.timeseries.fill_gaps):
     hourly purchase-value series per user bucket, densified to every
@@ -4752,54 +4240,7 @@ def q_gapfill_hourly_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fill_gaps(hourly, "bucket", "hour_us", "hour_value", step=3_600_000_000)
 
 
-ORACLE_GAPFILL = """
-WITH hourly AS (
-  SELECT ((user_id % 8) + 8) % 8 AS bucket,
-         epoch_us(ts) // 3600000000 * 3600000000 AS hour_us,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS hour_value
-  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-), bounds AS (
-  SELECT bucket, min(hour_us) AS lo, max(hour_us) AS hi FROM hourly GROUP BY 1
-), spine AS (
-  SELECT bucket, unnest(generate_series(lo, hi, 3600000000)) AS hour_us FROM bounds
-), j AS (
-  SELECT s.bucket, s.hour_us, h.hour_value
-  FROM spine s LEFT JOIN hourly h USING (bucket, hour_us)
-)
-SELECT bucket, hour_us,
-       last_value(hour_value IGNORE NULLS) OVER (
-         PARTITION BY bucket ORDER BY hour_us
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hour_value,
-       hour_value IS NULL AS was_gap
-FROM j
-"""
-
-QUERIES["gapfill_hourly_series"] = q_gapfill_hourly_series
-ORACLES["gapfill_hourly_series"] = ORACLE_GAPFILL
-
-
 # ------------------------------------------- round 3: sign-LSH bucketed ANN
-
-def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed approximate top-5 cosine neighbors for 8 query
-    vectors (operators.similarity.lsh_topk): sign-LSH bucket codes from
-    4 deterministic integer hyperplanes, multi-probe over the own +
-    every Hamming-1 bucket, exact cosine re-rank of the candidates.
-    The no-trained-quantizer ANN scale path — corpus coded map-only,
-    candidates via equi-join on the code (never a cross join)."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
-        lsh_topk,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    out = lsh_topk(emb, q, k=5, n_planes=4, dim=64)
-    return out.select(
-        "q_id", "vec_id", "similarity", F.col("rank").cast("long").alias("rank")
-    )
-
 
 def _oracle_ann_lsh() -> str:
     """DuckDB twin: identical integer hyperplanes (inlined literals from
@@ -4853,12 +4294,59 @@ SELECT q_id, vec_id, similarity, rank FROM (
 """
 
 
-QUERIES["ann_lsh_topk"] = q_ann_lsh_topk
-ORACLES["ann_lsh_topk"] = _oracle_ann_lsh()
+@query(oracle=_oracle_ann_lsh())
+def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH-bucketed approximate top-5 cosine neighbors for 8 query
+    vectors (operators.similarity.lsh_topk): sign-LSH bucket codes from
+    4 deterministic integer hyperplanes, multi-probe over the own +
+    every Hamming-1 bucket, exact cosine re-rank of the candidates.
+    The no-trained-quantizer ANN scale path — corpus coded map-only,
+    candidates via equi-join on the code (never a cross join)."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
+        lsh_topk,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    )
+    out = lsh_topk(emb, q, k=5, n_planes=4, dim=64)
+    return out.select(
+        "q_id", "vec_id", "similarity", F.col("rank").cast("long").alias("rank")
+    )
 
 
 # ------------------------------------ round 3: streaming session windows
 
+@query(oracle="""
+WITH mx AS (SELECT max(ts) AS m FROM events),
+lagd AS (
+  SELECT user_id, ts, value,
+         LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) AS pts
+  FROM events
+),
+marked AS (
+  SELECT user_id, ts, value,
+         CASE WHEN pts IS NULL OR ts >= pts + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s
+  FROM lagd
+),
+sess AS (
+  SELECT user_id, ts, value,
+         SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
+  FROM marked
+),
+agg AS (
+  SELECT user_id, sid,
+         epoch_us(min(ts)) AS session_start_us,
+         epoch_us(max(ts) + INTERVAL 30 MINUTE) AS session_end_us,
+         COUNT(*) AS n_events,
+         CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_value
+  FROM sess GROUP BY 1, 2
+)
+SELECT user_id, session_start_us, session_end_us, n_events, sum_value
+FROM agg, mx
+WHERE session_end_us <= (epoch_us(m) // 1000) * 1000 - 300000000
+""")
 def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming gap-sessionization (streaming.windowed.
     session_windows_once): per-user session windows (30-min gap) under
@@ -4894,59 +4382,9 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_SESSIONS = """
-WITH mx AS (SELECT max(ts) AS m FROM events),
-lagd AS (
-  SELECT user_id, ts, value,
-         LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) AS pts
-  FROM events
-),
-marked AS (
-  SELECT user_id, ts, value,
-         CASE WHEN pts IS NULL OR ts >= pts + INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s
-  FROM lagd
-),
-sess AS (
-  SELECT user_id, ts, value,
-         SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
-  FROM marked
-),
-agg AS (
-  SELECT user_id, sid,
-         epoch_us(min(ts)) AS session_start_us,
-         epoch_us(max(ts) + INTERVAL 30 MINUTE) AS session_end_us,
-         COUNT(*) AS n_events,
-         CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_value
-  FROM sess GROUP BY 1, 2
-)
-SELECT user_id, session_start_us, session_end_us, n_events, sum_value
-FROM agg, mx
-WHERE session_end_us <= (epoch_us(m) // 1000) * 1000 - 300000000
-"""
-
-QUERIES["stream_session_windows"] = q_stream_session_windows
-ORACLES["stream_session_windows"] = ORACLE_STREAM_SESSIONS
-
-
 # ------------------------------------------- round 4: LM quality + sharding
 
-def q_lm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-trained unigram LM quality filter
-    (operators.text.unigram_logprob_scores): the CCNet-style
-    language-model filter — wordcount → top-K vocabulary (distributed
-    TakeOrdered, never a global rank window) → broadcast log-prob join
-    → per-doc integer-nat mean. Complements the heuristic
-    quality_score/repetition_stats/boilerplate_flags filters with the
-    standard LM-probability signal from public pipelines."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
-        unigram_logprob_scores,
-    )
-
-    docs = parallelize(load_table(spark, sf_dir, "documents"))
-    return unigram_logprob_scores(docs, vocab_size=1000, keep_threshold=-8.0)
-
-
-ORACLE_LM_QUALITY = """
+@query(oracle="""
 WITH toks AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
 ),
@@ -4975,12 +4413,41 @@ agg AS (
   FROM scored GROUP BY doc_id
 )
 SELECT doc_id, n_tokens, lm_score, lm_score >= -8.0 AS keep FROM agg
+""")
+def q_lm_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus-trained unigram LM quality filter
+    (operators.text.unigram_logprob_scores): the CCNet-style
+    language-model filter — wordcount → top-K vocabulary (distributed
+    TakeOrdered, never a global rank window) → broadcast log-prob join
+    → per-doc integer-nat mean. Complements the heuristic
+    quality_score/repetition_stats/boilerplate_flags filters with the
+    standard LM-probability signal from public pipelines."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
+        unigram_logprob_scores,
+    )
+
+    docs = parallelize(load_table(spark, sf_dir, "documents"))
+    return unigram_logprob_scores(docs, vocab_size=1000, keep_threshold=-8.0)
+
+
+def _oracle_shard_manifest() -> str:
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources.layout import (
+        shard_sql,
+    )
+
+    shard, h = shard_sql("doc_id", 16)
+    return f"""
+WITH tagged AS (
+  SELECT doc_id, {shard} AS shard_id, {h} AS order_hash FROM documents
+)
+SELECT shard_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(doc_id) AS BIGINT) AS id_checksum,
+       MIN(order_hash) AS first_hash, MAX(order_hash) AS last_hash
+FROM tagged GROUP BY shard_id
 """
 
-QUERIES["lm_quality_filter"] = q_lm_quality_filter
-ORACLES["lm_quality_filter"] = ORACLE_LM_QUALITY
 
-
+@query(oracle=_oracle_shard_manifest())
 def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic shuffle-shard manifest
     (sources.layout.shard_assignment): content-hash shard membership +
@@ -5003,27 +4470,17 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_shard_manifest() -> str:
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources.layout import (
-        shard_sql,
-    )
-
-    shard, h = shard_sql("doc_id", 16)
-    return f"""
-WITH tagged AS (
-  SELECT doc_id, {shard} AS shard_id, {h} AS order_hash FROM documents
+@query(oracle="""
+WITH long_t AS (
+  SELECT measure, val FROM (
+    SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_discount, l_tax
+    FROM lineitem
+  ) UNPIVOT (val FOR measure IN (l_quantity, l_extendedprice, l_discount, l_tax))
 )
-SELECT shard_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(doc_id) AS BIGINT) AS id_checksum,
-       MIN(order_hash) AS first_hash, MAX(order_hash) AS last_hash
-FROM tagged GROUP BY shard_id
-"""
-
-
-QUERIES["shard_manifest"] = q_shard_manifest
-ORACLES["shard_manifest"] = _oracle_shard_manifest()
-
-
+SELECT measure, CAST(COUNT(*) AS BIGINT) AS n,
+       CAST(SUM(CAST(round(val * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_val
+FROM long_t GROUP BY measure
+""")
 def q_lineitem_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Relational UNPIVOT surface (``DataFrame.unpivot`` — Spark's
     melt): the four lineitem measures become (measure, value) rows,
@@ -5047,22 +4504,12 @@ def q_lineitem_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_UNPIVOT = """
-WITH long_t AS (
-  SELECT measure, val FROM (
-    SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_discount, l_tax
-    FROM lineitem
-  ) UNPIVOT (val FOR measure IN (l_quantity, l_extendedprice, l_discount, l_tax))
-)
-SELECT measure, CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(round(val * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_val
-FROM long_t GROUP BY measure
-"""
-
-QUERIES["lineitem_unpivot"] = q_lineitem_unpivot
-ORACLES["lineitem_unpivot"] = ORACLE_UNPIVOT
-
-
+@query(oracle="""
+SELECT event_type AS t, CAST(COUNT(*) AS BIGINT) AS n,
+       CAST(SUM(CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT)) AS BIGINT) AS sum_k,
+       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_v
+FROM events GROUP BY event_type
+""")
 def q_variant_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured VARIANT surface (Spark 4 ``parse_json`` /
     ``variant_get``): rebuild a nested JSON document per event
@@ -5099,36 +4546,7 @@ def q_variant_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_VARIANT = """
-SELECT event_type AS t, CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT)) AS BIGINT) AS sum_k,
-       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_v
-FROM events GROUP BY event_type
-"""
-
-QUERIES["variant_props_extract"] = q_variant_props_extract
-ORACLES["variant_props_extract"] = ORACLE_VARIANT
-
-
-def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Append-only ingestion dedup (operators.dedup_near.
-    incremental_dedup): screen an incoming batch (doc_id % 10 ≥ 8)
-    against the existing corpus (doc_id % 10 < 8) via banded MinHash
-    candidates + exact-Jaccard verify; within-batch pairs deliberately
-    excluded (that is the ordinary minhash_banded_pairs run). r=2/b=16
-    banding ⇒ recall ≈ 1 at the 0.5 threshold, so the exact-Jaccard
-    SQL twin is the oracle."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup_near import (
-        incremental_dedup,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    existing = docs.filter(F.pmod("doc_id", F.lit(10)) < 8)
-    incoming = docs.filter(F.pmod("doc_id", F.lit(10)) >= 8)
-    return incremental_dedup(existing, incoming, threshold=0.5)
-
-
-ORACLE_INCREMENTAL_DEDUP = """
+@query(oracle="""
 WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
 sh AS (
   SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
@@ -5159,43 +4577,30 @@ inc AS (
 )
 SELECT i.doc_id, bj.dup_of IS NULL AS is_novel, bj.dup_of, bj.jaccard
 FROM inc i LEFT JOIN bestj bj ON bj.d1 = i.doc_id
-"""
-
-QUERIES["incremental_dedup"] = q_incremental_dedup
-ORACLES["incremental_dedup"] = ORACLE_INCREMENTAL_DEDUP
-
-
-def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming-native accreting near-dup dedup
-    (streaming.dedup_stream.incremental_dedup_stream): two document
-    micro-batches (doc_id % 10 ∈ {6,7} then {8,9}) replay against a
-    PERSISTED corpus band index (doc_id % 10 < 6); each batch's novel
-    docs join the index before the next batch, so a phase-2 doc can be
-    a dup of a phase-1 NOVEL doc but never of a phase-1 rejected one.
-    The oracle replays the same accretion sequentially in exact-Jaccard
-    SQL (r=2/b=16 recall ≈ 1, the incremental_dedup argument)."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.dedup_stream import (
-        incremental_dedup_stream,
+""")
+def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Append-only ingestion dedup (operators.dedup_near.
+    incremental_dedup): screen an incoming batch (doc_id % 10 ≥ 8)
+    against the existing corpus (doc_id % 10 < 8) via banded MinHash
+    candidates + exact-Jaccard verify; within-batch pairs deliberately
+    excluded (that is the ordinary minhash_banded_pairs run). r=2/b=16
+    banding ⇒ recall ≈ 1 at the 0.5 threshold, so the exact-Jaccard
+    SQL twin is the oracle."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup_near import (
+        incremental_dedup,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    m = F.pmod("doc_id", F.lit(10))
-    out, stats = incremental_dedup_stream(
-        spark,
-        docs.filter(m < 6),
-        [docs.filter(m.isin(6, 7)), docs.filter(m.isin(8, 9))],
-        threshold=0.5,
-    )
-    if stats["data_batches"] != 2:
-        raise RuntimeError(f"expected 2 micro-batches, got {stats}")
-    return out
+    existing = docs.filter(F.pmod("doc_id", F.lit(10)) < 8)
+    incoming = docs.filter(F.pmod("doc_id", F.lit(10)) >= 8)
+    return incremental_dedup(existing, incoming, threshold=0.5)
 
 
 # Sequential accretion modeled phase by phase: phase 1 (6,7) screens
 # the corpus (<6) only; phase 2 (8,9) screens corpus ∪ phase-1 NOVEL
 # docs. dup_of = smallest matching index id; docs shorter than 3
 # tokens never shingle and never enter the index (both engines).
-ORACLE_STREAM_INCREMENTAL_DEDUP = """
+@query(oracle="""
 WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
 sh AS (
   SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
@@ -5239,46 +4644,31 @@ inc AS (
 )
 SELECT i.doc_id, bj.dup_of IS NULL AS is_novel, bj.dup_of, bj.jaccard
 FROM inc i LEFT JOIN bestj bj ON bj.d1 = i.doc_id
-"""
-
-QUERIES["stream_incremental_dedup"] = q_stream_incremental_dedup
-ORACLES["stream_incremental_dedup"] = ORACLE_STREAM_INCREMENTAL_DEDUP
-
-
-def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN quality-eval harness: recall@5 of the sign-LSH bucketed path
-    (operators.similarity.lsh_topk) against the exact brute-force
-    top-5 (cosine_topk), per query vector. The eval every production
-    ANN deployment runs before trading exactness for pruning — here
-    with a fully deterministic oracle because BOTH retrieval paths are
-    engine-exact (integer hyperplanes, 6dp-rounded cosine, total-order
-    tiebreaks). Both branches share the corpus scan; the intersection
-    join is on (q_id, vec_id) — candidate-set sized."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
-        cosine_topk,
-        lsh_topk,
+""")
+def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming-native accreting near-dup dedup
+    (streaming.dedup_stream.incremental_dedup_stream): two document
+    micro-batches (doc_id % 10 ∈ {6,7} then {8,9}) replay against a
+    PERSISTED corpus band index (doc_id % 10 < 6); each batch's novel
+    docs join the index before the next batch, so a phase-2 doc can be
+    a dup of a phase-1 NOVEL doc but never of a phase-1 rejected one.
+    The oracle replays the same accretion sequentially in exact-Jaccard
+    SQL (r=2/b=16 recall ≈ 1, the incremental_dedup argument)."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.dedup_stream import (
+        incremental_dedup_stream,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    docs = load_table(spark, sf_dir, "documents")
+    m = F.pmod("doc_id", F.lit(10))
+    out, stats = incremental_dedup_stream(
+        spark,
+        docs.filter(m < 6),
+        [docs.filter(m.isin(6, 7)), docs.filter(m.isin(8, 9))],
+        threshold=0.5,
     )
-    exact = cosine_topk(emb, q, k=5).select("q_id", "vec_id")
-    approx = lsh_topk(emb, q, k=5, n_planes=4, dim=64).select("q_id", "vec_id")
-    hits = (
-        approx.join(exact, ["q_id", "vec_id"])
-        .groupBy("q_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    return (
-        q.select("q_id")
-        .join(hits, "q_id", "left")
-        .select(
-            "q_id",
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            F.round(F.coalesce("n_hits", F.lit(0)) / 5.0, 6).alias("recall_at_5"),
-        )
-    )
+    if stats["data_batches"] != 2:
+        raise RuntimeError(f"expected 2 micro-batches, got {stats}")
+    return out
 
 
 def _ann_eval_ctes() -> str:
@@ -5364,33 +4754,40 @@ FROM q LEFT JOIN hits h2 ON q.q_id = h2.q_id
     )
 
 
-QUERIES["ann_recall_eval"] = q_ann_recall_eval
-ORACLES["ann_recall_eval"] = _oracle_ann_recall()
-
-
-def q_ann_ranking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NDCG@5 + MRR of the sign-LSH multi-probe ranking against the
-    exact brute-force top-5 (operators.similarity.ranking_metrics) —
-    the ranking-quality companion to ann_recall_eval's set-overlap
-    recall: same truth set, but graded by WHERE the hits landed.
-    Scaled-integer log2 discounts are built once in Python and inlined
-    into both engines, so DCG is exact BIGINT arithmetic end to end."""
+@query(oracle=_oracle_ann_recall())
+def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN quality-eval harness: recall@5 of the sign-LSH bucketed path
+    (operators.similarity.lsh_topk) against the exact brute-force
+    top-5 (cosine_topk), per query vector. The eval every production
+    ANN deployment runs before trading exactness for pruning — here
+    with a fully deterministic oracle because BOTH retrieval paths are
+    engine-exact (integer hyperplanes, 6dp-rounded cosine, total-order
+    tiebreaks). Both branches share the corpus scan; the intersection
+    join is on (q_id, vec_id) — candidate-set sized."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
         cosine_topk,
         lsh_topk,
-        ranking_metrics,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
-    exact = cosine_topk(emb, q, k=5)
-    approx = lsh_topk(emb, q, k=5, n_planes=4, dim=64)
+    exact = cosine_topk(emb, q, k=5).select("q_id", "vec_id")
+    approx = lsh_topk(emb, q, k=5, n_planes=4, dim=64).select("q_id", "vec_id")
+    hits = (
+        approx.join(exact, ["q_id", "vec_id"])
+        .groupBy("q_id")
+        .agg(F.count(F.lit(1)).alias("n_hits"))
+    )
     return (
-        ranking_metrics(exact, approx, k=5)
-        .withColumnRenamed("ndcg_at_k", "ndcg_at_5")
-        .withColumnRenamed("avg_prec_at_k", "avg_prec_at_5")
+        q.select("q_id")
+        .join(hits, "q_id", "left")
+        .select(
+            "q_id",
+            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
+            F.round(F.coalesce("n_hits", F.lit(0)) / 5.0, 6).alias("recall_at_5"),
+        )
     )
 
 
@@ -5448,10 +4845,42 @@ FROM n_rel n LEFT JOIN per_q p ON n.q_id = p.q_id
     )
 
 
-QUERIES["ann_ranking_quality"] = q_ann_ranking_quality
-ORACLES["ann_ranking_quality"] = _oracle_ann_ranking()
+@query(oracle=_oracle_ann_ranking())
+def q_ann_ranking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """NDCG@5 + MRR of the sign-LSH multi-probe ranking against the
+    exact brute-force top-5 (operators.similarity.ranking_metrics) —
+    the ranking-quality companion to ann_recall_eval's set-overlap
+    recall: same truth set, but graded by WHERE the hits landed.
+    Scaled-integer log2 discounts are built once in Python and inlined
+    into both engines, so DCG is exact BIGINT arithmetic end to end."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
+        cosine_topk,
+        lsh_topk,
+        ranking_metrics,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    )
+    exact = cosine_topk(emb, q, k=5)
+    approx = lsh_topk(emb, q, k=5, n_planes=4, dim=64)
+    return (
+        ranking_metrics(exact, approx, k=5)
+        .withColumnRenamed("ndcg_at_k", "ndcg_at_5")
+        .withColumnRenamed("avg_prec_at_k", "avg_prec_at_5")
+    )
 
 
+@query(oracle="""
+SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
+FROM customer c, LATERAL (
+  SELECT o_orderkey, o_totalprice FROM orders o
+  WHERE o.o_custkey = c.c_custkey
+  ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 2
+) t
+WHERE c.c_mktsegment = 'BUILDING'
+""")
 def q_lateral_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery surface (ANSI lateral join, Spark 4
     SQL): per customer, the top-2 orders by price via an ORDER BY …
@@ -5474,20 +4903,17 @@ def q_lateral_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_LATERAL = """
-SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-FROM customer c, LATERAL (
-  SELECT o_orderkey, o_totalprice FROM orders o
-  WHERE o.o_custkey = c.c_custkey
-  ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 2
-) t
-WHERE c.c_mktsegment = 'BUILDING'
-"""
-
-QUERIES["lateral_top_orders"] = q_lateral_top_orders
-ORACLES["lateral_top_orders"] = ORACLE_LATERAL
-
-
+@query(oracle="""
+WITH RECURSIVE walk(doc_id, anc, depth) AS (
+  SELECT doc_id, doc_id, 0 FROM documents
+  UNION ALL
+  SELECT doc_id, anc // 10, depth + 1 FROM walk WHERE anc > 0
+)
+SELECT doc_id,
+       CAST(MAX(depth) AS BIGINT) AS depth_to_root,
+       CAST(COUNT(*) AS BIGINT) AS n_ancestors
+FROM walk GROUP BY doc_id
+""")
 def q_recursive_doc_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE surface (Spark 4 ``WITH RECURSIVE``): documents
     form an implicit tree (parent = doc_id // 10, root 0); the
@@ -5512,43 +4938,7 @@ def q_recursive_doc_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_RECURSIVE = """
-WITH RECURSIVE walk(doc_id, anc, depth) AS (
-  SELECT doc_id, doc_id, 0 FROM documents
-  UNION ALL
-  SELECT doc_id, anc // 10, depth + 1 FROM walk WHERE anc > 0
-)
-SELECT doc_id,
-       CAST(MAX(depth) AS BIGINT) AS depth_to_root,
-       CAST(COUNT(*) AS BIGINT) AS n_ancestors
-FROM walk GROUP BY doc_id
-"""
-
-QUERIES["recursive_doc_tree"] = q_recursive_doc_tree
-ORACLES["recursive_doc_tree"] = ORACLE_RECURSIVE
-
-
-def q_token_budget_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget apportionment (operators.sampling.apportion_budget):
-    split a 1M-token training budget across sources exactly
-    proportionally to the sqrt-temperature mixture weights (Hamilton /
-    largest-remainder, all-BIGINT arithmetic ⇒ sum(alloc) == budget
-    exactly). Corpus work is one agg down to |sources| rows; the
-    apportionment windows run on the group table only."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.sampling import (
-        apportion_budget,
-        mixture_weights,
-    )
-
-    docs = parallelize(load_table(spark, sf_dir, "documents"))
-    w = mixture_weights(
-        docs, ["source"], F.size(F.split(F.col("text"), " ")).cast("long")
-    )
-    out = apportion_budget(w, ["source"], budget=1_000_000)
-    return out.select("source", F.col("w_scaled").cast("long"), "alloc_tokens")
-
-
-ORACLE_APPORTION = """
+@query(oracle="""
 WITH g AS (
   SELECT source,
          CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT) AS n_tokens
@@ -5573,12 +4963,38 @@ r AS (
 SELECT source, w_scaled,
        CAST(fl + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT) AS alloc_tokens
 FROM r
-"""
+""")
+def q_token_budget_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-budget apportionment (operators.sampling.apportion_budget):
+    split a 1M-token training budget across sources exactly
+    proportionally to the sqrt-temperature mixture weights (Hamilton /
+    largest-remainder, all-BIGINT arithmetic ⇒ sum(alloc) == budget
+    exactly). Corpus work is one agg down to |sources| rows; the
+    apportionment windows run on the group table only."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.sampling import (
+        apportion_budget,
+        mixture_weights,
+    )
 
-QUERIES["token_budget_apportionment"] = q_token_budget_apportionment
-ORACLES["token_budget_apportionment"] = ORACLE_APPORTION
+    docs = parallelize(load_table(spark, sf_dir, "documents"))
+    w = mixture_weights(
+        docs, ["source"], F.size(F.split(F.col("text"), " ")).cast("long")
+    )
+    out = apportion_budget(w, ["source"], budget=1_000_000)
+    return out.select("source", F.col("w_scaled").cast("long"), "alloc_tokens")
 
 
+@query(oracle="""
+WITH n AS (
+  SELECT doc_id,
+         trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
+                             ' +', ' ', 'g')) AS norm_text
+  FROM documents
+)
+SELECT doc_id, md5(norm_text) AS norm_fingerprint,
+       CAST(len(string_split(norm_text, ' ')) AS BIGINT) AS n_norm_tokens
+FROM n
+""")
 def q_normalized_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalization-canonical dedup keys (operators.text.
     normalized_docs): lowercase → strip punctuation → collapse
@@ -5595,22 +5011,21 @@ def q_normalized_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_NORM_FP = """
-WITH n AS (
-  SELECT doc_id,
-         trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
-                             ' +', ' ', 'g')) AS norm_text
-  FROM documents
-)
-SELECT doc_id, md5(norm_text) AS norm_fingerprint,
-       CAST(len(string_split(norm_text, ' ')) AS BIGINT) AS n_norm_tokens
-FROM n
-"""
-
-QUERIES["normalized_fingerprints"] = q_normalized_fingerprints
-ORACLES["normalized_fingerprints"] = ORACLE_NORM_FP
+_STOP_SQL_FEAT = "'the', 'a', 'and', 'of', 'is'"
 
 
+@query(oracle=f"""
+WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents)
+SELECT doc_id,
+       CAST(len(toks) AS BIGINT) AS n_tokens,
+       CAST(length(text) AS BIGINT) AS n_chars,
+       round(CAST(len(list_distinct(toks)) AS BIGINT) / len(toks), 6) AS type_token_ratio,
+       round(CAST(list_sum(list_transform(toks, x -> length(x))) AS BIGINT) / len(toks), 6) AS avg_token_len,
+       round(CAST(len(list_filter(toks, x -> x IN ({_STOP_SQL_FEAT}))) AS BIGINT) / len(toks), 6) AS stop_ratio,
+       round(CAST(len(list_filter(toks, x -> regexp_full_match(x, '[0-9]+'))) AS BIGINT) / len(toks), 6) AS digit_token_ratio,
+       md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS text_fp
+FROM t
+""")
 def q_doc_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fused featurization (operators.text.doc_feature_matrix): every
     cheap per-doc quality signal in one projection over one scan —
@@ -5625,25 +5040,28 @@ def q_doc_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_feature_matrix(docs)
 
 
-_STOP_SQL_FEAT = "'the', 'a', 'and', 'of', 'is'"
-
-ORACLE_FEATURE_MATRIX = f"""
-WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents)
-SELECT doc_id,
-       CAST(len(toks) AS BIGINT) AS n_tokens,
-       CAST(length(text) AS BIGINT) AS n_chars,
-       round(CAST(len(list_distinct(toks)) AS BIGINT) / len(toks), 6) AS type_token_ratio,
-       round(CAST(list_sum(list_transform(toks, x -> length(x))) AS BIGINT) / len(toks), 6) AS avg_token_len,
-       round(CAST(len(list_filter(toks, x -> x IN ({_STOP_SQL_FEAT}))) AS BIGINT) / len(toks), 6) AS stop_ratio,
-       round(CAST(len(list_filter(toks, x -> regexp_full_match(x, '[0-9]+'))) AS BIGINT) / len(toks), 6) AS digit_token_ratio,
-       md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS text_fp
-FROM t
-"""
-
-QUERIES["doc_feature_matrix"] = q_doc_feature_matrix
-ORACLES["doc_feature_matrix"] = ORACLE_FEATURE_MATRIX
-
-
+@query(oracle="""
+WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+sh AS (
+  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
+  FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i) g
+),
+sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
+shared AS (
+  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS shared
+  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+),
+pairs AS (
+  SELECT round(shared / (s1.n_sh + s2.n_sh - shared), 6) AS jaccard
+  FROM shared JOIN sizes s1 ON d1 = s1.doc_id JOIN sizes s2 ON d2 = s2.doc_id
+  WHERE round(shared / (s1.n_sh + s2.n_sh - shared), 6) >= 0.2
+)
+SELECT CAST(floor(jaccard * 20) AS BIGINT) AS bucket_idx,
+       round(CAST(floor(jaccard * 20) AS BIGINT) / 20.0, 6) AS bucket_lo,
+       CAST(COUNT(*) AS BIGINT) AS n_pairs
+FROM pairs GROUP BY 1
+""")
 def q_jaccard_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity-mass histogram over the verified near-dup pair set
     (threshold 0.2, 0.05-wide buckets): the distribution an engineer
@@ -5666,33 +5084,13 @@ def q_jaccard_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_JACCARD_HIST = """
-WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i) g
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-shared AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS shared
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT round(shared / (s1.n_sh + s2.n_sh - shared), 6) AS jaccard
-  FROM shared JOIN sizes s1 ON d1 = s1.doc_id JOIN sizes s2 ON d2 = s2.doc_id
-  WHERE round(shared / (s1.n_sh + s2.n_sh - shared), 6) >= 0.2
-)
-SELECT CAST(floor(jaccard * 20) AS BIGINT) AS bucket_idx,
-       round(CAST(floor(jaccard * 20) AS BIGINT) / 20.0, 6) AS bucket_lo,
-       CAST(COUNT(*) AS BIGINT) AS n_pairs
-FROM pairs GROUP BY 1
-"""
-
-QUERIES["jaccard_histogram"] = q_jaccard_histogram
-ORACLES["jaccard_histogram"] = ORACLE_JACCARD_HIST
-
-
+@query(oracle="""
+SELECT doc_id,
+       ((1 + doc_id % 64) + 1) // 2 AS width,
+       ((1 + (doc_id // 64) % 64) + 1) // 2 AS height,
+       CAST(doc_id % 256 AS DOUBLE) AS mean_value
+FROM documents WHERE doc_id % 2 = 0
+""")
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real PNG resize stage (operators.multimodal.resize_png via
     mapInPandas): inflate IDAT → un-filter → nearest-neighbor
@@ -5717,18 +5115,15 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_MM_RESIZE = """
-SELECT doc_id,
-       ((1 + doc_id % 64) + 1) // 2 AS width,
-       ((1 + (doc_id // 64) % 64) + 1) // 2 AS height,
-       CAST(doc_id % 256 AS DOUBLE) AS mean_value
-FROM documents WHERE doc_id % 2 = 0
-"""
-
-QUERIES["multimodal_resize"] = q_multimodal_resize
-ORACLES["multimodal_resize"] = ORACLE_MM_RESIZE
-
-
+@query(oracle="""
+SELECT d.doc_id, g.i AS frame_idx,
+       1 + (d.doc_id * 8 + g.i) % 64 AS width,
+       1 + ((d.doc_id * 8 + g.i) // 64) % 64 AS height,
+       CAST((d.doc_id * 8 + g.i) % 256 AS DOUBLE) AS mean_value
+FROM documents d,
+     LATERAL (SELECT unnest(generate_series(0, 2 + d.doc_id % 6 - 1)) AS i) g
+WHERE g.i % 2 = 0
+""")
 def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling stage over multi-frame clip containers
     (operators.multimodal.frame_sample): walk the container, decode
@@ -5749,20 +5144,13 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_MM_FRAMES = """
-SELECT d.doc_id, g.i AS frame_idx,
-       1 + (d.doc_id * 8 + g.i) % 64 AS width,
-       1 + ((d.doc_id * 8 + g.i) // 64) % 64 AS height,
-       CAST((d.doc_id * 8 + g.i) % 256 AS DOUBLE) AS mean_value
-FROM documents d,
-     LATERAL (SELECT unnest(generate_series(0, 2 + d.doc_id % 6 - 1)) AS i) g
-WHERE g.i % 2 = 0
-"""
-
-QUERIES["multimodal_frame_sample"] = q_multimodal_frame_sample
-ORACLES["multimodal_frame_sample"] = ORACLE_MM_FRAMES
-
-
+@query(oracle="""
+SELECT c.c_mktsegment,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(SUM(CAST(round(e.value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_value
+FROM events e JOIN customer c ON e.user_id = c.c_custkey
+GROUP BY c.c_mktsegment
+""")
 def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment (streaming.joins.stream_static_enrich_once):
     the event stream joins the broadcast customer dim per micro-batch
@@ -5782,18 +5170,17 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_STATIC = """
-SELECT c.c_mktsegment,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(round(e.value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_value
-FROM events e JOIN customer c ON e.user_id = c.c_custkey
-GROUP BY c.c_mktsegment
-"""
-
-QUERIES["stream_static_enrich"] = q_stream_static_enrich
-ORACLES["stream_static_enrich"] = ORACLE_STREAM_STATIC
-
-
+@query(oracle="""
+SELECT o.o_orderkey, o.o_totalprice,
+       CAST(SUM(CAST(ROUND(l.l_quantity * 100) AS BIGINT)) AS BIGINT) / 100.0
+         AS total_qty
+FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+WHERE o.o_orderkey IN (
+  SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
+          HAVING SUM(CAST(ROUND(l_quantity * 100) AS BIGINT)) > 10000
+)
+GROUP BY o.o_orderkey, o.o_totalprice
+""")
 def q_large_quantity_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape (IN over a grouped-HAVING subquery): orders
     whose total lineitem quantity clears a threshold, re-joined for
@@ -5818,22 +5205,21 @@ def q_large_quantity_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q18 = """
-SELECT o.o_orderkey, o.o_totalprice,
-       CAST(SUM(CAST(ROUND(l.l_quantity * 100) AS BIGINT)) AS BIGINT) / 100.0
-         AS total_qty
-FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-WHERE o.o_orderkey IN (
-  SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
-          HAVING SUM(CAST(ROUND(l_quantity * 100) AS BIGINT)) > 10000
+@query(oracle="""
+SELECT s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait
+FROM supplier s
+JOIN lineitem l1 ON l1.l_suppkey = s.s_suppkey AND l1.l_returnflag = 'R'
+WHERE EXISTS (
+  SELECT 1 FROM lineitem l2
+  WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey
 )
-GROUP BY o.o_orderkey, o.o_totalprice
-"""
-
-QUERIES["large_quantity_orders"] = q_large_quantity_orders
-ORACLES["large_quantity_orders"] = ORACLE_Q18
-
-
+AND NOT EXISTS (
+  SELECT 1 FROM lineitem l3
+  WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
+    AND l3.l_returnflag = 'R'
+)
+GROUP BY s.s_name
+""")
 def q_sole_returning_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape (correlated EXISTS + NOT EXISTS): suppliers who
     shipped a returned line in a multi-supplier order where NO other
@@ -5864,26 +5250,13 @@ def q_sole_returning_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q21 = """
-SELECT s.s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-FROM supplier s
-JOIN lineitem l1 ON l1.l_suppkey = s.s_suppkey AND l1.l_returnflag = 'R'
-WHERE EXISTS (
-  SELECT 1 FROM lineitem l2
-  WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey
+@query(oracle="""
+SELECT p.p_partkey, p.p_name, p.p_type, p.p_retailprice
+FROM part p
+WHERE p.p_retailprice = (
+  SELECT MIN(p2.p_retailprice) FROM part p2 WHERE p2.p_type = p.p_type
 )
-AND NOT EXISTS (
-  SELECT 1 FROM lineitem l3
-  WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-    AND l3.l_returnflag = 'R'
-)
-GROUP BY s.s_name
-"""
-
-QUERIES["sole_returning_supplier"] = q_sole_returning_supplier
-ORACLES["sole_returning_supplier"] = ORACLE_Q21
-
-
+""")
 def q_min_price_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape (correlated scalar subquery): parts priced at
     the minimum of their type class. Catalyst decorrelates the scalar
@@ -5902,18 +5275,10 @@ def q_min_price_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q2MIN = """
-SELECT p.p_partkey, p.p_name, p.p_type, p.p_retailprice
-FROM part p
-WHERE p.p_retailprice = (
-  SELECT MIN(p2.p_retailprice) FROM part p2 WHERE p2.p_type = p.p_type
-)
-"""
-
-QUERIES["min_price_per_type"] = q_min_price_per_type
-ORACLES["min_price_per_type"] = ORACLE_Q2MIN
-
-
+@query(oracle="""
+SELECT event_type, user_id, CAST(COUNT(*) AS BIGINT) AS n_events
+FROM events GROUP BY event_type, user_id
+""")
 def q_pandas_api_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pandas-API-on-Spark surface (``pyspark.pandas``): the
     distributed DataFrame dialect data scientists reach for first —
@@ -5932,15 +5297,53 @@ def q_pandas_api_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PANDAS_API = """
-SELECT event_type, user_id, CAST(COUNT(*) AS BIGINT) AS n_events
-FROM events GROUP BY event_type, user_id
-"""
-
-QUERIES["pandas_api_counts"] = q_pandas_api_counts
-ORACLES["pandas_api_counts"] = ORACLE_PANDAS_API
-
-
+@query(oracle="""
+WITH norm AS (
+  SELECT doc_id, source,
+         trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
+                             ' +', ' ', 'g')) AS ntext
+  FROM documents
+),
+dedup AS (
+  SELECT doc_id, source, ntext FROM norm
+  QUALIFY row_number() OVER (PARTITION BY md5(ntext) ORDER BY doc_id) = 1
+),
+toks AS (SELECT doc_id, unnest(string_split(ntext, ' ')) AS token FROM dedup),
+counts AS (SELECT token, COUNT(*) AS cnt FROM toks GROUP BY token),
+total AS (SELECT CAST(SUM(cnt) AS BIGINT) AS tot FROM counts),
+vocab AS (
+  SELECT token, cnt FROM counts
+  QUALIFY row_number() OVER (ORDER BY cnt DESC, token ASC) <= 1000
+),
+lp AS (
+  SELECT v.token,
+         CAST(round(ln(CAST(v.cnt AS DOUBLE) / t.tot) * 1000000) AS BIGINT) AS lp
+  FROM vocab v, total t
+),
+scored AS (
+  SELECT tk.doc_id,
+         COALESCE(l.lp,
+                  (SELECT CAST(round(ln(0.5 / tot) * 1000000) AS BIGINT)
+                   FROM total)) AS lp
+  FROM toks tk LEFT JOIN lp l USING (token)
+),
+per_doc AS (
+  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
+         round(CAST(CAST(SUM(lp) AS BIGINT) AS DOUBLE) / COUNT(*) / 1000000.0,
+               6) AS lm_score
+  FROM scored GROUP BY doc_id
+),
+kept AS (
+  SELECT p.doc_id, p.n_tokens, p.lm_score, d.source
+  FROM per_doc p JOIN dedup d USING (doc_id)
+  WHERE p.lm_score >= -8.0
+)
+SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
+       round(CAST(CAST(SUM(CAST(round(lm_score * 1000000) AS BIGINT)) AS BIGINT)
+                  AS DOUBLE) / COUNT(*) / 1000000.0, 6) AS avg_lm_score
+FROM kept GROUP BY source
+""")
 def q_corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end curation v2, chaining the round-4 operators:
     normalize (text.normalize_text) → exact-dedup on the CANONICAL
@@ -5992,58 +5395,15 @@ def q_corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CURATION_V2 = """
-WITH norm AS (
-  SELECT doc_id, source,
-         trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
-                             ' +', ' ', 'g')) AS ntext
-  FROM documents
-),
-dedup AS (
-  SELECT doc_id, source, ntext FROM norm
-  QUALIFY row_number() OVER (PARTITION BY md5(ntext) ORDER BY doc_id) = 1
-),
-toks AS (SELECT doc_id, unnest(string_split(ntext, ' ')) AS token FROM dedup),
-counts AS (SELECT token, COUNT(*) AS cnt FROM toks GROUP BY token),
-total AS (SELECT CAST(SUM(cnt) AS BIGINT) AS tot FROM counts),
-vocab AS (
-  SELECT token, cnt FROM counts
-  QUALIFY row_number() OVER (ORDER BY cnt DESC, token ASC) <= 1000
-),
-lp AS (
-  SELECT v.token,
-         CAST(round(ln(CAST(v.cnt AS DOUBLE) / t.tot) * 1000000) AS BIGINT) AS lp
-  FROM vocab v, total t
-),
-scored AS (
-  SELECT tk.doc_id,
-         COALESCE(l.lp,
-                  (SELECT CAST(round(ln(0.5 / tot) * 1000000) AS BIGINT)
-                   FROM total)) AS lp
-  FROM toks tk LEFT JOIN lp l USING (token)
-),
-per_doc AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-         round(CAST(CAST(SUM(lp) AS BIGINT) AS DOUBLE) / COUNT(*) / 1000000.0,
-               6) AS lm_score
-  FROM scored GROUP BY doc_id
-),
-kept AS (
-  SELECT p.doc_id, p.n_tokens, p.lm_score, d.source
-  FROM per_doc p JOIN dedup d USING (doc_id)
-  WHERE p.lm_score >= -8.0
-)
-SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-       round(CAST(CAST(SUM(CAST(round(lm_score * 1000000) AS BIGINT)) AS BIGINT)
-                  AS DOUBLE) / COUNT(*) / 1000000.0, 6) AS avg_lm_score
-FROM kept GROUP BY source
-"""
-
-QUERIES["corpus_curation_v2"] = q_corpus_curation_v2
-ORACLES["corpus_curation_v2"] = ORACLE_CURATION_V2
-
-
+@query(oracle="""
+SELECT l_returnflag, l_linestatus,
+       CAST(grouping_id(l_returnflag, l_linestatus) AS BIGINT) AS gid,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+         / 100.0 AS revenue
+FROM lineitem
+GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
+""")
 def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS surface (the general form behind ROLLUP/CUBE,
     both already oracled): revenue by (returnflag), by (linestatus),
@@ -6074,20 +5434,12 @@ def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_GROUPING_SETS = """
-SELECT l_returnflag, l_linestatus,
-       CAST(grouping_id(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-         / 100.0 AS revenue
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-"""
-
-QUERIES["grouping_sets_revenue"] = q_grouping_sets_revenue
-ORACLES["grouping_sets_revenue"] = ORACLE_GROUPING_SETS
-
-
+@query(oracle="""
+WITH d AS (SELECT DISTINCT p_type, p_brand FROM part)
+SELECT p_type, CAST(COUNT(*) AS BIGINT) AS n_brands,
+       string_agg(p_brand, ',' ORDER BY p_brand) AS brands
+FROM d GROUP BY p_type
+""")
 def q_brands_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered string aggregation (``listagg`` / ``string_agg``): the
     distinct brands per part type as one deterministic comma-joined
@@ -6107,17 +5459,21 @@ def q_brands_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_LISTAGG = """
-WITH d AS (SELECT DISTINCT p_type, p_brand FROM part)
-SELECT p_type, CAST(COUNT(*) AS BIGINT) AS n_brands,
-       string_agg(p_brand, ',' ORDER BY p_brand) AS brands
-FROM d GROUP BY p_type
-"""
-
-QUERIES["brands_listagg"] = q_brands_listagg
-ORACLES["brands_listagg"] = ORACLE_LISTAGG
-
-
+@query(oracle="""
+WITH p AS (
+  SELECT event_id,
+         CASE WHEN user_id % 3 <> 0 THEN value / (user_id % 3) END AS div3,
+         TRY_CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT) AS k_long,
+         TRY_CAST(event_type AS BIGINT) AS bad_cast
+  FROM events
+)
+SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(COUNT(div3) AS BIGINT) AS n_divisible,
+       CAST(COUNT(k_long) AS BIGINT) AS n_k,
+       CAST(COUNT(bad_cast) AS BIGINT) AS n_bad_cast,
+       CAST(SUM(CAST(round(div3 * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_div3
+FROM p
+""")
 def q_safe_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANSI error-safe function surface (``try_divide`` / ``try_cast``
     / ``try_to_timestamp``): expressions that yield NULL instead of
@@ -6148,26 +5504,29 @@ def q_safe_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SAFE_ARITH = """
-WITH p AS (
-  SELECT event_id,
-         CASE WHEN user_id % 3 <> 0 THEN value / (user_id % 3) END AS div3,
-         TRY_CAST(regexp_extract(props, '"k":\\s*(\\d+)', 1) AS BIGINT) AS k_long,
-         TRY_CAST(event_type AS BIGINT) AS bad_cast
+@query(oracle="""
+WITH RECURSIVE seq AS (
+  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
   FROM events
+),
+rec(user_id, rn, ts_us, tokens, allowed) AS (
+  SELECT user_id, rn, ts_us,
+         3000000 - 1000000, TRUE
+  FROM seq WHERE rn = 1
+  UNION ALL
+  SELECT s.user_id, s.rn, s.ts_us,
+         CASE WHEN least(3000000, r.tokens + (s.ts_us - r.ts_us) // 3600) >= 1000000
+              THEN least(3000000, r.tokens + (s.ts_us - r.ts_us) // 3600) - 1000000
+              ELSE least(3000000, r.tokens + (s.ts_us - r.ts_us) // 3600) END,
+         least(3000000, r.tokens + (s.ts_us - r.ts_us) // 3600) >= 1000000
+  FROM rec r JOIN seq s ON s.user_id = r.user_id AND s.rn = r.rn + 1
 )
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(COUNT(div3) AS BIGINT) AS n_divisible,
-       CAST(COUNT(k_long) AS BIGINT) AS n_k,
-       CAST(COUNT(bad_cast) AS BIGINT) AS n_bad_cast,
-       CAST(SUM(CAST(round(div3 * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS sum_div3
-FROM p
-"""
-
-QUERIES["safe_arithmetic"] = q_safe_arithmetic
-ORACLES["safe_arithmetic"] = ORACLE_SAFE_ARITH
-
-
+SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(COUNT(CASE WHEN allowed THEN 1 END) AS BIGINT) AS n_allowed,
+       CAST(COUNT(CASE WHEN NOT allowed THEN 1 END) AS BIGINT) AS n_throttled
+FROM rec GROUP BY user_id
+""")
 def q_rate_limit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time token-bucket rate limiting (operators.ratelimit.
     token_bucket_flags): per-user bucket (capacity 3, refill 1
@@ -6191,34 +5550,13 @@ def q_rate_limit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_RATE_LIMIT = """
-WITH RECURSIVE seq AS (
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-  FROM events
-),
-rec(user_id, rn, ts_us, tokens, allowed) AS (
-  SELECT user_id, rn, ts_us,
-         3000000 - 1000000, TRUE
-  FROM seq WHERE rn = 1
-  UNION ALL
-  SELECT s.user_id, s.rn, s.ts_us,
-         CASE WHEN least(3000000, r.tokens + (s.ts_us - r.ts_us) // 3600) >= 1000000
-              THEN least(3000000, r.tokens + (s.ts_us - r.ts_us) // 3600) - 1000000
-              ELSE least(3000000, r.tokens + (s.ts_us - r.ts_us) // 3600) END,
-         least(3000000, r.tokens + (s.ts_us - r.ts_us) // 3600) >= 1000000
-  FROM rec r JOIN seq s ON s.user_id = r.user_id AND s.rn = r.rn + 1
-)
-SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(COUNT(CASE WHEN allowed THEN 1 END) AS BIGINT) AS n_allowed,
-       CAST(COUNT(CASE WHEN NOT allowed THEN 1 END) AS BIGINT) AS n_throttled
-FROM rec GROUP BY user_id
-"""
-
-QUERIES["rate_limit_audit"] = q_rate_limit_audit
-ORACLES["rate_limit_audit"] = ORACLE_RATE_LIMIT
-
-
+@query(oracle="""
+SELECT o_orderstatus AS status, CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(o_orderkey) AS BIGINT) AS key_sum,
+       CAST(SUM(CAST(round(CAST(printf('%.2f', o_totalprice) AS DOUBLE) * 100)
+                AS BIGINT)) AS BIGINT) / 100.0 AS total_sum
+FROM orders GROUP BY o_orderstatus
+""")
 def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML surface (Spark 4 ``from_xml``): build an XML document per
     order from its columns, parse it back with a declared schema, and
@@ -6248,18 +5586,12 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_XML = """
-SELECT o_orderstatus AS status, CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(SUM(o_orderkey) AS BIGINT) AS key_sum,
-       CAST(SUM(CAST(round(CAST(printf('%.2f', o_totalprice) AS DOUBLE) * 100)
-                AS BIGINT)) AS BIGINT) / 100.0 AS total_sum
-FROM orders GROUP BY o_orderstatus
-"""
-
-QUERIES["xml_roundtrip"] = q_xml_roundtrip
-ORACLES["xml_roundtrip"] = ORACLE_XML
-
-
+@query(oracle="""
+SELECT p_type, CAST(COUNT(*) AS BIGINT) AS n_parts
+FROM part
+WHERE p_brand NOT IN (SELECT p_brand FROM part WHERE p_size = 50 AND p_type LIKE 'SMALL%')
+GROUP BY p_type
+""")
 def q_brand_exclusion_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape (NOT IN subquery): parts whose brand never
     appears among a selective probe set (size-50 SMALL-type parts),
@@ -6280,19 +5612,18 @@ def q_brand_exclusion_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q16 = """
-SELECT p_type, CAST(COUNT(*) AS BIGINT) AS n_parts
-FROM part
-WHERE p_brand NOT IN (SELECT p_brand FROM part WHERE p_size = 50 AND p_type LIKE 'SMALL%')
-GROUP BY p_type
-"""
-
-QUERIES["brand_exclusion_counts"] = q_brand_exclusion_counts
-ORACLES["brand_exclusion_counts"] = ORACLE_Q16
-
-
 # ------------------------- batch: round-4 continuation (training-data ops)
 
+@query(oracle="""
+WITH starts AS (
+  SELECT doc_id, text,
+         unnest(generate_series(0, CAST(greatest(length(text)-1, 0) AS BIGINT), 48)) AS s
+  FROM documents)
+SELECT doc_id, CAST(s // 48 AS BIGINT) AS chunk_idx, CAST(s AS BIGINT) AS chunk_start,
+       CAST(length(substr(text, CAST(s+1 AS INT), 64)) AS BIGINT) AS chunk_chars,
+       substr(md5(substr(text, CAST(s+1 AS INT), 64)), 1, 16) AS chunk_fp
+FROM starts
+""")
 def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping fixed-size chunking (operators.chunking): every
     document cut into 64-char windows every 48 chars, each chunk
@@ -6306,21 +5637,23 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_documents(d, chunk_chars=64, stride=48)
 
 
-ORACLE_DOC_CHUNKS = """
-WITH starts AS (
-  SELECT doc_id, text,
-         unnest(generate_series(0, CAST(greatest(length(text)-1, 0) AS BIGINT), 48)) AS s
-  FROM documents)
-SELECT doc_id, CAST(s // 48 AS BIGINT) AS chunk_idx, CAST(s AS BIGINT) AS chunk_start,
-       CAST(length(substr(text, CAST(s+1 AS INT), 64)) AS BIGINT) AS chunk_chars,
-       substr(md5(substr(text, CAST(s+1 AS INT), 64)), 1, 16) AS chunk_fp
-FROM starts
-"""
-
-QUERIES["doc_chunks"] = q_doc_chunks
-ORACLES["doc_chunks"] = ORACLE_DOC_CHUNKS
-
-
+@query(oracle="""
+WITH t AS (
+  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
+         substr(md5('pack' || chr(31) || CAST(doc_id AS VARCHAR)), 1, 16) AS h
+  FROM documents),
+c AS (
+  SELECT doc_id, n_tok,
+         COALESCE(SUM(n_tok) OVER (ORDER BY h, doc_id
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start
+  FROM t)
+SELECT CAST(start // 256 AS BIGINT) AS bin_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
+       CAST(COUNT(CASE WHEN start // 256
+                       != (start + greatest(n_tok - 1, 0)) // 256 THEN 1 END)
+            AS BIGINT) AS n_spanning
+FROM c GROUP BY 1
+""")
 def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPT-style concat-and-chunk sequence packing
     (operators.packing.pack_documents): documents concatenated in
@@ -6346,54 +5679,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SEQUENCE_PACKING = """
-WITH t AS (
-  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         substr(md5('pack' || chr(31) || CAST(doc_id AS VARCHAR)), 1, 16) AS h
-  FROM documents),
-c AS (
-  SELECT doc_id, n_tok,
-         COALESCE(SUM(n_tok) OVER (ORDER BY h, doc_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start
-  FROM t)
-SELECT CAST(start // 256 AS BIGINT) AS bin_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
-       CAST(COUNT(CASE WHEN start // 256
-                       != (start + greatest(n_tok - 1, 0)) // 256 THEN 1 END)
-            AS BIGINT) AS n_spanning
-FROM c GROUP BY 1
-"""
-
-QUERIES["sequence_packing"] = q_sequence_packing
-ORACLES["sequence_packing"] = ORACLE_SEQUENCE_PACKING
-
-
-def q_purchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-iteration exact integer PageRank (operators.pagerank) over
-    the customer→supplier purchase graph (distinct pairs via the
-    orders⋈lineitem equi-join). Contributions are floored BIGINTs
-    BEFORE summation, so the iterative result is bit-identical on any
-    engine/partitioning; the oracle replays the same three steps as
-    chained CTEs. Per-iteration cost: key-partitioned joins on
-    |edges|, lineage cut each round."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.pagerank import (
-        pagerank,
-    )
-
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select(
-            F.concat(F.lit("c:"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    return pagerank(edges, iterations=3)
-
-
-ORACLE_PURCHASE_PAGERANK = """
+@query(oracle="""
 WITH edges AS (
   SELECT DISTINCT 'c:' || CAST(o_custkey AS VARCHAR) AS src,
                   's:' || CAST(l_suppkey AS VARCHAR) AS dst
@@ -6425,26 +5711,30 @@ p3 AS (SELECT nd.node,
               + COALESCE(s3.m, 0) AS pr
        FROM nodes nd LEFT JOIN s3 ON s3.node = nd.node)
 SELECT node, CAST(pr AS BIGINT) AS pr_scaled FROM p3
-"""
-
-QUERIES["purchase_pagerank"] = q_purchase_pagerank
-ORACLES["purchase_pagerank"] = ORACLE_PURCHASE_PAGERANK
-
-
-def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-negative mining (operators.similarity.hard_negatives):
-    per anchor, the top-3 most-similar DIFFERENT-label vectors,
-    candidates blocked by sign-LSH bucket (equi-self-join on the
-    integer code — never all-pairs)."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
-        hard_negatives,
+""")
+def q_purchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """3-iteration exact integer PageRank (operators.pagerank) over
+    the customer→supplier purchase graph (distinct pairs via the
+    orders⋈lineitem equi-join). Contributions are floored BIGINTs
+    BEFORE summation, so the iterative result is bit-identical on any
+    engine/partitioning; the oracle replays the same three steps as
+    chained CTEs. Per-iteration cost: key-partitioned joins on
+    |edges|, lineage cut each round."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.pagerank import (
+        pagerank,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = hard_negatives(emb, k=3, n_planes=4, dim=64)
-    return out.select(
-        "anchor_id", "neg_id", "similarity", F.col("rank").cast("long").alias("rank")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    edges = (
+        o.join(li, o["o_orderkey"] == li["l_orderkey"])
+        .select(
+            F.concat(F.lit("c:"), F.col("o_custkey").cast("string")).alias("src"),
+            F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("dst"),
+        )
+        .distinct()
     )
+    return pagerank(edges, iterations=3)
 
 
 def _oracle_hard_negatives() -> str:
@@ -6494,8 +5784,21 @@ SELECT anchor_id, neg_id, similarity, rank FROM (
 """
 
 
-QUERIES["hard_negatives"] = q_hard_negatives
-ORACLES["hard_negatives"] = _oracle_hard_negatives()
+@query(oracle=_oracle_hard_negatives())
+def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hard-negative mining (operators.similarity.hard_negatives):
+    per anchor, the top-3 most-similar DIFFERENT-label vectors,
+    candidates blocked by sign-LSH bucket (equi-self-join on the
+    integer code — never all-pairs)."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
+        hard_negatives,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    out = hard_negatives(emb, k=3, n_planes=4, dim=64)
+    return out.select(
+        "anchor_id", "neg_id", "similarity", F.col("rank").cast("long").alias("rank")
+    )
 
 
 # ---------------------- batch: TPC-H hard decorrelation shapes (Q21/Q22/Q11)
@@ -6514,6 +5817,7 @@ GROUP BY s_name
 """
 
 
+@query(oracle=_Q21_SQL)
 def q_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape — the hardest decorrelation pattern: a
     correlated EXISTS *and* a correlated NOT EXISTS on the same fact
@@ -6526,10 +5830,6 @@ def q_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("supplier", "lineitem", "orders"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(_Q21_SQL)
-
-
-QUERIES["sole_late_supplier"] = q_sole_late_supplier
-ORACLES["sole_late_supplier"] = _Q21_SQL
 
 
 _Q22_SQL = """
@@ -6546,6 +5846,7 @@ GROUP BY c_mktsegment
 """
 
 
+@query(oracle=_Q22_SQL)
 def q_idle_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: above-average-balance customers with no
     finalized orders — a scalar aggregate subquery in the WHERE plus a
@@ -6556,10 +5857,6 @@ def q_idle_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_Q22_SQL)
-
-
-QUERIES["idle_customer_balance"] = q_idle_customer_balance
-ORACLES["idle_customer_balance"] = _Q22_SQL
 
 
 _Q11_SQL = """
@@ -6575,6 +5872,7 @@ HAVING SUM(CAST(round(l_extendedprice*l_quantity) AS BIGINT))
 """
 
 
+@query(oracle=_Q11_SQL)
 def q_part_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: per-part value with a scalar subquery inside
     HAVING (parts above 1.2x the mean part value — scale-invariant
@@ -6586,27 +5884,10 @@ def q_part_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_Q11_SQL)
 
 
-QUERIES["part_value_share"] = q_part_value_share
-ORACLES["part_value_share"] = _Q11_SQL
-
-
 # ----------------- batch: corpus diagnostics + training-pair composition
 
 
-def q_chunk_level_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chunk-granularity exact dedup (operators.chunking.
-    duplicate_chunks): 64-char chunk fingerprints shared by ≥2
-    documents — catches copied spans that survive document-level
-    dedup. Map-only chunker → one fingerprint-keyed hash aggregate."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.chunking import (
-        duplicate_chunks,
-    )
-
-    d = load_table(spark, sf_dir, "documents")
-    return duplicate_chunks(d, chunk_chars=64, stride=48, min_docs=2)
-
-
-ORACLE_CHUNK_DEDUP = """
+@query(oracle="""
 WITH starts AS (
   SELECT doc_id, text,
          unnest(generate_series(0, CAST(greatest(length(text)-1, 0) AS BIGINT), 48)) AS s
@@ -6621,25 +5902,21 @@ SELECT chunk_fp, CAST(COUNT(*) AS BIGINT) AS n_occurrences,
        CAST(MIN(doc_id) AS BIGINT) AS first_doc
 FROM chunks WHERE len = 64
 GROUP BY chunk_fp HAVING COUNT(DISTINCT doc_id) >= 2
-"""
-
-QUERIES["chunk_level_dedup"] = q_chunk_level_dedup
-ORACLES["chunk_level_dedup"] = ORACLE_CHUNK_DEDUP
-
-
-def q_source_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source language-mixture entropy (operators.text.
-    source_lang_entropy): Shannon entropy in integer micro-nats, each
-    term rounded from exact counts before the order-free BIGINT sum."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
-        source_lang_entropy,
+""")
+def q_chunk_level_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Chunk-granularity exact dedup (operators.chunking.
+    duplicate_chunks): 64-char chunk fingerprints shared by ≥2
+    documents — catches copied spans that survive document-level
+    dedup. Map-only chunker → one fingerprint-keyed hash aggregate."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.chunking import (
+        duplicate_chunks,
     )
 
     d = load_table(spark, sf_dir, "documents")
-    return source_lang_entropy(d, group_col="source", lang_col="lang")
+    return duplicate_chunks(d, chunk_chars=64, stride=48, min_docs=2)
 
 
-ORACLE_LANG_ENTROPY = """
+@query(oracle="""
 WITH sl AS (
   SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n FROM documents GROUP BY 1, 2),
 tot AS (
@@ -6650,37 +5927,17 @@ SELECT s.source, t.n_langs, t.n_docs,
        CAST(SUM(CAST(round(-(s.n*1.0/t.n_docs) * ln(s.n*1.0/t.n_docs) * 1000000)
                 AS BIGINT)) AS BIGINT) AS entropy_micro_nats
 FROM sl s JOIN tot t USING (source) GROUP BY 1, 2, 3
-"""
-
-QUERIES["source_lang_entropy"] = q_source_lang_entropy
-ORACLES["source_lang_entropy"] = ORACLE_LANG_ENTROPY
-
-
-def q_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contrastive training-pair export: (anchor, positive, negative)
-    triplets — positives are label-blocked near-duplicates
-    (cosine ≥ 0.3, operators.similarity.cosine_near_dup_pairs),
-    negatives the anchor's rank-1 sign-LSH hard negative
-    (operators.similarity.hard_negatives). Both sides are blocked
-    candidate generators (label / LSH bucket), joined on the anchor id
-    — the end-to-end pair-mining pipeline with no all-pairs stage."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
-        cosine_near_dup_pairs,
-        hard_negatives,
+""")
+def q_source_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source language-mixture entropy (operators.text.
+    source_lang_entropy): Shannon entropy in integer micro-nats, each
+    term rounded from exact counts before the order-free BIGINT sum."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
+        source_lang_entropy,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    pos = cosine_near_dup_pairs(emb, threshold=0.3).select(
-        F.col("id_a").alias("anchor_id"),
-        F.col("id_b").alias("pos_id"),
-        F.col("similarity").alias("pos_sim"),
-    )
-    neg = (
-        hard_negatives(emb, k=1, n_planes=4, dim=64)
-        .filter(F.col("rank") == 1)
-        .select("anchor_id", "neg_id", F.col("similarity").alias("neg_sim"))
-    )
-    return pos.join(neg, "anchor_id")
+    d = load_table(spark, sf_dir, "documents")
+    return source_lang_entropy(d, group_col="source", lang_col="lang")
 
 
 def _oracle_contrastive_triplets() -> str:
@@ -6737,29 +5994,38 @@ FROM pos p JOIN neg n USING (anchor_id)
 """
 
 
-QUERIES["contrastive_triplets"] = q_contrastive_triplets
-ORACLES["contrastive_triplets"] = _oracle_contrastive_triplets()
+@query(oracle=_oracle_contrastive_triplets())
+def q_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Contrastive training-pair export: (anchor, positive, negative)
+    triplets — positives are label-blocked near-duplicates
+    (cosine ≥ 0.3, operators.similarity.cosine_near_dup_pairs),
+    negatives the anchor's rank-1 sign-LSH hard negative
+    (operators.similarity.hard_negatives). Both sides are blocked
+    candidate generators (label / LSH bucket), joined on the anchor id
+    — the end-to-end pair-mining pipeline with no all-pairs stage."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
+        cosine_near_dup_pairs,
+        hard_negatives,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    pos = cosine_near_dup_pairs(emb, threshold=0.3).select(
+        F.col("id_a").alias("anchor_id"),
+        F.col("id_b").alias("pos_id"),
+        F.col("similarity").alias("pos_sim"),
+    )
+    neg = (
+        hard_negatives(emb, k=1, n_planes=4, dim=64)
+        .filter(F.col("rank") == 1)
+        .select("anchor_id", "neg_id", F.col("similarity").alias("neg_sim"))
+    )
+    return pos.join(neg, "anchor_id")
 
 
 # ----------------------------- batch: ML-ops audits + feature encoding
 
 
-def q_temporal_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal train/test split report with entity-leakage count
-    (operators.sampling.temporal_leakage_audit): events before
-    2024-01-08 are train; users active on both sides of the cutoff
-    are leaks. One entity-keyed shuffle of the fact table."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.sampling import (
-        temporal_leakage_audit,
-    )
-
-    e = load_table(spark, sf_dir, "events")
-    return temporal_leakage_audit(
-        e, ts_col="ts", entity_col="user_id", cutoff="2024-01-08 00:00:00"
-    )
-
-
-ORACLE_TEMPORAL_SPLIT = """
+@query(oracle="""
 WITH tagged AS (
   SELECT user_id AS ent,
          CASE WHEN ts < TIMESTAMP '2024-01-08 00:00:00'
@@ -6776,12 +6042,32 @@ leak AS (
     SELECT ent FROM per_ent GROUP BY ent HAVING COUNT(*) = 2))
 SELECT p.split, p.n_events, p.n_entities, l.n_leaked_entities
 FROM per p CROSS JOIN leak l
-"""
+""")
+def q_temporal_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temporal train/test split report with entity-leakage count
+    (operators.sampling.temporal_leakage_audit): events before
+    2024-01-08 are train; users active on both sides of the cutoff
+    are leaks. One entity-keyed shuffle of the fact table."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.sampling import (
+        temporal_leakage_audit,
+    )
 
-QUERIES["temporal_split_audit"] = q_temporal_split_audit
-ORACLES["temporal_split_audit"] = ORACLE_TEMPORAL_SPLIT
+    e = load_table(spark, sf_dir, "events")
+    return temporal_leakage_audit(
+        e, ts_col="ts", entity_col="user_id", cutoff="2024-01-08 00:00:00"
+    )
 
 
+@query(oracle="""
+WITH g AS (
+  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS s
+  FROM events GROUP BY 1),
+tot AS (SELECT CAST(SUM(n) AS BIGINT) AS N, CAST(SUM(s) AS BIGINT) AS S FROM g)
+SELECT g.event_type, g.n,
+       round((g.s + 10.0 * t.S / t.N) / (g.n + 10) / 100.0, 6) AS encoded
+FROM g CROSS JOIN tot t
+""")
 def q_event_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """m-estimate smoothed target encoding of event_type against the
     value column (operators.encoding.target_encode, m=10): exact
@@ -6795,21 +6081,10 @@ def q_event_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return target_encode(e, cat_col="event_type", target_col="value", m=10)
 
 
-ORACLE_TARGET_ENCODING = """
-WITH g AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS s
-  FROM events GROUP BY 1),
-tot AS (SELECT CAST(SUM(n) AS BIGINT) AS N, CAST(SUM(s) AS BIGINT) AS S FROM g)
-SELECT g.event_type, g.n,
-       round((g.s + 10.0 * t.S / t.N) / (g.n + 10) / 100.0, 6) AS encoded
-FROM g CROSS JOIN tot t
-"""
-
-QUERIES["event_target_encoding"] = q_event_target_encoding
-ORACLES["event_target_encoding"] = ORACLE_TARGET_ENCODING
-
-
+@query(oracle="""
+SELECT c_nationkey, c_mktsegment, CAST(COUNT(*) AS BIGINT) AS group_size
+FROM customer GROUP BY 1, 2 HAVING COUNT(*) < 10
+""")
 def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit (operators.pii.k_anonymity_audit): customer
     quasi-identifier combos (nation, market segment) with fewer than
@@ -6822,18 +6097,17 @@ def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return k_anonymity_audit(c, ["c_nationkey", "c_mktsegment"], k=10)
 
 
-ORACLE_K_ANONYMITY = """
-SELECT c_nationkey, c_mktsegment, CAST(COUNT(*) AS BIGINT) AS group_size
-FROM customer GROUP BY 1, 2 HAVING COUNT(*) < 10
-"""
-
-QUERIES["k_anonymity_audit"] = q_k_anonymity_audit
-ORACLES["k_anonymity_audit"] = ORACLE_K_ANONYMITY
-
-
 # --------------------- batch: dynamic partition pruning + pandas UDAF
 
 
+@query(oracle="""
+SELECT CAST(month(o_orderdate) AS BIGINT) AS order_month,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0
+         AS revenue
+FROM orders WHERE month(o_orderdate) <= 3
+GROUP BY 1
+""")
 def q_dpp_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition pruning end-to-end: orders materialized
     PARTITIONED BY month, joined to a parquet dim filtered to the
@@ -6873,19 +6147,11 @@ def q_dpp_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DPP = """
-SELECT CAST(month(o_orderdate) AS BIGINT) AS order_month,
-       CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0
-         AS revenue
-FROM orders WHERE month(o_orderdate) <= 3
-GROUP BY 1
-"""
-
-QUERIES["dpp_pruned_join"] = q_dpp_pruned_join
-ORACLES["dpp_pruned_join"] = ORACLE_DPP
-
-
+@query(oracle="""
+SELECT event_type, round(median(value), 6) AS median_value,
+       CAST(COUNT(*) AS BIGINT) AS n
+FROM events GROUP BY event_type
+""")
 def q_pandas_udaf_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom Python UDAF surface (operators.udx.grouped_median_udaf):
     exact per-type median of event values through the GROUPED_AGG
@@ -6899,19 +6165,21 @@ def q_pandas_udaf_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grouped_median_udaf(e, "event_type", "value")
 
 
-ORACLE_PANDAS_UDAF_MEDIAN = """
-SELECT event_type, round(median(value), 6) AS median_value,
-       CAST(COUNT(*) AS BIGINT) AS n
-FROM events GROUP BY event_type
-"""
-
-QUERIES["pandas_udaf_median"] = q_pandas_udaf_median
-ORACLES["pandas_udaf_median"] = ORACLE_PANDAS_UDAF_MEDIAN
-
-
 # ------------------------------------ batch: Jaro-Winkler record linkage
 
 
+@query(oracle="""
+WITH q AS (SELECT c_name FROM customer WHERE c_custkey < 50),
+scored AS (
+  SELECT q.c_name, s.s_name,
+         round(jaro_winkler_similarity(q.c_name, s.s_name), 6) AS similarity
+  FROM q CROSS JOIN supplier s)
+SELECT c_name, s_name, similarity FROM (
+  SELECT c_name, s_name, similarity,
+         row_number() OVER (PARTITION BY c_name
+                            ORDER BY similarity DESC, s_name ASC) AS rn
+  FROM scored) WHERE rn = 1
+""")
 def q_jw_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Record linkage with the Jaro-Winkler scorer
     (operators.fuzzy.jaro_winkler — DuckDB-exact conventions, integer
@@ -6935,40 +6203,7 @@ def q_jw_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("c_name", "s_name", "similarity")
 
 
-ORACLE_JW_BEST_MATCH = """
-WITH q AS (SELECT c_name FROM customer WHERE c_custkey < 50),
-scored AS (
-  SELECT q.c_name, s.s_name,
-         round(jaro_winkler_similarity(q.c_name, s.s_name), 6) AS similarity
-  FROM q CROSS JOIN supplier s)
-SELECT c_name, s_name, similarity FROM (
-  SELECT c_name, s_name, similarity,
-         row_number() OVER (PARTITION BY c_name
-                            ORDER BY similarity DESC, s_name ASC) AS rn
-  FROM scored) WHERE rn = 1
-"""
-
-QUERIES["jw_best_match"] = q_jw_best_match
-ORACLES["jw_best_match"] = ORACLE_JW_BEST_MATCH
-
-
-def q_tfidf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lexical similarity search (operators.tfidf.tfidf_cosine_topk):
-    top-5 most-similar documents for 20 probes under sparse TF-IDF
-    cosine — inverted-index candidate join (probe postings broadcast),
-    order-free scaled-integer dot products, exact-integer norms."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.tfidf import (
-        tfidf_cosine_topk,
-    )
-
-    d = load_table(spark, sf_dir, "documents")
-    out = tfidf_cosine_topk(d, probe_max_id=20, k=5)
-    return out.select(
-        "q_id", "doc_id", "similarity", F.col("rank").cast("long").alias("rank")
-    )
-
-
-ORACLE_TFIDF_COSINE = """
+@query(oracle="""
 WITH toks AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
 tf AS (
@@ -7001,15 +6236,33 @@ SELECT q_id, doc_id, similarity, rank FROM (
          CAST(row_number() OVER (
            PARTITION BY q_id ORDER BY similarity DESC, doc_id ASC) AS BIGINT) AS rank
   FROM scored) WHERE rank <= 5
-"""
+""")
+def q_tfidf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lexical similarity search (operators.tfidf.tfidf_cosine_topk):
+    top-5 most-similar documents for 20 probes under sparse TF-IDF
+    cosine — inverted-index candidate join (probe postings broadcast),
+    order-free scaled-integer dot products, exact-integer norms."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.tfidf import (
+        tfidf_cosine_topk,
+    )
 
-QUERIES["tfidf_cosine_topk"] = q_tfidf_cosine_topk
-ORACLES["tfidf_cosine_topk"] = ORACLE_TFIDF_COSINE
+    d = load_table(spark, sf_dir, "documents")
+    out = tfidf_cosine_topk(d, probe_max_id=20, k=5)
+    return out.select(
+        "q_id", "doc_id", "similarity", F.col("rank").cast("long").alias("rank")
+    )
 
 
 # -------------------------------- batch: Spark 4 SQL-surface completions
 
 
+@query(oracle="""
+SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
+FROM events
+WHERE value >= 50.0 AND event_type != 'error'
+GROUP BY event_type
+""")
 def q_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Named-parameter SQL binding (``spark.sql(..., args=...)``) —
     the injection-safe form of the reference's f-string DML assembly
@@ -7028,18 +6281,6 @@ def q_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PARAMETERIZED = """
-SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
-FROM events
-WHERE value >= 50.0 AND event_type != 'error'
-GROUP BY event_type
-"""
-
-QUERIES["parameterized_sql"] = q_parameterized_sql
-ORACLES["parameterized_sql"] = ORACLE_PARAMETERIZED
-
-
 _LATERAL_ALIAS_SQL = """
 SELECT l_returnflag,
        CAST(SUM(CAST(round(disc_price * 100) AS BIGINT)) AS BIGINT) AS disc_cents,
@@ -7054,6 +6295,7 @@ GROUP BY l_returnflag
 """
 
 
+@query(oracle=_LATERAL_ALIAS_SQL)
 def q_lateral_alias_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lateral column aliases (Spark 3.4+/ANSI): ``charge`` is defined
     from ``disc_price`` in the SAME select list — the chained derived-
@@ -7064,10 +6306,10 @@ def q_lateral_alias_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_LATERAL_ALIAS_SQL)
 
 
-QUERIES["lateral_alias_pricing"] = q_lateral_alias_pricing
-ORACLES["lateral_alias_pricing"] = _LATERAL_ALIAS_SQL
-
-
+@query(oracle="""
+SELECT CAST(COUNT(*) AS BIGINT) AS n_first_half
+FROM orders WHERE month(o_orderdate) <= 6
+""")
 def q_sql_script_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL scripting (Spark 4 ``BEGIN…END``): a WHILE loop accumulates
     first-half-year order counts via scalar subqueries into a session
@@ -7092,15 +6334,13 @@ def q_sql_script_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SQL_SCRIPT = """
-SELECT CAST(COUNT(*) AS BIGINT) AS n_first_half
-FROM orders WHERE month(o_orderdate) <= 6
-"""
-
-QUERIES["sql_script_rollup"] = q_sql_script_rollup
-ORACLES["sql_script_rollup"] = ORACLE_SQL_SCRIPT
-
-
+@query(oracle="""
+SELECT CAST(COUNT(*) AS BIGINT) AS n_total,
+       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents,
+       CAST(COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT)
+         AS n_purchases
+FROM events
+""")
 def q_observed_scan_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Observation API (``df.observe``): audit metrics piggyback on the
     SAME pass that filters the data — total rows and total cents are
@@ -7126,18 +6366,11 @@ def q_observed_scan_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_OBSERVED = """
-SELECT CAST(COUNT(*) AS BIGINT) AS n_total,
-       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents,
-       CAST(COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT)
-         AS n_purchases
+@query(oracle="""
+SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact,
+       TRUE AS merged_consistent, TRUE AS within_error
 FROM events
-"""
-
-QUERIES["observed_scan_metrics"] = q_observed_scan_metrics
-ORACLES["observed_scan_metrics"] = ORACLE_OBSERVED
-
-
+""")
 def q_hll_sketch_mergeability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DataSketches HLL surface (Spark 4 ``hll_sketch_agg`` /
     ``hll_union_agg``): per-type sketches UNION-merge to the same
@@ -7170,16 +6403,34 @@ def q_hll_sketch_mergeability(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_HLL = """
-SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact,
-       TRUE AS merged_consistent, TRUE AS within_error
-FROM events
-"""
-
-QUERIES["hll_sketch_mergeability"] = q_hll_sketch_mergeability
-ORACLES["hll_sketch_mergeability"] = ORACLE_HLL
-
-
+@query(oracle="""
+WITH n AS (
+  SELECT doc_id,
+         trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
+                             ' +', ' ', 'g')) AS norm_text
+  FROM documents),
+d AS (
+  SELECT doc_id, md5(norm_text) AS fp,
+         CAST(len(string_split(norm_text, ' ')) AS BIGINT) AS n_tok
+  FROM n),
+keep AS (
+  SELECT doc_id, n_tok FROM (
+    SELECT d.*, row_number() OVER (PARTITION BY fp ORDER BY doc_id ASC) AS rn
+    FROM d) WHERE rn = 1),
+c AS (
+  SELECT doc_id, n_tok,
+         COALESCE(SUM(n_tok) OVER (
+           ORDER BY substr(md5('pack' || chr(31) || CAST(doc_id AS VARCHAR)), 1, 16),
+                    doc_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start
+  FROM keep)
+SELECT CAST(start // 256 AS BIGINT) AS bin_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
+       CAST(COUNT(CASE WHEN start // 256
+                       != (start + greatest(n_tok - 1, 0)) // 256 THEN 1 END)
+            AS BIGINT) AS n_spanning
+FROM c GROUP BY 1
+""")
 def q_corpus_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end training-data materialization: normalize →
     canonical-fingerprint exact dedup (keep smallest doc_id) →
@@ -7221,39 +6472,13 @@ def q_corpus_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CORPUS_PACK = """
-WITH n AS (
-  SELECT doc_id,
-         trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
-                             ' +', ' ', 'g')) AS norm_text
-  FROM documents),
-d AS (
-  SELECT doc_id, md5(norm_text) AS fp,
-         CAST(len(string_split(norm_text, ' ')) AS BIGINT) AS n_tok
-  FROM n),
-keep AS (
-  SELECT doc_id, n_tok FROM (
-    SELECT d.*, row_number() OVER (PARTITION BY fp ORDER BY doc_id ASC) AS rn
-    FROM d) WHERE rn = 1),
-c AS (
-  SELECT doc_id, n_tok,
-         COALESCE(SUM(n_tok) OVER (
-           ORDER BY substr(md5('pack' || chr(31) || CAST(doc_id AS VARCHAR)), 1, 16),
-                    doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start
-  FROM keep)
-SELECT CAST(start // 256 AS BIGINT) AS bin_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
-       CAST(COUNT(CASE WHEN start // 256
-                       != (start + greatest(n_tok - 1, 0)) // 256 THEN 1 END)
-            AS BIGINT) AS n_spanning
-FROM c GROUP BY 1
-"""
-
-QUERIES["corpus_pack_pipeline"] = q_corpus_pack_pipeline
-ORACLES["corpus_pack_pipeline"] = ORACLE_CORPUS_PACK
-
-
+@query(oracle="""
+SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS n_lines,
+       CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS qty_cents,
+       CAST(MIN(l_linenumber) AS BIGINT) AS first_line,
+       CAST(MAX(l_linenumber) AS BIGINT) AS last_line
+FROM lineitem GROUP BY l_orderkey
+""")
 def q_nested_rebuild_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested-collection surface: each order's lineitems are rebuilt
     as an array<struct> document (``array_sort(collect_list(...))`` —
@@ -7289,18 +6514,23 @@ def q_nested_rebuild_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_NESTED_REBUILD = """
-SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS n_lines,
-       CAST(SUM(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS qty_cents,
-       CAST(MIN(l_linenumber) AS BIGINT) AS first_line,
-       CAST(MAX(l_linenumber) AS BIGINT) AS last_line
-FROM lineitem GROUP BY l_orderkey
-"""
-
-QUERIES["nested_rebuild_roundtrip"] = q_nested_rebuild_roundtrip
-ORACLES["nested_rebuild_roundtrip"] = ORACLE_NESTED_REBUILD
-
-
+@query(oracle="""
+WITH g AS (
+  SELECT source,
+         CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT)
+           AS n_tokens
+  FROM documents GROUP BY 1),
+w AS (
+  SELECT source, n_tokens,
+         CAST(round(sqrt(CAST(n_tokens AS DOUBLE)) * 1000000) AS BIGINT) AS wi
+  FROM g),
+m AS (SELECT MAX(CAST(wi AS DOUBLE) / n_tokens) AS max_ratio FROM w)
+SELECT w.source, w.n_tokens,
+       round((CAST(w.wi AS DOUBLE) / w.n_tokens) / m.max_ratio, 6) AS accept_prob,
+       CAST(floor(w.n_tokens * round((CAST(w.wi AS DOUBLE) / w.n_tokens) / m.max_ratio, 6))
+            AS BIGINT) AS expected_tokens
+FROM w CROSS JOIN m
+""")
 def q_resampling_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixture APPLY step (operators.sampling.resampling_plan):
     per-source accept probabilities that move the corpus toward the
@@ -7317,28 +6547,6 @@ def q_resampling_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_RESAMPLING = """
-WITH g AS (
-  SELECT source,
-         CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT)
-           AS n_tokens
-  FROM documents GROUP BY 1),
-w AS (
-  SELECT source, n_tokens,
-         CAST(round(sqrt(CAST(n_tokens AS DOUBLE)) * 1000000) AS BIGINT) AS wi
-  FROM g),
-m AS (SELECT MAX(CAST(wi AS DOUBLE) / n_tokens) AS max_ratio FROM w)
-SELECT w.source, w.n_tokens,
-       round((CAST(w.wi AS DOUBLE) / w.n_tokens) / m.max_ratio, 6) AS accept_prob,
-       CAST(floor(w.n_tokens * round((CAST(w.wi AS DOUBLE) / w.n_tokens) / m.max_ratio, 6))
-            AS BIGINT) AS expected_tokens
-FROM w CROSS JOIN m
-"""
-
-QUERIES["resampling_plan"] = q_resampling_plan
-ORACLES["resampling_plan"] = ORACLE_RESAMPLING
-
-
 _Q19_SQL = """
 SELECT CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT)
          AS revenue_cents,
@@ -7350,6 +6558,7 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 
 """
 
 
+@query(oracle=_Q19_SQL)
 def q_disjunctive_predicate_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape — an OR of AND-groups spanning BOTH join sides:
     the optimizer must split the disjunction into the per-side
@@ -7360,10 +6569,6 @@ def q_disjunctive_predicate_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load_table(spark, sf_dir, "part").createOrReplaceTempView("part")
     return spark.sql(_Q19_SQL)
-
-
-QUERIES["disjunctive_predicate_join"] = q_disjunctive_predicate_join
-ORACLES["disjunctive_predicate_join"] = _Q19_SQL
 
 
 _Q17_SQL = """
@@ -7378,6 +6583,7 @@ WHERE p.p_brand = 'Brand#1'
 """
 
 
+@query(oracle=_Q17_SQL)
 def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape — CORRELATED scalar aggregate subqueries in the
     WHERE (per-part average quantity): Catalyst decorrelates each into
@@ -7388,10 +6594,6 @@ def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     load_table(spark, sf_dir, "part").createOrReplaceTempView("part")
     return spark.sql(_Q17_SQL)
-
-
-QUERIES["small_quantity_revenue"] = q_small_quantity_revenue
-ORACLES["small_quantity_revenue"] = _Q17_SQL
 
 
 _Q8_SQL = """
@@ -7416,6 +6618,7 @@ FROM vol GROUP BY o_year
 """
 
 
+@query(oracle=_Q8_SQL)
 def q_market_share_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape — six-table star with a conditional-share
     ratio: one nation's volume over total volume per order year
@@ -7427,10 +6630,28 @@ def q_market_share_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_Q8_SQL)
 
 
-QUERIES["market_share_ratio"] = q_market_share_ratio
-ORACLES["market_share_ratio"] = _Q8_SQL
-
-
+@query(oracle="""
+WITH base AS (
+  SELECT source, lang, md5(text) AS fp,
+         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+  FROM documents),
+per AS (
+  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+         CAST(SUM(n_tok) AS BIGINT) AS total_tokens,
+         CAST(COUNT(DISTINCT fp) AS BIGINT) AS n_unique
+  FROM base GROUP BY 1),
+sl AS (SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n FROM base GROUP BY 1, 2),
+ent AS (
+  SELECT s.source, CAST(COUNT(*) AS BIGINT) AS n_langs,
+         CAST(SUM(CAST(round(-(s.n*1.0/p.n_docs) * ln(s.n*1.0/p.n_docs) * 1000000)
+                  AS BIGINT)) AS BIGINT) AS entropy_micro_nats
+  FROM sl s JOIN per p USING (source) GROUP BY 1)
+SELECT p.source, p.n_docs, p.total_tokens,
+       round(1.0 - CAST(p.n_unique AS DOUBLE) / p.n_docs, 6) AS dup_rate,
+       round(CAST(p.total_tokens AS DOUBLE) / p.n_docs, 6) AS avg_doc_tokens,
+       e.n_langs, e.entropy_micro_nats
+FROM per p JOIN ent e USING (source)
+""")
 def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source dataset card — the summary table published with a
     training corpus: volume (docs/tokens), exact-duplicate rate
@@ -7480,33 +6701,25 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DATASET_CARD = """
-WITH base AS (
-  SELECT source, lang, md5(text) AS fp,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-  FROM documents),
-per AS (
-  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(n_tok) AS BIGINT) AS total_tokens,
-         CAST(COUNT(DISTINCT fp) AS BIGINT) AS n_unique
-  FROM base GROUP BY 1),
-sl AS (SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n FROM base GROUP BY 1, 2),
-ent AS (
-  SELECT s.source, CAST(COUNT(*) AS BIGINT) AS n_langs,
-         CAST(SUM(CAST(round(-(s.n*1.0/p.n_docs) * ln(s.n*1.0/p.n_docs) * 1000000)
-                  AS BIGINT)) AS BIGINT) AS entropy_micro_nats
-  FROM sl s JOIN per p USING (source) GROUP BY 1)
-SELECT p.source, p.n_docs, p.total_tokens,
-       round(1.0 - CAST(p.n_unique AS DOUBLE) / p.n_docs, 6) AS dup_rate,
-       round(CAST(p.total_tokens AS DOUBLE) / p.n_docs, 6) AS avg_doc_tokens,
-       e.n_langs, e.entropy_micro_nats
-FROM per p JOIN ent e USING (source)
-"""
-
-QUERIES["dataset_card"] = q_dataset_card
-ORACLES["dataset_card"] = ORACLE_DATASET_CARD
-
-
+@query(oracle="""
+WITH hourly AS (
+  SELECT event_type, date_trunc('hour', ts) AS hr, CAST(COUNT(*) AS BIGINT) AS n
+  FROM events GROUP BY 1, 2),
+mom AS (
+  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_hours,
+         CAST(SUM(n) AS BIGINT) AS s1, CAST(SUM(n*n) AS BIGINT) AS s2
+  FROM hourly GROUP BY 1)
+SELECT h.event_type, epoch_us(h.hr) AS hour_us, h.n,
+       round((h.n - CAST(m.s1 AS DOUBLE)/m.n_hours)
+             / sqrt(greatest(CAST(m.s2 AS DOUBLE)/m.n_hours
+                    - (CAST(m.s1 AS DOUBLE)/m.n_hours)*(CAST(m.s1 AS DOUBLE)/m.n_hours),
+                    1e-12)), 6) AS z
+FROM hourly h JOIN mom m USING (event_type)
+WHERE abs((h.n - CAST(m.s1 AS DOUBLE)/m.n_hours)
+      / sqrt(greatest(CAST(m.s2 AS DOUBLE)/m.n_hours
+             - (CAST(m.s1 AS DOUBLE)/m.n_hours)*(CAST(m.s1 AS DOUBLE)/m.n_hours),
+             1e-12))) > 2.0
+""")
 def q_event_rate_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rate-spike monitoring (the set-oriented form of the reference's
     monitor.sh watchdog, ``src/monitor.sh:12-24``): hourly event
@@ -7552,30 +6765,15 @@ def q_event_rate_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EVENT_ANOMALIES = """
-WITH hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS hr, CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2),
-mom AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_hours,
-         CAST(SUM(n) AS BIGINT) AS s1, CAST(SUM(n*n) AS BIGINT) AS s2
-  FROM hourly GROUP BY 1)
-SELECT h.event_type, epoch_us(h.hr) AS hour_us, h.n,
-       round((h.n - CAST(m.s1 AS DOUBLE)/m.n_hours)
-             / sqrt(greatest(CAST(m.s2 AS DOUBLE)/m.n_hours
-                    - (CAST(m.s1 AS DOUBLE)/m.n_hours)*(CAST(m.s1 AS DOUBLE)/m.n_hours),
-                    1e-12)), 6) AS z
-FROM hourly h JOIN mom m USING (event_type)
-WHERE abs((h.n - CAST(m.s1 AS DOUBLE)/m.n_hours)
-      / sqrt(greatest(CAST(m.s2 AS DOUBLE)/m.n_hours
-             - (CAST(m.s1 AS DOUBLE)/m.n_hours)*(CAST(m.s1 AS DOUBLE)/m.n_hours),
-             1e-12))) > 2.0
-"""
-
-QUERIES["event_rate_anomalies"] = q_event_rate_anomalies
-ORACLES["event_rate_anomalies"] = ORACLE_EVENT_ANOMALIES
-
-
+# compose by nesting the verified clustering oracle unchanged
+@query(oracle=f"""
+WITH sizes AS (
+  SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
+  FROM ({ORACLE_DEDUP_CLUSTERS}) GROUP BY 1)
+SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters,
+       CAST(SUM(cluster_size) AS BIGINT) AS n_docs
+FROM sizes GROUP BY 1
+""")
 def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster-size distribution — the "how much will dedup
     save" report (docs in size-k clusters shed k-1 copies each):
@@ -7599,20 +6797,30 @@ def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# compose by nesting the verified clustering oracle unchanged
-ORACLE_DEDUP_CLUSTER_STATS = f"""
-WITH sizes AS (
-  SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
-  FROM ({ORACLE_DEDUP_CLUSTERS}) GROUP BY 1)
-SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters,
-       CAST(SUM(cluster_size) AS BIGINT) AS n_docs
-FROM sizes GROUP BY 1
-"""
-
-QUERIES["dedup_cluster_stats"] = q_dedup_cluster_stats
-ORACLES["dedup_cluster_stats"] = ORACLE_DEDUP_CLUSTER_STATS
-
-
+# Models the three-batch replay: phases 1–2 (md5 prefix ≤ 'aaaaaaaa')
+# all counted — the late filter lags the watermark by one batch, so
+# batch 2 still filters against the pre-run watermark 0; phase 3 is
+# counted only where the hourly window END outlives the watermark
+# phase 1 advanced — floor_ms(max phase-1 ts) − 2 h, the ms-truncation
+# convention (epoch_us // 1000 * 1000).
+@query(oracle="""
+WITH p AS (
+  SELECT ts, event_type,
+         substr(md5('umh' || chr(31) || CAST(event_id AS VARCHAR)), 1, 8) AS h
+  FROM events WHERE event_id IS NOT NULL),
+w1 AS (
+  SELECT (epoch_us(MAX(ts)) // 1000) * 1000 - 7200000000 AS w1_us
+  FROM p WHERE h <= '55555555'),
+kept AS (
+  SELECT ts, event_type FROM p WHERE h <= 'aaaaaaaa'
+  UNION ALL
+  SELECT p.ts, p.event_type FROM p, w1
+  WHERE p.h > 'aaaaaaaa'
+    AND epoch_us(date_trunc('hour', p.ts)) + 3600000000 > w1.w1_us)
+SELECT epoch_us(date_trunc('hour', ts)) AS window_start_us, event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_events
+FROM kept GROUP BY 1, 2
+""")
 def q_stream_update_merge_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UPDATE-mode streaming hourly counts per event type across THREE
     micro-batches with a genuinely advancing watermark
@@ -7655,35 +6863,12 @@ def q_stream_update_merge_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Models the three-batch replay: phases 1–2 (md5 prefix ≤ 'aaaaaaaa')
-# all counted — the late filter lags the watermark by one batch, so
-# batch 2 still filters against the pre-run watermark 0; phase 3 is
-# counted only where the hourly window END outlives the watermark
-# phase 1 advanced — floor_ms(max phase-1 ts) − 2 h, the ms-truncation
-# convention (epoch_us // 1000 * 1000).
-ORACLE_STREAM_UPDATE_MERGE = """
-WITH p AS (
-  SELECT ts, event_type,
-         substr(md5('umh' || chr(31) || CAST(event_id AS VARCHAR)), 1, 8) AS h
-  FROM events WHERE event_id IS NOT NULL),
-w1 AS (
-  SELECT (epoch_us(MAX(ts)) // 1000) * 1000 - 7200000000 AS w1_us
-  FROM p WHERE h <= '55555555'),
-kept AS (
-  SELECT ts, event_type FROM p WHERE h <= 'aaaaaaaa'
-  UNION ALL
-  SELECT p.ts, p.event_type FROM p, w1
-  WHERE p.h > 'aaaaaaaa'
-    AND epoch_us(date_trunc('hour', p.ts)) + 3600000000 > w1.w1_us)
-SELECT epoch_us(date_trunc('hour', ts)) AS window_start_us, event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events
-FROM kept GROUP BY 1, 2
-"""
-
-QUERIES["stream_update_merge_hourly"] = q_stream_update_merge_hourly
-ORACLES["stream_update_merge_hourly"] = ORACLE_STREAM_UPDATE_MERGE
-
-
+@query(oracle="""
+SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(1 AS BIGINT) AS n_files,
+       CAST(COUNT(*) - 1 AS BIGINT) AS max_row_index
+FROM events GROUP BY event_type
+""")
 def q_file_metadata_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hidden ``_metadata`` file columns (Spark ≥3.4 file sources):
     per-file lineage/audit without a manifest table — file name,
@@ -7712,17 +6897,15 @@ def q_file_metadata_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_FILE_METADATA = """
-SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(1 AS BIGINT) AS n_files,
-       CAST(COUNT(*) - 1 AS BIGINT) AS max_row_index
-FROM events GROUP BY event_type
-"""
-
-QUERIES["file_metadata_audit"] = q_file_metadata_audit
-ORACLES["file_metadata_audit"] = ORACLE_FILE_METADATA
-
-
+@query(oracle="""
+WITH mixed AS (
+  SELECT CASE WHEN p_partkey % 2 = 0 THEN upper(p_brand)
+              ELSE lower(p_brand) END AS brand_mixed
+  FROM part)
+SELECT MIN(brand_mixed) AS brand, CAST(COUNT(*) AS BIGINT) AS n_parts
+FROM mixed
+GROUP BY lower(brand_mixed)
+""")
 def q_collated_brand_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String collations (Spark 4): case-insensitive grouping via
     ``COLLATE(expr, 'UTF8_LCASE')`` — the engine-level answer to the
@@ -7747,23 +6930,32 @@ def q_collated_brand_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_COLLATED_BRANDS = """
-WITH mixed AS (
-  SELECT CASE WHEN p_partkey % 2 = 0 THEN upper(p_brand)
-              ELSE lower(p_brand) END AS brand_mixed
-  FROM part)
-SELECT MIN(brand_mixed) AS brand, CAST(COUNT(*) AS BIGINT) AS n_parts
-FROM mixed
-GROUP BY lower(brand_mixed)
-"""
-
-QUERIES["collated_brand_counts"] = q_collated_brand_counts
-ORACLES["collated_brand_counts"] = ORACLE_COLLATED_BRANDS
-
-
 # ----------------- round 5: restart replay + semantic decontamination
 
 
+# Two-phase emission rule, ms-truncated watermarks (session-oracle
+# convention): phase-2 rows whose window END ≤ W1 are late-dropped;
+# the union of both runs' emissions is every window with end ≤ W2
+# computed over the surviving rows.
+@query(oracle="""
+WITH w1 AS (
+  SELECT (epoch_us(max(ts)) // 1000) * 1000 - 1800000000 AS v
+  FROM events WHERE user_id % 2 = 0),
+w2 AS (
+  SELECT (epoch_us(max(ts)) // 1000) * 1000 - 1800000000 AS v FROM events),
+kept AS (
+  SELECT e.* FROM events e, w1
+  WHERE user_id % 2 = 0
+     OR epoch_us(date_trunc('hour', ts) + INTERVAL 1 HOUR) > w1.v
+)
+SELECT epoch_us(date_trunc('hour', ts)) AS window_start_us, event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0
+         AS sum_value
+FROM kept, w2
+GROUP BY 1, 2, w2.v
+HAVING epoch_us(date_trunc('hour', min(ts)) + INTERVAL 1 HOUR) <= w2.v
+""")
 def q_stream_restart_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """APPEND-mode hourly counts across a checkpoint RESTART with a
     genuinely advancing watermark (streaming.windowed.
@@ -7798,56 +6990,6 @@ def q_stream_restart_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "sum_value",
     )
-
-
-# Two-phase emission rule, ms-truncated watermarks (session-oracle
-# convention): phase-2 rows whose window END ≤ W1 are late-dropped;
-# the union of both runs' emissions is every window with end ≤ W2
-# computed over the surviving rows.
-ORACLE_STREAM_RESTART = """
-WITH w1 AS (
-  SELECT (epoch_us(max(ts)) // 1000) * 1000 - 1800000000 AS v
-  FROM events WHERE user_id % 2 = 0),
-w2 AS (
-  SELECT (epoch_us(max(ts)) // 1000) * 1000 - 1800000000 AS v FROM events),
-kept AS (
-  SELECT e.* FROM events e, w1
-  WHERE user_id % 2 = 0
-     OR epoch_us(date_trunc('hour', ts) + INTERVAL 1 HOUR) > w1.v
-)
-SELECT epoch_us(date_trunc('hour', ts)) AS window_start_us, event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0
-         AS sum_value
-FROM kept, w2
-GROUP BY 1, 2, w2.v
-HAVING epoch_us(date_trunc('hour', min(ts)) + INTERVAL 1 HOUR) <= w2.v
-"""
-
-QUERIES["stream_restart_hourly"] = q_stream_restart_hourly
-ORACLES["stream_restart_hourly"] = ORACLE_STREAM_RESTART
-
-
-def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space train/test decontamination
-    (operators.similarity.semantic_decontamination): every 20th vector
-    plays the held-out eval benchmark; corpus vectors within cosine
-    0.3 of any eval vector — found through the integer-exact sign-LSH
-    multi-probe blocks, never an all-pairs join — are flagged with
-    their best eval match. The semantic complement of the n-gram
-    ``decontamination_flags`` query (paraphrases share no 8-gram but
-    sit next to the benchmark item in embedding space)."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
-        semantic_decontamination,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    eval_set = emb.filter(F.col("vec_id") % 20 == 0).select(
-        F.col("vec_id").alias("eval_id"), F.col("embedding").alias("eval_emb")
-    )
-    corpus = emb.filter(F.col("vec_id") % 20 != 0)
-    out = semantic_decontamination(corpus, eval_set, threshold=0.3)
-    return out.select("vec_id", "eval_id", "similarity")
 
 
 def _oracle_semantic_decontamination() -> str:
@@ -7904,10 +7046,44 @@ SELECT vec_id, eval_id, similarity FROM (
 """
 
 
-QUERIES["semantic_decontamination"] = q_semantic_decontamination
-ORACLES["semantic_decontamination"] = _oracle_semantic_decontamination()
+@query(oracle=_oracle_semantic_decontamination())
+def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-space train/test decontamination
+    (operators.similarity.semantic_decontamination): every 20th vector
+    plays the held-out eval benchmark; corpus vectors within cosine
+    0.3 of any eval vector — found through the integer-exact sign-LSH
+    multi-probe blocks, never an all-pairs join — are flagged with
+    their best eval match. The semantic complement of the n-gram
+    ``decontamination_flags`` query (paraphrases share no 8-gram but
+    sit next to the benchmark item in embedding space)."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
+        semantic_decontamination,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    eval_set = emb.filter(F.col("vec_id") % 20 == 0).select(
+        F.col("vec_id").alias("eval_id"), F.col("embedding").alias("eval_emb")
+    )
+    corpus = emb.filter(F.col("vec_id") % 20 != 0)
+    out = semantic_decontamination(corpus, eval_set, threshold=0.3)
+    return out.select("vec_id", "eval_id", "similarity")
 
 
+@query(oracle="""
+SELECT n.n_name AS nation,
+       CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
+       CAST(SUM(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)
+                - CAST(round(p.p_retailprice * l.l_quantity) AS BIGINT)) AS BIGINT)
+         / 100.0 AS profit,
+       CAST(COUNT(*) AS BIGINT) AS n_lines
+FROM lineitem l
+JOIN part p ON l.l_partkey = p.p_partkey
+JOIN supplier s ON l.l_suppkey = s.s_suppkey
+JOIN nation n ON s.s_nationkey = n.n_nationkey
+JOIN orders o ON l.l_orderkey = o.o_orderkey
+WHERE p.p_name LIKE '%a%e%'
+GROUP BY 1, 2
+""")
 def q_product_profit_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape (no partsupp table in the lake, so supply cost
     is proxied as 1% of p_retailprice per unit): profit by supplier
@@ -7944,26 +7120,20 @@ def q_product_profit_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q9_SHAPE = """
-SELECT n.n_name AS nation,
-       CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
-       CAST(SUM(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)
-                - CAST(round(p.p_retailprice * l.l_quantity) AS BIGINT)) AS BIGINT)
-         / 100.0 AS profit,
-       CAST(COUNT(*) AS BIGINT) AS n_lines
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE p.p_name LIKE '%a%e%'
-GROUP BY 1, 2
-"""
-
-QUERIES["product_profit_rollup"] = q_product_profit_rollup
-ORACLES["product_profit_rollup"] = ORACLE_Q9_SHAPE
-
-
+@query(oracle="""
+WITH rev AS (
+  SELECT l_suppkey,
+         CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
+              AS BIGINT) AS rev_cents
+  FROM lineitem
+  WHERE l_shipdate >= TIMESTAMP '1995-01-01'
+    AND l_shipdate < TIMESTAMP '1995-04-01'
+  GROUP BY 1)
+SELECT CAST(s.s_suppkey AS BIGINT) AS s_suppkey, s.s_name,
+       rev_cents / 100.0 AS total_revenue
+FROM rev JOIN supplier s ON rev.l_suppkey = s.s_suppkey
+WHERE rev_cents = (SELECT max(rev_cents) FROM rev)
+""")
 def q_top_revenue_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: per-supplier quarterly revenue, then the
     supplier(s) achieving the MAX — the view-plus-self-aggregate
@@ -7999,25 +7169,19 @@ def q_top_revenue_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_Q15_SHAPE = """
-WITH rev AS (
-  SELECT l_suppkey,
-         CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
-              AS BIGINT) AS rev_cents
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-    AND l_shipdate < TIMESTAMP '1995-04-01'
+@query(oracle="""
+WITH words AS (
+  SELECT lower(w) AS word, CAST(COUNT(*) AS BIGINT) AS wf
+  FROM documents, unnest(string_split_regex(text, '\\s+')) AS t(w)
+  WHERE regexp_matches(lower(w), '^[a-z]{2,}$')
+  GROUP BY 1),
+pairs AS (
+  SELECT p AS pair, CAST(SUM(wf) AS BIGINT) AS n
+  FROM words, unnest([substr(word, i, 2) FOR i IN range(1, length(word))]) AS t(p)
   GROUP BY 1)
-SELECT CAST(s.s_suppkey AS BIGINT) AS s_suppkey, s.s_name,
-       rev_cents / 100.0 AS total_revenue
-FROM rev JOIN supplier s ON rev.l_suppkey = s.s_suppkey
-WHERE rev_cents = (SELECT max(rev_cents) FROM rev)
-"""
-
-QUERIES["top_revenue_suppliers"] = q_top_revenue_suppliers
-ORACLES["top_revenue_suppliers"] = ORACLE_Q15_SHAPE
-
-
+SELECT pair, n, CAST(row_number() OVER (ORDER BY n DESC, pair ASC) AS BIGINT) AS rank
+FROM pairs QUALIFY rank <= 20
+""")
 def q_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-training prep (operators.text.bpe_merge_pair_counts):
     the corpus-weighted adjacent character-pair counts BPE's first
@@ -8033,24 +7197,26 @@ def q_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_BPE_PAIRS = """
-WITH words AS (
-  SELECT lower(w) AS word, CAST(COUNT(*) AS BIGINT) AS wf
-  FROM documents, unnest(string_split_regex(text, '\\s+')) AS t(w)
-  WHERE regexp_matches(lower(w), '^[a-z]{2,}$')
-  GROUP BY 1),
-pairs AS (
-  SELECT p AS pair, CAST(SUM(wf) AS BIGINT) AS n
-  FROM words, unnest([substr(word, i, 2) FOR i IN range(1, length(word))]) AS t(p)
-  GROUP BY 1)
-SELECT pair, n, CAST(row_number() OVER (ORDER BY n DESC, pair ASC) AS BIGINT) AS rank
-FROM pairs QUALIFY rank <= 20
-"""
-
-QUERIES["bpe_merge_pairs"] = q_bpe_merge_pairs
-ORACLES["bpe_merge_pairs"] = ORACLE_BPE_PAIRS
-
-
+# NULL handling must match Spark's: mode() is a NULL-ignoring
+# aggregate (a NULL-majority group still yields the most frequent
+# NON-NULL value) while COUNT(*) counts every row — so the argmax CTE
+# excludes NULL keys and the row total is carried separately.
+@query(oracle="""
+WITH tot AS (
+  SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events
+  FROM events WHERE user_id < 200 GROUP BY 1),
+c AS (
+  SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS n
+  FROM events WHERE user_id < 200 AND event_type IS NOT NULL
+  GROUP BY 1, 2),
+r AS (
+  SELECT user_id, event_type,
+         row_number() OVER (PARTITION BY user_id
+                            ORDER BY n DESC, event_type ASC) AS rn
+  FROM c)
+SELECT t.user_id, r.event_type AS modal_event, t.n_events
+FROM tot t LEFT JOIN r ON t.user_id = r.user_id AND r.rn = 1
+""")
 def q_user_modal_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic MODE aggregate (Spark 4 ``F.mode(col, True)``):
     each user's most frequent event type, ties broken toward the
@@ -8071,31 +7237,16 @@ def q_user_modal_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# NULL handling must match Spark's: mode() is a NULL-ignoring
-# aggregate (a NULL-majority group still yields the most frequent
-# NON-NULL value) while COUNT(*) counts every row — so the argmax CTE
-# excludes NULL keys and the row total is carried separately.
-ORACLE_USER_MODAL_EVENT = """
-WITH tot AS (
-  SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events
-  FROM events WHERE user_id < 200 GROUP BY 1),
-c AS (
-  SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS n
-  FROM events WHERE user_id < 200 AND event_type IS NOT NULL
-  GROUP BY 1, 2),
-r AS (
-  SELECT user_id, event_type,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY n DESC, event_type ASC) AS rn
-  FROM c)
-SELECT t.user_id, r.event_type AS modal_event, t.n_events
-FROM tot t LEFT JOIN r ON t.user_id = r.user_id AND r.rn = 1
-"""
-
-QUERIES["user_modal_event"] = q_user_modal_event
-ORACLES["user_modal_event"] = ORACLE_USER_MODAL_EVENT
-
-
+@query(oracle="""
+SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_lines,
+       CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
+            AS BIGINT) / 100.0 AS revenue
+FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+WHERE o.o_orderpriority = '1-URGENT'
+  AND o.o_orderdate >= TIMESTAMP '1995-03-01'
+  AND o.o_orderdate < TIMESTAMP '1995-04-01'
+GROUP BY 1
+""")
 def q_bloom_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runtime bloom-filter join (Catalyst's InjectRuntimeFilter):
     when the dim side of a SHUFFLE join carries a selective literal
@@ -8147,21 +7298,37 @@ def q_bloom_filtered_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.set(k, v)
 
 
-ORACLE_BLOOM_JOIN = """
-SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n_lines,
-       CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
-            AS BIGINT) / 100.0 AS revenue
-FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE o.o_orderpriority = '1-URGENT'
-  AND o.o_orderdate >= TIMESTAMP '1995-03-01'
-  AND o.o_orderdate < TIMESTAMP '1995-04-01'
-GROUP BY 1
-"""
-
-QUERIES["bloom_filtered_join"] = q_bloom_filtered_join
-ORACLES["bloom_filtered_join"] = ORACLE_BLOOM_JOIN
-
-
+@query(oracle="""
+WITH l AS (
+  SELECT user_id, event_id AS left_id, ts AS left_ts
+  FROM events WHERE event_type = 'click'),
+r AS (
+  SELECT user_id, event_id AS right_id, ts AS right_ts, value AS right_value
+  FROM events WHERE event_type = 'purchase'),
+wm AS (
+  SELECT least(
+    (SELECT (epoch_us(max(ts)) // 1000) * 1000 FROM events
+      WHERE event_type = 'click'),
+    (SELECT (epoch_us(max(ts)) // 1000) * 1000 FROM events
+      WHERE event_type = 'purchase')) - 7200000000 AS v),
+j AS (
+  SELECT l.user_id, l.left_id, l.left_ts,
+         r.right_id, r.right_value
+  FROM l LEFT JOIN r
+    ON l.user_id = r.user_id
+   AND r.right_ts >= l.left_ts
+   AND r.right_ts <= l.left_ts + INTERVAL 30 MINUTE),
+emitted AS (
+  SELECT * FROM j, wm
+  WHERE right_id IS NOT NULL
+     OR epoch_us(left_ts + INTERVAL 30 MINUTE) < wm.v)
+SELECT user_id,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(count_if(right_id IS NULL) AS BIGINT) AS n_unmatched,
+       CAST(SUM(CAST(round(coalesce(right_value, 0.0) * 10000) AS BIGINT))
+            AS BIGINT) / 10000.0 AS attributed_value
+FROM emitted GROUP BY 1
+""")
 def q_stream_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER stream-stream join executed as a real streaming job
     (streaming.joins.attribution_outer_join_once): clicks with no
@@ -8194,42 +7361,27 @@ def q_stream_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_OUTER_ATTRIBUTION = """
-WITH l AS (
-  SELECT user_id, event_id AS left_id, ts AS left_ts
-  FROM events WHERE event_type = 'click'),
-r AS (
-  SELECT user_id, event_id AS right_id, ts AS right_ts, value AS right_value
-  FROM events WHERE event_type = 'purchase'),
-wm AS (
+@query(oracle="""
+WITH wm AS (
   SELECT least(
     (SELECT (epoch_us(max(ts)) // 1000) * 1000 FROM events
       WHERE event_type = 'click'),
     (SELECT (epoch_us(max(ts)) // 1000) * 1000 FROM events
-      WHERE event_type = 'purchase')) - 7200000000 AS v),
+      WHERE event_type = 'purchase')) - 7200000000 - 1800000000 AS v),
 j AS (
-  SELECT l.user_id, l.left_id, l.left_ts,
-         r.right_id, r.right_value
-  FROM l LEFT JOIN r
-    ON l.user_id = r.user_id
-   AND r.right_ts >= l.left_ts
-   AND r.right_ts <= l.left_ts + INTERVAL 30 MINUTE),
-emitted AS (
-  SELECT * FROM j, wm
-  WHERE right_id IS NOT NULL
-     OR epoch_us(left_ts + INTERVAL 30 MINUTE) < wm.v)
-SELECT user_id,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(count_if(right_id IS NULL) AS BIGINT) AS n_unmatched,
-       CAST(SUM(CAST(round(coalesce(right_value, 0.0) * 10000) AS BIGINT))
-            AS BIGINT) / 10000.0 AS attributed_value
-FROM emitted GROUP BY 1
-"""
-
-QUERIES["stream_outer_attribution"] = q_stream_outer_attribution
-ORACLES["stream_outer_attribution"] = ORACLE_STREAM_OUTER_ATTRIBUTION
-
-
+  SELECT p.ts AS right_ts, p.value AS right_value
+  FROM events c JOIN events p
+    ON c.user_id = p.user_id
+   AND c.event_type = 'click' AND p.event_type = 'purchase'
+   AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE)
+SELECT epoch_us(date_trunc('hour', right_ts)) AS window_start_us,
+       CAST(COUNT(*) AS BIGINT) AS n_attributed,
+       CAST(SUM(CAST(round(right_value * 10000) AS BIGINT)) AS BIGINT)
+         / 10000.0 AS attributed_value
+FROM j, wm
+GROUP BY 1, wm.v
+HAVING epoch_us(date_trunc('hour', min(right_ts)) + INTERVAL 1 HOUR) <= wm.v
+""")
 def q_stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chained stateful operators in one streaming query
     (streaming.joins.chained_join_window_once): stream-stream
@@ -8254,32 +7406,12 @@ def q_stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_JOIN_THEN_WINDOW = """
-WITH wm AS (
-  SELECT least(
-    (SELECT (epoch_us(max(ts)) // 1000) * 1000 FROM events
-      WHERE event_type = 'click'),
-    (SELECT (epoch_us(max(ts)) // 1000) * 1000 FROM events
-      WHERE event_type = 'purchase')) - 7200000000 - 1800000000 AS v),
-j AS (
-  SELECT p.ts AS right_ts, p.value AS right_value
-  FROM events c JOIN events p
-    ON c.user_id = p.user_id
-   AND c.event_type = 'click' AND p.event_type = 'purchase'
-   AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE)
-SELECT epoch_us(date_trunc('hour', right_ts)) AS window_start_us,
-       CAST(COUNT(*) AS BIGINT) AS n_attributed,
-       CAST(SUM(CAST(round(right_value * 10000) AS BIGINT)) AS BIGINT)
-         / 10000.0 AS attributed_value
-FROM j, wm
-GROUP BY 1, wm.v
-HAVING epoch_us(date_trunc('hour', min(right_ts)) + INTERVAL 1 HOUR) <= wm.v
-"""
-
-QUERIES["stream_join_then_window"] = q_stream_join_then_window
-ORACLES["stream_join_then_window"] = ORACLE_STREAM_JOIN_THEN_WINDOW
-
-
+@query(oracle="""
+SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0
+         AS revenue
+FROM orders GROUP BY 1
+""")
 def q_pyds_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom Python DataSource WRITER (Spark 4 API,
     sources.pyds.JsonlAuditDataSource): the per-priority order audit
@@ -8324,17 +7456,14 @@ def q_pyds_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result
 
 
-ORACLE_PYDS_WRITER = """
-SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0
-         AS revenue
-FROM orders GROUP BY 1
-"""
-
-QUERIES["pyds_writer_roundtrip"] = q_pyds_writer_roundtrip
-ORACLES["pyds_writer_roundtrip"] = ORACLE_PYDS_WRITER
-
-
+@query(oracle="""
+SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n_rich,
+       CAST(SUM(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT) / 100.0
+         AS total_balance
+FROM customer
+WHERE c_acctbal > 1000.0 AND c_mktsegment != 'MACHINERY'
+GROUP BY 1
+""")
 def q_sql_variables_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL session variables + EXECUTE IMMEDIATE (Spark 4): thresholds
     DECLAREd and SET as typed session state, consumed by a query
@@ -8366,19 +7495,11 @@ def q_sql_variables_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql("EXECUTE IMMEDIATE stmt USING 'MACHINERY'")
 
 
-ORACLE_SQL_VARIABLES = """
-SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n_rich,
-       CAST(SUM(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT) / 100.0
-         AS total_balance
-FROM customer
-WHERE c_acctbal > 1000.0 AND c_mktsegment != 'MACHINERY'
-GROUP BY 1
-"""
-
-QUERIES["sql_variables_rollup"] = q_sql_variables_rollup
-ORACLES["sql_variables_rollup"] = ORACLE_SQL_VARIABLES
-
-
+@query(oracle="""
+SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS group_size,
+       CAST(COUNT(DISTINCT c_mktsegment) AS BIGINT) AS n_sensitive
+FROM customer GROUP BY 1 HAVING COUNT(DISTINCT c_mktsegment) < 5
+""")
 def q_l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """l-diversity audit (operators.pii.l_diversity_audit): customer
     nation groups where the sensitive market-segment attribute shows
@@ -8393,16 +7514,31 @@ def q_l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return l_diversity_audit(c, ["c_nationkey"], "c_mktsegment", l=5)
 
 
-ORACLE_L_DIVERSITY = """
-SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS group_size,
-       CAST(COUNT(DISTINCT c_mktsegment) AS BIGINT) AS n_sensitive
-FROM customer GROUP BY 1 HAVING COUNT(DISTINCT c_mktsegment) < 5
-"""
-
-QUERIES["l_diversity_audit"] = q_l_diversity_audit
-ORACLES["l_diversity_audit"] = ORACLE_L_DIVERSITY
-
-
+@query(oracle="""
+WITH toks AS (
+  SELECT doc_id,
+         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
+         substr(md5('pack' || chr(31) || CAST(doc_id AS VARCHAR)), 1, 16)
+           AS h
+  FROM documents),
+ordered AS (
+  SELECT doc_id, n_tok,
+         COALESCE(SUM(n_tok) OVER (ORDER BY h, doc_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start
+  FROM toks),
+plan AS (
+  SELECT n_tok, start // 512 AS bin_id,
+         (start + greatest(n_tok - 1, 0)) // 512 AS end_bin_id
+  FROM ordered)
+SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(n_tok) AS BIGINT) AS total_tokens,
+       CAST(MAX(end_bin_id) + 1 AS BIGINT) AS bins_used,
+       CAST((SUM(n_tok) + 511) // 512 AS BIGINT) AS bins_ideal,
+       CAST(count_if(bin_id != end_bin_id) AS BIGINT) AS n_spanning,
+       CAST(SUM(n_tok) * 1000 // ((MAX(end_bin_id) + 1) * 512) AS BIGINT)
+         AS fill_permille
+FROM plan
+""")
 def q_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Packing-yield report over the sequence-packing plan
     (operators.packing.pack_documents): bins used vs the ideal
@@ -8433,36 +7569,22 @@ def q_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PACKING_EFFICIENCY = """
-WITH toks AS (
-  SELECT doc_id,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-         substr(md5('pack' || chr(31) || CAST(doc_id AS VARCHAR)), 1, 16)
-           AS h
-  FROM documents),
-ordered AS (
-  SELECT doc_id, n_tok,
-         COALESCE(SUM(n_tok) OVER (ORDER BY h, doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS start
-  FROM toks),
-plan AS (
-  SELECT n_tok, start // 512 AS bin_id,
-         (start + greatest(n_tok - 1, 0)) // 512 AS end_bin_id
-  FROM ordered)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_tok) AS BIGINT) AS total_tokens,
-       CAST(MAX(end_bin_id) + 1 AS BIGINT) AS bins_used,
-       CAST((SUM(n_tok) + 511) // 512 AS BIGINT) AS bins_ideal,
-       CAST(count_if(bin_id != end_bin_id) AS BIGINT) AS n_spanning,
-       CAST(SUM(n_tok) * 1000 // ((MAX(end_bin_id) + 1) * 512) AS BIGINT)
-         AS fill_permille
-FROM plan
-"""
-
-QUERIES["packing_efficiency"] = q_packing_efficiency
-ORACLES["packing_efficiency"] = ORACLE_PACKING_EFFICIENCY
-
-
+@query(oracle="""
+WITH pairs AS (
+  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
+  FROM lineitem x JOIN lineitem y
+    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
+nodes AS (SELECT a AS n FROM pairs UNION SELECT b FROM pairs),
+tri AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
+  FROM pairs e1
+  JOIN pairs e2 ON e2.a = e1.b
+  JOIN pairs e3 ON e3.a = e1.a AND e3.b = e2.b)
+SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM nodes) AS n_nodes,
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM pairs) AS n_edges,
+       n_triangles
+FROM tri
+""")
 def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle census of the part co-purchase graph — parts are
     connected when some order contains both (per-order pair fanout is
@@ -8485,40 +7607,7 @@ def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_count(pairs, "a", "b")
 
 
-ORACLE_COPURCHASE_TRIANGLES = """
-WITH pairs AS (
-  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-  FROM lineitem x JOIN lineitem y
-    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
-nodes AS (SELECT a AS n FROM pairs UNION SELECT b FROM pairs),
-tri AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
-  FROM pairs e1
-  JOIN pairs e2 ON e2.a = e1.b
-  JOIN pairs e3 ON e3.a = e1.a AND e3.b = e2.b)
-SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM nodes) AS n_nodes,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM pairs) AS n_edges,
-       n_triangles
-FROM tri
-"""
-
-QUERIES["copurchase_triangles"] = q_copurchase_triangles
-ORACLES["copurchase_triangles"] = ORACLE_COPURCHASE_TRIANGLES
-
-
-def q_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source vocabulary-coverage audit against the corpus top-500
-    token vocabulary (operators.text.vocab_coverage): token totals,
-    OOV count, exact per-mille OOV rate, distinct tokens."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
-        vocab_coverage,
-    )
-
-    d = parallelize(load_table(spark, sf_dir, "documents"))
-    return vocab_coverage(d, "text", "source", k=500)
-
-
-ORACLE_VOCAB_OOV = """
+@query(oracle="""
 WITH toks AS (
   SELECT source, unnest(string_split(text, ' ')) AS tok FROM documents),
 t AS (SELECT source, tok FROM toks WHERE tok != ''),
@@ -8533,28 +7622,20 @@ SELECT source,
        CAST(count_if(tok NOT IN (SELECT tok FROM vocab)) * 1000
             // COUNT(*) AS BIGINT) AS oov_permille
 FROM t GROUP BY 1
-"""
-
-QUERIES["vocab_oov_rate"] = q_vocab_oov_rate
-ORACLES["vocab_oov_rate"] = ORACLE_VOCAB_OOV
-
-
-def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 most-covariant embedding dimension pairs by exact int64
-    covariance numerator |n·Σxy − Σx·Σy| over floor(x·10⁴)-scaled
-    components (operators.linalg.top_covariant_pairs) — the PCA /
-    whitening step-1 moment computation as a mapInArrow partial-Gram
-    reduce: each partition emits d(d+1)/2 int64 partials, one hash agg
-    combines them; the vectors themselves never shuffle."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.linalg import (
-        top_covariant_pairs,
+""")
+def q_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source vocabulary-coverage audit against the corpus top-500
+    token vocabulary (operators.text.vocab_coverage): token totals,
+    OOV count, exact per-mille OOV rate, distinct tokens."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
+        vocab_coverage,
     )
 
-    e = parallelize(load_table(spark, sf_dir, "embeddings"))
-    return top_covariant_pairs(e, "embedding", dim=64, k=20)
+    d = parallelize(load_table(spark, sf_dir, "documents"))
+    return vocab_coverage(d, "text", "source", k=500)
 
 
-ORACLE_EMBEDDING_COVARIANCE = """
+@query(oracle="""
 WITH comp AS (
   SELECT vec_id,
          generate_subscripts(embedding, 1) - 1 AS d,
@@ -8574,12 +7655,36 @@ SELECT dim_i, dim_j, n_rows,
 FROM pairs
 ORDER BY abs(n_rows * sxy - sx * sy) DESC, dim_i, dim_j
 LIMIT 20
-"""
+""")
+def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 most-covariant embedding dimension pairs by exact int64
+    covariance numerator |n·Σxy − Σx·Σy| over floor(x·10⁴)-scaled
+    components (operators.linalg.top_covariant_pairs) — the PCA /
+    whitening step-1 moment computation as a mapInArrow partial-Gram
+    reduce: each partition emits d(d+1)/2 int64 partials, one hash agg
+    combines them; the vectors themselves never shuffle."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.linalg import (
+        top_covariant_pairs,
+    )
 
-QUERIES["embedding_covariance"] = q_embedding_covariance
-ORACLES["embedding_covariance"] = ORACLE_EMBEDDING_COVARIANCE
+    e = parallelize(load_table(spark, sf_dir, "embeddings"))
+    return top_covariant_pairs(e, "embedding", dim=64, k=20)
 
 
+@query(oracle="""
+SELECT label,
+       CAST(d AS INTEGER) AS dim,
+       CAST(COUNT(*) AS BIGINT) AS n_vecs,
+       CAST(SUM(q) AS BIGINT) AS sx,
+       CAST(SUM(q * q) AS BIGINT) AS sxx
+FROM (
+  SELECT label,
+         generate_subscripts(embedding, 1) - 1 AS d,
+         CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 10000.0) AS BIGINT)
+           AS q
+  FROM embeddings)
+GROUP BY 1, 2
+""")
 def q_label_scatter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label per-dimension exact moments (n, Σx, Σx²) of the
     scaled embeddings (operators.linalg.grouped_moments) — the
@@ -8593,47 +7698,7 @@ def q_label_scatter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grouped_moments(e, "label", "embedding", dim=64)
 
 
-ORACLE_LABEL_SCATTER = """
-SELECT label,
-       CAST(d AS INTEGER) AS dim,
-       CAST(COUNT(*) AS BIGINT) AS n_vecs,
-       CAST(SUM(q) AS BIGINT) AS sx,
-       CAST(SUM(q * q) AS BIGINT) AS sxx
-FROM (
-  SELECT label,
-         generate_subscripts(embedding, 1) - 1 AS d,
-         CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 10000.0) AS BIGINT)
-           AS q
-  FROM embeddings)
-GROUP BY 1, 2
-"""
-
-QUERIES["label_scatter"] = q_label_scatter
-ORACLES["label_scatter"] = ORACLE_LABEL_SCATTER
-
-
-def q_bpe_apply_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer APPLY over the corpus: run the fixed 10-rule BPE merge
-    table (operators.text.bpe_apply_tokens — engine-exact marker-framed
-    literal replaces) on every alpha word, report the top-30 subword
-    tokens with exact counts (count desc, token asc tiebreak) — the
-    inference-side complement of the bpe_merge_pairs training-prep
-    query."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
-        bpe_apply_tokens,
-    )
-
-    d = parallelize(load_table(spark, sf_dir, "documents"))
-    toks = bpe_apply_tokens(d, "text")
-    return (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .orderBy(F.col("n").desc(), F.col("tok").asc())
-        .limit(30)
-    )
-
-
-ORACLE_BPE_APPLY = """
+@query(oracle="""
 WITH words AS (
   SELECT w FROM (
     SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents)
@@ -8661,26 +7726,29 @@ toks AS (
 SELECT tok, CAST(COUNT(*) AS BIGINT) AS n
 FROM toks GROUP BY 1
 ORDER BY n DESC, tok ASC LIMIT 30
-"""
-
-QUERIES["bpe_apply_topk"] = q_bpe_apply_topk
-ORACLES["bpe_apply_topk"] = ORACLE_BPE_APPLY
-
-
-def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric shingle-containment near-dup pairs at C ≥ 4/5
-    (operators.dedup_near.containment_pairs): the subset-duplication
-    detector — exact, asymmetric-prefix-filtered, integer-gated."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup_near import (
-        containment_pairs,
+""")
+def q_bpe_apply_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer APPLY over the corpus: run the fixed 10-rule BPE merge
+    table (operators.text.bpe_apply_tokens — engine-exact marker-framed
+    literal replaces) on every alpha word, report the top-30 subword
+    tokens with exact counts (count desc, token asc tiebreak) — the
+    inference-side complement of the bpe_merge_pairs training-prep
+    query."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
+        bpe_apply_tokens,
     )
 
-    return containment_pairs(
-        load_table(spark, sf_dir, "documents"), threshold_num=4, threshold_den=5
+    d = parallelize(load_table(spark, sf_dir, "documents"))
+    toks = bpe_apply_tokens(d, "text")
+    return (
+        toks.groupBy("tok")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        .orderBy(F.col("n").desc(), F.col("tok").asc())
+        .limit(30)
     )
 
 
-ORACLE_CONTAINMENT = """
+@query(oracle="""
 WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
 sh AS (
   SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
@@ -8697,25 +7765,21 @@ SELECT src, dst, CAST(shared AS BIGINT) AS shared,
        round(shared / s1.n_sh, 6) AS containment
 FROM shared JOIN sizes s1 ON src = s1.doc_id JOIN sizes s2 ON dst = s2.doc_id
 WHERE shared * 5 >= s1.n_sh * 4
-"""
-
-QUERIES["containment_pairs"] = q_containment_pairs
-ORACLES["containment_pairs"] = ORACLE_CONTAINMENT
-
-
-def q_discriminative_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 (token, source) chi-square association cells
-    (operators.text.discriminative_tokens) — the source-boilerplate
-    detector; exact integer cells, deterministic scalar χ²."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
-        discriminative_tokens,
+""")
+def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Asymmetric shingle-containment near-dup pairs at C ≥ 4/5
+    (operators.dedup_near.containment_pairs): the subset-duplication
+    detector — exact, asymmetric-prefix-filtered, integer-gated."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup_near import (
+        containment_pairs,
     )
 
-    d = parallelize(load_table(spark, sf_dir, "documents"))
-    return discriminative_tokens(d, "text", "source", min_token_total=100, k=20)
+    return containment_pairs(
+        load_table(spark, sf_dir, "documents"), threshold_num=4, threshold_den=5
+    )
 
 
-ORACLE_DISCRIMINATIVE = """
+@query(oracle="""
 WITH toks AS (
   SELECT source, tok FROM (
     SELECT source, unnest(string_split(text, ' ')) AS tok FROM documents)
@@ -8748,12 +7812,30 @@ scored AS (
 SELECT tok, source, n_cell, token_total, group_total, chi2
 FROM scored
 ORDER BY chi2 DESC, tok ASC, source ASC LIMIT 20
-"""
+""")
+def q_discriminative_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 (token, source) chi-square association cells
+    (operators.text.discriminative_tokens) — the source-boilerplate
+    detector; exact integer cells, deterministic scalar χ²."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
+        discriminative_tokens,
+    )
 
-QUERIES["discriminative_tokens"] = q_discriminative_tokens
-ORACLES["discriminative_tokens"] = ORACLE_DISCRIMINATIVE
+    d = parallelize(load_table(spark, sf_dir, "documents"))
+    return discriminative_tokens(d, "text", "source", min_token_total=100, k=20)
 
 
+@query(oracle="""
+SELECT s_suppkey, s_name FROM supplier
+WHERE s_suppkey IN (
+  SELECT l_suppkey FROM lineitem
+  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'red%')
+    AND l_shipdate >= TIMESTAMP '1996-01-01'
+    AND l_shipdate < TIMESTAMP '1997-01-01'
+  GROUP BY l_suppkey, l_partkey
+  HAVING SUM(CAST(round(l_quantity * 100) AS BIGINT)) > 5000
+)
+""")
 def q_excess_volume_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q20 shape adapted to the lake's schema (no partsupp table):
     the nested IN chain — suppliers who, for SOME red-prefixed part,
@@ -8784,22 +7866,22 @@ def q_excess_volume_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.join(hot, "s_suppkey", "left_semi").select("s_suppkey", "s_name")
 
 
-ORACLE_EXCESS_VOLUME = """
-SELECT s_suppkey, s_name FROM supplier
-WHERE s_suppkey IN (
-  SELECT l_suppkey FROM lineitem
-  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'red%')
-    AND l_shipdate >= TIMESTAMP '1996-01-01'
-    AND l_shipdate < TIMESTAMP '1997-01-01'
-  GROUP BY l_suppkey, l_partkey
-  HAVING SUM(CAST(round(l_quantity * 100) AS BIGINT)) > 5000
-)
-"""
-
-QUERIES["excess_volume_suppliers"] = q_excess_volume_suppliers
-ORACLES["excess_volume_suppliers"] = ORACLE_EXCESS_VOLUME
-
-
+@query(oracle="""
+WITH a AS (
+  SELECT source AS src0, nullif(lang, 'en') AS lk0,
+         CAST(COUNT(*) AS BIGINT) AS n0
+  FROM documents WHERE doc_id % 2 = 0 GROUP BY 1, 2),
+b AS (
+  SELECT source AS src1, nullif(lang, 'en') AS lk1,
+         CAST(COUNT(*) AS BIGINT) AS n1
+  FROM documents WHERE doc_id % 2 = 1 GROUP BY 1, 2)
+SELECT COALESCE(src0, src1) AS source,
+       COALESCE(lk0, lk1) AS lang_key,
+       COALESCE(n0, 0) AS n_even,
+       COALESCE(n1, 0) AS n_odd
+FROM a FULL JOIN b
+  ON a.src0 = b.src1 AND a.lk0 IS NOT DISTINCT FROM b.lk1
+""")
 def q_null_safe_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-safe equality (`<=>` / IS NOT DISTINCT FROM) through a
     FULL OUTER join — the reconciliation shape a partially-keyed
@@ -8831,41 +7913,6 @@ def q_null_safe_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_NULL_SAFE_RECONCILE = """
-WITH a AS (
-  SELECT source AS src0, nullif(lang, 'en') AS lk0,
-         CAST(COUNT(*) AS BIGINT) AS n0
-  FROM documents WHERE doc_id % 2 = 0 GROUP BY 1, 2),
-b AS (
-  SELECT source AS src1, nullif(lang, 'en') AS lk1,
-         CAST(COUNT(*) AS BIGINT) AS n1
-  FROM documents WHERE doc_id % 2 = 1 GROUP BY 1, 2)
-SELECT COALESCE(src0, src1) AS source,
-       COALESCE(lk0, lk1) AS lang_key,
-       COALESCE(n0, 0) AS n_even,
-       COALESCE(n1, 0) AS n_odd
-FROM a FULL JOIN b
-  ON a.src0 = b.src1 AND a.lk0 IS NOT DISTINCT FROM b.lk1
-"""
-
-QUERIES["null_safe_reconcile"] = q_null_safe_reconcile
-ORACLES["null_safe_reconcile"] = ORACLE_NULL_SAFE_RECONCILE
-
-
-def q_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer fertility per language (operators.text.bpe_fertility):
-    subwords-per-word under the fixed 10-rule merge table — the
-    multilingual tokenizer-fit audit beside vocab_oov_rate. Map-only
-    merge application + one group aggregate."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
-        bpe_fertility,
-    )
-
-    return bpe_fertility(
-        parallelize(load_table(spark, sf_dir, "documents")), "text", "lang"
-    )
-
-
 def _oracle_bpe_fertility() -> str:
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
         BPE_MERGES,
@@ -8890,13 +7937,34 @@ FROM merged GROUP BY lang
 """
 
 
-QUERIES["bpe_fertility_by_lang"] = q_bpe_fertility_by_lang
-ORACLES["bpe_fertility_by_lang"] = _oracle_bpe_fertility()
+@query(oracle=_oracle_bpe_fertility())
+def q_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer fertility per language (operators.text.bpe_fertility):
+    subwords-per-word under the fixed 10-rule merge table — the
+    multilingual tokenizer-fit audit beside vocab_oov_rate. Map-only
+    merge application + one group aggregate."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
+        bpe_fertility,
+    )
+
+    return bpe_fertility(
+        parallelize(load_table(spark, sf_dir, "documents")), "text", "lang"
+    )
 
 
 # ------------------------------------------------------------- round 7
 
 
+@query(oracle="""
+SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders
+FROM orders o
+WHERE o_orderdate >= TIMESTAMP '1996-07-01'
+  AND o_orderdate < TIMESTAMP '1996-10-01'
+  AND EXISTS (SELECT 1 FROM lineitem l
+              WHERE l.l_orderkey = o.o_orderkey
+                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
+GROUP BY o_orderpriority
+""")
 def q_order_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 shape adapted to the lake's schema (no commitdate): order
     counts per priority for a quarter, restricted to orders with at
@@ -8923,21 +7991,20 @@ def q_order_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ORDER_PRIORITY = """
-SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders
-FROM orders o
-WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-  AND o_orderdate < TIMESTAMP '1996-10-01'
-  AND EXISTS (SELECT 1 FROM lineitem l
-              WHERE l.l_orderkey = o.o_orderkey
-                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-GROUP BY o_orderpriority
-"""
-
-QUERIES["order_priority_counts"] = q_order_priority_counts
-ORACLES["order_priority_counts"] = ORACLE_ORDER_PRIORITY
-
-
+@query(oracle="""
+SELECT n_name,
+       CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS revenue
+FROM customer
+JOIN orders ON c_custkey = o_custkey
+JOIN lineitem ON l_orderkey = o_orderkey
+JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+JOIN nation ON c_nationkey = n_nationkey
+JOIN region ON n_regionkey = r_regionkey
+WHERE r_name = 'ASIA'
+  AND o_orderdate >= TIMESTAMP '1996-01-01'
+  AND o_orderdate < TIMESTAMP '1997-01-01'
+GROUP BY n_name
+""")
 def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q5 shape: revenue by nation where the CUSTOMER and the SUPPLIER
     sit in the same nation (the two-sided nation-key equality that
@@ -8974,40 +8041,7 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_LOCAL_SUPPLIER = """
-SELECT n_name,
-       CAST(SUM(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS revenue
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1997-01-01'
-GROUP BY n_name
-"""
-
-QUERIES["local_supplier_volume"] = q_local_supplier_volume
-ORACLES["local_supplier_volume"] = ORACLE_LOCAL_SUPPLIER
-
-
-def q_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t-closeness over orders (quasi-identifier: priority; sensitive:
-    status) — exact-integer total-variation distance per group vs the
-    global sensitive distribution (operators.pii.t_closeness_audit),
-    6dp-rounded only at the final per-group division. t=0.005 splits
-    the flag at both test scales."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.pii import (
-        t_closeness_audit,
-    )
-
-    o = load_table(spark, sf_dir, "orders")
-    return t_closeness_audit(o, ["o_orderpriority"], "o_orderstatus", 0.005)
-
-
-ORACLE_T_CLOSENESS = """
+@query(oracle="""
 WITH gc AS (SELECT o_orderpriority, o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_gc
             FROM orders GROUP BY 1, 2),
 g AS (SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_g FROM orders GROUP BY 1),
@@ -9022,25 +8056,22 @@ SELECT o_orderpriority,
 FROM g CROSS JOIN c CROSS JOIN t
 LEFT JOIN gc USING (o_orderpriority, o_orderstatus)
 GROUP BY o_orderpriority, n_g, n_total
-"""
-
-QUERIES["t_closeness_audit"] = q_t_closeness_audit
-ORACLES["t_closeness_audit"] = ORACLE_T_CLOSENESS
-
-
-def q_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source novel-shingle rate over the documents corpus
-    (operators.dedup_near.shingle_novelty): first-seen attribution by
-    min doc id, linear plan (explode → min-agg → per-doc counts →
-    per-source rollup), no pair generation."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup_near import (
-        shingle_novelty,
+""")
+def q_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """t-closeness over orders (quasi-identifier: priority; sensitive:
+    status) — exact-integer total-variation distance per group vs the
+    global sensitive distribution (operators.pii.t_closeness_audit),
+    6dp-rounded only at the final per-group division. t=0.005 splits
+    the flag at both test scales."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.pii import (
+        t_closeness_audit,
     )
 
-    return shingle_novelty(load_table(spark, sf_dir, "documents"))
+    o = load_table(spark, sf_dir, "orders")
+    return t_closeness_audit(o, ["o_orderpriority"], "o_orderstatus", 0.005)
 
 
-ORACLE_SHINGLE_NOVELTY = """
+@query(oracle="""
 WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
 sh AS (
   SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
@@ -9060,23 +8091,17 @@ FROM per_doc p
 LEFT JOIN novel v USING (doc_id)
 JOIN documents d USING (doc_id)
 GROUP BY d.source
-"""
-
-QUERIES["shingle_novelty"] = q_shingle_novelty
-ORACLES["shingle_novelty"] = ORACLE_SHINGLE_NOVELTY
-
-
-def q_minhash_signature_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signature mergeability audit per source
-    (operators.dedup_near.minhash_merge_audit): sig(A∪B) must equal
-    the slotwise min of the halves' signatures, with the slot-agreement
-    Jaccard estimate reported beside the exact Jaccard of the halves.
-    md5-hex lexicographic minima — engine-exact on both sides."""
+""")
+def q_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source novel-shingle rate over the documents corpus
+    (operators.dedup_near.shingle_novelty): first-seen attribution by
+    min doc id, linear plan (explode → min-agg → per-doc counts →
+    per-source rollup), no pair generation."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup_near import (
-        minhash_merge_audit,
+        shingle_novelty,
     )
 
-    return minhash_merge_audit(load_table(spark, sf_dir, "documents"), k=8)
+    return shingle_novelty(load_table(spark, sf_dir, "documents"))
 
 
 def _oracle_minhash_merge(k: int = 8) -> str:
@@ -9125,21 +8150,18 @@ FROM sig s JOIN exact USING (source)
 """
 
 
-QUERIES["minhash_signature_merge"] = q_minhash_signature_merge
-ORACLES["minhash_signature_merge"] = _oracle_minhash_merge()
-
-
-def q_pq_codebook_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization assignment audit over the embeddings
-    corpus (operators.similarity.pq_assign_audit): 4 subspaces × 4
-    codes from the frozen integer codebook, per-cell population and
-    mean reconstruction error — exact int64 distances on both
-    engines."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
-        pq_assign_audit,
+@query(oracle=_oracle_minhash_merge())
+def q_minhash_signature_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash signature mergeability audit per source
+    (operators.dedup_near.minhash_merge_audit): sig(A∪B) must equal
+    the slotwise min of the halves' signatures, with the slot-agreement
+    Jaccard estimate reported beside the exact Jaccard of the halves.
+    md5-hex lexicographic minima — engine-exact on both sides."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup_near import (
+        minhash_merge_audit,
     )
 
-    return pq_assign_audit(load_table(spark, sf_dir, "embeddings"))
+    return minhash_merge_audit(load_table(spark, sf_dir, "documents"), k=8)
 
 
 def _oracle_pq(m: int = 4, k: int = 4, dim: int = 64) -> str:
@@ -9189,10 +8211,35 @@ FROM assigned GROUP BY subspace, code
 """
 
 
-QUERIES["pq_codebook_audit"] = q_pq_codebook_audit
-ORACLES["pq_codebook_audit"] = _oracle_pq()
+@query(oracle=_oracle_pq())
+def q_pq_codebook_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization assignment audit over the embeddings
+    corpus (operators.similarity.pq_assign_audit): 4 subspaces × 4
+    codes from the frozen integer codebook, per-cell population and
+    mean reconstruction error — exact int64 distances on both
+    engines."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
+        pq_assign_audit,
+    )
+
+    return pq_assign_audit(load_table(spark, sf_dir, "embeddings"))
 
 
+# Distinct-row hourly counts cut at the final watermark: every
+# duplicate copy (in-batch and cross-batch) dies in the dedup store,
+# nothing is ever late (phases are time-monotone), and append mode
+# emits exactly the windows whose end ≤ floor_ms(max ts) − 1 h.
+@query(oracle="""
+WITH base AS (
+  SELECT event_id, ts, event_type FROM events WHERE event_id IS NOT NULL),
+wm AS (
+  SELECT (epoch_us(MAX(ts)) // 1000) * 1000 - 3600000000 AS wm_us FROM base)
+SELECT epoch_us(date_trunc('hour', ts)) AS window_start_us, event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_events
+FROM base, wm
+WHERE epoch_us(date_trunc('hour', ts)) + 3600000000 <= wm.wm_us
+GROUP BY 1, 2
+""")
 def q_stream_dedup_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CHAINED stateful streaming: dropDuplicatesWithinWatermark →
     APPEND-mode hourly counts in ONE query (two state stores), replayed
@@ -9239,54 +8286,6 @@ def q_stream_dedup_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Distinct-row hourly counts cut at the final watermark: every
-# duplicate copy (in-batch and cross-batch) dies in the dedup store,
-# nothing is ever late (phases are time-monotone), and append mode
-# emits exactly the windows whose end ≤ floor_ms(max ts) − 1 h.
-ORACLE_STREAM_DEDUP_WINDOW = """
-WITH base AS (
-  SELECT event_id, ts, event_type FROM events WHERE event_id IS NOT NULL),
-wm AS (
-  SELECT (epoch_us(MAX(ts)) // 1000) * 1000 - 3600000000 AS wm_us FROM base)
-SELECT epoch_us(date_trunc('hour', ts)) AS window_start_us, event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events
-FROM base, wm
-WHERE epoch_us(date_trunc('hour', ts)) + 3600000000 <= wm.wm_us
-GROUP BY 1, 2
-"""
-
-QUERIES["stream_dedup_then_window"] = q_stream_dedup_then_window
-ORACLES["stream_dedup_then_window"] = ORACLE_STREAM_DEDUP_WINDOW
-
-
-def q_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ANN index ingest (streaming.ivf_ingest): three
-    micro-batches of embeddings (vec_id mod 3) assigned map-only to a
-    FROZEN 8-cell integer codebook and appended to the cell-keyed
-    store; the audit reports per-cell population and id bounds. The
-    frozen-codebook ingest is the build-once / ingest-forever operating
-    mode of a production vector index."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
-        pq_codebooks,
-    )
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.ivf_ingest import (
-        ivf_ingest_phased,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    phases = [emb.where(F.pmod("vec_id", F.lit(3)) == i) for i in range(3)]
-    cents = pq_codebooks(1, 8, 64)[0]
-    audit, stats = ivf_ingest_phased(spark, phases, cents, dim=64)
-    if stats["data_batches"] != 3:
-        raise RuntimeError(f"expected 3 micro-batches, got {stats}")
-    return audit.select(
-        "cell",
-        "n_vecs",
-        F.col("min_id").cast("long").alias("min_id"),
-        F.col("max_id").cast("long").alias("max_id"),
-    )
-
-
 def _oracle_ivf_ingest(k: int = 8, dim: int = 64) -> str:
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
         pq_codebooks,
@@ -9320,10 +8319,46 @@ FROM assigned GROUP BY cell
 """
 
 
-QUERIES["stream_ivf_ingest"] = q_stream_ivf_ingest
-ORACLES["stream_ivf_ingest"] = _oracle_ivf_ingest()
+@query(oracle=_oracle_ivf_ingest())
+def q_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming ANN index ingest (streaming.ivf_ingest): three
+    micro-batches of embeddings (vec_id mod 3) assigned map-only to a
+    FROZEN 8-cell integer codebook and appended to the cell-keyed
+    store; the audit reports per-cell population and id bounds. The
+    frozen-codebook ingest is the build-once / ingest-forever operating
+    mode of a production vector index."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
+        pq_codebooks,
+    )
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.ivf_ingest import (
+        ivf_ingest_phased,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    phases = [emb.where(F.pmod("vec_id", F.lit(3)) == i) for i in range(3)]
+    cents = pq_codebooks(1, 8, 64)[0]
+    audit, stats = ivf_ingest_phased(spark, phases, cents, dim=64)
+    if stats["data_batches"] != 3:
+        raise RuntimeError(f"expected 3 micro-batches, got {stats}")
+    return audit.select(
+        "cell",
+        "n_vecs",
+        F.col("min_id").cast("long").alias("min_id"),
+        F.col("max_id").cast("long").alias("max_id"),
+    )
 
 
+def _oracle_hilbert() -> str:
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources.layout import (
+        hilbert_oracle_sql,
+    )
+
+    hx = "((user_id % 64) + 64) % 64"
+    hy = "((CAST(round(value * 10) AS BIGINT) % 64) + 64) % 64"
+    return hilbert_oracle_sql("events", "event_id", hx, hy, bits=6)
+
+
+@query(oracle=_oracle_hilbert())
 def q_hilbert_layout_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hilbert-curve clustering key (sources.layout.with_hilbert_key)
     over two quantized event dimensions — the locality-tighter sibling
@@ -9342,20 +8377,23 @@ def q_hilbert_layout_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_hilbert_key(e, x, y, bits=6).select("event_id", "hkey")
 
 
-def _oracle_hilbert() -> str:
+def _oracle_rendezvous() -> str:
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources.layout import (
-        hilbert_oracle_sql,
+        rendezvous_oracle_sql,
     )
 
-    hx = "((user_id % 64) + 64) % 64"
-    hy = "((CAST(round(value * 10) AS BIGINT) % 64) + 64) % 64"
-    return hilbert_oracle_sql("events", "event_id", hx, hy, bits=6)
+    r8 = rendezvous_oracle_sql("doc_id", 8)
+    r9 = rendezvous_oracle_sql("doc_id", 9)
+    return f"""
+WITH a AS (SELECT {r8} AS shard, {r9} AS s9 FROM documents)
+SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(CASE WHEN shard <> s9 THEN 1 ELSE 0 END) AS BIGINT) AS n_moved,
+       round(CAST(SUM(CASE WHEN shard <> s9 THEN 1 ELSE 0 END) AS BIGINT) / COUNT(*), 6) AS moved_rate
+FROM a GROUP BY shard
+"""
 
 
-QUERIES["hilbert_layout_keys"] = q_hilbert_layout_keys
-ORACLES["hilbert_layout_keys"] = _oracle_hilbert()
-
-
+@query(oracle=_oracle_rendezvous())
 def q_rendezvous_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rendezvous (highest-random-weight) shard map over the documents
     corpus plus the RESHARDING-DELTA audit: per 8-shard cell, how many
@@ -9384,26 +8422,14 @@ def q_rendezvous_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_rendezvous() -> str:
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources.layout import (
-        rendezvous_oracle_sql,
-    )
-
-    r8 = rendezvous_oracle_sql("doc_id", 8)
-    r9 = rendezvous_oracle_sql("doc_id", 9)
-    return f"""
-WITH a AS (SELECT {r8} AS shard, {r9} AS s9 FROM documents)
-SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(CASE WHEN shard <> s9 THEN 1 ELSE 0 END) AS BIGINT) AS n_moved,
-       round(CAST(SUM(CASE WHEN shard <> s9 THEN 1 ELSE 0 END) AS BIGINT) / COUNT(*), 6) AS moved_rate
-FROM a GROUP BY shard
-"""
-
-
-QUERIES["rendezvous_shards"] = q_rendezvous_shards
-ORACLES["rendezvous_shards"] = _oracle_rendezvous()
-
-
+@query(oracle="""
+SELECT c.user_id, c.event_id AS click_id, epoch_us(c.ts) AS click_ts_us
+FROM events c
+WHERE c.event_type = 'click'
+  AND EXISTS (SELECT 1 FROM events p
+              WHERE p.user_id = c.user_id AND p.event_type = 'purchase'
+                AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE)
+""")
 def q_stream_semi_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT SEMI join executed as a real streaming job
     (streaming.joins.attribution_semi_join_once) — the existence-only
@@ -9429,19 +8455,29 @@ def q_stream_semi_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_SEMI = """
-SELECT c.user_id, c.event_id AS click_id, epoch_us(c.ts) AS click_ts_us
-FROM events c
-WHERE c.event_type = 'click'
-  AND EXISTS (SELECT 1 FROM events p
-              WHERE p.user_id = c.user_id AND p.event_type = 'purchase'
-                AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE)
-"""
-
-QUERIES["stream_semi_attribution"] = q_stream_semi_attribution
-ORACLES["stream_semi_attribution"] = ORACLE_STREAM_SEMI
-
-
+@query(oracle="""
+WITH RECURSIVE pairs AS (
+  SELECT a.s_suppkey AS src, b.s_suppkey AS dst
+  FROM supplier a JOIN supplier b
+    ON a.s_nationkey = b.s_nationkey AND a.s_suppkey < b.s_suppkey
+  WHERE round(jaro_winkler_similarity(a.s_name, b.s_name), 6) >= 0.96
+),
+edges AS (SELECT src, dst FROM pairs UNION SELECT dst AS src, src AS dst FROM pairs),
+reach(a, b) AS (
+  SELECT src AS a, dst AS b FROM edges
+  UNION
+  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src
+),
+lab AS (
+  SELECT s.s_suppkey AS id,
+         LEAST(s.s_suppkey, COALESCE(MIN(r.b), s.s_suppkey)) AS cluster_id
+  FROM supplier s LEFT JOIN reach r ON r.a = s.s_suppkey
+  GROUP BY s.s_suppkey
+),
+sizes AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size FROM lab GROUP BY 1)
+SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters
+FROM sizes GROUP BY cluster_size
+""")
 def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end entity resolution: block suppliers by nation,
     score in-block name pairs with the DuckDB-exact Jaro-Winkler
@@ -9487,34 +8523,14 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ENTITY_RESOLUTION = """
-WITH RECURSIVE pairs AS (
-  SELECT a.s_suppkey AS src, b.s_suppkey AS dst
-  FROM supplier a JOIN supplier b
-    ON a.s_nationkey = b.s_nationkey AND a.s_suppkey < b.s_suppkey
-  WHERE round(jaro_winkler_similarity(a.s_name, b.s_name), 6) >= 0.96
-),
-edges AS (SELECT src, dst FROM pairs UNION SELECT dst AS src, src AS dst FROM pairs),
-reach(a, b) AS (
-  SELECT src AS a, dst AS b FROM edges
-  UNION
-  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src
-),
-lab AS (
-  SELECT s.s_suppkey AS id,
-         LEAST(s.s_suppkey, COALESCE(MIN(r.b), s.s_suppkey)) AS cluster_id
-  FROM supplier s LEFT JOIN reach r ON r.a = s.s_suppkey
-  GROUP BY s.s_suppkey
-),
-sizes AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size FROM lab GROUP BY 1)
-SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters
-FROM sizes GROUP BY cluster_size
-"""
-
-QUERIES["entity_resolution"] = q_entity_resolution
-ORACLES["entity_resolution"] = ORACLE_ENTITY_RESOLUTION
-
-
+@query(oracle="""
+SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS vsum,
+       round(CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS DOUBLE) / COUNT(*) / 10000.0, 6) AS vavg
+FROM events
+WHERE NOT (event_id % 2 = 0 AND event_id % 10 = 0)
+GROUP BY event_type
+""")
 def q_incremental_rollup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental rollup maintenance WITH RETRACTIONS
     (operators.incremental.delta_state): base state (even event ids)
@@ -9541,19 +8557,14 @@ def q_incremental_rollup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_INCREMENTAL_CDC = """
-SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS BIGINT) / 10000.0 AS vsum,
-       round(CAST(SUM(CAST(round(value * 10000) AS BIGINT)) AS DOUBLE) / COUNT(*) / 10000.0, 6) AS vavg
-FROM events
-WHERE NOT (event_id % 2 = 0 AND event_id % 10 = 0)
-GROUP BY event_type
-"""
-
-QUERIES["incremental_rollup_cdc"] = q_incremental_rollup_cdc
-ORACLES["incremental_rollup_cdc"] = ORACLE_INCREMENTAL_CDC
-
-
+@query(oracle="""
+WITH med AS (SELECT event_type, quantile_cont(value, 0.5) AS m FROM events GROUP BY 1)
+SELECT e.event_type, CAST(COUNT(*) AS BIGINT) AS n,
+       round(MIN(m), 6) AS median,
+       round(quantile_cont(abs(e.value - m), 0.5), 6) AS mad
+FROM events e JOIN med USING (event_type)
+GROUP BY e.event_type
+""")
 def q_mad_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust dispersion: median absolute deviation per event type —
     the outlier-resistant sibling of value_moments' stddev (one wild
@@ -9601,19 +8612,13 @@ def q_mad_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_MAD = """
-WITH med AS (SELECT event_type, quantile_cont(value, 0.5) AS m FROM events GROUP BY 1)
-SELECT e.event_type, CAST(COUNT(*) AS BIGINT) AS n,
-       round(MIN(m), 6) AS median,
-       round(quantile_cont(abs(e.value - m), 0.5), 6) AS mad
-FROM events e JOIN med USING (event_type)
-GROUP BY e.event_type
-"""
-
-QUERIES["mad_by_type"] = q_mad_by_type
-ORACLES["mad_by_type"] = ORACLE_MAD
-
-
+@query(oracle="""
+WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
+SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_occurrences
+FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i) g
+WHERE t[i] = 'slow' AND t[i+1] = 'hash' AND t[i+2] = 'batch'
+GROUP BY doc_id
+""")
 def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact phrase search ('slow hash batch') over the documents
     corpus: positional trigram match counted per document — the
@@ -9642,18 +8647,13 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PHRASE_SEARCH = """
-WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_occurrences
-FROM toks, LATERAL (SELECT unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i) g
-WHERE t[i] = 'slow' AND t[i+1] = 'hash' AND t[i+2] = 'batch'
-GROUP BY doc_id
-"""
-
-QUERIES["phrase_search"] = q_phrase_search
-ORACLES["phrase_search"] = ORACLE_PHRASE_SEARCH
-
-
+@query(oracle="""
+SELECT epoch_us(date_trunc('hour', ts)) AS window_start_us, event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_events
+FROM events
+WHERE event_type IN ('click', 'purchase')
+GROUP BY 1, 2
+""")
 def q_stream_union_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source streaming fan-in
     (streaming.windowed.union_windowed_once): click and purchase
@@ -9690,18 +8690,28 @@ def q_stream_union_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_UNION = """
-SELECT epoch_us(date_trunc('hour', ts)) AS window_start_us, event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events
-FROM events
-WHERE event_type IN ('click', 'purchase')
-GROUP BY 1, 2
-"""
-
-QUERIES["stream_union_hourly"] = q_stream_union_hourly
-ORACLES["stream_union_hourly"] = ORACLE_STREAM_UNION
-
-
+@query(oracle="""
+WITH lv AS (
+  SELECT 0 AS rung, 'hour' AS level,
+         event_type || '|' || CAST(date_trunc('hour', ts) AS VARCHAR) AS q
+  FROM events
+  UNION ALL
+  SELECT 1, 'day', event_type || '|' || CAST(date_trunc('day', ts) AS VARCHAR) FROM events
+  UNION ALL
+  SELECT 2, 'week', event_type || '|' || CAST(date_trunc('week', ts) AS VARCHAR) FROM events),
+g AS (
+  SELECT rung, level, q, COUNT(*) AS n FROM lv GROUP BY 1, 2, 3),
+ladder AS (
+  SELECT rung, level, CAST(COUNT(*) AS BIGINT) AS n_groups,
+         CAST(SUM(CASE WHEN n < 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_violations
+  FROM g GROUP BY 1, 2)
+SELECT level, n_groups, n_violations,
+       n_violations = 0 AS satisfies_k,
+       (n_violations = 0) AND COALESCE(MAX(CASE WHEN n_violations = 0 THEN 1 ELSE 0 END)
+         OVER (ORDER BY rung ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) = 0
+         AS is_chosen
+FROM ladder
+""")
 def q_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity REPAIR (operators.pii.generalization_ladder): walk
     the (event_type × hour) → (× day) → (× week) quasi-identifier
@@ -9723,33 +8733,30 @@ def q_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_GENERALIZATION = """
-WITH lv AS (
-  SELECT 0 AS rung, 'hour' AS level,
-         event_type || '|' || CAST(date_trunc('hour', ts) AS VARCHAR) AS q
-  FROM events
-  UNION ALL
-  SELECT 1, 'day', event_type || '|' || CAST(date_trunc('day', ts) AS VARCHAR) FROM events
-  UNION ALL
-  SELECT 2, 'week', event_type || '|' || CAST(date_trunc('week', ts) AS VARCHAR) FROM events),
-g AS (
-  SELECT rung, level, q, COUNT(*) AS n FROM lv GROUP BY 1, 2, 3),
-ladder AS (
-  SELECT rung, level, CAST(COUNT(*) AS BIGINT) AS n_groups,
-         CAST(SUM(CASE WHEN n < 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_violations
-  FROM g GROUP BY 1, 2)
-SELECT level, n_groups, n_violations,
-       n_violations = 0 AS satisfies_k,
-       (n_violations = 0) AND COALESCE(MAX(CASE WHEN n_violations = 0 THEN 1 ELSE 0 END)
-         OVER (ORDER BY rung ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) = 0
-         AS is_chosen
-FROM ladder
-"""
-
-QUERIES["generalization_ladder"] = q_generalization_ladder
-ORACLES["generalization_ladder"] = ORACLE_GENERALIZATION
-
-
+@query(oracle="""
+WITH g AS (
+  SELECT source,
+         CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT) AS n_tokens
+  FROM documents GROUP BY 1),
+w AS (
+  SELECT source, n_tokens,
+         CAST(round(sqrt(CAST(n_tokens AS DOUBLE)) * 1000000) AS BIGINT) AS wi
+  FROM g),
+m AS (SELECT MAX(CAST(wi AS DOUBLE) / n_tokens) AS max_ratio FROM w),
+plan AS (
+  SELECT w.source,
+         round((CAST(w.wi AS DOUBLE) / w.n_tokens) / m.max_ratio, 6) AS accept_prob
+  FROM w CROSS JOIN m),
+kept AS (
+  SELECT d.source, d.text, p.accept_prob
+  FROM documents d JOIN plan p USING (source)
+  WHERE ('0x' || substr(md5('rs1' || chr(31) || CAST(d.doc_id AS VARCHAR)), 1, 4))::INTEGER
+        < CAST(floor(p.accept_prob * 65536.0) AS BIGINT))
+SELECT source, round(MIN(accept_prob), 6) AS accept_prob,
+       CAST(COUNT(*) AS BIGINT) AS n_docs_kept,
+       CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT) AS tokens_kept
+FROM kept GROUP BY source
+""")
 def q_resampling_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXECUTED mixture resample (operators.sampling.resampling_execute
     applying resampling_plan): each document kept iff its salted-md5
@@ -9775,35 +8782,16 @@ def q_resampling_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_RESAMPLING_EXECUTED = """
-WITH g AS (
-  SELECT source,
-         CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT) AS n_tokens
-  FROM documents GROUP BY 1),
-w AS (
-  SELECT source, n_tokens,
-         CAST(round(sqrt(CAST(n_tokens AS DOUBLE)) * 1000000) AS BIGINT) AS wi
-  FROM g),
-m AS (SELECT MAX(CAST(wi AS DOUBLE) / n_tokens) AS max_ratio FROM w),
-plan AS (
-  SELECT w.source,
-         round((CAST(w.wi AS DOUBLE) / w.n_tokens) / m.max_ratio, 6) AS accept_prob
-  FROM w CROSS JOIN m),
-kept AS (
-  SELECT d.source, d.text, p.accept_prob
-  FROM documents d JOIN plan p USING (source)
-  WHERE ('0x' || substr(md5('rs1' || chr(31) || CAST(d.doc_id AS VARCHAR)), 1, 4))::INTEGER
-        < CAST(floor(p.accept_prob * 65536.0) AS BIGINT))
-SELECT source, round(MIN(accept_prob), 6) AS accept_prob,
-       CAST(COUNT(*) AS BIGINT) AS n_docs_kept,
-       CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT) AS tokens_kept
-FROM kept GROUP BY source
-"""
-
-QUERIES["resampling_executed"] = q_resampling_executed
-ORACLES["resampling_executed"] = ORACLE_RESAMPLING_EXECUTED
-
-
+@query(oracle="""
+WITH f AS (
+  SELECT user_id, MIN(date_trunc('day', ts)) AS d FROM events GROUP BY 1),
+byday AS (
+  SELECT d, CAST(COUNT(*) AS BIGINT) AS n_new_users FROM f GROUP BY 1)
+SELECT epoch_us(d) AS day_us, n_new_users,
+       CAST(SUM(n_new_users) OVER (ORDER BY d
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_users
+FROM byday
+""")
 def q_cumulative_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative distinct users per day WITHOUT sliding-distinct
     state: a user's contribution collapses to their FIRST-SEEN day
@@ -9828,21 +8816,41 @@ def q_cumulative_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CUMULATIVE_USERS = """
-WITH f AS (
-  SELECT user_id, MIN(date_trunc('day', ts)) AS d FROM events GROUP BY 1),
-byday AS (
-  SELECT d, CAST(COUNT(*) AS BIGINT) AS n_new_users FROM f GROUP BY 1)
-SELECT epoch_us(d) AS day_us, n_new_users,
-       CAST(SUM(n_new_users) OVER (ORDER BY d
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_users
-FROM byday
+def _oracle_layout_locality() -> str:
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources.layout import (
+        hilbert_oracle_sql,
+        zorder_oracle_sql,
+    )
+
+    hx = "((user_id % 64) + 64) % 64"
+    hy = "((CAST(round(value * 10) AS BIGINT) % 64) + 64) % 64"
+    # keep_cols is re-projected at every walk level, so it must be
+    # plain column names — quantize in a base subquery first
+    hil = hilbert_oracle_sql(
+        f"(SELECT event_id, {hx} AS x, {hy} AS y FROM events)",
+        "event_id, x, y",
+        "x",
+        "y",
+        bits=6,
+    )
+    z = zorder_oracle_sql("x", "y", bits=6)
+    parts = []
+    for name, key in [("linear_x", "x"), ("zorder", "zkey"), ("hilbert", "hkey")]:
+        parts.append(f"""
+SELECT '{name}' AS layout, round(AVG(sx), 6) AS avg_x_span, round(AVG(sy), 6) AS avg_y_span
+FROM (
+  SELECT b, MAX(x) - MIN(x) AS sx, MAX(y) - MIN(y) AS sy
+  FROM (SELECT x, y, ntile(16) OVER (ORDER BY {key} ASC, event_id ASC) AS b
+        FROM keyed)
+  GROUP BY b)""")
+    return f"""
+WITH hilberted AS ({hil}),
+keyed AS (SELECT event_id, x, y, hkey, {z} AS zkey FROM hilberted)
+{" UNION ALL ".join(parts)}
 """
 
-QUERIES["cumulative_unique_users"] = q_cumulative_unique_users
-ORACLES["cumulative_unique_users"] = ORACLE_CUMULATIVE_USERS
 
-
+@query(oracle=_oracle_layout_locality())
 def q_layout_locality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measures WHY the clustering keys exist: events sorted by each
     candidate layout key (linear x, Z-order, Hilbert) are cut into 16
@@ -9902,44 +8910,9 @@ def q_layout_locality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), outs)
 
 
-def _oracle_layout_locality() -> str:
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources.layout import (
-        hilbert_oracle_sql,
-        zorder_oracle_sql,
-    )
-
-    hx = "((user_id % 64) + 64) % 64"
-    hy = "((CAST(round(value * 10) AS BIGINT) % 64) + 64) % 64"
-    # keep_cols is re-projected at every walk level, so it must be
-    # plain column names — quantize in a base subquery first
-    hil = hilbert_oracle_sql(
-        f"(SELECT event_id, {hx} AS x, {hy} AS y FROM events)",
-        "event_id, x, y",
-        "x",
-        "y",
-        bits=6,
-    )
-    z = zorder_oracle_sql("x", "y", bits=6)
-    parts = []
-    for name, key in [("linear_x", "x"), ("zorder", "zkey"), ("hilbert", "hkey")]:
-        parts.append(f"""
-SELECT '{name}' AS layout, round(AVG(sx), 6) AS avg_x_span, round(AVG(sy), 6) AS avg_y_span
-FROM (
-  SELECT b, MAX(x) - MIN(x) AS sx, MAX(y) - MIN(y) AS sy
-  FROM (SELECT x, y, ntile(16) OVER (ORDER BY {key} ASC, event_id ASC) AS b
-        FROM keyed)
-  GROUP BY b)""")
-    return f"""
-WITH hilberted AS ({hil}),
-keyed AS (SELECT event_id, x, y, hkey, {z} AS zkey FROM hilberted)
-{" UNION ALL ".join(parts)}
-"""
-
-
-QUERIES["layout_locality_audit"] = q_layout_locality_audit
-ORACLES["layout_locality_audit"] = _oracle_layout_locality()
-
-
+# The maintained table must equal the one-shot window derivation over
+# the concatenated batches (ORACLE_SCD2's rule, identical SQL).
+@query(oracle=ORACLE_SCD2)
 def q_stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming SCD Type-2 maintenance
     (streaming.scd2_stream.scd2_stream_phased): three time-monotone
@@ -9973,28 +8946,6 @@ def q_stream_scd2_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The maintained table must equal the one-shot window derivation over
-# the concatenated batches (ORACLE_SCD2's rule, identical SQL).
-ORACLE_STREAM_SCD2 = ORACLE_SCD2
-
-QUERIES["stream_scd2_maintenance"] = q_stream_scd2_maintenance
-ORACLES["stream_scd2_maintenance"] = ORACLE_STREAM_SCD2
-
-
-def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXECUTED BPE training over the documents corpus
-    (operators.text.bpe_train_merges): the top-5 merges learned by the
-    real iterate-argmax-apply loop, with their corpus-frequency
-    evidence. The oracle replays the identical five rounds as chained
-    CTEs (pair counts → 1-row argmax → replace), so a hash match pins
-    the whole training trajectory, not just one statistic."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
-        bpe_train_merges,
-    )
-
-    return bpe_train_merges(load_table(spark, sf_dir, "documents"), rounds=5)
-
-
 def _oracle_bpe_train(rounds: int = 5) -> str:
     parts = [
         """words AS (
@@ -10024,10 +8975,43 @@ sym{r} AS (
     return "WITH " + ",\n".join(parts) + "\n" + finals
 
 
-QUERIES["bpe_train_merges"] = q_bpe_train_merges
-ORACLES["bpe_train_merges"] = _oracle_bpe_train()
+@query(oracle=_oracle_bpe_train())
+def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXECUTED BPE training over the documents corpus
+    (operators.text.bpe_train_merges): the top-5 merges learned by the
+    real iterate-argmax-apply loop, with their corpus-frequency
+    evidence. The oracle replays the identical five rounds as chained
+    CTEs (pair counts → 1-row argmax → replace), so a hash match pins
+    the whole training trajectory, not just one statistic."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
+        bpe_train_merges,
+    )
+
+    return bpe_train_merges(load_table(spark, sf_dir, "documents"), rounds=5)
 
 
+@query(oracle="""
+WITH hourly AS (
+  SELECT event_type, date_trunc('hour', ts) AS h, CAST(COUNT(*) AS BIGINT) AS x
+  FROM events GROUP BY 1, 2),
+tot AS (
+  SELECT event_type, CAST(SUM(x) AS BIGINT) AS total, CAST(COUNT(*) AS BIGINT) AS nh
+  FROM hourly GROUP BY 1),
+p AS (
+  SELECT hourly.event_type, h, nh,
+         CAST(SUM(x * nh - total) OVER (PARTITION BY hourly.event_type ORDER BY h
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pf
+  FROM hourly JOIN tot USING (event_type)),
+dev AS (
+  SELECT event_type, nh,
+         pf - MIN(pf) OVER (PARTITION BY event_type ORDER BY h ROWS BETWEEN
+              UNBOUNDED PRECEDING AND CURRENT ROW) AS d
+  FROM p)
+SELECT event_type, CAST(MIN(nh) AS BIGINT) AS n_hours,
+       CAST(MAX(d) AS BIGINT) AS max_cusum_scaled,
+       MAX(d) > 3 * MIN(nh) AS drift_alarm
+FROM dev GROUP BY event_type
+""")
 def q_cusum_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM change-point statistic per event type over the hourly
     count series — the sequential-looking recurrence
@@ -10085,33 +9069,22 @@ def q_cusum_change_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CUSUM = """
-WITH hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS h, CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY 1, 2),
-tot AS (
-  SELECT event_type, CAST(SUM(x) AS BIGINT) AS total, CAST(COUNT(*) AS BIGINT) AS nh
-  FROM hourly GROUP BY 1),
-p AS (
-  SELECT hourly.event_type, h, nh,
-         CAST(SUM(x * nh - total) OVER (PARTITION BY hourly.event_type ORDER BY h
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pf
-  FROM hourly JOIN tot USING (event_type)),
-dev AS (
-  SELECT event_type, nh,
-         pf - MIN(pf) OVER (PARTITION BY event_type ORDER BY h ROWS BETWEEN
-              UNBOUNDED PRECEDING AND CURRENT ROW) AS d
-  FROM p)
-SELECT event_type, CAST(MIN(nh) AS BIGINT) AS n_hours,
-       CAST(MAX(d) AS BIGINT) AS max_cusum_scaled,
-       MAX(d) > 3 * MIN(nh) AS drift_alarm
-FROM dev GROUP BY event_type
-"""
-
-QUERIES["cusum_change_detection"] = q_cusum_change_detection
-ORACLES["cusum_change_detection"] = ORACLE_CUSUM
-
-
+@query(oracle="""
+WITH l AS (SELECT l_orderkey AS o, l_partkey AS p FROM lineitem),
+co AS (
+  SELECT a.p AS i, b.p AS j, CAST(COUNT(*) AS BIGINT) AS co
+  FROM l a JOIN l b ON a.o = b.o AND a.p < b.p
+  GROUP BY 1, 2),
+deg AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS n FROM l GROUP BY 1),
+scored AS (
+  SELECT i, j, co,
+         round(co / sqrt(CAST(di.n * dj.n AS DOUBLE)), 6) AS cosine
+  FROM co JOIN deg di ON co.i = di.p JOIN deg dj ON co.j = dj.p)
+SELECT i, j, co, cosine, rank FROM (
+  SELECT i, j, co, cosine,
+         CAST(row_number() OVER (ORDER BY cosine DESC, co DESC, i ASC, j ASC) AS BIGINT) AS rank
+  FROM scored) WHERE rank <= 20
+""")
 def q_item_cooccurrence_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Item-item collaborative similarity from co-purchase counts:
     cosine = co(i,j) / √(n_i·n_j) over order baskets — the classic
@@ -10161,27 +9134,26 @@ def q_item_cooccurrence_similarity(spark: SparkSession, sf_dir: str) -> DataFram
     return top.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
-ORACLE_ITEM_COOCCURRENCE = """
-WITH l AS (SELECT l_orderkey AS o, l_partkey AS p FROM lineitem),
-co AS (
-  SELECT a.p AS i, b.p AS j, CAST(COUNT(*) AS BIGINT) AS co
-  FROM l a JOIN l b ON a.o = b.o AND a.p < b.p
-  GROUP BY 1, 2),
-deg AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS n FROM l GROUP BY 1),
-scored AS (
-  SELECT i, j, co,
-         round(co / sqrt(CAST(di.n * dj.n AS DOUBLE)), 6) AS cosine
-  FROM co JOIN deg di ON co.i = di.p JOIN deg dj ON co.j = dj.p)
-SELECT i, j, co, cosine, rank FROM (
-  SELECT i, j, co, cosine,
-         CAST(row_number() OVER (ORDER BY cosine DESC, co DESC, i ASC, j ASC) AS BIGINT) AS rank
-  FROM scored) WHERE rank <= 20
-"""
-
-QUERIES["item_cooccurrence_similarity"] = q_item_cooccurrence_similarity
-ORACLES["item_cooccurrence_similarity"] = ORACLE_ITEM_COOCCURRENCE
-
-
+@query(oracle="""
+WITH per_cust AS (
+  SELECT o_custkey, MAX(o_orderdate) AS last_o,
+         CAST(COUNT(*) AS BIGINT) AS freq,
+         CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+  FROM orders GROUP BY 1),
+hz AS (SELECT MAX(last_o) AS h FROM per_cust),
+base AS (
+  SELECT o_custkey, CAST(date_diff('day', last_o, h) AS BIGINT) AS rec, freq, cents
+  FROM per_cust CROSS JOIN hz),
+seg AS (
+  SELECT o_custkey, cents,
+         CAST(ntile(5) OVER (ORDER BY rec ASC, o_custkey ASC) * 100
+            + ntile(5) OVER (ORDER BY freq DESC, o_custkey ASC) * 10
+            + ntile(5) OVER (ORDER BY cents DESC, o_custkey ASC) AS BIGINT) AS segment
+  FROM base)
+SELECT segment, CAST(COUNT(*) AS BIGINT) AS n_customers,
+       CAST(SUM(cents) AS BIGINT) / 100.0 AS total_monetary
+FROM seg GROUP BY segment
+""")
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM customer segmentation: recency (days since last order at
     the corpus horizon), frequency (order count), monetary (cents-
@@ -10245,31 +9217,25 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_RFM = """
-WITH per_cust AS (
-  SELECT o_custkey, MAX(o_orderdate) AS last_o,
-         CAST(COUNT(*) AS BIGINT) AS freq,
-         CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
-  FROM orders GROUP BY 1),
-hz AS (SELECT MAX(last_o) AS h FROM per_cust),
-base AS (
-  SELECT o_custkey, CAST(date_diff('day', last_o, h) AS BIGINT) AS rec, freq, cents
-  FROM per_cust CROSS JOIN hz),
-seg AS (
-  SELECT o_custkey, cents,
-         CAST(ntile(5) OVER (ORDER BY rec ASC, o_custkey ASC) * 100
-            + ntile(5) OVER (ORDER BY freq DESC, o_custkey ASC) * 10
-            + ntile(5) OVER (ORDER BY cents DESC, o_custkey ASC) AS BIGINT) AS segment
-  FROM base)
-SELECT segment, CAST(COUNT(*) AS BIGINT) AS n_customers,
-       CAST(SUM(cents) AS BIGINT) / 100.0 AS total_monetary
-FROM seg GROUP BY segment
-"""
-
-QUERIES["rfm_segments"] = q_rfm_segments
-ORACLES["rfm_segments"] = ORACLE_RFM
-
-
+@query(oracle="""
+WITH asia_supp AS (
+  SELECT s_suppkey, s_name FROM supplier
+  JOIN nation ON s_nationkey = n_nationkey
+  JOIN region ON n_regionkey = r_regionkey
+  WHERE r_name = 'ASIA'),
+ps AS (
+  SELECT l_partkey AS p_partkey, s_suppkey, s_name,
+         CAST(floor(CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+              * 10000 / COUNT(*)) AS BIGINT) AS avg_price_ucents
+  FROM lineitem
+  JOIN asia_supp ON l_suppkey = s_suppkey
+  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'red%')
+  GROUP BY 1, 2, 3)
+SELECT p_partkey, s_suppkey, s_name, avg_price_ucents
+FROM ps
+WHERE avg_price_ucents = (SELECT MIN(avg_price_ucents) FROM ps p2
+                          WHERE p2.p_partkey = ps.p_partkey)
+""")
 def q_cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2 shape adapted to the lake's schema (no partsupp): for each
     red-prefixed part, the ASIA supplier(s) achieving the MINIMUM
@@ -10317,30 +9283,25 @@ def q_cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CHEAPEST_SUPPLIER = """
-WITH asia_supp AS (
-  SELECT s_suppkey, s_name FROM supplier
-  JOIN nation ON s_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
-  WHERE r_name = 'ASIA'),
-ps AS (
-  SELECT l_partkey AS p_partkey, s_suppkey, s_name,
-         CAST(floor(CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-              * 10000 / COUNT(*)) AS BIGINT) AS avg_price_ucents
-  FROM lineitem
-  JOIN asia_supp ON l_suppkey = s_suppkey
-  WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'red%')
-  GROUP BY 1, 2, 3)
-SELECT p_partkey, s_suppkey, s_name, avg_price_ucents
-FROM ps
-WHERE avg_price_ucents = (SELECT MIN(avg_price_ucents) FROM ps p2
-                          WHERE p2.p_partkey = ps.p_partkey)
-"""
-
-QUERIES["cheapest_supplier_per_part"] = q_cheapest_supplier_per_part
-ORACLES["cheapest_supplier_per_part"] = ORACLE_CHEAPEST_SUPPLIER
-
-
+@query(oracle="""
+WITH trans AS (
+  SELECT event_type AS cur,
+         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
+  FROM events),
+t2 AS (SELECT cur, nxt FROM trans WHERE nxt IS NOT NULL),
+counts AS (SELECT cur, nxt, CAST(COUNT(*) AS BIGINT) AS n FROM t2 GROUP BY 1, 2),
+modal AS (
+  SELECT cur, nxt AS pred FROM (
+    SELECT cur, nxt, row_number() OVER (PARTITION BY cur ORDER BY n DESC, nxt ASC) AS rn
+    FROM counts) WHERE rn = 1)
+SELECT cur AS event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_transitions,
+       CAST(SUM(CASE WHEN nxt = pred THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
+       round(CAST(SUM(CASE WHEN nxt = pred THEN 1 ELSE 0 END) AS BIGINT)
+             / COUNT(*), 6) AS accuracy
+FROM t2 JOIN modal USING (cur)
+GROUP BY cur
+""")
 def q_markov_prediction_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backtest of the modal-transition predictor: per event type, how
     often the corpus-wide most-likely NEXT type (argmax transition
@@ -10382,30 +9343,38 @@ def q_markov_prediction_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_MARKOV_ACCURACY = """
-WITH trans AS (
-  SELECT event_type AS cur,
-         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
-  FROM events),
-t2 AS (SELECT cur, nxt FROM trans WHERE nxt IS NOT NULL),
-counts AS (SELECT cur, nxt, CAST(COUNT(*) AS BIGINT) AS n FROM t2 GROUP BY 1, 2),
-modal AS (
-  SELECT cur, nxt AS pred FROM (
-    SELECT cur, nxt, row_number() OVER (PARTITION BY cur ORDER BY n DESC, nxt ASC) AS rn
-    FROM counts) WHERE rn = 1)
-SELECT cur AS event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_transitions,
-       CAST(SUM(CASE WHEN nxt = pred THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
-       round(CAST(SUM(CASE WHEN nxt = pred THEN 1 ELSE 0 END) AS BIGINT)
-             / COUNT(*), 6) AS accuracy
-FROM t2 JOIN modal USING (cur)
-GROUP BY cur
-"""
-
-QUERIES["markov_prediction_accuracy"] = q_markov_prediction_accuracy
-ORACLES["markov_prediction_accuracy"] = ORACLE_MARKOV_ACCURACY
-
-
+@query(oracle="""
+WITH users AS (
+  SELECT user_id,
+         CASE WHEN SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+                 > SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
+              THEN 1 ELSE 0 END AS conv
+  FROM events GROUP BY 1),
+arms AS (
+  SELECT CASE WHEN substr(md5('ab1' || chr(31) || CAST(user_id AS VARCHAR)), 1, 1) < '8'
+              THEN 'A' ELSE 'B' END AS arm,
+         CAST(COUNT(*) AS BIGINT) AS n_users,
+         CAST(SUM(conv) AS BIGINT) AS n_converted
+  FROM users GROUP BY 1),
+j AS (
+  SELECT a.n_users AS na, a.n_converted AS ca, b.n_users AS nb, b.n_converted AS cb
+  FROM (SELECT * FROM arms WHERE arm = 'A') a
+  CROSS JOIN (SELECT * FROM arms WHERE arm = 'B') b)
+SELECT na AS n_a, ca AS conv_a, nb AS n_b, cb AS conv_b,
+       round(ca / CAST(na AS DOUBLE), 6) AS rate_a,
+       round(cb / CAST(nb AS DOUBLE), 6) AS rate_b,
+       round((ca / CAST(na AS DOUBLE) - cb / CAST(nb AS DOUBLE))
+             * (ca / CAST(na AS DOUBLE) - cb / CAST(nb AS DOUBLE))
+             / ((ca + cb) / CAST(na + nb AS DOUBLE)
+                * (1 - (ca + cb) / CAST(na + nb AS DOUBLE))
+                * (1.0 / na + 1.0 / nb)), 6) AS z_squared,
+       round((ca / CAST(na AS DOUBLE) - cb / CAST(nb AS DOUBLE))
+             * (ca / CAST(na AS DOUBLE) - cb / CAST(nb AS DOUBLE))
+             / ((ca + cb) / CAST(na + nb AS DOUBLE)
+                * (1 - (ca + cb) / CAST(na + nb AS DOUBLE))
+                * (1.0 / na + 1.0 / nb)), 6) > 3.841459 AS significant_95
+FROM j
+""")
 def q_ab_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion A/B readout: users hash-split into arms by the
     engine-portable md5-parity rule (operators.sampling convention),
@@ -10459,43 +9428,42 @@ def q_ab_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_AB_TEST = """
-WITH users AS (
-  SELECT user_id,
-         CASE WHEN SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                 > SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              THEN 1 ELSE 0 END AS conv
-  FROM events GROUP BY 1),
-arms AS (
-  SELECT CASE WHEN substr(md5('ab1' || chr(31) || CAST(user_id AS VARCHAR)), 1, 1) < '8'
-              THEN 'A' ELSE 'B' END AS arm,
-         CAST(COUNT(*) AS BIGINT) AS n_users,
-         CAST(SUM(conv) AS BIGINT) AS n_converted
-  FROM users GROUP BY 1),
-j AS (
-  SELECT a.n_users AS na, a.n_converted AS ca, b.n_users AS nb, b.n_converted AS cb
-  FROM (SELECT * FROM arms WHERE arm = 'A') a
-  CROSS JOIN (SELECT * FROM arms WHERE arm = 'B') b)
-SELECT na AS n_a, ca AS conv_a, nb AS n_b, cb AS conv_b,
-       round(ca / CAST(na AS DOUBLE), 6) AS rate_a,
-       round(cb / CAST(nb AS DOUBLE), 6) AS rate_b,
-       round((ca / CAST(na AS DOUBLE) - cb / CAST(nb AS DOUBLE))
-             * (ca / CAST(na AS DOUBLE) - cb / CAST(nb AS DOUBLE))
-             / ((ca + cb) / CAST(na + nb AS DOUBLE)
-                * (1 - (ca + cb) / CAST(na + nb AS DOUBLE))
-                * (1.0 / na + 1.0 / nb)), 6) AS z_squared,
-       round((ca / CAST(na AS DOUBLE) - cb / CAST(nb AS DOUBLE))
-             * (ca / CAST(na AS DOUBLE) - cb / CAST(nb AS DOUBLE))
-             / ((ca + cb) / CAST(na + nb AS DOUBLE)
-                * (1 - (ca + cb) / CAST(na + nb AS DOUBLE))
-                * (1.0 / na + 1.0 / nb)), 6) > 3.841459 AS significant_95
-FROM j
-"""
-
-QUERIES["ab_test_report"] = q_ab_test_report
-ORACLES["ab_test_report"] = ORACLE_AB_TEST
-
-
+@query(oracle="""
+SELECT 'lineitem.l_orderkey' AS fk_edge, 'orders.o_orderkey' AS parent_key,
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem) AS n_child_rows,
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem
+        WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)) AS n_orphans
+UNION ALL
+SELECT 'lineitem.l_partkey', 'part.p_partkey',
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem),
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem
+        WHERE l_partkey NOT IN (SELECT p_partkey FROM part))
+UNION ALL
+SELECT 'lineitem.l_suppkey', 'supplier.s_suppkey',
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem),
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem
+        WHERE l_suppkey NOT IN (SELECT s_suppkey FROM supplier))
+UNION ALL
+SELECT 'orders.o_custkey', 'customer.c_custkey',
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM orders),
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
+        WHERE o_custkey NOT IN (SELECT c_custkey FROM customer))
+UNION ALL
+SELECT 'customer.c_nationkey', 'nation.n_nationkey',
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM customer),
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
+        WHERE c_nationkey NOT IN (SELECT n_nationkey FROM nation))
+UNION ALL
+SELECT 'supplier.s_nationkey', 'nation.n_nationkey',
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM supplier),
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM supplier
+        WHERE s_nationkey NOT IN (SELECT n_nationkey FROM nation))
+UNION ALL
+SELECT 'nation.n_regionkey', 'region.r_regionkey',
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM nation),
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
+        WHERE n_regionkey NOT IN (SELECT r_regionkey FROM region))
+""")
 def q_fk_orphan_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whole-lake referential-integrity sweep in one result: orphan
     counts for every FK edge in the schema (lineitem→orders/part/
@@ -10531,47 +9499,29 @@ def q_fk_orphan_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), outs)
 
 
-ORACLE_FK_ORPHANS = """
-SELECT 'lineitem.l_orderkey' AS fk_edge, 'orders.o_orderkey' AS parent_key,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem) AS n_child_rows,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem
-        WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)) AS n_orphans
-UNION ALL
-SELECT 'lineitem.l_partkey', 'part.p_partkey',
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem),
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem
-        WHERE l_partkey NOT IN (SELECT p_partkey FROM part))
-UNION ALL
-SELECT 'lineitem.l_suppkey', 'supplier.s_suppkey',
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem),
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM lineitem
-        WHERE l_suppkey NOT IN (SELECT s_suppkey FROM supplier))
-UNION ALL
-SELECT 'orders.o_custkey', 'customer.c_custkey',
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM orders),
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM orders
-        WHERE o_custkey NOT IN (SELECT c_custkey FROM customer))
-UNION ALL
-SELECT 'customer.c_nationkey', 'nation.n_nationkey',
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM customer),
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM customer
-        WHERE c_nationkey NOT IN (SELECT n_nationkey FROM nation))
-UNION ALL
-SELECT 'supplier.s_nationkey', 'nation.n_nationkey',
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM supplier),
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM supplier
-        WHERE s_nationkey NOT IN (SELECT n_nationkey FROM nation))
-UNION ALL
-SELECT 'nation.n_regionkey', 'region.r_regionkey',
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM nation),
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM nation
-        WHERE n_regionkey NOT IN (SELECT r_regionkey FROM region))
-"""
-
-QUERIES["fk_orphan_matrix"] = q_fk_orphan_matrix
-ORACLES["fk_orphan_matrix"] = ORACLE_FK_ORPHANS
-
-
+@query(oracle="""
+WITH views AS (
+  SELECT user_id AS u, event_id AS v_id, ts AS v_ts FROM events WHERE event_type = 'view'),
+clicks AS (SELECT user_id AS u, ts AS c_ts FROM events WHERE event_type = 'click'),
+purch AS (SELECT user_id AS u, ts AS p_ts FROM events WHERE event_type = 'purchase'),
+vc AS (
+  SELECT v.u, v.v_id, v.v_ts, MIN(c.c_ts) AS c_ts
+  FROM views v JOIN clicks c ON v.u = c.u
+   AND c.c_ts > v.v_ts AND c.c_ts <= v.v_ts + INTERVAL 30 MINUTE
+  GROUP BY 1, 2, 3),
+vcp AS (
+  SELECT vc.u, vc.v_id, MIN(p.p_ts) AS p_ts
+  FROM vc JOIN purch p ON vc.u = p.u
+   AND p.p_ts > vc.c_ts AND p.p_ts <= vc.c_ts + INTERVAL 30 MINUTE
+  GROUP BY 1, 2)
+SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM views) AS n_views,
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM vc) AS n_clicked,
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM vcp) AS n_purchased,
+       round((SELECT COUNT(*) FROM vc) / CAST((SELECT COUNT(*) FROM views) AS DOUBLE), 6)
+         AS view_to_click,
+       round((SELECT COUNT(*) FROM vcp) / CAST((SELECT COUNT(*) FROM vc) AS DOUBLE), 6)
+         AS click_to_purchase
+""")
 def q_timed_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strict time-boxed conversion funnel view→click→purchase: a
     conversion is a view followed by the user's NEXT click within 30
@@ -10626,34 +9576,18 @@ def q_timed_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_TIMED_FUNNEL = """
-WITH views AS (
-  SELECT user_id AS u, event_id AS v_id, ts AS v_ts FROM events WHERE event_type = 'view'),
-clicks AS (SELECT user_id AS u, ts AS c_ts FROM events WHERE event_type = 'click'),
-purch AS (SELECT user_id AS u, ts AS p_ts FROM events WHERE event_type = 'purchase'),
-vc AS (
-  SELECT v.u, v.v_id, v.v_ts, MIN(c.c_ts) AS c_ts
-  FROM views v JOIN clicks c ON v.u = c.u
-   AND c.c_ts > v.v_ts AND c.c_ts <= v.v_ts + INTERVAL 30 MINUTE
-  GROUP BY 1, 2, 3),
-vcp AS (
-  SELECT vc.u, vc.v_id, MIN(p.p_ts) AS p_ts
-  FROM vc JOIN purch p ON vc.u = p.u
-   AND p.p_ts > vc.c_ts AND p.p_ts <= vc.c_ts + INTERVAL 30 MINUTE
-  GROUP BY 1, 2)
-SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM views) AS n_views,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM vc) AS n_clicked,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM vcp) AS n_purchased,
-       round((SELECT COUNT(*) FROM vc) / CAST((SELECT COUNT(*) FROM views) AS DOUBLE), 6)
-         AS view_to_click,
-       round((SELECT COUNT(*) FROM vcp) / CAST((SELECT COUNT(*) FROM vc) AS DOUBLE), 6)
-         AS click_to_purchase
-"""
-
-QUERIES["timed_funnel"] = q_timed_funnel
-ORACLES["timed_funnel"] = ORACLE_TIMED_FUNNEL
-
-
+@query(oracle="""
+WITH monthly AS (
+  SELECT date_trunc('month', o_orderdate) AS m,
+         CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+  FROM orders GROUP BY 1)
+SELECT epoch_us(m) AS month_us,
+       cents / 100.0 AS revenue,
+       lag(cents, 12) OVER (ORDER BY m) / 100.0 AS revenue_prior_year,
+       round((cents - lag(cents, 12) OVER (ORDER BY m))
+             / CAST(lag(cents, 12) OVER (ORDER BY m) AS DOUBLE), 6) AS yoy_growth
+FROM monthly
+""")
 def q_revenue_seasonality_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monthly revenue with year-over-year comparison: cents-exact
     monthly totals, the lag-12 window fetching the same month last
@@ -10679,23 +9613,26 @@ def q_revenue_seasonality_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SEASONALITY = """
-WITH monthly AS (
-  SELECT date_trunc('month', o_orderdate) AS m,
+@query(oracle="""
+WITH per_cust AS (
+  SELECT o_custkey,
          CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
-  FROM orders GROUP BY 1)
-SELECT epoch_us(m) AS month_us,
-       cents / 100.0 AS revenue,
-       lag(cents, 12) OVER (ORDER BY m) / 100.0 AS revenue_prior_year,
-       round((cents - lag(cents, 12) OVER (ORDER BY m))
-             / CAST(lag(cents, 12) OVER (ORDER BY m) AS DOUBLE), 6) AS yoy_growth
-FROM monthly
-"""
-
-QUERIES["revenue_seasonality_yoy"] = q_revenue_seasonality_yoy
-ORACLES["revenue_seasonality_yoy"] = ORACLE_SEASONALITY
-
-
+  FROM orders GROUP BY 1),
+deciled AS (
+  SELECT cents, CAST(ntile(10) OVER (ORDER BY cents DESC, o_custkey ASC) AS BIGINT) AS decile
+  FROM per_cust),
+per_dec AS (
+  SELECT decile, CAST(COUNT(*) AS BIGINT) AS n_customers,
+         CAST(SUM(cents) AS BIGINT) AS dec_cents
+  FROM deciled GROUP BY 1),
+tot AS (SELECT CAST(SUM(dec_cents) AS BIGINT) AS t FROM per_dec)
+SELECT decile, n_customers,
+       dec_cents / 100.0 AS decile_revenue,
+       round(CAST(SUM(dec_cents) OVER (ORDER BY decile
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+             / CAST(t AS DOUBLE), 6) AS cum_revenue_share
+FROM per_dec CROSS JOIN tot
+""")
 def q_pareto_revenue_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue concentration (the 80/20 report): customers ranked by
     cents-exact lifetime revenue (total order, key tiebreak), cut into
@@ -10738,31 +9675,6 @@ def q_pareto_revenue_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PARETO = """
-WITH per_cust AS (
-  SELECT o_custkey,
-         CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
-  FROM orders GROUP BY 1),
-deciled AS (
-  SELECT cents, CAST(ntile(10) OVER (ORDER BY cents DESC, o_custkey ASC) AS BIGINT) AS decile
-  FROM per_cust),
-per_dec AS (
-  SELECT decile, CAST(COUNT(*) AS BIGINT) AS n_customers,
-         CAST(SUM(cents) AS BIGINT) AS dec_cents
-  FROM deciled GROUP BY 1),
-tot AS (SELECT CAST(SUM(dec_cents) AS BIGINT) AS t FROM per_dec)
-SELECT decile, n_customers,
-       dec_cents / 100.0 AS decile_revenue,
-       round(CAST(SUM(dec_cents) OVER (ORDER BY decile
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-             / CAST(t AS DOUBLE), 6) AS cum_revenue_share
-FROM per_dec CROSS JOIN tot
-"""
-
-QUERIES["pareto_revenue_curve"] = q_pareto_revenue_curve
-ORACLES["pareto_revenue_curve"] = ORACLE_PARETO
-
-
 # --- round 7: count-min sketch family + hashing-trick featurizer ----------
 
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.sketches import (  # noqa: E402
@@ -10780,34 +9692,6 @@ def _token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.explode(F.split("text", " ")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).cast("long").alias("n_exact"))
-    )
-
-
-def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy hitters through a count-min sketch: corpus token counts →
-    4×256 integer sketch; the exact top-20 tokens are then point-
-    estimated against the sketch, reporting estimate and (provably
-    ≥ 0) overestimate. The sketch path never sees the corpus twice:
-    one token count, one depth-way explode of the DISTINCT-token
-    table, one 1024-cell aggregate; estimation broadcasts the sketch.
-    Hash is the engine-exact md5-hex scheme of operators/sketches.py,
-    inlined into the DuckDB oracle from the same builder."""
-    from pyspark.sql import Window
-
-    cnt = _token_counts(spark, sf_dir)
-    sketch = cms_build(cnt, "token", "n_exact", _CMS_DEPTH, _CMS_WIDTH)
-    w = Window.orderBy(F.col("n_exact").desc(), F.col("token").asc())
-    top = (
-        cnt.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 20)
-    )
-    est = cms_estimate(sketch, top, "token", _CMS_DEPTH, _CMS_WIDTH)
-    return est.select(
-        "token",
-        "n_exact",
-        "rank",
-        "n_est",
-        (F.col("n_est") - F.col("n_exact")).cast("long").alias("overestimate"),
     )
 
 
@@ -10846,10 +9730,61 @@ GROUP BY 1, 2, 3
 """
 
 
-QUERIES["cms_heavy_hitters"] = q_cms_heavy_hitters
-ORACLES["cms_heavy_hitters"] = _oracle_cms_heavy_hitters()
+@query(oracle=_oracle_cms_heavy_hitters())
+def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Heavy hitters through a count-min sketch: corpus token counts →
+    4×256 integer sketch; the exact top-20 tokens are then point-
+    estimated against the sketch, reporting estimate and (provably
+    ≥ 0) overestimate. The sketch path never sees the corpus twice:
+    one token count, one depth-way explode of the DISTINCT-token
+    table, one 1024-cell aggregate; estimation broadcasts the sketch.
+    Hash is the engine-exact md5-hex scheme of operators/sketches.py,
+    inlined into the DuckDB oracle from the same builder."""
+    from pyspark.sql import Window
+
+    cnt = _token_counts(spark, sf_dir)
+    sketch = cms_build(cnt, "token", "n_exact", _CMS_DEPTH, _CMS_WIDTH)
+    w = Window.orderBy(F.col("n_exact").desc(), F.col("token").asc())
+    top = (
+        cnt.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= 20)
+    )
+    est = cms_estimate(sketch, top, "token", _CMS_DEPTH, _CMS_WIDTH)
+    return est.select(
+        "token",
+        "n_exact",
+        "rank",
+        "n_est",
+        (F.col("n_est") - F.col("n_exact")).cast("long").alias("overestimate"),
+    )
 
 
+def _oracle_cms_merge_parity() -> str:
+    cells = "\n    UNION ALL ".join(
+        f"SELECT {j} AS seed, {cms_bucket_sql('token', j, _CMS_WIDTH)} AS bucket,"
+        " n_exact FROM cnt"
+        for j in range(_CMS_DEPTH)
+    )
+    return f"""
+WITH cnt AS (
+  SELECT token, CAST(COUNT(*) AS BIGINT) AS n_exact
+  FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
+  GROUP BY token),
+cells AS (
+  SELECT seed, bucket, CAST(SUM(n_exact) AS BIGINT) AS counter FROM (
+    {cells}
+  ) GROUP BY 1, 2)
+SELECT CAST(COUNT(*) AS BIGINT) AS n_cells_direct,
+       CAST(COUNT(*) AS BIGINT) AS n_cells_merged,
+       CAST(0 AS BIGINT) AS mismatched_cells,
+       CAST(SUM(counter) AS BIGINT) AS total_direct,
+       CAST(SUM(counter) AS BIGINT) AS total_merged,
+       CAST(MAX(counter) AS BIGINT) AS max_counter
+FROM cells
+"""
+
+
+@query(oracle=_oracle_cms_merge_parity())
 def q_cms_merge_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact mergeability of the count-min sketch — the property that
     makes it the 100 TB/streaming structure: the corpus is split into
@@ -10895,35 +9830,17 @@ def q_cms_merge_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_cms_merge_parity() -> str:
-    cells = "\n    UNION ALL ".join(
-        f"SELECT {j} AS seed, {cms_bucket_sql('token', j, _CMS_WIDTH)} AS bucket,"
-        " n_exact FROM cnt"
-        for j in range(_CMS_DEPTH)
-    )
-    return f"""
-WITH cnt AS (
-  SELECT token, CAST(COUNT(*) AS BIGINT) AS n_exact
-  FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-  GROUP BY token),
-cells AS (
-  SELECT seed, bucket, CAST(SUM(n_exact) AS BIGINT) AS counter FROM (
-    {cells}
-  ) GROUP BY 1, 2)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_cells_direct,
-       CAST(COUNT(*) AS BIGINT) AS n_cells_merged,
-       CAST(0 AS BIGINT) AS mismatched_cells,
-       CAST(SUM(counter) AS BIGINT) AS total_direct,
-       CAST(SUM(counter) AS BIGINT) AS total_merged,
-       CAST(MAX(counter) AS BIGINT) AS max_counter
-FROM cells
-"""
-
-
-QUERIES["cms_merge_parity"] = q_cms_merge_parity
-ORACLES["cms_merge_parity"] = _oracle_cms_merge_parity()
-
-
+@query(oracle="""
+WITH tok AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS token
+  FROM documents WHERE doc_id % 17 = 0)
+SELECT doc_id,
+       (('0x' || substr(md5('fh:' || token), 1, 4))::BIGINT % 64) AS bucket,
+       CAST(SUM(CASE WHEN ('0x' || substr(md5('fhsign:' || token), 1, 1))::BIGINT % 2 = 0
+                THEN 1 ELSE -1 END) AS BIGINT) AS feat
+FROM tok
+GROUP BY 1, 2
+""")
 def q_feature_hash_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signed hashing-trick featurizer (Weinberger et al. 2009): token
     → one of 64 feature buckets via the engine-exact md5-hex hash, a
@@ -10952,22 +9869,58 @@ def q_feature_hash_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_FEATURE_HASH = """
-WITH tok AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS token
-  FROM documents WHERE doc_id % 17 = 0)
-SELECT doc_id,
-       (('0x' || substr(md5('fh:' || token), 1, 4))::BIGINT % 64) AS bucket,
-       CAST(SUM(CASE WHEN ('0x' || substr(md5('fhsign:' || token), 1, 1))::BIGINT % 2 = 0
-                THEN 1 ELSE -1 END) AS BIGINT) AS feat
-FROM tok
-GROUP BY 1, 2
-"""
-
-QUERIES["feature_hash_features"] = q_feature_hash_features
-ORACLES["feature_hash_features"] = ORACLE_FEATURE_HASH
-
-
+@query(oracle="""
+WITH toks AS (
+  SELECT doc_id, len(string_split(text, ' ')) AS dl,
+         unnest(string_split(text, ' ')) AS term
+  FROM documents),
+tf AS (
+  SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf, any_value(dl) AS dl
+  FROM toks GROUP BY 1, 2),
+dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
+g AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+         CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS sum_dl
+  FROM documents),
+bm25 AS (
+  SELECT t.doc_id,
+         CAST(SUM(CAST(round(
+           round(
+             ln(1.0 + (g.n_docs - d.df + 0.5) / (d.df + 0.5))
+               * t.tf * (1.2 + 1.0)
+               / (t.tf + 1.2 * (1.0 - 0.75
+                    + 0.75 * t.dl / (CAST(g.sum_dl AS DOUBLE) / g.n_docs))),
+             6) * 1000000) AS BIGINT)) AS BIGINT) AS bm25_micro
+  FROM tf t JOIN dfreq d USING (term) CROSS JOIN g
+  WHERE t.term IN ('join', 'stream', 'filter')
+  GROUP BY 1),
+rank_a AS (
+  SELECT doc_id, CAST(row_number() OVER (
+           ORDER BY bm25_micro DESC, doc_id ASC) AS BIGINT) AS rank
+  FROM bm25 QUALIFY rank <= 30),
+dots AS (
+  SELECT t.doc_id,
+         CAST(SUM(CAST(round(t.tf * (ln((g.n_docs + 1.0) / (d.df + 1.0)) + 1.0)
+                             * 10000) AS BIGINT)) AS BIGINT) AS dot_int
+  FROM tf t JOIN dfreq d USING (term) CROSS JOIN g
+  WHERE t.term IN ('join', 'stream', 'filter')
+  GROUP BY 1),
+rank_b AS (
+  SELECT doc_id, CAST(row_number() OVER (
+           ORDER BY dot_int DESC, doc_id ASC) AS BIGINT) AS rank
+  FROM dots QUALIFY rank <= 30),
+fused AS (
+  SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
+         a.rank AS rank_bm25, b.rank AS rank_dot,
+         COALESCE(CAST(round(1000000.0 / (60 + a.rank)) AS BIGINT), 0)
+           + COALESCE(CAST(round(1000000.0 / (60 + b.rank)) AS BIGINT), 0)
+           AS rrf_micro
+  FROM rank_a a FULL OUTER JOIN rank_b b ON a.doc_id = b.doc_id)
+SELECT doc_id, rank_bm25, rank_dot, rrf_micro,
+       CAST(row_number() OVER (ORDER BY rrf_micro DESC, doc_id ASC) AS BIGINT)
+         AS fused_rank
+FROM fused QUALIFY fused_rank <= 15
+""")
 def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval with reciprocal-rank fusion: for the query
     {join, stream, filter}, ranking A scores documents by query BM25
@@ -11028,63 +9981,42 @@ def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_HYBRID_RRF = """
-WITH toks AS (
-  SELECT doc_id, len(string_split(text, ' ')) AS dl,
-         unnest(string_split(text, ' ')) AS term
-  FROM documents),
-tf AS (
-  SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf, any_value(dl) AS dl
-  FROM toks GROUP BY 1, 2),
-dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-g AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS sum_dl
-  FROM documents),
-bm25 AS (
-  SELECT t.doc_id,
-         CAST(SUM(CAST(round(
-           round(
-             ln(1.0 + (g.n_docs - d.df + 0.5) / (d.df + 0.5))
-               * t.tf * (1.2 + 1.0)
-               / (t.tf + 1.2 * (1.0 - 0.75
-                    + 0.75 * t.dl / (CAST(g.sum_dl AS DOUBLE) / g.n_docs))),
-             6) * 1000000) AS BIGINT)) AS BIGINT) AS bm25_micro
-  FROM tf t JOIN dfreq d USING (term) CROSS JOIN g
-  WHERE t.term IN ('join', 'stream', 'filter')
-  GROUP BY 1),
-rank_a AS (
-  SELECT doc_id, CAST(row_number() OVER (
-           ORDER BY bm25_micro DESC, doc_id ASC) AS BIGINT) AS rank
-  FROM bm25 QUALIFY rank <= 30),
-dots AS (
-  SELECT t.doc_id,
-         CAST(SUM(CAST(round(t.tf * (ln((g.n_docs + 1.0) / (d.df + 1.0)) + 1.0)
-                             * 10000) AS BIGINT)) AS BIGINT) AS dot_int
-  FROM tf t JOIN dfreq d USING (term) CROSS JOIN g
-  WHERE t.term IN ('join', 'stream', 'filter')
-  GROUP BY 1),
-rank_b AS (
-  SELECT doc_id, CAST(row_number() OVER (
-           ORDER BY dot_int DESC, doc_id ASC) AS BIGINT) AS rank
-  FROM dots QUALIFY rank <= 30),
-fused AS (
-  SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
-         a.rank AS rank_bm25, b.rank AS rank_dot,
-         COALESCE(CAST(round(1000000.0 / (60 + a.rank)) AS BIGINT), 0)
-           + COALESCE(CAST(round(1000000.0 / (60 + b.rank)) AS BIGINT), 0)
-           AS rrf_micro
-  FROM rank_a a FULL OUTER JOIN rank_b b ON a.doc_id = b.doc_id)
-SELECT doc_id, rank_bm25, rank_dot, rrf_micro,
-       CAST(row_number() OVER (ORDER BY rrf_micro DESC, doc_id ASC) AS BIGINT)
-         AS fused_rank
-FROM fused QUALIFY fused_rank <= 15
+def _oracle_stream_cms_topk() -> str:
+    key = "key"
+    cells = "\n    UNION ALL ".join(
+        f"SELECT {j} AS seed, {cms_bucket_sql(key, j, _CMS_WIDTH)} AS bucket,"
+        " n_exact FROM cnt"
+        for j in range(_CMS_DEPTH)
+    )
+    probes = "\n    UNION ALL ".join(
+        f"SELECT key, n_exact, rank, {j} AS seed,"
+        f" {cms_bucket_sql(key, j, _CMS_WIDTH)} AS bucket FROM top"
+        for j in range(_CMS_DEPTH)
+    )
+    return f"""
+WITH cnt AS (
+  SELECT CAST(user_id AS VARCHAR) AS key, CAST(COUNT(*) AS BIGINT) AS n_exact
+  FROM events GROUP BY 1),
+cells AS (
+  SELECT seed, bucket, CAST(SUM(n_exact) AS BIGINT) AS counter FROM (
+    {cells}
+  ) GROUP BY 1, 2),
+top AS (
+  SELECT key, n_exact,
+         CAST(row_number() OVER (ORDER BY n_exact DESC, key ASC) AS BIGINT) AS rank
+  FROM cnt QUALIFY rank <= 10),
+probe_cells AS (
+    {probes}
+)
+SELECT CAST(p.key AS BIGINT) AS user_id, p.n_exact, p.rank,
+       CAST(MIN(COALESCE(c.counter, 0)) AS BIGINT) AS n_est,
+       CAST(MIN(COALESCE(c.counter, 0)) - p.n_exact AS BIGINT) AS overestimate
+FROM probe_cells p LEFT JOIN cells c ON p.seed = c.seed AND p.bucket = c.bucket
+GROUP BY p.key, p.n_exact, p.rank
 """
 
-QUERIES["hybrid_search_rrf"] = q_hybrid_search_rrf
-ORACLES["hybrid_search_rrf"] = ORACLE_HYBRID_RRF
 
-
+@query(oracle=_oracle_stream_cms_topk())
 def q_stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming heavy hitters through a MAINTAINED count-min sketch
     (streaming/sketch_stream.py): events replay in 3 deterministic
@@ -11125,45 +10057,15 @@ def q_stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_stream_cms_topk() -> str:
-    key = "key"
-    cells = "\n    UNION ALL ".join(
-        f"SELECT {j} AS seed, {cms_bucket_sql(key, j, _CMS_WIDTH)} AS bucket,"
-        " n_exact FROM cnt"
-        for j in range(_CMS_DEPTH)
-    )
-    probes = "\n    UNION ALL ".join(
-        f"SELECT key, n_exact, rank, {j} AS seed,"
-        f" {cms_bucket_sql(key, j, _CMS_WIDTH)} AS bucket FROM top"
-        for j in range(_CMS_DEPTH)
-    )
-    return f"""
-WITH cnt AS (
-  SELECT CAST(user_id AS VARCHAR) AS key, CAST(COUNT(*) AS BIGINT) AS n_exact
-  FROM events GROUP BY 1),
-cells AS (
-  SELECT seed, bucket, CAST(SUM(n_exact) AS BIGINT) AS counter FROM (
-    {cells}
-  ) GROUP BY 1, 2),
-top AS (
-  SELECT key, n_exact,
-         CAST(row_number() OVER (ORDER BY n_exact DESC, key ASC) AS BIGINT) AS rank
-  FROM cnt QUALIFY rank <= 10),
-probe_cells AS (
-    {probes}
-)
-SELECT CAST(p.key AS BIGINT) AS user_id, p.n_exact, p.rank,
-       CAST(MIN(COALESCE(c.counter, 0)) AS BIGINT) AS n_est,
-       CAST(MIN(COALESCE(c.counter, 0)) - p.n_exact AS BIGINT) AS overestimate
-FROM probe_cells p LEFT JOIN cells c ON p.seed = c.seed AND p.bucket = c.bucket
-GROUP BY p.key, p.n_exact, p.rank
-"""
-
-
-QUERIES["stream_cms_topk"] = q_stream_cms_topk
-ORACLES["stream_cms_topk"] = _oracle_stream_cms_topk()
-
-
+@query(oracle="""
+SELECT epoch_us(date_trunc('month', o_orderdate)) AS month_us,
+       o_orderpriority,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0
+         AS revenue
+FROM orders
+GROUP BY 1, 2
+""")
 def q_mv_rewrite_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized-view rewrite: a DAILY (order day × priority)
     pre-aggregate is materialized once per process (layout cache) and
@@ -11207,20 +10109,25 @@ def q_mv_rewrite_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_MV_REWRITE = """
-SELECT epoch_us(date_trunc('month', o_orderdate)) AS month_us,
-       o_orderpriority,
-       CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0
-         AS revenue
-FROM orders
-GROUP BY 1, 2
-"""
-
-QUERIES["mv_rewrite_rollup"] = q_mv_rewrite_rollup
-ORACLES["mv_rewrite_rollup"] = ORACLE_MV_REWRITE
-
-
+@query(oracle="""
+WITH t AS (
+  SELECT doc_id, string_split(text, ' ') AS toks,
+         len(string_split(text, ' ')) AS n
+  FROM documents),
+b AS (
+  SELECT doc_id, toks,
+         unnest(generate_series(0, CAST(n // 20 - 1 AS BIGINT))) AS block
+  FROM t WHERE n >= 20),
+s AS (
+  SELECT doc_id, toks, block,
+         block * 20
+           + (('0x' || substr(md5('span:' || doc_id || ':' || block), 1, 4))::BIGINT % 18)
+           AS span_start
+  FROM b)
+SELECT doc_id, block, span_start,
+       array_to_string(toks[span_start + 1 : span_start + 3], ' ') AS span_text
+FROM s
+""")
 def q_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5-style span-corruption PLAN, fully deterministic: each
     document is cut into 20-token blocks, and every full block masks
@@ -11262,48 +10169,7 @@ def q_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SPAN_CORRUPTION = """
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks,
-         len(string_split(text, ' ')) AS n
-  FROM documents),
-b AS (
-  SELECT doc_id, toks,
-         unnest(generate_series(0, CAST(n // 20 - 1 AS BIGINT))) AS block
-  FROM t WHERE n >= 20),
-s AS (
-  SELECT doc_id, toks, block,
-         block * 20
-           + (('0x' || substr(md5('span:' || doc_id || ':' || block), 1, 4))::BIGINT % 18)
-           AS span_start
-  FROM b)
-SELECT doc_id, block, span_start,
-       array_to_string(toks[span_start + 1 : span_start + 3], ' ') AS span_text
-FROM s
-"""
-
-QUERIES["span_corruption_plan"] = q_span_corruption_plan
-ORACLES["span_corruption_plan"] = ORACLE_SPAN_CORRUPTION
-
-
-def q_blocking_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocking-quality evaluation of banded-MinHash LSH
-    (operators.dedup_near.blocking_quality): pair completeness and
-    reduction ratio against the exact ≥0.5-Jaccard truth set. Uses the
-    ENGINE-PORTABLE md5-hex minhash (16 hashes, r=2×b=8) so the DuckDB
-    oracle recomputes the candidate set value-for-value instead of
-    arguing recall analytically — both the blocking and its evaluation
-    are pinned. Candidates stay block-internal (band join); truth is
-    the prefix-filtered exact pair set; the report is one row of exact
-    integers + two 6dp divisions."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup_near import (
-        blocking_quality,
-    )
-
-    return blocking_quality(load_table(spark, sf_dir, "documents"))
-
-
-ORACLE_BLOCKING_QUALITY = """
+@query(oracle="""
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS t FROM documents
   WHERE len(string_split(text, ' ')) >= 3),
@@ -11343,29 +10209,22 @@ SELECT n_docs, n_exact, n_candidates, n_caught,
        round(1.0 - n_candidates
              / CAST(n_docs * (n_docs - 1) // 2 AS DOUBLE), 6) AS reduction_ratio
 FROM n, c1, e1, g1
-"""
-
-QUERIES["blocking_quality_report"] = q_blocking_quality_report
-ORACLES["blocking_quality_report"] = ORACLE_BLOCKING_QUALITY
-
-
-def q_lsh_scurve_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded-LSH S-curve evaluation (operators.dedup_near.
-    lsh_scurve_eval — MMDS ch. 3): per exact-Jaccard similarity
-    bucket, the observed share of true pairs the band join surfaced
-    next to the analytic 1−(1−s^r)^b at the bucket midpoint — the
-    per-bucket refinement of blocking_quality_report. Integer
-    bucketing (shared·20 div union, clamped) so no float boundary can
-    disagree; the expected probability is one composed float tree
-    built ONCE and inlined verbatim into both engines (pow() would
-    route through libm and is not ULP-portable). Candidates stay
-    block-internal; the caught join is amplification-free; the output
-    is ≤20 rows."""
+""")
+def q_blocking_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Blocking-quality evaluation of banded-MinHash LSH
+    (operators.dedup_near.blocking_quality): pair completeness and
+    reduction ratio against the exact ≥0.5-Jaccard truth set. Uses the
+    ENGINE-PORTABLE md5-hex minhash (16 hashes, r=2×b=8) so the DuckDB
+    oracle recomputes the candidate set value-for-value instead of
+    arguing recall analytically — both the blocking and its evaluation
+    are pinned. Candidates stay block-internal (band join); truth is
+    the prefix-filtered exact pair set; the report is one row of exact
+    integers + two 6dp divisions."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup_near import (
-        lsh_scurve_eval,
+        blocking_quality,
     )
 
-    return lsh_scurve_eval(load_table(spark, sf_dir, "documents"))
+    return blocking_quality(load_table(spark, sf_dir, "documents"))
 
 
 def _oracle_lsh_scurve(buckets: int = 20) -> str:
@@ -11419,10 +10278,65 @@ FROM per
 """
 
 
-QUERIES["lsh_scurve_eval"] = q_lsh_scurve_eval
-ORACLES["lsh_scurve_eval"] = _oracle_lsh_scurve()
+@query(oracle=_oracle_lsh_scurve())
+def q_lsh_scurve_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Banded-LSH S-curve evaluation (operators.dedup_near.
+    lsh_scurve_eval — MMDS ch. 3): per exact-Jaccard similarity
+    bucket, the observed share of true pairs the band join surfaced
+    next to the analytic 1−(1−s^r)^b at the bucket midpoint — the
+    per-bucket refinement of blocking_quality_report. Integer
+    bucketing (shared·20 div union, clamped) so no float boundary can
+    disagree; the expected probability is one composed float tree
+    built ONCE and inlined verbatim into both engines (pow() would
+    route through libm and is not ULP-portable). Candidates stay
+    block-internal; the caught join is amplification-free; the output
+    is ≤20 rows."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup_near import (
+        lsh_scurve_eval,
+    )
+
+    return lsh_scurve_eval(load_table(spark, sf_dir, "documents"))
 
 
+def _oracle_cms_join_size() -> str:
+    def cells(src: str) -> str:
+        return "\n    UNION ALL ".join(
+            f"SELECT {j} AS seed, {cms_bucket_sql('key', j, _CMS_WIDTH)} AS bucket,"
+            f" n FROM {src}"
+            for j in range(_CMS_DEPTH)
+        )
+
+    return f"""
+WITH o AS (
+  SELECT CAST(o_orderkey AS VARCHAR) AS key, CAST(COUNT(*) AS BIGINT) AS n
+  FROM orders GROUP BY 1),
+l AS (
+  SELECT CAST(l_orderkey AS VARCHAR) AS key, CAST(COUNT(*) AS BIGINT) AS n
+  FROM lineitem GROUP BY 1),
+sk_o AS (
+  SELECT seed, bucket, CAST(SUM(n) AS BIGINT) AS counter FROM (
+    {cells('o')}
+  ) GROUP BY 1, 2),
+sk_l AS (
+  SELECT seed, bucket, CAST(SUM(n) AS BIGINT) AS counter FROM (
+    {cells('l')}
+  ) GROUP BY 1, 2),
+est AS (
+  SELECT CAST(MIN(ip) AS DECIMAL(38,0)) AS est_size FROM (
+    SELECT a.seed, SUM(CAST(a.counter AS HUGEINT) * CAST(b.counter AS HUGEINT)) AS ip
+    FROM sk_o a JOIN sk_l b ON a.seed = b.seed AND a.bucket = b.bucket
+    GROUP BY 1)),
+exact AS (
+  SELECT CAST(SUM(o.n * l.n) AS BIGINT) AS exact_size
+  FROM o JOIN l USING (key))
+SELECT exact_size, CAST(est_size AS VARCHAR) AS est_size,
+       CAST(CAST(est_size - exact_size AS DECIMAL(38,0)) AS VARCHAR)
+         AS overestimate
+FROM exact, est
+"""
+
+
+@query(oracle=_oracle_cms_join_size())
 def q_cms_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-join cardinality estimation WITHOUT running the join: the
     orders- and lineitem-side key-frequency tables collapse to 4×256
@@ -11472,70 +10386,6 @@ def q_cms_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_cms_join_size() -> str:
-    def cells(src: str) -> str:
-        return "\n    UNION ALL ".join(
-            f"SELECT {j} AS seed, {cms_bucket_sql('key', j, _CMS_WIDTH)} AS bucket,"
-            f" n FROM {src}"
-            for j in range(_CMS_DEPTH)
-        )
-
-    return f"""
-WITH o AS (
-  SELECT CAST(o_orderkey AS VARCHAR) AS key, CAST(COUNT(*) AS BIGINT) AS n
-  FROM orders GROUP BY 1),
-l AS (
-  SELECT CAST(l_orderkey AS VARCHAR) AS key, CAST(COUNT(*) AS BIGINT) AS n
-  FROM lineitem GROUP BY 1),
-sk_o AS (
-  SELECT seed, bucket, CAST(SUM(n) AS BIGINT) AS counter FROM (
-    {cells('o')}
-  ) GROUP BY 1, 2),
-sk_l AS (
-  SELECT seed, bucket, CAST(SUM(n) AS BIGINT) AS counter FROM (
-    {cells('l')}
-  ) GROUP BY 1, 2),
-est AS (
-  SELECT CAST(MIN(ip) AS DECIMAL(38,0)) AS est_size FROM (
-    SELECT a.seed, SUM(CAST(a.counter AS HUGEINT) * CAST(b.counter AS HUGEINT)) AS ip
-    FROM sk_o a JOIN sk_l b ON a.seed = b.seed AND a.bucket = b.bucket
-    GROUP BY 1)),
-exact AS (
-  SELECT CAST(SUM(o.n * l.n) AS BIGINT) AS exact_size
-  FROM o JOIN l USING (key))
-SELECT exact_size, CAST(est_size AS VARCHAR) AS est_size,
-       CAST(CAST(est_size - exact_size AS DECIMAL(38,0)) AS VARCHAR)
-         AS overestimate
-FROM exact, est
-"""
-
-
-QUERIES["cms_join_size"] = q_cms_join_size
-ORACLES["cms_join_size"] = _oracle_cms_join_size()
-
-
-def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming PSI drift monitor (streaming/drift_stream.py): the
-    events table replays in 3 deterministic micro-batches; each batch's
-    value distribution is scored against the materialized reference
-    (phase 0's distribution) over 10 fixed [0,1000) bins, appending one
-    (batch_id, n_batch, psi) row per trigger. Batch 0 scores its own
-    reference — psi must be exactly 0.0, a built-in calibration check.
-    Per-batch work is |batch| → 10 bins + constant math; the monitor's
-    state is grid-sized. The oracle recomputes each phase's PSI
-    directly (scaled-BIGINT term sums — hash-stable)."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.drift_stream import (
-        psi_stream_phased,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "value")
-    phases = [ev.where(F.col("event_id") % 3 == i) for i in range(3)]
-    out, _stats = psi_stream_phased(
-        spark, phases, reference=phases[0], value_col="value"
-    )
-    return out.select("batch_id", "n_batch", "psi")
-
-
 def _oracle_stream_drift() -> str:
     bin_expr = (
         "LEAST(9, GREATEST(0, CAST(floor(value / 100.0) AS BIGINT)))"
@@ -11562,10 +10412,55 @@ SELECT {i} AS batch_id,
     return "\nUNION ALL\n".join(parts)
 
 
-QUERIES["stream_drift_monitor"] = q_stream_drift_monitor
-ORACLES["stream_drift_monitor"] = _oracle_stream_drift()
+@query(oracle=_oracle_stream_drift())
+def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming PSI drift monitor (streaming/drift_stream.py): the
+    events table replays in 3 deterministic micro-batches; each batch's
+    value distribution is scored against the materialized reference
+    (phase 0's distribution) over 10 fixed [0,1000) bins, appending one
+    (batch_id, n_batch, psi) row per trigger. Batch 0 scores its own
+    reference — psi must be exactly 0.0, a built-in calibration check.
+    Per-batch work is |batch| → 10 bins + constant math; the monitor's
+    state is grid-sized. The oracle recomputes each phase's PSI
+    directly (scaled-BIGINT term sums — hash-stable)."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.drift_stream import (
+        psi_stream_phased,
+    )
+
+    ev = load_table(spark, sf_dir, "events").select("event_id", "value")
+    phases = [ev.where(F.col("event_id") % 3 == i) for i in range(3)]
+    out, _stats = psi_stream_phased(
+        spark, phases, reference=phases[0], value_col="value"
+    )
+    return out.select("batch_id", "n_batch", "psi")
 
 
+@query(oracle="""
+WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 20),
+full_nn AS (
+  SELECT q_id, vec_id FROM (
+    SELECT q.q_id, e.vec_id,
+           row_number() OVER (
+             PARTITION BY q.q_id
+             ORDER BY round(list_cosine_similarity(e.embedding::DOUBLE[], q.q_emb::DOUBLE[]), 6) DESC,
+                      e.vec_id ASC) AS rank
+    FROM embeddings e CROSS JOIN q
+  ) WHERE rank <= 10),
+trunc_nn AS (
+  SELECT q_id, vec_id FROM (
+    SELECT q.q_id, e.vec_id,
+           row_number() OVER (
+             PARTITION BY q.q_id
+             ORDER BY round(list_cosine_similarity(
+                        (e.embedding[1:16])::DOUBLE[], (q.q_emb[1:16])::DOUBLE[]), 6) DESC,
+                      e.vec_id ASC) AS rank
+    FROM embeddings e CROSS JOIN q
+  ) WHERE rank <= 10)
+SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_overlap,
+       round(COUNT(*) / 10.0, 6) AS recall_at_10
+FROM full_nn JOIN trunc_nn USING (q_id, vec_id)
+GROUP BY q_id
+""")
 def q_embedding_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-style dimension-truncation audit: for 20 probe
     vectors, the exact top-10 cosine neighbor set under the FULL 64-dim
@@ -11597,42 +10492,26 @@ def q_embedding_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EMB_TRUNCATION = """
-WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 20),
-full_nn AS (
-  SELECT q_id, vec_id FROM (
-    SELECT q.q_id, e.vec_id,
-           row_number() OVER (
-             PARTITION BY q.q_id
-             ORDER BY round(list_cosine_similarity(e.embedding::DOUBLE[], q.q_emb::DOUBLE[]), 6) DESC,
-                      e.vec_id ASC) AS rank
-    FROM embeddings e CROSS JOIN q
-  ) WHERE rank <= 10),
-trunc_nn AS (
-  SELECT q_id, vec_id FROM (
-    SELECT q.q_id, e.vec_id,
-           row_number() OVER (
-             PARTITION BY q.q_id
-             ORDER BY round(list_cosine_similarity(
-                        (e.embedding[1:16])::DOUBLE[], (q.q_emb[1:16])::DOUBLE[]), 6) DESC,
-                      e.vec_id ASC) AS rank
-    FROM embeddings e CROSS JOIN q
-  ) WHERE rank <= 10)
-SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_overlap,
-       round(COUNT(*) / 10.0, 6) AS recall_at_10
-FROM full_nn JOIN trunc_nn USING (q_id, vec_id)
-GROUP BY q_id
-"""
-
-QUERIES["embedding_truncation_audit"] = q_embedding_truncation_audit
-ORACLES["embedding_truncation_audit"] = ORACLE_EMB_TRUNCATION
-
-
 # ---------------------------------------------------------------------------
 # Round 7 (cont.): range-join, window-shape, CBO-stats, and LM-scoring family
 # ---------------------------------------------------------------------------
 
 
+@query(oracle="""
+WITH iv AS (
+  SELECT user_id, event_id, epoch_us(ts) AS s,
+         epoch_us(ts) + CAST(round(greatest(value, 0) * 1000000) AS BIGINT) AS e
+  FROM events),
+p AS (
+  SELECT a.user_id, least(a.e, b.e) - greatest(a.s, b.s) AS overlap
+  FROM iv a JOIN iv b
+    ON a.user_id = b.user_id AND a.event_id < b.event_id
+   AND a.s < b.e AND b.s < a.e)
+SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_pairs,
+       CAST(SUM(overlap) AS BIGINT) AS total_overlap_us,
+       CAST(MAX(overlap) AS BIGINT) AS max_overlap_us
+FROM p GROUP BY user_id
+""")
 def q_interval_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user interval-overlap self-join
     (operators.rangejoin.interval_overlap_join): each event is the
@@ -11670,26 +10549,23 @@ def q_interval_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_INTERVAL_OVERLAP = """
-WITH iv AS (
-  SELECT user_id, event_id, epoch_us(ts) AS s,
-         epoch_us(ts) + CAST(round(greatest(value, 0) * 1000000) AS BIGINT) AS e
-  FROM events),
-p AS (
-  SELECT a.user_id, least(a.e, b.e) - greatest(a.s, b.s) AS overlap
-  FROM iv a JOIN iv b
-    ON a.user_id = b.user_id AND a.event_id < b.event_id
-   AND a.s < b.e AND b.s < a.e)
-SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       CAST(SUM(overlap) AS BIGINT) AS total_overlap_us,
-       CAST(MAX(overlap) AS BIGINT) AS max_overlap_us
-FROM p GROUP BY user_id
-"""
-
-QUERIES["interval_overlap_pairs"] = q_interval_overlap_pairs
-ORACLES["interval_overlap_pairs"] = ORACLE_INTERVAL_OVERLAP
-
-
+@query(oracle="""
+WITH months AS (
+  SELECT DISTINCT o_custkey,
+         CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1 AS BIGINT) AS m
+  FROM orders),
+isl AS (
+  SELECT o_custkey, m,
+         m - row_number() OVER (PARTITION BY o_custkey ORDER BY m) AS g
+  FROM months),
+runs AS (
+  SELECT o_custkey, g, CAST(COUNT(*) AS BIGINT) AS len
+  FROM isl GROUP BY 1, 2)
+SELECT o_custkey, CAST(MAX(len) AS BIGINT) AS longest_streak,
+       CAST(SUM(len) AS BIGINT) AS n_active_months,
+       CAST(COUNT(*) AS BIGINT) AS n_streaks
+FROM runs GROUP BY o_custkey HAVING MAX(len) >= 3
+""")
 def q_order_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gaps-and-islands: longest run of CONSECUTIVE order-months per
     customer (m - row_number() island key over distinct active
@@ -11721,28 +10597,26 @@ def q_order_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ORDER_STREAKS = """
-WITH months AS (
-  SELECT DISTINCT o_custkey,
-         CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1 AS BIGINT) AS m
-  FROM orders),
-isl AS (
-  SELECT o_custkey, m,
-         m - row_number() OVER (PARTITION BY o_custkey ORDER BY m) AS g
-  FROM months),
-runs AS (
-  SELECT o_custkey, g, CAST(COUNT(*) AS BIGINT) AS len
-  FROM isl GROUP BY 1, 2)
-SELECT o_custkey, CAST(MAX(len) AS BIGINT) AS longest_streak,
-       CAST(SUM(len) AS BIGINT) AS n_active_months,
-       CAST(COUNT(*) AS BIGINT) AS n_streaks
-FROM runs GROUP BY o_custkey HAVING MAX(len) >= 3
-"""
-
-QUERIES["order_streaks"] = q_order_streaks
-ORACLES["order_streaks"] = ORACLE_ORDER_STREAKS
+_EWMA_TERMS = " + ".join(
+    f"lag(n_events, {j}) OVER w * {1 << (16 - j)}" for j in range(1, 17)
+)
 
 
+@query(oracle=f"""
+WITH hourly AS (
+  SELECT event_type, epoch_us(date_trunc('hour', ts)) AS hour_us,
+         CAST(COUNT(*) AS BIGINT) AS n_events
+  FROM events GROUP BY 1, 2),
+lagged AS (
+  SELECT event_type, hour_us, n_events,
+         CAST({_EWMA_TERMS} AS BIGINT) AS ws
+  FROM hourly
+  WINDOW w AS (PARTITION BY event_type ORDER BY hour_us))
+SELECT event_type, hour_us, n_events,
+       round(ws / 65535.0, 6) AS ewma,
+       n_events * 65535 > 3 * ws AS is_spike
+FROM lagged WHERE ws IS NOT NULL
+""")
 def q_ewma_event_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer-exact EWMA spike detector
     (operators.timeseries.ewma_flags, alpha=1/2, span=16) over hourly
@@ -11766,43 +10640,7 @@ def q_ewma_event_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EWMA_TERMS = " + ".join(
-    f"lag(n_events, {j}) OVER w * {1 << (16 - j)}" for j in range(1, 17)
-)
-ORACLE_EWMA_ANOMALIES = f"""
-WITH hourly AS (
-  SELECT event_type, epoch_us(date_trunc('hour', ts)) AS hour_us,
-         CAST(COUNT(*) AS BIGINT) AS n_events
-  FROM events GROUP BY 1, 2),
-lagged AS (
-  SELECT event_type, hour_us, n_events,
-         CAST({_EWMA_TERMS} AS BIGINT) AS ws
-  FROM hourly
-  WINDOW w AS (PARTITION BY event_type ORDER BY hour_us))
-SELECT event_type, hour_us, n_events,
-       round(ws / 65535.0, 6) AS ewma,
-       n_events * 65535 > 3 * ws AS is_spike
-FROM lagged WHERE ws IS NOT NULL
-"""
-
-QUERIES["ewma_event_anomalies"] = q_ewma_event_anomalies
-ORACLES["ewma_event_anomalies"] = ORACLE_EWMA_ANOMALIES
-
-
-def q_bigram_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bigram-LM familiarity score per document
-    (operators.collocations.bigram_familiarity): mean corpus
-    frequency of the document's adjacent-token bigrams — the
-    integer-exact stand-in for perplexity-based quality filtering.
-    Two wordcount aggregates + one vocabulary-shaped join."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.collocations import (
-        bigram_familiarity,
-    )
-
-    return bigram_familiarity(load_table(spark, sf_dir, "documents"))
-
-
-ORACLE_BIGRAM_FAMILIARITY = """
+@query(oracle="""
 WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
 bi AS (
   SELECT doc_id, t[i] AS w1, t[i+1] AS w2
@@ -11817,12 +10655,40 @@ SELECT doc_id,
        round(CAST(SUM(k * n) AS BIGINT) / CAST(SUM(k) AS DOUBLE), 6) AS familiarity
 FROM per_doc JOIN corpus USING (w1, w2)
 GROUP BY doc_id
-"""
+""")
+def q_bigram_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bigram-LM familiarity score per document
+    (operators.collocations.bigram_familiarity): mean corpus
+    frequency of the document's adjacent-token bigrams — the
+    integer-exact stand-in for perplexity-based quality filtering.
+    Two wordcount aggregates + one vocabulary-shaped join."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.collocations import (
+        bigram_familiarity,
+    )
 
-QUERIES["bigram_familiarity"] = q_bigram_familiarity
-ORACLES["bigram_familiarity"] = ORACLE_BIGRAM_FAMILIARITY
+    return bigram_familiarity(load_table(spark, sf_dir, "documents"))
 
 
+@query(oracle="""
+WITH pts AS (
+  SELECT CAST(round(p_retailprice * 100) AS BIGINT) AS x,
+         CAST(p_size AS BIGINT) AS y, p_partkey
+  FROM part),
+grp AS (
+  SELECT x, y, CAST(COUNT(*) AS BIGINT) AS n_rows, MIN(p_partkey) AS min_id
+  FROM pts GROUP BY 1, 2),
+best AS (
+  SELECT x, y, n_rows, min_id FROM (
+    SELECT *, row_number() OVER (PARTITION BY x ORDER BY y ASC) AS r FROM grp
+  ) WHERE r = 1),
+run AS (
+  SELECT x, y, n_rows, min_id,
+         min(y) OVER (ORDER BY x ASC
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
+  FROM best)
+SELECT x / 100.0 AS price, y AS p_size, n_rows, min_id AS sample_partkey
+FROM run WHERE pm IS NULL OR y < pm
+""")
 def q_part_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D Pareto front (operators.skyline.skyline_2d) minimizing
     (retail price, size) over parts — the multi-objective dominance
@@ -11848,53 +10714,7 @@ def q_part_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PART_SKYLINE = """
-WITH pts AS (
-  SELECT CAST(round(p_retailprice * 100) AS BIGINT) AS x,
-         CAST(p_size AS BIGINT) AS y, p_partkey
-  FROM part),
-grp AS (
-  SELECT x, y, CAST(COUNT(*) AS BIGINT) AS n_rows, MIN(p_partkey) AS min_id
-  FROM pts GROUP BY 1, 2),
-best AS (
-  SELECT x, y, n_rows, min_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY x ORDER BY y ASC) AS r FROM grp
-  ) WHERE r = 1),
-run AS (
-  SELECT x, y, n_rows, min_id,
-         min(y) OVER (ORDER BY x ASC
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-  FROM best)
-SELECT x / 100.0 AS price, y AS p_size, n_rows, min_id AS sample_partkey
-FROM run WHERE pm IS NULL OR y < pm
-"""
-
-QUERIES["part_skyline"] = q_part_skyline
-ORACLES["part_skyline"] = ORACLE_PART_SKYLINE
-
-
-def q_histogram_selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-depth histogram build + range-predicate selectivity audit
-    (operators.histogram.selectivity_audit, 32 buckets over order
-    price cents): histogram-interpolated row estimates vs the exact
-    answer for three thresholds — the ANALYZE-statistics loop made
-    measurable. Scaled-integer interpolation keeps the estimate sum
-    order-independent."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.histogram import (
-        selectivity_audit,
-    )
-
-    o = load_table(spark, sf_dir, "orders")
-    cents = o.select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("_c"),
-        "o_orderkey",
-    )
-    return selectivity_audit(
-        cents, "_c", "o_orderkey", [2_000_000, 10_000_000, 30_000_000], n_buckets=32
-    )
-
-
-ORACLE_HISTOGRAM_SELECTIVITY = """
+@query(oracle="""
 WITH c AS (
   SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v, o_orderkey FROM orders),
 h AS (
@@ -11917,33 +10737,26 @@ tr AS (
 SELECT threshold, est_rows, true_rows,
        round((est_rows - true_rows) / CAST(true_rows AS DOUBLE), 6) AS rel_error
 FROM est JOIN tr USING (threshold)
-"""
-
-QUERIES["histogram_selectivity"] = q_histogram_selectivity
-ORACLES["histogram_selectivity"] = ORACLE_HISTOGRAM_SELECTIVITY
-
-
-def q_kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded k-core peeling (operators.graph.kcore_peel, k=90,
-    3 rounds) of the part co-purchase graph: the dense-subgraph
-    extraction that complements the triangle census — recommendation
-    pipelines mine the core, GNN samplers drop the periphery. Fixed
-    round count keeps the peel replayable; each round is one degree
-    aggregate + two broadcastable semi-joins, lineage cut per round."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.graph import (
-        kcore_peel,
+""")
+def q_histogram_selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Equi-depth histogram build + range-predicate selectivity audit
+    (operators.histogram.selectivity_audit, 32 buckets over order
+    price cents): histogram-interpolated row estimates vs the exact
+    answer for three thresholds — the ANALYZE-statistics loop made
+    measurable. Scaled-integer interpolation keeps the estimate sum
+    order-independent."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.histogram import (
+        selectivity_audit,
     )
 
-    li = parallelize(
-        load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    o = load_table(spark, sf_dir, "orders")
+    cents = o.select(
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("_c"),
+        "o_orderkey",
     )
-    x, y = li.alias("x"), li.alias("y")
-    pairs = x.join(
-        y,
-        (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-        & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-    ).select(F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b"))
-    return kcore_peel(pairs, "a", "b", k=90, rounds=3)
+    return selectivity_audit(
+        cents, "_c", "o_orderkey", [2_000_000, 10_000_000, 30_000_000], n_buckets=32
+    )
 
 
 def _kcore_oracle(k: int, rounds: int) -> str:
@@ -11979,10 +10792,51 @@ GROUP BY node"""
     )
 
 
-QUERIES["kcore_copurchase"] = q_kcore_copurchase
-ORACLES["kcore_copurchase"] = _kcore_oracle(90, 3)
+@query(oracle=_kcore_oracle(90, 3))
+def q_kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bounded k-core peeling (operators.graph.kcore_peel, k=90,
+    3 rounds) of the part co-purchase graph: the dense-subgraph
+    extraction that complements the triangle census — recommendation
+    pipelines mine the core, GNN samplers drop the periphery. Fixed
+    round count keeps the peel replayable; each round is one degree
+    aggregate + two broadcastable semi-joins, lineage cut per round."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.graph import (
+        kcore_peel,
+    )
+
+    li = parallelize(
+        load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    )
+    x, y = li.alias("x"), li.alias("y")
+    pairs = x.join(
+        y,
+        (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
+        & (F.col("x.l_partkey") < F.col("y.l_partkey")),
+    ).select(F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b"))
+    return kcore_peel(pairs, "a", "b", k=90, rounds=3)
 
 
+@query(oracle="""
+WITH base AS (
+  SELECT c_custkey, c_mktsegment,
+         CAST(round(c_acctbal * 100) AS BIGINT) AS cents
+  FROM customer),
+old AS (
+  SELECT c_custkey % 64 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
+         CAST(SUM(('0x' || substr(md5(c_custkey || '|' || c_mktsegment || '|' || cents), 1, 10))::BIGINT) AS BIGINT) AS checksum
+  FROM base WHERE c_custkey % 1000 <> 2 GROUP BY 1),
+neu AS (
+  SELECT c_custkey % 64 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
+         CAST(SUM(('0x' || substr(md5(c_custkey || '|' || c_mktsegment || '|' ||
+              (CASE WHEN c_custkey % 100 = 7 THEN cents + 10000 ELSE cents END)), 1, 10))::BIGINT) AS BIGINT) AS checksum
+  FROM base WHERE c_custkey % 1000 <> 1 GROUP BY 1)
+SELECT COALESCE(old.bucket, neu.bucket) AS bucket,
+       old.n_rows AS n_old, neu.n_rows AS n_new,
+       old.checksum AS checksum_old, neu.checksum AS checksum_new,
+       (COALESCE(old.n_rows, -1) <> COALESCE(neu.n_rows, -1)
+        OR COALESCE(old.checksum, -1) <> COALESCE(neu.checksum, -1)) AS diverged
+FROM old FULL OUTER JOIN neu ON old.bucket = neu.bucket
+""")
 def q_merkle_bucket_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merkle-style anti-entropy reconciliation
     (operators.diff.merkle_bucket_summary): two deterministically
@@ -12033,47 +10887,7 @@ def q_merkle_bucket_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_MERKLE_DIFF = """
-WITH base AS (
-  SELECT c_custkey, c_mktsegment,
-         CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-  FROM customer),
-old AS (
-  SELECT c_custkey % 64 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
-         CAST(SUM(('0x' || substr(md5(c_custkey || '|' || c_mktsegment || '|' || cents), 1, 10))::BIGINT) AS BIGINT) AS checksum
-  FROM base WHERE c_custkey % 1000 <> 2 GROUP BY 1),
-neu AS (
-  SELECT c_custkey % 64 AS bucket, CAST(COUNT(*) AS BIGINT) AS n_rows,
-         CAST(SUM(('0x' || substr(md5(c_custkey || '|' || c_mktsegment || '|' ||
-              (CASE WHEN c_custkey % 100 = 7 THEN cents + 10000 ELSE cents END)), 1, 10))::BIGINT) AS BIGINT) AS checksum
-  FROM base WHERE c_custkey % 1000 <> 1 GROUP BY 1)
-SELECT COALESCE(old.bucket, neu.bucket) AS bucket,
-       old.n_rows AS n_old, neu.n_rows AS n_new,
-       old.checksum AS checksum_old, neu.checksum AS checksum_new,
-       (COALESCE(old.n_rows, -1) <> COALESCE(neu.n_rows, -1)
-        OR COALESCE(old.checksum, -1) <> COALESCE(neu.checksum, -1)) AS diverged
-FROM old FULL OUTER JOIN neu ON old.bucket = neu.bucket
-"""
-
-QUERIES["merkle_bucket_diff"] = q_merkle_bucket_diff
-ORACLES["merkle_bucket_diff"] = ORACLE_MERKLE_DIFF
-
-
-def q_join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew diagnosis (operators.skew.skew_report) over
-    lineitem's supplier FK: Gini coefficient, top-key share, p99/p50
-    frequency ratio, key count, and the 5 hottest keys — the report
-    you read before choosing a salting factor. Exact-integer rank
-    arithmetic over the (already reduced) key histogram."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.skew import (
-        skew_report,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return skew_report(li, "l_suppkey", top_n=5)
-
-
-ORACLE_SKEW_REPORT = """
+@query(oracle="""
 WITH freq AS (
   SELECT l_suppkey AS k, CAST(COUNT(*) AS BIGINT) AS x FROM lineitem GROUP BY 1),
 ranked AS (
@@ -12103,12 +10917,44 @@ SELECT 'n_keys', NULL, CAST(n AS DOUBLE) FROM sc
 UNION ALL
 SELECT 'hot_key_rows', k, CAST(x AS DOUBLE)
 FROM ranked CROSS JOIN sc WHERE i > n - 5
-"""
+""")
+def q_join_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Join-key skew diagnosis (operators.skew.skew_report) over
+    lineitem's supplier FK: Gini coefficient, top-key share, p99/p50
+    frequency ratio, key count, and the 5 hottest keys — the report
+    you read before choosing a salting factor. Exact-integer rank
+    arithmetic over the (already reduced) key histogram."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.skew import (
+        skew_report,
+    )
 
-QUERIES["join_skew_report"] = q_join_skew_report
-ORACLES["join_skew_report"] = ORACLE_SKEW_REPORT
+    li = load_table(spark, sf_dir, "lineitem")
+    return skew_report(li, "l_suppkey", top_n=5)
 
 
+@query(oracle="""
+WITH li AS (
+  SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
+         CAST(round(l_extendedprice * 100) AS BIGINT) AS w
+  FROM lineitem WHERE l_orderkey % 500 = 0),
+o AS (
+  SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS t
+  FROM orders WHERE o_orderkey % 500 = 0),
+j AS (SELECT l_orderkey, l_linenumber, w, t
+      FROM li JOIN o ON li.l_orderkey = o.o_orderkey),
+x AS (
+  SELECT *, CAST(SUM(w) OVER (PARTITION BY l_orderkey) AS BIGINT) AS wsum
+  FROM j),
+y AS (
+  SELECT *, (t * w) // wsum AS base,
+         row_number() OVER (PARTITION BY l_orderkey
+                            ORDER BY (t * w) % wsum DESC, l_linenumber ASC) AS rn,
+         CAST(SUM((t * w) // wsum) OVER (PARTITION BY l_orderkey) AS BIGINT) AS basesum
+  FROM x)
+SELECT l_orderkey AS o_orderkey, l_linenumber,
+       CAST(base + CASE WHEN rn <= t - basesum THEN 1 ELSE 0 END AS BIGINT) AS alloc_cents
+FROM y
+""")
 def q_proration_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-sum largest-remainder proration
     (operators.allocation.prorate_largest_remainder): each sampled
@@ -12147,34 +10993,13 @@ def q_proration_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PRORATION = """
-WITH li AS (
-  SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-         CAST(round(l_extendedprice * 100) AS BIGINT) AS w
-  FROM lineitem WHERE l_orderkey % 500 = 0),
-o AS (
-  SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS t
-  FROM orders WHERE o_orderkey % 500 = 0),
-j AS (SELECT l_orderkey, l_linenumber, w, t
-      FROM li JOIN o ON li.l_orderkey = o.o_orderkey),
-x AS (
-  SELECT *, CAST(SUM(w) OVER (PARTITION BY l_orderkey) AS BIGINT) AS wsum
-  FROM j),
-y AS (
-  SELECT *, (t * w) // wsum AS base,
-         row_number() OVER (PARTITION BY l_orderkey
-                            ORDER BY (t * w) % wsum DESC, l_linenumber ASC) AS rn,
-         CAST(SUM((t * w) // wsum) OVER (PARTITION BY l_orderkey) AS BIGINT) AS basesum
-  FROM x)
-SELECT l_orderkey AS o_orderkey, l_linenumber,
-       CAST(base + CASE WHEN rn <= t - basesum THEN 1 ELSE 0 END AS BIGINT) AS alloc_cents
-FROM y
-"""
-
-QUERIES["proration_allocation"] = q_proration_allocation
-ORACLES["proration_allocation"] = ORACLE_PRORATION
-
-
+@query(oracle="""
+SELECT CAST(isoyear(o_orderdate) AS BIGINT) AS iso_year,
+       CAST(weekofyear(o_orderdate) AS BIGINT) AS iso_week,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0 AS revenue
+FROM orders GROUP BY 1, 2
+""")
 def q_iso_week_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue by ISO week — the calendar-boundary parity trap made a
     query: YEAROFWEEK/weekofyear assign the days around Jan 1 to last
@@ -12198,24 +11023,31 @@ def q_iso_week_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ISO_WEEK = """
-SELECT CAST(isoyear(o_orderdate) AS BIGINT) AS iso_year,
-       CAST(weekofyear(o_orderdate) AS BIGINT) AS iso_week,
-       CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0 AS revenue
-FROM orders GROUP BY 1, 2
-"""
-
-QUERIES["iso_week_revenue"] = q_iso_week_revenue
-ORACLES["iso_week_revenue"] = ORACLE_ISO_WEEK
-
-
 _BENFORD = {
     1: 0.30103, 2: 0.176091, 3: 0.124939, 4: 0.09691, 5: 0.079181,
     6: 0.066947, 7: 0.057992, 8: 0.051153, 9: 0.045757,
 }  # round(log10(1 + 1/d), 6), built once in Python, inlined into BOTH engines
 
 
+def _benford_oracle() -> str:
+    vals = ", ".join(f"({d}, {s})" for d, s in _BENFORD.items())
+    return f"""
+WITH c AS (
+  SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR), 1, 1) AS BIGINT) AS digit,
+         CAST(COUNT(*) AS BIGINT) AS observed
+  FROM orders GROUP BY 1),
+n AS (SELECT CAST(SUM(observed) AS BIGINT) AS n FROM c),
+b AS (SELECT CAST(col0 AS BIGINT) AS digit, CAST(col1 AS DOUBLE) AS benford_share
+      FROM (VALUES {vals}))
+SELECT c.digit, c.observed,
+       round(c.observed / CAST(n.n AS DOUBLE), 6) AS observed_share,
+       b.benford_share,
+       round(round(c.observed / CAST(n.n AS DOUBLE), 6) - b.benford_share, 6) AS excess
+FROM c CROSS JOIN n LEFT JOIN b ON c.digit = b.digit
+"""
+
+
+@query(oracle=_benford_oracle())
 def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford first-digit fraud audit over order totals: observed
     first-significant-digit shares vs the Benford expectation
@@ -12250,28 +11082,24 @@ def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _benford_oracle() -> str:
-    vals = ", ".join(f"({d}, {s})" for d, s in _BENFORD.items())
-    return f"""
+@query(oracle="""
 WITH c AS (
-  SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR), 1, 1) AS BIGINT) AS digit,
-         CAST(COUNT(*) AS BIGINT) AS observed
-  FROM orders GROUP BY 1),
-n AS (SELECT CAST(SUM(observed) AS BIGINT) AS n FROM c),
-b AS (SELECT CAST(col0 AS BIGINT) AS digit, CAST(col1 AS DOUBLE) AS benford_share
-      FROM (VALUES {vals}))
-SELECT c.digit, c.observed,
-       round(c.observed / CAST(n.n AS DOUBLE), 6) AS observed_share,
-       b.benford_share,
-       round(round(c.observed / CAST(n.n AS DOUBLE), 6) - b.benford_share, 6) AS excess
-FROM c CROSS JOIN n LEFT JOIN b ON c.digit = b.digit
-"""
-
-
-QUERIES["benford_audit"] = q_benford_audit
-ORACLES["benford_audit"] = _benford_oracle()
-
-
+  SELECT c_custkey, (c_custkey * 37) % 1000 AS x, (c_custkey * 73) % 1000 AS y
+  FROM customer WHERE c_custkey % 10 = 0),
+s AS (
+  SELECT s_suppkey, (s_suppkey * 41) % 1000 AS x, (s_suppkey * 97) % 1000 AS y
+  FROM supplier),
+cand AS (
+  SELECT c.c_custkey, s.s_suppkey,
+         (c.x - s.x) * (c.x - s.x) + (c.y - s.y) * (c.y - s.y) AS d2
+  FROM c JOIN s
+    ON abs((c.x // 100) - (s.x // 100)) <= 1
+   AND abs((c.y // 100) - (s.y // 100)) <= 1)
+SELECT c_custkey, s_suppkey, CAST(d2 AS BIGINT) AS dist_sq FROM (
+  SELECT *, row_number() OVER (
+    PARTITION BY c_custkey ORDER BY d2 ASC, s_suppkey ASC) AS rn
+  FROM cand) WHERE rn = 1
+""")
 def q_spatial_grid_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grid-bucketed nearest-neighbor join
     (operators.spatial.grid_nearest_join): every 10th customer finds
@@ -12302,29 +11130,19 @@ def q_spatial_grid_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grid_nearest_join(c, s, "c_custkey", "s_suppkey", cell_size=100)
 
 
-ORACLE_SPATIAL_NEAREST = """
-WITH c AS (
-  SELECT c_custkey, (c_custkey * 37) % 1000 AS x, (c_custkey * 73) % 1000 AS y
-  FROM customer WHERE c_custkey % 10 = 0),
-s AS (
-  SELECT s_suppkey, (s_suppkey * 41) % 1000 AS x, (s_suppkey * 97) % 1000 AS y
-  FROM supplier),
-cand AS (
-  SELECT c.c_custkey, s.s_suppkey,
-         (c.x - s.x) * (c.x - s.x) + (c.y - s.y) * (c.y - s.y) AS d2
-  FROM c JOIN s
-    ON abs((c.x // 100) - (s.x // 100)) <= 1
-   AND abs((c.y // 100) - (s.y // 100)) <= 1)
-SELECT c_custkey, s_suppkey, CAST(d2 AS BIGINT) AS dist_sq FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY c_custkey ORDER BY d2 ASC, s_suppkey ASC) AS rn
-  FROM cand) WHERE rn = 1
-"""
-
-QUERIES["spatial_grid_nearest"] = q_spatial_grid_nearest
-ORACLES["spatial_grid_nearest"] = ORACLE_SPATIAL_NEAREST
-
-
+@query(oracle="""
+WITH known AS (
+  SELECT c_nationkey, c_mktsegment, COUNT(*) AS n
+  FROM customer WHERE c_custkey % 97 <> 0 GROUP BY 1, 2),
+modal AS (
+  SELECT c_nationkey, c_mktsegment AS imputed_segment FROM (
+    SELECT *, row_number() OVER (
+      PARTITION BY c_nationkey ORDER BY n DESC, c_mktsegment ASC) AS rn
+    FROM known) WHERE rn = 1)
+SELECT c_custkey, CAST(c.c_nationkey AS BIGINT) AS c_nationkey, imputed_segment
+FROM customer c JOIN modal m ON c.c_nationkey = m.c_nationkey
+WHERE c.c_custkey % 97 = 0
+""")
 def q_modal_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Constraint-based imputation: customers whose segment is
     'unknown' (keys ≡ 0 mod 97, a deterministic corruption) receive
@@ -12353,24 +11171,11 @@ def q_modal_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_custkey", F.col("c_nationkey").cast("long").alias("c_nationkey"), "imputed_segment")
 
 
-ORACLE_MODAL_IMPUTATION = """
-WITH known AS (
-  SELECT c_nationkey, c_mktsegment, COUNT(*) AS n
-  FROM customer WHERE c_custkey % 97 <> 0 GROUP BY 1, 2),
-modal AS (
-  SELECT c_nationkey, c_mktsegment AS imputed_segment FROM (
-    SELECT *, row_number() OVER (
-      PARTITION BY c_nationkey ORDER BY n DESC, c_mktsegment ASC) AS rn
-    FROM known) WHERE rn = 1)
-SELECT c_custkey, CAST(c.c_nationkey AS BIGINT) AS c_nationkey, imputed_segment
-FROM customer c JOIN modal m ON c.c_nationkey = m.c_nationkey
-WHERE c.c_custkey % 97 = 0
-"""
-
-QUERIES["modal_imputation"] = q_modal_imputation
-ORACLES["modal_imputation"] = ORACLE_MODAL_IMPUTATION
-
-
+@query(oracle="""
+SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0 AS revenue
+FROM orders GROUP BY o_orderpriority HAVING COUNT(*) > 100
+""")
 def q_pipe_syntax_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL pipe syntax (Spark 4.x `|>` operators): the same
     priority-revenue rollup a user would write imperatively —
@@ -12393,16 +11198,23 @@ def q_pipe_syntax_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PIPE_SYNTAX = """
-SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0 AS revenue
-FROM orders GROUP BY o_orderpriority HAVING COUNT(*) > 100
-"""
-
-QUERIES["pipe_syntax_rollup"] = q_pipe_syntax_rollup
-ORACLES["pipe_syntax_rollup"] = ORACLE_PIPE_SYNTAX
-
-
+@query(oracle="""
+WITH e AS (
+  SELECT user_id, CAST(round(value * 100) AS BIGINT) AS cents,
+         CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00' THEN 0 ELSE 1 END AS b
+  FROM events),
+u AS (SELECT DISTINCT user_id FROM events),
+d AS (
+  SELECT user_id, v.b,
+         CASE (user_id + v.b) % 3 WHEN 0 THEN 'bronze'
+              WHEN 1 THEN 'silver' ELSE 'gold' END AS tier
+  FROM u CROSS JOIN (VALUES (0), (1)) AS v(b))
+SELECT tier, CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(SUM(cents) AS BIGINT) AS sum_cents,
+       CAST(e.b AS BIGINT) AS batch_id
+FROM e JOIN d ON e.user_id = d.user_id AND e.b = d.b
+GROUP BY tier, e.b
+""")
 def q_stream_evolving_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment where the static side EVOLVES between
     micro-batches (streaming.enrich_stream): two event phases replay
@@ -12449,28 +11261,22 @@ def q_stream_evolving_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-ORACLE_EVOLVING_ENRICH = """
-WITH e AS (
-  SELECT user_id, CAST(round(value * 100) AS BIGINT) AS cents,
-         CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00' THEN 0 ELSE 1 END AS b
-  FROM events),
-u AS (SELECT DISTINCT user_id FROM events),
-d AS (
-  SELECT user_id, v.b,
-         CASE (user_id + v.b) % 3 WHEN 0 THEN 'bronze'
-              WHEN 1 THEN 'silver' ELSE 'gold' END AS tier
-  FROM u CROSS JOIN (VALUES (0), (1)) AS v(b))
-SELECT tier, CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(cents) AS BIGINT) AS sum_cents,
-       CAST(e.b AS BIGINT) AS batch_id
-FROM e JOIN d ON e.user_id = d.user_id AND e.b = d.b
-GROUP BY tier, e.b
-"""
-
-QUERIES["stream_evolving_enrich"] = q_stream_evolving_enrich
-ORACLES["stream_evolving_enrich"] = ORACLE_EVOLVING_ENRICH
-
-
+@query(oracle="""
+WITH RECURSIVE chain AS (
+  SELECT c_custkey AS node, c_custkey AS cur,
+         CAST(0 AS BIGINT) AS anc_cents, CAST(0 AS BIGINT) AS depth
+  FROM customer
+  UNION ALL
+  SELECT ch.node, c.c_custkey,
+         ch.anc_cents + CAST(round(c.c_acctbal * 100) AS BIGINT),
+         ch.depth + 1
+  FROM chain ch JOIN customer c ON c.c_custkey = ch.cur // 10
+  WHERE ch.cur >= 10
+)
+SELECT depth, CAST(COUNT(*) AS BIGINT) AS n_chains,
+       CAST(SUM(anc_cents) AS BIGINT) AS anc_cents
+FROM chain GROUP BY depth
+""")
 def q_recursive_ancestor_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Genuine WITH RECURSIVE (Spark 4.x) over a synthetic key
     hierarchy — parent(k) = k div 10 when that key exists as a
@@ -12504,27 +11310,11 @@ def q_recursive_ancestor_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_RECURSIVE_ANCESTORS = """
-WITH RECURSIVE chain AS (
-  SELECT c_custkey AS node, c_custkey AS cur,
-         CAST(0 AS BIGINT) AS anc_cents, CAST(0 AS BIGINT) AS depth
-  FROM customer
-  UNION ALL
-  SELECT ch.node, c.c_custkey,
-         ch.anc_cents + CAST(round(c.c_acctbal * 100) AS BIGINT),
-         ch.depth + 1
-  FROM chain ch JOIN customer c ON c.c_custkey = ch.cur // 10
-  WHERE ch.cur >= 10
-)
-SELECT depth, CAST(COUNT(*) AS BIGINT) AS n_chains,
-       CAST(SUM(anc_cents) AS BIGINT) AS anc_cents
-FROM chain GROUP BY depth
-"""
-
-QUERIES["recursive_ancestor_rollup"] = q_recursive_ancestor_rollup
-ORACLES["recursive_ancestor_rollup"] = ORACLE_RECURSIVE_ANCESTORS
-
-
+@query(oracle="""
+SELECT event_type, epoch_us(date_trunc('hour', ts)) AS hour_us,
+       CAST(COUNT(*) AS BIGINT) AS n_events
+FROM events GROUP BY 1, 2
+""")
 def q_statestore_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming state-store INTROSPECTION (Spark 4.x `statestore`
     data source): run an update-mode (type, hour) count over the
@@ -12578,16 +11368,25 @@ def q_statestore_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-ORACLE_STATESTORE = """
-SELECT event_type, epoch_us(date_trunc('hour', ts)) AS hour_us,
-       CAST(COUNT(*) AS BIGINT) AS n_events
-FROM events GROUP BY 1, 2
-"""
-
-QUERIES["statestore_introspection"] = q_statestore_introspection
-ORACLES["statestore_introspection"] = ORACLE_STATESTORE
-
-
+@query(oracle="""
+WITH base AS (
+  SELECT CAST(round(value * 100) AS BIGINT) AS cents, event_id,
+         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
+  FROM events),
+binned AS (
+  SELECT pos, CAST(ntile(10) OVER (ORDER BY cents ASC, event_id ASC) AS BIGINT) AS decile
+  FROM base),
+per AS (
+  SELECT decile, CAST(SUM(pos) AS BIGINT) AS n_pos,
+         CAST(SUM(1 - pos) AS BIGINT) AS n_neg
+  FROM binned GROUP BY decile),
+tot AS (SELECT CAST(SUM(n_pos) AS BIGINT) AS p, CAST(SUM(n_neg) AS BIGINT) AS n FROM per)
+SELECT decile, n_pos, n_neg,
+       CASE WHEN n_pos > 0 AND n_neg > 0
+            THEN round(ln((CAST(n_pos AS DOUBLE) * n) / (CAST(n_neg AS DOUBLE) * p)), 6)
+            ELSE NULL END AS woe
+FROM per CROSS JOIN tot
+""")
 def q_woe_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weight-of-evidence feature encoding (the credit-scoring
     standard next to mean-target encoding): event value cut into
@@ -12637,30 +11436,21 @@ def q_woe_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_WOE = """
-WITH base AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents, event_id,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
-  FROM events),
-binned AS (
-  SELECT pos, CAST(ntile(10) OVER (ORDER BY cents ASC, event_id ASC) AS BIGINT) AS decile
-  FROM base),
-per AS (
-  SELECT decile, CAST(SUM(pos) AS BIGINT) AS n_pos,
-         CAST(SUM(1 - pos) AS BIGINT) AS n_neg
-  FROM binned GROUP BY decile),
-tot AS (SELECT CAST(SUM(n_pos) AS BIGINT) AS p, CAST(SUM(n_neg) AS BIGINT) AS n FROM per)
-SELECT decile, n_pos, n_neg,
-       CASE WHEN n_pos > 0 AND n_neg > 0
-            THEN round(ln((CAST(n_pos AS DOUBLE) * n) / (CAST(n_neg AS DOUBLE) * p)), 6)
-            ELSE NULL END AS woe
-FROM per CROSS JOIN tot
-"""
-
-QUERIES["woe_binning"] = q_woe_binning
-ORACLES["woe_binning"] = ORACLE_WOE
-
-
+@query(oracle="""
+WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
+sizes AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS sz FROM ut GROUP BY 1),
+inter AS (
+  SELECT a.event_type AS type_a, b.event_type AS type_b,
+         CAST(COUNT(*) AS BIGINT) AS n_both
+  FROM ut a JOIN ut b
+    ON a.user_id = b.user_id AND a.event_type < b.event_type
+  GROUP BY 1, 2)
+SELECT type_a, type_b, n_both,
+       round(n_both / CAST(sa.sz + sb.sz - n_both AS DOUBLE), 6) AS jaccard
+FROM inter
+JOIN sizes sa ON inter.type_a = sa.event_type
+JOIN sizes sb ON inter.type_b = sb.event_type
+""")
 def q_audience_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise audience overlap between event types: distinct
     (user, type) collapse, self-join on user (type_a < type_b), exact
@@ -12703,26 +11493,19 @@ def q_audience_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_AUDIENCE_OVERLAP = """
-WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
-sizes AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS sz FROM ut GROUP BY 1),
-inter AS (
-  SELECT a.event_type AS type_a, b.event_type AS type_b,
-         CAST(COUNT(*) AS BIGINT) AS n_both
-  FROM ut a JOIN ut b
-    ON a.user_id = b.user_id AND a.event_type < b.event_type
-  GROUP BY 1, 2)
-SELECT type_a, type_b, n_both,
-       round(n_both / CAST(sa.sz + sb.sz - n_both AS DOUBLE), 6) AS jaccard
-FROM inter
-JOIN sizes sa ON inter.type_a = sa.event_type
-JOIN sizes sb ON inter.type_b = sb.event_type
-"""
-
-QUERIES["audience_overlap_matrix"] = q_audience_overlap_matrix
-ORACLES["audience_overlap_matrix"] = ORACLE_AUDIENCE_OVERLAP
-
-
+@query(oracle="""
+WITH ud AS (
+  SELECT DISTINCT user_id, date_trunc('day', ts) AS d FROM events),
+contrib AS (
+  SELECT user_id, d + (INTERVAL 1 DAY) * off AS end_day
+  FROM ud CROSS JOIN (
+    SELECT unnest(generate_series(0, 6)) AS off)),
+active AS (SELECT DISTINCT d FROM ud)
+SELECT epoch_us(end_day) AS day_us,
+       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS users_7d
+FROM contrib JOIN active ON contrib.end_day = active.d
+GROUP BY 1
+""")
 def q_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing 7-day distinct users per day WITHOUT sliding-distinct
     state: each (user, active-day) pair is exploded to the 7 window
@@ -12756,24 +11539,18 @@ def q_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ROLLING_DISTINCT = """
-WITH ud AS (
-  SELECT DISTINCT user_id, date_trunc('day', ts) AS d FROM events),
-contrib AS (
-  SELECT user_id, d + (INTERVAL 1 DAY) * off AS end_day
-  FROM ud CROSS JOIN (
-    SELECT unnest(generate_series(0, 6)) AS off)),
-active AS (SELECT DISTINCT d FROM ud)
-SELECT epoch_us(end_day) AS day_us,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS users_7d
-FROM contrib JOIN active ON contrib.end_day = active.d
-GROUP BY 1
-"""
-
-QUERIES["rolling_distinct_users"] = q_rolling_distinct_users
-ORACLES["rolling_distinct_users"] = ORACLE_ROLLING_DISTINCT
-
-
+@query(oracle="""
+SELECT epoch_us(date_trunc('month', o_orderdate)) AS month_us,
+       CAST(SUM(CASE WHEN dayofweek(o_orderdate) IN (0, 6)
+                THEN CAST(round(o_totalprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT)
+         / 100.0 AS weekend_revenue,
+       CAST(SUM(CASE WHEN dayofweek(o_orderdate) NOT IN (0, 6)
+                THEN CAST(round(o_totalprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT)
+         / 100.0 AS weekday_revenue,
+       CAST(SUM(CASE WHEN dayofweek(o_orderdate) IN (0, 6) THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_weekend_orders
+FROM orders GROUP BY 1
+""")
 def q_weekend_revenue_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekend vs weekday revenue per month — the day-of-week OFFSET
     parity trap pinned as a query: Spark's dayofweek() is 1-based
@@ -12797,23 +11574,16 @@ def q_weekend_revenue_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_WEEKEND_SPLIT = """
-SELECT epoch_us(date_trunc('month', o_orderdate)) AS month_us,
-       CAST(SUM(CASE WHEN dayofweek(o_orderdate) IN (0, 6)
-                THEN CAST(round(o_totalprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT)
-         / 100.0 AS weekend_revenue,
-       CAST(SUM(CASE WHEN dayofweek(o_orderdate) NOT IN (0, 6)
-                THEN CAST(round(o_totalprice * 100) AS BIGINT) ELSE 0 END) AS BIGINT)
-         / 100.0 AS weekday_revenue,
-       CAST(SUM(CASE WHEN dayofweek(o_orderdate) IN (0, 6) THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_weekend_orders
-FROM orders GROUP BY 1
-"""
-
-QUERIES["weekend_revenue_split"] = q_weekend_revenue_split
-ORACLES["weekend_revenue_split"] = ORACLE_WEEKEND_SPLIT
-
-
+@query(oracle="""
+WITH forget AS (SELECT c_custkey FROM customer WHERE c_custkey % 1000 = 3),
+del_o AS (SELECT o_orderkey FROM orders WHERE o_custkey IN (SELECT c_custkey FROM forget)),
+del_l AS (SELECT * FROM lineitem WHERE l_orderkey IN (SELECT o_orderkey FROM del_o))
+SELECT 'customer' AS "table", CAST(COUNT(*) AS BIGINT) AS n FROM forget
+UNION ALL SELECT 'orders', CAST(COUNT(*) AS BIGINT) FROM del_o
+UNION ALL SELECT 'lineitem', CAST(COUNT(*) AS BIGINT) FROM del_l
+UNION ALL SELECT 'lineitem_retained', CAST(COUNT(*) AS BIGINT)
+  FROM lineitem WHERE l_orderkey NOT IN (SELECT o_orderkey FROM del_o)
+""")
 def q_cascade_delete_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GDPR deletion propagation plan: for a deterministic
     forget-set (customers ≡ 3 mod 1000), the cascade row counts down
@@ -12857,53 +11627,9 @@ def q_cascade_delete_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return counts
 
 
-ORACLE_CASCADE_DELETE = """
-WITH forget AS (SELECT c_custkey FROM customer WHERE c_custkey % 1000 = 3),
-del_o AS (SELECT o_orderkey FROM orders WHERE o_custkey IN (SELECT c_custkey FROM forget)),
-del_l AS (SELECT * FROM lineitem WHERE l_orderkey IN (SELECT o_orderkey FROM del_o))
-SELECT 'customer' AS "table", CAST(COUNT(*) AS BIGINT) AS n FROM forget
-UNION ALL SELECT 'orders', CAST(COUNT(*) AS BIGINT) FROM del_o
-UNION ALL SELECT 'lineitem', CAST(COUNT(*) AS BIGINT) FROM del_l
-UNION ALL SELECT 'lineitem_retained', CAST(COUNT(*) AS BIGINT)
-  FROM lineitem WHERE l_orderkey NOT IN (SELECT o_orderkey FROM del_o)
-"""
-
-QUERIES["cascade_delete_plan"] = q_cascade_delete_plan
-ORACLES["cascade_delete_plan"] = ORACLE_CASCADE_DELETE
-
-
 # ---------------------------------------------------------------------------
 # Round 8: end-to-end IVF-PQ search, curriculum planning, corpus-law audits
 # ---------------------------------------------------------------------------
-
-
-def q_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end IVF-PQ ANN search (operators.similarity.ivf_pq_search):
-    corpus routed map-only to a frozen 8-cell coarse codebook and
-    PQ-encoded (4 subspaces × 4 codes over dim 64); each of 3 queries
-    probes its 2 nearest cells; candidates scored by asymmetric
-    distance (per-subspace integer LUT into the query's subvector) and
-    top-10 ranked per query. Every cell id, code, and distance is
-    exact int64 under the floor(x·10⁶) convention, so the oracle
-    reproduces the full pipeline bit-for-bit."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
-        ivf_pq_search,
-        pq_codebooks,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.where(F.col("vec_id") >= 3)
-    queries = emb.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    cents = pq_codebooks(1, 8, 64)[0]
-    books = pq_codebooks(4, 4, 16)
-    out = ivf_pq_search(
-        corpus, queries, cents, books, dim=64, nprobe=2, k=10
-    )
-    return out.select(
-        "q_id", "vec_id", "adc", F.col("rank").cast("long").alias("rank")
-    )
 
 
 def _oracle_ivf_pq(
@@ -12986,10 +11712,56 @@ SELECT q_id, vec_id, adc, rank FROM (
 """
 
 
-QUERIES["ivf_pq_search"] = q_ivf_pq_search
-ORACLES["ivf_pq_search"] = _oracle_ivf_pq()
+@query(oracle=_oracle_ivf_pq())
+def q_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end IVF-PQ ANN search (operators.similarity.ivf_pq_search):
+    corpus routed map-only to a frozen 8-cell coarse codebook and
+    PQ-encoded (4 subspaces × 4 codes over dim 64); each of 3 queries
+    probes its 2 nearest cells; candidates scored by asymmetric
+    distance (per-subspace integer LUT into the query's subvector) and
+    top-10 ranked per query. Every cell id, code, and distance is
+    exact int64 under the floor(x·10⁶) convention, so the oracle
+    reproduces the full pipeline bit-for-bit."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
+        ivf_pq_search,
+        pq_codebooks,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    corpus = emb.where(F.col("vec_id") >= 3)
+    queries = emb.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    )
+    cents = pq_codebooks(1, 8, 64)[0]
+    books = pq_codebooks(4, 4, 16)
+    out = ivf_pq_search(
+        corpus, queries, cents, books, dim=64, nprobe=2, k=10
+    )
+    return out.select(
+        "q_id", "vec_id", "adc", F.col("rank").cast("long").alias("rank")
+    )
 
 
+@query(oracle="""
+WITH base AS (
+  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
+  FROM documents),
+staged AS (
+  SELECT ntok, CAST(ntile(4) OVER (ORDER BY ntok ASC, doc_id ASC) AS BIGINT) AS stage
+  FROM base),
+per AS (
+  SELECT stage, CAST(COUNT(*) AS BIGINT) AS n_docs,
+         CAST(SUM(ntok) AS BIGINT) AS stage_tokens,
+         CAST(MIN(ntok) AS BIGINT) AS min_tokens,
+         CAST(MAX(ntok) AS BIGINT) AS max_tokens
+  FROM staged GROUP BY stage),
+tot AS (SELECT CAST(SUM(stage_tokens) AS BIGINT) AS t FROM per)
+SELECT stage, n_docs, stage_tokens, min_tokens, max_tokens,
+       round(CAST(SUM(stage_tokens) OVER (ORDER BY stage
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+             / CAST(t AS DOUBLE), 6) AS cum_token_share
+FROM per CROSS JOIN tot
+""")
 def q_curriculum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curriculum-learning data plan: documents ordered easy→hard by
     an integer difficulty score (token count, doc_id tiebreak) and cut
@@ -13034,31 +11806,22 @@ def q_curriculum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CURRICULUM = """
-WITH base AS (
-  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
-  FROM documents),
-staged AS (
-  SELECT ntok, CAST(ntile(4) OVER (ORDER BY ntok ASC, doc_id ASC) AS BIGINT) AS stage
-  FROM base),
-per AS (
-  SELECT stage, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(ntok) AS BIGINT) AS stage_tokens,
-         CAST(MIN(ntok) AS BIGINT) AS min_tokens,
-         CAST(MAX(ntok) AS BIGINT) AS max_tokens
-  FROM staged GROUP BY stage),
-tot AS (SELECT CAST(SUM(stage_tokens) AS BIGINT) AS t FROM per)
-SELECT stage, n_docs, stage_tokens, min_tokens, max_tokens,
-       round(CAST(SUM(stage_tokens) OVER (ORDER BY stage
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-             / CAST(t AS DOUBLE), 6) AS cum_token_share
-FROM per CROSS JOIN tot
-"""
-
-QUERIES["curriculum_plan"] = q_curriculum_plan
-ORACLES["curriculum_plan"] = ORACLE_CURRICULUM
-
-
+@query(oracle="""
+WITH counts AS (
+  SELECT token, CAST(COUNT(*) AS BIGINT) AS n
+  FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
+  GROUP BY token),
+top AS (
+  SELECT token, n,
+         CAST(row_number() OVER (ORDER BY n DESC, token ASC) AS BIGINT) AS rank
+  FROM counts QUALIFY rank <= 100)
+SELECT rank, token, n,
+       round((ln(CAST(n AS DOUBLE))
+              - ln(CAST(lead(n) OVER (ORDER BY n DESC, token ASC) AS DOUBLE)))
+             / (ln(CAST(rank + 1 AS DOUBLE)) - ln(CAST(rank AS DOUBLE))), 6)
+         AS zipf_slope
+FROM top
+""")
 def q_zipf_rank_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law audit of the corpus token distribution: the top-100
     tokens by exact count (TakeOrderedAndProject cut — per-partition
@@ -13095,27 +11858,33 @@ def q_zipf_rank_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ZIPF = """
-WITH counts AS (
-  SELECT token, CAST(COUNT(*) AS BIGINT) AS n
-  FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-  GROUP BY token),
-top AS (
-  SELECT token, n,
-         CAST(row_number() OVER (ORDER BY n DESC, token ASC) AS BIGINT) AS rank
-  FROM counts QUALIFY rank <= 100)
-SELECT rank, token, n,
-       round((ln(CAST(n AS DOUBLE))
-              - ln(CAST(lead(n) OVER (ORDER BY n DESC, token ASC) AS DOUBLE)))
-             / (ln(CAST(rank + 1 AS DOUBLE)) - ln(CAST(rank AS DOUBLE))), 6)
-         AS zipf_slope
-FROM top
-"""
-
-QUERIES["zipf_rank_frequency"] = q_zipf_rank_frequency
-ORACLES["zipf_rank_frequency"] = ORACLE_ZIPF
-
-
+@query(oracle="""
+WITH toks AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
+pb AS (
+  SELECT CAST(doc_id // 20 AS BIGINT) AS bucket,
+         CAST(COUNT(*) AS BIGINT) AS nt
+  FROM toks GROUP BY 1),
+nv AS (
+  SELECT CAST(first_doc // 20 AS BIGINT) AS bucket,
+         CAST(COUNT(*) AS BIGINT) AS nv
+  FROM (SELECT token, MIN(doc_id) AS first_doc FROM toks GROUP BY token)
+  GROUP BY 1),
+j AS (
+  SELECT pb.bucket, pb.nt, COALESCE(nv.nv, 0) AS nv
+  FROM pb LEFT JOIN nv USING (bucket)),
+c AS (
+  SELECT bucket,
+         CAST(SUM(nt) OVER (ORDER BY bucket
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens,
+         CAST(SUM(nv) OVER (ORDER BY bucket
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_vocab
+  FROM j)
+SELECT bucket, cum_tokens, cum_vocab,
+       round(ln(CAST(cum_vocab AS DOUBLE)) / ln(CAST(cum_tokens AS DOUBLE)), 6)
+         AS heaps_beta
+FROM c
+""")
 def q_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law vocabulary-growth curve: documents in doc_id order
     are grouped into 20-doc ingestion buckets; per bucket the running
@@ -13159,38 +11928,6 @@ def q_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_HEAPS = """
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-pb AS (
-  SELECT CAST(doc_id // 20 AS BIGINT) AS bucket,
-         CAST(COUNT(*) AS BIGINT) AS nt
-  FROM toks GROUP BY 1),
-nv AS (
-  SELECT CAST(first_doc // 20 AS BIGINT) AS bucket,
-         CAST(COUNT(*) AS BIGINT) AS nv
-  FROM (SELECT token, MIN(doc_id) AS first_doc FROM toks GROUP BY token)
-  GROUP BY 1),
-j AS (
-  SELECT pb.bucket, pb.nt, COALESCE(nv.nv, 0) AS nv
-  FROM pb LEFT JOIN nv USING (bucket)),
-c AS (
-  SELECT bucket,
-         CAST(SUM(nt) OVER (ORDER BY bucket
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens,
-         CAST(SUM(nv) OVER (ORDER BY bucket
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_vocab
-  FROM j)
-SELECT bucket, cum_tokens, cum_vocab,
-       round(ln(CAST(cum_vocab AS DOUBLE)) / ln(CAST(cum_tokens AS DOUBLE)), 6)
-         AS heaps_beta
-FROM c
-"""
-
-QUERIES["heaps_vocab_growth"] = q_heaps_vocab_growth
-ORACLES["heaps_vocab_growth"] = ORACLE_HEAPS
-
-
 def _dp_noise_table(scale: float = 2.0, cells: int = 64) -> list[int]:
     """Frozen quantile table of a two-sided-geometric (discrete
     Laplace) mechanism: entry j is the inverse CDF of Laplace(scale)
@@ -13208,6 +11945,30 @@ def _dp_noise_table(scale: float = 2.0, cells: int = 64) -> list[int]:
     return out
 
 
+def _oracle_dp_noisy() -> str:
+    table = _dp_noise_table()
+    arr = ", ".join(str(int(v)) for v in table)
+    return f"""
+WITH per AS (
+  SELECT event_type, CAST(dayofweek(ts) + 1 AS BIGINT) AS dow,
+         CAST(COUNT(*) AS BIGINT) AS n_true
+  FROM events GROUP BY 1, 2),
+noised AS (
+  SELECT event_type, dow, n_true,
+         ([{arr}])[
+           ((strpos('0123456789abcdef',
+                    substr(md5('dp:' || event_type || ':' || dow), 1, 1)) - 1) * 16
+            + strpos('0123456789abcdef',
+                     substr(md5('dp:' || event_type || ':' || dow), 2, 1)) - 1) % 64
+           + 1] AS noise
+  FROM per)
+SELECT event_type, dow, n_true, CAST(noise AS BIGINT) AS noise,
+       CAST(greatest(n_true + noise, 0) AS BIGINT) AS n_noisy
+FROM noised
+"""
+
+
+@query(oracle=_oracle_dp_noisy())
 def q_dp_noisy_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Differential-privacy-STYLE noisy release of the event-type ×
     day-of-week histogram: exact counts plus two-sided-geometric
@@ -13244,33 +12005,31 @@ def q_dp_noisy_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_dp_noisy() -> str:
-    table = _dp_noise_table()
-    arr = ", ".join(str(int(v)) for v in table)
-    return f"""
-WITH per AS (
-  SELECT event_type, CAST(dayofweek(ts) + 1 AS BIGINT) AS dow,
-         CAST(COUNT(*) AS BIGINT) AS n_true
-  FROM events GROUP BY 1, 2),
-noised AS (
-  SELECT event_type, dow, n_true,
-         ([{arr}])[
-           ((strpos('0123456789abcdef',
-                    substr(md5('dp:' || event_type || ':' || dow), 1, 1)) - 1) * 16
-            + strpos('0123456789abcdef',
-                     substr(md5('dp:' || event_type || ':' || dow), 2, 1)) - 1) % 64
-           + 1] AS noise
-  FROM per)
-SELECT event_type, dow, n_true, CAST(noise AS BIGINT) AS noise,
-       CAST(greatest(n_true + noise, 0) AS BIGINT) AS n_noisy
-FROM noised
-"""
-
-
-QUERIES["dp_noisy_histogram"] = q_dp_noisy_histogram
-ORACLES["dp_noisy_histogram"] = _oracle_dp_noisy()
-
-
+@query(oracle="""
+WITH tagged AS (
+  SELECT user_id, ts, 1 AS is_left, event_id,
+         NULL::BIGINT AS r_click_id, NULL::TIMESTAMP AS r_ts
+  FROM events WHERE event_type = 'purchase'
+  UNION ALL
+  SELECT user_id, ts, 0 AS is_left, NULL::BIGINT AS event_id,
+         event_id AS r_click_id, ts AS r_ts
+  FROM events WHERE event_type = 'click'
+),
+carried AS (
+  SELECT user_id, ts, is_left, event_id,
+         last_value(r_click_id IGNORE NULLS) OVER w AS click_event_id,
+         last_value(r_ts IGNORE NULLS) OVER w AS click_ts
+  FROM tagged
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, is_left ASC, r_click_id ASC NULLS FIRST
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+)
+SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+       CASE WHEN epoch_us(ts) - epoch_us(click_ts) <= 1800000000
+            THEN click_event_id END AS click_event_id,
+       CASE WHEN epoch_us(ts) - epoch_us(click_ts) <= 1800000000
+            THEN epoch_us(click_ts) END AS click_ts_us
+FROM carried WHERE is_left = 1
+""")
 def q_asof_tolerance_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tolerance-bounded as-of attribution
     (operators.asof.asof_tolerance_join — pandas merge_asof(tolerance)
@@ -13304,36 +12063,58 @@ def q_asof_tolerance_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ASOF_TOLERANCE = """
-WITH tagged AS (
-  SELECT user_id, ts, 1 AS is_left, event_id,
-         NULL::BIGINT AS r_click_id, NULL::TIMESTAMP AS r_ts
-  FROM events WHERE event_type = 'purchase'
-  UNION ALL
-  SELECT user_id, ts, 0 AS is_left, NULL::BIGINT AS event_id,
-         event_id AS r_click_id, ts AS r_ts
-  FROM events WHERE event_type = 'click'
-),
-carried AS (
-  SELECT user_id, ts, is_left, event_id,
-         last_value(r_click_id IGNORE NULLS) OVER w AS click_event_id,
-         last_value(r_ts IGNORE NULLS) OVER w AS click_ts
-  FROM tagged
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, is_left ASC, r_click_id ASC NULLS FIRST
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-       CASE WHEN epoch_us(ts) - epoch_us(click_ts) <= 1800000000
-            THEN click_event_id END AS click_event_id,
-       CASE WHEN epoch_us(ts) - epoch_us(click_ts) <= 1800000000
-            THEN epoch_us(click_ts) END AS click_ts_us
-FROM carried WHERE is_left = 1
+def _oracle_chunk_retrieval() -> str:
+    qterms = [(0, ["join", "stream"]), (1, ["filter", "data"]), (2, ["table", "group"])]
+
+    def occ(expr: str, term: str) -> str:
+        return (
+            f"((length({expr}) - length(replace({expr}, '{term}', ''))) // {len(term)})"
+        )
+
+    wsel = " UNION ALL ".join(
+        f"SELECT {qid} AS qid, doc_id, "
+        + " + ".join(occ("text", t) for t in terms)
+        + " AS score FROM documents"
+        for qid, terms in qterms
+    )
+    csel = " UNION ALL ".join(
+        f"SELECT {qid} AS qid, doc_id, MAX("
+        + " + ".join(occ("ck", t) for t in terms)
+        + ") AS score FROM chunks GROUP BY 1, 2"
+        for qid, terms in qterms
+    )
+    return f"""
+WITH chunks AS (
+  SELECT doc_id, substr(text, s + 1, 64) AS ck
+  FROM documents,
+       LATERAL (SELECT unnest(generate_series(0, greatest(length(text) - 1, 0), 48)) AS s) g),
+whole AS ({wsel}),
+chunked AS ({csel}),
+wtop AS (
+  SELECT qid, doc_id, rank FROM (
+    SELECT qid, doc_id,
+           row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id ASC) AS rank
+    FROM whole) WHERE rank <= 5),
+ctop AS (
+  SELECT qid, doc_id, rank FROM (
+    SELECT qid, doc_id,
+           row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id ASC) AS rank
+    FROM chunked) WHERE rank <= 5),
+ov AS (
+  SELECT w.qid, CAST(COUNT(*) AS BIGINT) AS n_overlap
+  FROM wtop w JOIN ctop c ON w.qid = c.qid AND w.doc_id = c.doc_id
+  GROUP BY 1)
+SELECT CAST(w1.qid AS BIGINT) AS qid,
+       w1.doc_id AS whole_top_doc, c1.doc_id AS chunk_top_doc,
+       COALESCE(ov.n_overlap, 0) AS n_overlap,
+       round(COALESCE(ov.n_overlap, 0) / 5.0, 6) AS agreement_at_5
+FROM (SELECT qid, doc_id FROM wtop WHERE rank = 1) w1
+JOIN (SELECT qid, doc_id FROM ctop WHERE rank = 1) c1 USING (qid)
+LEFT JOIN ov USING (qid)
 """
 
-QUERIES["asof_tolerance_attribution"] = q_asof_tolerance_attribution
-ORACLES["asof_tolerance_attribution"] = ORACLE_ASOF_TOLERANCE
 
-
+@query(oracle=_oracle_chunk_retrieval())
 def q_chunk_retrieval_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retrieval-granularity audit (the RAG chunking question): for
     each of 3 keyword queries, the top-5 documents under WHOLE-DOC
@@ -13433,61 +12214,40 @@ def q_chunk_retrieval_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_chunk_retrieval() -> str:
-    qterms = [(0, ["join", "stream"]), (1, ["filter", "data"]), (2, ["table", "group"])]
-
-    def occ(expr: str, term: str) -> str:
-        return (
-            f"((length({expr}) - length(replace({expr}, '{term}', ''))) // {len(term)})"
-        )
-
-    wsel = " UNION ALL ".join(
-        f"SELECT {qid} AS qid, doc_id, "
-        + " + ".join(occ("text", t) for t in terms)
-        + " AS score FROM documents"
-        for qid, terms in qterms
-    )
-    csel = " UNION ALL ".join(
-        f"SELECT {qid} AS qid, doc_id, MAX("
-        + " + ".join(occ("ck", t) for t in terms)
-        + ") AS score FROM chunks GROUP BY 1, 2"
-        for qid, terms in qterms
-    )
-    return f"""
-WITH chunks AS (
-  SELECT doc_id, substr(text, s + 1, 64) AS ck
-  FROM documents,
-       LATERAL (SELECT unnest(generate_series(0, greatest(length(text) - 1, 0), 48)) AS s) g),
-whole AS ({wsel}),
-chunked AS ({csel}),
-wtop AS (
-  SELECT qid, doc_id, rank FROM (
-    SELECT qid, doc_id,
-           row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id ASC) AS rank
-    FROM whole) WHERE rank <= 5),
-ctop AS (
-  SELECT qid, doc_id, rank FROM (
-    SELECT qid, doc_id,
-           row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id ASC) AS rank
-    FROM chunked) WHERE rank <= 5),
-ov AS (
-  SELECT w.qid, CAST(COUNT(*) AS BIGINT) AS n_overlap
-  FROM wtop w JOIN ctop c ON w.qid = c.qid AND w.doc_id = c.doc_id
-  GROUP BY 1)
-SELECT CAST(w1.qid AS BIGINT) AS qid,
-       w1.doc_id AS whole_top_doc, c1.doc_id AS chunk_top_doc,
-       COALESCE(ov.n_overlap, 0) AS n_overlap,
-       round(COALESCE(ov.n_overlap, 0) / 5.0, 6) AS agreement_at_5
-FROM (SELECT qid, doc_id FROM wtop WHERE rank = 1) w1
-JOIN (SELECT qid, doc_id FROM ctop WHERE rank = 1) c1 USING (qid)
-LEFT JOIN ov USING (qid)
-"""
-
-
-QUERIES["chunk_retrieval_agreement"] = q_chunk_retrieval_agreement
-ORACLES["chunk_retrieval_agreement"] = _oracle_chunk_retrieval()
-
-
+@query(oracle="""
+WITH base AS (
+  SELECT vec_id, CAST(label AS BIGINT) AS label,
+         list_transform(embedding,
+           x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS e
+  FROM embeddings),
+evals AS (
+  SELECT vec_id AS q_id, label AS true_label, e AS qe
+  FROM base WHERE vec_id % 25 = 0),
+scored AS (
+  SELECT q.q_id, q.true_label, b.vec_id, b.label,
+         list_sum(list_transform(range(1, 65),
+           i -> (b.e[i] - q.qe[i]) * (b.e[i] - q.qe[i]))) AS d
+  FROM base b JOIN evals q ON b.vec_id <> q.q_id),
+nn AS (
+  SELECT q_id, true_label, label FROM (
+    SELECT q_id, true_label, label,
+           row_number() OVER (PARTITION BY q_id ORDER BY d ASC, vec_id ASC) AS rn
+    FROM scored) WHERE rn <= 5),
+votes AS (
+  SELECT q_id, true_label, label, COUNT(*) AS v
+  FROM nn GROUP BY 1, 2, 3),
+pred AS (
+  SELECT q_id, true_label, label AS pred_label FROM (
+    SELECT q_id, true_label, label,
+           row_number() OVER (PARTITION BY q_id ORDER BY v DESC, label ASC) AS rn
+    FROM votes) WHERE rn = 1)
+SELECT true_label, CAST(COUNT(*) AS BIGINT) AS n_eval,
+       CAST(SUM(CASE WHEN pred_label = true_label THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_correct,
+       round(SUM(CASE WHEN pred_label = true_label THEN 1 ELSE 0 END)
+             / CAST(COUNT(*) AS DOUBLE), 6) AS accuracy
+FROM pred GROUP BY 1
+""")
 def q_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-one-out 5-NN label-prediction accuracy over the embedding
     corpus — the standard embedding-quality probe (does neighborhood
@@ -13549,45 +12309,34 @@ def q_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_KNN_EVAL = """
-WITH base AS (
-  SELECT vec_id, CAST(label AS BIGINT) AS label,
-         list_transform(embedding,
+def _oracle_pq_recall() -> str:
+    ivfpq = _oracle_ivf_pq()
+    return f"""
+WITH approx AS ({ivfpq}),
+ints2 AS (
+  SELECT vec_id, list_transform(embedding,
            x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS e
   FROM embeddings),
-evals AS (
-  SELECT vec_id AS q_id, label AS true_label, e AS qe
-  FROM base WHERE vec_id % 25 = 0),
-scored AS (
-  SELECT q.q_id, q.true_label, b.vec_id, b.label,
-         list_sum(list_transform(range(1, 65),
-           i -> (b.e[i] - q.qe[i]) * (b.e[i] - q.qe[i]))) AS d
-  FROM base b JOIN evals q ON b.vec_id <> q.q_id),
-nn AS (
-  SELECT q_id, true_label, label FROM (
-    SELECT q_id, true_label, label,
-           row_number() OVER (PARTITION BY q_id ORDER BY d ASC, vec_id ASC) AS rn
-    FROM scored) WHERE rn <= 5),
-votes AS (
-  SELECT q_id, true_label, label, COUNT(*) AS v
-  FROM nn GROUP BY 1, 2, 3),
-pred AS (
-  SELECT q_id, true_label, label AS pred_label FROM (
-    SELECT q_id, true_label, label,
-           row_number() OVER (PARTITION BY q_id ORDER BY v DESC, label ASC) AS rn
-    FROM votes) WHERE rn = 1)
-SELECT true_label, CAST(COUNT(*) AS BIGINT) AS n_eval,
-       CAST(SUM(CASE WHEN pred_label = true_label THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_correct,
-       round(SUM(CASE WHEN pred_label = true_label THEN 1 ELSE 0 END)
-             / CAST(COUNT(*) AS DOUBLE), 6) AS accuracy
-FROM pred GROUP BY 1
+q2 AS (SELECT vec_id AS q_id, e AS qe FROM ints2 WHERE vec_id < 3),
+exact AS (
+  SELECT q_id, vec_id FROM (
+    SELECT q2.q_id, b.vec_id,
+           row_number() OVER (PARTITION BY q2.q_id ORDER BY
+             list_sum(list_transform(range(1, 65),
+               i -> (b.e[i] - q2.qe[i]) * (b.e[i] - q2.qe[i]))) ASC,
+             b.vec_id ASC) AS rn
+    FROM ints2 b CROSS JOIN q2 WHERE b.vec_id >= 3) WHERE rn <= 10),
+ov AS (
+  SELECT a.q_id, CAST(COUNT(*) AS BIGINT) AS n_overlap
+  FROM approx a JOIN exact e ON a.q_id = e.q_id AND a.vec_id = e.vec_id
+  GROUP BY 1)
+SELECT q2.q_id, COALESCE(ov.n_overlap, 0) AS n_overlap,
+       round(COALESCE(ov.n_overlap, 0) / 10.0, 6) AS recall_at_10
+FROM q2 LEFT JOIN ov USING (q_id)
 """
 
-QUERIES["knn_label_eval"] = q_knn_label_eval
-ORACLES["knn_label_eval"] = ORACLE_KNN_EVAL
 
-
+@query(oracle=_oracle_pq_recall())
 def q_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the end-to-end IVF-PQ search against exact
     ground truth — the eval every ANN deployment publishes next to its
@@ -13642,37 +12391,16 @@ def q_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_pq_recall() -> str:
-    ivfpq = _oracle_ivf_pq()
-    return f"""
-WITH approx AS ({ivfpq}),
-ints2 AS (
-  SELECT vec_id, list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS e
-  FROM embeddings),
-q2 AS (SELECT vec_id AS q_id, e AS qe FROM ints2 WHERE vec_id < 3),
-exact AS (
-  SELECT q_id, vec_id FROM (
-    SELECT q2.q_id, b.vec_id,
-           row_number() OVER (PARTITION BY q2.q_id ORDER BY
-             list_sum(list_transform(range(1, 65),
-               i -> (b.e[i] - q2.qe[i]) * (b.e[i] - q2.qe[i]))) ASC,
-             b.vec_id ASC) AS rn
-    FROM ints2 b CROSS JOIN q2 WHERE b.vec_id >= 3) WHERE rn <= 10),
-ov AS (
-  SELECT a.q_id, CAST(COUNT(*) AS BIGINT) AS n_overlap
-  FROM approx a JOIN exact e ON a.q_id = e.q_id AND a.vec_id = e.vec_id
-  GROUP BY 1)
-SELECT q2.q_id, COALESCE(ov.n_overlap, 0) AS n_overlap,
-       round(COALESCE(ov.n_overlap, 0) / 10.0, 6) AS recall_at_10
-FROM q2 LEFT JOIN ov USING (q_id)
-"""
-
-
-QUERIES["pq_recall_eval"] = q_pq_recall_eval
-ORACLES["pq_recall_eval"] = _oracle_pq_recall()
-
-
+@query(oracle="""
+SELECT o_orderpriority,
+       o_orderstatus,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents,
+       round(CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
+                  AS DOUBLE) / COUNT(*) / 100.0, 6) AS avg_price
+FROM orders
+GROUP BY ALL
+""")
 def q_group_by_all_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL / ORDER BY ALL surface parity: the DuckDB-born
     shorthand Spark 4 adopted — every non-aggregate select item
@@ -13694,21 +12422,18 @@ def q_group_by_all_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-ORACLE_GROUP_BY_ALL = """
+@query(oracle="""
 SELECT o_orderpriority,
-       o_orderstatus,
        CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents,
-       round(CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT))
-                  AS DOUBLE) / COUNT(*) / 100.0, 6) AS avg_price
-FROM orders
-GROUP BY ALL
-"""
-
-QUERIES["group_by_all_rollup"] = q_group_by_all_rollup
-ORACLES["group_by_all_rollup"] = ORACLE_GROUP_BY_ALL
-
-
+       round(quantile_cont(c, 0.25) / 100.0, 6) AS p25,
+       round(quantile_cont(c, 0.5) / 100.0, 6) AS median,
+       round(quantile_cont(c, 0.75) / 100.0, 6) AS p75,
+       round(quantile_cont(c, 0.99) / 100.0, 6) AS p99
+FROM (SELECT o_orderpriority,
+             CAST(round(o_totalprice * 100) AS BIGINT) AS c
+      FROM orders)
+GROUP BY o_orderpriority
+""")
 def q_percentile_cont_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (PERCENTILE_CONT semantics) of
     the cents-exact order price per priority: Spark's exact
@@ -13752,23 +12477,30 @@ def q_percentile_cont_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PERCENTILE_CONT = """
-SELECT o_orderpriority,
-       CAST(COUNT(*) AS BIGINT) AS n_orders,
-       round(quantile_cont(c, 0.25) / 100.0, 6) AS p25,
-       round(quantile_cont(c, 0.5) / 100.0, 6) AS median,
-       round(quantile_cont(c, 0.75) / 100.0, 6) AS p75,
-       round(quantile_cont(c, 0.99) / 100.0, 6) AS p99
-FROM (SELECT o_orderpriority,
-             CAST(round(o_totalprice * 100) AS BIGINT) AS c
-      FROM orders)
-GROUP BY o_orderpriority
-"""
-
-QUERIES["percentile_cont_parity"] = q_percentile_cont_parity
-ORACLES["percentile_cont_parity"] = ORACLE_PERCENTILE_CONT
-
-
+@query(oracle="""
+WITH base AS (
+  SELECT event_type, event_id,
+         CAST(round(value * 100) AS BIGINT) AS cents,
+         epoch_us(ts) AS tus
+  FROM events),
+ranked AS (
+  SELECT event_type,
+         CAST(row_number() OVER (PARTITION BY event_type
+              ORDER BY cents ASC, event_id ASC) AS BIGINT)
+         - CAST(row_number() OVER (PARTITION BY event_type
+              ORDER BY tus ASC, event_id ASC) AS BIGINT) AS d
+  FROM base)
+SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+       CAST(CAST(SUM(CAST(d AS HUGEINT) * CAST(d AS HUGEINT)) AS DECIMAL(38,0))
+            AS VARCHAR)
+         AS sum_d2,
+       round(1 - (6.0 * CAST(SUM(CAST(d AS HUGEINT) * CAST(d AS HUGEINT)) AS DOUBLE))
+             / (CAST(COUNT(*) AS DOUBLE)
+                * (CAST(COUNT(*) AS DOUBLE) * CAST(COUNT(*) AS DOUBLE) - 1)),
+             6)
+         AS spearman_rho
+FROM ranked GROUP BY event_type
+""")
 def q_spearman_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation between event VALUE and event TIME
     per event type — the robust does-value-drift-over-time statistic.
@@ -13829,35 +12561,30 @@ def q_spearman_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SPEARMAN = """
-WITH base AS (
-  SELECT event_type, event_id,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         epoch_us(ts) AS tus
-  FROM events),
-ranked AS (
-  SELECT event_type,
-         CAST(row_number() OVER (PARTITION BY event_type
-              ORDER BY cents ASC, event_id ASC) AS BIGINT)
-         - CAST(row_number() OVER (PARTITION BY event_type
-              ORDER BY tus ASC, event_id ASC) AS BIGINT) AS d
-  FROM base)
-SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(CAST(SUM(CAST(d AS HUGEINT) * CAST(d AS HUGEINT)) AS DECIMAL(38,0))
-            AS VARCHAR)
-         AS sum_d2,
-       round(1 - (6.0 * CAST(SUM(CAST(d AS HUGEINT) * CAST(d AS HUGEINT)) AS DOUBLE))
-             / (CAST(COUNT(*) AS DOUBLE)
-                * (CAST(COUNT(*) AS DOUBLE) * CAST(COUNT(*) AS DOUBLE) - 1)),
-             6)
-         AS spearman_rho
-FROM ranked GROUP BY event_type
-"""
-
-QUERIES["spearman_rank_correlation"] = q_spearman_rank_correlation
-ORACLES["spearman_rank_correlation"] = ORACLE_SPEARMAN
-
-
+@query(oracle="""
+WITH per_user AS (
+  SELECT user_id,
+         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS score,
+         CAST(MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT)
+           AS buyer
+  FROM events GROUP BY 1),
+deciled AS (
+  SELECT buyer, CAST(ntile(10) OVER (ORDER BY score DESC, user_id ASC) AS BIGINT)
+           AS decile
+  FROM per_user),
+per AS (
+  SELECT decile, CAST(COUNT(*) AS BIGINT) AS n_users,
+         CAST(SUM(buyer) AS BIGINT) AS n_buyers
+  FROM deciled GROUP BY 1),
+tot AS (SELECT CAST(SUM(n_users) AS BIGINT) AS tu,
+               CAST(SUM(n_buyers) AS BIGINT) AS tb FROM per)
+SELECT decile, n_users, n_buyers,
+       round(CAST(n_buyers * tu AS DOUBLE) / (n_users * tb), 6) AS lift,
+       round(CAST(SUM(n_buyers) OVER (ORDER BY decile
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+             / CAST(tb AS DOUBLE), 6) AS cum_gains
+FROM per CROSS JOIN tot
+""")
 def q_decile_lift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lift/gains chart (the campaign-targeting model eval): users
     scored by cents-exact total event value, cut into score deciles
@@ -13909,35 +12636,40 @@ def q_decile_lift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DECILE_LIFT = """
-WITH per_user AS (
-  SELECT user_id,
-         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS score,
-         CAST(MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT)
-           AS buyer
-  FROM events GROUP BY 1),
-deciled AS (
-  SELECT buyer, CAST(ntile(10) OVER (ORDER BY score DESC, user_id ASC) AS BIGINT)
-           AS decile
-  FROM per_user),
-per AS (
-  SELECT decile, CAST(COUNT(*) AS BIGINT) AS n_users,
-         CAST(SUM(buyer) AS BIGINT) AS n_buyers
-  FROM deciled GROUP BY 1),
-tot AS (SELECT CAST(SUM(n_users) AS BIGINT) AS tu,
-               CAST(SUM(n_buyers) AS BIGINT) AS tb FROM per)
-SELECT decile, n_users, n_buyers,
-       round(CAST(n_buyers * tu AS DOUBLE) / (n_users * tb), 6) AS lift,
-       round(CAST(SUM(n_buyers) OVER (ORDER BY decile
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-             / CAST(tb AS DOUBLE), 6) AS cum_gains
-FROM per CROSS JOIN tot
+def _oracle_subsample_ci(B: int = 32) -> str:
+    sums = ", ".join(
+        f"CAST(SUM(CASE WHEN substr(md5('ci:{r}:' || o_custkey), 1, 1) < '8' "
+        f"THEN c ELSE 0 END) AS BIGINT) AS s{r}"
+        for r in range(B)
+    )
+    sx = " + ".join(f"(s{r} * 2)" for r in range(B))
+    sx2 = " + ".join(
+        f"(CAST(s{r} * 2 AS HUGEINT) * CAST(s{r} * 2 AS HUGEINT))"
+        for r in range(B)
+    )
+    return f"""
+WITH base AS (
+  SELECT o_custkey, CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders),
+wide AS (
+  SELECT CAST(SUM(c) AS BIGINT) AS tot, {sums} FROM base),
+stats AS (
+  SELECT tot,
+         CAST({sx} AS DOUBLE) / {B} AS mean,
+         CAST({B} * ({sx2})
+              - CAST({sx} AS HUGEINT) * CAST({sx} AS HUGEINT) AS DOUBLE)
+           / ({B} * ({B} - 1)) AS var
+  FROM wide)
+SELECT tot / 100.0 AS point_revenue,
+       round(mean / 100.0, 6) AS replicate_mean,
+       round(sqrt(var) / 100.0, 6) AS replicate_sd,
+       round((mean - 2 * sqrt(var)) / 100.0, 6) AS ci_lo,
+       round((mean + 2 * sqrt(var)) / 100.0, 6) AS ci_hi,
+       CAST({B} AS BIGINT) AS n_replicates
+FROM stats
 """
 
-QUERIES["decile_lift_curve"] = q_decile_lift_curve
-ORACLES["decile_lift_curve"] = ORACLE_DECILE_LIFT
 
-
+@query(oracle=_oracle_subsample_ci())
 def q_subsample_ci_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resampling-based uncertainty for total revenue-per-customer:
     32 deterministic half-sample replicates (customer c enters
@@ -14011,43 +12743,15 @@ def q_subsample_ci_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_subsample_ci(B: int = 32) -> str:
-    sums = ", ".join(
-        f"CAST(SUM(CASE WHEN substr(md5('ci:{r}:' || o_custkey), 1, 1) < '8' "
-        f"THEN c ELSE 0 END) AS BIGINT) AS s{r}"
-        for r in range(B)
-    )
-    sx = " + ".join(f"(s{r} * 2)" for r in range(B))
-    sx2 = " + ".join(
-        f"(CAST(s{r} * 2 AS HUGEINT) * CAST(s{r} * 2 AS HUGEINT))"
-        for r in range(B)
-    )
-    return f"""
-WITH base AS (
-  SELECT o_custkey, CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders),
-wide AS (
-  SELECT CAST(SUM(c) AS BIGINT) AS tot, {sums} FROM base),
-stats AS (
-  SELECT tot,
-         CAST({sx} AS DOUBLE) / {B} AS mean,
-         CAST({B} * ({sx2})
-              - CAST({sx} AS HUGEINT) * CAST({sx} AS HUGEINT) AS DOUBLE)
-           / ({B} * ({B} - 1)) AS var
-  FROM wide)
-SELECT tot / 100.0 AS point_revenue,
-       round(mean / 100.0, 6) AS replicate_mean,
-       round(sqrt(var) / 100.0, 6) AS replicate_sd,
-       round((mean - 2 * sqrt(var)) / 100.0, 6) AS ci_lo,
-       round((mean + 2 * sqrt(var)) / 100.0, 6) AS ci_hi,
-       CAST({B} AS BIGINT) AS n_replicates
-FROM stats
-"""
-
-
-QUERIES["subsample_ci_revenue"] = q_subsample_ci_revenue
-ORACLES["subsample_ci_revenue"] = _oracle_subsample_ci()
-
-
+@query(oracle="""
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(SUM(CAST(round(greatest(value, 0) * 100) AS BIGINT)) AS BIGINT)
+         AS clamped_cents,
+       CAST(SUM(CASE WHEN value < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_clamped
+FROM events
+GROUP BY event_type
+""")
 def q_sql_udf_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 SQL-language UDF (CREATE TEMPORARY FUNCTION ... RETURN
     <expr> — the catalog-registered, catalyst-inlined kind, NOT a
@@ -14074,20 +12778,17 @@ def q_sql_udf_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-ORACLE_SQL_UDF = """
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(round(greatest(value, 0) * 100) AS BIGINT)) AS BIGINT)
-         AS clamped_cents,
-       CAST(SUM(CASE WHEN value < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_clamped
-FROM events
-GROUP BY event_type
-"""
-
-QUERIES["sql_udf_rollup"] = q_sql_udf_rollup
-ORACLES["sql_udf_rollup"] = ORACLE_SQL_UDF
-
-
+@query(oracle="""
+WITH per AS (
+  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents,
+         CAST(COUNT(*) AS BIGINT) AS n
+  FROM events GROUP BY 1, 2)
+SELECT event_type, cents, n,
+       CAST(SUM(n) OVER (PARTITION BY event_type ORDER BY cents
+            RANGE BETWEEN 500 PRECEDING AND 500 FOLLOWING) AS BIGINT)
+         AS band_mass
+FROM per
+""")
 def q_range_frame_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE-frame window coverage (value-range frames, the window
     surface everything else here leaves untested — ROWS frames count
@@ -14114,22 +12815,22 @@ def q_range_frame_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-ORACLE_RANGE_FRAME = """
-WITH per AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2)
-SELECT event_type, cents, n,
-       CAST(SUM(n) OVER (PARTITION BY event_type ORDER BY cents
-            RANGE BETWEEN 500 PRECEDING AND 500 FOLLOWING) AS BIGINT)
-         AS band_mass
-FROM per
-"""
-
-QUERIES["range_frame_smoothing"] = q_range_frame_smoothing
-ORACLES["range_frame_smoothing"] = ORACLE_RANGE_FRAME
-
-
+@query(oracle="""
+WITH l AS (SELECT l_orderkey AS o, l_partkey AS p FROM lineitem),
+und AS (
+  SELECT DISTINCT a.p AS i, b.p AS j
+  FROM l a JOIN l b ON a.o = b.o AND a.p <> b.p),
+deg AS (SELECT i, CAST(COUNT(*) AS BIGINT) AS d FROM und GROUP BY 1),
+mid_ok AS (SELECT i AS mid FROM deg WHERE d <= 32),
+h1 AS (SELECT und.i AS v, und.j AS m FROM und JOIN mid_ok ON und.j = mid_ok.mid),
+h2 AS (SELECT i AS m, j AS w FROM und),
+reach AS (
+  SELECT DISTINCT v, w FROM (
+    SELECT h1.v, h2.w FROM h1 JOIN h2 USING (m) WHERE h1.v <> h2.w
+    UNION ALL
+    SELECT i AS v, j AS w FROM und))
+SELECT v, CAST(COUNT(*) AS BIGINT) AS n_reach2 FROM reach GROUP BY v
+""")
 def q_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree-capped friend-of-friend reach over the part co-purchase
     graph: per part, the number of DISTINCT parts reachable in exactly
@@ -14167,27 +12868,23 @@ def q_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_TWO_HOP = """
-WITH l AS (SELECT l_orderkey AS o, l_partkey AS p FROM lineitem),
-und AS (
-  SELECT DISTINCT a.p AS i, b.p AS j
-  FROM l a JOIN l b ON a.o = b.o AND a.p <> b.p),
-deg AS (SELECT i, CAST(COUNT(*) AS BIGINT) AS d FROM und GROUP BY 1),
-mid_ok AS (SELECT i AS mid FROM deg WHERE d <= 32),
-h1 AS (SELECT und.i AS v, und.j AS m FROM und JOIN mid_ok ON und.j = mid_ok.mid),
-h2 AS (SELECT i AS m, j AS w FROM und),
-reach AS (
-  SELECT DISTINCT v, w FROM (
-    SELECT h1.v, h2.w FROM h1 JOIN h2 USING (m) WHERE h1.v <> h2.w
-    UNION ALL
-    SELECT i AS v, j AS w FROM und))
-SELECT v, CAST(COUNT(*) AS BIGINT) AS n_reach2 FROM reach GROUP BY v
-"""
-
-QUERIES["two_hop_reach"] = q_two_hop_reach
-ORACLES["two_hop_reach"] = ORACLE_TWO_HOP
-
-
+@query(oracle="""
+WITH base AS (
+  SELECT user_id, event_id, CAST(round(value * 100) AS BIGINT) AS cents,
+         epoch_us(ts) AS tus
+  FROM events),
+seg AS (
+  SELECT user_id, cents,
+         (lead(tus) OVER (PARTITION BY user_id ORDER BY tus ASC, event_id ASC)
+          - tus) // 1000000 AS gap_s
+  FROM base)
+SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_segments,
+       CAST(SUM(gap_s) AS BIGINT) AS total_seconds,
+       round(CAST(SUM(cents * gap_s) AS BIGINT)
+             / CAST(SUM(gap_s) AS DOUBLE) / 100.0, 6) AS twap
+FROM seg WHERE gap_s IS NOT NULL
+GROUP BY user_id
+""")
 def q_time_weighted_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-weighted average value per user (the TWAP/monitoring
     standard — unweighted means over-represent bursts): each event's
@@ -14231,30 +12928,41 @@ def q_time_weighted_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_TWAP = """
-WITH base AS (
-  SELECT user_id, event_id, CAST(round(value * 100) AS BIGINT) AS cents,
-         epoch_us(ts) AS tus
-  FROM events),
-seg AS (
-  SELECT user_id, cents,
-         (lead(tus) OVER (PARTITION BY user_id ORDER BY tus ASC, event_id ASC)
-          - tus) // 1000000 AS gap_s
-  FROM base)
-SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_segments,
-       CAST(SUM(gap_s) AS BIGINT) AS total_seconds,
-       round(CAST(SUM(cents * gap_s) AS BIGINT)
-             / CAST(SUM(gap_s) AS DOUBLE) / 100.0, 6) AS twap
-FROM seg WHERE gap_s IS NOT NULL
-GROUP BY user_id
-"""
-
-QUERIES["time_weighted_average"] = q_time_weighted_average
-ORACLES["time_weighted_average"] = ORACLE_TWAP
-
-
 # ------------------------------------------------------- round 9
 
+@query(oracle="""
+WITH l AS (
+  SELECT user_id, event_id AS left_id, ts AS left_ts
+  FROM events WHERE event_type = 'click'),
+r AS (
+  SELECT user_id, event_id AS right_id, ts AS right_ts, value AS right_value
+  FROM events WHERE event_type = 'purchase'),
+wm AS (
+  SELECT least(
+    (SELECT (epoch_us(max(ts)) // 1000) * 1000 FROM events
+      WHERE event_type = 'click'),
+    (SELECT (epoch_us(max(ts)) // 1000) * 1000 FROM events
+      WHERE event_type = 'purchase')) - 7200000000 AS v),
+j AS (
+  SELECT coalesce(l.user_id, r.user_id) AS user_id,
+         l.left_id, l.left_ts, r.right_id, r.right_ts, r.right_value
+  FROM l FULL JOIN r
+    ON l.user_id = r.user_id
+   AND r.right_ts >= l.left_ts
+   AND r.right_ts <= l.left_ts + INTERVAL 30 MINUTE),
+emitted AS (
+  SELECT * FROM j, wm
+  WHERE (left_id IS NOT NULL AND right_id IS NOT NULL)
+     OR (right_id IS NULL AND epoch_us(left_ts + INTERVAL 30 MINUTE) < wm.v)
+     OR (left_id IS NULL AND epoch_us(right_ts) < wm.v))
+SELECT user_id,
+       CAST(COUNT(*) AS BIGINT) AS n_rows,
+       CAST(count_if(right_id IS NULL) AS BIGINT) AS n_left_only,
+       CAST(count_if(left_id IS NULL) AS BIGINT) AS n_right_only,
+       CAST(SUM(CAST(round(coalesce(right_value, 0.0) * 10000) AS BIGINT))
+            AS BIGINT) / 10000.0 AS attributed_value
+FROM emitted GROUP BY 1
+""")
 def q_stream_full_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER stream-stream join executed as a real streaming job
     (streaming.joins.attribution_full_outer_join_once) — the two-sided
@@ -14291,44 +12999,20 @@ def q_stream_full_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-ORACLE_STREAM_FULL_OUTER_ATTRIBUTION = """
-WITH l AS (
-  SELECT user_id, event_id AS left_id, ts AS left_ts
-  FROM events WHERE event_type = 'click'),
-r AS (
-  SELECT user_id, event_id AS right_id, ts AS right_ts, value AS right_value
-  FROM events WHERE event_type = 'purchase'),
-wm AS (
-  SELECT least(
-    (SELECT (epoch_us(max(ts)) // 1000) * 1000 FROM events
-      WHERE event_type = 'click'),
-    (SELECT (epoch_us(max(ts)) // 1000) * 1000 FROM events
-      WHERE event_type = 'purchase')) - 7200000000 AS v),
-j AS (
-  SELECT coalesce(l.user_id, r.user_id) AS user_id,
-         l.left_id, l.left_ts, r.right_id, r.right_ts, r.right_value
-  FROM l FULL JOIN r
-    ON l.user_id = r.user_id
-   AND r.right_ts >= l.left_ts
-   AND r.right_ts <= l.left_ts + INTERVAL 30 MINUTE),
-emitted AS (
-  SELECT * FROM j, wm
-  WHERE (left_id IS NOT NULL AND right_id IS NOT NULL)
-     OR (right_id IS NULL AND epoch_us(left_ts + INTERVAL 30 MINUTE) < wm.v)
-     OR (left_id IS NULL AND epoch_us(right_ts) < wm.v))
-SELECT user_id,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(count_if(right_id IS NULL) AS BIGINT) AS n_left_only,
-       CAST(count_if(left_id IS NULL) AS BIGINT) AS n_right_only,
-       CAST(SUM(CAST(round(coalesce(right_value, 0.0) * 10000) AS BIGINT))
-            AS BIGINT) / 10000.0 AS attributed_value
-FROM emitted GROUP BY 1
-"""
-
-QUERIES["stream_full_outer_attribution"] = q_stream_full_outer_attribution
-ORACLES["stream_full_outer_attribution"] = ORACLE_STREAM_FULL_OUTER_ATTRIBUTION
-
-
+@query(oracle="""
+WITH h AS (
+  SELECT doc_id,
+         ((doc_id // 8) * 2654435761) % 281474976710656 AS ah
+  FROM documents),
+p AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         xor(a.ah, b.ah) AS x
+  FROM h a JOIN h b ON a.doc_id < b.doc_id)
+SELECT doc_a, doc_b, CAST(bit_count(x) AS BIGINT) AS hamming
+FROM p
+WHERE ((x & 65535) = 0 OR ((x >> 16) & 65535) = 0 OR ((x >> 32) & 65535) = 0)
+  AND bit_count(x) <= 6
+""")
 def q_image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-duplicate detection over REAL container bytes: each
     doc synthesizes an 8×8 grayscale PNG (every 8 consecutive ids share
@@ -14392,25 +13076,17 @@ def q_image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("hamming") <= 6)
 
 
-ORACLE_IMAGE_AHASH = """
-WITH h AS (
-  SELECT doc_id,
-         ((doc_id // 8) * 2654435761) % 281474976710656 AS ah
-  FROM documents),
-p AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         xor(a.ah, b.ah) AS x
-  FROM h a JOIN h b ON a.doc_id < b.doc_id)
-SELECT doc_a, doc_b, CAST(bit_count(x) AS BIGINT) AS hamming
-FROM p
-WHERE ((x & 65535) = 0 OR ((x >> 16) & 65535) = 0 OR ((x >> 32) & 65535) = 0)
-  AND bit_count(x) <= 6
-"""
-
-QUERIES["image_ahash_neardup"] = q_image_ahash_neardup
-ORACLES["image_ahash_neardup"] = ORACLE_IMAGE_AHASH
-
-
+@query(oracle="""
+SELECT o_orderpriority,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(quantile_disc(c, 0.25) AS BIGINT) AS p25_cents,
+       CAST(quantile_disc(c, 0.5) AS BIGINT) AS median_cents,
+       CAST(quantile_disc(c, 0.9) AS BIGINT) AS p90_cents
+FROM (SELECT o_orderpriority,
+             CAST(round(o_totalprice * 100) AS BIGINT) AS c
+      FROM orders)
+GROUP BY o_orderpriority
+""")
 def q_percentile_disc_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERCENTILE_DISC parity (the discrete sibling of
     percentile_cont_parity): both engines pick the FIRST value whose
@@ -14434,22 +13110,28 @@ FROM _pdisc_orders GROUP BY o_orderpriority
 """)
 
 
-ORACLE_PERCENTILE_DISC = """
-SELECT o_orderpriority,
-       CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(quantile_disc(c, 0.25) AS BIGINT) AS p25_cents,
-       CAST(quantile_disc(c, 0.5) AS BIGINT) AS median_cents,
-       CAST(quantile_disc(c, 0.9) AS BIGINT) AS p90_cents
-FROM (SELECT o_orderpriority,
-             CAST(round(o_totalprice * 100) AS BIGINT) AS c
-      FROM orders)
-GROUP BY o_orderpriority
-"""
-
-QUERIES["percentile_disc_parity"] = q_percentile_disc_parity
-ORACLES["percentile_disc_parity"] = ORACLE_PERCENTILE_DISC
-
-
+@query(oracle="""
+WITH hourly AS (
+  SELECT event_type, epoch_us(ts) // 3600000000 AS h,
+         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+  FROM events GROUP BY 1, 2),
+s AS (
+  SELECT cur.event_type, CAST(COUNT(*) AS BIGINT) AS n_seasonal,
+         CAST(SUM(abs(cur.c - seas.c)) AS BIGINT) AS se
+  FROM hourly cur JOIN hourly seas
+    ON cur.event_type = seas.event_type AND cur.h = seas.h + 24
+  GROUP BY 1),
+b AS (
+  SELECT cur.event_type, CAST(COUNT(*) AS BIGINT) AS n_naive,
+         CAST(SUM(abs(cur.c - base.c)) AS BIGINT) AS ne
+  FROM hourly cur JOIN hourly base
+    ON cur.event_type = base.event_type AND cur.h = base.h + 1
+  GROUP BY 1)
+SELECT s.event_type, n_seasonal, n_naive,
+       round((CAST(se AS DOUBLE) / n_seasonal)
+             / (CAST(ne AS DOUBLE) / n_naive), 6) AS mase
+FROM s JOIN b ON s.event_type = b.event_type
+""")
 def q_seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MASE (mean absolute scaled error) of the seasonal-naive
     forecaster per event type: hourly value totals (exact cents), the
@@ -14510,33 +13192,33 @@ def q_seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SEASONAL_MASE = """
+@query(oracle="""
 WITH hourly AS (
   SELECT event_type, epoch_us(ts) // 3600000000 AS h,
-         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+         CAST(COUNT(*) AS BIGINT) AS c
   FROM events GROUP BY 1, 2),
-s AS (
-  SELECT cur.event_type, CAST(COUNT(*) AS BIGINT) AS n_seasonal,
-         CAST(SUM(abs(cur.c - seas.c)) AS BIGINT) AS se
-  FROM hourly cur JOIN hourly seas
-    ON cur.event_type = seas.event_type AND cur.h = seas.h + 24
-  GROUP BY 1),
-b AS (
-  SELECT cur.event_type, CAST(COUNT(*) AS BIGINT) AS n_naive,
-         CAST(SUM(abs(cur.c - base.c)) AS BIGINT) AS ne
-  FROM hourly cur JOIN hourly base
-    ON cur.event_type = base.event_type AND cur.h = base.h + 1
-  GROUP BY 1)
-SELECT s.event_type, n_seasonal, n_naive,
-       round((CAST(se AS DOUBLE) / n_seasonal)
-             / (CAST(ne AS DOUBLE) / n_naive), 6) AS mase
-FROM s JOIN b ON s.event_type = b.event_type
-"""
-
-QUERIES["seasonal_naive_mase"] = q_seasonal_naive_mase
-ORACLES["seasonal_naive_mase"] = ORACLE_SEASONAL_MASE
-
-
+pairs AS (
+  SELECT cur.event_type, lags.lag, cur.c AS x, lagged.c AS y
+  FROM hourly cur
+  CROSS JOIN (SELECT unnest([1, 2, 3]) AS lag) lags
+  JOIN hourly lagged
+    ON cur.event_type = lagged.event_type AND cur.h = lagged.h + lags.lag),
+mom AS (
+  SELECT event_type, lag, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
+         CAST(SUM(x * y) AS BIGINT) AS sxy,
+         CAST(SUM(x * x) AS BIGINT) AS sxx,
+         CAST(SUM(y * y) AS BIGINT) AS syy
+  FROM pairs GROUP BY 1, 2)
+SELECT event_type, CAST(lag AS BIGINT) AS lag, n,
+       round(CAST(n * CAST(sxy AS HUGEINT) - CAST(sx AS HUGEINT) * sy
+                  AS DOUBLE)
+             / (sqrt(CAST(n * CAST(sxx AS HUGEINT) - CAST(sx AS HUGEINT) * sx
+                          AS DOUBLE))
+                * sqrt(CAST(n * CAST(syy AS HUGEINT) - CAST(sy AS HUGEINT) * sy
+                            AS DOUBLE))), 6) AS acf
+FROM mom
+""")
 def q_acf_hourly_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation of the hourly event-count series at lags 1–3
     per event type — the seasonality probe run before picking a
@@ -14599,38 +13281,13 @@ def q_acf_hourly_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ACF_LAGS = """
-WITH hourly AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS h,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2),
-pairs AS (
-  SELECT cur.event_type, lags.lag, cur.c AS x, lagged.c AS y
-  FROM hourly cur
-  CROSS JOIN (SELECT unnest([1, 2, 3]) AS lag) lags
-  JOIN hourly lagged
-    ON cur.event_type = lagged.event_type AND cur.h = lagged.h + lags.lag),
-mom AS (
-  SELECT event_type, lag, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-         CAST(SUM(x * y) AS BIGINT) AS sxy,
-         CAST(SUM(x * x) AS BIGINT) AS sxx,
-         CAST(SUM(y * y) AS BIGINT) AS syy
-  FROM pairs GROUP BY 1, 2)
-SELECT event_type, CAST(lag AS BIGINT) AS lag, n,
-       round(CAST(n * CAST(sxy AS HUGEINT) - CAST(sx AS HUGEINT) * sy
-                  AS DOUBLE)
-             / (sqrt(CAST(n * CAST(sxx AS HUGEINT) - CAST(sx AS HUGEINT) * sx
-                          AS DOUBLE))
-                * sqrt(CAST(n * CAST(syy AS HUGEINT) - CAST(sy AS HUGEINT) * sy
-                            AS DOUBLE))), 6) AS acf
-FROM mom
-"""
-
-QUERIES["acf_hourly_lags"] = q_acf_hourly_lags
-ORACLES["acf_hourly_lags"] = ORACLE_ACF_LAGS
-
-
+@query(oracle="""
+SELECT o_orderpriority,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0
+         AS total_revenue
+FROM orders GROUP BY o_orderpriority
+""")
 def q_identifier_clause_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 IDENTIFIER() clause — the injection-safe way to
     parameterize TABLE/COLUMN names (string→identifier promotion is a
@@ -14655,41 +13312,7 @@ GROUP BY IDENTIFIER(:col)
     )
 
 
-ORACLE_IDENTIFIER_ROLLUP = """
-SELECT o_orderpriority,
-       CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0
-         AS total_revenue
-FROM orders GROUP BY o_orderpriority
-"""
-
-QUERIES["identifier_clause_rollup"] = q_identifier_clause_rollup
-ORACLES["identifier_clause_rollup"] = ORACLE_IDENTIFIER_ROLLUP
-
-
-def q_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MOSS winnowing substring-overlap detection
-    (operators.dedup_near.winnow_fingerprints/winnow_overlap_pairs):
-    char-8-gram md5 fingerprints, minimum per 6-gram window (any shared
-    substring of length ≥ 13 is guaranteed a shared fingerprint),
-    fingerprints appearing in ≤ 20 docs bucket-joined into candidate
-    pairs, kept at ≥ 2 shared prints, scored by containment. The
-    engine-portable lexicographic-min-over-md5-hex trick makes both
-    engines select the identical fingerprint set. The top-100 strongest
-    pairs by (shared_fp, doc_a, doc_b) total order — plagiarism-style
-    overlap without an all-pairs comparison anywhere."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup_near import (
-        winnow_overlap_pairs,
-    )
-
-    d = load_table(spark, sf_dir, "documents")
-    pairs = winnow_overlap_pairs(d)
-    return pairs.orderBy(
-        F.col("shared_fp").desc(), F.col("doc_a").asc(), F.col("doc_b").asc()
-    ).limit(100)
-
-
-ORACLE_WINNOWING = """
+@query(oracle="""
 WITH base AS (
   SELECT doc_id, text, length(text) - 8 + 1 AS npos
   FROM documents WHERE length(text) - 8 + 1 >= 6),
@@ -14720,35 +13343,30 @@ FROM shared
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
 ORDER BY shared_fp DESC, doc_a ASC, doc_b ASC LIMIT 100
-"""
-
-QUERIES["winnowing_overlap"] = q_winnowing_overlap
-ORACLES["winnowing_overlap"] = ORACLE_WINNOWING
-
-
-def q_substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Substring-level exact dedup spans
-    (operators.dedup_near.substring_dup_spans — Lee et al. 2022's
-    ExactSubstr layer, re-expressed for Spark): every maximal token
-    span repeated verbatim across ≥2 distinct documents at threshold
-    L=20 whitespace tokens, as (doc_id, span_start, span_end,
-    span_tokens). The suffix array is the single-node shape; here the
-    L-gram md5 table is linear in corpus tokens, dup detection is two
-    map-side-combinable aggregates, and the positions⋈dup-hash join
-    cannot amplify (per-key output = per-key input). All-BIGINT
-    output; the md5-hex gram hash is the repo's engine-portable
-    hashing trick, so both engines select identical duplicated
-    positions."""
+""")
+def q_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MOSS winnowing substring-overlap detection
+    (operators.dedup_near.winnow_fingerprints/winnow_overlap_pairs):
+    char-8-gram md5 fingerprints, minimum per 6-gram window (any shared
+    substring of length ≥ 13 is guaranteed a shared fingerprint),
+    fingerprints appearing in ≤ 20 docs bucket-joined into candidate
+    pairs, kept at ≥ 2 shared prints, scored by containment. The
+    engine-portable lexicographic-min-over-md5-hex trick makes both
+    engines select the identical fingerprint set. The top-100 strongest
+    pairs by (shared_fp, doc_a, doc_b) total order — plagiarism-style
+    overlap without an all-pairs comparison anywhere."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup_near import (
-        substring_dup_spans,
+        winnow_overlap_pairs,
     )
 
-    return substring_dup_spans(
-        load_table(spark, sf_dir, "documents"), min_tokens=20
-    )
+    d = load_table(spark, sf_dir, "documents")
+    pairs = winnow_overlap_pairs(d)
+    return pairs.orderBy(
+        F.col("shared_fp").desc(), F.col("doc_a").asc(), F.col("doc_b").asc()
+    ).limit(100)
 
 
-ORACLE_SUBSTRING_DEDUP = """
+@query(oracle="""
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS t FROM documents),
 base AS (
@@ -14771,33 +13389,30 @@ SELECT doc_id,
        CAST(MAX(pos) + 19 AS BIGINT) AS span_end,
        CAST(MAX(pos) + 19 - MIN(pos) + 1 AS BIGINT) AS span_tokens
 FROM runs GROUP BY doc_id, grp
-"""
-
-QUERIES["substring_dedup_spans"] = q_substring_dedup_spans
-ORACLES["substring_dedup_spans"] = ORACLE_SUBSTRING_DEDUP
-
-
-def q_substring_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CUT step of Lee et al. 2022's ExactSubstr dedup
-    (operators.dedup_near.substring_dedup_apply): duplicated spans
-    grouped by opening-gram hash, the corpus-first (doc_id, span_start)
-    copy kept, every other copy removed whole; per-doc removal
-    accounting plus an md5 certificate of the kept text. The rewrite is
-    map-only on the Spark side (cut list rides a ≤len/20-entry struct
-    array onto the doc row, kept tokens fall out of one higher-order
-    filter — corpus text never shuffles); the DuckDB oracle rebuilds
-    the same kept text via exploded positions + ordered string_agg —
-    each engine its natural idiom, identical md5."""
+""")
+def q_substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Substring-level exact dedup spans
+    (operators.dedup_near.substring_dup_spans — Lee et al. 2022's
+    ExactSubstr layer, re-expressed for Spark): every maximal token
+    span repeated verbatim across ≥2 distinct documents at threshold
+    L=20 whitespace tokens, as (doc_id, span_start, span_end,
+    span_tokens). The suffix array is the single-node shape; here the
+    L-gram md5 table is linear in corpus tokens, dup detection is two
+    map-side-combinable aggregates, and the positions⋈dup-hash join
+    cannot amplify (per-key output = per-key input). All-BIGINT
+    output; the md5-hex gram hash is the repo's engine-portable
+    hashing trick, so both engines select identical duplicated
+    positions."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup_near import (
-        substring_dedup_apply,
+        substring_dup_spans,
     )
 
-    return substring_dedup_apply(
+    return substring_dup_spans(
         load_table(spark, sf_dir, "documents"), min_tokens=20
     )
 
 
-ORACLE_SUBSTRING_APPLY = """
+@query(oracle="""
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS t FROM documents),
 base AS (
@@ -14855,37 +13470,28 @@ SELECT t.doc_id,
 FROM toks t
 LEFT JOIN cutagg ca USING (doc_id)
 LEFT JOIN keptagg k USING (doc_id)
-"""
-
-QUERIES["substring_dedup_apply"] = q_substring_dedup_apply
-ORACLES["substring_dedup_apply"] = ORACLE_SUBSTRING_APPLY
-
-
-def q_substring_dedup_apply_exact(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Token-exact ExactSubstr cut
-    (operators.dedup_near.substring_dedup_apply_exact — Lee et al.
-    2022's keep-one-copy semantics): spans and span representatives as
-    in substring_dedup_apply, but inside REMOVED spans any position
-    covered by a gram-representative occurrence (corpus-min (doc, pos)
-    of a duplicated 20-gram's md5) is rescued, so every duplicated
-    gram keeps ≥1 contiguous verbatim copy and removals are a provable
-    subset of the run-granular policy's. Map-only rewrite on the Spark
-    side (removed spans + merged protected intervals ride struct
-    arrays onto the doc row); the DuckDB oracle rebuilds the same kept
-    text via exploded positions with an EXISTS rescue clause —
-    identical md5 certificates."""
+""")
+def q_substring_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The CUT step of Lee et al. 2022's ExactSubstr dedup
+    (operators.dedup_near.substring_dedup_apply): duplicated spans
+    grouped by opening-gram hash, the corpus-first (doc_id, span_start)
+    copy kept, every other copy removed whole; per-doc removal
+    accounting plus an md5 certificate of the kept text. The rewrite is
+    map-only on the Spark side (cut list rides a ≤len/20-entry struct
+    array onto the doc row, kept tokens fall out of one higher-order
+    filter — corpus text never shuffles); the DuckDB oracle rebuilds
+    the same kept text via exploded positions + ordered string_agg —
+    each engine its natural idiom, identical md5."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup_near import (
-        substring_dedup_apply_exact,
+        substring_dedup_apply,
     )
 
-    return substring_dedup_apply_exact(
+    return substring_dedup_apply(
         load_table(spark, sf_dir, "documents"), min_tokens=20
     )
 
 
-ORACLE_SUBSTRING_APPLY_EXACT = """
+@query(oracle="""
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS t FROM documents),
 base AS (
@@ -14961,36 +13567,32 @@ FROM toks t
 LEFT JOIN cutagg ca USING (doc_id)
 LEFT JOIN exagg ea USING (doc_id)
 LEFT JOIN keptagg k USING (doc_id)
-"""
-
-QUERIES["substring_dedup_apply_exact"] = q_substring_dedup_apply_exact
-ORACLES["substring_dedup_apply_exact"] = ORACLE_SUBSTRING_APPLY_EXACT
-
-
-def q_contamination_span_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span-granular decontamination measurement
-    (operators.decontaminate.contamination_spans — the GPT-3
-    appendix-C longest-collision metric): the held-out benchmark is
-    the deterministic doc_id % 7 == 0 slice; for every corpus doc
-    colliding with it on a verbatim ≥8-token span, the longest such
-    span (diagonal-run scan over positional 8-gram md5 matches), the
-    benchmark doc achieving it (total-order argmax: span desc, bench
-    doc asc), and the count of colliding benchmark docs. The
-    span-length complement of `decontamination_flags`' shared-gram
-    count — one verbatim quote outweighs many scattered grams."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.decontaminate import (
-        contamination_spans,
+""")
+def q_substring_dedup_apply_exact(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Token-exact ExactSubstr cut
+    (operators.dedup_near.substring_dedup_apply_exact — Lee et al.
+    2022's keep-one-copy semantics): spans and span representatives as
+    in substring_dedup_apply, but inside REMOVED spans any position
+    covered by a gram-representative occurrence (corpus-min (doc, pos)
+    of a duplicated 20-gram's md5) is rescued, so every duplicated
+    gram keeps ≥1 contiguous verbatim copy and removals are a provable
+    subset of the run-granular policy's. Map-only rewrite on the Spark
+    side (removed spans + merged protected intervals ride struct
+    arrays onto the doc row); the DuckDB oracle rebuilds the same kept
+    text via exploded positions with an EXISTS rescue clause —
+    identical md5 certificates."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup_near import (
+        substring_dedup_apply_exact,
     )
 
-    d = load_table(spark, sf_dir, "documents")
-    return contamination_spans(
-        d.filter(F.col("doc_id") % 7 != 0),
-        d.filter(F.col("doc_id") % 7 == 0),
-        min_tokens=8,
+    return substring_dedup_apply_exact(
+        load_table(spark, sf_dir, "documents"), min_tokens=20
     )
 
 
-ORACLE_CONTAMINATION_SPANS = """
+@query(oracle="""
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS t FROM documents),
 c AS (SELECT doc_id AS cd, t FROM toks WHERE doc_id % 7 != 0),
@@ -15024,12 +13626,47 @@ SELECT cd AS doc_id,
          AS best_bench_doc,
        CAST(COUNT(*) AS BIGINT) AS n_bench_docs
 FROM pair_best GROUP BY cd
-"""
+""")
+def q_contamination_span_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Span-granular decontamination measurement
+    (operators.decontaminate.contamination_spans — the GPT-3
+    appendix-C longest-collision metric): the held-out benchmark is
+    the deterministic doc_id % 7 == 0 slice; for every corpus doc
+    colliding with it on a verbatim ≥8-token span, the longest such
+    span (diagonal-run scan over positional 8-gram md5 matches), the
+    benchmark doc achieving it (total-order argmax: span desc, bench
+    doc asc), and the count of colliding benchmark docs. The
+    span-length complement of `decontamination_flags`' shared-gram
+    count — one verbatim quote outweighs many scattered grams."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.decontaminate import (
+        contamination_spans,
+    )
 
-QUERIES["contamination_span_report"] = q_contamination_span_report
-ORACLES["contamination_span_report"] = ORACLE_CONTAMINATION_SPANS
+    d = load_table(spark, sf_dir, "documents")
+    return contamination_spans(
+        d.filter(F.col("doc_id") % 7 != 0),
+        d.filter(F.col("doc_id") % 7 == 0),
+        min_tokens=8,
+    )
 
 
+@query(oracle="""
+WITH l AS (SELECT l_orderkey AS o, l_partkey AS p FROM lineitem),
+nb AS (SELECT CAST(COUNT(DISTINCT o) AS BIGINT) AS n_baskets FROM l),
+co AS (
+  SELECT a.p AS ante, b.p AS cons, CAST(COUNT(*) AS BIGINT) AS support
+  FROM l a JOIN l b ON a.o = b.o AND a.p != b.p
+  GROUP BY 1, 2 HAVING COUNT(*) >= 3),
+deg AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS n FROM l GROUP BY 1)
+SELECT ante, cons, support,
+       round(support / CAST(da.n AS DOUBLE), 6) AS confidence,
+       round((CAST(support AS DOUBLE) * n_baskets)
+             / (CAST(da.n AS DOUBLE) * dc.n), 6) AS lift
+FROM co JOIN deg da ON co.ante = da.p
+JOIN deg dc ON co.cons = dc.p
+CROSS JOIN nb
+ORDER BY lift DESC, confidence DESC, ante ASC, cons ASC LIMIT 20
+""")
 def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket association rules over order baskets: directional
     A→B rules with support ≥ 3 co-purchases, scored by confidence
@@ -15087,28 +13724,19 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(20)
 
 
-ORACLE_ASSOCIATION_RULES = """
-WITH l AS (SELECT l_orderkey AS o, l_partkey AS p FROM lineitem),
-nb AS (SELECT CAST(COUNT(DISTINCT o) AS BIGINT) AS n_baskets FROM l),
-co AS (
-  SELECT a.p AS ante, b.p AS cons, CAST(COUNT(*) AS BIGINT) AS support
-  FROM l a JOIN l b ON a.o = b.o AND a.p != b.p
-  GROUP BY 1, 2 HAVING COUNT(*) >= 3),
-deg AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS n FROM l GROUP BY 1)
-SELECT ante, cons, support,
-       round(support / CAST(da.n AS DOUBLE), 6) AS confidence,
-       round((CAST(support AS DOUBLE) * n_baskets)
-             / (CAST(da.n AS DOUBLE) * dc.n), 6) AS lift
-FROM co JOIN deg da ON co.ante = da.p
-JOIN deg dc ON co.cons = dc.p
-CROSS JOIN nb
-ORDER BY lift DESC, confidence DESC, ante ASC, cons ASC LIMIT 20
-"""
-
-QUERIES["association_rules"] = q_association_rules
-ORACLES["association_rules"] = ORACLE_ASSOCIATION_RULES
-
-
+@query(oracle="""
+WITH hourly AS (
+  SELECT event_type, epoch_us(ts) // 3600000000 AS h,
+         CAST(COUNT(*) AS BIGINT) AS c
+  FROM events GROUP BY 1, 2),
+slopes AS (
+  SELECT a.event_type, ((b.c - a.c) * 1000000) // (b.h - a.h) AS sq
+  FROM hourly a JOIN hourly b
+    ON a.event_type = b.event_type AND a.h < b.h)
+SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_pairs,
+       CAST(quantile_disc(sq, 0.5) AS BIGINT) AS slope_per_hour_ppm
+FROM slopes GROUP BY event_type
+""")
 def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil–Sen robust trend estimate per event type: the MEDIAN of
     all pairwise slopes of the hourly-count series — one wild hour
@@ -15153,24 +13781,14 @@ FROM _ts_slopes GROUP BY event_type
 """)
 
 
-ORACLE_THEIL_SEN = """
-WITH hourly AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS h,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2),
-slopes AS (
-  SELECT a.event_type, ((b.c - a.c) * 1000000) // (b.h - a.h) AS sq
-  FROM hourly a JOIN hourly b
-    ON a.event_type = b.event_type AND a.h < b.h)
-SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       CAST(quantile_disc(sq, 0.5) AS BIGINT) AS slope_per_hour_ppm
-FROM slopes GROUP BY event_type
-"""
-
-QUERIES["theil_sen_trend"] = q_theil_sen_trend
-ORACLES["theil_sen_trend"] = ORACLE_THEIL_SEN
-
-
+@query(oracle="""
+SELECT c_mktsegment,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0
+         AS total_revenue
+FROM orders JOIN customer ON o_custkey = c_custkey
+GROUP BY c_mktsegment
+""")
 def q_incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental JOIN-view maintenance — the delta algebra
     Δ(O ⋈ C) = ΔO⋈C ∪ O⋈ΔC ∪ ΔO⋈ΔC applied to a revenue-per-segment
@@ -15231,19 +13849,23 @@ def q_incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-ORACLE_IJM = """
-SELECT c_mktsegment,
-       CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0
-         AS total_revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment
-"""
-
-QUERIES["incremental_join_maintenance"] = q_incremental_join_maintenance
-ORACLES["incremental_join_maintenance"] = ORACLE_IJM
-
-
+@query(oracle="""
+WITH base AS (
+  SELECT event_id, user_id, event_type, epoch_us(ts) AS tus FROM events),
+p AS (SELECT event_id AS purchase_id, user_id, tus FROM base
+      WHERE event_type = 'purchase'),
+k AS (SELECT event_id AS cid, user_id, tus FROM base
+      WHERE event_type = 'click'),
+cand AS (
+  SELECT p.purchase_id, k.cid, k.tus AS ct
+  FROM p JOIN k ON p.user_id = k.user_id
+   AND k.tus <= p.tus AND k.tus > p.tus - 1800000000)
+SELECT purchase_id,
+       CAST(COUNT(DISTINCT cid) AS BIGINT) AS n_touches,
+       (min({'t': ct, 'i': cid})).i AS first_click_id,
+       (max({'t': ct, 'i': cid})).i AS last_click_id
+FROM cand GROUP BY purchase_id
+""")
 def q_touch_attribution_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-touch vs last-touch attribution: for every purchase, the
     earliest and latest click of the same user inside the 30-minute
@@ -15300,28 +13922,52 @@ def q_touch_attribution_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_TOUCH_ATTRIBUTION = """
-WITH base AS (
-  SELECT event_id, user_id, event_type, epoch_us(ts) AS tus FROM events),
-p AS (SELECT event_id AS purchase_id, user_id, tus FROM base
-      WHERE event_type = 'purchase'),
-k AS (SELECT event_id AS cid, user_id, tus FROM base
-      WHERE event_type = 'click'),
-cand AS (
-  SELECT p.purchase_id, k.cid, k.tus AS ct
-  FROM p JOIN k ON p.user_id = k.user_id
-   AND k.tus <= p.tus AND k.tus > p.tus - 1800000000)
-SELECT purchase_id,
-       CAST(COUNT(DISTINCT cid) AS BIGINT) AS n_touches,
-       (min({'t': ct, 'i': cid})).i AS first_click_id,
-       (max({'t': ct, 'i': cid})).i AS last_click_id
-FROM cand GROUP BY purchase_id
-"""
-
-QUERIES["touch_attribution_split"] = q_touch_attribution_split
-ORACLES["touch_attribution_split"] = ORACLE_TOUCH_ATTRIBUTION
-
-
+@query(oracle="""
+WITH du AS (
+  SELECT DISTINCT event_type, user_id FROM events
+  WHERE event_type IN ('click', 'purchase')),
+hashed AS (
+  SELECT event_type, user_id,
+         ('0x' || substr(md5('kmv:' || user_id), 1, 15))::BIGINT AS h
+  FROM du),
+ranked AS (
+  SELECT event_type, h,
+         row_number() OVER (PARTITION BY event_type ORDER BY h ASC) AS r
+  FROM hashed),
+retained AS (SELECT event_type, h FROM ranked WHERE r <= 64),
+per_type AS (
+  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_ret,
+         CAST(MAX(h) AS DOUBLE) AS hk
+  FROM retained GROUP BY 1),
+uni AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS nu, CAST(MAX(h) AS DOUBLE) AS hku
+  FROM (SELECT DISTINCT h FROM retained ORDER BY h ASC LIMIT 64)),
+exact AS (
+  SELECT CAST(count_if(c > 0) AS BIGINT) AS exact_click,
+         CAST(count_if(p > 0) AS BIGINT) AS exact_purchase,
+         CAST(count_if(c > 0 AND p > 0) AS BIGINT) AS exact_overlap
+  FROM (SELECT user_id,
+               MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS c,
+               MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS p
+        FROM du GROUP BY user_id)),
+ests AS (
+  SELECT
+    (SELECT CASE WHEN n_ret < 64 THEN CAST(n_ret AS DOUBLE)
+                 ELSE 63.0 * 1152921504606846976.0 / hk END
+     FROM per_type WHERE event_type = 'click') AS ea,
+    (SELECT CASE WHEN n_ret < 64 THEN CAST(n_ret AS DOUBLE)
+                 ELSE 63.0 * 1152921504606846976.0 / hk END
+     FROM per_type WHERE event_type = 'purchase') AS eb,
+    (SELECT CASE WHEN nu < 64 THEN CAST(nu AS DOUBLE)
+                 ELSE 63.0 * 1152921504606846976.0 / hku END
+     FROM uni) AS eu)
+SELECT CAST(64 AS BIGINT) AS k,
+       exact_click, exact_purchase, exact_overlap,
+       round(ea, 6) AS est_click,
+       round(eb, 6) AS est_purchase,
+       round(ea + eb - eu, 6) AS est_overlap
+FROM exact CROSS JOIN ests
+""")
 def q_kmv_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (k-minimum-values / theta) distinct sketches, ENGINE-EXACT:
     the estimator the repo's HLL notes warn is NOT oracle-able when the
@@ -15423,57 +14069,27 @@ def q_kmv_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_KMV_OVERLAP = """
-WITH du AS (
-  SELECT DISTINCT event_type, user_id FROM events
-  WHERE event_type IN ('click', 'purchase')),
-hashed AS (
+@query(oracle="""
+WITH per_user AS (
   SELECT event_type, user_id,
-         ('0x' || substr(md5('kmv:' || user_id), 1, 15))::BIGINT AS h
-  FROM du),
-ranked AS (
-  SELECT event_type, h,
-         row_number() OVER (PARTITION BY event_type ORDER BY h ASC) AS r
-  FROM hashed),
-retained AS (SELECT event_type, h FROM ranked WHERE r <= 64),
-per_type AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_ret,
-         CAST(MAX(h) AS DOUBLE) AS hk
-  FROM retained GROUP BY 1),
-uni AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS nu, CAST(MAX(h) AS DOUBLE) AS hku
-  FROM (SELECT DISTINCT h FROM retained ORDER BY h ASC LIMIT 64)),
-exact AS (
-  SELECT CAST(count_if(c > 0) AS BIGINT) AS exact_click,
-         CAST(count_if(p > 0) AS BIGINT) AS exact_purchase,
-         CAST(count_if(c > 0 AND p > 0) AS BIGINT) AS exact_overlap
-  FROM (SELECT user_id,
-               MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS c,
-               MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS p
-        FROM du GROUP BY user_id)),
-ests AS (
-  SELECT
-    (SELECT CASE WHEN n_ret < 64 THEN CAST(n_ret AS DOUBLE)
-                 ELSE 63.0 * 1152921504606846976.0 / hk END
-     FROM per_type WHERE event_type = 'click') AS ea,
-    (SELECT CASE WHEN n_ret < 64 THEN CAST(n_ret AS DOUBLE)
-                 ELSE 63.0 * 1152921504606846976.0 / hk END
-     FROM per_type WHERE event_type = 'purchase') AS eb,
-    (SELECT CASE WHEN nu < 64 THEN CAST(nu AS DOUBLE)
-                 ELSE 63.0 * 1152921504606846976.0 / hku END
-     FROM uni) AS eu)
-SELECT CAST(64 AS BIGINT) AS k,
-       exact_click, exact_purchase, exact_overlap,
-       round(ea, 6) AS est_click,
-       round(eb, 6) AS est_purchase,
-       round(ea + eb - eu, 6) AS est_overlap
-FROM exact CROSS JOIN ests
-"""
-
-QUERIES["kmv_sketch_overlap"] = q_kmv_sketch_overlap
-ORACLES["kmv_sketch_overlap"] = ORACLE_KMV_OVERLAP
-
-
+         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+  FROM events GROUP BY 1, 2),
+binned AS (
+  SELECT event_type, cents,
+         CAST(ntile(4) OVER (PARTITION BY event_type
+              ORDER BY cents ASC, user_id ASC) AS BIGINT) AS quartile
+  FROM per_user),
+grp AS (
+  SELECT event_type, quartile, CAST(COUNT(*) AS BIGINT) AS n_users,
+         CAST(SUM(cents) AS BIGINT) AS qc
+  FROM binned GROUP BY 1, 2),
+tot AS (SELECT event_type, CAST(SUM(cents) AS BIGINT) AS tc
+        FROM per_user GROUP BY 1)
+SELECT g.event_type, quartile, n_users,
+       qc / 100.0 AS quartile_value,
+       round(qc / CAST(tc AS DOUBLE), 6) AS value_share
+FROM grp g JOIN tot t ON g.event_type = t.event_type
+""")
 def q_grouped_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-type user quartiles by exact cents spend — NTILE(4) OVER
     (PARTITION BY event_type ...) semantics WITHOUT the partitioned
@@ -15515,32 +14131,13 @@ def q_grouped_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_GROUPED_QUARTILES = """
-WITH per_user AS (
-  SELECT event_type, user_id,
-         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-  FROM events GROUP BY 1, 2),
-binned AS (
-  SELECT event_type, cents,
-         CAST(ntile(4) OVER (PARTITION BY event_type
-              ORDER BY cents ASC, user_id ASC) AS BIGINT) AS quartile
-  FROM per_user),
-grp AS (
-  SELECT event_type, quartile, CAST(COUNT(*) AS BIGINT) AS n_users,
-         CAST(SUM(cents) AS BIGINT) AS qc
-  FROM binned GROUP BY 1, 2),
-tot AS (SELECT event_type, CAST(SUM(cents) AS BIGINT) AS tc
-        FROM per_user GROUP BY 1)
-SELECT g.event_type, quartile, n_users,
-       qc / 100.0 AS quartile_value,
-       round(qc / CAST(tc AS DOUBLE), 6) AS value_share
-FROM grp g JOIN tot t ON g.event_type = t.event_type
-"""
-
-QUERIES["grouped_value_quartiles"] = q_grouped_value_quartiles
-ORACLES["grouped_value_quartiles"] = ORACLE_GROUPED_QUARTILES
-
-
+@query(oracle="""
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       round(quantile_cont(CAST(round(value * 100) AS BIGINT), 0.5) / 100.0, 6)
+         AS median_value
+FROM events GROUP BY event_type
+""")
 def q_grouped_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT median of the raw event values per event type — computed
     scale-safely. Spark's exact ``percentile()`` aggregate buffers
@@ -15583,18 +14180,35 @@ def q_grouped_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_GROUPED_MEDIAN = """
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       round(quantile_cont(CAST(round(value * 100) AS BIGINT), 0.5) / 100.0, 6)
-         AS median_value
-FROM events GROUP BY event_type
-"""
-
-QUERIES["grouped_exact_median"] = q_grouped_exact_median
-ORACLES["grouped_exact_median"] = ORACLE_GROUPED_MEDIAN
-
-
+@query(oracle="""
+WITH l AS (
+  SELECT user_id, event_id AS lid, ts AS lts, epoch_us(ts) AS ltus
+  FROM events WHERE event_type = 'click'),
+r AS (
+  SELECT user_id, event_id AS rid, ts AS rts, epoch_us(ts) AS rtus,
+         value AS rv
+  FROM events WHERE event_type = 'purchase'),
+w1 AS (
+  SELECT least(
+    (SELECT (epoch_us(max(ts)) // 1000) * 1000 FROM events
+      WHERE event_type = 'click' AND event_id % 2 = 0),
+    (SELECT (epoch_us(max(ts)) // 1000) * 1000 FROM events
+      WHERE event_type = 'purchase' AND event_id % 2 = 0)) - 7200000000 AS v),
+emitted AS (
+  SELECT l.user_id, r.rv
+  FROM l JOIN r
+    ON l.user_id = r.user_id
+   AND r.rts >= l.lts
+   AND r.rts <= l.lts + INTERVAL 30 MINUTE
+  CROSS JOIN w1
+  WHERE (l.lid % 2 = 0 OR l.ltus > w1.v)
+    AND (r.rid % 2 = 0 OR r.rtus > w1.v))
+SELECT user_id,
+       CAST(COUNT(*) AS BIGINT) AS n_matches,
+       CAST(SUM(CAST(round(rv * 10000) AS BIGINT)) AS BIGINT) / 10000.0
+         AS attributed_value
+FROM emitted GROUP BY user_id
+""")
 def q_stream_restart_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream INNER interval join across a checkpoint RESTART
     (streaming.joins.restart_attribution_join) — the join-buffer twin
@@ -15637,40 +14251,21 @@ def q_stream_restart_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_RESTART_ATTRIBUTION = """
-WITH l AS (
-  SELECT user_id, event_id AS lid, ts AS lts, epoch_us(ts) AS ltus
-  FROM events WHERE event_type = 'click'),
-r AS (
-  SELECT user_id, event_id AS rid, ts AS rts, epoch_us(ts) AS rtus,
-         value AS rv
-  FROM events WHERE event_type = 'purchase'),
-w1 AS (
-  SELECT least(
-    (SELECT (epoch_us(max(ts)) // 1000) * 1000 FROM events
-      WHERE event_type = 'click' AND event_id % 2 = 0),
-    (SELECT (epoch_us(max(ts)) // 1000) * 1000 FROM events
-      WHERE event_type = 'purchase' AND event_id % 2 = 0)) - 7200000000 AS v),
-emitted AS (
-  SELECT l.user_id, r.rv
-  FROM l JOIN r
-    ON l.user_id = r.user_id
-   AND r.rts >= l.lts
-   AND r.rts <= l.lts + INTERVAL 30 MINUTE
-  CROSS JOIN w1
-  WHERE (l.lid % 2 = 0 OR l.ltus > w1.v)
-    AND (r.rid % 2 = 0 OR r.rtus > w1.v))
-SELECT user_id,
-       CAST(COUNT(*) AS BIGINT) AS n_matches,
-       CAST(SUM(CAST(round(rv * 10000) AS BIGINT)) AS BIGINT) / 10000.0
-         AS attributed_value
-FROM emitted GROUP BY user_id
-"""
-
-QUERIES["stream_restart_attribution"] = q_stream_restart_attribution
-ORACLES["stream_restart_attribution"] = ORACLE_STREAM_RESTART_ATTRIBUTION
-
-
+@query(oracle="""
+WITH hourly AS (
+  SELECT event_type, epoch_us(ts) // 3600000000 AS h,
+         CAST(COUNT(*) AS BIGINT) AS c
+  FROM events GROUP BY 1, 2)
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_hours,
+       CAST(count_if(c >= 10) AS BIGINT) AS n_busy_hours,
+       CAST(SUM(c) AS BIGINT) AS total_events,
+       CAST(SUM(c * 2) AS BIGINT) AS doubled_total,
+       CAST(SUM(CASE WHEN c >= 10 THEN c ELSE 0 END) AS BIGINT)
+         AS busy_events,
+       CAST(MIN(h) AS BIGINT) AS first_hour
+FROM hourly GROUP BY event_type
+""")
 def q_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MAP higher-order-function surface (the map siblings of
     array_functions' lambda toolkit): per event type an hour→count MAP
@@ -15721,26 +14316,6 @@ def q_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_MAP_FUNCTIONS = """
-WITH hourly AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS h,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2)
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_hours,
-       CAST(count_if(c >= 10) AS BIGINT) AS n_busy_hours,
-       CAST(SUM(c) AS BIGINT) AS total_events,
-       CAST(SUM(c * 2) AS BIGINT) AS doubled_total,
-       CAST(SUM(CASE WHEN c >= 10 THEN c ELSE 0 END) AS BIGINT)
-         AS busy_events,
-       CAST(MIN(h) AS BIGINT) AS first_hour
-FROM hourly GROUP BY event_type
-"""
-
-QUERIES["map_functions"] = q_map_functions
-ORACLES["map_functions"] = ORACLE_MAP_FUNCTIONS
-
-
 _RECURSIVE_CTE_SQL = """
 WITH RECURSIVE tree(doc_id, depth) AS (
   SELECT doc_id, CAST(0 AS BIGINT) AS depth FROM documents WHERE doc_id = 0
@@ -15757,6 +14332,7 @@ FROM tree GROUP BY depth
 """
 
 
+@query(oracle=_RECURSIVE_CTE_SQL)
 def q_recursive_cte_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native WITH RECURSIVE (Spark 4's recursive CTE, SPARK-24497):
     depth labeling of the implicit 4-ary doc hierarchy (parent =
@@ -15775,10 +14351,21 @@ def q_recursive_cte_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-QUERIES["recursive_cte_depth"] = q_recursive_cte_depth
-ORACLES["recursive_cte_depth"] = _RECURSIVE_CTE_SQL
-
-
+@query(oracle="""
+WITH p AS (
+  SELECT doc_id,
+         1 + doc_id % 8 AS h,
+         100 * (1 + doc_id % 50) AS a,
+         400 + doc_id % 100 AS n
+  FROM documents)
+SELECT doc_id,
+       CAST(n AS BIGINT) AS n_samples,
+       CAST((n - 1) // h AS BIGINT) AS zero_crossings,
+       CAST(a AS BIGINT) AS rms_amp,
+       CAST(a * (least(n % (2 * h), h)
+                 - greatest(n % (2 * h) - h, 0)) AS BIGINT) AS dc_numerator
+FROM p
+""")
 def q_audio_signal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio content analysis over REAL container bytes
     (operators.multimodal.wav_audio_features): per doc a square-wave
@@ -15800,26 +14387,29 @@ def q_audio_signal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wav_audio_features(d)
 
 
-ORACLE_AUDIO_FEATURES = """
-WITH p AS (
-  SELECT doc_id,
-         1 + doc_id % 8 AS h,
-         100 * (1 + doc_id % 50) AS a,
-         400 + doc_id % 100 AS n
-  FROM documents)
-SELECT doc_id,
-       CAST(n AS BIGINT) AS n_samples,
-       CAST((n - 1) // h AS BIGINT) AS zero_crossings,
-       CAST(a AS BIGINT) AS rms_amp,
-       CAST(a * (least(n % (2 * h), h)
-                 - greatest(n % (2 * h) - h, 0)) AS BIGINT) AS dc_numerator
-FROM p
-"""
-
-QUERIES["audio_signal_features"] = q_audio_signal_features
-ORACLES["audio_signal_features"] = ORACLE_AUDIO_FEATURES
-
-
+@query(oracle="""
+WITH hourly AS (
+  SELECT event_type, epoch_us(ts) // 3600000000 AS h,
+         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+  FROM events GROUP BY 1, 2),
+resid AS (
+  SELECT cur.event_type, cur.h, abs(cur.c - seas.c) AS r
+  FROM hourly cur JOIN hourly seas
+    ON cur.event_type = seas.event_type AND cur.h = seas.h + 24),
+band AS (
+  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_calib,
+         quantile_cont(r, 0.9) AS b
+  FROM resid WHERE h % 2 = 0 GROUP BY 1),
+ev AS (
+  SELECT resid.event_type, CAST(COUNT(*) AS BIGINT) AS n_eval,
+         CAST(count_if(r <= b) AS BIGINT) AS n_covered
+  FROM resid JOIN band USING (event_type)
+  WHERE h % 2 != 0 GROUP BY 1)
+SELECT event_type, n_calib, n_eval,
+       round(b / 100.0, 6) AS band_width,
+       round(n_covered / CAST(n_eval AS DOUBLE), 6) AS coverage
+FROM band JOIN ev USING (event_type)
+""")
 def q_forecast_conformal_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-conformal prediction band for the seasonal-naive hourly
     forecaster (the distribution-free uncertainty wrapper every
@@ -15891,34 +14481,27 @@ def q_forecast_conformal_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CONFORMAL_BAND = """
-WITH hourly AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS h,
-         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2),
-resid AS (
-  SELECT cur.event_type, cur.h, abs(cur.c - seas.c) AS r
-  FROM hourly cur JOIN hourly seas
-    ON cur.event_type = seas.event_type AND cur.h = seas.h + 24),
-band AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_calib,
-         quantile_cont(r, 0.9) AS b
-  FROM resid WHERE h % 2 = 0 GROUP BY 1),
-ev AS (
-  SELECT resid.event_type, CAST(COUNT(*) AS BIGINT) AS n_eval,
-         CAST(count_if(r <= b) AS BIGINT) AS n_covered
-  FROM resid JOIN band USING (event_type)
-  WHERE h % 2 != 0 GROUP BY 1)
-SELECT event_type, n_calib, n_eval,
-       round(b / 100.0, 6) AS band_width,
-       round(n_covered / CAST(n_eval AS DOUBLE), 6) AS coverage
-FROM band JOIN ev USING (event_type)
-"""
-
-QUERIES["forecast_conformal_band"] = q_forecast_conformal_band
-ORACLES["forecast_conformal_band"] = ORACLE_CONFORMAL_BAND
-
-
+@query(oracle="""
+WITH c AS (
+  SELECT c_nationkey, c_custkey,
+         CAST(round(greatest(c_acctbal, 0.0) * 100) AS BIGINT) AS cents
+  FROM customer),
+ranked AS (
+  SELECT c_nationkey, cents,
+         CAST(row_number() OVER (PARTITION BY c_nationkey
+              ORDER BY cents ASC, c_custkey ASC) AS BIGINT) AS i
+  FROM c),
+mom AS (
+  SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_customers,
+         CAST(SUM(cents) AS BIGINT) AS sx,
+         SUM(CAST(i AS HUGEINT) * cents) AS six
+  FROM ranked GROUP BY 1)
+SELECT c_nationkey, n_customers,
+       sx / 100.0 AS total_balance,
+       round(CAST(2 * six - (CAST(n_customers AS HUGEINT) + 1) * sx AS DOUBLE)
+             / CAST(CAST(n_customers AS HUGEINT) * sx AS DOUBLE), 6) AS gini
+FROM mom
+""")
 def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of (nonnegative-clamped) customer balances per
     nation — the concentration metric behind every "top-x% hold y%"
@@ -15961,76 +14544,12 @@ def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_GINI = """
-WITH c AS (
-  SELECT c_nationkey, c_custkey,
-         CAST(round(greatest(c_acctbal, 0.0) * 100) AS BIGINT) AS cents
-  FROM customer),
-ranked AS (
-  SELECT c_nationkey, cents,
-         CAST(row_number() OVER (PARTITION BY c_nationkey
-              ORDER BY cents ASC, c_custkey ASC) AS BIGINT) AS i
-  FROM c),
-mom AS (
-  SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS n_customers,
-         CAST(SUM(cents) AS BIGINT) AS sx,
-         SUM(CAST(i AS HUGEINT) * cents) AS six
-  FROM ranked GROUP BY 1)
-SELECT c_nationkey, n_customers,
-       sx / 100.0 AS total_balance,
-       round(CAST(2 * six - (CAST(n_customers AS HUGEINT) + 1) * sx AS DOUBLE)
-             / CAST(CAST(n_customers AS HUGEINT) * sx AS DOUBLE), 6) AS gini
-FROM mom
-"""
-
-QUERIES["gini_concentration"] = q_gini_concentration
-ORACLES["gini_concentration"] = ORACLE_GINI
-
-
-def q_stream_restart_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows across a checkpoint RESTART
-    (streaming.windowed.restart_session_windows) — the third stateful
-    family restarted (aggregates: stream_restart_hourly; joins:
-    stream_restart_attribution). Even-event_id events sessionize
-    first: sessions with end ≤ W1 emit AND EVICT; open sessions
-    persist in the checkpoint. Odd-id events then land: a row is
-    admitted iff ts + gap > W1 (strict, the SESSION end is what the
-    late filter tests — boundary-pinned in tests/test_round9.py),
-    admitted rows merge with restored OPEN sessions (sessions
-    genuinely spanning the restart) but can never re-merge with an
-    emitted one — the stream emits TWO sessions where batch
-    sessionization finds one, and the oracle models exactly that:
-    phase-1 islands cut at W1, then interval-merge of open sessions
-    with admitted phase-2 points, final cut end ≤ W2."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.windowed import (
-        restart_session_windows,
-    )
-
-    e = load_table(spark, sf_dir, "events")
-    out, stats = restart_session_windows(
-        spark,
-        phase1=e.filter(F.col("event_id") % 2 == 0),
-        phase2=e.filter(F.col("event_id") % 2 != 0),
-        gap="30 minutes",
-        lateness="1 hour",
-    )
-    for tag in ("phase1", "phase2"):
-        if stats[tag]["data_batches"] != 1:
-            raise RuntimeError(f"restart replay lost batch isolation: {stats}")
-    return out.select(
-        "user_id",
-        epoch_us("session_start").alias("session_start_us"),
-        epoch_us("session_end").alias("session_end_us"),
-        "n_events",
-    )
-
-
 # Two-phase session-emission replay. Gap 30 min (1.8e9 us), lateness
 # 1 h (3.6e9 us); W1/W2 ms-truncated (session-oracle convention).
 # Islands twice: phase-1 points; then open phase-1 SESSIONS as
 # intervals ∪ admitted phase-2 points, merged by the running-max-end
 # rule (merge iff start < chain end).
-ORACLE_STREAM_RESTART_SESSIONS = """
+@query(oracle="""
 WITH p1 AS (
   SELECT user_id, epoch_us(ts) AS tus FROM events WHERE event_id % 2 = 0),
 p2 AS (
@@ -16084,12 +14603,59 @@ emitted2 AS (
 SELECT user_id, start_us AS session_start_us, end_us AS session_end_us,
        n AS n_events
 FROM (SELECT * FROM emitted1 UNION ALL SELECT * FROM emitted2)
-"""
+""")
+def q_stream_restart_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session windows across a checkpoint RESTART
+    (streaming.windowed.restart_session_windows) — the third stateful
+    family restarted (aggregates: stream_restart_hourly; joins:
+    stream_restart_attribution). Even-event_id events sessionize
+    first: sessions with end ≤ W1 emit AND EVICT; open sessions
+    persist in the checkpoint. Odd-id events then land: a row is
+    admitted iff ts + gap > W1 (strict, the SESSION end is what the
+    late filter tests — boundary-pinned in tests/test_round9.py),
+    admitted rows merge with restored OPEN sessions (sessions
+    genuinely spanning the restart) but can never re-merge with an
+    emitted one — the stream emits TWO sessions where batch
+    sessionization finds one, and the oracle models exactly that:
+    phase-1 islands cut at W1, then interval-merge of open sessions
+    with admitted phase-2 points, final cut end ≤ W2."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.windowed import (
+        restart_session_windows,
+    )
 
-QUERIES["stream_restart_sessions"] = q_stream_restart_sessions
-ORACLES["stream_restart_sessions"] = ORACLE_STREAM_RESTART_SESSIONS
+    e = load_table(spark, sf_dir, "events")
+    out, stats = restart_session_windows(
+        spark,
+        phase1=e.filter(F.col("event_id") % 2 == 0),
+        phase2=e.filter(F.col("event_id") % 2 != 0),
+        gap="30 minutes",
+        lateness="1 hour",
+    )
+    for tag in ("phase1", "phase2"):
+        if stats[tag]["data_batches"] != 1:
+            raise RuntimeError(f"restart replay lost batch isolation: {stats}")
+    return out.select(
+        "user_id",
+        epoch_us("session_start").alias("session_start_us"),
+        epoch_us("session_end").alias("session_end_us"),
+        "n_events",
+    )
 
 
+@query(oracle="""
+WITH w1 AS (
+  SELECT (epoch_us(MAX(ts)) // 1000) * 1000 - 3600000000 AS v
+  FROM events WHERE event_id % 2 = 0),
+emitted AS (
+  SELECT event_id, event_type FROM events WHERE event_id % 2 = 0
+  UNION ALL
+  SELECT event_id, event_type FROM events, w1
+  WHERE event_id % 2 = 1 AND epoch_us(ts) > w1.v)
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_emitted,
+       CAST(COUNT(DISTINCT event_id) AS BIGINT) AS n_distinct
+FROM emitted GROUP BY event_type
+""")
 def q_stream_restart_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming dedup state across a checkpoint RESTART — the fourth
     stateful family restarted (streaming.windowed.restart_stream_dedup):
@@ -16127,27 +14693,76 @@ def q_stream_restart_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_RESTART_DEDUP = """
-WITH w1 AS (
-  SELECT (epoch_us(MAX(ts)) // 1000) * 1000 - 3600000000 AS v
-  FROM events WHERE event_id % 2 = 0),
-emitted AS (
-  SELECT event_id, event_type FROM events WHERE event_id % 2 = 0
-  UNION ALL
-  SELECT event_id, event_type FROM events, w1
-  WHERE event_id % 2 = 1 AND epoch_us(ts) > w1.v)
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_emitted,
-       CAST(COUNT(DISTINCT event_id) AS BIGINT) AS n_distinct
-FROM emitted GROUP BY event_type
-"""
-
-QUERIES["stream_restart_dedup"] = q_stream_restart_dedup
-ORACLES["stream_restart_dedup"] = ORACLE_STREAM_RESTART_DEDUP
-
-
 # --------------------------------- round 10: CDC merge end-to-end replay
 
+# Relational replay of the full event mix. Phase isolation makes the
+# cross-batch state (the target table) a chain of merges: fact1 =
+# FK-surviving phase-1 inserts (duplicates collapse to one row BEFORE
+# the FK check, so orphan keys dead-letter once); fact2 = fact1
+# full-outer-merged with the LWW-collapsed phase-2 updates (the
+# i%8==1 keys' later +200 post-image wins; update-to-missing keys
+# upsert); fact3 = fact2 merged with the phase-3 overrides. The FK DLQ
+# sees phase-1 inserts post-dedup but update events PRE-collapse (the
+# reference logs every rejected event), and unknown ops land once each.
+@query(oracle="""
+WITH base AS MATERIALIZED (
+  SELECT event_id AS i,
+         'p' || (user_id % 8) AS place,
+         (user_id % 8) <= 5 AS ok
+  FROM events WHERE event_id < 400
+),
+ins AS MATERIALIZED (
+  SELECT 'w' || i AS id, place, CAST(i AS DOUBLE) AS temp, ok
+  FROM base WHERE i % 4 = 0
+),
+fact1 AS MATERIALIZED (SELECT id, place, temp FROM ins WHERE ok),
+upd_events AS MATERIALIZED (
+  SELECT 'w' || (i - 1) AS id, place, CAST(i + 100 AS DOUBLE) AS temp,
+         ok, 1 AS seq
+  FROM base WHERE i % 4 = 1
+  UNION ALL
+  SELECT 'w' || (i - 1), place, CAST(i + 200 AS DOUBLE), ok, 2
+  FROM base WHERE i % 8 = 1
+  UNION ALL
+  SELECT 'w' || i, place, CAST(i + 500 AS DOUBLE), ok, 1
+  FROM base WHERE i % 4 = 2
+),
+u2 AS MATERIALIZED (
+  SELECT id, MIN(place) AS place, MAX_BY(temp, seq) AS temp
+  FROM upd_events WHERE ok GROUP BY id
+),
+fact2 AS MATERIALIZED (
+  SELECT COALESCE(u.id, f.id) AS id,
+         COALESCE(u.place, f.place) AS place,
+         COALESCE(u.temp, f.temp) AS temp
+  FROM fact1 f FULL JOIN u2 u ON f.id = u.id
+),
+u3 AS MATERIALIZED (
+  SELECT 'w' || (i - 1) AS id, place, CAST(i + 1000 AS DOUBLE) AS temp
+  FROM base WHERE i % 8 = 5 AND ok
+),
+fact3 AS MATERIALIZED (
+  SELECT COALESCE(u.id, f.id) AS id,
+         COALESCE(u.place, f.place) AS place,
+         COALESCE(u.temp, f.temp) AS temp
+  FROM fact2 f FULL JOIN u3 u ON f.id = u.id
+),
+dlq AS (
+  SELECT id, place, temp FROM ins WHERE NOT ok
+  UNION ALL
+  SELECT id, place, temp FROM upd_events WHERE NOT ok
+  UNION ALL
+  SELECT 'w' || (i - 1), place, CAST(i + 1000 AS DOUBLE)
+  FROM base WHERE i % 8 = 5 AND NOT ok
+),
+unk AS (SELECT 'op_' || i AS id FROM base WHERE i % 40 = 3)
+SELECT 'fact' AS kind, id, place AS place_id, temp AS temp_c FROM fact3
+UNION ALL
+SELECT 'dlq_fk', id, place, temp FROM dlq
+UNION ALL
+SELECT 'dlq_unknown', id, CAST(NULL AS VARCHAR), CAST(NULL AS DOUBLE)
+FROM unk
+""")
 def q_stream_cdc_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's CDC daemon loop driver-oracled END-TO-END
     (streaming.cdc_merge.cdc_merge_replay): a three-phase deterministic
@@ -16318,79 +14933,46 @@ def q_stream_cdc_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fact_out.unionByName(fk_out).unionByName(unk_out)
 
 
-# Relational replay of the full event mix. Phase isolation makes the
-# cross-batch state (the target table) a chain of merges: fact1 =
-# FK-surviving phase-1 inserts (duplicates collapse to one row BEFORE
-# the FK check, so orphan keys dead-letter once); fact2 = fact1
-# full-outer-merged with the LWW-collapsed phase-2 updates (the
-# i%8==1 keys' later +200 post-image wins; update-to-missing keys
-# upsert); fact3 = fact2 merged with the phase-3 overrides. The FK DLQ
-# sees phase-1 inserts post-dedup but update events PRE-collapse (the
-# reference logs every rejected event), and unknown ops land once each.
-ORACLE_STREAM_CDC_MERGE = """
+# Relational restart replay: the fact side is insert-then-override
+# (every even key w{i} gets an update from event i+1 in run 2 — an
+# upsert where the insert was FK-rejected); the DLQ side is the
+# exactly-once admission proof — phase-1 orphan inserts reject ONCE,
+# their phase-2 redeliveries (i % 10 == 0) reject a SECOND time, and a
+# re-processed phase 1 (broken offset restore) would double everything.
+@query(oracle="""
 WITH base AS MATERIALIZED (
   SELECT event_id AS i,
          'p' || (user_id % 8) AS place,
          (user_id % 8) <= 5 AS ok
-  FROM events WHERE event_id < 400
+  FROM events WHERE event_id < 200
 ),
 ins AS MATERIALIZED (
-  SELECT 'w' || i AS id, place, CAST(i AS DOUBLE) AS temp, ok
-  FROM base WHERE i % 4 = 0
+  SELECT 'w' || i AS id, place, CAST(i AS DOUBLE) AS temp, ok, i
+  FROM base WHERE i % 2 = 0
 ),
-fact1 AS MATERIALIZED (SELECT id, place, temp FROM ins WHERE ok),
-upd_events AS MATERIALIZED (
-  SELECT 'w' || (i - 1) AS id, place, CAST(i + 100 AS DOUBLE) AS temp,
-         ok, 1 AS seq
-  FROM base WHERE i % 4 = 1
-  UNION ALL
-  SELECT 'w' || (i - 1), place, CAST(i + 200 AS DOUBLE), ok, 2
-  FROM base WHERE i % 8 = 1
-  UNION ALL
-  SELECT 'w' || i, place, CAST(i + 500 AS DOUBLE), ok, 1
-  FROM base WHERE i % 4 = 2
+fact1 AS (SELECT id, place, temp FROM ins WHERE ok),
+upd AS MATERIALIZED (
+  SELECT 'w' || (i - 1) AS id, place, CAST(i + 100 AS DOUBLE) AS temp, ok
+  FROM base WHERE i % 2 = 1
 ),
-u2 AS MATERIALIZED (
-  SELECT id, MIN(place) AS place, MAX_BY(temp, seq) AS temp
-  FROM upd_events WHERE ok GROUP BY id
-),
-fact2 AS MATERIALIZED (
+fact2 AS (
   SELECT COALESCE(u.id, f.id) AS id,
          COALESCE(u.place, f.place) AS place,
          COALESCE(u.temp, f.temp) AS temp
-  FROM fact1 f FULL JOIN u2 u ON f.id = u.id
-),
-u3 AS MATERIALIZED (
-  SELECT 'w' || (i - 1) AS id, place, CAST(i + 1000 AS DOUBLE) AS temp
-  FROM base WHERE i % 8 = 5 AND ok
-),
-fact3 AS MATERIALIZED (
-  SELECT COALESCE(u.id, f.id) AS id,
-         COALESCE(u.place, f.place) AS place,
-         COALESCE(u.temp, f.temp) AS temp
-  FROM fact2 f FULL JOIN u3 u ON f.id = u.id
+  FROM fact1 f FULL JOIN (SELECT id, place, temp FROM upd WHERE ok) u
+    ON f.id = u.id
 ),
 dlq AS (
   SELECT id, place, temp FROM ins WHERE NOT ok
   UNION ALL
-  SELECT id, place, temp FROM upd_events WHERE NOT ok
+  SELECT id, place, temp FROM ins WHERE NOT ok AND i % 10 = 0
   UNION ALL
-  SELECT 'w' || (i - 1), place, CAST(i + 1000 AS DOUBLE)
-  FROM base WHERE i % 8 = 5 AND NOT ok
-),
-unk AS (SELECT 'op_' || i AS id FROM base WHERE i % 40 = 3)
-SELECT 'fact' AS kind, id, place AS place_id, temp AS temp_c FROM fact3
+  SELECT id, place, temp FROM upd WHERE NOT ok
+)
+SELECT 'fact' AS kind, id, place AS place_id, temp AS temp_c FROM fact2
 UNION ALL
 SELECT 'dlq_fk', id, place, temp FROM dlq
-UNION ALL
-SELECT 'dlq_unknown', id, CAST(NULL AS VARCHAR), CAST(NULL AS DOUBLE)
-FROM unk
-"""
-
-QUERIES["stream_cdc_merge_replay"] = q_stream_cdc_merge_replay
-ORACLES["stream_cdc_merge_replay"] = ORACLE_STREAM_CDC_MERGE
-
-
+""")
 def q_stream_cdc_merge_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC merge across a checkpoint RESTART
     (streaming.cdc_merge.cdc_merge_restart) — the fifth and final
@@ -16513,51 +15095,13 @@ def q_stream_cdc_merge_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fact_out.unionByName(fk_out)
 
 
-# Relational restart replay: the fact side is insert-then-override
-# (every even key w{i} gets an update from event i+1 in run 2 — an
-# upsert where the insert was FK-rejected); the DLQ side is the
-# exactly-once admission proof — phase-1 orphan inserts reject ONCE,
-# their phase-2 redeliveries (i % 10 == 0) reject a SECOND time, and a
-# re-processed phase 1 (broken offset restore) would double everything.
-ORACLE_STREAM_CDC_RESTART = """
-WITH base AS MATERIALIZED (
-  SELECT event_id AS i,
-         'p' || (user_id % 8) AS place,
-         (user_id % 8) <= 5 AS ok
-  FROM events WHERE event_id < 200
-),
-ins AS MATERIALIZED (
-  SELECT 'w' || i AS id, place, CAST(i AS DOUBLE) AS temp, ok, i
-  FROM base WHERE i % 2 = 0
-),
-fact1 AS (SELECT id, place, temp FROM ins WHERE ok),
-upd AS MATERIALIZED (
-  SELECT 'w' || (i - 1) AS id, place, CAST(i + 100 AS DOUBLE) AS temp, ok
-  FROM base WHERE i % 2 = 1
-),
-fact2 AS (
-  SELECT COALESCE(u.id, f.id) AS id,
-         COALESCE(u.place, f.place) AS place,
-         COALESCE(u.temp, f.temp) AS temp
-  FROM fact1 f FULL JOIN (SELECT id, place, temp FROM upd WHERE ok) u
-    ON f.id = u.id
-),
-dlq AS (
-  SELECT id, place, temp FROM ins WHERE NOT ok
-  UNION ALL
-  SELECT id, place, temp FROM ins WHERE NOT ok AND i % 10 = 0
-  UNION ALL
-  SELECT id, place, temp FROM upd WHERE NOT ok
-)
-SELECT 'fact' AS kind, id, place AS place_id, temp AS temp_c FROM fact2
-UNION ALL
-SELECT 'dlq_fk', id, place, temp FROM dlq
-"""
-
-QUERIES["stream_cdc_merge_restart"] = q_stream_cdc_merge_restart
-ORACLES["stream_cdc_merge_restart"] = ORACLE_STREAM_CDC_RESTART
-
-
+@query(oracle="""
+SELECT (epoch_us(ts) // 1800000000) * 1800000000 AS window_start_us,
+       event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS v_cents
+FROM events GROUP BY 1, 2
+""")
 def q_stream_rocksdb_halfhourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming tumbling aggregation under the ROCKSDB state store
     provider (streaming.windowed.windowed_counts_once_rocksdb) — the
@@ -16596,18 +15140,22 @@ def q_stream_rocksdb_halfhourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_ROCKSDB = """
-SELECT (epoch_us(ts) // 1800000000) * 1800000000 AS window_start_us,
-       event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS v_cents
-FROM events GROUP BY 1, 2
+def _oracle_python_datasource_stream() -> str:
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources.pyds import (
+        weather_api_oracle_sql,
+    )
+
+    return f"""
+WITH src AS ({weather_api_oracle_sql(places=30, hours=6)})
+SELECT place_key,
+       CAST(COUNT(*) AS BIGINT) AS n_obs,
+       CAST(SUM(CAST(temp_c * 10 AS BIGINT)) AS BIGINT) AS temp_decidegrees,
+       CAST(SUM(humidity) AS BIGINT) AS humidity_total
+FROM src GROUP BY place_key
 """
 
-QUERIES["stream_rocksdb_halfhourly"] = q_stream_rocksdb_halfhourly
-ORACLES["stream_rocksdb_halfhourly"] = ORACLE_STREAM_ROCKSDB
 
-
+@query(oracle=_oracle_python_datasource_stream())
 def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The custom Python DataSource's STREAMING leg driver-oracled
     (sources.pyds.WeatherApiStreamReader, Spark 4 SimpleDataSourceStream
@@ -16671,25 +15219,22 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(sink).localCheckpoint(eager=True)
 
 
-def _oracle_python_datasource_stream() -> str:
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources.pyds import (
-        weather_api_oracle_sql,
-    )
-
-    return f"""
-WITH src AS ({weather_api_oracle_sql(places=30, hours=6)})
-SELECT place_key,
-       CAST(COUNT(*) AS BIGINT) AS n_obs,
-       CAST(SUM(CAST(temp_c * 10 AS BIGINT)) AS BIGINT) AS temp_decidegrees,
-       CAST(SUM(humidity) AS BIGINT) AS humidity_total
-FROM src GROUP BY place_key
-"""
-
-
-QUERIES["python_datasource_stream"] = q_python_datasource_stream
-ORACLES["python_datasource_stream"] = _oracle_python_datasource_stream()
-
-
+@query(oracle="""
+WITH s AS (
+  SELECT ('0x' || substr(md5('cal:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
+           % 1000 AS s,
+         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS y
+  FROM events
+)
+SELECT s // 100 AS bin,
+       CAST(COUNT(*) AS BIGINT) AS n,
+       CAST(SUM(y) AS BIGINT) AS clicks,
+       CAST(SUM(s) * 1000 // COUNT(*) AS BIGINT) AS conf_micro,
+       CAST(SUM(y) * 1000000 // COUNT(*) AS BIGINT) AS acc_micro,
+       CAST(abs(SUM(y) * 1000000 // COUNT(*) - SUM(s) * 1000 // COUNT(*)) AS BIGINT)
+         AS gap_micro
+FROM s GROUP BY 1
+""")
 def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-eval calibration: the reliability diagram behind Expected
     Calibration Error, over a deterministic synthetic scorer (md5-hash
@@ -16726,27 +15271,37 @@ def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CALIBRATION_ECE = """
-WITH s AS (
-  SELECT ('0x' || substr(md5('cal:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
-           % 1000 AS s,
-         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS y
+@query(oracle="""
+WITH iv AS (
+  SELECT user_id, event_id,
+         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
+         epoch_us(ts) AS s,
+         epoch_us(ts) + CASE WHEN event_type = 'click'
+                             THEN 2400000000 ELSE 900000000 END AS e
   FROM events
+),
+o AS (
+  SELECT *, MAX(e) OVER (PARTITION BY user_id ORDER BY s, event_id
+                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+            AS pmax
+  FROM iv
+),
+f AS (
+  SELECT *, CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END AS brk
+  FROM o
+),
+i AS (
+  SELECT *, SUM(brk) OVER (PARTITION BY user_id ORDER BY s, event_id
+                           ROWS UNBOUNDED PRECEDING) AS sid
+  FROM f
 )
-SELECT s // 100 AS bin,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(y) AS BIGINT) AS clicks,
-       CAST(SUM(s) * 1000 // COUNT(*) AS BIGINT) AS conf_micro,
-       CAST(SUM(y) * 1000000 // COUNT(*) AS BIGINT) AS acc_micro,
-       CAST(abs(SUM(y) * 1000000 // COUNT(*) - SUM(s) * 1000 // COUNT(*)) AS BIGINT)
-         AS gap_micro
-FROM s GROUP BY 1
-"""
-
-QUERIES["calibration_ece"] = q_calibration_ece
-ORACLES["calibration_ece"] = ORACLE_CALIBRATION_ECE
-
-
+SELECT user_id,
+       MIN(s) AS session_start_us,
+       MAX(e) AS session_end_us,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(SUM(is_click) AS BIGINT) AS n_clicks
+FROM i GROUP BY user_id, sid
+""")
 def q_dynamic_gap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows with a PER-EVENT DYNAMIC gap
     (``F.session_window(ts, CASE ...)``): click events hold a session
@@ -16781,42 +15336,25 @@ def q_dynamic_gap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DYNAMIC_GAP_SESSIONS = """
-WITH iv AS (
-  SELECT user_id, event_id,
-         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
-         epoch_us(ts) AS s,
-         epoch_us(ts) + CASE WHEN event_type = 'click'
-                             THEN 2400000000 ELSE 900000000 END AS e
-  FROM events
-),
-o AS (
-  SELECT *, MAX(e) OVER (PARTITION BY user_id ORDER BY s, event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-            AS pmax
-  FROM iv
-),
-f AS (
-  SELECT *, CASE WHEN pmax IS NULL OR s > pmax THEN 1 ELSE 0 END AS brk
-  FROM o
-),
-i AS (
-  SELECT *, SUM(brk) OVER (PARTITION BY user_id ORDER BY s, event_id
-                           ROWS UNBOUNDED PRECEDING) AS sid
-  FROM f
+@query(oracle="""
+WITH w1 AS (
+  SELECT (epoch_us(max(ts)) // 1000) * 1000 - 1200000000 AS v
+  FROM events WHERE user_id % 3 = 0),
+w2 AS (
+  SELECT (epoch_us(max(ts)) // 1000) * 1000 - 1200000000 AS v FROM events),
+kept AS (
+  SELECT e.event_type,
+         (epoch_us(ts) // 1800000000) * 1800000000 AS ws
+  FROM events e, w1
+  WHERE user_id % 3 = 0
+     OR (epoch_us(ts) // 1800000000) * 1800000000 + 1800000000 > w1.v
 )
-SELECT user_id,
-       MIN(s) AS session_start_us,
-       MAX(e) AS session_end_us,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(is_click) AS BIGINT) AS n_clicks
-FROM i GROUP BY user_id, sid
-"""
-
-QUERIES["dynamic_gap_sessions"] = q_dynamic_gap_sessions
-ORACLES["dynamic_gap_sessions"] = ORACLE_DYNAMIC_GAP_SESSIONS
-
-
+SELECT ws AS window_start_us, event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_events
+FROM kept, w2
+GROUP BY 1, 2, w2.v
+HAVING ws + 1800000000 <= w2.v
+""")
 def q_stream_rocksdb_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpoint RESTART on the ROCKSDB state store: the
     two-run/one-checkpoint append replay (streaming.windowed.
@@ -16870,30 +15408,6 @@ def q_stream_rocksdb_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_ROCKSDB_RESTART = """
-WITH w1 AS (
-  SELECT (epoch_us(max(ts)) // 1000) * 1000 - 1200000000 AS v
-  FROM events WHERE user_id % 3 = 0),
-w2 AS (
-  SELECT (epoch_us(max(ts)) // 1000) * 1000 - 1200000000 AS v FROM events),
-kept AS (
-  SELECT e.event_type,
-         (epoch_us(ts) // 1800000000) * 1800000000 AS ws
-  FROM events e, w1
-  WHERE user_id % 3 = 0
-     OR (epoch_us(ts) // 1800000000) * 1800000000 + 1800000000 > w1.v
-)
-SELECT ws AS window_start_us, event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events
-FROM kept, w2
-GROUP BY 1, 2, w2.v
-HAVING ws + 1800000000 <= w2.v
-"""
-
-QUERIES["stream_rocksdb_restart"] = q_stream_rocksdb_restart
-ORACLES["stream_rocksdb_restart"] = ORACLE_STREAM_ROCKSDB_RESTART
-
-
 # ------------------------------------------------- model-eval metrics family
 #
 # Classifier/clustering evaluation a training-data pipeline runs over its
@@ -16903,6 +15417,30 @@ ORACLES["stream_rocksdb_restart"] = ORACLE_STREAM_ROCKSDB_RESTART
 # identical integer inputs (r9 float-determinism taxonomy class 1).
 
 
+@query(oracle="""
+WITH s AS (
+  SELECT ('0x' || substr(md5('auc:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
+           % 500 AS s,
+         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS y
+  FROM events),
+hist AS (
+  SELECT s, CAST(SUM(y) AS BIGINT) AS pos, CAST(SUM(1 - y) AS BIGINT) AS neg
+  FROM s GROUP BY s),
+cum AS (
+  SELECT *, CAST(COALESCE(SUM(neg) OVER (ORDER BY s
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+            AS cumneg
+  FROM hist),
+agg AS (
+  SELECT CAST(SUM(pos) AS BIGINT) AS n_pos,
+         CAST(SUM(neg) AS BIGINT) AS n_neg,
+         CAST(SUM(pos * (2 * cumneg + neg)) AS BIGINT) AS u_times2
+  FROM cum)
+SELECT n_pos, n_neg, u_times2,
+       round(CAST(u_times2 AS DOUBLE)
+             / CAST(2 * n_pos * n_neg AS DOUBLE), 6) AS auc
+FROM agg
+""")
 def q_auc_rank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact ROC AUC via the Mann-Whitney rank statistic, computed the
     100 TB way: the fact table collapses to a ≤500-row score HISTOGRAM
@@ -16948,7 +15486,7 @@ def q_auc_rank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_AUC_RANK_EVAL = """
+@query(oracle="""
 WITH s AS (
   SELECT ('0x' || substr(md5('auc:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
            % 500 AS s,
@@ -16957,26 +15495,23 @@ WITH s AS (
 hist AS (
   SELECT s, CAST(SUM(y) AS BIGINT) AS pos, CAST(SUM(1 - y) AS BIGINT) AS neg
   FROM s GROUP BY s),
-cum AS (
-  SELECT *, CAST(COALESCE(SUM(neg) OVER (ORDER BY s
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-            AS cumneg
-  FROM hist),
-agg AS (
-  SELECT CAST(SUM(pos) AS BIGINT) AS n_pos,
-         CAST(SUM(neg) AS BIGINT) AS n_neg,
-         CAST(SUM(pos * (2 * cumneg + neg)) AS BIGINT) AS u_times2
-  FROM cum)
-SELECT n_pos, n_neg, u_times2,
-       round(CAST(u_times2 AS DOUBLE)
-             / CAST(2 * n_pos * n_neg AS DOUBLE), 6) AS auc
-FROM agg
-"""
-
-QUERIES["auc_rank_eval"] = q_auc_rank_eval
-ORACLES["auc_rank_eval"] = ORACLE_AUC_RANK_EVAL
-
-
+th AS (SELECT unnest(generate_series(0, 9)) AS t),
+pr AS (
+  SELECT t,
+         CAST(SUM(CASE WHEN s >= t * 50 THEN pos ELSE 0 END) AS BIGINT) AS tp,
+         CAST(SUM(CASE WHEN s >= t * 50 THEN neg ELSE 0 END) AS BIGINT) AS fp,
+         CAST(SUM(CASE WHEN s < t * 50 THEN pos ELSE 0 END) AS BIGINT) AS fn,
+         CAST(SUM(CASE WHEN s < t * 50 THEN neg ELSE 0 END) AS BIGINT) AS tn
+  FROM hist CROSS JOIN th GROUP BY t)
+SELECT t, tp, fp, fn, tn,
+       CASE WHEN tp + fp = 0 THEN NULL
+            ELSE tp * 1000000 // (tp + fp) END AS precision_micro,
+       CASE WHEN tp + fn = 0 THEN NULL
+            ELSE tp * 1000000 // (tp + fn) END AS recall_micro,
+       CASE WHEN 2 * tp + fp + fn = 0 THEN NULL
+            ELSE 2 * tp * 1000000 // (2 * tp + fp + fn) END AS f1_micro
+FROM pr
+""")
 def q_pr_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision/recall/F1 at ten score thresholds (the PR curve a
     quality-filter pipeline sweeps to pick its operating point), from
@@ -17035,37 +15570,33 @@ def q_pr_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PR_CURVE_DECILES = """
-WITH s AS (
-  SELECT ('0x' || substr(md5('auc:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
-           % 500 AS s,
-         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS y
+@query(oracle="""
+WITH r AS (
+  SELECT ('0x' || substr(md5('ra:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
+           % 3 AS ra,
+         ('0x' || substr(md5('rb:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
+           % 4 AS coin
   FROM events),
-hist AS (
-  SELECT s, CAST(SUM(y) AS BIGINT) AS pos, CAST(SUM(1 - y) AS BIGINT) AS neg
-  FROM s GROUP BY s),
-th AS (SELECT unnest(generate_series(0, 9)) AS t),
-pr AS (
-  SELECT t,
-         CAST(SUM(CASE WHEN s >= t * 50 THEN pos ELSE 0 END) AS BIGINT) AS tp,
-         CAST(SUM(CASE WHEN s >= t * 50 THEN neg ELSE 0 END) AS BIGINT) AS fp,
-         CAST(SUM(CASE WHEN s < t * 50 THEN pos ELSE 0 END) AS BIGINT) AS fn,
-         CAST(SUM(CASE WHEN s < t * 50 THEN neg ELSE 0 END) AS BIGINT) AS tn
-  FROM hist CROSS JOIN th GROUP BY t)
-SELECT t, tp, fp, fn, tn,
-       CASE WHEN tp + fp = 0 THEN NULL
-            ELSE tp * 1000000 // (tp + fp) END AS precision_micro,
-       CASE WHEN tp + fn = 0 THEN NULL
-            ELSE tp * 1000000 // (tp + fn) END AS recall_micro,
-       CASE WHEN 2 * tp + fp + fn = 0 THEN NULL
-            ELSE 2 * tp * 1000000 // (2 * tp + fp + fn) END AS f1_micro
-FROM pr
-"""
-
-QUERIES["pr_curve_deciles"] = q_pr_curve_deciles
-ORACLES["pr_curve_deciles"] = ORACLE_PR_CURVE_DECILES
-
-
+lab AS (
+  SELECT ra, CASE WHEN coin = 0 THEN (ra + 1) % 3 ELSE ra END AS rb FROM r),
+agg AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(CASE WHEN ra = rb THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
+         CAST(SUM(CASE WHEN ra = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ra0,
+         CAST(SUM(CASE WHEN ra = 1 THEN 1 ELSE 0 END) AS BIGINT) AS ra1,
+         CAST(SUM(CASE WHEN ra = 2 THEN 1 ELSE 0 END) AS BIGINT) AS ra2,
+         CAST(SUM(CASE WHEN rb = 0 THEN 1 ELSE 0 END) AS BIGINT) AS rb0,
+         CAST(SUM(CASE WHEN rb = 1 THEN 1 ELSE 0 END) AS BIGINT) AS rb1,
+         CAST(SUM(CASE WHEN rb = 2 THEN 1 ELSE 0 END) AS BIGINT) AS rb2
+  FROM lab)
+SELECT n, n_agree,
+       CAST(ra0 * rb0 + ra1 * rb1 + ra2 * rb2 AS BIGINT) AS pe_num,
+       n_agree * 1000000 // n AS po_micro,
+       round(CAST(n_agree * n - (ra0 * rb0 + ra1 * rb1 + ra2 * rb2) AS DOUBLE)
+             / CAST(n * n - (ra0 * rb0 + ra1 * rb1 + ra2 * rb2) AS DOUBLE),
+             6) AS kappa
+FROM agg
+""")
 def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's kappa inter-annotator agreement between two
     deterministic md5 raters over the events fact (rater A: 3-way
@@ -17133,38 +15664,39 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_COHENS_KAPPA = """
-WITH r AS (
-  SELECT ('0x' || substr(md5('ra:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
-           % 3 AS ra,
-         ('0x' || substr(md5('rb:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
-           % 4 AS coin
-  FROM events),
-lab AS (
-  SELECT ra, CASE WHEN coin = 0 THEN (ra + 1) % 3 ELSE ra END AS rb FROM r),
-agg AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CASE WHEN ra = rb THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
-         CAST(SUM(CASE WHEN ra = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ra0,
-         CAST(SUM(CASE WHEN ra = 1 THEN 1 ELSE 0 END) AS BIGINT) AS ra1,
-         CAST(SUM(CASE WHEN ra = 2 THEN 1 ELSE 0 END) AS BIGINT) AS ra2,
-         CAST(SUM(CASE WHEN rb = 0 THEN 1 ELSE 0 END) AS BIGINT) AS rb0,
-         CAST(SUM(CASE WHEN rb = 1 THEN 1 ELSE 0 END) AS BIGINT) AS rb1,
-         CAST(SUM(CASE WHEN rb = 2 THEN 1 ELSE 0 END) AS BIGINT) AS rb2
-  FROM lab)
-SELECT n, n_agree,
-       CAST(ra0 * rb0 + ra1 * rb1 + ra2 * rb2 AS BIGINT) AS pe_num,
-       n_agree * 1000000 // n AS po_micro,
-       round(CAST(n_agree * n - (ra0 * rb0 + ra1 * rb1 + ra2 * rb2) AS DOUBLE)
-             / CAST(n * n - (ra0 * rb0 + ra1 * rb1 + ra2 * rb2) AS DOUBLE),
-             6) AS kappa
-FROM agg
-"""
-
-QUERIES["cohens_kappa"] = q_cohens_kappa
-ORACLES["cohens_kappa"] = ORACLE_COHENS_KAPPA
-
-
+@query(oracle="""
+WITH lab AS (
+  SELECT md5(array_to_string(list_slice(string_split(text, ' '), 1, 2), ' '))
+           AS la,
+         md5(array_to_string(list_slice(string_split(text, ' '), 1, 3), ' '))
+           AS lb
+  FROM documents),
+cells AS (
+  SELECT la, lb, CAST(COUNT(*) AS BIGINT) AS nij FROM lab GROUP BY la, lb),
+sij_t AS (
+  SELECT CAST(SUM(nij * (nij - 1) // 2) AS BIGINT) AS sij,
+         CAST(SUM(nij) AS BIGINT) AS n
+  FROM cells),
+sa_t AS (
+  SELECT CAST(SUM(ai * (ai - 1) // 2) AS BIGINT) AS sa
+  FROM (SELECT CAST(SUM(nij) AS BIGINT) AS ai FROM cells GROUP BY la)),
+sb_t AS (
+  SELECT CAST(SUM(bj * (bj - 1) // 2) AS BIGINT) AS sb
+  FROM (SELECT CAST(SUM(nij) AS BIGINT) AS bj FROM cells GROUP BY lb)),
+one AS (
+  SELECT n, sij, sa, sb, CAST(n * (n - 1) // 2 AS BIGINT) AS cn2
+  FROM sij_t, sa_t, sb_t)
+SELECT n, sij, sa, sb, cn2,
+       CASE WHEN (CAST(sa AS HUGEINT) + sb) * cn2
+                 - 2 * CAST(sa AS HUGEINT) * sb = 0 THEN NULL
+            ELSE round(
+              CAST(2 * (CAST(sij AS HUGEINT) * cn2
+                        - CAST(sa AS HUGEINT) * sb) AS DOUBLE)
+              / CAST((CAST(sa AS HUGEINT) + sb) * cn2
+                     - 2 * CAST(sa AS HUGEINT) * sb AS DOUBLE),
+              6) END AS ari
+FROM one
+""")
 def q_clustering_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adjusted Rand Index between two dedup-granularity clusterings
     of the documents corpus (first-2-token vs first-3-token prefix
@@ -17222,44 +15754,54 @@ def q_clustering_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CLUSTERING_ARI = """
-WITH lab AS (
-  SELECT md5(array_to_string(list_slice(string_split(text, ' '), 1, 2), ' '))
-           AS la,
-         md5(array_to_string(list_slice(string_split(text, ' '), 1, 3), ' '))
-           AS lb
-  FROM documents),
+@query(oracle="""
+WITH base AS (
+  SELECT epoch_us(ts) AS us,
+         ('0x' || substr(md5('zm:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
+           % 64 AS fh
+  FROM events),
+span AS (SELECT MIN(us) AS mn, MAX(us) AS mx FROM base),
+g AS (
+  SELECT us, fh,
+         ((us - mn) * 64) // (mx - mn + 1) AS ft,
+         mn + ((mx - mn) * 40) // 100 AS lo,
+         mn + ((mx - mn) * 45) // 100 AS hi
+  FROM base, span),
 cells AS (
-  SELECT la, lb, CAST(COUNT(*) AS BIGINT) AS nij FROM lab GROUP BY la, lb),
-sij_t AS (
-  SELECT CAST(SUM(nij * (nij - 1) // 2) AS BIGINT) AS sij,
-         CAST(SUM(nij) AS BIGINT) AS n
-  FROM cells),
-sa_t AS (
-  SELECT CAST(SUM(ai * (ai - 1) // 2) AS BIGINT) AS sa
-  FROM (SELECT CAST(SUM(nij) AS BIGINT) AS ai FROM cells GROUP BY la)),
-sb_t AS (
-  SELECT CAST(SUM(bj * (bj - 1) // 2) AS BIGINT) AS sb
-  FROM (SELECT CAST(SUM(nij) AS BIGINT) AS bj FROM cells GROUP BY lb)),
-one AS (
-  SELECT n, sij, sa, sb, CAST(n * (n - 1) // 2 AS BIGINT) AS cn2
-  FROM sij_t, sa_t, sb_t)
-SELECT n, sij, sa, sb, cn2,
-       CASE WHEN (CAST(sa AS HUGEINT) + sb) * cn2
-                 - 2 * CAST(sa AS HUGEINT) * sb = 0 THEN NULL
-            ELSE round(
-              CAST(2 * (CAST(sij AS HUGEINT) * cn2
-                        - CAST(sa AS HUGEINT) * sb) AS DOUBLE)
-              / CAST((CAST(sa AS HUGEINT) + sb) * cn2
-                     - 2 * CAST(sa AS HUGEINT) * sb AS DOUBLE),
-              6) END AS ari
-FROM one
-"""
-
-QUERIES["clustering_ari"] = q_clustering_ari
-ORACLES["clustering_ari"] = ORACLE_CLUSTERING_ARI
-
-
+  SELECT fh, ft, lo, hi,
+         CAST(COUNT(*) AS BIGINT) AS n,
+         MIN(us) AS cmn, MAX(us) AS cmx,
+         CAST(SUM(CASE WHEN us >= lo AND us <= hi THEN 1 ELSE 0 END) AS BIGINT)
+           AS match
+  FROM g GROUP BY fh, ft, lo, hi),
+fh_files AS (
+  SELECT fh, lo, hi, CAST(SUM(n) AS BIGINT) AS rows,
+         MIN(cmn) AS fmn, MAX(cmx) AS fmx,
+         CAST(SUM(match) AS BIGINT) AS fmatch
+  FROM cells GROUP BY fh, lo, hi),
+ft_files AS (
+  SELECT ft, lo, hi, CAST(SUM(n) AS BIGINT) AS rows,
+         MIN(cmn) AS fmn, MAX(cmx) AS fmx,
+         CAST(SUM(match) AS BIGINT) AS fmatch
+  FROM cells GROUP BY ft, lo, hi)
+SELECT 'hash' AS layout,
+       CAST(COUNT(*) AS BIGINT) AS n_files,
+       CAST(SUM(CASE WHEN fmx >= lo AND fmn <= hi THEN 1 ELSE 0 END) AS BIGINT)
+         AS files_read,
+       CAST(SUM(CASE WHEN fmx >= lo AND fmn <= hi THEN rows ELSE 0 END)
+            AS BIGINT) AS rows_scanned,
+       CAST(SUM(fmatch) AS BIGINT) AS rows_matching
+FROM fh_files
+UNION ALL
+SELECT 'time' AS layout,
+       CAST(COUNT(*) AS BIGINT) AS n_files,
+       CAST(SUM(CASE WHEN fmx >= lo AND fmn <= hi THEN 1 ELSE 0 END) AS BIGINT)
+         AS files_read,
+       CAST(SUM(CASE WHEN fmx >= lo AND fmn <= hi THEN rows ELSE 0 END)
+            AS BIGINT) AS rows_scanned,
+       CAST(SUM(fmatch) AS BIGINT) AS rows_matching
+FROM ft_files
+""")
 def q_zone_map_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-lake scan-pruning audit: how many of 64 files a min/max
     zone map lets a time-range predicate SKIP, under a time-clustered
@@ -17336,59 +15878,20 @@ def q_zone_map_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     return layout("fh", "hash").unionByName(layout("ft", "time"))
 
 
-ORACLE_ZONE_MAP_SKIPPING = """
-WITH base AS (
-  SELECT epoch_us(ts) AS us,
-         ('0x' || substr(md5('zm:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
-           % 64 AS fh
-  FROM events),
-span AS (SELECT MIN(us) AS mn, MAX(us) AS mx FROM base),
-g AS (
-  SELECT us, fh,
-         ((us - mn) * 64) // (mx - mn + 1) AS ft,
-         mn + ((mx - mn) * 40) // 100 AS lo,
-         mn + ((mx - mn) * 45) // 100 AS hi
-  FROM base, span),
-cells AS (
-  SELECT fh, ft, lo, hi,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         MIN(us) AS cmn, MAX(us) AS cmx,
-         CAST(SUM(CASE WHEN us >= lo AND us <= hi THEN 1 ELSE 0 END) AS BIGINT)
-           AS match
-  FROM g GROUP BY fh, ft, lo, hi),
-fh_files AS (
-  SELECT fh, lo, hi, CAST(SUM(n) AS BIGINT) AS rows,
-         MIN(cmn) AS fmn, MAX(cmx) AS fmx,
-         CAST(SUM(match) AS BIGINT) AS fmatch
-  FROM cells GROUP BY fh, lo, hi),
-ft_files AS (
-  SELECT ft, lo, hi, CAST(SUM(n) AS BIGINT) AS rows,
-         MIN(cmn) AS fmn, MAX(cmx) AS fmx,
-         CAST(SUM(match) AS BIGINT) AS fmatch
-  FROM cells GROUP BY ft, lo, hi)
-SELECT 'hash' AS layout,
-       CAST(COUNT(*) AS BIGINT) AS n_files,
-       CAST(SUM(CASE WHEN fmx >= lo AND fmn <= hi THEN 1 ELSE 0 END) AS BIGINT)
-         AS files_read,
-       CAST(SUM(CASE WHEN fmx >= lo AND fmn <= hi THEN rows ELSE 0 END)
-            AS BIGINT) AS rows_scanned,
-       CAST(SUM(fmatch) AS BIGINT) AS rows_matching
-FROM fh_files
-UNION ALL
-SELECT 'time' AS layout,
-       CAST(COUNT(*) AS BIGINT) AS n_files,
-       CAST(SUM(CASE WHEN fmx >= lo AND fmn <= hi THEN 1 ELSE 0 END) AS BIGINT)
-         AS files_read,
-       CAST(SUM(CASE WHEN fmx >= lo AND fmn <= hi THEN rows ELSE 0 END)
-            AS BIGINT) AS rows_scanned,
-       CAST(SUM(fmatch) AS BIGINT) AS rows_matching
-FROM ft_files
-"""
-
-QUERIES["zone_map_skipping"] = q_zone_map_skipping
-ORACLES["zone_map_skipping"] = ORACLE_ZONE_MAP_SKIPPING
-
-
+@query(oracle="""
+WITH ut AS (
+  SELECT user_id, event_type, MIN(epoch_us(ts)) AS first_us
+  FROM events GROUP BY user_id, event_type)
+SELECT a.event_type AS a, b.event_type AS b,
+       CAST(COUNT(*) AS BIGINT) AS n_users_both,
+       CAST(SUM(CASE WHEN a.first_us < b.first_us THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_a_before_b,
+       CASE WHEN COUNT(*) = 0 THEN NULL
+            ELSE CAST(SUM(CASE WHEN a.first_us < b.first_us THEN 1 ELSE 0 END)
+                      AS BIGINT) * 1000000 // COUNT(*) END AS conf_micro
+FROM ut a JOIN ut b ON a.user_id = b.user_id AND a.event_type <> b.event_type
+GROUP BY a.event_type, b.event_type
+""")
 def q_happens_before_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential-pattern support over user journeys: for every
     ordered event-type pair (a, b), how many users saw their FIRST a
@@ -17434,25 +15937,20 @@ def q_happens_before_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_HAPPENS_BEFORE_PAIRS = """
-WITH ut AS (
-  SELECT user_id, event_type, MIN(epoch_us(ts)) AS first_us
-  FROM events GROUP BY user_id, event_type)
-SELECT a.event_type AS a, b.event_type AS b,
-       CAST(COUNT(*) AS BIGINT) AS n_users_both,
-       CAST(SUM(CASE WHEN a.first_us < b.first_us THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_a_before_b,
-       CASE WHEN COUNT(*) = 0 THEN NULL
-            ELSE CAST(SUM(CASE WHEN a.first_us < b.first_us THEN 1 ELSE 0 END)
-                      AS BIGINT) * 1000000 // COUNT(*) END AS conf_micro
-FROM ut a JOIN ut b ON a.user_id = b.user_id AND a.event_type <> b.event_type
-GROUP BY a.event_type, b.event_type
-"""
-
-QUERIES["happens_before_pairs"] = q_happens_before_pairs
-ORACLES["happens_before_pairs"] = ORACLE_HAPPENS_BEFORE_PAIRS
-
-
+@query(oracle="""
+WITH votes AS (
+  SELECT lang, CAST(COUNT(*) AS BIGINT) AS votes FROM documents GROUP BY lang),
+quot AS (
+  SELECT lang, votes, d, (votes * 1000000) // d AS q
+  FROM votes, (SELECT unnest(generate_series(1, 100)) AS d)),
+winners AS (
+  SELECT lang FROM quot ORDER BY q DESC, lang ASC, d ASC LIMIT 100),
+seats AS (
+  SELECT lang, CAST(COUNT(*) AS BIGINT) AS seats FROM winners GROUP BY lang)
+SELECT v.lang, v.votes,
+       CAST(COALESCE(s.seats, 0) AS BIGINT) AS seats
+FROM votes v LEFT JOIN seats s ON v.lang = s.lang
+""")
 def q_dhondt_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D'Hondt divisor-method apportionment of 100 training-mixture
     shards across document languages by corpus size — the
@@ -17494,25 +15992,32 @@ def q_dhondt_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DHONDT_APPORTIONMENT = """
-WITH votes AS (
-  SELECT lang, CAST(COUNT(*) AS BIGINT) AS votes FROM documents GROUP BY lang),
-quot AS (
-  SELECT lang, votes, d, (votes * 1000000) // d AS q
-  FROM votes, (SELECT unnest(generate_series(1, 100)) AS d)),
-winners AS (
-  SELECT lang FROM quot ORDER BY q DESC, lang ASC, d ASC LIMIT 100),
-seats AS (
-  SELECT lang, CAST(COUNT(*) AS BIGINT) AS seats FROM winners GROUP BY lang)
-SELECT v.lang, v.votes,
-       CAST(COALESCE(s.seats, 0) AS BIGINT) AS seats
-FROM votes v LEFT JOIN seats s ON v.lang = s.lang
-"""
-
-QUERIES["dhondt_apportionment"] = q_dhondt_apportionment
-ORACLES["dhondt_apportionment"] = ORACLE_DHONDT_APPORTIONMENT
-
-
+@query(oracle="""
+WITH keyed AS (
+  SELECT doc_id, lang, n_chars,
+         (('0x' || substr(md5('pps:' || CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT
+          * 10000) // n_chars AS prio
+  FROM documents),
+sample AS (
+  SELECT * FROM keyed ORDER BY prio ASC, doc_id ASC LIMIT 200),
+samp_lang AS (
+  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_sampled,
+         CAST(SUM(n_chars) AS BIGINT) AS sampled_wt
+  FROM sample GROUP BY lang),
+corpus AS (
+  SELECT lang, CAST(SUM(n_chars) AS BIGINT) AS corpus_wt
+  FROM documents GROUP BY lang),
+tot AS (
+  SELECT (SELECT CAST(SUM(n_chars) AS BIGINT) FROM sample) AS ts_wt,
+         (SELECT CAST(SUM(n_chars) AS BIGINT) FROM documents) AS tc_wt)
+SELECT c.lang,
+       CAST(COALESCE(s.n_sampled, 0) AS BIGINT) AS n_sampled,
+       CAST(COALESCE(s.sampled_wt, 0) AS BIGINT) AS sampled_wt,
+       c.corpus_wt,
+       (c.corpus_wt * 1000000) // t.tc_wt AS corpus_share_micro,
+       (COALESCE(s.sampled_wt, 0) * 1000000) // t.ts_wt AS sample_share_micro
+FROM corpus c LEFT JOIN samp_lang s ON c.lang = s.lang, tot t
+""")
 def q_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential-Poisson PPS sample (probability proportional to
     size) of 200 documents weighted by length — the size-biased
@@ -17570,37 +16075,26 @@ def q_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PPS_SAMPLE = """
-WITH keyed AS (
-  SELECT doc_id, lang, n_chars,
-         (('0x' || substr(md5('pps:' || CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT
-          * 10000) // n_chars AS prio
-  FROM documents),
-sample AS (
-  SELECT * FROM keyed ORDER BY prio ASC, doc_id ASC LIMIT 200),
-samp_lang AS (
-  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_sampled,
-         CAST(SUM(n_chars) AS BIGINT) AS sampled_wt
-  FROM sample GROUP BY lang),
-corpus AS (
-  SELECT lang, CAST(SUM(n_chars) AS BIGINT) AS corpus_wt
-  FROM documents GROUP BY lang),
-tot AS (
-  SELECT (SELECT CAST(SUM(n_chars) AS BIGINT) FROM sample) AS ts_wt,
-         (SELECT CAST(SUM(n_chars) AS BIGINT) FROM documents) AS tc_wt)
-SELECT c.lang,
-       CAST(COALESCE(s.n_sampled, 0) AS BIGINT) AS n_sampled,
-       CAST(COALESCE(s.sampled_wt, 0) AS BIGINT) AS sampled_wt,
-       c.corpus_wt,
-       (c.corpus_wt * 1000000) // t.tc_wt AS corpus_share_micro,
-       (COALESCE(s.sampled_wt, 0) * 1000000) // t.ts_wt AS sample_share_micro
-FROM corpus c LEFT JOIN samp_lang s ON c.lang = s.lang, tot t
-"""
-
-QUERIES["pps_sample"] = q_pps_sample
-ORACLES["pps_sample"] = ORACLE_PPS_SAMPLE
-
-
+@query(oracle="""
+WITH base AS (
+  SELECT l_returnflag,
+         CAST(round(l_extendedprice * 100) AS BIGINT) AS price_cents,
+         CAST(round(l_quantity * 100) AS BIGINT) AS w,
+         l_orderkey, l_linenumber
+  FROM lineitem),
+cum AS (
+  SELECT l_returnflag, price_cents,
+         SUM(w) OVER (PARTITION BY l_returnflag
+                      ORDER BY price_cents, l_orderkey, l_linenumber
+                      ROWS UNBOUNDED PRECEDING) AS cumw,
+         SUM(w) OVER (PARTITION BY l_returnflag) AS totw
+  FROM base)
+SELECT l_returnflag,
+       CAST(MIN(CASE WHEN 2 * cumw >= totw THEN price_cents END) AS BIGINT)
+         AS weighted_median_cents,
+       CAST(MIN(totw) AS BIGINT) AS total_weight
+FROM cum GROUP BY l_returnflag
+""")
 def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-returnflag LOWER WEIGHTED MEDIAN of extended price
     weighted by quantity — the quantity-weighted "typical price" a
@@ -17640,31 +16134,14 @@ def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_WEIGHTED_MEDIAN_PRICE = """
-WITH base AS (
-  SELECT l_returnflag,
-         CAST(round(l_extendedprice * 100) AS BIGINT) AS price_cents,
-         CAST(round(l_quantity * 100) AS BIGINT) AS w,
-         l_orderkey, l_linenumber
-  FROM lineitem),
-cum AS (
-  SELECT l_returnflag, price_cents,
-         SUM(w) OVER (PARTITION BY l_returnflag
-                      ORDER BY price_cents, l_orderkey, l_linenumber
-                      ROWS UNBOUNDED PRECEDING) AS cumw,
-         SUM(w) OVER (PARTITION BY l_returnflag) AS totw
-  FROM base)
-SELECT l_returnflag,
-       CAST(MIN(CASE WHEN 2 * cumw >= totw THEN price_cents END) AS BIGINT)
-         AS weighted_median_cents,
-       CAST(MIN(totw) AS BIGINT) AS total_weight
-FROM cum GROUP BY l_returnflag
-"""
-
-QUERIES["weighted_median_price"] = q_weighted_median_price
-ORACLES["weighted_median_price"] = ORACLE_WEIGHTED_MEDIAN_PRICE
-
-
+@query(oracle="""
+WITH names AS (
+  SELECT DISTINCT p_name, string_split(p_name, ' ')[2] AS blk FROM part)
+SELECT a.blk, a.p_name AS name_a, b.p_name AS name_b,
+       CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist
+FROM names a JOIN names b ON a.blk = b.blk AND a.p_name < b.p_name
+WHERE levenshtein(a.p_name, b.p_name) <= 3
+""")
 def q_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance near-match pairs over the part-name DOMAIN with
     noun-token blocking — the typo-reconciliation primitive, and the
@@ -17693,19 +16170,34 @@ def q_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_LEVENSHTEIN_PAIRS = """
-WITH names AS (
-  SELECT DISTINCT p_name, string_split(p_name, ' ')[2] AS blk FROM part)
-SELECT a.blk, a.p_name AS name_a, b.p_name AS name_b,
-       CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist
-FROM names a JOIN names b ON a.blk = b.blk AND a.p_name < b.p_name
-WHERE levenshtein(a.p_name, b.p_name) <= 3
+def _fd_oracle_block(tbl: str, lhs: str, rhs: str) -> str:
+    return f"""
+SELECT '{tbl}.{lhs}->{rhs}' AS fd,
+       CAST(COUNT(*) AS BIGINT) AS lhs_groups,
+       CAST(SUM(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT)
+         AS violating_groups,
+       CAST(MAX(n_rhs) AS BIGINT) AS max_rhs_variants,
+       CAST(SUM(tot - mx) AS BIGINT) AS g3_rows
+FROM (
+  SELECT lhs, CAST(SUM(cnt) AS BIGINT) AS tot, CAST(MAX(cnt) AS BIGINT) AS mx,
+         CAST(COUNT(*) AS BIGINT) AS n_rhs
+  FROM (SELECT CAST({lhs} AS VARCHAR) AS lhs, CAST({rhs} AS VARCHAR) AS rhs,
+               CAST(COUNT(*) AS BIGINT) AS cnt
+        FROM {tbl} GROUP BY 1, 2)
+  GROUP BY lhs)
 """
 
-QUERIES["levenshtein_pairs"] = q_levenshtein_pairs
-ORACLES["levenshtein_pairs"] = ORACLE_LEVENSHTEIN_PAIRS
 
-
+@query(oracle=" UNION ALL ".join(
+    _fd_oracle_block(t, l, r)
+    for t, l, r in [
+        ("part", "p_brand", "p_type"),
+        ("part", "p_type", "p_size"),
+        ("part", "p_name", "p_brand"),
+        ("customer", "c_nationkey", "c_mktsegment"),
+        ("orders", "o_custkey", "o_orderpriority"),
+    ]
+))
 def q_functional_dependency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Functional-dependency mining over candidate column pairs — the
     constraint-discovery pass a data-quality pipeline runs before
@@ -17752,39 +16244,41 @@ def q_functional_dependency_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     return res
 
 
-def _fd_oracle_block(tbl: str, lhs: str, rhs: str) -> str:
+def _oracle_rake(stop_sql: str) -> str:
     return f"""
-SELECT '{tbl}.{lhs}->{rhs}' AS fd,
-       CAST(COUNT(*) AS BIGINT) AS lhs_groups,
-       CAST(SUM(CASE WHEN n_rhs > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS violating_groups,
-       CAST(MAX(n_rhs) AS BIGINT) AS max_rhs_variants,
-       CAST(SUM(tot - mx) AS BIGINT) AS g3_rows
-FROM (
-  SELECT lhs, CAST(SUM(cnt) AS BIGINT) AS tot, CAST(MAX(cnt) AS BIGINT) AS mx,
-         CAST(COUNT(*) AS BIGINT) AS n_rhs
-  FROM (SELECT CAST({lhs} AS VARCHAR) AS lhs, CAST({rhs} AS VARCHAR) AS rhs,
-               CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM {tbl} GROUP BY 1, 2)
-  GROUP BY lhs)
+WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+pos AS (
+  SELECT doc_id, i AS pos, t[i] AS tok
+  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t))) AS i) g),
+ph AS (
+  SELECT doc_id, tok,
+         CASE WHEN tok IN ({stop_sql}) THEN 1 ELSE 0 END AS is_stop,
+         SUM(CASE WHEN tok IN ({stop_sql}) THEN 1 ELSE 0 END)
+           OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING)
+           AS phrase_id
+  FROM pos),
+words AS (SELECT doc_id, phrase_id, tok FROM ph WHERE is_stop = 0),
+plens AS (
+  SELECT doc_id, phrase_id, CAST(COUNT(*) AS BIGINT) AS plen
+  FROM words GROUP BY doc_id, phrase_id),
+stats AS (
+  SELECT w.tok, CAST(COUNT(*) AS BIGINT) AS freq,
+         CAST(SUM(p.plen) AS BIGINT) AS degree
+  FROM words w JOIN plens p USING (doc_id, phrase_id)
+  GROUP BY w.tok)
+SELECT tok, freq, degree, degree * 1000000 // freq AS score_micro
+FROM stats ORDER BY score_micro DESC, tok ASC LIMIT 20
 """
 
 
-ORACLE_FUNCTIONAL_DEPENDENCY_AUDIT = " UNION ALL ".join(
-    _fd_oracle_block(t, l, r)
-    for t, l, r in [
-        ("part", "p_brand", "p_type"),
-        ("part", "p_type", "p_size"),
-        ("part", "p_name", "p_brand"),
-        ("customer", "c_nationkey", "c_mktsegment"),
-        ("orders", "o_custkey", "o_orderpriority"),
-    ]
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (  # noqa: E402
+    STOPWORDS as _RAKE_STOPWORDS,
 )
 
-QUERIES["functional_dependency_audit"] = q_functional_dependency_audit
-ORACLES["functional_dependency_audit"] = ORACLE_FUNCTIONAL_DEPENDENCY_AUDIT
 
-
+@query(oracle=_oracle_rake(
+    ", ".join(f"'{s}'" for s in _RAKE_STOPWORDS)
+))
 def q_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAKE keyword scoring (Rose et al.): tokens between stopword
     delimiters form candidate phrases; a word's score is
@@ -17836,45 +16330,12 @@ def q_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(20)
 
 
-def _oracle_rake(stop_sql: str) -> str:
-    return f"""
-WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-pos AS (
-  SELECT doc_id, i AS pos, t[i] AS tok
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t))) AS i) g),
-ph AS (
-  SELECT doc_id, tok,
-         CASE WHEN tok IN ({stop_sql}) THEN 1 ELSE 0 END AS is_stop,
-         SUM(CASE WHEN tok IN ({stop_sql}) THEN 1 ELSE 0 END)
-           OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING)
-           AS phrase_id
-  FROM pos),
-words AS (SELECT doc_id, phrase_id, tok FROM ph WHERE is_stop = 0),
-plens AS (
-  SELECT doc_id, phrase_id, CAST(COUNT(*) AS BIGINT) AS plen
-  FROM words GROUP BY doc_id, phrase_id),
-stats AS (
-  SELECT w.tok, CAST(COUNT(*) AS BIGINT) AS freq,
-         CAST(SUM(p.plen) AS BIGINT) AS degree
-  FROM words w JOIN plens p USING (doc_id, phrase_id)
-  GROUP BY w.tok)
-SELECT tok, freq, degree, degree * 1000000 // freq AS score_micro
-FROM stats ORDER BY score_micro DESC, tok ASC LIMIT 20
-"""
-
-
-from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (  # noqa: E402
-    STOPWORDS as _RAKE_STOPWORDS,
-)
-
-ORACLE_RAKE_KEYPHRASES = _oracle_rake(
-    ", ".join(f"'{s}'" for s in _RAKE_STOPWORDS)
-)
-
-QUERIES["rake_keyphrases"] = q_rake_keyphrases
-ORACLES["rake_keyphrases"] = ORACLE_RAKE_KEYPHRASES
-
-
+@query(oracle="""
+SELECT o_orderkey, o_totalprice, o_orderpriority
+FROM orders
+ORDER BY o_totalprice DESC, o_orderkey ASC
+LIMIT 20 OFFSET 40
+""")
 def q_limit_offset_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pagination page 3 (rows 41–60) of orders by total price — pins
     Spark SQL's LIMIT ... OFFSET support and its physical form: the
@@ -17897,17 +16358,35 @@ def q_limit_offset_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_LIMIT_OFFSET_PAGE = """
-SELECT o_orderkey, o_totalprice, o_orderpriority
-FROM orders
-ORDER BY o_totalprice DESC, o_orderkey ASC
-LIMIT 20 OFFSET 40
-"""
-
-QUERIES["limit_offset_page"] = q_limit_offset_page
-ORACLES["limit_offset_page"] = ORACLE_LIMIT_OFFSET_PAGE
-
-
+@query(oracle="""
+WITH toks AS (
+  SELECT CAST(substr(source, 4) AS INT) < 10 AS ha,
+         unnest(string_split(text, ' ')) AS tok
+  FROM documents),
+per_tok AS (
+  SELECT tok,
+         CAST(SUM(CASE WHEN ha THEN 1 ELSE 0 END) AS BIGINT) AS na,
+         CAST(SUM(CASE WHEN ha THEN 0 ELSE 1 END) AS BIGINT) AS nb
+  FROM toks GROUP BY tok),
+tot AS (
+  SELECT CAST(SUM(na) AS BIGINT) AS ta, CAST(SUM(nb) AS BIGINT) AS tb
+  FROM per_tok),
+terms AS (
+  SELECT ta, tb,
+         CAST(round((
+           CASE WHEN na = 0 THEN 0.0
+                ELSE 0.5 * (na / ta) * ln(2 * (na / ta) / (na / ta + nb / tb))
+           END
+           +
+           CASE WHEN nb = 0 THEN 0.0
+                ELSE 0.5 * (nb / tb) * ln(2 * (nb / tb) / (na / ta + nb / tb))
+           END) * 1000000) AS BIGINT) AS term_micro
+  FROM per_tok, tot)
+SELECT ta AS tokens_a, tb AS tokens_b,
+       CAST(COUNT(*) AS BIGINT) AS vocab_size,
+       CAST(SUM(term_micro) AS BIGINT) AS jsd_micronats
+FROM terms GROUP BY ta, tb
+""")
 def q_jsd_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jensen-Shannon divergence between the token distributions of
     two corpus halves (sources src0-9 vs src10-19) — the
@@ -17962,40 +16441,53 @@ def q_jsd_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_JSD_SOURCE_DIVERGENCE = """
-WITH toks AS (
-  SELECT CAST(substr(source, 4) AS INT) < 10 AS ha,
-         unnest(string_split(text, ' ')) AS tok
-  FROM documents),
-per_tok AS (
-  SELECT tok,
-         CAST(SUM(CASE WHEN ha THEN 1 ELSE 0 END) AS BIGINT) AS na,
-         CAST(SUM(CASE WHEN ha THEN 0 ELSE 1 END) AS BIGINT) AS nb
-  FROM toks GROUP BY tok),
-tot AS (
-  SELECT CAST(SUM(na) AS BIGINT) AS ta, CAST(SUM(nb) AS BIGINT) AS tb
-  FROM per_tok),
-terms AS (
-  SELECT ta, tb,
-         CAST(round((
-           CASE WHEN na = 0 THEN 0.0
-                ELSE 0.5 * (na / ta) * ln(2 * (na / ta) / (na / ta + nb / tb))
-           END
-           +
-           CASE WHEN nb = 0 THEN 0.0
-                ELSE 0.5 * (nb / tb) * ln(2 * (nb / tb) / (na / ta + nb / tb))
-           END) * 1000000) AS BIGINT) AS term_micro
-  FROM per_tok, tot)
-SELECT ta AS tokens_a, tb AS tokens_b,
-       CAST(COUNT(*) AS BIGINT) AS vocab_size,
-       CAST(SUM(term_micro) AS BIGINT) AS jsd_micronats
-FROM terms GROUP BY ta, tb
-"""
-
-QUERIES["jsd_source_divergence"] = q_jsd_source_divergence
-ORACLES["jsd_source_divergence"] = ORACLE_JSD_SOURCE_DIVERGENCE
-
-
+@query(oracle="""
+WITH base AS (
+  SELECT l_orderkey, l_linenumber,
+         l_returnflag AS c_flag, l_linestatus AS c_status,
+         CAST(round(l_quantity * 100) AS BIGINT) AS c_qty,
+         epoch_us(l_shipdate) AS c_ship
+  FROM lineitem),
+st AS (
+  SELECT
+    CASE WHEN lag(c_flag) OVER w IS NULL
+           OR c_flag <> lag(c_flag) OVER w THEN 1 ELSE 0 END AS st_flag,
+    CASE WHEN lag(c_status) OVER w IS NULL
+           OR c_status <> lag(c_status) OVER w THEN 1 ELSE 0 END AS st_status,
+    CASE WHEN lag(c_qty) OVER w IS NULL
+           OR c_qty <> lag(c_qty) OVER w THEN 1 ELSE 0 END AS st_qty,
+    CASE WHEN lag(c_ship) OVER w IS NULL
+           OR c_ship <> lag(c_ship) OVER w THEN 1 ELSE 0 END AS st_ship
+  FROM base
+  WINDOW w AS (PARTITION BY l_orderkey
+               ORDER BY l_linenumber, c_flag, c_status, c_qty, c_ship)),
+runs AS (
+  SELECT CAST(SUM(st_flag) AS BIGINT) AS runs_flag,
+         CAST(SUM(st_status) AS BIGINT) AS runs_status,
+         CAST(SUM(st_qty) AS BIGINT) AS runs_qty,
+         CAST(SUM(st_ship) AS BIGINT) AS runs_ship
+  FROM st),
+dist AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+         CAST(COUNT(DISTINCT c_flag) AS BIGINT) AS dist_flag,
+         CAST(COUNT(DISTINCT c_status) AS BIGINT) AS dist_status,
+         CAST(COUNT(DISTINCT c_qty) AS BIGINT) AS dist_qty,
+         CAST(COUNT(DISTINCT c_ship) AS BIGINT) AS dist_ship
+  FROM base),
+stacked AS (
+  SELECT 'l_returnflag' AS col_name, n_rows, runs_flag AS n_runs,
+         dist_flag AS n_distinct FROM runs, dist
+  UNION ALL
+  SELECT 'l_linestatus', n_rows, runs_status, dist_status FROM runs, dist
+  UNION ALL
+  SELECT 'l_quantity', n_rows, runs_qty, dist_qty FROM runs, dist
+  UNION ALL
+  SELECT 'l_shipdate', n_rows, runs_ship, dist_ship FROM runs, dist)
+SELECT col_name, n_rows, n_runs, n_distinct,
+       (n_runs * 1000000) // n_rows AS rle_ratio_micro,
+       (n_distinct * 1000000) // n_rows AS dict_ratio_micro
+FROM stacked
+""")
 def q_rle_compression_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Storage-planning audit: estimated run-length-encoding runs and
     dictionary sizes per lineitem column under the natural
@@ -18065,58 +16557,43 @@ def q_rle_compression_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_RLE_COMPRESSION_ESTIMATE = """
-WITH base AS (
-  SELECT l_orderkey, l_linenumber,
-         l_returnflag AS c_flag, l_linestatus AS c_status,
-         CAST(round(l_quantity * 100) AS BIGINT) AS c_qty,
-         epoch_us(l_shipdate) AS c_ship
-  FROM lineitem),
+@query(oracle="""
+WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+pos AS (
+  SELECT doc_id, i AS pos, t[i] AS tok
+  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t))) AS i) g),
+marked AS (
+  SELECT doc_id, pos, tok,
+         CASE WHEN ('0x' || substr(md5(tok), 1, 4))::BIGINT % 8 = 0
+              THEN 1 ELSE 0 END AS b
+  FROM pos),
+chunked AS (
+  SELECT doc_id, pos, tok,
+         CAST(COALESCE(SUM(b) OVER (PARTITION BY doc_id ORDER BY pos
+                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+           AS chunk_id
+  FROM marked),
+chunks AS (
+  SELECT doc_id, chunk_id,
+         string_agg(tok, ' ' ORDER BY pos) AS chunk_text
+  FROM chunked GROUP BY doc_id, chunk_id),
+hashed AS (
+  SELECT md5(chunk_text) AS h, CAST(length(chunk_text) AS BIGINT) AS bytes
+  FROM chunks),
+stored AS (SELECT h, MIN(bytes) AS sbytes FROM hashed GROUP BY h),
+tot AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS total_chunks,
+         CAST(SUM(bytes) AS BIGINT) AS logical_bytes
+  FROM hashed),
 st AS (
-  SELECT
-    CASE WHEN lag(c_flag) OVER w IS NULL
-           OR c_flag <> lag(c_flag) OVER w THEN 1 ELSE 0 END AS st_flag,
-    CASE WHEN lag(c_status) OVER w IS NULL
-           OR c_status <> lag(c_status) OVER w THEN 1 ELSE 0 END AS st_status,
-    CASE WHEN lag(c_qty) OVER w IS NULL
-           OR c_qty <> lag(c_qty) OVER w THEN 1 ELSE 0 END AS st_qty,
-    CASE WHEN lag(c_ship) OVER w IS NULL
-           OR c_ship <> lag(c_ship) OVER w THEN 1 ELSE 0 END AS st_ship
-  FROM base
-  WINDOW w AS (PARTITION BY l_orderkey
-               ORDER BY l_linenumber, c_flag, c_status, c_qty, c_ship)),
-runs AS (
-  SELECT CAST(SUM(st_flag) AS BIGINT) AS runs_flag,
-         CAST(SUM(st_status) AS BIGINT) AS runs_status,
-         CAST(SUM(st_qty) AS BIGINT) AS runs_qty,
-         CAST(SUM(st_ship) AS BIGINT) AS runs_ship
-  FROM st),
-dist AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-         CAST(COUNT(DISTINCT c_flag) AS BIGINT) AS dist_flag,
-         CAST(COUNT(DISTINCT c_status) AS BIGINT) AS dist_status,
-         CAST(COUNT(DISTINCT c_qty) AS BIGINT) AS dist_qty,
-         CAST(COUNT(DISTINCT c_ship) AS BIGINT) AS dist_ship
-  FROM base),
-stacked AS (
-  SELECT 'l_returnflag' AS col_name, n_rows, runs_flag AS n_runs,
-         dist_flag AS n_distinct FROM runs, dist
-  UNION ALL
-  SELECT 'l_linestatus', n_rows, runs_status, dist_status FROM runs, dist
-  UNION ALL
-  SELECT 'l_quantity', n_rows, runs_qty, dist_qty FROM runs, dist
-  UNION ALL
-  SELECT 'l_shipdate', n_rows, runs_ship, dist_ship FROM runs, dist)
-SELECT col_name, n_rows, n_runs, n_distinct,
-       (n_runs * 1000000) // n_rows AS rle_ratio_micro,
-       (n_distinct * 1000000) // n_rows AS dict_ratio_micro
-FROM stacked
-"""
-
-QUERIES["rle_compression_estimate"] = q_rle_compression_estimate
-ORACLES["rle_compression_estimate"] = ORACLE_RLE_COMPRESSION_ESTIMATE
-
-
+  SELECT CAST(COUNT(*) AS BIGINT) AS distinct_chunks,
+         CAST(SUM(sbytes) AS BIGINT) AS stored_bytes
+  FROM stored)
+SELECT total_chunks, distinct_chunks, logical_bytes, stored_bytes,
+       ((logical_bytes - stored_bytes) * 1000000) // logical_bytes
+         AS savings_micro
+FROM tot, st
+""")
 def q_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking storage dedup: chunk boundaries fall
     AFTER tokens whose md5 lands in a fixed 1-in-8 bucket (the
@@ -18180,48 +16657,24 @@ def q_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CDC_CHUNK_DEDUP = """
-WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-pos AS (
-  SELECT doc_id, i AS pos, t[i] AS tok
-  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t))) AS i) g),
-marked AS (
-  SELECT doc_id, pos, tok,
-         CASE WHEN ('0x' || substr(md5(tok), 1, 4))::BIGINT % 8 = 0
-              THEN 1 ELSE 0 END AS b
-  FROM pos),
-chunked AS (
-  SELECT doc_id, pos, tok,
-         CAST(COALESCE(SUM(b) OVER (PARTITION BY doc_id ORDER BY pos
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-           AS chunk_id
-  FROM marked),
-chunks AS (
-  SELECT doc_id, chunk_id,
-         string_agg(tok, ' ' ORDER BY pos) AS chunk_text
-  FROM chunked GROUP BY doc_id, chunk_id),
-hashed AS (
-  SELECT md5(chunk_text) AS h, CAST(length(chunk_text) AS BIGINT) AS bytes
-  FROM chunks),
-stored AS (SELECT h, MIN(bytes) AS sbytes FROM hashed GROUP BY h),
-tot AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS total_chunks,
-         CAST(SUM(bytes) AS BIGINT) AS logical_bytes
-  FROM hashed),
-st AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS distinct_chunks,
-         CAST(SUM(sbytes) AS BIGINT) AS stored_bytes
-  FROM stored)
-SELECT total_chunks, distinct_chunks, logical_bytes, stored_bytes,
-       ((logical_bytes - stored_bytes) * 1000000) // logical_bytes
-         AS savings_micro
-FROM tot, st
-"""
-
-QUERIES["cdc_chunk_dedup"] = q_cdc_chunk_dedup
-ORACLES["cdc_chunk_dedup"] = ORACLE_CDC_CHUNK_DEDUP
-
-
+@query(oracle="""
+WITH w AS (
+  SELECT (epoch_us(max(ts)) // 1000) * 1000 - 600000000 AS v FROM events),
+q AS (
+  SELECT event_type,
+         (epoch_us(ts) // 900000000) * 900000000 AS qs,
+         (epoch_us(ts) // 3600000000) * 3600000000 AS hs
+  FROM events),
+qagg AS (
+  SELECT event_type, hs, qs, CAST(COUNT(*) AS BIGINT) AS qn
+  FROM q GROUP BY event_type, hs, qs)
+SELECT hs AS window_start_us, event_type,
+       CAST(SUM(qn) AS BIGINT) AS n_events,
+       CAST(COUNT(*) AS BIGINT) AS n_quarters
+FROM qagg, w
+GROUP BY hs, event_type, w.v
+HAVING hs + 3600000000 <= w.v
+""")
 def q_stream_two_level_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chained streaming aggregation (streaming.windowed.
     two_level_windowed_counts_once): 15-min windows roll up to hourly
@@ -18247,29 +16700,23 @@ def q_stream_two_level_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_TWO_LEVEL_HOURLY = """
-WITH w AS (
-  SELECT (epoch_us(max(ts)) // 1000) * 1000 - 600000000 AS v FROM events),
-q AS (
-  SELECT event_type,
-         (epoch_us(ts) // 900000000) * 900000000 AS qs,
-         (epoch_us(ts) // 3600000000) * 3600000000 AS hs
+@query(oracle="""
+WITH base AS (
+  SELECT event_type, event_id, CAST(round(value * 100) AS BIGINT) AS v
   FROM events),
-qagg AS (
-  SELECT event_type, hs, qs, CAST(COUNT(*) AS BIGINT) AS qn
-  FROM q GROUP BY event_type, hs, qs)
-SELECT hs AS window_start_us, event_type,
-       CAST(SUM(qn) AS BIGINT) AS n_events,
-       CAST(COUNT(*) AS BIGINT) AS n_quarters
-FROM qagg, w
-GROUP BY hs, event_type, w.v
-HAVING hs + 3600000000 <= w.v
-"""
-
-QUERIES["stream_two_level_hourly"] = q_stream_two_level_hourly
-ORACLES["stream_two_level_hourly"] = ORACLE_STREAM_TWO_LEVEL_HOURLY
-
-
+q AS (
+  SELECT event_type, CAST(quantile_disc(v, 0.9) AS BIGINT) AS q90,
+         CAST(COUNT(*) AS BIGINT) AS n
+  FROM base GROUP BY event_type)
+SELECT b.event_type, q.n, q.q90 AS q90_cents,
+       CAST(SUM(CASE WHEN b.v >= q.q90 THEN 9 * (b.v - q.q90)
+                     ELSE q.q90 - b.v END) AS BIGINT) AS pinball10_sum,
+       CAST(SUM(CASE WHEN b.v >= q.q90 THEN 9 * (b.v - q.q90)
+                     ELSE q.q90 - b.v END) AS BIGINT) * 100000 // q.n
+         AS avg_pinball_micro
+FROM base b JOIN q ON b.event_type = q.event_type
+GROUP BY b.event_type, q.n, q.q90
+""")
 def q_pinball_loss_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile-forecast evaluation: pinball (tau-quantile) loss of
     the per-type discrete p90 predictor over event values — the
@@ -18321,28 +16768,23 @@ def q_pinball_loss_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_PINBALL_LOSS_EVAL = """
+@query(oracle="""
 WITH base AS (
-  SELECT event_type, event_id, CAST(round(value * 100) AS BIGINT) AS v
+  SELECT (('0x' || substr(md5('auc:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
+            % 500) * 2000 AS p_micro,
+         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS y
   FROM events),
-q AS (
-  SELECT event_type, CAST(quantile_disc(v, 0.9) AS BIGINT) AS q90,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM base GROUP BY event_type)
-SELECT b.event_type, q.n, q.q90 AS q90_cents,
-       CAST(SUM(CASE WHEN b.v >= q.q90 THEN 9 * (b.v - q.q90)
-                     ELSE q.q90 - b.v END) AS BIGINT) AS pinball10_sum,
-       CAST(SUM(CASE WHEN b.v >= q.q90 THEN 9 * (b.v - q.q90)
-                     ELSE q.q90 - b.v END) AS BIGINT) * 100000 // q.n
-         AS avg_pinball_micro
-FROM base b JOIN q ON b.event_type = q.event_type
-GROUP BY b.event_type, q.n, q.q90
-"""
-
-QUERIES["pinball_loss_eval"] = q_pinball_loss_eval
-ORACLES["pinball_loss_eval"] = ORACLE_PINBALL_LOSS_EVAL
-
-
+agg AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(y) AS BIGINT) AS n_pos,
+         SUM(CAST(p_micro - y * 1000000 AS HUGEINT)
+             * CAST(p_micro - y * 1000000 AS HUGEINT)) AS se
+  FROM base)
+SELECT n, n_pos,
+       round(CAST(se AS DOUBLE) / (CAST(n AS DOUBLE) * 1000000000000.0), 6)
+         AS brier
+FROM agg
+""")
 def q_brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brier score of the md5 click scorer (same deterministic scorer
     as `calibration_ece`/`auc_rank_eval`, completing the
@@ -18377,28 +16819,24 @@ def q_brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_BRIER_SCORE = """
-WITH base AS (
-  SELECT (('0x' || substr(md5('auc:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
-            % 500) * 2000 AS p_micro,
-         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS y
-  FROM events),
-agg AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(y) AS BIGINT) AS n_pos,
-         SUM(CAST(p_micro - y * 1000000 AS HUGEINT)
-             * CAST(p_micro - y * 1000000 AS HUGEINT)) AS se
-  FROM base)
-SELECT n, n_pos,
-       round(CAST(se AS DOUBLE) / (CAST(n AS DOUBLE) * 1000000000000.0), 6)
-         AS brier
-FROM agg
-"""
-
-QUERIES["brier_score"] = q_brier_score
-ORACLES["brier_score"] = ORACLE_BRIER_SCORE
-
-
+@query(oracle="""
+WITH clean AS (SELECT DISTINCT p_name AS clean FROM part),
+dirty AS (SELECT DISTINCT translate(clean, 'aeo', '430') AS dirty FROM clean),
+scored AS (
+  SELECT d.dirty, c.clean,
+         CAST(levenshtein(d.dirty, c.clean) AS BIGINT) AS dist
+  FROM dirty d CROSS JOIN clean c),
+best_d AS (
+  SELECT dirty, clean, dist
+  FROM scored
+  QUALIFY row_number() OVER (PARTITION BY dirty ORDER BY dist, clean) = 1),
+best_c AS (
+  SELECT clean, dirty
+  FROM scored
+  QUALIFY row_number() OVER (PARTITION BY clean ORDER BY dist, dirty) = 1)
+SELECT d.dirty, d.clean, d.dist
+FROM best_d d JOIN best_c c ON d.dirty = c.dirty AND d.clean = c.clean
+""")
 def q_reciprocal_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual-nearest record linkage: a deterministic leet-corrupted
     copy of the part-name domain (translate 'aeo'→'430' — the same
@@ -18432,29 +16870,36 @@ def q_reciprocal_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_RECIPROCAL_BEST_MATCH = """
-WITH clean AS (SELECT DISTINCT p_name AS clean FROM part),
-dirty AS (SELECT DISTINCT translate(clean, 'aeo', '430') AS dirty FROM clean),
-scored AS (
-  SELECT d.dirty, c.clean,
-         CAST(levenshtein(d.dirty, c.clean) AS BIGINT) AS dist
-  FROM dirty d CROSS JOIN clean c),
-best_d AS (
-  SELECT dirty, clean, dist
-  FROM scored
-  QUALIFY row_number() OVER (PARTITION BY dirty ORDER BY dist, clean) = 1),
-best_c AS (
-  SELECT clean, dirty
-  FROM scored
-  QUALIFY row_number() OVER (PARTITION BY clean ORDER BY dist, dirty) = 1)
-SELECT d.dirty, d.clean, d.dist
-FROM best_d d JOIN best_c c ON d.dirty = c.dirty AND d.clean = c.clean
-"""
-
-QUERIES["reciprocal_best_match"] = q_reciprocal_best_match
-ORACLES["reciprocal_best_match"] = ORACLE_RECIPROCAL_BEST_MATCH
-
-
+@query(oracle="""
+WITH base AS (
+  SELECT user_id, event_id, event_type,
+         CAST(round(value * 100) AS BIGINT) AS v,
+         epoch_us(ts) AS us
+  FROM events),
+lv AS (
+  SELECT user_id, v, us
+  FROM base WHERE event_type <> 'error'
+  QUALIFY row_number() OVER (PARTITION BY user_id
+                             ORDER BY us DESC, event_id DESC) = 1),
+lt AS (
+  SELECT user_id, event_type
+  FROM base
+  QUALIFY row_number() OVER (PARTITION BY user_id
+                             ORDER BY us DESC, event_id DESC) = 1),
+cnt AS (
+  SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
+         CAST(SUM(CASE WHEN event_type <> 'error' THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_nonerror
+  FROM base GROUP BY user_id)
+SELECT c.user_id,
+       lv.v AS latest_value_cents,
+       lv.us AS value_ts_us,
+       lt.event_type AS latest_type,
+       c.n_events, c.n_nonerror
+FROM cnt c
+LEFT JOIN lv ON c.user_id = lv.user_id
+JOIN lt ON c.user_id = lt.user_id
+""")
 def q_golden_record_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FIELD-LEVEL survivorship merge (the golden-record builder): per
     user the latest NON-ERROR value and the latest event type come
@@ -18488,41 +16933,48 @@ def q_golden_record_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_GOLDEN_RECORD_SURVIVORSHIP = """
-WITH base AS (
-  SELECT user_id, event_id, event_type,
-         CAST(round(value * 100) AS BIGINT) AS v,
-         epoch_us(ts) AS us
-  FROM events),
-lv AS (
-  SELECT user_id, v, us
-  FROM base WHERE event_type <> 'error'
-  QUALIFY row_number() OVER (PARTITION BY user_id
-                             ORDER BY us DESC, event_id DESC) = 1),
-lt AS (
-  SELECT user_id, event_type
-  FROM base
-  QUALIFY row_number() OVER (PARTITION BY user_id
-                             ORDER BY us DESC, event_id DESC) = 1),
-cnt AS (
-  SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-         CAST(SUM(CASE WHEN event_type <> 'error' THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_nonerror
-  FROM base GROUP BY user_id)
-SELECT c.user_id,
-       lv.v AS latest_value_cents,
-       lv.us AS value_ts_us,
-       lt.event_type AS latest_type,
-       c.n_events, c.n_nonerror
-FROM cnt c
-LEFT JOIN lv ON c.user_id = lv.user_id
-JOIN lt ON c.user_id = lt.user_id
-"""
-
-QUERIES["golden_record_survivorship"] = q_golden_record_survivorship
-ORACLES["golden_record_survivorship"] = ORACLE_GOLDEN_RECORD_SURVIVORSHIP
-
-
+@query(oracle="""
+WITH e AS (
+  SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
+span AS (SELECT MAX(us) AS mx FROM e),
+per_user AS (
+  SELECT user_id, MIN(us) AS first_us,
+         MIN(CASE WHEN event_type = 'error' THEN us END) AS err_us
+  FROM e GROUP BY user_id),
+u AS (
+  SELECT user_id,
+         CASE WHEN err_us IS NOT NULL THEN 1 ELSE 0 END AS death,
+         (COALESCE(err_us, mx) - first_us) // 3600000000 AS t_hour
+  FROM per_user, span),
+grid AS (
+  SELECT t_hour, CAST(SUM(death) AS BIGINT) AS d,
+         CAST(SUM(1 - death) AS BIGINT) AS c
+  FROM u GROUP BY t_hour),
+risk AS (
+  SELECT *, CAST(SUM(d + c) OVER (ORDER BY t_hour DESC
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+            AS n_risk
+  FROM grid),
+terms AS (
+  SELECT *, CASE WHEN d = 0 OR d = n_risk THEN CAST(0 AS BIGINT)
+                 ELSE CAST(round(ln(1 - d / n_risk) * 1000000) AS BIGINT)
+            END AS term_micro,
+         CASE WHEN d = n_risk THEN 1 ELSE 0 END AS zerof
+  FROM risk),
+cum AS (
+  SELECT *, CAST(SUM(zerof) OVER (ORDER BY t_hour
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+            AS cumzero,
+         CAST(SUM(term_micro) OVER (ORDER BY t_hour
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+            AS cumterm
+  FROM terms)
+SELECT t_hour, n_risk, d, c,
+       (d * 1000000) // n_risk AS hazard_micro,
+       CASE WHEN cumzero = 0 THEN cumterm END AS log_surv_micro,
+       cumzero > 0 AS surv_zero
+FROM cum
+""")
 def q_kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier survival estimate for time-to-first-error per user
     (right-censored at corpus end — the churn/TTF analysis a
@@ -18597,53 +17049,38 @@ def q_kaplan_meier_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_KAPLAN_MEIER_CHURN = """
-WITH e AS (
-  SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-span AS (SELECT MAX(us) AS mx FROM e),
-per_user AS (
-  SELECT user_id, MIN(us) AS first_us,
-         MIN(CASE WHEN event_type = 'error' THEN us END) AS err_us
-  FROM e GROUP BY user_id),
-u AS (
-  SELECT user_id,
-         CASE WHEN err_us IS NOT NULL THEN 1 ELSE 0 END AS death,
-         (COALESCE(err_us, mx) - first_us) // 3600000000 AS t_hour
-  FROM per_user, span),
-grid AS (
-  SELECT t_hour, CAST(SUM(death) AS BIGINT) AS d,
-         CAST(SUM(1 - death) AS BIGINT) AS c
-  FROM u GROUP BY t_hour),
-risk AS (
-  SELECT *, CAST(SUM(d + c) OVER (ORDER BY t_hour DESC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-            AS n_risk
-  FROM grid),
-terms AS (
-  SELECT *, CASE WHEN d = 0 OR d = n_risk THEN CAST(0 AS BIGINT)
-                 ELSE CAST(round(ln(1 - d / n_risk) * 1000000) AS BIGINT)
-            END AS term_micro,
-         CASE WHEN d = n_risk THEN 1 ELSE 0 END AS zerof
-  FROM risk),
-cum AS (
-  SELECT *, CAST(SUM(zerof) OVER (ORDER BY t_hour
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-            AS cumzero,
-         CAST(SUM(term_micro) OVER (ORDER BY t_hour
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-            AS cumterm
-  FROM terms)
-SELECT t_hour, n_risk, d, c,
-       (d * 1000000) // n_risk AS hazard_micro,
-       CASE WHEN cumzero = 0 THEN cumterm END AS log_surv_micro,
-       cumzero > 0 AS surv_zero
-FROM cum
-"""
-
-QUERIES["kaplan_meier_churn"] = q_kaplan_meier_churn
-ORACLES["kaplan_meier_churn"] = ORACLE_KAPLAN_MEIER_CHURN
-
-
+@query(oracle="""
+WITH v AS (
+  SELECT user_id, event_id,
+         CAST(round(value * 100) AS BIGINT) AS cents,
+         epoch_us(ts) AS valid_us,
+         epoch_us(ts)
+           + (('0x' || substr(md5('tx:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
+              % 60) * 60000000 AS tx_us
+  FROM events WHERE event_type = 'purchase'),
+bounds AS (
+  SELECT MIN(valid_us) + 20 * 86400000000 AS v_time,
+         MIN(valid_us) + 20 * 86400000000 + 600000000 AS t_time,
+         MAX(tx_us) AS mx
+  FROM v),
+kt AS (
+  SELECT user_id, cents
+  FROM v, bounds
+  WHERE valid_us <= v_time AND tx_us <= t_time
+  QUALIFY row_number() OVER (PARTITION BY user_id
+                             ORDER BY valid_us DESC, event_id DESC) = 1),
+kn AS (
+  SELECT user_id, cents
+  FROM v, bounds
+  WHERE valid_us <= v_time AND tx_us <= mx
+  QUALIFY row_number() OVER (PARTITION BY user_id
+                             ORDER BY valid_us DESC, event_id DESC) = 1)
+SELECT kn.user_id,
+       kt.cents AS value_known_at_t,
+       kn.cents AS value_known_now,
+       (kt.cents IS NULL OR kt.cents <> kn.cents) AS revised
+FROM kn LEFT JOIN kt ON kn.user_id = kt.user_id
+""")
 def q_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BITEMPORAL as-of lookup: purchase events are value versions
     with VALID time = event time and TRANSACTION time = event time +
@@ -18713,43 +17150,30 @@ def q_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_BITEMPORAL_ASOF = """
-WITH v AS (
-  SELECT user_id, event_id,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         epoch_us(ts) AS valid_us,
-         epoch_us(ts)
-           + (('0x' || substr(md5('tx:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
-              % 60) * 60000000 AS tx_us
-  FROM events WHERE event_type = 'purchase'),
-bounds AS (
-  SELECT MIN(valid_us) + 20 * 86400000000 AS v_time,
-         MIN(valid_us) + 20 * 86400000000 + 600000000 AS t_time,
-         MAX(tx_us) AS mx
-  FROM v),
-kt AS (
-  SELECT user_id, cents
-  FROM v, bounds
-  WHERE valid_us <= v_time AND tx_us <= t_time
-  QUALIFY row_number() OVER (PARTITION BY user_id
-                             ORDER BY valid_us DESC, event_id DESC) = 1),
-kn AS (
-  SELECT user_id, cents
-  FROM v, bounds
-  WHERE valid_us <= v_time AND tx_us <= mx
-  QUALIFY row_number() OVER (PARTITION BY user_id
-                             ORDER BY valid_us DESC, event_id DESC) = 1)
-SELECT kn.user_id,
-       kt.cents AS value_known_at_t,
-       kn.cents AS value_known_now,
-       (kt.cents IS NULL OR kt.cents <> kn.cents) AS revised
-FROM kn LEFT JOIN kt ON kn.user_id = kt.user_id
-"""
-
-QUERIES["bitemporal_asof"] = q_bitemporal_asof
-ORACLES["bitemporal_asof"] = ORACLE_BITEMPORAL_ASOF
-
-
+@query(oracle="""
+WITH base AS (
+  SELECT l_linestatus,
+         CAST(round(l_extendedprice * 100) AS BIGINT) AS price_cents,
+         CAST(round(l_quantity * 100) AS BIGINT) AS w,
+         l_orderkey, l_linenumber
+  FROM lineitem),
+cum AS (
+  SELECT l_linestatus, price_cents,
+         SUM(w) OVER (PARTITION BY l_linestatus
+                      ORDER BY price_cents, l_orderkey, l_linenumber
+                      ROWS UNBOUNDED PRECEDING) AS cumw,
+         SUM(w) OVER (PARTITION BY l_linestatus) AS totw
+  FROM base)
+SELECT l_linestatus,
+       CAST(MIN(CASE WHEN 4 * cumw >= totw THEN price_cents END) AS BIGINT)
+         AS p25_cents,
+       CAST(MIN(CASE WHEN 2 * cumw >= totw THEN price_cents END) AS BIGINT)
+         AS p50_cents,
+       CAST(MIN(CASE WHEN 4 * cumw >= 3 * totw THEN price_cents END) AS BIGINT)
+         AS p75_cents,
+       CAST(MIN(totw) AS BIGINT) AS total_weight
+FROM cum GROUP BY l_linestatus
+""")
 def q_weighted_price_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantity-weighted price band (p25/p50/p75) per linestatus via
     `operators.windows.grouped_weighted_quantiles` — all three
@@ -18788,35 +17212,6 @@ def q_weighted_price_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_WEIGHTED_PRICE_BAND = """
-WITH base AS (
-  SELECT l_linestatus,
-         CAST(round(l_extendedprice * 100) AS BIGINT) AS price_cents,
-         CAST(round(l_quantity * 100) AS BIGINT) AS w,
-         l_orderkey, l_linenumber
-  FROM lineitem),
-cum AS (
-  SELECT l_linestatus, price_cents,
-         SUM(w) OVER (PARTITION BY l_linestatus
-                      ORDER BY price_cents, l_orderkey, l_linenumber
-                      ROWS UNBOUNDED PRECEDING) AS cumw,
-         SUM(w) OVER (PARTITION BY l_linestatus) AS totw
-  FROM base)
-SELECT l_linestatus,
-       CAST(MIN(CASE WHEN 4 * cumw >= totw THEN price_cents END) AS BIGINT)
-         AS p25_cents,
-       CAST(MIN(CASE WHEN 2 * cumw >= totw THEN price_cents END) AS BIGINT)
-         AS p50_cents,
-       CAST(MIN(CASE WHEN 4 * cumw >= 3 * totw THEN price_cents END) AS BIGINT)
-         AS p75_cents,
-       CAST(MIN(totw) AS BIGINT) AS total_weight
-FROM cum GROUP BY l_linestatus
-"""
-
-QUERIES["weighted_price_band"] = q_weighted_price_band
-ORACLES["weighted_price_band"] = ORACLE_WEIGHTED_PRICE_BAND
-
-
 def _dp_mean_noise_cents(seed: str = "dpmean:v1", cap_cents: int = 20000) -> int:
     """Frozen Laplace draw for the clipped-mean release: u from the
     seed's md5 (48-bit hex → (0,1)), inverse-CDF Laplace with scale
@@ -18835,6 +17230,30 @@ def _dp_mean_noise_cents(seed: str = "dpmean:v1", cap_cents: int = 20000) -> int
     return int(round(noise))
 
 
+def _oracle_dp_clipped_mean() -> str:
+    noise = _dp_mean_noise_cents(cap_cents=20000)
+    return f"""
+WITH v AS (
+  SELECT user_id, event_id, epoch_us(ts) AS us,
+         least(greatest(CAST(round(value * 100) AS BIGINT), 0), 20000)
+           AS clipped_cents
+  FROM events WHERE event_type = 'purchase'),
+capped AS (
+  SELECT * FROM v
+  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY us, event_id) <= 8),
+agg AS (
+  SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
+         CAST(COUNT(*) AS BIGINT) AS n_contrib,
+         CAST(SUM(clipped_cents) AS BIGINT) AS clipped_sum
+  FROM capped)
+SELECT n_users, n_contrib, clipped_sum,
+       CAST({noise} AS BIGINT) AS noise_cents,
+       ((clipped_sum + {noise}) * 1000000) // n_contrib AS noisy_mean_micro
+FROM agg
+"""
+
+
+@query(oracle=_oracle_dp_clipped_mean())
 def q_dp_clipped_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Differential-privacy-style CLIPPED MEAN of purchase value: the
     two sensitivity bounds a DP release needs are both enforced
@@ -18880,33 +17299,32 @@ def q_dp_clipped_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_dp_clipped_mean() -> str:
-    noise = _dp_mean_noise_cents(cap_cents=20000)
-    return f"""
-WITH v AS (
-  SELECT user_id, event_id, epoch_us(ts) AS us,
-         least(greatest(CAST(round(value * 100) AS BIGINT), 0), 20000)
-           AS clipped_cents
-  FROM events WHERE event_type = 'purchase'),
-capped AS (
-  SELECT * FROM v
-  QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY us, event_id) <= 8),
+@query(oracle="""
+WITH edges AS (
+  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
+  FROM lineitem x JOIN lineitem y
+    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
+deg AS (
+  SELECT v, CAST(COUNT(*) AS BIGINT) AS d
+  FROM (SELECT a AS v FROM edges UNION ALL SELECT b FROM edges)
+  GROUP BY v),
+sym AS (
+  SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges),
+j AS (
+  SELECT da.d AS da, db.d AS db
+  FROM sym JOIN deg da ON sym.a = da.v JOIN deg db ON sym.b = db.v),
 agg AS (
-  SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-         CAST(COUNT(*) AS BIGINT) AS n_contrib,
-         CAST(SUM(clipped_cents) AS BIGINT) AS clipped_sum
-  FROM capped)
-SELECT n_users, n_contrib, clipped_sum,
-       CAST({noise} AS BIGINT) AS noise_cents,
-       ((clipped_sum + {noise}) * 1000000) // n_contrib AS noisy_mean_micro
+  SELECT CAST(COUNT(*) AS BIGINT) AS m2,
+         CAST(SUM(da) AS BIGINT) AS sx,
+         SUM(CAST(da AS HUGEINT) * db) AS sxy,
+         SUM(CAST(da AS HUGEINT) * da) AS sxx
+  FROM j)
+SELECT m2 // 2 AS n_edges,
+       round(CAST(m2 * sxy - CAST(sx AS HUGEINT) * sx AS DOUBLE)
+             / CAST(m2 * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE), 6)
+         AS assortativity
 FROM agg
-"""
-
-
-QUERIES["dp_clipped_mean"] = q_dp_clipped_mean
-ORACLES["dp_clipped_mean"] = _oracle_dp_clipped_mean()
-
-
+""")
 def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the part co-purchase graph — the
     Newman coefficient (Pearson correlation of endpoint degrees over
@@ -18969,37 +17387,39 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DEGREE_ASSORTATIVITY = """
-WITH edges AS (
-  SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-  FROM lineitem x JOIN lineitem y
-    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
-deg AS (
-  SELECT v, CAST(COUNT(*) AS BIGINT) AS d
-  FROM (SELECT a AS v FROM edges UNION ALL SELECT b FROM edges)
-  GROUP BY v),
-sym AS (
-  SELECT a, b FROM edges UNION ALL SELECT b, a FROM edges),
-j AS (
-  SELECT da.d AS da, db.d AS db
-  FROM sym JOIN deg da ON sym.a = da.v JOIN deg db ON sym.b = db.v),
+@query(oracle="""
+WITH e AS (
+  SELECT user_id, event_type, CAST(round(value * 100) AS BIGINT) AS r
+  FROM events),
+pol AS (
+  SELECT *, (['click', 'error', 'purchase', 'signup', 'view'])[
+           CAST(('0x' || substr(md5('pol:' || CAST(user_id AS VARCHAR)), 1, 6))::BIGINT
+                % 5 AS INT) + 1] AS p
+  FROM e),
+counts AS (
+  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_t FROM e GROUP BY event_type),
+tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM e),
+matched AS (
+  SELECT p.event_type, CAST(SUM(r) AS BIGINT) AS r_t,
+         CAST(COUNT(*) AS BIGINT) AS m_t
+  FROM pol p WHERE p.event_type = p.p GROUP BY p.event_type),
+terms AS (
+  SELECT m.event_type,
+         (CAST(m.r_t AS HUGEINT) * t.n) // c.n_t AS w_reward,
+         (CAST(m.m_t AS HUGEINT) * t.n) // c.n_t AS w_mass,
+         t.n
+  FROM matched m JOIN counts c ON m.event_type = c.event_type, tot t),
 agg AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS m2,
-         CAST(SUM(da) AS BIGINT) AS sx,
-         SUM(CAST(da AS HUGEINT) * db) AS sxy,
-         SUM(CAST(da AS HUGEINT) * da) AS sxx
-  FROM j)
-SELECT m2 // 2 AS n_edges,
-       round(CAST(m2 * sxy - CAST(sx AS HUGEINT) * sx AS DOUBLE)
-             / CAST(m2 * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE), 6)
-         AS assortativity
+  SELECT n, SUM(w_reward) AS sw_reward, SUM(w_mass) AS sw_mass,
+         CAST(COUNT(*) AS BIGINT) AS n_types_matched
+  FROM terms GROUP BY n)
+SELECT n, n_types_matched,
+       CAST(sw_reward // n AS BIGINT) AS ips_value_cents,
+       CASE WHEN sw_mass = 0 THEN NULL
+            ELSE CAST((sw_reward * 1000000) // sw_mass AS BIGINT)
+       END AS snips_value_micro
 FROM agg
-"""
-
-QUERIES["degree_assortativity"] = q_degree_assortativity
-ORACLES["degree_assortativity"] = ORACLE_DEGREE_ASSORTATIVITY
-
-
+""")
 def q_ips_policy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Off-policy evaluation by inverse-propensity scoring: estimate
     the value of a DETERMINISTIC target policy (md5 of the user picks
@@ -19075,44 +17495,23 @@ def q_ips_policy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_IPS_POLICY_EVAL = """
+@query(oracle="""
 WITH e AS (
-  SELECT user_id, event_type, CAST(round(value * 100) AS BIGINT) AS r
-  FROM events),
-pol AS (
-  SELECT *, (['click', 'error', 'purchase', 'signup', 'view'])[
-           CAST(('0x' || substr(md5('pol:' || CAST(user_id AS VARCHAR)), 1, 6))::BIGINT
-                % 5 AS INT) + 1] AS p
-  FROM e),
-counts AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_t FROM e GROUP BY event_type),
-tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM e),
-matched AS (
-  SELECT p.event_type, CAST(SUM(r) AS BIGINT) AS r_t,
-         CAST(COUNT(*) AS BIGINT) AS m_t
-  FROM pol p WHERE p.event_type = p.p GROUP BY p.event_type),
-terms AS (
-  SELECT m.event_type,
-         (CAST(m.r_t AS HUGEINT) * t.n) // c.n_t AS w_reward,
-         (CAST(m.m_t AS HUGEINT) * t.n) // c.n_t AS w_mass,
-         t.n
-  FROM matched m JOIN counts c ON m.event_type = c.event_type, tot t),
-agg AS (
-  SELECT n, SUM(w_reward) AS sw_reward, SUM(w_mass) AS sw_mass,
-         CAST(COUNT(*) AS BIGINT) AS n_types_matched
-  FROM terms GROUP BY n)
-SELECT n, n_types_matched,
-       CAST(sw_reward // n AS BIGINT) AS ips_value_cents,
-       CASE WHEN sw_mass = 0 THEN NULL
-            ELSE CAST((sw_reward * 1000000) // sw_mass AS BIGINT)
-       END AS snips_value_micro
-FROM agg
-"""
-
-QUERIES["ips_policy_eval"] = q_ips_policy_eval
-ORACLES["ips_policy_eval"] = ORACLE_IPS_POLICY_EVAL
-
-
+  SELECT user_id, event_type, epoch_us(ts) AS us, event_id FROM events),
+tri AS (
+  SELECT user_id,
+         event_type || '>'
+           || lead(event_type, 1) OVER w || '>'
+           || lead(event_type, 2) OVER w AS path,
+         lead(event_type, 2) OVER w AS t3
+  FROM e
+  WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id))
+SELECT path, CAST(COUNT(*) AS BIGINT) AS n_travels,
+       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
+FROM tri WHERE t3 IS NOT NULL
+GROUP BY path
+ORDER BY n_travels DESC, path ASC LIMIT 20
+""")
 def q_top_user_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clickstream path mining: the 20 most-traveled 3-step event-type
     paths (consecutive triples in each user's total-ordered journey)
@@ -19146,28 +17545,27 @@ def q_top_user_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.orderBy(F.col("n_travels").desc(), F.col("path").asc()).limit(20)
 
 
-ORACLE_TOP_USER_PATHS = """
-WITH e AS (
-  SELECT user_id, event_type, epoch_us(ts) AS us, event_id FROM events),
-tri AS (
-  SELECT user_id,
-         event_type || '>'
-           || lead(event_type, 1) OVER w || '>'
-           || lead(event_type, 2) OVER w AS path,
-         lead(event_type, 2) OVER w AS t3
-  FROM e
-  WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id))
-SELECT path, CAST(COUNT(*) AS BIGINT) AS n_travels,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-FROM tri WHERE t3 IS NOT NULL
-GROUP BY path
-ORDER BY n_travels DESC, path ASC LIMIT 20
-"""
-
-QUERIES["top_user_paths"] = q_top_user_paths
-ORACLES["top_user_paths"] = ORACLE_TOP_USER_PATHS
-
-
+@query(oracle="""
+WITH w1 AS (
+  SELECT (epoch_us(max(ts)) // 1000) * 1000 - 1200000000 AS v
+  FROM events WHERE user_id % 3 = 0),
+w2 AS (
+  SELECT (epoch_us(max(ts)) // 1000) * 1000 - 1200000000 AS v FROM events),
+kept AS (
+  SELECT e.event_type,
+         (epoch_us(ts) // 900000000) * 900000000 AS qs,
+         (epoch_us(ts) // 3600000000) * 3600000000 AS hs
+  FROM events e, w1
+  WHERE user_id % 3 = 0
+     OR (epoch_us(ts) // 900000000) * 900000000 + 900000000 > w1.v
+)
+SELECT hs AS window_start_us, event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(COUNT(DISTINCT qs) AS BIGINT) AS n_quarters
+FROM kept, w2
+GROUP BY hs, event_type, w2.v
+HAVING hs + 3600000000 <= w2.v
+""")
 def q_stream_two_level_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpoint restart of the CHAINED two-level rollup
     (streaming.windowed.restart_two_level_counts — sixth
@@ -19208,32 +17606,35 @@ def q_stream_two_level_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_STREAM_TWO_LEVEL_RESTART = """
-WITH w1 AS (
-  SELECT (epoch_us(max(ts)) // 1000) * 1000 - 1200000000 AS v
-  FROM events WHERE user_id % 3 = 0),
-w2 AS (
-  SELECT (epoch_us(max(ts)) // 1000) * 1000 - 1200000000 AS v FROM events),
-kept AS (
-  SELECT e.event_type,
-         (epoch_us(ts) // 900000000) * 900000000 AS qs,
-         (epoch_us(ts) // 3600000000) * 3600000000 AS hs
-  FROM events e, w1
-  WHERE user_id % 3 = 0
-     OR (epoch_us(ts) // 900000000) * 900000000 + 900000000 > w1.v
-)
-SELECT hs AS window_start_us, event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(COUNT(DISTINCT qs) AS BIGINT) AS n_quarters
-FROM kept, w2
-GROUP BY hs, event_type, w2.v
-HAVING hs + 3600000000 <= w2.v
-"""
-
-QUERIES["stream_two_level_restart"] = q_stream_two_level_restart
-ORACLES["stream_two_level_restart"] = ORACLE_STREAM_TWO_LEVEL_RESTART
-
-
+@query(oracle="""
+WITH s AS (
+  SELECT ('0x' || substr(md5('auc:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
+           % 500 AS s,
+         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS y
+  FROM events),
+bins AS (
+  SELECT s // 50 AS bin, CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(y) AS BIGINT) AS clicks
+  FROM s GROUP BY 1),
+intervals AS (
+  SELECT k.bin AS k, j.bin AS j,
+         CAST(SUM(m.clicks) AS BIGINT) * 1000000
+           // CAST(SUM(m.n) AS BIGINT) AS a
+  FROM bins k
+  JOIN bins j ON k.bin <= j.bin
+  JOIN bins m ON m.bin >= k.bin AND m.bin <= j.bin
+  GROUP BY k.bin, j.bin),
+inner_min AS (
+  SELECT i.bin AS i, iv.k, MIN(iv.a) AS minj
+  FROM bins i JOIN intervals iv ON iv.k <= i.bin AND iv.j >= i.bin
+  GROUP BY i.bin, iv.k),
+fit AS (
+  SELECT i, CAST(MAX(minj) AS BIGINT) AS iso_micro FROM inner_min GROUP BY i)
+SELECT b.bin, b.n, b.clicks,
+       (b.clicks * 1000000) // b.n AS acc_micro,
+       f.iso_micro
+FROM bins b JOIN fit f ON b.bin = f.i
+""")
 def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic (monotone) calibration of the reliability bins —
     PAVA's pool-adjacent-violators fit computed DECLARATIVELY via the
@@ -19299,40 +17700,46 @@ def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ISOTONIC_CALIBRATION = """
-WITH s AS (
-  SELECT ('0x' || substr(md5('auc:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
-           % 500 AS s,
-         CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS y
-  FROM events),
-bins AS (
-  SELECT s // 50 AS bin, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(y) AS BIGINT) AS clicks
-  FROM s GROUP BY 1),
-intervals AS (
-  SELECT k.bin AS k, j.bin AS j,
-         CAST(SUM(m.clicks) AS BIGINT) * 1000000
-           // CAST(SUM(m.n) AS BIGINT) AS a
-  FROM bins k
-  JOIN bins j ON k.bin <= j.bin
-  JOIN bins m ON m.bin >= k.bin AND m.bin <= j.bin
-  GROUP BY k.bin, j.bin),
-inner_min AS (
-  SELECT i.bin AS i, iv.k, MIN(iv.a) AS minj
-  FROM bins i JOIN intervals iv ON iv.k <= i.bin AND iv.j >= i.bin
-  GROUP BY i.bin, iv.k),
-fit AS (
-  SELECT i, CAST(MAX(minj) AS BIGINT) AS iso_micro FROM inner_min GROUP BY i)
-SELECT b.bin, b.n, b.clicks,
-       (b.clicks * 1000000) // b.n AS acc_micro,
-       f.iso_micro
-FROM bins b JOIN fit f ON b.bin = f.i
-"""
-
-QUERIES["isotonic_calibration"] = q_isotonic_calibration
-ORACLES["isotonic_calibration"] = ORACLE_ISOTONIC_CALIBRATION
-
-
+@query(oracle="""
+WITH per_user AS (
+  SELECT user_id,
+         MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS b0,
+         MAX(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS b1,
+         MAX(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS b2,
+         MAX(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS b3,
+         MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
+  FROM events GROUP BY user_id),
+masks AS (
+  SELECT b0 + b1 * 2 + b2 * 4 + b3 * 8 AS m,
+         CAST(COUNT(*) AS BIGINT) AS cnt
+  FROM per_user WHERE conv = 1 GROUP BY 1),
+coal AS (SELECT unnest(generate_series(0, 15)) AS s),
+v_full AS (
+  SELECT s, CAST(COALESCE(SUM(CASE WHEN (m & ~s) = 0 THEN cnt END), 0)
+                 AS BIGINT) AS v
+  FROM coal LEFT JOIN masks ON TRUE GROUP BY s),
+chan AS (
+  SELECT * FROM (VALUES ('click', 0), ('error', 1), ('signup', 2),
+                        ('view', 3)) AS t(channel, i)),
+weights AS (
+  SELECT c.channel, c.i, s.s AS s_without, s.s | (1 << c.i) AS s_with,
+         CASE bit_count(CAST(s.s AS BIT))
+              WHEN 0 THEN 6 WHEN 1 THEN 2 WHEN 2 THEN 2 WHEN 3 THEN 6
+         END AS w
+  FROM chan c JOIN coal s ON (s.s & (1 << c.i)) = 0),
+phi AS (
+  SELECT w.channel,
+         CAST(SUM(w.w * (va.v - vb.v)) AS BIGINT) AS phi_24ths
+  FROM weights w
+  JOIN v_full va ON va.s = w.s_with
+  JOIN v_full vb ON vb.s = w.s_without
+  GROUP BY w.channel),
+tot AS (SELECT CAST(SUM(phi_24ths) AS BIGINT) AS tot FROM phi)
+SELECT channel, phi_24ths,
+       CASE WHEN tot = 0 THEN NULL
+            ELSE (phi_24ths * 1000000) // tot END AS share_micro
+FROM phi, tot
+""")
 def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT Shapley-value channel attribution: each converting user's
     pre-purchase touch set over the four non-purchase channels defines
@@ -19409,51 +17816,39 @@ def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SHAPLEY_ATTRIBUTION = """
-WITH per_user AS (
-  SELECT user_id,
-         MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS b0,
-         MAX(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS b1,
-         MAX(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS b2,
-         MAX(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS b3,
-         MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-  FROM events GROUP BY user_id),
-masks AS (
-  SELECT b0 + b1 * 2 + b2 * 4 + b3 * 8 AS m,
-         CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM per_user WHERE conv = 1 GROUP BY 1),
-coal AS (SELECT unnest(generate_series(0, 15)) AS s),
-v_full AS (
-  SELECT s, CAST(COALESCE(SUM(CASE WHEN (m & ~s) = 0 THEN cnt END), 0)
-                 AS BIGINT) AS v
-  FROM coal LEFT JOIN masks ON TRUE GROUP BY s),
-chan AS (
-  SELECT * FROM (VALUES ('click', 0), ('error', 1), ('signup', 2),
-                        ('view', 3)) AS t(channel, i)),
-weights AS (
-  SELECT c.channel, c.i, s.s AS s_without, s.s | (1 << c.i) AS s_with,
-         CASE bit_count(CAST(s.s AS BIT))
-              WHEN 0 THEN 6 WHEN 1 THEN 2 WHEN 2 THEN 2 WHEN 3 THEN 6
-         END AS w
-  FROM chan c JOIN coal s ON (s.s & (1 << c.i)) = 0),
-phi AS (
-  SELECT w.channel,
-         CAST(SUM(w.w * (va.v - vb.v)) AS BIGINT) AS phi_24ths
-  FROM weights w
-  JOIN v_full va ON va.s = w.s_with
-  JOIN v_full vb ON vb.s = w.s_without
-  GROUP BY w.channel),
-tot AS (SELECT CAST(SUM(phi_24ths) AS BIGINT) AS tot FROM phi)
-SELECT channel, phi_24ths,
-       CASE WHEN tot = 0 THEN NULL
-            ELSE (phi_24ths * 1000000) // tot END AS share_micro
-FROM phi, tot
-"""
-
-QUERIES["shapley_attribution"] = q_shapley_attribution
-ORACLES["shapley_attribution"] = ORACLE_SHAPLEY_ATTRIBUTION
-
-
+@query(oracle="""
+WITH e AS (
+  SELECT user_id, event_type, CAST(round(value * 100) AS BIGINT) AS r
+  FROM events),
+base AS (
+  SELECT *, (['click', 'error', 'purchase', 'signup', 'view'])[
+           CAST(('0x' || substr(md5('pol:' || CAST(user_id AS VARCHAR)), 1, 6))::BIGINT
+                % 5 AS INT) + 1] AS pol
+  FROM e),
+qhat AS (
+  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_t,
+         (CAST(SUM(r) AS BIGINT) * 1000000) // CAST(COUNT(*) AS BIGINT)
+           AS qmicro
+  FROM e GROUP BY event_type),
+tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM e),
+dm AS (
+  SELECT SUM(CAST(c.c_p AS HUGEINT) * q.qmicro) AS dm_num
+  FROM (SELECT pol, CAST(COUNT(*) AS BIGINT) AS c_p FROM base GROUP BY pol) c
+  JOIN qhat q ON c.pol = q.event_type),
+corr AS (
+  SELECT SUM((CAST(m.r_t AS HUGEINT) * 1000000
+              - CAST(m.m_t AS HUGEINT) * q.qmicro) * t.n // q.n_t)
+           AS corr_num
+  FROM (SELECT event_type, CAST(SUM(r) AS BIGINT) AS r_t,
+               CAST(COUNT(*) AS BIGINT) AS m_t
+        FROM base WHERE event_type = pol GROUP BY event_type) m
+  JOIN qhat q ON m.event_type = q.event_type, tot t)
+SELECT t.n,
+       CAST(d.dm_num // t.n AS BIGINT) AS dm_value_micro,
+       CAST(c.corr_num // t.n AS BIGINT) AS correction_micro,
+       CAST((d.dm_num + c.corr_num) // t.n AS BIGINT) AS dr_value_micro
+FROM dm d, corr c, tot t
+""")
 def q_doubly_robust_ope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doubly-robust off-policy evaluation — the direct-method
     baseline q̂(t) = per-type mean reward plus the IPS correction on
@@ -19541,44 +17936,35 @@ def q_doubly_robust_ope(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DOUBLY_ROBUST_OPE = """
-WITH e AS (
-  SELECT user_id, event_type, CAST(round(value * 100) AS BIGINT) AS r
-  FROM events),
-base AS (
-  SELECT *, (['click', 'error', 'purchase', 'signup', 'view'])[
-           CAST(('0x' || substr(md5('pol:' || CAST(user_id AS VARCHAR)), 1, 6))::BIGINT
-                % 5 AS INT) + 1] AS pol
-  FROM e),
-qhat AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_t,
-         (CAST(SUM(r) AS BIGINT) * 1000000) // CAST(COUNT(*) AS BIGINT)
-           AS qmicro
-  FROM e GROUP BY event_type),
-tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM e),
-dm AS (
-  SELECT SUM(CAST(c.c_p AS HUGEINT) * q.qmicro) AS dm_num
-  FROM (SELECT pol, CAST(COUNT(*) AS BIGINT) AS c_p FROM base GROUP BY pol) c
-  JOIN qhat q ON c.pol = q.event_type),
-corr AS (
-  SELECT SUM((CAST(m.r_t AS HUGEINT) * 1000000
-              - CAST(m.m_t AS HUGEINT) * q.qmicro) * t.n // q.n_t)
-           AS corr_num
-  FROM (SELECT event_type, CAST(SUM(r) AS BIGINT) AS r_t,
-               CAST(COUNT(*) AS BIGINT) AS m_t
-        FROM base WHERE event_type = pol GROUP BY event_type) m
-  JOIN qhat q ON m.event_type = q.event_type, tot t)
-SELECT t.n,
-       CAST(d.dm_num // t.n AS BIGINT) AS dm_value_micro,
-       CAST(c.corr_num // t.n AS BIGINT) AS correction_micro,
-       CAST((d.dm_num + c.corr_num) // t.n AS BIGINT) AS dr_value_micro
-FROM dm d, corr c, tot t
-"""
-
-QUERIES["doubly_robust_ope"] = q_doubly_robust_ope
-ORACLES["doubly_robust_ope"] = ORACLE_DOUBLY_ROBUST_OPE
-
-
+@query(oracle="""
+WITH canon AS (
+  SELECT DISTINCT least(x.l_partkey, y.l_partkey) AS a,
+                  greatest(x.l_partkey, y.l_partkey) AS b
+  FROM lineitem x JOIN lineitem y
+    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
+tri AS (
+  SELECT e1.a AS p, e1.b AS q, e2.b AS r
+  FROM canon e1
+  JOIN canon e2 ON e1.b = e2.a
+  JOIN canon e3 ON e3.a = e1.a AND e3.b = e2.b),
+corners AS (
+  SELECT node, CAST(COUNT(*) AS BIGINT) AS n_triangles
+  FROM (SELECT p AS node FROM tri
+        UNION ALL SELECT q FROM tri
+        UNION ALL SELECT r FROM tri)
+  GROUP BY node),
+deg AS (
+  SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
+  FROM (SELECT a AS node FROM canon UNION ALL SELECT b FROM canon)
+  GROUP BY node)
+SELECT d.node, d.degree,
+       CAST(COALESCE(c.n_triangles, 0) AS BIGINT) AS n_triangles,
+       (2 * CAST(COALESCE(c.n_triangles, 0) AS BIGINT) * 1000000)
+         // (d.degree * (d.degree - 1)) AS coeff_micro
+FROM deg d LEFT JOIN corners c ON d.node = c.node
+WHERE d.degree >= 3
+ORDER BY coeff_micro DESC, d.node ASC LIMIT 20
+""")
 def q_local_clustering_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 locally-densest parts of the co-purchase graph by local
     clustering coefficient cᵥ = 2·Tᵥ/(degᵥ·(degᵥ−1)) in integer micro
@@ -19607,40 +17993,34 @@ def q_local_clustering_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(20)
 
 
-ORACLE_LOCAL_CLUSTERING_TOPK = """
-WITH canon AS (
-  SELECT DISTINCT least(x.l_partkey, y.l_partkey) AS a,
-                  greatest(x.l_partkey, y.l_partkey) AS b
-  FROM lineitem x JOIN lineitem y
-    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey),
-tri AS (
-  SELECT e1.a AS p, e1.b AS q, e2.b AS r
-  FROM canon e1
-  JOIN canon e2 ON e1.b = e2.a
-  JOIN canon e3 ON e3.a = e1.a AND e3.b = e2.b),
-corners AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS n_triangles
-  FROM (SELECT p AS node FROM tri
-        UNION ALL SELECT q FROM tri
-        UNION ALL SELECT r FROM tri)
-  GROUP BY node),
-deg AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
-  FROM (SELECT a AS node FROM canon UNION ALL SELECT b FROM canon)
-  GROUP BY node)
-SELECT d.node, d.degree,
-       CAST(COALESCE(c.n_triangles, 0) AS BIGINT) AS n_triangles,
-       (2 * CAST(COALESCE(c.n_triangles, 0) AS BIGINT) * 1000000)
-         // (d.degree * (d.degree - 1)) AS coeff_micro
-FROM deg d LEFT JOIN corners c ON d.node = c.node
-WHERE d.degree >= 3
-ORDER BY coeff_micro DESC, d.node ASC LIMIT 20
-"""
-
-QUERIES["local_clustering_topk"] = q_local_clustering_topk
-ORACLES["local_clustering_topk"] = ORACLE_LOCAL_CLUSTERING_TOPK
-
-
+@query(oracle="""
+WITH rows_f AS (
+  SELECT user_id, event_type,
+         ('0x' || substr(md5('fold:' || CAST(user_id AS VARCHAR)), 1, 6))::BIGINT
+           % 5 AS fold
+  FROM events),
+tot AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(COUNT(DISTINCT user_id) AS BIGINT) AS nu
+  FROM rows_f),
+span AS (
+  SELECT CAST(SUM(CASE WHEN nf > 1 THEN 1 ELSE 0 END) AS BIGINT)
+           AS users_spanning_folds
+  FROM (SELECT user_id, CAST(COUNT(DISTINCT fold) AS BIGINT) AS nf
+        FROM rows_f GROUP BY user_id)),
+per_fold AS (
+  SELECT fold, CAST(COUNT(*) AS BIGINT) AS n_rows,
+         CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
+         CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_clicks
+  FROM rows_f GROUP BY fold)
+SELECT fold, n_rows, n_users,
+       (n_rows * 1000000) // n AS row_share_micro,
+       (n_users * 1000000) // nu AS user_share_micro,
+       (n_clicks * 1000000) // n_rows AS click_rate_micro,
+       users_spanning_folds
+FROM per_fold, tot, span
+""")
 def q_grouped_kfold_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP-aware k-fold assignment audit: folds are assigned per
     USER (md5 coin), so no user's rows straddle train/validation — the
@@ -19701,39 +18081,26 @@ def q_grouped_kfold_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_GROUPED_KFOLD_AUDIT = """
-WITH rows_f AS (
-  SELECT user_id, event_type,
-         ('0x' || substr(md5('fold:' || CAST(user_id AS VARCHAR)), 1, 6))::BIGINT
-           % 5 AS fold
-  FROM events),
-tot AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(COUNT(DISTINCT user_id) AS BIGINT) AS nu
-  FROM rows_f),
-span AS (
-  SELECT CAST(SUM(CASE WHEN nf > 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS users_spanning_folds
-  FROM (SELECT user_id, CAST(COUNT(DISTINCT fold) AS BIGINT) AS nf
-        FROM rows_f GROUP BY user_id)),
-per_fold AS (
-  SELECT fold, CAST(COUNT(*) AS BIGINT) AS n_rows,
-         CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-         CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_clicks
-  FROM rows_f GROUP BY fold)
-SELECT fold, n_rows, n_users,
-       (n_rows * 1000000) // n AS row_share_micro,
-       (n_users * 1000000) // nu AS user_share_micro,
-       (n_clicks * 1000000) // n_rows AS click_rate_micro,
-       users_spanning_folds
-FROM per_fold, tot, span
-"""
-
-QUERIES["grouped_kfold_audit"] = q_grouped_kfold_audit
-ORACLES["grouped_kfold_audit"] = ORACLE_GROUPED_KFOLD_AUDIT
-
-
+@query(oracle="""
+WITH e AS (SELECT user_id, event_type FROM events),
+nu AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS u FROM e),
+per AS (
+  SELECT event_type, user_id, CAST(COUNT(*) AS BIGINT) AS c
+  FROM e GROUP BY event_type, user_id),
+agg AS (
+  SELECT event_type,
+         CAST(COUNT(*) AS BIGINT) AS present,
+         CAST(SUM(c) AS BIGINT) AS sx,
+         SUM(CAST(c AS HUGEINT) * c) AS sxx
+  FROM per GROUP BY event_type)
+SELECT a.event_type, n.u AS n_users, a.sx,
+       round(CAST(a.sx AS DOUBLE) / CAST(n.u AS DOUBLE), 6) AS mean_per_user,
+       round((CAST(n.u * a.sxx - CAST(a.sx AS HUGEINT) * a.sx AS DOUBLE)
+              / (CAST(n.u AS DOUBLE) * CAST(n.u AS DOUBLE)))
+             / (CAST(a.sx AS DOUBLE) / CAST(n.u AS DOUBLE)), 6)
+         AS dispersion_index
+FROM agg a, nu n
+""")
 def q_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overdispersion check on per-user event counts (index of
     dispersion var/mean — Poisson ⇒ 1, clumpy arrivals ⇒ >1): the
@@ -19775,31 +18142,40 @@ def q_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DISPERSION_INDEX = """
-WITH e AS (SELECT user_id, event_type FROM events),
-nu AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS u FROM e),
-per AS (
-  SELECT event_type, user_id, CAST(COUNT(*) AS BIGINT) AS c
-  FROM e GROUP BY event_type, user_id),
-agg AS (
+@query(oracle="""
+WITH hourly AS (
+  SELECT event_type, epoch_us(ts) // 3600000000 AS h,
+         CAST(COUNT(*) AS BIGINT) AS c
+  FROM events GROUP BY 1, 2),
+s_t AS (
+  SELECT a.event_type,
+         CAST(SUM(CASE WHEN b.c > a.c THEN 1 WHEN b.c < a.c THEN -1
+                       ELSE 0 END) AS BIGINT) AS s
+  FROM hourly a JOIN hourly b
+    ON a.event_type = b.event_type AND a.h < b.h
+  GROUP BY a.event_type),
+n_t AS (
+  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
+  FROM hourly GROUP BY event_type),
+ties AS (
   SELECT event_type,
-         CAST(COUNT(*) AS BIGINT) AS present,
-         CAST(SUM(c) AS BIGINT) AS sx,
-         SUM(CAST(c AS HUGEINT) * c) AS sxx
-  FROM per GROUP BY event_type)
-SELECT a.event_type, n.u AS n_users, a.sx,
-       round(CAST(a.sx AS DOUBLE) / CAST(n.u AS DOUBLE), 6) AS mean_per_user,
-       round((CAST(n.u * a.sxx - CAST(a.sx AS HUGEINT) * a.sx AS DOUBLE)
-              / (CAST(n.u AS DOUBLE) * CAST(n.u AS DOUBLE)))
-             / (CAST(a.sx AS DOUBLE) / CAST(n.u AS DOUBLE)), 6)
-         AS dispersion_index
-FROM agg a, nu n
-"""
-
-QUERIES["dispersion_index"] = q_dispersion_index
-ORACLES["dispersion_index"] = ORACLE_DISPERSION_INDEX
-
-
+         CAST(SUM(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_term
+  FROM (SELECT event_type, c, CAST(COUNT(*) AS BIGINT) AS t
+        FROM hourly GROUP BY event_type, c)
+  GROUP BY event_type),
+o AS (
+  SELECT s_t.event_type, n_t.n, s_t.s,
+         CAST(n_t.n * (n_t.n - 1) * (2 * n_t.n + 5) - ties.tie_term
+              AS BIGINT) AS var18
+  FROM s_t JOIN n_t ON s_t.event_type = n_t.event_type
+  JOIN ties ON s_t.event_type = ties.event_type)
+SELECT event_type, n, s, var18,
+       round((CASE WHEN s > 0 THEN CAST(s - 1 AS DOUBLE)
+                   WHEN s < 0 THEN CAST(s + 1 AS DOUBLE)
+                   ELSE 0.0 END)
+             / sqrt(CAST(var18 AS DOUBLE) / 18.0), 6) AS z
+FROM o
+""")
 def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall trend test per event type — the nonparametric
     significance complement to `theil_sen_trend`'s slope: S = Σ
@@ -19868,45 +18244,36 @@ def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_MANN_KENDALL_TREND = """
-WITH hourly AS (
-  SELECT event_type, epoch_us(ts) // 3600000000 AS h,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2),
-s_t AS (
-  SELECT a.event_type,
-         CAST(SUM(CASE WHEN b.c > a.c THEN 1 WHEN b.c < a.c THEN -1
-                       ELSE 0 END) AS BIGINT) AS s
-  FROM hourly a JOIN hourly b
-    ON a.event_type = b.event_type AND a.h < b.h
-  GROUP BY a.event_type),
-n_t AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
-  FROM hourly GROUP BY event_type),
-ties AS (
-  SELECT event_type,
-         CAST(SUM(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_term
-  FROM (SELECT event_type, c, CAST(COUNT(*) AS BIGINT) AS t
-        FROM hourly GROUP BY event_type, c)
-  GROUP BY event_type),
-o AS (
-  SELECT s_t.event_type, n_t.n, s_t.s,
-         CAST(n_t.n * (n_t.n - 1) * (2 * n_t.n + 5) - ties.tie_term
-              AS BIGINT) AS var18
-  FROM s_t JOIN n_t ON s_t.event_type = n_t.event_type
-  JOIN ties ON s_t.event_type = ties.event_type)
-SELECT event_type, n, s, var18,
-       round((CASE WHEN s > 0 THEN CAST(s - 1 AS DOUBLE)
-                   WHEN s < 0 THEN CAST(s + 1 AS DOUBLE)
-                   ELSE 0.0 END)
-             / sqrt(CAST(var18 AS DOUBLE) / 18.0), 6) AS z
-FROM o
-"""
-
-QUERIES["mann_kendall_trend"] = q_mann_kendall_trend
-ORACLES["mann_kendall_trend"] = ORACLE_MANN_KENDALL_TREND
-
-
+@query(oracle="""
+WITH e AS (
+  SELECT user_id, event_type, CAST(round(value * 100) AS BIGINT) AS cents,
+         epoch_us(ts) AS us
+  FROM events),
+mid AS (SELECT (MIN(us) + MAX(us)) // 2 AS mid FROM e),
+per_user AS (
+  SELECT user_id,
+         CAST(SUM(CASE WHEN us < mid THEN 1 ELSE 0 END) AS BIGINT) AS x,
+         CAST(SUM(CASE WHEN us >= mid AND event_type = 'purchase'
+                       THEN cents ELSE 0 END) AS BIGINT) AS y
+  FROM e, mid GROUP BY user_id),
+m AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS n,
+         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
+         SUM(CAST(x AS HUGEINT) * y) AS sxy,
+         SUM(CAST(x AS HUGEINT) * x) AS sxx,
+         SUM(CAST(y AS HUGEINT) * y) AS syy
+  FROM per_user)
+SELECT n, sx, sy,
+       round(CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)
+             / CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE), 6)
+         AS theta,
+       round((CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)
+              * CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE))
+             / (CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE)
+                * CAST(n * syy - CAST(sy AS HUGEINT) * sy AS DOUBLE)), 6)
+         AS variance_reduction
+FROM m
+""")
 def q_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED variance reduction for experimentation: using each
     user's FIRST-half activity (covariate x) to denoise their
@@ -19970,41 +18337,43 @@ def q_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CUPED_ADJUSTMENT = """
+@query(oracle="""
 WITH e AS (
-  SELECT user_id, event_type, CAST(round(value * 100) AS BIGINT) AS cents,
-         epoch_us(ts) AS us
+  SELECT CAST(round(value * 100) AS BIGINT) AS cents, epoch_us(ts) AS us
   FROM events),
-mid AS (SELECT (MIN(us) + MAX(us)) // 2 AS mid FROM e),
-per_user AS (
-  SELECT user_id,
-         CAST(SUM(CASE WHEN us < mid THEN 1 ELSE 0 END) AS BIGINT) AS x,
-         CAST(SUM(CASE WHEN us >= mid AND event_type = 'purchase'
-                       THEN cents ELSE 0 END) AS BIGINT) AS y
-  FROM e, mid GROUP BY user_id),
-m AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-         SUM(CAST(x AS HUGEINT) * y) AS sxy,
-         SUM(CAST(x AS HUGEINT) * x) AS sxx,
-         SUM(CAST(y AS HUGEINT) * y) AS syy
-  FROM per_user)
-SELECT n, sx, sy,
-       round(CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)
-             / CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE), 6)
-         AS theta,
-       round((CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)
-              * CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE))
-             / (CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE)
-                * CAST(n * syy - CAST(sy AS HUGEINT) * sy AS DOUBLE)), 6)
-         AS variance_reduction
-FROM m
-"""
-
-QUERIES["cuped_adjustment"] = q_cuped_adjustment
-ORACLES["cuped_adjustment"] = ORACLE_CUPED_ADJUSTMENT
-
-
+bounds AS (
+  SELECT (MIN(us) + MAX(us)) // 2 AS mid,
+         MIN(cents) AS lo, MAX(cents) AS hi
+  FROM e),
+g AS (
+  SELECT ((cents - lo) * 100) // (hi - lo + 1) AS b,
+         us < mid AS first_half
+  FROM e, bounds),
+hist AS (
+  SELECT b,
+         CAST(SUM(CASE WHEN first_half THEN 1 ELSE 0 END) AS BIGINT) AS ca,
+         CAST(SUM(CASE WHEN first_half THEN 0 ELSE 1 END) AS BIGINT) AS cb
+  FROM g GROUP BY b),
+tot AS (
+  SELECT CAST(SUM(ca) AS BIGINT) AS na, CAST(SUM(cb) AS BIGINT) AS nb
+  FROM hist),
+cum AS (
+  SELECT b, na, nb,
+         CAST(SUM(ca) OVER (ORDER BY b ROWS UNBOUNDED PRECEDING) AS BIGINT)
+           AS cuma,
+         CAST(SUM(cb) OVER (ORDER BY b ROWS UNBOUNDED PRECEDING) AS BIGINT)
+           AS cumb
+  FROM hist, tot),
+agg AS (
+  SELECT na, nb,
+         SUM(abs(CAST(cuma AS HUGEINT) * nb - CAST(cumb AS HUGEINT) * na))
+           AS num
+  FROM cum GROUP BY na, nb)
+SELECT na, nb,
+       CAST((num * 1000000) // (CAST(na AS HUGEINT) * nb * 100) AS BIGINT)
+         AS emd_micro_of_range
+FROM agg
+""")
 def q_emd_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-D earth-mover's distance (Wasserstein-1) between the first
     and second half of the purchase-value distribution — the drift
@@ -20061,48 +18430,21 @@ def q_emd_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_EMD_VALUE_DRIFT = """
+@query(oracle="""
 WITH e AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents, epoch_us(ts) AS us
-  FROM events),
-bounds AS (
-  SELECT (MIN(us) + MAX(us)) // 2 AS mid,
-         MIN(cents) AS lo, MAX(cents) AS hi
-  FROM e),
-g AS (
-  SELECT ((cents - lo) * 100) // (hi - lo + 1) AS b,
-         us < mid AS first_half
-  FROM e, bounds),
-hist AS (
-  SELECT b,
-         CAST(SUM(CASE WHEN first_half THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-         CAST(SUM(CASE WHEN first_half THEN 0 ELSE 1 END) AS BIGINT) AS cb
-  FROM g GROUP BY b),
+  SELECT event_type, (epoch_us(ts) // 3600000000) % 24 AS hod FROM events),
+cells AS (
+  SELECT event_type, hod, CAST(COUNT(*) AS BIGINT) AS n
+  FROM e GROUP BY event_type, hod),
 tot AS (
-  SELECT CAST(SUM(ca) AS BIGINT) AS na, CAST(SUM(cb) AS BIGINT) AS nb
-  FROM hist),
-cum AS (
-  SELECT b, na, nb,
-         CAST(SUM(ca) OVER (ORDER BY b ROWS UNBOUNDED PRECEDING) AS BIGINT)
-           AS cuma,
-         CAST(SUM(cb) OVER (ORDER BY b ROWS UNBOUNDED PRECEDING) AS BIGINT)
-           AS cumb
-  FROM hist, tot),
-agg AS (
-  SELECT na, nb,
-         SUM(abs(CAST(cuma AS HUGEINT) * nb - CAST(cumb AS HUGEINT) * na))
-           AS num
-  FROM cum GROUP BY na, nb)
-SELECT na, nb,
-       CAST((num * 1000000) // (CAST(na AS HUGEINT) * nb * 100) AS BIGINT)
-         AS emd_micro_of_range
-FROM agg
-"""
-
-QUERIES["emd_value_drift"] = q_emd_value_drift
-ORACLES["emd_value_drift"] = ORACLE_EMD_VALUE_DRIFT
-
-
+  SELECT event_type, CAST(SUM(n) AS BIGINT) AS n_type,
+         MAX(n * 100 + hod) AS pk
+  FROM cells GROUP BY event_type)
+SELECT c.event_type, c.hod, c.n,
+       (c.n * 24 * 1000000) // t.n_type AS seasonal_index_micro,
+       (c.n * 100 + c.hod) = t.pk AS is_peak_hour
+FROM cells c JOIN tot t ON c.event_type = t.event_type
+""")
 def q_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hour-of-day seasonal index per event type: each (type, hour)
     cell's share of the type's traffic against the uniform 1/24
@@ -20138,29 +18480,45 @@ def q_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SEASONAL_PROFILE = """
-WITH e AS (
-  SELECT event_type, (epoch_us(ts) // 3600000000) % 24 AS hod FROM events),
-cells AS (
-  SELECT event_type, hod, CAST(COUNT(*) AS BIGINT) AS n
-  FROM e GROUP BY event_type, hod),
-tot AS (
-  SELECT event_type, CAST(SUM(n) AS BIGINT) AS n_type,
-         MAX(n * 100 + hod) AS pk
-  FROM cells GROUP BY event_type)
-SELECT c.event_type, c.hod, c.n,
-       (c.n * 24 * 1000000) // t.n_type AS seasonal_index_micro,
-       (c.n * 100 + c.hod) = t.pk AS is_peak_hour
-FROM cells c JOIN tot t ON c.event_type = t.event_type
-"""
-
-QUERIES["seasonal_profile"] = q_seasonal_profile
-ORACLES["seasonal_profile"] = ORACLE_SEASONAL_PROFILE
-
-
 # --------------------- round 11: fasttext-style quality classifier
 
 
+def _oracle_quality_classifier() -> str:
+    """DuckDB twin: identical md5 feature buckets, the SAME inlined
+    integer weights/bias, identical truncating integer division
+    (DuckDB `//` == Spark `div`, both toward zero — pinned), HUGEINT
+    score sum mirroring the Spark DECIMAL(38,0) accumulator."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
+        quality_weights,
+    )
+
+    w, bias = quality_weights(64)
+    w_list = ", ".join(str(x) for x in w)
+    return f"""
+WITH scored AS (
+  SELECT source,
+         CAST(list_sum(list_transform(string_split(text, ' '),
+           t -> ([{w_list}])[
+             CAST(('0x' || substr(md5('qcls:' || t), 1, 4))::BIGINT % 64
+                  AS INT) + 1])) AS BIGINT) AS sum_w,
+         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+  FROM documents),
+s2 AS (
+  SELECT source, (sum_w * 1000) // n_tok + {int(bias) * 1000} AS score_micro
+  FROM scored)
+SELECT source,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(CASE WHEN score_micro >= 0 THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_keep,
+       (CAST(SUM(CASE WHEN score_micro >= 0 THEN 1 ELSE 0 END) AS BIGINT)
+        * 1000000) // CAST(COUNT(*) AS BIGINT) AS keep_rate_micro,
+       CAST(SUM(CAST(score_micro AS HUGEINT)) // COUNT(*) AS BIGINT)
+         AS avg_score_micro
+FROM s2 GROUP BY source
+"""
+
+
+@query(oracle=_oracle_quality_classifier())
 def q_quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained-linear-classifier quality filtering (CCNet §4.2 /
     fasttext, Joulin et al. 2017) — the inference page the registry's
@@ -20205,45 +18563,50 @@ def q_quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_quality_classifier() -> str:
-    """DuckDB twin: identical md5 feature buckets, the SAME inlined
-    integer weights/bias, identical truncating integer division
-    (DuckDB `//` == Spark `div`, both toward zero — pinned), HUGEINT
-    score sum mirroring the Spark DECIMAL(38,0) accumulator."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.text import (
-        quality_weights,
-    )
-
-    w, bias = quality_weights(64)
-    w_list = ", ".join(str(x) for x in w)
-    return f"""
-WITH scored AS (
-  SELECT source,
-         CAST(list_sum(list_transform(string_split(text, ' '),
-           t -> ([{w_list}])[
-             CAST(('0x' || substr(md5('qcls:' || t), 1, 4))::BIGINT % 64
-                  AS INT) + 1])) AS BIGINT) AS sum_w,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-  FROM documents),
-s2 AS (
-  SELECT source, (sum_w * 1000) // n_tok + {int(bias) * 1000} AS score_micro
-  FROM scored)
-SELECT source,
+@query(oracle="""
+WITH tb AS (
+  SELECT doc_id, lang,
+         ('0x' || substr(md5('dsir:' || t), 1, 4))::BIGINT % 64 AS b
+  FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS t
+        FROM documents)),
+raw AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS cr FROM tb GROUP BY 1),
+tgt AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS ct FROM tb
+        WHERE lang = 'en' GROUP BY 1),
+tots AS (
+  SELECT CAST(COUNT(*) AS BIGINT) AS nr,
+         CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS nt
+  FROM tb),
+ratio AS (
+  SELECT raw.b,
+         CAST(round(ln(((COALESCE(ct, 0) + 1) / (cr + 1))
+              * ((CAST(nr AS DOUBLE) + 64.0) / (CAST(nt AS DOUBLE) + 64.0)))
+              * 1000000) AS BIGINT) AS r_micro
+  FROM raw LEFT JOIN tgt ON raw.b = tgt.b, tots),
+scored AS (
+  SELECT doc_id, CAST(SUM(r_micro) AS BIGINT) AS logw_micro
+  FROM tb JOIN ratio USING (b) GROUP BY doc_id),
+keyed AS (
+  SELECT doc_id, logw_micro,
+         logw_micro + CAST(round(-ln(-ln(
+           CAST(('0x' || substr(md5('dsirg:' || CAST(doc_id AS VARCHAR)),
+                 1, 12))::BIGINT + 1 AS DOUBLE)
+           / CAST(281474976710657 AS DOUBLE)
+         )) * 1000000) AS BIGINT) AS gkey
+  FROM scored),
+sel AS (
+  SELECT doc_id, logw_micro FROM keyed
+  ORDER BY gkey DESC, doc_id ASC LIMIT 200)
+SELECT d.lang,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(CASE WHEN score_micro >= 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_keep,
-       (CAST(SUM(CASE WHEN score_micro >= 0 THEN 1 ELSE 0 END) AS BIGINT)
-        * 1000000) // CAST(COUNT(*) AS BIGINT) AS keep_rate_micro,
-       CAST(SUM(CAST(score_micro AS HUGEINT)) // COUNT(*) AS BIGINT)
-         AS avg_score_micro
-FROM s2 GROUP BY source
-"""
-
-
-QUERIES["quality_classifier_scores"] = q_quality_classifier_scores
-ORACLES["quality_classifier_scores"] = _oracle_quality_classifier()
-
-
+       CAST(COUNT(s.doc_id) AS BIGINT) AS n_selected,
+       (CAST(COUNT(s.doc_id) AS BIGINT) * 1000000)
+         // CAST(COUNT(*) AS BIGINT) AS select_rate_micro,
+       CASE WHEN COUNT(s.doc_id) = 0 THEN NULL
+            ELSE CAST(SUM(s.logw_micro) // COUNT(s.doc_id) AS BIGINT) END
+         AS avg_logw_micro
+FROM documents d LEFT JOIN sel s ON d.doc_id = s.doc_id
+GROUP BY d.lang
+""")
 def q_dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR — Data Selection via Importance Resampling (Xie et al.
     2023, NeurIPS): select raw-corpus documents whose hashed-n-gram
@@ -20363,77 +18726,6 @@ def q_dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DSIR = """
-WITH tb AS (
-  SELECT doc_id, lang,
-         ('0x' || substr(md5('dsir:' || t), 1, 4))::BIGINT % 64 AS b
-  FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS t
-        FROM documents)),
-raw AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS cr FROM tb GROUP BY 1),
-tgt AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS ct FROM tb
-        WHERE lang = 'en' GROUP BY 1),
-tots AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS nr,
-         CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS nt
-  FROM tb),
-ratio AS (
-  SELECT raw.b,
-         CAST(round(ln(((COALESCE(ct, 0) + 1) / (cr + 1))
-              * ((CAST(nr AS DOUBLE) + 64.0) / (CAST(nt AS DOUBLE) + 64.0)))
-              * 1000000) AS BIGINT) AS r_micro
-  FROM raw LEFT JOIN tgt ON raw.b = tgt.b, tots),
-scored AS (
-  SELECT doc_id, CAST(SUM(r_micro) AS BIGINT) AS logw_micro
-  FROM tb JOIN ratio USING (b) GROUP BY doc_id),
-keyed AS (
-  SELECT doc_id, logw_micro,
-         logw_micro + CAST(round(-ln(-ln(
-           CAST(('0x' || substr(md5('dsirg:' || CAST(doc_id AS VARCHAR)),
-                 1, 12))::BIGINT + 1 AS DOUBLE)
-           / CAST(281474976710657 AS DOUBLE)
-         )) * 1000000) AS BIGINT) AS gkey
-  FROM scored),
-sel AS (
-  SELECT doc_id, logw_micro FROM keyed
-  ORDER BY gkey DESC, doc_id ASC LIMIT 200)
-SELECT d.lang,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(COUNT(s.doc_id) AS BIGINT) AS n_selected,
-       (CAST(COUNT(s.doc_id) AS BIGINT) * 1000000)
-         // CAST(COUNT(*) AS BIGINT) AS select_rate_micro,
-       CASE WHEN COUNT(s.doc_id) = 0 THEN NULL
-            ELSE CAST(SUM(s.logw_micro) // COUNT(s.doc_id) AS BIGINT) END
-         AS avg_logw_micro
-FROM documents d LEFT JOIN sel s ON d.doc_id = s.doc_id
-GROUP BY d.lang
-"""
-
-QUERIES["dsir_importance_resample"] = q_dsir_importance_resample
-ORACLES["dsir_importance_resample"] = ORACLE_DSIR
-
-
-def q_kn_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interpolated Kneser-Ney trigram-LM perplexity filter
-    (operators.collocations.kn_perplexity_filter — the KenLM-class
-    CCNet §4.1 curation page): an absolute-discount (D=0.75) backoff
-    trigram LM trained on the corpus itself, per-document surprisal in
-    integer micro-nats (the jsd_source_divergence convention; the
-    −ln P expression is ONE shared SQL fragment executed by both
-    engines on exact integer count tables), keep decided against the
-    distribution-relative corpus-mean operating point (exact
-    SUM div COUNT — ~50% keep at every SF; an absolute threshold
-    cannot hold a keep rate because typical surprisal rises with
-    corpus size). Scoring is per trigram TYPE, then one
-    amplification-free (doc,trigram)→type join — map-shaped after two
-    rounds of count aggregates; corpus text never shuffles past the
-    explode."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.collocations import (
-        kn_perplexity_filter,
-    )
-
-    return kn_perplexity_filter(load_table(spark, sf_dir, "documents"))
-
-
 def _kn_oracle() -> str:
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.collocations import (
         KN_SURPRISAL_MICRO_SQL,
@@ -20486,30 +18778,27 @@ FROM ds, thr
 """
 
 
-QUERIES["kn_perplexity_filter"] = q_kn_perplexity_filter
-ORACLES["kn_perplexity_filter"] = _kn_oracle()
-
-
-def q_semdedup_centroid_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup centroid pruning (operators.similarity.
-    semdedup_centroid_prune — Abbas et al. 2023): each embedding
-    assigned to its nearest frozen-codebook cell (exact int64
-    distances, the stream_ivf_ingest codebook), scored by integer
-    micro-cosine to that centroid, and pruned one-representative-per
-    (cell, 0.002-wide cosine shell) — the pairs-free cheapest semantic
-    dedup tier (semantic_dedup_keep is the pairwise one). Map-only
-    scoring, one domain-bounded (cell × bucket ≤ 8000 rows) hash
-    aggregate broadcast back. Calibrated operating point: 75% keep at
-    sf0.01, 42% at sf0.1 — keep rate falls as corpus density grows,
-    the direction semantic dedup is for."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
-        pq_codebooks,
-        semdedup_centroid_prune,
+@query(oracle=_kn_oracle())
+def q_kn_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Interpolated Kneser-Ney trigram-LM perplexity filter
+    (operators.collocations.kn_perplexity_filter — the KenLM-class
+    CCNet §4.1 curation page): an absolute-discount (D=0.75) backoff
+    trigram LM trained on the corpus itself, per-document surprisal in
+    integer micro-nats (the jsd_source_divergence convention; the
+    −ln P expression is ONE shared SQL fragment executed by both
+    engines on exact integer count tables), keep decided against the
+    distribution-relative corpus-mean operating point (exact
+    SUM div COUNT — ~50% keep at every SF; an absolute threshold
+    cannot hold a keep rate because typical surprisal rises with
+    corpus size). Scoring is per trigram TYPE, then one
+    amplification-free (doc,trigram)→type join — map-shaped after two
+    rounds of count aggregates; corpus text never shuffles past the
+    explode."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.collocations import (
+        kn_perplexity_filter,
     )
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = pq_codebooks(1, 8, 64)[0]
-    return semdedup_centroid_prune(emb, cents, dim=64, eps_micro=2000)
+    return kn_perplexity_filter(load_table(spark, sf_dir, "documents"))
 
 
 def _semdedup_sql_prefix(k: int, dim: int, eps: int) -> str:
@@ -20582,30 +18871,27 @@ FROM bucketed b JOIN reps r USING (cell, bucket)
     )
 
 
-QUERIES["semdedup_centroid_prune"] = q_semdedup_centroid_prune
-ORACLES["semdedup_centroid_prune"] = _oracle_semdedup()
-
-
-def q_semdedup_verified_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paper-faithful SemDeDup (operators.similarity.
-    semdedup_verified_prune — Abbas et al. 2023 §2): the centroid-shell
-    screen of semdedup_centroid_prune plus the pairwise VERIFICATION
-    the paper actually requires — a non-representative is dropped only
-    if its exact integer cosine TO THE REPRESENTATIVE clears the
-    threshold. Work stays linear (one comparison per item, never
-    all-pairs); the rep-vector table is domain-bounded (≤8000 rows ×
-    dim longs ≈ 4 MB broadcast). Threshold placed at the measured
-    candidate-median rep-cosine (r11 rule: the fixture corpus has no
-    true near-dups, so a paper-style 0.95 would leave the drop branch
-    untestable)."""
+@query(oracle=_oracle_semdedup())
+def q_semdedup_centroid_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup centroid pruning (operators.similarity.
+    semdedup_centroid_prune — Abbas et al. 2023): each embedding
+    assigned to its nearest frozen-codebook cell (exact int64
+    distances, the stream_ivf_ingest codebook), scored by integer
+    micro-cosine to that centroid, and pruned one-representative-per
+    (cell, 0.002-wide cosine shell) — the pairs-free cheapest semantic
+    dedup tier (semantic_dedup_keep is the pairwise one). Map-only
+    scoring, one domain-bounded (cell × bucket ≤ 8000 rows) hash
+    aggregate broadcast back. Calibrated operating point: 75% keep at
+    sf0.01, 42% at sf0.1 — keep rate falls as corpus density grows,
+    the direction semantic dedup is for."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
         pq_codebooks,
-        semdedup_verified_prune,
+        semdedup_centroid_prune,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = pq_codebooks(1, 8, 64)[0]
-    return semdedup_verified_prune(emb, cents, dim=64, eps_micro=2000)
+    return semdedup_centroid_prune(emb, cents, dim=64, eps_micro=2000)
 
 
 def _oracle_semdedup_verified(
@@ -20632,31 +18918,27 @@ FROM checked
     )
 
 
-QUERIES["semdedup_verified_prune"] = q_semdedup_verified_prune
-ORACLES["semdedup_verified_prune"] = _oracle_semdedup_verified()
-
-
-def q_ssl_prototypes_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SSL-prototypes pruning (operators.similarity.
-    ssl_prototypes_prune — Sorscher et al. 2022; D4 stage 2): drop the
-    most-PROTOTYPICAL quarter of every frozen-codebook cell — the
-    easy examples nearest their centroid direction — keeping the hard
-    ones; the complement of semdedup_centroid_prune (which drops
-    redundant near-dups). Map-only integer micro-cosine scoring, one
-    composite-key range sort for the per-cell ranks (grouped_rank —
-    k cells is exactly the low-cardinality partition key the r8 audit
-    bans from Window.partitionBy), a k-row count broadcast back.
-    Operating point is a per-cell FRACTION of the rank distribution
-    (drop_ppm = 250000), not an absolute score — ~75% keep at every SF
-    by construction (the distribution-relative rule)."""
+@query(oracle=_oracle_semdedup_verified())
+def q_semdedup_verified_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Paper-faithful SemDeDup (operators.similarity.
+    semdedup_verified_prune — Abbas et al. 2023 §2): the centroid-shell
+    screen of semdedup_centroid_prune plus the pairwise VERIFICATION
+    the paper actually requires — a non-representative is dropped only
+    if its exact integer cosine TO THE REPRESENTATIVE clears the
+    threshold. Work stays linear (one comparison per item, never
+    all-pairs); the rep-vector table is domain-bounded (≤8000 rows ×
+    dim longs ≈ 4 MB broadcast). Threshold placed at the measured
+    candidate-median rep-cosine (r11 rule: the fixture corpus has no
+    true near-dups, so a paper-style 0.95 would leave the drop branch
+    untestable)."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
         pq_codebooks,
-        ssl_prototypes_prune,
+        semdedup_verified_prune,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = pq_codebooks(1, 8, 64)[0]
-    return ssl_prototypes_prune(emb, cents, dim=64, drop_ppm=250000)
+    return semdedup_verified_prune(emb, cents, dim=64, eps_micro=2000)
 
 
 def _oracle_ssl_prototypes(
@@ -20679,29 +18961,28 @@ FROM ranked
     )
 
 
-QUERIES["ssl_prototypes_prune"] = q_ssl_prototypes_prune
-ORACLES["ssl_prototypes_prune"] = _oracle_ssl_prototypes()
-
-
-def q_d4_pipeline_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed D4 pipeline (operators.similarity.d4_prune — Tirumala
-    et al. 2023): SemDeDup centroid pruning first (one representative
-    per thin centroid-cosine shell), then SSL-prototypes pruning over
-    the SURVIVORS (drop the most-prototypical quarter of each cell).
-    Both stages read ONE checkpointed map-only scored table — stage 2
-    re-ranks survivors from the (cell, cos_micro) columns semdedup
-    already computed, never touching the embeddings again. Every
-    corpus row is returned with stage attribution: sem_keep,
-    proto_rank (NULL for semdedup-dropped rows), and the final
-    keep = sem_keep AND stage-2 keep."""
+@query(oracle=_oracle_ssl_prototypes())
+def q_ssl_prototypes_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SSL-prototypes pruning (operators.similarity.
+    ssl_prototypes_prune — Sorscher et al. 2022; D4 stage 2): drop the
+    most-PROTOTYPICAL quarter of every frozen-codebook cell — the
+    easy examples nearest their centroid direction — keeping the hard
+    ones; the complement of semdedup_centroid_prune (which drops
+    redundant near-dups). Map-only integer micro-cosine scoring, one
+    composite-key range sort for the per-cell ranks (grouped_rank —
+    k cells is exactly the low-cardinality partition key the r8 audit
+    bans from Window.partitionBy), a k-row count broadcast back.
+    Operating point is a per-cell FRACTION of the rank distribution
+    (drop_ppm = 250000), not an absolute score — ~75% keep at every SF
+    by construction (the distribution-relative rule)."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
-        d4_prune,
         pq_codebooks,
+        ssl_prototypes_prune,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = pq_codebooks(1, 8, 64)[0]
-    return d4_prune(emb, cents, dim=64, eps_micro=2000, drop_ppm=250000)
+    return ssl_prototypes_prune(emb, cents, dim=64, drop_ppm=250000)
 
 
 def _oracle_d4(
@@ -20731,39 +19012,29 @@ FROM flagged f LEFT JOIN ranked r USING (vec_id)
     )
 
 
-QUERIES["d4_pipeline_prune"] = q_d4_pipeline_prune
-ORACLES["d4_pipeline_prune"] = _oracle_d4()
-
-
-def q_unimax_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UniMax budget-capped mixture (operators.sampling.
-    unimax_allocation — Chung et al. 2023): split a training-token
-    budget across sources as UNIFORMLY as possible subject to an
-    epoch cap — the waterfilling complement of the proportional
-    apportion_budget (Hamilton) and sqrt-temperature mixture_weights.
-    Closed-form over the ascending-capacity order in pure BIGINT (the
-    capped set is provably a prefix, so the per-row flag is
-    self-consistent); residual spread as R div u with largest-remainder
-    +1s. Budget is DISTRIBUTION-RELATIVE — 96% of total capacity,
-    computed on the group table itself (both branches exercised at
-    every SF: capped 9 / uncapped 11 at sf0.01, 2/18 at sf0.1). Scale
-    shape: one map-side-combinable aggregation collapses the corpus to
-    |sources| rows; every window runs over that tiny table."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.sampling import (
-        unimax_allocation,
+@query(oracle=_oracle_d4())
+def q_d4_pipeline_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Composed D4 pipeline (operators.similarity.d4_prune — Tirumala
+    et al. 2023): SemDeDup centroid pruning first (one representative
+    per thin centroid-cosine shell), then SSL-prototypes pruning over
+    the SURVIVORS (drop the most-prototypical quarter of each cell).
+    Both stages read ONE checkpointed map-only scored table — stage 2
+    re-ranks survivors from the (cell, cos_micro) columns semdedup
+    already computed, never touching the embeddings again. Every
+    corpus row is returned with stage attribution: sem_keep,
+    proto_rank (NULL for semdedup-dropped rows), and the final
+    keep = sem_keep AND stage-2 keep."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.similarity import (
+        d4_prune,
+        pq_codebooks,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    return unimax_allocation(
-        docs,
-        ["source"],
-        F.size(F.split(F.col("text"), " ")),
-        epoch_cap=1,
-        budget_pct_of_capacity=96,
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = pq_codebooks(1, 8, 64)[0]
+    return d4_prune(emb, cents, dim=64, eps_micro=2000, drop_ppm=250000)
 
 
-ORACLE_UNIMAX = """
+@query(oracle="""
 WITH g AS (
   SELECT source, COUNT(*) AS n_docs,
          CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
@@ -20801,7 +19072,30 @@ SELECT source, n_docs, n_tokens, capacity, capped, alloc_tokens,
        CAST((CAST(alloc_tokens AS HUGEINT) * 1000000) // n_tokens
             AS BIGINT) AS epochs_micro
 FROM alloc
-"""
+""")
+def q_unimax_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """UniMax budget-capped mixture (operators.sampling.
+    unimax_allocation — Chung et al. 2023): split a training-token
+    budget across sources as UNIFORMLY as possible subject to an
+    epoch cap — the waterfilling complement of the proportional
+    apportion_budget (Hamilton) and sqrt-temperature mixture_weights.
+    Closed-form over the ascending-capacity order in pure BIGINT (the
+    capped set is provably a prefix, so the per-row flag is
+    self-consistent); residual spread as R div u with largest-remainder
+    +1s. Budget is DISTRIBUTION-RELATIVE — 96% of total capacity,
+    computed on the group table itself (both branches exercised at
+    every SF: capped 9 / uncapped 11 at sf0.01, 2/18 at sf0.1). Scale
+    shape: one map-side-combinable aggregation collapses the corpus to
+    |sources| rows; every window runs over that tiny table."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.sampling import (
+        unimax_allocation,
+    )
 
-QUERIES["unimax_mixture"] = q_unimax_mixture
-ORACLES["unimax_mixture"] = ORACLE_UNIMAX
+    docs = load_table(spark, sf_dir, "documents")
+    return unimax_allocation(
+        docs,
+        ["source"],
+        F.size(F.split(F.col("text"), " ")),
+        epoch_cap=1,
+        budget_pct_of_capacity=96,
+    )

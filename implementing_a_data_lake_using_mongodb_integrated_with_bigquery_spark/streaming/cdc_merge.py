@@ -42,7 +42,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup import (
@@ -65,13 +65,20 @@ N_BUCKETS = 64
 PART_COL = "part_bucket"
 
 
+def bucket_expr(col: F.Column) -> F.Column:
+    """The partition bucket of a merge-key column — the ONE definition
+    the writers (:func:`with_bucket`) and the per-batch probe share, so
+    a probe bucket always names the partition the key is written to.
+    xxhash64 hashes the value's type as well as its value, so callers
+    must pass the key in the written type (the string ``id``)."""
+    return F.pmod(F.xxhash64(col), F.lit(N_BUCKETS)).cast("int")
+
+
 def with_bucket(df: DataFrame, key_col: str = "id") -> DataFrame:
     """Attach the deterministic partition bucket for ``key_col``.
     xxhash64 is stable across runs/sessions, so re-delivered events land
     in the same partition — required for idempotent merges."""
-    return df.withColumn(
-        PART_COL, F.pmod(F.xxhash64(F.col(key_col)), F.lit(N_BUCKETS)).cast("int")
-    )
+    return df.withColumn(PART_COL, bucket_expr(F.col(key_col)))
 
 
 def _has_parquet(path: str) -> bool:
@@ -107,10 +114,10 @@ def _merge_touched_partitions(
         upsert,
     )
 
-    newest_b = with_bucket(newest, key_col)
     if touched is None:
         # ≤ N_BUCKETS small ints — a bounded metadata collect, not a
         # data collect (the driver holds partition IDs, never rows)
+        newest_b = with_bucket(newest, key_col)
         touched = [r[0] for r in newest_b.select(PART_COL).distinct().collect()]
     target_raw = spark.read.parquet(target_path)
     target_touched = target_raw.filter(F.col(PART_COL).isin(touched)).drop(PART_COL)
@@ -150,26 +157,11 @@ def split_by_operation(batch: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-def apply_cdc_batch(
-    batch: DataFrame,
-    batch_id: int,
-    target_path: str,
-    places_dim: DataFrame,
-    dlq_path: str,
-) -> None:
-    """The foreachBatch body: idempotent CDC merge of one micro-batch
-    into the parquet fact target. Update events must carry the full
-    post-image in ``full_document`` (design choice per SURVEY.md §7
-    risk 3 — avoids the reference's per-event re-fetch RPC)."""
-    spark = batch.sparkSession
-    # pin the micro-batch ONCE: the merge references it through four
-    # op-type branches plus isEmpty probes, and a foreachBatch plan
-    # that references the batch N times re-scans the source N times
-    # (and multiplies numInputRows N-fold, breaking the replay
-    # batch-structure guard) — the scd2_stream.py precedent
-    batch = batch.localCheckpoint(eager=True)
-    parts = split_by_operation(batch)
-
+def probe_batch(batch: DataFrame, places_dim: DataFrame) -> Row:
+    """Every per-batch gate of :func:`apply_cdc_batch` from ONE job.
+    Fields: ``u``/``i``/``p`` unknown-op, insert and update counts;
+    ``io``/``po`` FK-orphan insert and update counts; ``tb`` the sorted
+    buckets of the FK-valid update keys."""
     # ONE probe job for every per-batch gate: the former per-branch
     # isEmpty() calls each launched their own Spark job over the batch
     # (pure scheduling overhead at replay batch sizes — r13/r14
@@ -193,7 +185,7 @@ def apply_cdc_batch(
     _dim_keys = places_dim.select(
         F.col("place_id").alias("__dim_pid")
     ).distinct()
-    _probe = (
+    return (
         batch.join(
             F.broadcast(_dim_keys),
             F.col("full_document.place_id") == F.col("__dim_pid"),
@@ -213,16 +205,37 @@ def apply_cdc_batch(
                 F.collect_set(
                     F.when(
                         _is_upd & ~_orphan,
-                        F.pmod(
-                            F.xxhash64(F.col("full_document._id")),
-                            F.lit(N_BUCKETS),
-                        ).cast("int"),
+                        # flatten_weather writes id as the string _id
+                        bucket_expr(F.col("full_document._id").cast("string")),
                     )
                 )
             ).alias("tb"),
         )
         .first()
     )
+
+
+def apply_cdc_batch(
+    batch: DataFrame,
+    batch_id: int,
+    target_path: str,
+    places_dim: DataFrame,
+    dlq_path: str,
+) -> None:
+    """The foreachBatch body: idempotent CDC merge of one micro-batch
+    into the parquet fact target. Update events must carry the full
+    post-image in ``full_document`` (design choice per SURVEY.md §7
+    risk 3 — avoids the reference's per-event re-fetch RPC)."""
+    spark = batch.sparkSession
+    # pin the micro-batch ONCE: the merge references it through four
+    # op-type branches plus isEmpty probes, and a foreachBatch plan
+    # that references the batch N times re-scans the source N times
+    # (and multiplies numInputRows N-fold, breaking the replay
+    # batch-structure guard) — the scd2_stream.py precedent
+    batch = batch.localCheckpoint(eager=True)
+    parts = split_by_operation(batch)
+
+    _probe = probe_batch(batch, places_dim)
     n_unknown, n_insert, n_update = _probe["u"], _probe["i"], _probe["p"]
     n_ins_orphans, n_upd_orphans = _probe["io"], _probe["po"]
     upd_touched = list(_probe["tb"])

@@ -46,6 +46,12 @@ def stage_phase_files(
 
     from pyspark.sql import functions as F
 
+    for ph in phases:
+        if "__phase" in ph.columns:
+            raise ValueError(
+                "phase schema must not contain a '__phase' column "
+                "(reserved by stage_phase_files)"
+            )
     os.makedirs(input_dir, exist_ok=True)
     parent = os.path.dirname(input_dir)
     idx = list(range(start, start + len(phases)))
@@ -56,12 +62,6 @@ def stage_phase_files(
         phases[0].coalesce(1).write.mode("overwrite").parquet(stage)
         src_dirs = {idx[0]: stage}
     else:
-        for ph in phases:
-            if "__phase" in ph.columns:
-                raise ValueError(
-                    "phase schema must not contain a '__phase' column "
-                    "(reserved by stage_phase_files)"
-                )
         tagged = None
         for i, ph in zip(idx, phases):
             t = ph.withColumn("__phase", F.lit(i))

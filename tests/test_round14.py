@@ -73,8 +73,9 @@ def test_stage_phase_files_rejects_empty_phase(spark, tmp_path):
 
 def test_stage_phase_files_rejects_reserved_column(spark, tmp_path):
     ph = spark.createDataFrame([(1, 0)], "k int, __phase int")
-    with pytest.raises(ValueError, match="__phase"):
-        stage_phase_files([ph, ph], str(tmp_path / "input"))
+    for phases in ([ph, ph], [ph]):  # tagged union write and single-phase write
+        with pytest.raises(ValueError, match="__phase"):
+            stage_phase_files(phases, str(tmp_path / "input"))
 
 
 def _doc(_id, place_id, temp_c=20.0):

@@ -15,11 +15,23 @@ import pytest
 from pyspark.sql import functions as F
 
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark import schemas
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.flatten import (
+    flatten_weather,
+)
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.integrity import (
+    fk_filter,
+)
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.merge import (
+    last_write_wins,
+)
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.cdc_merge import (
     N_BUCKETS,
     PART_COL,
+    probe_batch,
     read_target,
+    split_by_operation,
     start_cdc_stream,
+    with_bucket,
 )
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.windowed import (
     windowed_counts,
@@ -183,6 +195,34 @@ def test_partition_scoped_merge_leaves_untouched_partitions_alone(
     fact = read_target(spark, target)
     assert [r.temp_c for r in fact.filter(F.col("id") == "w3").collect()] == [77.0]
     assert fact.count() == 8
+
+
+def test_probe_buckets_equal_with_bucket_buckets(spark, places_dim, tmp_path):
+    """The probe's touched-bucket list ``tb`` names exactly the
+    partitions ``with_bucket`` writes the batch's FK-valid updates to,
+    so the partition-scoped merge reads and rewrites the right ones."""
+    events_dir = str(tmp_path / "events")
+    events = [
+        _event("update", doc=_doc(f"w{i}", ("hanoi", "hue")[i % 2], float(i)), key=f"w{i}")
+        for i in range(12)
+    ]
+    events += [
+        _event("update", doc=_doc("w3", "hue", 99.0), key="w3",
+               ts="2023-11-14T16:00:00.000Z"),                    # LWW twin
+        _event("update", doc=_doc("w77", "nowhere", 1.0), key="w77"),  # FK orphan
+        _event("insert", doc=_doc("w88", "hanoi", 2.0)),               # not an update
+    ]
+    _write_events(events_dir, events)
+    batch = spark.read.schema(schemas.CDC_EVENT).json(events_dir)
+
+    upd = split_by_operation(batch)["update"].select("ts", "full_document.*")
+    upd = fk_filter(upd, places_dim, "place_id")
+    newest = last_write_wins(flatten_weather(upd, passthrough=["ts"]), "id", "ts").drop("ts")
+    expected = sorted(
+        r[0] for r in with_bucket(newest).select(PART_COL).distinct().collect()
+    )
+    assert len(expected) > 1, "fixture must span more than one bucket"
+    assert list(probe_batch(batch, places_dim)["tb"]) == expected
 
 
 def test_windowed_counts_streaming(spark, tmp_path):
