@@ -11329,18 +11329,20 @@ def q_statestore_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
+        shuffle_partitions,
+    )
+
     e = load_table(spark, sf_dir, "events").select(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
     )
     root = tempfile.mkdtemp(prefix="statestore_q_")
     inp = os.path.join(root, "in")
     ckpt = os.path.join(root, "ck")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         e.write.parquet(inp)
         schema = spark.read.parquet(inp).schema
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with shuffle_partitions(spark, 8):
             q = (
                 spark.readStream.schema(schema)
                 .parquet(inp)
@@ -11353,8 +11355,6 @@ def q_statestore_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .start()
             )
             q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         state = spark.read.format("statestore").load(ckpt)
         # the value struct carries the aggregation BUFFER's internal
         # field name ("count"), not the query's output alias
@@ -15169,6 +15169,9 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sources.pyds import (
         register_weather_api,
     )
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
+        shuffle_partitions,
+    )
 
     register_weather_api(spark)
     stream = (
@@ -15194,9 +15197,7 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-partition store open/commit dominates at this keyspace.
     # 8 partitions carry the same 30 keys; restored after the bounded
     # run. Values unchanged (hash partitioning only moves keys).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_partitions(spark, 8):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -15208,8 +15209,6 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             progress = list(q.recentProgress)
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     data_batches = sum(1 for p in progress if p["numInputRows"] > 0)
     if data_batches != 6:
         raise RuntimeError(

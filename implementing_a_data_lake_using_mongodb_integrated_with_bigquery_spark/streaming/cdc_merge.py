@@ -81,17 +81,16 @@ def with_bucket(df: DataFrame, key_col: str = "id") -> DataFrame:
     return df.withColumn(PART_COL, bucket_expr(F.col(key_col)))
 
 
-def _has_parquet(path: str) -> bool:
-    for _root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
+def _has_files(path: str, suffix: str) -> bool:
+    return any(
+        f.endswith(suffix) for _root, _dirs, files in os.walk(path) for f in files
+    )
 
 
 def read_target(spark: SparkSession, path: str) -> DataFrame | None:
     """Logical view of the fact target: partition discovery over the
     hive layout, with the physical bucket column dropped."""
-    if not os.path.exists(path) or not _has_parquet(path):
+    if not os.path.exists(path) or not _has_files(path, ".parquet"):
         return None
     df = spark.read.parquet(path)
     return df.drop(PART_COL) if PART_COL in df.columns else df
@@ -141,20 +140,25 @@ def _merge_touched_partitions(
     )
 
 
-def split_by_operation(batch: DataFrame) -> dict[str, DataFrame]:
-    """T1 dispatch: partition one CDC micro-batch by operation type.
-    ``unknown`` collects events whose op is not in KNOWN_OPS."""
+def op_predicates() -> dict[str, F.Column]:
+    """The T1 dispatch predicates on ``operation_type`` — the ONE
+    definition :func:`split_by_operation` filters by and
+    :func:`probe_batch` counts by. ``unknown`` collects events whose op
+    is not in KNOWN_OPS."""
+    op = F.col("operation_type")
     return {
-        "insert": batch.filter(F.col("operation_type").isin("insert", "replace")),
-        "update": batch.filter(F.col("operation_type") == "update"),
-        "delete": batch.filter(F.col("operation_type") == "delete"),
+        "insert": op.isin("insert", "replace"),
+        "update": op == "update",
+        "delete": op == "delete",
         # null-safe: a NULL op matches neither branch of isin, so it must
         # be routed to the DLQ explicitly, not silently dropped
-        "unknown": batch.filter(
-            F.col("operation_type").isNull()
-            | ~F.col("operation_type").isin(*KNOWN_OPS)
-        ),
+        "unknown": op.isNull() | ~op.isin(*KNOWN_OPS),
     }
+
+
+def split_by_operation(batch: DataFrame) -> dict[str, DataFrame]:
+    """T1 dispatch: partition one CDC micro-batch by operation type."""
+    return {kind: batch.filter(pred) for kind, pred in op_predicates().items()}
 
 
 def probe_batch(batch: DataFrame, places_dim: DataFrame) -> Row:
@@ -176,11 +180,8 @@ def probe_batch(batch: DataFrame, places_dim: DataFrame) -> Row:
     #   - `tb` collects the buckets of FK-VALID update keys (the LWW
     #     collapse preserves the key set, so post-collapse buckets are
     #     identical) — ≤ N_BUCKETS small ints, bounded metadata.
-    _unknown_cond = F.col("operation_type").isNull() | ~F.col(
-        "operation_type"
-    ).isin(*KNOWN_OPS)
-    _is_ins = F.col("operation_type").isin("insert", "replace")
-    _is_upd = F.col("operation_type") == "update"
+    ops = op_predicates()
+    _is_ins, _is_upd = ops["insert"], ops["update"]
     _orphan = F.col("__dim_pid").isNull()
     _dim_keys = places_dim.select(
         F.col("place_id").alias("__dim_pid")
@@ -192,7 +193,7 @@ def probe_batch(batch: DataFrame, places_dim: DataFrame) -> Row:
             "left",
         )
         .agg(
-            F.coalesce(F.sum(_unknown_cond.cast("long")), F.lit(0)).alias("u"),
+            F.coalesce(F.sum(ops["unknown"].cast("long")), F.lit(0)).alias("u"),
             F.coalesce(F.sum(_is_ins.cast("long")), F.lit(0)).alias("i"),
             F.coalesce(F.sum(_is_upd.cast("long")), F.lit(0)).alias("p"),
             F.coalesce(
@@ -335,75 +336,16 @@ def cdc_merge_replay(
     reference's daemon loop (T1 dispatch → insert path → LWW update
     path → delete no-op → unknown-op DLQ,
     ``src/process_insert_update_weather_data.py:166-187``) executed as
-    real micro-batches: each phase lands as one parquet file with
-    strictly increasing mtimes (``streaming/phasing.py``), and
-    ``maxFilesPerTrigger=1`` maps phase i → micro-batch i, so the
-    cross-batch state (the target table itself — inserts in batch 0
-    are update targets in batch 1) is a pure function of the phase
-    construction and hence relationally oracle-able.
+    real micro-batches through ``streaming.phasing.PhasedReplay``: phase
+    i is micro-batch i (count- and path-guarded), so the cross-batch
+    state (the target table itself — inserts in batch 0 are update
+    targets in batch 1) is a pure function of the phase construction
+    and hence relationally oracle-able.
 
     Returns (fact, dlq_fk, dlq_unknown) as batch DataFrames read back
     from the target and dead-letter sinks, each eagerly
-    localCheckpoint-ed so the temp stores can be deleted. The
-    phase→batch mapping is guarded both by row counts
-    (``check_batch_structure``) and by file paths
-    (``check_admission_log``)."""
-    import shutil
-    import tempfile
-
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.schemas import (
-        CDC_EVENT,
-    )
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
-        check_admission_log,
-        check_batch_structure,
-        stage_phase_files,
-    )
-
-    root = tempfile.mkdtemp(prefix="cdc_replay_")
-    input_dir = os.path.join(root, "input")
-    target = os.path.join(root, "fact")
-    dlq = os.path.join(root, "dlq")
-    ckpt = os.path.join(root, "ckpt")
-    try:
-        counts = stage_phase_files(phases, input_dir)
-        stream = (
-            spark.readStream.schema(CDC_EVENT)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(input_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                cdc_foreach_batch(target, places_dim, dlq)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        check_batch_structure(list(q.recentProgress), counts, "cdc_merge_replay")
-        check_admission_log(ckpt, len(phases), "cdc_merge_replay")
-
-        fact = read_target(spark, target)
-        fact = fact.localCheckpoint(eager=True) if fact is not None else None
-
-        def _read_dlq(sub: str, schema: str) -> DataFrame:
-            path = os.path.join(dlq, sub)
-            if _has_json(path):
-                return spark.read.json(path).localCheckpoint(eager=True)
-            return spark.createDataFrame([], schema)
-
-        dlq_fk = _read_dlq(
-            "fk_violations",
-            "_id string, place_id string, "
-            "current struct<temp_c: double>, batch_id long",
-        )
-        dlq_unknown = _read_dlq(
-            "unknown_ops", "operation_type string, batch_id long"
-        )
-        return fact, dlq_fk, dlq_unknown
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    localCheckpoint-ed so the temp stores can be deleted."""
+    return _replay_runs(spark, [phases], places_dim, "cdc_merge_replay")
 
 
 def cdc_merge_restart(
@@ -424,57 +366,38 @@ def cdc_merge_restart(
     idempotent by design, reference T3). Admission is path-guarded
     per run and across the restart. Returns (fact, dlq_fk,
     dlq_unknown) like :func:`cdc_merge_replay`."""
-    import shutil
-    import tempfile
+    return _replay_runs(
+        spark, [[phase1], [phase2]], places_dim, "cdc_merge_restart"
+    )
 
+
+def _replay_runs(
+    spark: SparkSession,
+    runs: list[list[DataFrame]],
+    places_dim: DataFrame,
+    where: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """One replay query per entry of ``runs``, all on one checkpoint:
+    a second run is the restart."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.schemas import (
         CDC_EVENT,
     )
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
-        check_admission_log,
-        check_batch_structure,
-        stage_phase_files,
+        PhasedReplay,
     )
 
-    root = tempfile.mkdtemp(prefix="cdc_restart_")
-    input_dir = os.path.join(root, "input")
-    target = os.path.join(root, "fact")
-    dlq = os.path.join(root, "dlq")
-    ckpt = os.path.join(root, "ckpt")
-
-    def run_once() -> list:
-        stream = (
-            spark.readStream.schema(CDC_EVENT)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(input_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                cdc_foreach_batch(target, places_dim, dlq)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return list(q.recentProgress)
-
-    try:
-        c1 = stage_phase_files([phase1], input_dir)
-        prog1 = run_once()
-        check_batch_structure(prog1, c1, "cdc_merge_restart run 1")
-        # the restart: phase 2 lands AFTER run 1 committed its offsets
-        c2 = stage_phase_files([phase2], input_dir, start=1)
-        prog2 = run_once()
-        check_batch_structure(prog2, c2, "cdc_merge_restart run 2")
-        check_admission_log(ckpt, 2, "cdc_merge_restart")
+    with PhasedReplay(spark, where, schema=CDC_EVENT) as r:
+        target, dlq = r.path("fact"), r.path("dlq")
+        sink = cdc_foreach_batch(target, places_dim, dlq)
+        for phases in runs:
+            r.run(phases, sink)
 
         fact = read_target(spark, target)
         fact = fact.localCheckpoint(eager=True) if fact is not None else None
 
         def _read_dlq(sub: str, schema: str) -> DataFrame:
             path = os.path.join(dlq, sub)
-            if _has_json(path):
+            if _has_files(path, ".json"):
                 return spark.read.json(path).localCheckpoint(eager=True)
             return spark.createDataFrame([], schema)
 
@@ -487,15 +410,6 @@ def cdc_merge_restart(
             "unknown_ops", "operation_type string, batch_id long"
         )
         return fact, dlq_fk, dlq_unknown
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _has_json(path: str) -> bool:
-    for _root, _dirs, files in os.walk(path):
-        if any(f.endswith(".json") for f in files):
-            return True
-    return False
 
 
 def start_cdc_stream(

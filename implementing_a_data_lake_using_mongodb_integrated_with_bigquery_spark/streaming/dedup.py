@@ -14,11 +14,16 @@ arithmetic without touching the sink.
 from __future__ import annotations
 
 import itertools
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
+    shuffle_partitions,
+)
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.windowed import (
+    _open_event_stream,
+)
 
 _SINK_SEQ = itertools.count()
 
@@ -50,29 +55,9 @@ def stream_dedup_once(
     shuffle setting is restored after the run (see
     ``streaming/joins.py`` for the same discipline).
     """
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-    raw_schema = spark.read.parquet(events_path).schema
-    base = os.path.dirname(events_path.rstrip("/")) or "."
-    glob = events_path + "*" if not any(c in events_path for c in "*?[{") else events_path
-
-    def one_stream() -> DataFrame:
-        s = (
-            spark.readStream.schema(raw_schema)
-            .option("basePath", base)
-            .parquet(glob)
-        )
-        if isinstance(raw_schema[ts_col].dataType, T.LongType):
-            s = s.withColumn(ts_col, F.timestamp_micros(F.expr(f"{ts_col} div 1000")))
-        if isinstance(raw_schema[ts_col].dataType, T.TimestampNTZType):
-            s = s.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        return s
-
-    doubled = one_stream().union(one_stream())
+    doubled = _open_event_stream(spark, events_path, ts_col)[0].union(
+        _open_event_stream(spark, events_path, ts_col)[0]
+    )
     deduped = doubled.withWatermark(ts_col, lateness).dropDuplicatesWithinWatermark(
         key_cols
     )
@@ -80,7 +65,7 @@ def stream_dedup_once(
     aggs = aggs or [F.count(F.lit(1)).alias("n_events")]
     out = deduped.groupBy(*group_cols).agg(*aggs) if (group_cols or aggs) else deduped
     sink = f"stream_dedup_once_{next(_SINK_SEQ)}"
-    try:
+    with shuffle_partitions(spark, state_partitions):
         q = (
             out.writeStream.format("memory")
             .queryName(sink)
@@ -89,6 +74,4 @@ def stream_dedup_once(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(sink)

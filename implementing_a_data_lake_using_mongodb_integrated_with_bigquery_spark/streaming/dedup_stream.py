@@ -24,10 +24,7 @@ operator (they are the ordinary ``minhash_banded_pairs`` run).
 
 from __future__ import annotations
 
-import itertools
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,12 +37,8 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sourc
     compact_store,
 )
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
-    check_admission_log,
-    check_batch_structure,
-    stage_phase_files,
+    PhasedReplay,
 )
-
-_SEQ = itertools.count()
 
 
 def incremental_dedup_stream(
@@ -75,23 +68,14 @@ def incremental_dedup_stream(
     Same r=2/b=16 recall-≈1 banding argument as the batch operator, so
     the exact-Jaccard sequential SQL twin is the oracle. Returns
     (result, stats); stats carries the per-batch structure guard."""
-    root = tempfile.mkdtemp(prefix="stream_dedup_")
-    bands_dir = os.path.join(root, "bands")
-    sh_dir = os.path.join(root, "shingles")
-    results_dir = os.path.join(root, "results")
-    input_dir = os.path.join(root, "input")
-
-    try:
+    with PhasedReplay(spark, "incremental_dedup_stream") as r:
+        bands_dir, sh_dir = r.path("bands"), r.path("shingles")
+        results_dir = r.path("results")
         # corpus index persisted ONCE: shingle table + band rows
         ex = _shingle_table(corpus, id_col, text_col, n)
         ex.write.parquet(sh_dir)
         band_table(ex, num_hashes, bands).write.parquet(bands_dir)
         ex.unpersist()
-
-        phase_counts = stage_phase_files(
-            [p.select(id_col, text_col) for p in phases], input_dir
-        )
-        schema = spark.read.parquet(input_dir).schema
 
         def screen(batch_df: DataFrame, _batch_id: int) -> None:
             sp = batch_df.sparkSession
@@ -163,25 +147,7 @@ def incremental_dedup_stream(
             )
             inc.unpersist()
 
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(input_dir)
-            .writeStream.foreachBatch(screen)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .queryName(f"incremental_dedup_stream_{next(_SEQ)}")
-            .start()
-        )
-        q.awaitTermination()
-        data = check_batch_structure(
-            list(q.recentProgress), phase_counts, "incremental_dedup_stream"
-        )
-        # path-exact phase→batch guard (counts can collide across
-        # equal-sized phases; the checkpoint's source log cannot)
-        check_admission_log(
-            os.path.join(root, "ckpt"), len(phase_counts), "incremental_dedup_stream"
-        )
+        data = r.run([p.select(id_col, text_col) for p in phases], screen)
         compaction = None
         if os.path.isdir(results_dir):
             # the accreting index (shingles + band rows) and the
@@ -208,8 +174,6 @@ def incremental_dedup_stream(
                 f"{id_col} {id_t}, is_novel boolean, dup_of {id_t}, "
                 "jaccard double",
             )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     stats = {
         "data_batches": len(data),
         "rows_per_batch": [p["numInputRows"] for p in data],

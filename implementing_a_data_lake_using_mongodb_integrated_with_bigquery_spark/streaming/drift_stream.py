@@ -21,21 +21,12 @@ written once before the stream starts.
 
 from __future__ import annotations
 
-import itertools
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
-    check_admission_log,
-    check_batch_structure,
-    stage_phase_files,
+    PhasedReplay,
 )
-
-_SEQ = itertools.count()
 
 
 def _bin_col(value_col: str, n_bins: int, lo: float, hi: float):
@@ -56,23 +47,14 @@ def psi_stream_phased(
     n_bins: int = 10,
     lo: float = 0.0,
     hi: float = 1000.0,
-    shuffle_partitions: int | None = 8,
 ) -> tuple[DataFrame, dict]:
     """Replay ``phases`` one micro-batch each; score every batch's
     ``value_col`` distribution against ``reference`` with PSI over
     fixed equal-width bins. Returns ((batch_id, n_batch, psi) rows,
     stats). Zero-mass bins on either side are skipped (standard PSI);
     the scaled-BIGINT term sum keeps the metric hash-stable."""
-    root = tempfile.mkdtemp(prefix="psi_stream_")
-    input_dir = os.path.join(root, "input")
-    ref_dir = os.path.join(root, "ref")
-    out_dir = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-    try:
-        phase_counts = stage_phase_files(
-            [p.select(value_col) for p in phases], input_dir
-        )
-        schema = spark.read.parquet(input_dir).schema
+    with PhasedReplay(spark, "psi_stream_phased", partitions=8) as r:
+        ref_dir, out_dir = r.path("ref"), r.path("out")
         (
             reference.groupBy(
                 _bin_col(value_col, n_bins, lo, hi).alias("bin")
@@ -109,32 +91,8 @@ def psi_stream_phased(
             )
             row.coalesce(1).write.mode("append").parquet(out_dir)
 
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        if shuffle_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(shuffle_partitions)
-            )
-        try:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(input_dir)
-                .writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .queryName(f"psi_stream_{next(_SEQ)}")
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        data = check_batch_structure(
-            list(q.recentProgress), phase_counts, "psi_stream_phased"
-        )
-        check_admission_log(ckpt, len(phase_counts), "psi_stream_phased")
+        data = r.run([p.select(value_col) for p in phases], apply_batch)
         result = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     stats = {
         "data_batches": len(data),
         "rows_per_batch": [p["numInputRows"] for p in data],

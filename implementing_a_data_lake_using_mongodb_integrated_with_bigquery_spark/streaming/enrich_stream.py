@@ -19,22 +19,15 @@ discipline as the other bounded replays (`streaming.phasing`).
 
 from __future__ import annotations
 
-import itertools
 import os
-import shutil
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
-    check_admission_log,
-    check_batch_structure,
-    stage_phase_files,
+    PhasedReplay,
 )
-
-_SEQ = itertools.count()
 
 
 def evolving_dim_enrich_phased(
@@ -44,20 +37,14 @@ def evolving_dim_enrich_phased(
     join_col: str,
     agg_cols: Callable[[], list],
     group_cols: list[str],
-    shuffle_partitions: int | None = 8,
 ) -> tuple[DataFrame, dict]:
     """Replay ``phases`` one micro-batch each; batch ``i`` is
     broadcast-joined to ``dim_builder(spark, i)`` (the dim version in
     effect at that batch), aggregated by ``group_cols`` +
     ``agg_cols()``, stamped with ``batch_id`` and appended to the
     output store. Returns (output DataFrame, stats)."""
-    root = tempfile.mkdtemp(prefix="enrich_stream_")
-    input_dir = os.path.join(root, "input")
-    out_dir = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-    try:
-        phase_counts = stage_phase_files(phases, input_dir)
-        schema = spark.read.parquet(input_dir).schema
+    with PhasedReplay(spark, "evolving_dim_enrich", partitions=8) as r:
+        out_dir = r.path("out")
         os.makedirs(out_dir, exist_ok=True)
 
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -73,29 +60,7 @@ def evolving_dim_enrich_phased(
             # read-and-overwrite of earlier batches' output
             enriched.write.parquet(os.path.join(out_dir, f"batch={batch_id}"))
 
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        if shuffle_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(shuffle_partitions)
-            )
-        try:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(input_dir)
-                .writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .queryName(f"enrich_stream_{next(_SEQ)}")
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        data = check_batch_structure(
-            list(q.recentProgress), phase_counts, "evolving_dim_enrich"
-        )
-        check_admission_log(ckpt, len(phase_counts), "evolving_dim_enrich")
+        data = r.run(phases, apply_batch)
         parts = [
             spark.read.parquet(os.path.join(out_dir, d))
             for d in sorted(os.listdir(out_dir))
@@ -104,8 +69,6 @@ def evolving_dim_enrich_phased(
         for p in parts[1:]:
             result = result.unionByName(p)
         result = result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     stats = {
         "data_batches": len(data),
         "rows_per_batch": [p["numInputRows"] for p in data],

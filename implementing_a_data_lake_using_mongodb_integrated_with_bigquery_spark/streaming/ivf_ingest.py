@@ -17,11 +17,6 @@ cell id bit-for-bit from the same inlined literals.
 
 from __future__ import annotations
 
-import itertools
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,12 +27,8 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sourc
     compact_store,
 )
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
-    check_admission_log,
-    check_batch_structure,
-    stage_phase_files,
+    PhasedReplay,
 )
-
-_SEQ = itertools.count()
 
 
 def ivf_ingest_phased(
@@ -60,15 +51,8 @@ def ivf_ingest_phased(
     (assignment is a literal-argmin expression; the append never
     shuffles); the final audit is one hash aggregate over the store.
     """
-    root = tempfile.mkdtemp(prefix="ivf_ingest_")
-    input_dir = os.path.join(root, "input")
-    store = os.path.join(root, "store")
-    ckpt = os.path.join(root, "ckpt")
-    try:
-        phase_counts = stage_phase_files(
-            [p.select(id_col, vec_col) for p in phases], input_dir
-        )
-        schema = spark.read.parquet(input_dir).schema
+    with PhasedReplay(spark, "ivf_ingest_phased") as r:
+        store = r.path("store")
 
         def ingest(batch_df: DataFrame, _batch_id: int) -> None:
             batch_df.select(
@@ -78,21 +62,7 @@ def ivf_ingest_phased(
                 ).alias("cell"),
             ).write.mode("append").parquet(store)
 
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(input_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .queryName(f"ivf_ingest_{next(_SEQ)}")
-            .start()
-        )
-        q.awaitTermination()
-        data = check_batch_structure(
-            list(q.recentProgress), phase_counts, "ivf_ingest_phased"
-        )
-        check_admission_log(ckpt, len(phase_counts), "ivf_ingest_phased")
+        data = r.run([p.select(id_col, vec_col) for p in phases], ingest)
         # the ingest appended one file-set per micro-batch — the store
         # accretes small files forever. Compact cell-clustered under
         # the footer-count invariant BEFORE the audit reads it (the ops
@@ -109,8 +79,6 @@ def ivf_ingest_phased(
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     stats = {
         "data_batches": len(data),
         "rows_per_batch": [p["numInputRows"] for p in data],

@@ -11,33 +11,18 @@ bound how long either side waits for its match.
 from __future__ import annotations
 
 import itertools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
+    shuffle_partitions,
+)
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.windowed import (
+    _open_event_stream,
+)
 
 _SINK_SEQ = itertools.count()
-
-
-def _event_stream(
-    spark: SparkSession, events_path: str, ts_col: str = "ts"
-) -> DataFrame:
-    """File stream over one lake table with the engine's standard
-    NTZ/nanos event-time normalization (cast to TIMESTAMP for
-    watermarking; see streaming/windowed.py)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-    raw_schema = spark.read.parquet(events_path).schema
-    base = os.path.dirname(events_path.rstrip("/")) or "."
-    glob = events_path + "*" if not any(c in events_path for c in "*?[{") else events_path
-    s = spark.readStream.schema(raw_schema).option("basePath", base).parquet(glob)
-    if isinstance(raw_schema[ts_col].dataType, T.LongType):
-        s = s.withColumn(ts_col, F.timestamp_micros(F.expr(f"{ts_col} div 1000")))
-    if isinstance(raw_schema[ts_col].dataType, T.TimestampNTZType):
-        s = s.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return s
 
 
 def _watermarked_pair(
@@ -54,7 +39,7 @@ def _watermarked_pair(
     lateness wiring, so the inner, outer, and chained variants can
     never drift apart."""
     left = (
-        _event_stream(spark, events_path)
+        _open_event_stream(spark, events_path, "ts")[0]
         .filter(F.col("event_type") == left_type)
         .select(
             F.col(key_col).alias("k"),
@@ -64,7 +49,7 @@ def _watermarked_pair(
         .withWatermark("left_ts", lateness)
     )
     right = (
-        _event_stream(spark, events_path)
+        _open_event_stream(spark, events_path, "ts")[0]
         .filter(F.col("event_type") == right_type)
         .select(
             F.col(key_col).alias("k2"),
@@ -102,15 +87,12 @@ def _attribution_once(
     how: str,
     sink_tag: str,
 ) -> DataFrame:
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     left, right = _watermarked_pair(
         spark, events_path, key_col, left_type, right_type, lateness
     )
     joined = _interval_join(left, right, horizon, how)
     sink = f"{sink_tag}_{next(_SINK_SEQ)}"
-    try:
+    with shuffle_partitions(spark, state_partitions):
         q = (
             joined.select(
                 "k", "left_id", "right_id", "left_ts", "right_ts", "right_value"
@@ -122,8 +104,6 @@ def _attribution_once(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(sink)
 
 
@@ -186,7 +166,7 @@ def stream_static_enrich_once(
     aggregation makes the final table replay-deterministic: it equals
     the batch join+agg over the same files, which is exactly what the
     DuckDB oracle computes."""
-    stream = _event_stream(spark, events_path)
+    stream = _open_event_stream(spark, events_path, "ts")[0]
     enriched = stream.join(
         F.broadcast(dim.select(F.col(dim_key).alias(key_col), dim_attr)),
         key_col,
@@ -271,9 +251,6 @@ def chained_join_window_once(
     time − lateness) — pinned empirically with 15-minute windows
     against a dense synthetic stream (the hour-coarse real replay
     cannot discriminate W from W − horizon)."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     left, right = _watermarked_pair(
         spark, events_path, key_col, left_type, right_type, lateness
     )
@@ -283,7 +260,7 @@ def chained_join_window_once(
         F.sum(F.round(F.col("right_value") * 10000).cast("long")).alias("_sv"),
     )
     sink = f"chained_join_window_once_{next(_SINK_SEQ)}"
-    try:
+    with shuffle_partitions(spark, state_partitions):
         q = (
             aggd.select(
                 F.col("w.start").alias("window_start"),
@@ -297,8 +274,6 @@ def chained_join_window_once(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(sink)
 
 
@@ -339,15 +314,12 @@ def attribution_full_outer_join_once(
     null on left-only rows) so callers can group on
     ``coalesce(k, k2)``.
     """
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     left, right = _watermarked_pair(
         spark, events_path, key_col, left_type, right_type, lateness
     )
     joined = _interval_join(left, right, horizon, "full_outer")
     sink = f"attribution_full_outer_{next(_SINK_SEQ)}"
-    try:
+    with shuffle_partitions(spark, state_partitions):
         q = (
             joined.select(
                 "k", "k2", "left_id", "right_id", "left_ts", "right_ts",
@@ -360,8 +332,6 @@ def attribution_full_outer_join_once(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(sink)
 
 
@@ -405,10 +375,6 @@ def restart_attribution_join(
     stage2 = _os.path.join(root, "p2stage")
     phase1.coalesce(1).write.parquet(input_dir)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-
     def run_phase() -> list:
         left, right = _watermarked_pair(
             spark, input_dir + "/", key_col, left_type, right_type, lateness
@@ -428,17 +394,17 @@ def restart_attribution_join(
         return list(q.recentProgress)
 
     try:
-        prog1 = run_phase()
-        phase2.coalesce(1).write.parquet(stage2)
-        for f in _os.listdir(stage2):
-            if f.endswith(".parquet"):
-                _os.link(
-                    _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
-                )
-        prog2 = run_phase()
-        result = spark.read.parquet(out_dir).localCheckpoint(eager=True)
+        with shuffle_partitions(spark, state_partitions):
+            prog1 = run_phase()
+            phase2.coalesce(1).write.parquet(stage2)
+            for f in _os.listdir(stage2):
+                if f.endswith(".parquet"):
+                    _os.link(
+                        _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
+                    )
+            prog2 = run_phase()
+            result = spark.read.parquet(out_dir).localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(root, ignore_errors=True)
 
     def facts(progress: list) -> dict:
@@ -477,15 +443,12 @@ def attribution_semi_join_once(
     emits, i.e. exactly the batch EXISTS semantics the oracle runs.
     Output carries only left columns, the semi contract.
     """
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     left, right = _watermarked_pair(
         spark, events_path, key_col, left_type, right_type, lateness
     )
     joined = _interval_join(left, right, horizon, "left_semi")
     sink = f"attribution_semi_{next(_SINK_SEQ)}"
-    try:
+    with shuffle_partitions(spark, state_partitions):
         q = (
             joined.select("k", "left_id", "left_ts")
             .writeStream.format("memory")
@@ -495,6 +458,4 @@ def attribution_semi_join_once(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(sink)

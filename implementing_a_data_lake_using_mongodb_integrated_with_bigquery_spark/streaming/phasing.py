@@ -1,18 +1,138 @@
-"""Deterministic multi-micro-batch replay staging.
+"""Deterministic multi-micro-batch replays: one runner for all of them.
 
 A bounded streaming query is only oracle-able if the micro-batch
 structure is a pure function of the data: each logical phase lands as
 exactly ONE parquet file with strictly increasing mtimes, so the file
 source's oldest-first ordering replays phase i as micro-batch i under
-``maxFilesPerTrigger=1``. Shared by ``windowed.update_merge_phased``
-and ``dedup_stream.incremental_dedup_stream``.
+``maxFilesPerTrigger=1``. :class:`PhasedReplay` owns that whole
+contract — the temp root, the staging (:func:`stage_phase_files`), the
+file source, the ``availableNow`` run on one checkpoint, the row-count
+and path-exact guards (:func:`check_batch_structure`,
+:func:`check_admission_log`) and the shuffle-partition scope
+(:func:`shuffle_partitions`). Every phased replay in the package is one
+call::
+
+    with PhasedReplay(spark, "psi_stream_phased", partitions=8) as r:
+        data = r.run(phases, foreach_batch_body)
+        out = spark.read.parquet(r.path("out")).localCheckpoint(eager=True)
+
+A second ``run`` on the same runner stages its phases after the earlier
+ones and restarts the query from the same checkpoint — the
+checkpoint-restart replay (``cdc_merge.cdc_merge_restart``).
 """
 
 from __future__ import annotations
 
+import itertools
 import os
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+_SEQ = itertools.count()
+
+
+@contextmanager
+def shuffle_partitions(spark: SparkSession, n: int | None) -> Iterator[None]:
+    """Run the body with ``spark.sql.shuffle.partitions`` set to ``n``
+    (``None`` leaves it as it is) and restore the previous value
+    afterwards, also when the body raises. A stateful query fixes its
+    state-store count from this setting at its first start, so bounded
+    replays size it to their keyspace (per-partition store open/commit
+    cost dominates over a small keyspace) without leaking the setting
+    into the session."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    if n is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+class PhasedReplay:
+    """A phase-per-micro-batch replay under one temp root.
+
+    ``where`` names the replay in guard errors, the temp root and the
+    query names. ``partitions`` is the shuffle-partition count the
+    queries start under (``None``: the session's). ``schema`` is the
+    declared stream schema; ``None`` takes the staged files' footer
+    schema. The temp root — staged input, checkpoint and whatever the
+    caller keeps under :meth:`path` — is removed when the ``with`` block
+    ends, also on error, so results must be pinned (``localCheckpoint``)
+    inside it."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        where: str,
+        partitions: int | None = None,
+        schema: StructType | None = None,
+    ) -> None:
+        self.spark = spark
+        self.where = where
+        self.partitions = partitions
+        self.schema = schema
+        self.n_phases = 0
+        self.name: str | None = None
+
+    def __enter__(self) -> PhasedReplay:
+        self.root = tempfile.mkdtemp(prefix=f"{self.where}_")
+        return self
+
+    def __exit__(self, *exc) -> None:
+        shutil.rmtree(self.root, ignore_errors=True)
+
+    def path(self, name: str) -> str:
+        """A path under the temp root, for the caller's sinks."""
+        return os.path.join(self.root, name)
+
+    def run(
+        self,
+        phases: list[DataFrame],
+        sink: Callable[[DataFrame, int], None] | str,
+        source: Callable[[str], DataFrame] | None = None,
+        output_mode: str = "append",
+    ) -> list[dict]:
+        """Stage ``phases`` after any earlier run's, replay them as one
+        ``availableNow`` query on the runner's checkpoint and return the
+        data micro-batches' progress, one per phase in phase order.
+
+        ``sink`` is a ``foreachBatch`` body, or ``"memory"`` for a memory
+        sink readable as ``spark.table(r.name)``. ``source`` maps the
+        staged input directory to the stream to write (the default is
+        the parquet file source); a custom source must keep
+        ``maxFilesPerTrigger=1``."""
+        input_dir, ckpt = self.path("input"), self.path("ckpt")
+        counts = stage_phase_files(phases, input_dir, start=self.n_phases)
+        self.n_phases += len(phases)
+        if source is None:
+            schema = self.schema or self.spark.read.parquet(input_dir).schema
+            stream = (
+                self.spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(input_dir)
+            )
+        else:
+            stream = source(input_dir)
+        self.name = f"{self.where}_{next(_SEQ)}"
+        writer = (
+            stream.writeStream.queryName(self.name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+        )
+        writer = writer.format("memory") if sink == "memory" else writer.foreachBatch(sink)
+        with shuffle_partitions(self.spark, self.partitions):
+            q = writer.start()
+            q.awaitTermination()
+        data = check_batch_structure(list(q.recentProgress), counts, self.where)
+        check_admission_log(ckpt, self.n_phases, self.where)
+        return data
 
 
 def stage_phase_files(
@@ -40,8 +160,6 @@ def stage_phase_files(
     ``phase-NNN.parquet`` layout the admission-log guard expects —
     invariants (one file per phase, fixed mtimes, footer counts,
     loud empty-phase reject) unchanged."""
-    import tempfile
-
     import pyarrow.parquet as pq
 
     from pyspark.sql import functions as F

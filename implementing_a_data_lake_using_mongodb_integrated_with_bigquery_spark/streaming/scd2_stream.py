@@ -19,10 +19,8 @@ The parity test pins it; the oracle is the batch SQL.
 
 from __future__ import annotations
 
-import itertools
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -34,12 +32,8 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.sourc
     compact_store,
 )
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
-    check_admission_log,
-    check_batch_structure,
-    stage_phase_files,
+    PhasedReplay,
 )
-
-_SEQ = itertools.count()
 
 
 def _merge_versions(
@@ -111,28 +105,20 @@ def scd2_stream_phased(
     ts_col: str,
     attr_cols: list[str],
     tiebreak_col: str,
-    shuffle_partitions: int | None = 8,
 ) -> tuple[DataFrame, dict]:
     """Replay ``phases`` (event-time-monotone per key) one micro-batch
     each through the foreachBatch SCD2 maintenance loop and return the
     final version table. Returns (store DataFrame, stats with the
     batch-structure guards).
 
-    ``shuffle_partitions`` sizes the per-batch window/join shuffles to
-    the BATCH, not the CPU count (same reasoning as the stateful
-    queries' state_partitions): each micro-batch runs several small
-    exchanges, and per-partition task overhead dominates over a
-    batch-sized keyspace. Restored after the bounded run."""
-    root = tempfile.mkdtemp(prefix="scd2_stream_")
-    input_dir = os.path.join(root, "input")
-    store_dir = os.path.join(root, "store")
-    ckpt = os.path.join(root, "ckpt")
+    The replay runs under 8 shuffle partitions, sized to the BATCH, not
+    the CPU count (same reasoning as the stateful queries'
+    state_partitions): each micro-batch runs several small exchanges,
+    and per-partition task overhead dominates over a batch-sized
+    keyspace."""
     cols = [key_col, ts_col, *attr_cols, tiebreak_col]
-    try:
-        phase_counts = stage_phase_files(
-            [p.select(*cols) for p in phases], input_dir
-        )
-        schema = spark.read.parquet(input_dir).schema
+    with PhasedReplay(spark, "scd2_stream_phased", partitions=8) as r:
+        store_dir = r.path("store")
 
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
             sp = batch_df.sparkSession
@@ -159,36 +145,12 @@ def scd2_stream_phased(
                 shutil.rmtree(store_dir)
             os.rename(tmp, store_dir)
 
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        if shuffle_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(shuffle_partitions)
-            )
-        try:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(input_dir)
-                .writeStream.foreachBatch(apply_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .queryName(f"scd2_stream_{next(_SEQ)}")
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        data = check_batch_structure(
-            list(q.recentProgress), phase_counts, "scd2_stream_phased"
-        )
-        check_admission_log(ckpt, len(phase_counts), "scd2_stream_phased")
+        data = r.run([p.select(*cols) for p in phases], apply_batch)
         # each generation leaves one file per shuffle partition —
         # compact under the footer-count invariant before the final
         # readout so the maintained table hands off scanner-sized files
         compaction = compact_store(spark, store_dir, cluster_by=[key_col])
         result = spark.read.parquet(store_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     stats = {
         "data_batches": len(data),
         "rows_per_batch": [p["numInputRows"] for p in data],

@@ -16,6 +16,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
+    PhasedReplay,
+    shuffle_partitions,
+)
+
 _SINK_SEQ = itertools.count()
 
 
@@ -273,15 +278,10 @@ def session_windows_once(
         *agg_names,
     )
     sink = f"session_windows_once_{next(_SINK_SEQ)}"
-    # state-partition sizing, same reasoning as streaming/joins.py:
-    # per-partition store open/commit cost dominates over a small
-    # keyspace, so size to the group-key cardinality, not the CPU
-    # count; restored after the bounded run (a production deployment
-    # pins this once via its checkpoint).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    # state-partition sizing: size to the group-key cardinality, not
+    # the CPU count (a production deployment pins this once via its
+    # checkpoint)
+    with shuffle_partitions(spark, state_partitions):
         q = (
             out.writeStream.format("memory")
             .queryName(sink)
@@ -308,8 +308,6 @@ def session_windows_once(
                 "one (watermark still 0 on arrival). Coalesce the input "
                 "or extend the oracle to model per-batch watermarks."
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     result = spark.table(sink)
     if ntz_event_time:
         result = result.withColumn(
@@ -357,10 +355,6 @@ def restart_session_windows(
     stage2 = _os.path.join(root, "p2stage")
     phase1.coalesce(1).write.parquet(input_dir)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-
     ntz_event_time = False
 
     def run_phase() -> list:
@@ -389,24 +383,24 @@ def restart_session_windows(
         return list(q.recentProgress)
 
     try:
-        prog1 = run_phase()
-        phase2.coalesce(1).write.parquet(stage2)
-        for f in _os.listdir(stage2):
-            if f.endswith(".parquet"):
-                _os.link(
-                    _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
+        with shuffle_partitions(spark, state_partitions):
+            prog1 = run_phase()
+            phase2.coalesce(1).write.parquet(stage2)
+            for f in _os.listdir(stage2):
+                if f.endswith(".parquet"):
+                    _os.link(
+                        _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
+                    )
+            prog2 = run_phase()
+            result = spark.read.parquet(out_dir)
+            if ntz_event_time:
+                result = result.withColumn(
+                    "session_start", F.col("session_start").cast("timestamp_ntz")
+                ).withColumn(
+                    "session_end", F.col("session_end").cast("timestamp_ntz")
                 )
-        prog2 = run_phase()
-        result = spark.read.parquet(out_dir)
-        if ntz_event_time:
-            result = result.withColumn(
-                "session_start", F.col("session_start").cast("timestamp_ntz")
-            ).withColumn(
-                "session_end", F.col("session_end").cast("timestamp_ntz")
-            )
-        result = result.localCheckpoint(eager=True)
+            result = result.localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(root, ignore_errors=True)
 
     def facts(progress: list) -> dict:
@@ -458,10 +452,6 @@ def restart_stream_dedup(
     stage2 = _os.path.join(root, "p2stage")
     phase1.coalesce(1).write.parquet(input_dir)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-
     def run_phase() -> list:
         stream, _ntz = _open_event_stream(spark, input_dir, ts_col)
         deduped = stream.withWatermark(
@@ -480,17 +470,17 @@ def restart_stream_dedup(
         return list(q.recentProgress)
 
     try:
-        prog1 = run_phase()
-        phase2.coalesce(1).write.parquet(stage2)
-        for f in _os.listdir(stage2):
-            if f.endswith(".parquet"):
-                _os.link(
-                    _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
-                )
-        prog2 = run_phase()
-        result = spark.read.parquet(out_dir).localCheckpoint(eager=True)
+        with shuffle_partitions(spark, state_partitions):
+            prog1 = run_phase()
+            phase2.coalesce(1).write.parquet(stage2)
+            for f in _os.listdir(stage2):
+                if f.endswith(".parquet"):
+                    _os.link(
+                        _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
+                    )
+            prog2 = run_phase()
+            result = spark.read.parquet(out_dir).localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(root, ignore_errors=True)
 
     def facts(progress: list) -> dict:
@@ -554,10 +544,6 @@ def restart_append_counts(
     stage2 = _os.path.join(root, "p2stage")
     phase1.coalesce(1).write.parquet(input_dir)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-
     ntz_event_time = False
 
     def run_phase() -> list:
@@ -582,24 +568,24 @@ def restart_append_counts(
         return list(q.recentProgress)
 
     try:
-        prog1 = run_phase()
-        # phase 2 lands as a NEW file in the same source directory
-        phase2.coalesce(1).write.parquet(stage2)
-        for f in _os.listdir(stage2):
-            if f.endswith(".parquet"):
-                _os.link(
-                    _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
-                )
-        prog2 = run_phase()
-        # both runs' emissions accumulate in the file sink's log
-        result = spark.read.parquet(out_dir)
-        if ntz_event_time:
-            result = result.withColumn(
-                "window_start", F.col("window_start").cast("timestamp_ntz")
-            ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
-        result = result.localCheckpoint(eager=True)
+        with shuffle_partitions(spark, state_partitions):
+            prog1 = run_phase()
+            # phase 2 lands as a NEW file in the same source directory
+            phase2.coalesce(1).write.parquet(stage2)
+            for f in _os.listdir(stage2):
+                if f.endswith(".parquet"):
+                    _os.link(
+                        _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
+                    )
+            prog2 = run_phase()
+            # both runs' emissions accumulate in the file sink's log
+            result = spark.read.parquet(out_dir)
+            if ntz_event_time:
+                result = result.withColumn(
+                    "window_start", F.col("window_start").cast("timestamp_ntz")
+                ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
+            result = result.localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(root, ignore_errors=True)
 
     def facts(progress: list) -> dict:
@@ -671,51 +657,54 @@ def update_merge_counts_once(
     deleted), and returns the result; a production deployment keeps the
     store as the serving table.
     """
-    result, _progress = _update_merge_run(
-        spark,
-        events_path,
-        ts_col,
-        duration,
-        lateness,
-        group_cols or [],
-        max_files_per_trigger,
-        state_partitions,
+    import shutil
+    import tempfile
+
+    group_cols = group_cols or []
+    stream, ntz_event_time = _open_event_stream(
+        spark, events_path, ts_col, max_files_per_trigger
     )
+    out = _update_counts(stream, ts_col, duration, lateness, group_cols)
+    store = tempfile.mkdtemp(prefix="update_merge_store_")
+    try:
+        with shuffle_partitions(spark, state_partitions):
+            q = (
+                out.writeStream.foreachBatch(_merge_into_store(store, group_cols))
+                .outputMode("update")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        result = _read_store(spark, store, out)
+    finally:
+        # in the finally so a failed stream doesn't leak the temp store
+        shutil.rmtree(store, ignore_errors=True)
+    if ntz_event_time:
+        result = result.withColumn(
+            "window_start", F.col("window_start").cast("timestamp_ntz")
+        ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
     return result
 
 
-def _update_merge_run(
-    spark: SparkSession,
-    events_path: str,
+def _update_counts(
+    stream: DataFrame,
     ts_col: str,
     duration: str,
     lateness: str,
     group_cols: list[str],
-    max_files_per_trigger: int | None,
-    state_partitions: int | None,
-    checkpoint_dir: str | None = None,
-) -> tuple[DataFrame, list]:
-    """Shared run loop behind ``update_merge_counts_once`` and
-    ``update_merge_phased``: open the file stream, aggregate in update
-    mode, land every micro-batch through the keyed K4 MERGE, read the
-    final store back. Returns (result, recentProgress list) so phased
-    callers can assert the micro-batch structure."""
-    import shutil
-    import tempfile
+) -> DataFrame:
+    """The update-mode windowed counts both update-merge runs emit."""
+    return windowed_counts(
+        stream, ts_col, duration, lateness, group_cols, None
+    ).select("window_start", "window_end", *group_cols, "n_events")
 
+
+def _merge_into_store(store: str, group_cols: list[str]):
+    """The foreachBatch body of both update-merge runs: land every
+    micro-batch's changed windows through the keyed K4 MERGE."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming import (
         cdc_merge,
     )
-
-    stream, ntz_event_time = _open_event_stream(
-        spark, events_path, ts_col, max_files_per_trigger
-    )
-    out = windowed_counts(
-        stream, ts_col, duration, lateness, group_cols, None
-    ).select("window_start", "window_end", *group_cols, "n_events")
-    out_cols = out.columns
-
-    store = tempfile.mkdtemp(prefix="update_merge_store_")
 
     def merge(batch_df: DataFrame, _batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -743,36 +732,20 @@ def _update_merge_run(
         else:
             cdc_merge._merge_touched_partitions(sp, store, keyed, "_merge_key")
 
-    # state-partition sizing, same reasoning as session_windows_once:
-    # per-partition state-store open/commit cost dominates over a small
-    # keyspace; restored after the bounded run
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        writer = (
-            out.writeStream.foreachBatch(merge)
-            .outputMode("update")
-            .trigger(availableNow=True)
-        )
-        if checkpoint_dir is not None:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        q = writer.start()
-        q.awaitTermination()
-        final = cdc_merge.read_target(spark, store)
-        if final is None:
-            result = spark.createDataFrame([], out.schema)
-        else:
-            result = final.select(*out_cols).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        # in the finally so a failed stream doesn't leak the temp store
-        shutil.rmtree(store, ignore_errors=True)
-    if ntz_event_time:
-        result = result.withColumn(
-            "window_start", F.col("window_start").cast("timestamp_ntz")
-        ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
-    return result, list(q.recentProgress)
+    return merge
+
+
+def _read_store(spark: SparkSession, store: str, out: DataFrame) -> DataFrame:
+    """The final keyed store, pinned off the temp path (empty with
+    ``out``'s schema when no batch emitted)."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming import (
+        cdc_merge,
+    )
+
+    final = cdc_merge.read_target(spark, store)
+    if final is None:
+        return spark.createDataFrame([], out.schema)
+    return final.select(*out.columns).localCheckpoint(eager=True)
 
 
 def update_merge_phased(
@@ -782,7 +755,6 @@ def update_merge_phased(
     duration: str = "1 hour",
     lateness: str = "2 hours",
     group_cols: list[str] | None = None,
-    state_partitions: int | None = 16,
 ) -> tuple[DataFrame, dict]:
     """UPDATE-mode merge replay across a REAL advancing watermark:
     each phase lands as its own file (strictly increasing mtimes, so
@@ -809,45 +781,30 @@ def update_merge_phased(
     keeps its last emitted count in the store).
 
     Returns (result, stats): stats holds per-batch input-row and
-    late-drop counts, asserted against the constructed phases (one
-    data batch per phase, arrival in phase order) so a silent
-    file-ordering or admission-control change fails loudly instead of
-    hash-mismatching the oracle. Phase sizes come free from the staged
-    files' parquet footers — no extra Spark jobs.
+    late-drop counts of the ``PhasedReplay`` run, whose guards pin one
+    data batch per phase, arriving in phase order.
     """
-    import os as _os
-    import shutil
-    import tempfile
+    group_cols = group_cols or []
+    ntz_event_time, out = False, None
 
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
-        check_admission_log,
-        check_batch_structure,
-        stage_phase_files,
-    )
+    def source(input_dir: str) -> DataFrame:
+        nonlocal ntz_event_time, out
+        stream, ntz_event_time = _open_event_stream(
+            spark, input_dir, ts_col, max_files_per_trigger=1
+        )
+        out = _update_counts(stream, ts_col, duration, lateness, group_cols)
+        return out
 
-    root = tempfile.mkdtemp(prefix="update_merge_phased_")
-    input_dir = _os.path.join(root, "input")
-    ckpt = _os.path.join(root, "ckpt")
-    try:
-        phase_counts = stage_phase_files(phases, input_dir)
-        result, progress = _update_merge_run(
-            spark,
-            input_dir,
-            ts_col,
-            duration,
-            lateness,
-            group_cols or [],
-            1,  # one file per micro-batch
-            state_partitions,
-            ckpt,
-        )  # result is already eagerly checkpointed off the temp store
-        # path-exact phase→batch guard (counts can collide across
-        # equal-sized phases; the checkpoint's source log cannot)
-        check_admission_log(ckpt, len(phases), "update_merge_phased")
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-    data = check_batch_structure(progress, phase_counts, "update_merge_phased")
+    with PhasedReplay(spark, "update_merge_phased", partitions=16) as r:
+        store = r.path("store")
+        data = r.run(
+            phases, _merge_into_store(store, group_cols), source, output_mode="update"
+        )
+        result = _read_store(spark, store, out)
+    if ntz_event_time:
+        result = result.withColumn(
+            "window_start", F.col("window_start").cast("timestamp_ntz")
+        ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
     stats = {
         "data_batches": len(data),
         "rows_per_batch": [p["numInputRows"] for p in data],
@@ -870,7 +827,6 @@ def dedup_then_window_phased(
     duration: str = "1 hour",
     lateness: str = "1 hour",
     group_cols: list[str] | None = None,
-    state_partitions: int | None = 16,
 ) -> tuple[DataFrame, dict]:
     """CHAINED stateful streaming — ``dropDuplicatesWithinWatermark``
     feeding an APPEND-mode windowed aggregation in one query (two
@@ -894,29 +850,18 @@ def dedup_then_window_phased(
     Returns (result, stats); stats carries the count and path-exact
     batch-structure guards.
     """
-    import shutil
-    import tempfile
-
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
-        check_admission_log,
-        check_batch_structure,
-        stage_phase_files,
-    )
-
     group_cols = group_cols or []
-    root = tempfile.mkdtemp(prefix="dedup_then_window_")
-    input_dir = os.path.join(root, "input")
-    ckpt = os.path.join(root, "ckpt")
-    sink = f"dedup_then_window_{next(_SINK_SEQ)}"
-    try:
-        phase_counts = stage_phase_files(phases, input_dir)
+    ntz_event_time = False
+
+    def source(input_dir: str) -> DataFrame:
+        nonlocal ntz_event_time
         stream, ntz_event_time = _open_event_stream(
             spark, input_dir, ts_col, max_files_per_trigger=1
         )
         deduped = stream.withWatermark(ts_col, lateness).dropDuplicatesWithinWatermark(
             dedup_keys
         )
-        out = (
+        return (
             deduped.groupBy(F.window(ts_col, duration).alias("w"), *group_cols)
             .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
             .select(
@@ -926,29 +871,11 @@ def dedup_then_window_phased(
                 "n_events",
             )
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        try:
-            q = (
-                out.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        data = check_batch_structure(
-            list(q.recentProgress), phase_counts, "dedup_then_window_phased"
-        )
-        check_admission_log(ckpt, len(phase_counts), "dedup_then_window_phased")
+
+    with PhasedReplay(spark, "dedup_then_window_phased", partitions=16) as r:
+        data = r.run(phases, "memory", source)
         # the memory sink's rows survive the temp-dir cleanup; pin them
-        result = spark.table(sink).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        result = spark.table(r.name).localCheckpoint(eager=True)
     if ntz_event_time:
         result = result.withColumn(
             "window_start", F.col("window_start").cast("timestamp_ntz")
@@ -1111,10 +1038,6 @@ def restart_two_level_counts(
     stage2 = _os.path.join(root, "p2stage")
     phase1.coalesce(1).write.parquet(input_dir)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-
     ntz_event_time = False
 
     def run_phase() -> list:
@@ -1149,22 +1072,22 @@ def restart_two_level_counts(
         return list(q.recentProgress)
 
     try:
-        prog1 = run_phase()
-        phase2.coalesce(1).write.parquet(stage2)
-        for f in _os.listdir(stage2):
-            if f.endswith(".parquet"):
-                _os.link(
-                    _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
-                )
-        prog2 = run_phase()
-        result = spark.read.parquet(out_dir)
-        if ntz_event_time:
-            result = result.withColumn(
-                "window_start", F.col("window_start").cast("timestamp_ntz")
-            ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
-        result = result.localCheckpoint(eager=True)
+        with shuffle_partitions(spark, state_partitions):
+            prog1 = run_phase()
+            phase2.coalesce(1).write.parquet(stage2)
+            for f in _os.listdir(stage2):
+                if f.endswith(".parquet"):
+                    _os.link(
+                        _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
+                    )
+            prog2 = run_phase()
+            result = spark.read.parquet(out_dir)
+            if ntz_event_time:
+                result = result.withColumn(
+                    "window_start", F.col("window_start").cast("timestamp_ntz")
+                ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
+            result = result.localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(root, ignore_errors=True)
 
     def facts(progress: list) -> dict:

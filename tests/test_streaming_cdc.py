@@ -225,6 +225,29 @@ def test_probe_buckets_equal_with_bucket_buckets(spark, places_dim, tmp_path):
     assert list(probe_batch(batch, places_dim)["tb"]) == expected
 
 
+def test_probe_op_counts_equal_split_by_operation(spark, places_dim, tmp_path):
+    """The probe's unknown/insert/update counts and the dispatch
+    branches come from one predicate definition: insert and replace
+    are inserts, and an unknown op and a NULL op are both unknown."""
+    events_dir = str(tmp_path / "events")
+    _write_events(events_dir, [
+        _event("insert", doc=_doc("w1", "hanoi")),
+        _event("replace", doc=_doc("w2", "hue")),
+        _event("update", doc=_doc("w1", "hanoi", 30.0), key="w1"),
+        _event("delete", key="w2"),
+        _event("truncate"),
+        _event(None),
+    ])
+    batch = spark.read.schema(schemas.CDC_EVENT).json(events_dir)
+    parts = split_by_operation(batch)
+    probe = probe_batch(batch, places_dim)
+    counts = {kind: df.count() for kind, df in parts.items()}
+    assert counts == {"insert": 2, "update": 1, "delete": 1, "unknown": 2}
+    assert (probe["u"], probe["i"], probe["p"]) == (
+        counts["unknown"], counts["insert"], counts["update"]
+    )
+
+
 def test_windowed_counts_streaming(spark, tmp_path):
     events_dir = str(tmp_path / "ev")
     os.makedirs(events_dir)
