@@ -5,7 +5,7 @@ Prints ONE JSON line (kept well under 2,000 chars — the driver keeps
 only the last 2,000 chars of stdout, and round 3's 3,345-char line was
 truncated mid-object, leaving the official artifact unparsed):
 {"metric": "...", "value": N, "unit": "sec", "queries": {10 slowest},
- "n_queries": N, "errors": N, "sf": ...}
+ "n_queries": N, "errors": N, "sf": ..., "cpus": N}
 The full per-query timing map goes to BENCH_DETAIL.json next to this
 script.
 """
@@ -142,6 +142,8 @@ def main() -> None:
             timings[name] = {"err": f"{type(exc).__name__}: {exc}"[:300]}
             errors += 1
     total = round(sum(t for t in timings.values() if isinstance(t, float)), 3)
+    # the local[N] slot count every query ran on — the run's core count
+    cpus = spark.sparkContext.defaultParallelism
     # Full per-query map → BENCH_DETAIL.json; the stdout line carries
     # only the headline number + the 10 slowest so it stays ~600 chars.
     detail = {
@@ -152,6 +154,7 @@ def main() -> None:
         "n_queries": len(timings),
         "errors": errors,
         "sf": float(sf),
+        "cpus": cpus,
         "host": {
             "started": bench_started,
             "loadavg_start": load_at_start,
@@ -180,6 +183,7 @@ def main() -> None:
         "n_queries": len(timings),
         "errors": errors,
         "sf": float(sf),
+        "cpus": cpus,
     }
     if not load_clean_start:
         # prominent, parseable, and first thing a reader sees in the

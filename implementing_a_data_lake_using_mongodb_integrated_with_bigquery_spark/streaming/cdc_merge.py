@@ -21,6 +21,14 @@ change-stream loop) as ``readStream → foreachBatch(merge)``:
   on the target (plus Structured Streaming checkpointing for source
   offsets).
 
+**One dim snapshot per batch.** Every FK decision of a micro-batch —
+the probe's orphan counts, the insert path's dead-letter and filter,
+the update path's dead-letter and filter — reads ONE eager snapshot of
+the dim's key column, taken as the batch starts. The dim is evaluated
+once per batch instead of once per check, and a dim rewritten
+mid-batch cannot make an insert neither appended nor dead-lettered. A
+change to the dim takes effect at the next batch.
+
 State lives in the target table itself (as in the reference, where
 BigQuery was the state store) — no driver-side state, so a 1000-way
 parallel ``foreachBatch`` works unchanged.
@@ -222,11 +230,23 @@ def apply_cdc_batch(
     target_path: str,
     places_dim: DataFrame,
     dlq_path: str,
-) -> None:
+) -> dict[str, int]:
     """The foreachBatch body: idempotent CDC merge of one micro-batch
     into the parquet fact target. Update events must carry the full
     post-image in ``full_document`` (design choice per SURVEY.md §7
-    risk 3 — avoids the reference's per-event re-fetch RPC)."""
+    risk 3 — avoids the reference's per-event re-fetch RPC).
+
+    ``places_dim`` is read ONCE, as the batch starts: every FK check of
+    the batch sees that snapshot of its ``place_id`` column, so a change
+    to the dim takes effect at the next batch.
+
+    Returns the batch's pipeline counters (the reference logs each
+    record decision, ``src/process_insert_update_weather_data.py:28-40``):
+    ``unknown``, ``insert`` and ``update`` event counts,
+    ``insert_fk_orphans`` and ``update_fk_orphans`` (events whose
+    place_id the dim lacks, before dedup and collapse) and
+    ``touched_buckets``, the number of target partitions the update
+    merge rewrites."""
     spark = batch.sparkSession
     # pin the micro-batch ONCE: the merge references it through four
     # op-type branches plus isEmpty probes, and a foreachBatch plan
@@ -234,9 +254,14 @@ def apply_cdc_batch(
     # (and multiplies numInputRows N-fold, breaking the replay
     # batch-structure guard) — the scd2_stream.py precedent
     batch = batch.localCheckpoint(eager=True)
+    # pin the dim's key column ONCE for the probe and all four FK
+    # operators: each of them would otherwise re-evaluate the dim's
+    # plan (a Python RDD when built by createDataFrame), and a dim
+    # rewritten between two of them would split the batch's decisions
+    dim_keys = places_dim.select("place_id").localCheckpoint(eager=True)
     parts = split_by_operation(batch)
 
-    _probe = probe_batch(batch, places_dim)
+    _probe = probe_batch(batch, dim_keys)
     n_unknown, n_insert, n_update = _probe["u"], _probe["i"], _probe["p"]
     n_ins_orphans, n_upd_orphans = _probe["io"], _probe["po"]
     upd_touched = list(_probe["tb"])
@@ -267,12 +292,16 @@ def apply_cdc_batch(
         # absorb them, and an empty JSON append would corrupt the DLQ
         # read-back)
         if n_ins_orphans:
-            rejected = fk_violations(ins_docs, places_dim, "place_id")
+            # three actions read the deduplicated inserts (the emptiness
+            # probe, the DLQ write, the append): pin them so the target
+            # is scanned once, not three times
+            ins_docs = ins_docs.localCheckpoint(eager=True)
+            rejected = fk_violations(ins_docs, dim_keys, "place_id")
             if not rejected.isEmpty():
                 rejected.withColumn("batch_id", F.lit(batch_id)).write.mode(
                     "append"
                 ).json(os.path.join(dlq_path, "fk_violations"))
-        valid = fk_filter(ins_docs, places_dim, "place_id")
+        valid = fk_filter(ins_docs, dim_keys, "place_id")
         flat = with_bucket(flatten_weather(valid))
         flat.write.mode("append").partitionBy(PART_COL).parquet(target_path)
         target = read_target(spark, target_path)
@@ -290,11 +319,11 @@ def apply_cdc_batch(
         # probe's orphan count IS the exact emptiness decision (no
         # per-branch isEmpty job — r14 probe fold).
         if n_upd_orphans:
-            upd_rejected = fk_violations(upd_docs, places_dim, "place_id")
+            upd_rejected = fk_violations(upd_docs, dim_keys, "place_id")
             upd_rejected.withColumn("batch_id", F.lit(batch_id)).write.mode(
                 "append"
             ).json(os.path.join(dlq_path, "fk_violations"))
-        upd_docs = fk_filter(upd_docs, places_dim, "place_id")
+        upd_docs = fk_filter(upd_docs, dim_keys, "place_id")
         # ts rides THROUGH the flatten projection (passthrough) — the
         # earlier re-join by id cross-paired post-images with timestamps
         # when one batch carried two updates for one key, making the
@@ -315,6 +344,14 @@ def apply_cdc_batch(
             )
 
     # ---- delete path: intentionally a no-op (README.md:15)
+    return {
+        "unknown": n_unknown,
+        "insert": n_insert,
+        "update": n_update,
+        "insert_fk_orphans": n_ins_orphans,
+        "update_fk_orphans": n_upd_orphans,
+        "touched_buckets": len(upd_touched),
+    }
 
 
 def cdc_foreach_batch(target_path: str, places_dim: DataFrame, dlq_path: str):

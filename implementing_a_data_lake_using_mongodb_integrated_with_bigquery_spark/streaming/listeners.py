@@ -16,6 +16,11 @@ from pyspark.sql.streaming import StreamingQueryListener
 class PipelineMonitor(StreamingQueryListener):
     """Collects per-batch progress and surfaces failures.
 
+    Each progress record carries the batch's input rows, its
+    ``duration_ms`` phase timings (``addBatch``, ``walCommit``, …, as
+    the progress report's ``durationMs``) and ``state_rows``, the rows
+    held across all its stateful operators (0 for a stateless query).
+
     ``on_failure`` is the alert hook (the reference published to SNS,
     ``src/ingest_weather_data.py:21-31``); default just records.
     """
@@ -35,6 +40,8 @@ class PipelineMonitor(StreamingQueryListener):
                 "id": str(p.id),
                 "batch_id": p.batchId,
                 "num_input_rows": p.numInputRows,
+                "duration_ms": dict(p.durationMs),
+                "state_rows": sum(op.numRowsTotal for op in p.stateOperators),
             }
         )
 

@@ -27,6 +27,8 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.opera
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.cdc_merge import (
     N_BUCKETS,
     PART_COL,
+    apply_cdc_batch,
+    cdc_merge_replay,
     probe_batch,
     read_target,
     split_by_operation,
@@ -69,13 +71,15 @@ def _event(op, doc=None, key=None, ts="2023-11-14T15:00:00.000Z"):
     }
 
 
+PLACES = [
+    ("hanoi", None, None, "VN", "21.0N", "105.8E", "Hanoi", None, None),
+    ("hue", None, None, "VN", "16.4N", "107.5E", "Hue", None, None),
+]
+
+
 @pytest.fixture()
 def places_dim(spark):
-    return spark.createDataFrame(
-        [("hanoi", None, None, "VN", "21.0N", "105.8E", "Hanoi", None, None),
-         ("hue", None, None, "VN", "16.4N", "107.5E", "Hue", None, None)],
-        schemas.PLACES_DIM,
-    )
+    return spark.createDataFrame(PLACES, schemas.PLACES_DIM)
 
 
 def _write_events(path, events, name="batch0.json"):
@@ -248,6 +252,80 @@ def test_probe_op_counts_equal_split_by_operation(spark, places_dim, tmp_path):
     )
 
 
+def _read_events(spark, path, events):
+    _write_events(path, events)
+    return spark.read.schema(schemas.CDC_EVENT).json(path)
+
+
+def test_apply_cdc_batch_returns_pipeline_counters(spark, places_dim, tmp_path):
+    """The batch's probe counts come back as its pipeline counters:
+    event counts per op, FK orphans per path (raw, before dedup and
+    collapse) and the buckets the update merge rewrites."""
+    batch = _read_events(spark, str(tmp_path / "events"), [
+        _event("insert", doc=_doc("w1", "hanoi")),
+        _event("insert", doc=_doc("w2", "hue")),
+        _event("replace", doc=_doc("w2", "hue")),                    # duplicate PK
+        _event("insert", doc=_doc("w3", "nowhere")),                 # FK orphan
+        _event("insert", doc=_doc("w3", "nowhere")),                 # FK orphan again
+        _event("update", doc=_doc("w1", "hanoi", 30.0), key="w1"),
+        _event("update", doc=_doc("w8", "atlantis", 1.0), key="w8"),  # FK orphan
+        _event("delete", key="w2"),
+        _event("truncate"),                                          # poison
+    ])
+    target, dlq = str(tmp_path / "fact"), str(tmp_path / "dlq")
+    counters = apply_cdc_batch(batch, 0, target, places_dim, dlq)
+    assert counters == {
+        "unknown": 1,
+        "insert": 5,
+        "update": 2,
+        "insert_fk_orphans": 2,
+        "update_fk_orphans": 1,
+        "touched_buckets": 1,
+    }
+    fact = read_target(spark, target)
+    assert {r.id: r.temp_c for r in fact.collect()} == {"w1": 30.0, "w2": 20.0}
+    rejected = spark.read.json(os.path.join(dlq, "fk_violations"))
+    assert sorted(r._id for r in rejected.collect()) == ["w3", "w8"]
+
+
+def test_cdc_replay_evaluates_the_dim_once_per_batch(spark, tmp_path):
+    """Every FK check of a micro-batch reads one snapshot of the dim:
+    a dim whose rows are counted as they are computed is evaluated
+    exactly once per batch, and the replay's outputs are those of the
+    event mix (the redelivered orphan is rejected again in batch 1)."""
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def counted(row):
+        evaluated.add(1)
+        return row
+
+    rdd = spark.sparkContext.parallelize(PLACES, 2).map(counted)
+    dim = spark.createDataFrame(rdd, schemas.PLACES_DIM)
+    p1 = _read_events(spark, str(tmp_path / "p1"), [
+        _event("insert", doc=_doc("w1", "hanoi", 20.0)),
+        _event("insert", doc=_doc("w2", "hue", 25.0)),
+        _event("insert", doc=_doc("w3", "nowhere", 30.0)),
+        _event("truncate"),
+    ])
+    p2 = _read_events(spark, str(tmp_path / "p2"), [
+        _event("insert", doc=_doc("w2", "hue", 25.0)),
+        _event("insert", doc=_doc("w3", "nowhere", 30.0)),
+        _event("update", doc=_doc("w1", "hanoi", 70.0), key="w1",
+               ts="2023-11-14T16:00:00.000Z"),
+        _event("update", doc=_doc("w9", "atlantis", 1.0), key="w9",
+               ts="2023-11-14T16:00:00.000Z"),
+    ])
+    fact, dlq_fk, dlq_unknown = cdc_merge_replay(spark, [p1, p2], dim)
+    assert evaluated.value == len(PLACES) * 2
+    assert {r.id: r.temp_c for r in fact.collect()} == {"w1": 70.0, "w2": 25.0}
+    assert sorted((r._id, r.batch_id) for r in dlq_fk.collect()) == [
+        ("w3", 0), ("w3", 1), ("w9", 1)
+    ]
+    assert [(r.operation_type, r.batch_id) for r in dlq_unknown.collect()] == [
+        ("truncate", 0)
+    ]
+
+
 def test_windowed_counts_streaming(spark, tmp_path):
     events_dir = str(tmp_path / "ev")
     os.makedirs(events_dir)
@@ -362,7 +440,8 @@ def test_pipeline_monitor_listener(spark, tmp_path):
         os.makedirs(ev_dir)
         with open(os.path.join(ev_dir, "e.json"), "w") as f:
             f.write(_json.dumps({"v": 1}) + "\n")
-        stream = spark.readStream.schema("v long").json(ev_dir)
+        # a stateful stream, so the state-row total has something to count
+        stream = spark.readStream.schema("v long").json(ev_dir).dropDuplicates(["v"])
         q = (
             stream.writeStream.format("noop")
             .option("checkpointLocation", str(tmp_path / "ck"))
@@ -376,7 +455,10 @@ def test_pipeline_monitor_listener(spark, tmp_path):
             if mon.progress:
                 break
             time.sleep(0.5)
-        assert any(p["num_input_rows"] == 1 for p in mon.progress)
+        [p] = [p for p in mon.progress if p["num_input_rows"] == 1]
+        assert p["state_rows"] == 1
+        assert {"addBatch", "triggerExecution"} <= set(p["duration_ms"])
+        assert all(isinstance(ms, int) for ms in p["duration_ms"].values())
     finally:
         spark.streams.removeListener(mon)
 
