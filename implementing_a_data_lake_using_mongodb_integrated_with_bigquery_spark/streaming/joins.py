@@ -20,6 +20,7 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.strea
 )
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.windowed import (
     _open_event_stream,
+    restart_replay,
 )
 
 _SINK_SEQ = itertools.count()
@@ -32,6 +33,7 @@ def _watermarked_pair(
     left_type: str,
     right_type: str,
     lateness: str,
+    max_files_per_trigger: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The left/right watermarked event streams every stream-stream
     join here starts from — ONE implementation of the column contract
@@ -39,7 +41,7 @@ def _watermarked_pair(
     lateness wiring, so the inner, outer, and chained variants can
     never drift apart."""
     left = (
-        _open_event_stream(spark, events_path, "ts")[0]
+        _open_event_stream(spark, events_path, "ts", max_files_per_trigger)[0]
         .filter(F.col("event_type") == left_type)
         .select(
             F.col(key_col).alias("k"),
@@ -49,7 +51,7 @@ def _watermarked_pair(
         .withWatermark("left_ts", lateness)
     )
     right = (
-        _open_event_stream(spark, events_path, "ts")[0]
+        _open_event_stream(spark, events_path, "ts", max_files_per_trigger)[0]
         .filter(F.col("event_type") == right_type)
         .select(
             F.col(key_col).alias("k2"),
@@ -344,12 +346,12 @@ def restart_attribution_join(
     right_type: str = "purchase",
     horizon: str = "30 minutes",
     lateness: str = "2 hours",
-    state_partitions: int | None = 8,
 ) -> tuple[DataFrame, dict]:
     """Stream-stream INNER interval join across a checkpoint RESTART
     with a genuinely advancing watermark — the join-buffer twin of
     ``streaming.windowed.restart_append_counts``: two ``availableNow``
-    runs over ONE checkpoint and a fault-tolerant parquet sink.
+    runs over ONE checkpoint and a fault-tolerant parquet sink
+    (``windowed.restart_replay``).
 
     Run 1 processes ``phase1``'s file: co-resident matches emit, the
     checkpoint persists BOTH sides' join state and watermark
@@ -363,60 +365,20 @@ def restart_attribution_join(
     evicted: clicks with left_ts + horizon < W1, purchases with
     right_ts < W1) and against each other. The union of both runs'
     emissions is returned with a stats dict of per-run progress facts.
+    Both sides read the staged directory through their own file
+    source, so each phase is admitted once per side.
     """
-    import os as _os
-    import shutil
-    import tempfile
 
-    root = tempfile.mkdtemp(prefix="restart_join_")
-    input_dir = _os.path.join(root, "input")
-    ckpt = _os.path.join(root, "ckpt")
-    out_dir = _os.path.join(root, "out")
-    stage2 = _os.path.join(root, "p2stage")
-    phase1.coalesce(1).write.parquet(input_dir)
-
-    def run_phase() -> list:
+    def build(input_dir: str) -> DataFrame:
         left, right = _watermarked_pair(
-            spark, input_dir + "/", key_col, left_type, right_type, lateness
+            spark, input_dir + "/", key_col, left_type, right_type, lateness,
+            max_files_per_trigger=1,
         )
-        joined = _interval_join(left, right, horizon, "inner").select(
+        return _interval_join(left, right, horizon, "inner").select(
             "k", "left_id", "right_id", "left_ts", "right_ts", "right_value"
         )
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return list(q.recentProgress)
 
-    try:
-        with shuffle_partitions(spark, state_partitions):
-            prog1 = run_phase()
-            phase2.coalesce(1).write.parquet(stage2)
-            for f in _os.listdir(stage2):
-                if f.endswith(".parquet"):
-                    _os.link(
-                        _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
-                    )
-            prog2 = run_phase()
-            result = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-    def facts(progress: list) -> dict:
-        data = [p for p in progress if p["numInputRows"] > 0]
-        dropped = sum(
-            op.get("numRowsDroppedByWatermark", 0)
-            for p in progress
-            for op in p.get("stateOperators", [])
-        )
-        return {"data_batches": len(data), "rows_dropped": dropped}
-
-    return result, {"phase1": facts(prog1), "phase2": facts(prog2)}
+    return restart_replay(spark, "restart_join", phase1, phase2, build, partitions=8)
 
 
 def attribution_semi_join_once(

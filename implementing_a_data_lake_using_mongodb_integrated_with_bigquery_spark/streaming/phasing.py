@@ -18,7 +18,21 @@ call::
 
 A second ``run`` on the same runner stages its phases after the earlier
 ones and restarts the query from the same checkpoint — the
-checkpoint-restart replay (``cdc_merge.cdc_merge_restart``).
+checkpoint-restart replay. A stateful restart writes to the parquet file
+sink (``sink="parquet"``, landing under ``r.path("out")``): the memory
+sink cannot restore from a checkpoint, and Spark rejects a stateful
+``foreachBatch`` body that does not consume the whole batch. The file
+sink's own commit log keeps both runs' emissions
+(``windowed.restart_replay``)::
+
+    with PhasedReplay(spark, "restart_sessions", partitions=16) as r:
+        first = r.run([phase1], "parquet", source=build)
+        second = r.run([phase2], "parquet", source=build)
+        out = spark.read.parquet(r.path("out")).localCheckpoint(eager=True)
+
+The guards check every source of the query: a stream-stream join opens
+the staged directory twice, and each of its sources must admit phase i
+as batch i.
 """
 
 from __future__ import annotations
@@ -102,8 +116,9 @@ class PhasedReplay:
         ``availableNow`` query on the runner's checkpoint and return the
         data micro-batches' progress, one per phase in phase order.
 
-        ``sink`` is a ``foreachBatch`` body, or ``"memory"`` for a memory
-        sink readable as ``spark.table(r.name)``. ``source`` maps the
+        ``sink`` is a ``foreachBatch`` body, ``"memory"`` for a memory
+        sink readable as ``spark.table(r.name)``, or ``"parquet"`` for a
+        file sink under ``r.path("out")``. ``source`` maps the
         staged input directory to the stream to write (the default is
         the parquet file source); a custom source must keep
         ``maxFilesPerTrigger=1``."""
@@ -126,7 +141,12 @@ class PhasedReplay:
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
         )
-        writer = writer.format("memory") if sink == "memory" else writer.foreachBatch(sink)
+        if sink == "memory":
+            writer = writer.format("memory")
+        elif sink == "parquet":
+            writer = writer.format("parquet").option("path", self.path("out"))
+        else:
+            writer = writer.foreachBatch(sink)
         with shuffle_partitions(self.spark, self.partitions):
             q = writer.start()
             q.awaitTermination()
@@ -232,45 +252,49 @@ def stage_phase_files(
 
 def check_batch_structure(progress: list, phase_counts: list[int], where: str) -> list:
     """Assert one data micro-batch per phase, arriving in phase order
-    (by input-row counts) — a silent file-ordering or admission-control
-    change must fail loudly, not hash-mismatch the oracle. Counts alone
-    cannot distinguish two equal-sized phases swapped in flight; pair
-    with ``check_admission_log`` (path-exact) when the checkpoint is
+    (by input-row counts) on every source of the query — a silent
+    file-ordering or admission-control change must fail loudly, not
+    hash-mismatch the oracle. Counts alone cannot distinguish two
+    equal-sized phases swapped in flight; pair with
+    ``check_admission_log`` (path-exact) when the checkpoint is
     available. Returns the data-batch progress entries."""
     data = [p for p in progress if p["numInputRows"] > 0]
-    got = [p["numInputRows"] for p in data]
-    if got != phase_counts:
-        raise RuntimeError(
-            f"{where}: batches saw {got} input rows but phases hold "
-            f"{phase_counts} — file ordering or admission control diverged "
-            "from the phase construction."
-        )
+    n_sources = len(progress[0]["sources"]) if progress else 1
+    for j in range(n_sources):
+        got = [p["sources"][j]["numInputRows"] for p in data]
+        if got != phase_counts:
+            raise RuntimeError(
+                f"{where}: source {j} batches saw {got} input rows but phases "
+                f"hold {phase_counts} — file ordering or admission control "
+                "diverged from the phase construction."
+            )
     return data
 
 
 def check_admission_log(checkpoint_dir: str, n_phases: int, where: str) -> None:
-    """Path-exact phase→batch guard: read the file source's metadata
-    log under ``<checkpoint>/sources/0/<batchId>`` and assert batch i
-    admitted exactly ``phase-{i:03d}.parquet``. Row counts can collide
-    (two equal-sized phases replayed out of order pass the count
-    guard); file paths cannot. Free — the checkpoint already holds the
-    log; this only parses it."""
+    """Path-exact phase→batch guard: read each file source's metadata
+    log under ``<checkpoint>/sources/<source>/<batchId>`` and assert
+    batch i admitted exactly ``phase-{i:03d}.parquet``. Row counts can
+    collide (two equal-sized phases replayed out of order pass the
+    count guard); file paths cannot. Free — the checkpoint already
+    holds the log; this only parses it."""
     import json
 
-    src = os.path.join(checkpoint_dir, "sources", "0")
-    for i in range(n_phases):
-        log = os.path.join(src, str(i))
-        if not os.path.isfile(log):
-            raise RuntimeError(
-                f"{where}: checkpoint has no source log for batch {i} "
-                f"(expected {n_phases} batches)"
-            )
-        with open(log) as f:
-            entries = [json.loads(ln) for ln in f if ln.startswith("{")]
-        got = sorted(os.path.basename(e["path"]) for e in entries)
-        want = [f"phase-{i:03d}.parquet"]
-        if got != want:
-            raise RuntimeError(
-                f"{where}: batch {i} admitted {got}, expected {want} — "
-                "phases replayed out of order."
-            )
+    root = os.path.join(checkpoint_dir, "sources")
+    for source in sorted(os.listdir(root)) if os.path.isdir(root) else ["0"]:
+        for i in range(n_phases):
+            log = os.path.join(root, source, str(i))
+            if not os.path.isfile(log):
+                raise RuntimeError(
+                    f"{where}: checkpoint source {source} has no source log "
+                    f"for batch {i} (expected {n_phases} batches)"
+                )
+            with open(log) as f:
+                entries = [json.loads(ln) for ln in f if ln.startswith("{")]
+            got = sorted(os.path.basename(e["path"]) for e in entries)
+            want = [f"phase-{i:03d}.parquet"]
+            if got != want:
+                raise RuntimeError(
+                    f"{where}: source {source} batch {i} admitted {got}, "
+                    f"expected {want} — phases replayed out of order."
+                )

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import itertools
 import os
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -324,7 +325,6 @@ def restart_session_windows(
     gap: str = "30 minutes",
     lateness: str = "1 hour",
     group_cols: list[str] | None = None,
-    state_partitions: int | None = 16,
 ) -> tuple[DataFrame, dict]:
     """Session windows across a checkpoint RESTART — the third stateful
     family to get the two-run/one-checkpoint treatment (aggregates:
@@ -343,76 +343,32 @@ def restart_session_windows(
     one; the oracle must model exactly that), and the final watermark
     W2 emits every session it passes. Returns (emissions-union, stats).
     """
-    import os as _os
-    import shutil
-    import tempfile
-
     group_cols = group_cols if group_cols is not None else ["user_id"]
-    root = tempfile.mkdtemp(prefix="restart_sessions_")
-    input_dir = _os.path.join(root, "input")
-    ckpt = _os.path.join(root, "ckpt")
-    out_dir = _os.path.join(root, "out")
-    stage2 = _os.path.join(root, "p2stage")
-    phase1.coalesce(1).write.parquet(input_dir)
-
     ntz_event_time = False
 
-    def run_phase() -> list:
+    def build(input_dir: str) -> DataFrame:
         nonlocal ntz_event_time
-        stream, ntz_event_time = _open_event_stream(spark, input_dir, ts_col)
+        stream, ntz_event_time = _open_event_stream(
+            spark, input_dir, ts_col, max_files_per_trigger=1
+        )
         aggd = (
             stream.withWatermark(ts_col, lateness)
             .groupBy(F.session_window(ts_col, gap).alias("w"), *group_cols)
             .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
         )
-        out = aggd.select(
+        return aggd.select(
             *group_cols,
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
             "n_events",
         )
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return list(q.recentProgress)
 
-    try:
-        with shuffle_partitions(spark, state_partitions):
-            prog1 = run_phase()
-            phase2.coalesce(1).write.parquet(stage2)
-            for f in _os.listdir(stage2):
-                if f.endswith(".parquet"):
-                    _os.link(
-                        _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
-                    )
-            prog2 = run_phase()
-            result = spark.read.parquet(out_dir)
-            if ntz_event_time:
-                result = result.withColumn(
-                    "session_start", F.col("session_start").cast("timestamp_ntz")
-                ).withColumn(
-                    "session_end", F.col("session_end").cast("timestamp_ntz")
-                )
-            result = result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-    def facts(progress: list) -> dict:
-        data = [p for p in progress if p["numInputRows"] > 0]
-        dropped = sum(
-            op.get("numRowsDroppedByWatermark", 0)
-            for p in progress
-            for op in p.get("stateOperators", [])
-        )
-        return {"data_batches": len(data), "rows_dropped": dropped}
-
-    return result, {"phase1": facts(prog1), "phase2": facts(prog2)}
+    result, stats = restart_replay(spark, "restart_sessions", phase1, phase2, build)
+    if ntz_event_time:
+        result = result.withColumn(
+            "session_start", F.col("session_start").cast("timestamp_ntz")
+        ).withColumn("session_end", F.col("session_end").cast("timestamp_ntz"))
+    return result, stats
 
 
 def restart_stream_dedup(
@@ -422,7 +378,6 @@ def restart_stream_dedup(
     key_cols: list[str] | None = None,
     ts_col: str = "ts",
     delay: str = "1 hour",
-    state_partitions: int | None = 16,
 ) -> tuple[DataFrame, dict]:
     """``dropDuplicatesWithinWatermark`` across a checkpoint RESTART —
     the fourth stateful family restarted (aggregates, joins, sessions:
@@ -440,59 +395,19 @@ def restart_stream_dedup(
     (emissions-union, stats); emitted ROW choice within a batch is
     partition-order-nondeterministic, so callers must aggregate to
     per-key emission counts (deterministic under the rules above)."""
-    import os as _os
-    import shutil
-    import tempfile
-
     key_cols = key_cols or ["user_id", "event_type"]
-    root = tempfile.mkdtemp(prefix="restart_dedup_")
-    input_dir = _os.path.join(root, "input")
-    ckpt = _os.path.join(root, "ckpt")
-    out_dir = _os.path.join(root, "out")
-    stage2 = _os.path.join(root, "p2stage")
-    phase1.coalesce(1).write.parquet(input_dir)
 
-    def run_phase() -> list:
-        stream, _ntz = _open_event_stream(spark, input_dir, ts_col)
-        deduped = stream.withWatermark(
-            ts_col, delay
-        ).dropDuplicatesWithinWatermark(key_cols)
-        q = (
-            deduped.select(*key_cols)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    def build(input_dir: str) -> DataFrame:
+        stream, _ntz = _open_event_stream(
+            spark, input_dir, ts_col, max_files_per_trigger=1
         )
-        q.awaitTermination()
-        return list(q.recentProgress)
-
-    try:
-        with shuffle_partitions(spark, state_partitions):
-            prog1 = run_phase()
-            phase2.coalesce(1).write.parquet(stage2)
-            for f in _os.listdir(stage2):
-                if f.endswith(".parquet"):
-                    _os.link(
-                        _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
-                    )
-            prog2 = run_phase()
-            result = spark.read.parquet(out_dir).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-    def facts(progress: list) -> dict:
-        data = [p for p in progress if p["numInputRows"] > 0]
-        dropped = sum(
-            op.get("numRowsDroppedByWatermark", 0)
-            for p in progress
-            for op in p.get("stateOperators", [])
+        return (
+            stream.withWatermark(ts_col, delay)
+            .dropDuplicatesWithinWatermark(key_cols)
+            .select(*key_cols)
         )
-        return {"data_batches": len(data), "rows_dropped": dropped}
 
-    return result, {"phase1": facts(prog1), "phase2": facts(prog2)}
+    return restart_replay(spark, "restart_dedup", phase1, phase2, build)
 
 
 def restart_append_counts(
@@ -504,7 +419,6 @@ def restart_append_counts(
     lateness: str = "30 minutes",
     group_cols: list[str] | None = None,
     aggs: list[Column] | None = None,
-    state_partitions: int | None = 16,
 ) -> tuple[DataFrame, dict]:
     """APPEND-mode windowed aggregation across a REAL advancing
     watermark: two ``availableNow`` runs over ONE checkpoint.
@@ -528,98 +442,73 @@ def restart_append_counts(
     ms-truncated, the session-oracle convention).
 
     Returns (result, stats) where stats carries the per-run progress
-    facts the caller should assert (data-batch counts, late-drop
-    count) — kept out of the operator so data-dependent expectations
+    facts the caller should assert (late-drop count, which state store
+    answered) — kept out of the operator so data-dependent expectations
     live with the data that justifies them.
     """
-    import os as _os
-    import shutil
-    import tempfile
-
     group_cols = group_cols or []
-    root = tempfile.mkdtemp(prefix="restart_stream_")
-    input_dir = _os.path.join(root, "input")
-    ckpt = _os.path.join(root, "ckpt")
-    out_dir = _os.path.join(root, "out")
-    stage2 = _os.path.join(root, "p2stage")
-    phase1.coalesce(1).write.parquet(input_dir)
-
     ntz_event_time = False
 
-    def run_phase() -> list:
-        # the memory sink cannot recover from a checkpoint — the
-        # restart needs a fault-tolerant sink, and the parquet file
-        # sink (with its own transactional _spark_metadata log) is
-        # exactly what a production append stream lands in
+    def build(input_dir: str) -> DataFrame:
         nonlocal ntz_event_time
-        stream, ntz_event_time = _open_event_stream(spark, input_dir, ts_col)
-        out = windowed_counts(
-            stream, ts_col, duration, lateness, group_cols, aggs
+        stream, ntz_event_time = _open_event_stream(
+            spark, input_dir, ts_col, max_files_per_trigger=1
         )
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return list(q.recentProgress)
+        return windowed_counts(stream, ts_col, duration, lateness, group_cols, aggs)
 
-    try:
-        with shuffle_partitions(spark, state_partitions):
-            prog1 = run_phase()
-            # phase 2 lands as a NEW file in the same source directory
-            phase2.coalesce(1).write.parquet(stage2)
-            for f in _os.listdir(stage2):
-                if f.endswith(".parquet"):
-                    _os.link(
-                        _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
-                    )
-            prog2 = run_phase()
-            # both runs' emissions accumulate in the file sink's log
-            result = spark.read.parquet(out_dir)
-            if ntz_event_time:
-                result = result.withColumn(
-                    "window_start", F.col("window_start").cast("timestamp_ntz")
-                ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
-            result = result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-    def facts(progress: list) -> dict:
-        data = [p for p in progress if p["numInputRows"] > 0]
-        dropped = sum(
-            op.get("numRowsDroppedByWatermark", 0)
-            for p in progress
-            for op in p.get("stateOperators", [])
-        )
-        # which state store backed the run (rocksdb* custom metrics
-        # present ⇔ RocksDB provider engaged) — callers that pin the
-        # provider assert this instead of trusting the conf took
-        rocksdb = any(
-            "rocksdb" in m.lower()
-            for p in progress
-            for op in p.get("stateOperators", [])
-            for m in (op.get("customMetrics") or {})
-        )
-        return {
-            "data_batches": len(data),
-            "rows_dropped": dropped,
-            "rocksdb": rocksdb,
-        }
-
-    stats = {"phase1": facts(prog1), "phase2": facts(prog2)}
-    for tag in ("phase1", "phase2"):
-        if stats[tag]["data_batches"] != 1:
-            raise RuntimeError(
-                f"restart_append_counts {tag} replayed "
-                f"{stats[tag]['data_batches']} data micro-batches; the "
-                "two-phase oracle models exactly one per run (one file "
-                "per phase by construction)."
-            )
+    result, stats = restart_replay(spark, "restart_stream", phase1, phase2, build)
+    if ntz_event_time:
+        result = result.withColumn(
+            "window_start", F.col("window_start").cast("timestamp_ntz")
+        ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
     return result, stats
+
+
+def restart_replay(
+    spark: SparkSession,
+    where: str,
+    phase1: DataFrame,
+    phase2: DataFrame,
+    build: Callable[[str], DataFrame],
+    partitions: int = 16,
+) -> tuple[DataFrame, dict]:
+    """The checkpoint restart every ``restart_*`` operator runs: one
+    ``PhasedReplay``, ``build``'s stream over ``phase1`` into the
+    parquet file sink, then a second query on the same checkpoint over
+    ``phase2`` (the memory sink cannot restore from a checkpoint; the
+    file sink is what a production append stream lands in). Returns
+    the union of both runs' emissions, pinned, and
+    ``{"phase1": facts, "phase2": facts}`` (:func:`replay_facts`).
+    ``partitions`` sizes the state stores to the replay's keyspace."""
+    with PhasedReplay(spark, where, partitions=partitions) as r:
+        stats = {
+            tag: replay_facts(r.run([phase], "parquet", source=build))
+            for tag, phase in (("phase1", phase1), ("phase2", phase2))
+        }
+        result = spark.read.parquet(r.path("out")).localCheckpoint(eager=True)
+    return result, stats
+
+
+def replay_facts(data: list[dict]) -> dict:
+    """Progress facts of one run's data micro-batches: their count, the
+    rows the watermark dropped, the number of state operators, and
+    whether the RocksDB provider backed the state (its rocksdb* custom
+    metrics present) — callers that pin the provider assert this
+    instead of trusting the conf took."""
+    ops = [p.get("stateOperators", []) for p in data]
+    return {
+        "data_batches": len(data),
+        "rows_dropped": sum(
+            op.get("numRowsDroppedByWatermark", 0) for batch in ops for op in batch
+        ),
+        "n_state_ops": max(map(len, ops), default=0),
+        "rocksdb": any(
+            "rocksdb" in m.lower()
+            for batch in ops
+            for op in batch
+            for m in op.get("customMetrics") or {}
+        ),
+    }
 
 
 def update_merge_counts_once(
@@ -1006,15 +895,14 @@ def restart_two_level_counts(
     hour: str = "1 hour",
     lateness: str = "20 minutes",
     group_cols: list[str] | None = None,
-    state_partitions: int | None = 16,
 ) -> tuple[DataFrame, dict]:
     """CHAINED two-level windowed aggregation across a checkpoint
     RESTART — the sixth restart-family member, and the only one where
     TWO stateful operators must both restore (level-1 open quarters
     AND level-2 open hours survive the stop/start, each with its own
     state store). Same two-runs/one-checkpoint machinery as
-    :func:`restart_append_counts` (file source, parquet sink, union
-    of both runs' emissions).
+    :func:`restart_append_counts` (:func:`restart_replay`: file source,
+    parquet sink, union of both runs' emissions).
 
     Semantics, composed from the pinned single-level rules: W1 =
     floor_ms(max phase-1 event time) − lateness; at restart, phase-2
@@ -1026,29 +914,20 @@ def restart_two_level_counts(
     (phase1 ∪ admitted phase2); ``n_quarters`` counts kept-row
     quarters, proving the rollup rebuilt through restored
     intermediate state."""
-    import os as _os
-    import shutil
-    import tempfile
-
     group_cols = group_cols or []
-    root = tempfile.mkdtemp(prefix="restart_two_level_")
-    input_dir = _os.path.join(root, "input")
-    ckpt = _os.path.join(root, "ckpt")
-    out_dir = _os.path.join(root, "out")
-    stage2 = _os.path.join(root, "p2stage")
-    phase1.coalesce(1).write.parquet(input_dir)
-
     ntz_event_time = False
 
-    def run_phase() -> list:
+    def build(input_dir: str) -> DataFrame:
         nonlocal ntz_event_time
-        stream, ntz_event_time = _open_event_stream(spark, input_dir, ts_col)
+        stream, ntz_event_time = _open_event_stream(
+            spark, input_dir, ts_col, max_files_per_trigger=1
+        )
         lvl1 = (
             stream.withWatermark(ts_col, lateness)
             .groupBy(F.window(ts_col, quarter).alias("qw"), *group_cols)
             .agg(F.count(F.lit(1)).cast("long").alias("qn"))
         )
-        out = (
+        return (
             lvl1.groupBy(
                 F.window(F.window_time("qw"), hour).alias("hw"), *group_cols
             )
@@ -1060,50 +939,10 @@ def restart_two_level_counts(
             .withColumn("window_end", F.col("hw.end"))
             .drop("hw")
         )
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return list(q.recentProgress)
 
-    try:
-        with shuffle_partitions(spark, state_partitions):
-            prog1 = run_phase()
-            phase2.coalesce(1).write.parquet(stage2)
-            for f in _os.listdir(stage2):
-                if f.endswith(".parquet"):
-                    _os.link(
-                        _os.path.join(stage2, f), _os.path.join(input_dir, f"p2-{f}")
-                    )
-            prog2 = run_phase()
-            result = spark.read.parquet(out_dir)
-            if ntz_event_time:
-                result = result.withColumn(
-                    "window_start", F.col("window_start").cast("timestamp_ntz")
-                ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
-            result = result.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-    def facts(progress: list) -> dict:
-        data = [p for p in progress if p["numInputRows"] > 0]
-        dropped = sum(
-            op.get("numRowsDroppedByWatermark", 0)
-            for p in progress
-            for op in p.get("stateOperators", [])
-        )
-        n_state_ops = max(
-            (len(p.get("stateOperators", [])) for p in progress), default=0
-        )
-        return {
-            "data_batches": len(data),
-            "rows_dropped": dropped,
-            "n_state_ops": n_state_ops,
-        }
-
-    return result, {"phase1": facts(prog1), "phase2": facts(prog2)}
+    result, stats = restart_replay(spark, "restart_two_level", phase1, phase2, build)
+    if ntz_event_time:
+        result = result.withColumn(
+            "window_start", F.col("window_start").cast("timestamp_ntz")
+        ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
+    return result, stats

@@ -23,8 +23,10 @@ def test_stage_phase_files_rejects_empty_phase(spark, tmp_path):
         stage_phase_files([full, empty], str(tmp_path / "input"))
 
 
-def _write_source_log(ckpt: str, batch_id: int, paths: list[str]) -> None:
-    src = os.path.join(ckpt, "sources", "0")
+def _write_source_log(
+    ckpt: str, batch_id: int, paths: list[str], source: int = 0
+) -> None:
+    src = os.path.join(ckpt, "sources", str(source))
     os.makedirs(src, exist_ok=True)
     with open(os.path.join(src, str(batch_id)), "w") as f:
         f.write("v1\n")
@@ -53,6 +55,47 @@ def test_check_admission_log_accepts_in_order_and_rejects_swap(tmp_path):
 
     with pytest.raises(RuntimeError, match="no source log for batch 2"):
         check_admission_log(good, 3, "test")
+
+    # a stream-stream join reads the staged directory through two file
+    # sources: the second source admitting a swapped file must raise too
+    _write_source_log(good, 0, ["phase-000.parquet"], source=1)
+    _write_source_log(good, 1, ["phase-001.parquet"], source=1)
+    check_admission_log(good, 2, "test")  # no raise
+    two = str(tmp_path / "two_sources")
+    _write_source_log(two, 0, ["phase-000.parquet"])
+    _write_source_log(two, 1, ["phase-001.parquet"])
+    _write_source_log(two, 0, ["phase-001.parquet"], source=1)
+    _write_source_log(two, 1, ["phase-000.parquet"], source=1)
+    with pytest.raises(RuntimeError, match="source 1 batch 0 admitted"):
+        check_admission_log(two, 2, "test")
+
+
+def _progress(*per_source: int) -> dict:
+    """A synthetic micro-batch progress entry with per-source input rows."""
+    return {
+        "numInputRows": sum(per_source),
+        "sources": [{"numInputRows": n} for n in per_source],
+    }
+
+
+def test_check_batch_structure_checks_every_source():
+    """A query with two file sources reports the sum of both in
+    ``numInputRows``: the guard must compare each source's count to the
+    phase, and catch one source falling short."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
+        check_batch_structure,
+    )
+
+    progress = [_progress(5, 5), _progress(0, 0), _progress(7, 7)]
+    assert check_batch_structure(progress, [5, 7], "test") == [
+        progress[0],
+        progress[2],
+    ]
+    assert check_batch_structure([_progress(5)], [5], "test") == [_progress(5)]
+    with pytest.raises(RuntimeError, match=r"source 1 batches saw \[5, 6\]"):
+        check_batch_structure([_progress(5, 5), _progress(7, 6)], [5, 7], "test")
+    with pytest.raises(RuntimeError, match=r"source 0 batches saw \[\]"):
+        check_batch_structure([], [5], "test")
 
 
 def test_rotation_fails_loudly_on_fragile_list_drift():
