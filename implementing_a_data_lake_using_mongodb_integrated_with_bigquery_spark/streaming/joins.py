@@ -16,11 +16,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
+    restart_replay,
     shuffle_partitions,
 )
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.windowed import (
     _open_event_stream,
-    restart_replay,
 )
 
 _SINK_SEQ = itertools.count()
@@ -33,7 +33,6 @@ def _watermarked_pair(
     left_type: str,
     right_type: str,
     lateness: str,
-    max_files_per_trigger: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The left/right watermarked event streams every stream-stream
     join here starts from — ONE implementation of the column contract
@@ -41,7 +40,7 @@ def _watermarked_pair(
     lateness wiring, so the inner, outer, and chained variants can
     never drift apart."""
     left = (
-        _open_event_stream(spark, events_path, "ts", max_files_per_trigger)[0]
+        _open_event_stream(spark, events_path, "ts")[0]
         .filter(F.col("event_type") == left_type)
         .select(
             F.col(key_col).alias("k"),
@@ -51,7 +50,7 @@ def _watermarked_pair(
         .withWatermark("left_ts", lateness)
     )
     right = (
-        _open_event_stream(spark, events_path, "ts", max_files_per_trigger)[0]
+        _open_event_stream(spark, events_path, "ts")[0]
         .filter(F.col("event_type") == right_type)
         .select(
             F.col(key_col).alias("k2"),
@@ -351,7 +350,7 @@ def restart_attribution_join(
     with a genuinely advancing watermark — the join-buffer twin of
     ``streaming.windowed.restart_append_counts``: two ``availableNow``
     runs over ONE checkpoint and a fault-tolerant parquet sink
-    (``windowed.restart_replay``).
+    (``phasing.restart_replay``).
 
     Run 1 processes ``phase1``'s file: co-resident matches emit, the
     checkpoint persists BOTH sides' join state and watermark
@@ -371,8 +370,7 @@ def restart_attribution_join(
 
     def build(input_dir: str) -> DataFrame:
         left, right = _watermarked_pair(
-            spark, input_dir + "/", key_col, left_type, right_type, lateness,
-            max_files_per_trigger=1,
+            spark, input_dir + "/", key_col, left_type, right_type, lateness
         )
         return _interval_join(left, right, horizon, "inner").select(
             "k", "left_id", "right_id", "left_ts", "right_ts", "right_value"

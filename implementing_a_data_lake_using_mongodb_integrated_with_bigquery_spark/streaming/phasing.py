@@ -22,13 +22,9 @@ checkpoint-restart replay. A stateful restart writes to the parquet file
 sink (``sink="parquet"``, landing under ``r.path("out")``): the memory
 sink cannot restore from a checkpoint, and Spark rejects a stateful
 ``foreachBatch`` body that does not consume the whole batch. The file
-sink's own commit log keeps both runs' emissions
-(``windowed.restart_replay``)::
-
-    with PhasedReplay(spark, "restart_sessions", partitions=16) as r:
-        first = r.run([phase1], "parquet", source=build)
-        second = r.run([phase2], "parquet", source=build)
-        out = spark.read.parquet(r.path("out")).localCheckpoint(eager=True)
+sink's own commit log keeps both runs' emissions. Every ``restart_*``
+operator is one :func:`restart_replay` call, with the per-run progress
+facts of :func:`replay_facts`.
 
 The guards check every source of the query: a stream-stream join opens
 the staged directory twice, and each of its sources must admit phase i
@@ -120,8 +116,9 @@ class PhasedReplay:
         sink readable as ``spark.table(r.name)``, or ``"parquet"`` for a
         file sink under ``r.path("out")``. ``source`` maps the
         staged input directory to the stream to write (the default is
-        the parquet file source); a custom source must keep
-        ``maxFilesPerTrigger=1``."""
+        the parquet file source); a custom source must admit one staged
+        file per micro-batch — ``maxFilesPerTrigger=1``, or one phase
+        per run, which always admits exactly one unread file."""
         input_dir, ckpt = self.path("input"), self.path("ckpt")
         counts = stage_phase_files(phases, input_dir, start=self.n_phases)
         self.n_phases += len(phases)
@@ -153,6 +150,53 @@ class PhasedReplay:
         data = check_batch_structure(list(q.recentProgress), counts, self.where)
         check_admission_log(ckpt, self.n_phases, self.where)
         return data
+
+
+def restart_replay(
+    spark: SparkSession,
+    where: str,
+    phase1: DataFrame,
+    phase2: DataFrame,
+    build: Callable[[str], DataFrame],
+    partitions: int = 16,
+) -> tuple[DataFrame, dict]:
+    """The checkpoint restart every ``restart_*`` operator runs: one
+    ``PhasedReplay``, ``build``'s stream over ``phase1`` into the
+    parquet file sink, then a second query on the same checkpoint over
+    ``phase2`` (the memory sink cannot restore from a checkpoint; the
+    file sink is what a production append stream lands in). Returns
+    the union of both runs' emissions, pinned, and
+    ``{"phase1": facts, "phase2": facts}`` (:func:`replay_facts`).
+    ``partitions`` sizes the state stores to the replay's keyspace."""
+    with PhasedReplay(spark, where, partitions=partitions) as r:
+        stats = {
+            tag: replay_facts(r.run([phase], "parquet", source=build))
+            for tag, phase in (("phase1", phase1), ("phase2", phase2))
+        }
+        result = spark.read.parquet(r.path("out")).localCheckpoint(eager=True)
+    return result, stats
+
+
+def replay_facts(data: list[dict]) -> dict:
+    """Progress facts of one run's data micro-batches: their count, the
+    rows the watermark dropped, the number of state operators, and
+    whether the RocksDB provider backed the state (its rocksdb* custom
+    metrics present) — callers that pin the provider assert this
+    instead of trusting the conf took."""
+    ops = [p.get("stateOperators", []) for p in data]
+    return {
+        "data_batches": len(data),
+        "rows_dropped": sum(
+            op.get("numRowsDroppedByWatermark", 0) for batch in ops for op in batch
+        ),
+        "n_state_ops": max(map(len, ops), default=0),
+        "rocksdb": any(
+            "rocksdb" in m.lower()
+            for batch in ops
+            for op in batch
+            for m in op.get("customMetrics") or {}
+        ),
+    }
 
 
 def stage_phase_files(

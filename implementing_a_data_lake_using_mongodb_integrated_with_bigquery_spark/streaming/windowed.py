@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import itertools
 import os
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,6 +18,7 @@ from pyspark.sql import types as T
 
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
     PhasedReplay,
+    restart_replay,
     shuffle_partitions,
 )
 
@@ -348,9 +348,7 @@ def restart_session_windows(
 
     def build(input_dir: str) -> DataFrame:
         nonlocal ntz_event_time
-        stream, ntz_event_time = _open_event_stream(
-            spark, input_dir, ts_col, max_files_per_trigger=1
-        )
+        stream, ntz_event_time = _open_event_stream(spark, input_dir, ts_col)
         aggd = (
             stream.withWatermark(ts_col, lateness)
             .groupBy(F.session_window(ts_col, gap).alias("w"), *group_cols)
@@ -398,9 +396,7 @@ def restart_stream_dedup(
     key_cols = key_cols or ["user_id", "event_type"]
 
     def build(input_dir: str) -> DataFrame:
-        stream, _ntz = _open_event_stream(
-            spark, input_dir, ts_col, max_files_per_trigger=1
-        )
+        stream, _ntz = _open_event_stream(spark, input_dir, ts_col)
         return (
             stream.withWatermark(ts_col, delay)
             .dropDuplicatesWithinWatermark(key_cols)
@@ -451,9 +447,7 @@ def restart_append_counts(
 
     def build(input_dir: str) -> DataFrame:
         nonlocal ntz_event_time
-        stream, ntz_event_time = _open_event_stream(
-            spark, input_dir, ts_col, max_files_per_trigger=1
-        )
+        stream, ntz_event_time = _open_event_stream(spark, input_dir, ts_col)
         return windowed_counts(stream, ts_col, duration, lateness, group_cols, aggs)
 
     result, stats = restart_replay(spark, "restart_stream", phase1, phase2, build)
@@ -462,53 +456,6 @@ def restart_append_counts(
             "window_start", F.col("window_start").cast("timestamp_ntz")
         ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
     return result, stats
-
-
-def restart_replay(
-    spark: SparkSession,
-    where: str,
-    phase1: DataFrame,
-    phase2: DataFrame,
-    build: Callable[[str], DataFrame],
-    partitions: int = 16,
-) -> tuple[DataFrame, dict]:
-    """The checkpoint restart every ``restart_*`` operator runs: one
-    ``PhasedReplay``, ``build``'s stream over ``phase1`` into the
-    parquet file sink, then a second query on the same checkpoint over
-    ``phase2`` (the memory sink cannot restore from a checkpoint; the
-    file sink is what a production append stream lands in). Returns
-    the union of both runs' emissions, pinned, and
-    ``{"phase1": facts, "phase2": facts}`` (:func:`replay_facts`).
-    ``partitions`` sizes the state stores to the replay's keyspace."""
-    with PhasedReplay(spark, where, partitions=partitions) as r:
-        stats = {
-            tag: replay_facts(r.run([phase], "parquet", source=build))
-            for tag, phase in (("phase1", phase1), ("phase2", phase2))
-        }
-        result = spark.read.parquet(r.path("out")).localCheckpoint(eager=True)
-    return result, stats
-
-
-def replay_facts(data: list[dict]) -> dict:
-    """Progress facts of one run's data micro-batches: their count, the
-    rows the watermark dropped, the number of state operators, and
-    whether the RocksDB provider backed the state (its rocksdb* custom
-    metrics present) — callers that pin the provider assert this
-    instead of trusting the conf took."""
-    ops = [p.get("stateOperators", []) for p in data]
-    return {
-        "data_batches": len(data),
-        "rows_dropped": sum(
-            op.get("numRowsDroppedByWatermark", 0) for batch in ops for op in batch
-        ),
-        "n_state_ops": max(map(len, ops), default=0),
-        "rocksdb": any(
-            "rocksdb" in m.lower()
-            for batch in ops
-            for op in batch
-            for m in op.get("customMetrics") or {}
-        ),
-    }
 
 
 def update_merge_counts_once(
@@ -919,9 +866,7 @@ def restart_two_level_counts(
 
     def build(input_dir: str) -> DataFrame:
         nonlocal ntz_event_time
-        stream, ntz_event_time = _open_event_stream(
-            spark, input_dir, ts_col, max_files_per_trigger=1
-        )
+        stream, ntz_event_time = _open_event_stream(spark, input_dir, ts_col)
         lvl1 = (
             stream.withWatermark(ts_col, lateness)
             .groupBy(F.window(ts_col, quarter).alias("qw"), *group_cols)
