@@ -15345,18 +15345,13 @@ def q_stream_rocksdb_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     `stream_restart_hourly` — restart semantics must be
     provider-independent."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.windowed import (
-        ROCKSDB_PROVIDER,
+        check_rocksdb,
         restart_append_counts,
+        rocksdb_state_store,
     )
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        e = load_table(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
+    with rocksdb_state_store(spark):
         out, stats = restart_append_counts(
             spark,
             phase1=e.filter(F.col("user_id") % 3 == 0),
@@ -15366,17 +15361,8 @@ def q_stream_rocksdb_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             group_cols=["event_type"],
             aggs=[F.count(F.lit(1)).cast("long").alias("n_events")],
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     for tag in ("phase1", "phase2"):
-        if not stats[tag]["rocksdb"]:
-            raise RuntimeError(
-                f"stream_rocksdb_restart: {tag} ran without RocksDB custom "
-                "metrics — the provider conf did not engage"
-            )
+        check_rocksdb(stats[tag], f"stream_rocksdb_restart {tag}")
     return out.select(
         epoch_us("window_start").alias("window_start_us"),
         "event_type",

@@ -13,19 +13,16 @@ arithmetic without touching the sink.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
-    shuffle_partitions,
+    read_memory,
+    run_bounded,
 )
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.windowed import (
     _open_event_stream,
 )
-
-_SINK_SEQ = itertools.count()
 
 
 def stream_dedup_once(
@@ -36,7 +33,6 @@ def stream_dedup_once(
     lateness: str = "10 minutes",
     group_cols: list[str] | None = None,
     aggs: list[Column] | None = None,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Prove stream-side dedup end-to-end on a bounded replay: read the
     events table as TWO unioned file streams (every event delivered
@@ -48,12 +44,11 @@ def stream_dedup_once(
 
     Same NTZ/nanos event-time handling as ``windowed.windowed_counts_once``.
 
-    ``state_partitions`` sizes the stateful shuffle (dedup buffer +
-    aggregation stores): per-partition store open/commit costs are paid
-    per micro-batch regardless of data volume, so the count should
-    track the key cardinality, not the CPU count — the session's normal
-    shuffle setting is restored after the run (see
-    ``streaming/joins.py`` for the same discipline).
+    The run sizes the stateful shuffle (dedup buffer + aggregation
+    stores) to 8 partitions: per-partition store open/commit costs are
+    paid per micro-batch regardless of data volume, so the count tracks
+    the key cardinality, not the CPU count (see ``streaming/joins.py``
+    for the same discipline).
     """
     doubled = _open_event_stream(spark, events_path, ts_col)[0].union(
         _open_event_stream(spark, events_path, ts_col)[0]
@@ -64,14 +59,5 @@ def stream_dedup_once(
     group_cols = group_cols or []
     aggs = aggs or [F.count(F.lit(1)).alias("n_events")]
     out = deduped.groupBy(*group_cols).agg(*aggs) if (group_cols or aggs) else deduped
-    sink = f"stream_dedup_once_{next(_SINK_SEQ)}"
-    with shuffle_partitions(spark, state_partitions):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    q = run_bounded(spark, out, "stream_dedup_once", "memory", "complete", partitions=8)
+    return read_memory(spark, q)

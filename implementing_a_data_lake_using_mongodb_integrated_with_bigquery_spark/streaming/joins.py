@@ -10,20 +10,21 @@ bound how long either side waits for its match.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
+    read_memory,
     restart_replay,
-    shuffle_partitions,
+    run_bounded,
 )
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.windowed import (
     _open_event_stream,
 )
 
-_SINK_SEQ = itertools.count()
+# the interval-join output of the inner and left-outer joins; the full
+# outer join adds ``k2``, the semi join keeps only the left columns
+PAIR_COLS = ("k", "left_id", "right_id", "left_ts", "right_ts", "right_value")
 
 
 def _watermarked_pair(
@@ -38,7 +39,10 @@ def _watermarked_pair(
     join here starts from — ONE implementation of the column contract
     (k/left_id/left_ts vs k2/right_id/right_ts/right_value) and the
     lateness wiring, so the inner, outer, and chained variants can
-    never drift apart."""
+    never drift apart. Each side opens its own file source: Spark scans
+    a streaming source once per reference in the plan, so one source
+    split by ``event_type`` would still read every file twice and
+    report each batch's rows twice over."""
     left = (
         _open_event_stream(spark, events_path, "ts")[0]
         .filter(F.col("event_type") == left_type)
@@ -84,28 +88,25 @@ def _attribution_once(
     right_type: str,
     horizon: str,
     lateness: str,
-    state_partitions: int | None,
     how: str,
-    sink_tag: str,
 ) -> DataFrame:
+    """One bounded ``how`` interval join into a memory sink. Each
+    partition of the stateful shuffle owns four state stores
+    (left/right × keyed buffers) and store open/commit cost is
+    per-store per-batch, so the run sizes the shuffle to the join
+    KEYSPACE (8 partitions), not the CPU count: a 32-way stateful
+    shuffle over a small keyspace pays 128 store commits for no
+    parallelism gain. A production deployment sizes this once against
+    its key cardinality, since the checkpoint pins it."""
     left, right = _watermarked_pair(
         spark, events_path, key_col, left_type, right_type, lateness
     )
-    joined = _interval_join(left, right, horizon, how)
-    sink = f"{sink_tag}_{next(_SINK_SEQ)}"
-    with shuffle_partitions(spark, state_partitions):
-        q = (
-            joined.select(
-                "k", "left_id", "right_id", "left_ts", "right_ts", "right_value"
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    cols = {"full_outer": ("k", "k2", *PAIR_COLS[1:]), "left_semi": left.columns}
+    joined = _interval_join(left, right, horizon, how).select(
+        *cols.get(how, PAIR_COLS)
+    )
+    q = run_bounded(spark, joined, f"attribution_{how}", "memory", partitions=8)
+    return read_memory(spark, q)
 
 
 def attribution_join_once(
@@ -116,7 +117,6 @@ def attribution_join_once(
     right_type: str = "purchase",
     horizon: str = "30 minutes",
     lateness: str = "2 hours",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Run a stream-stream INNER join end-to-end on a bounded replay:
     ``left_type`` events join ``right_type`` events of the same key
@@ -131,19 +131,9 @@ def attribution_join_once(
     emission — so the bounded replay yields every match whose pair was
     co-resident within the lateness budget (all of them, here: the lake
     table is one file ⇒ one micro-batch).
-
-    ``state_partitions`` sizes the stateful shuffle: each partition
-    owns four state stores (left/right × keyed buffers), and store
-    open/commit cost is per-store per-batch — so the partition count
-    should track the join KEYSPACE, not the CPU count (a 32-way
-    stateful shuffle over a small keyspace pays 128 store commits for
-    no parallelism gain). The session's normal shuffle setting is
-    restored after the run; a production deployment sizes this once
-    against its key cardinality since it is pinned by the checkpoint.
     """
     return _attribution_once(
-        spark, events_path, key_col, left_type, right_type, horizon,
-        lateness, state_partitions, "inner", "attribution_join_once",
+        spark, events_path, key_col, left_type, right_type, horizon, lateness, "inner"
     )
 
 
@@ -177,16 +167,8 @@ def stream_static_enrich_once(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.round(F.col("value") * 10000).cast("long")).alias("_sv"),
     )
-    sink = f"stream_static_enrich_once_{next(_SINK_SEQ)}"
-    q = (
-        aggd.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink).select(
+    q = run_bounded(spark, aggd, "stream_static_enrich_once", "memory", "complete")
+    return read_memory(spark, q).select(
         dim_attr,
         "n_events",
         (F.col("_sv") / 10000.0).alias("sum_value"),
@@ -201,7 +183,6 @@ def attribution_outer_join_once(
     right_type: str = "purchase",
     horizon: str = "30 minutes",
     lateness: str = "2 hours",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """LEFT OUTER stream-stream join on a bounded replay — the
     semantics inner joins don't have: an unmatched left row emits its
@@ -221,9 +202,8 @@ def attribution_outer_join_once(
     withheld: correct streaming behavior, asserted by the oracle cut.
     """
     return _attribution_once(
-        spark, events_path, key_col, left_type, right_type, horizon,
-        lateness, state_partitions, "left_outer",
-        "attribution_outer_join_once",
+        spark, events_path, key_col, left_type, right_type, horizon, lateness,
+        "left_outer",
     )
 
 
@@ -236,7 +216,6 @@ def chained_join_window_once(
     horizon: str = "30 minutes",
     lateness: str = "2 hours",
     duration: str = "1 hour",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """MULTIPLE STATEFUL OPERATORS in one streaming query (Spark ≥3.5
     watermark propagation, SPARK-42376): a stream-stream interval join
@@ -260,22 +239,13 @@ def chained_join_window_once(
         F.count(F.lit(1)).cast("long").alias("n_attributed"),
         F.sum(F.round(F.col("right_value") * 10000).cast("long")).alias("_sv"),
     )
-    sink = f"chained_join_window_once_{next(_SINK_SEQ)}"
-    with shuffle_partitions(spark, state_partitions):
-        q = (
-            aggd.select(
-                F.col("w.start").alias("window_start"),
-                "n_attributed",
-                (F.col("_sv") / 10000.0).alias("attributed_value"),
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
+    out = aggd.select(
+        F.col("w.start").alias("window_start"),
+        "n_attributed",
+        (F.col("_sv") / 10000.0).alias("attributed_value"),
+    )
+    q = run_bounded(spark, out, "chained_join_window_once", "memory", partitions=8)
+    return read_memory(spark, q)
 
 
 def attribution_full_outer_join_once(
@@ -286,7 +256,6 @@ def attribution_full_outer_join_once(
     right_type: str = "purchase",
     horizon: str = "30 minutes",
     lateness: str = "2 hours",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """FULL OUTER stream-stream join on a bounded replay — the
     two-sided completion of the join family (inner:
@@ -315,25 +284,10 @@ def attribution_full_outer_join_once(
     null on left-only rows) so callers can group on
     ``coalesce(k, k2)``.
     """
-    left, right = _watermarked_pair(
-        spark, events_path, key_col, left_type, right_type, lateness
+    return _attribution_once(
+        spark, events_path, key_col, left_type, right_type, horizon, lateness,
+        "full_outer",
     )
-    joined = _interval_join(left, right, horizon, "full_outer")
-    sink = f"attribution_full_outer_{next(_SINK_SEQ)}"
-    with shuffle_partitions(spark, state_partitions):
-        q = (
-            joined.select(
-                "k", "k2", "left_id", "right_id", "left_ts", "right_ts",
-                "right_value",
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)
 
 
 def restart_attribution_join(
@@ -372,9 +326,7 @@ def restart_attribution_join(
         left, right = _watermarked_pair(
             spark, input_dir + "/", key_col, left_type, right_type, lateness
         )
-        return _interval_join(left, right, horizon, "inner").select(
-            "k", "left_id", "right_id", "left_ts", "right_ts", "right_value"
-        )
+        return _interval_join(left, right, horizon, "inner").select(*PAIR_COLS)
 
     return restart_replay(spark, "restart_join", phase1, phase2, build, partitions=8)
 
@@ -387,7 +339,6 @@ def attribution_semi_join_once(
     right_type: str = "purchase",
     horizon: str = "30 minutes",
     lateness: str = "2 hours",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """LEFT SEMI stream-stream join on a bounded replay — the
     existence-only member of the join family (inner:
@@ -403,19 +354,7 @@ def attribution_semi_join_once(
     emits, i.e. exactly the batch EXISTS semantics the oracle runs.
     Output carries only left columns, the semi contract.
     """
-    left, right = _watermarked_pair(
-        spark, events_path, key_col, left_type, right_type, lateness
+    return _attribution_once(
+        spark, events_path, key_col, left_type, right_type, horizon, lateness,
+        "left_semi",
     )
-    joined = _interval_join(left, right, horizon, "left_semi")
-    sink = f"attribution_semi_{next(_SINK_SEQ)}"
-    with shuffle_partitions(spark, state_partitions):
-        q = (
-            joined.select("k", "left_id", "left_ts")
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink)

@@ -1,16 +1,29 @@
-"""Deterministic multi-micro-batch replays: one runner for all of them.
+"""Bounded streaming queries: one runner starts and awaits all of them.
 
-A bounded streaming query is only oracle-able if the micro-batch
-structure is a pure function of the data: each logical phase lands as
-exactly ONE parquet file with strictly increasing mtimes, so the file
-source's oldest-first ordering replays phase i as micro-batch i under
-``maxFilesPerTrigger=1``. :class:`PhasedReplay` owns that whole
-contract — the temp root, the staging (:func:`stage_phase_files`), the
-file source, the ``availableNow`` run on one checkpoint, the row-count
-and path-exact guards (:func:`check_batch_structure`,
-:func:`check_admission_log`) and the shuffle-partition scope
-(:func:`shuffle_partitions`). Every phased replay in the package is one
-call::
+:func:`run_bounded` is the one place in ``streaming/`` that starts a
+bounded query and waits for it: it names the query (one counter for
+the whole package), picks the sink — ``"memory"``, a parquet path or a
+``foreachBatch`` body — sets the optional checkpoint, runs it
+``availableNow`` under a shuffle-partition scope
+(:func:`shuffle_partitions`) and returns the finished query. A
+single-pass operator is::
+
+    q = run_bounded(spark, stream, "windowed_counts_once", "memory", "complete")
+    return read_memory(spark, q)
+
+:func:`read_memory` takes the memory sink's rows and drops its temp
+view, so a long session keeps no result of an earlier run.
+
+A bounded streaming query is only oracle-able across micro-batches if
+the micro-batch structure is a pure function of the data: each logical
+phase lands as exactly ONE parquet file with strictly increasing
+mtimes, so the file source's oldest-first ordering replays phase i as
+micro-batch i under ``maxFilesPerTrigger=1``. :class:`PhasedReplay`
+owns that whole contract — the temp root, the staging
+(:func:`stage_phase_files`), the file source, the :func:`run_bounded`
+run on one checkpoint, and the row-count and path-exact guards
+(:func:`check_batch_structure`, :func:`check_admission_log`). Every
+phased replay in the package is one call::
 
     with PhasedReplay(spark, "psi_stream_phased", partitions=8) as r:
         data = r.run(phases, foreach_batch_body)
@@ -26,9 +39,11 @@ sink's own commit log keeps both runs' emissions. Every ``restart_*``
 operator is one :func:`restart_replay` call, with the per-run progress
 facts of :func:`replay_facts`.
 
-The guards check every source of the query: a stream-stream join opens
-the staged directory twice, and each of its sources must admit phase i
-as batch i.
+The guards check every source of the query: a stream-stream join reads
+the staged directory through one file source per side, and each of
+them must admit phase i as batch i. (One source shared by both sides
+would not read less: Spark scans it once per side, and its input-row
+count per batch is twice the phase's.)
 """
 
 from __future__ import annotations
@@ -38,30 +53,87 @@ import os
 import shutil
 import tempfile
 from collections.abc import Callable, Iterator
-from contextlib import contextmanager
+from contextlib import AbstractContextManager, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 _SEQ = itertools.count()
 
 
 @contextmanager
-def shuffle_partitions(spark: SparkSession, n: int | None) -> Iterator[None]:
-    """Run the body with ``spark.sql.shuffle.partitions`` set to ``n``
-    (``None`` leaves it as it is) and restore the previous value
-    afterwards, also when the body raises. A stateful query fixes its
-    state-store count from this setting at its first start, so bounded
-    replays size it to their keyspace (per-partition store open/commit
-    cost dominates over a small keyspace) without leaking the setting
-    into the session."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if n is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+def session_conf(spark: SparkSession, key: str, value: object) -> Iterator[None]:
+    """Run the body with the session conf ``key`` set to ``value``
+    (``None`` leaves it as it is) and restore the previous setting
+    afterwards — unset again if it was unset — also when the body
+    raises. Confs a streaming query reads at its start (the state-store
+    provider, the shuffle-partition count) are scoped to one bounded
+    run this way without leaking into the session."""
+    prev = spark.conf.get(key, None)
+    if value is not None:
+        spark.conf.set(key, str(value))
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def shuffle_partitions(
+    spark: SparkSession, n: int | None
+) -> AbstractContextManager[None]:
+    """:func:`session_conf` for ``spark.sql.shuffle.partitions``. A
+    stateful query fixes its state-store count from this setting at its
+    first start, so bounded replays size it to their keyspace
+    (per-partition store open/commit cost dominates over a small
+    keyspace)."""
+    return session_conf(spark, "spark.sql.shuffle.partitions", n)
+
+
+def run_bounded(
+    spark: SparkSession,
+    stream: DataFrame,
+    where: str,
+    sink: Callable[[DataFrame, int], None] | str,
+    output_mode: str = "append",
+    checkpoint: str | None = None,
+    partitions: int | None = None,
+) -> StreamingQuery:
+    """Start ``stream`` as one ``availableNow`` query named
+    ``<where>_<n>``, wait for it to finish and return it (``q.name``,
+    ``q.recentProgress``). ``sink`` is ``"memory"`` (read it with
+    :func:`read_memory`), a parquet output path, or a ``foreachBatch``
+    body. ``partitions`` is the shuffle-partition count the query
+    starts under (``None``: the session's)."""
+    writer = (
+        stream.writeStream.queryName(f"{where}_{next(_SEQ)}")
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if sink == "memory":
+        writer = writer.format("memory")
+    elif isinstance(sink, str):
+        writer = writer.format("parquet").option("path", sink)
+    else:
+        writer = writer.foreachBatch(sink)
+    with shuffle_partitions(spark, partitions):
+        q = writer.start()
+        q.awaitTermination()
+    return q
+
+
+def read_memory(spark: SparkSession, q: StreamingQuery) -> DataFrame:
+    """The memory sink's rows of the finished query ``q``. The sink's
+    temp view is dropped; the returned DataFrame holds the sink
+    itself, so its rows live only as long as the caller keeps it."""
+    rows = spark.table(q.name)
+    spark.catalog.dropTempView(q.name)
+    return rows
 
 
 class PhasedReplay:
@@ -88,7 +160,7 @@ class PhasedReplay:
         self.partitions = partitions
         self.schema = schema
         self.n_phases = 0
-        self.name: str | None = None
+        self.query: StreamingQuery | None = None
 
     def __enter__(self) -> PhasedReplay:
         self.root = tempfile.mkdtemp(prefix=f"{self.where}_")
@@ -109,16 +181,17 @@ class PhasedReplay:
         output_mode: str = "append",
     ) -> list[dict]:
         """Stage ``phases`` after any earlier run's, replay them as one
-        ``availableNow`` query on the runner's checkpoint and return the
-        data micro-batches' progress, one per phase in phase order.
+        :func:`run_bounded` query on the runner's checkpoint and return
+        the data micro-batches' progress, one per phase in phase order.
 
         ``sink`` is a ``foreachBatch`` body, ``"memory"`` for a memory
-        sink readable as ``spark.table(r.name)``, or ``"parquet"`` for a
-        file sink under ``r.path("out")``. ``source`` maps the
-        staged input directory to the stream to write (the default is
-        the parquet file source); a custom source must admit one staged
-        file per micro-batch — ``maxFilesPerTrigger=1``, or one phase
-        per run, which always admits exactly one unread file."""
+        sink readable as ``read_memory(spark, r.query)``, or
+        ``"parquet"`` for a file sink under ``r.path("out")``.
+        ``source`` maps the staged input directory to the stream to
+        write (the default is the parquet file source); a custom source
+        must admit one staged file per micro-batch —
+        ``maxFilesPerTrigger=1``, or one phase per run, which always
+        admits exactly one unread file."""
         input_dir, ckpt = self.path("input"), self.path("ckpt")
         counts = stage_phase_files(phases, input_dir, start=self.n_phases)
         self.n_phases += len(phases)
@@ -131,23 +204,18 @@ class PhasedReplay:
             )
         else:
             stream = source(input_dir)
-        self.name = f"{self.where}_{next(_SEQ)}"
-        writer = (
-            stream.writeStream.queryName(self.name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
+        self.query = run_bounded(
+            self.spark,
+            stream,
+            self.where,
+            self.path("out") if sink == "parquet" else sink,
+            output_mode,
+            ckpt,
+            self.partitions,
         )
-        if sink == "memory":
-            writer = writer.format("memory")
-        elif sink == "parquet":
-            writer = writer.format("parquet").option("path", self.path("out"))
-        else:
-            writer = writer.foreachBatch(sink)
-        with shuffle_partitions(self.spark, self.partitions):
-            q = writer.start()
-            q.awaitTermination()
-        data = check_batch_structure(list(q.recentProgress), counts, self.where)
+        data = check_batch_structure(
+            list(self.query.recentProgress), counts, self.where
+        )
         check_admission_log(ckpt, self.n_phases, self.where)
         return data
 

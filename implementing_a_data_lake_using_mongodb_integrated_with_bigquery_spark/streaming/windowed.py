@@ -9,8 +9,8 @@ than the watermark are dropped, exactly like the reference's
 
 from __future__ import annotations
 
-import itertools
 import os
+from contextlib import AbstractContextManager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -18,11 +18,15 @@ from pyspark.sql import types as T
 
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
     PhasedReplay,
+    read_memory,
+    replay_facts,
     restart_replay,
-    shuffle_partitions,
+    run_bounded,
+    session_conf,
 )
 
-_SINK_SEQ = itertools.count()
+WINDOW = ("window_start", "window_end")
+SESSION = ("session_start", "session_end")
 
 
 def _open_event_stream(
@@ -40,8 +44,8 @@ def _open_event_stream(
     infers for parquet micros with ``isAdjustedToUTC=false``, the
     lake's layout) is cast to TIMESTAMP — ``withWatermark`` rejects NTZ
     outright (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE); the session
-    timezone is pinned UTC so the cast is value-identical. Callers cast
-    emitted bounds back to NTZ for oracle schema parity.
+    timezone is pinned UTC so the cast is value-identical. Callers pass
+    the flag to :func:`_ntz_bounds` to cast the emitted bounds back.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -66,6 +70,19 @@ def _open_event_stream(
     if ntz_event_time:
         stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return stream, ntz_event_time
+
+
+def _ntz_bounds(
+    out: DataFrame, ntz_event_time: bool, bounds: tuple[str, ...] = WINDOW
+) -> DataFrame:
+    """The NTZ round trip's way back: cast the emitted window or
+    session ``bounds`` to TIMESTAMP_NTZ when the stream's event time was
+    NTZ (:func:`_open_event_stream`'s flag), as the streaming plan's
+    last projection, so the output schema matches the batch-read (NTZ)
+    formulation the oracles compare against."""
+    if not ntz_event_time:
+        return out
+    return out.withColumns({c: F.col(c).cast("timestamp_ntz") for c in bounds})
 
 
 def windowed_counts(
@@ -131,26 +148,16 @@ def windowed_counts_once(
     to TIMESTAMP before watermarking — ``withWatermark`` rejects NTZ
     outright (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE). The session
     timezone is pinned UTC, so the cast is value-identical; the window
-    bounds are cast back to NTZ afterwards so the output schema matches
-    the batch-read (NTZ) formulation the oracles compare against.
+    bounds are cast back to NTZ (:func:`_ntz_bounds`) so the output
+    schema matches the batch-read (NTZ) formulation the oracles compare
+    against.
     """
-    stream, ntz_event_time = _open_event_stream(spark, events_path, ts_col)
+    stream, ntz = _open_event_stream(spark, events_path, ts_col)
     out = windowed_counts(stream, ts_col, duration, lateness, group_cols, aggs, slide)
-    sink = f"windowed_counts_once_{next(_SINK_SEQ)}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    q = run_bounded(
+        spark, _ntz_bounds(out, ntz), "windowed_counts_once", "memory", "complete"
     )
-    q.awaitTermination()
-    result = spark.table(sink)
-    if ntz_event_time:
-        result = result.withColumn(
-            "window_start", F.col("window_start").cast("timestamp_ntz")
-        ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
-    return result
+    return read_memory(spark, q)
 
 
 ROCKSDB_PROVIDER = (
@@ -179,54 +186,42 @@ def windowed_counts_once_rocksdb(
     caller's relational oracle pins.
 
     The provider conf is read at QUERY start, so it is set just for
-    this bounded run and restored after; the run asserts RocksDB
-    actually engaged by reading the state operator's RocksDB-specific
-    custom metrics from the final progress (a silently ignored conf
-    must fail loudly, not 'pass' on the default provider)."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        stream, ntz_event_time = _open_event_stream(spark, events_path, ts_col)
-        out = windowed_counts(stream, ts_col, duration, lateness, group_cols, aggs)
-        sink = f"windowed_counts_rocksdb_{next(_SINK_SEQ)}"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    this bounded run and restored after (:func:`rocksdb_state_store`);
+    the run asserts RocksDB actually engaged (:func:`check_rocksdb`)."""
+    stream, ntz = _open_event_stream(spark, events_path, ts_col)
+    out = windowed_counts(stream, ts_col, duration, lateness, group_cols, aggs)
+    with rocksdb_state_store(spark):
+        q = run_bounded(
+            spark,
+            _ntz_bounds(out, ntz),
+            "windowed_counts_rocksdb",
+            "memory",
+            "complete",
         )
-        q.awaitTermination()
-        rocks_metrics = [
-            m
-            for p in q.recentProgress
-            for op in p.get("stateOperators", [])
-            for m in (op.get("customMetrics") or {})
-            if "rocksdb" in m.lower()
-        ]
-        if not rocks_metrics:
-            raise RuntimeError(
-                "windowed_counts_once_rocksdb: no RocksDB custom metrics in "
-                "the state operator progress — the provider conf did not "
-                "engage (default provider answered instead)"
-            )
-        result = spark.table(sink)
-        if ntz_event_time:
-            result = result.withColumn(
-                "window_start", F.col("window_start").cast("timestamp_ntz")
-            ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
-        # pin rows before the conf (and the memory sink's registration)
-        # can change under a later query in the same session
-        return result.localCheckpoint(eager=True)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    result = read_memory(spark, q)
+    check_rocksdb(replay_facts(q.recentProgress), "windowed_counts_once_rocksdb")
+    return result
+
+
+def rocksdb_state_store(spark: SparkSession) -> AbstractContextManager[None]:
+    """Scope: queries started in the body keep their state in the
+    RocksDB provider (read at query start); the previous provider
+    setting is restored afterwards."""
+    return session_conf(
+        spark, "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
+    )
+
+
+def check_rocksdb(facts: dict, where: str) -> None:
+    """Raise unless RocksDB backed the run whose :func:`replay_facts`
+    are given (its rocksdb* custom metrics present): a silently ignored
+    provider conf must fail loudly, not 'pass' on the default
+    provider."""
+    if not facts["rocksdb"]:
+        raise RuntimeError(
+            f"{where}: no RocksDB custom metrics in the state operator "
+            "progress — the provider conf did not engage"
+        )
 
 
 def session_windows_once(
@@ -237,7 +232,6 @@ def session_windows_once(
     lateness: str = "5 minutes",
     group_cols: list[str] | None = None,
     aggs: list[Column] | None = None,
-    state_partitions: int | None = 16,
 ) -> DataFrame:
     """Watermarked streaming session windows (``F.session_window``) over
     the lake's events parquet, run as an actual Structured Streaming
@@ -262,10 +256,12 @@ def session_windows_once(
     batch-SQL holds exactly. State is per (group, open session): at
     1000 executors it shards by group key and the watermark evicts
     every closed session, so state size tracks ACTIVE sessions only.
+    The run sizes its state to 16 shuffle partitions (the group-key
+    cardinality, not the CPU count).
     """
     group_cols = group_cols if group_cols is not None else ["user_id"]
     aggs = aggs or [F.count(F.lit(1)).cast("long").alias("n_events")]
-    stream, ntz_event_time = _open_event_stream(spark, events_path, ts_col)
+    stream, ntz = _open_event_stream(spark, events_path, ts_col)
     aggd = (
         stream.withWatermark(ts_col, lateness)
         .groupBy(F.session_window(ts_col, gap).alias("w"), *group_cols)
@@ -278,42 +274,30 @@ def session_windows_once(
         F.col("w.end").alias("session_end"),
         *agg_names,
     )
-    sink = f"session_windows_once_{next(_SINK_SEQ)}"
-    # state-partition sizing: size to the group-key cardinality, not
-    # the CPU count (a production deployment pins this once via its
-    # checkpoint)
-    with shuffle_partitions(spark, state_partitions):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    q = run_bounded(
+        spark,
+        _ntz_bounds(out, ntz, SESSION),
+        "session_windows_once",
+        "memory",
+        partitions=16,
+    )
+    result = read_memory(spark, q)
+    # The batch-SQL oracle models the emission rule for a
+    # SINGLE-data-micro-batch replay: watermark still at 0 while all
+    # rows arrive, so no late rows are dropped and the only cut is
+    # the final-watermark withholding. If the replay ever splits
+    # (maxFilesPerTrigger set, or a multi-file events table at
+    # larger SF), rows arriving after batch 1 would face a nonzero
+    # watermark and the stream would diverge from the oracle — fail
+    # loudly instead of silently diverging.
+    data_batches = sum(p["numInputRows"] > 0 for p in q.recentProgress)
+    if data_batches > 1:
+        raise RuntimeError(
+            f"session_windows_once replayed {data_batches} data "
+            "micro-batches; the bounded-replay oracle assumes exactly "
+            "one (watermark still 0 on arrival). Coalesce the input "
+            "or extend the oracle to model per-batch watermarks."
         )
-        q.awaitTermination()
-        # The batch-SQL oracle models the emission rule for a
-        # SINGLE-data-micro-batch replay: watermark still at 0 while all
-        # rows arrive, so no late rows are dropped and the only cut is
-        # the final-watermark withholding. If the replay ever splits
-        # (maxFilesPerTrigger set, or a multi-file events table at
-        # larger SF), rows arriving after batch 1 would face a nonzero
-        # watermark and the stream would diverge from the oracle — fail
-        # loudly instead of silently diverging.
-        data_batches = [
-            p for p in q.recentProgress if p["numInputRows"] > 0
-        ]
-        if len(data_batches) > 1:
-            raise RuntimeError(
-                f"session_windows_once replayed {len(data_batches)} data "
-                "micro-batches; the bounded-replay oracle assumes exactly "
-                "one (watermark still 0 on arrival). Coalesce the input "
-                "or extend the oracle to model per-batch watermarks."
-            )
-    result = spark.table(sink)
-    if ntz_event_time:
-        result = result.withColumn(
-            "session_start", F.col("session_start").cast("timestamp_ntz")
-        ).withColumn("session_end", F.col("session_end").cast("timestamp_ntz"))
     return result
 
 
@@ -344,29 +328,23 @@ def restart_session_windows(
     W2 emits every session it passes. Returns (emissions-union, stats).
     """
     group_cols = group_cols if group_cols is not None else ["user_id"]
-    ntz_event_time = False
 
     def build(input_dir: str) -> DataFrame:
-        nonlocal ntz_event_time
-        stream, ntz_event_time = _open_event_stream(spark, input_dir, ts_col)
+        stream, ntz = _open_event_stream(spark, input_dir, ts_col)
         aggd = (
             stream.withWatermark(ts_col, lateness)
             .groupBy(F.session_window(ts_col, gap).alias("w"), *group_cols)
             .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
         )
-        return aggd.select(
+        out = aggd.select(
             *group_cols,
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
             "n_events",
         )
+        return _ntz_bounds(out, ntz, SESSION)
 
-    result, stats = restart_replay(spark, "restart_sessions", phase1, phase2, build)
-    if ntz_event_time:
-        result = result.withColumn(
-            "session_start", F.col("session_start").cast("timestamp_ntz")
-        ).withColumn("session_end", F.col("session_end").cast("timestamp_ntz"))
-    return result, stats
+    return restart_replay(spark, "restart_sessions", phase1, phase2, build)
 
 
 def restart_stream_dedup(
@@ -443,145 +421,13 @@ def restart_append_counts(
     live with the data that justifies them.
     """
     group_cols = group_cols or []
-    ntz_event_time = False
 
     def build(input_dir: str) -> DataFrame:
-        nonlocal ntz_event_time
-        stream, ntz_event_time = _open_event_stream(spark, input_dir, ts_col)
-        return windowed_counts(stream, ts_col, duration, lateness, group_cols, aggs)
+        stream, ntz = _open_event_stream(spark, input_dir, ts_col)
+        out = windowed_counts(stream, ts_col, duration, lateness, group_cols, aggs)
+        return _ntz_bounds(out, ntz)
 
-    result, stats = restart_replay(spark, "restart_stream", phase1, phase2, build)
-    if ntz_event_time:
-        result = result.withColumn(
-            "window_start", F.col("window_start").cast("timestamp_ntz")
-        ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
-    return result, stats
-
-
-def update_merge_counts_once(
-    spark: SparkSession,
-    events_path: str,
-    ts_col: str = "ts",
-    duration: str = "1 hour",
-    lateness: str = "5 minutes",
-    group_cols: list[str] | None = None,
-    max_files_per_trigger: int | None = None,
-    state_partitions: int | None = 16,
-) -> DataFrame:
-    """UPDATE-output-mode windowed aggregation materialized through a
-    ``foreachBatch`` keyed MERGE — the third output-mode surface beside
-    complete (``windowed_counts_once``) and append
-    (``session_windows_once``). Update mode re-emits a window each
-    micro-batch its count changes; the sink must therefore be a keyed
-    MERGE, not an appender. The final store equals the batch
-    aggregation for any micro-batch split PROVIDED the lateness covers
-    the cross-batch disorder — an event older than the watermark a
-    previous batch advanced is dropped (correct streaming semantics,
-    pinned by the multi-batch unit test with a lateness larger than
-    the replay's disorder, and oracled with a genuinely advancing
-    watermark by ``update_merge_phased`` / the registry's
-    ``stream_update_merge_hourly``).
-
-    The sink is the K4 machinery end-to-end: each micro-batch's changed
-    windows (|windows × groups| rows, never events) MERGE into a
-    key-hash-bucket-partitioned parquet store via the partition-scoped
-    last-write-wins merge of ``streaming/cdc_merge.py`` — no rows ever
-    land on the driver. The merge key is (window_start, *group_cols),
-    serialized into one string column so the bucket layout and
-    anti-join machinery apply unchanged. The bounded run reads the
-    store back, eagerly localCheckpoints it (so the temp store can be
-    deleted), and returns the result; a production deployment keeps the
-    store as the serving table.
-    """
-    import shutil
-    import tempfile
-
-    group_cols = group_cols or []
-    stream, ntz_event_time = _open_event_stream(
-        spark, events_path, ts_col, max_files_per_trigger
-    )
-    out = _update_counts(stream, ts_col, duration, lateness, group_cols)
-    store = tempfile.mkdtemp(prefix="update_merge_store_")
-    try:
-        with shuffle_partitions(spark, state_partitions):
-            q = (
-                out.writeStream.foreachBatch(_merge_into_store(store, group_cols))
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        result = _read_store(spark, store, out)
-    finally:
-        # in the finally so a failed stream doesn't leak the temp store
-        shutil.rmtree(store, ignore_errors=True)
-    if ntz_event_time:
-        result = result.withColumn(
-            "window_start", F.col("window_start").cast("timestamp_ntz")
-        ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
-    return result
-
-
-def _update_counts(
-    stream: DataFrame,
-    ts_col: str,
-    duration: str,
-    lateness: str,
-    group_cols: list[str],
-) -> DataFrame:
-    """The update-mode windowed counts both update-merge runs emit."""
-    return windowed_counts(
-        stream, ts_col, duration, lateness, group_cols, None
-    ).select("window_start", "window_end", *group_cols, "n_events")
-
-
-def _merge_into_store(store: str, group_cols: list[str]):
-    """The foreachBatch body of both update-merge runs: land every
-    micro-batch's changed windows through the keyed K4 MERGE."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming import (
-        cdc_merge,
-    )
-
-    def merge(batch_df: DataFrame, _batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        keyed = batch_df.withColumn(
-            "_merge_key",
-            F.concat_ws(
-                "\x1f",
-                F.col("window_start").cast("string"),
-                *[F.col(c).cast("string") for c in group_cols],
-            ),
-        )
-        # pin the changed-windows batch ONCE: the merge path consumes it
-        # twice (touched-bucket collect + the upsert/write), and each
-        # reference re-executes the stateful batch plan — the
-        # foreachBatch multi-reference class (scd2_stream/apply_cdc_batch
-        # precedent, CLAUDE.md)
-        keyed = keyed.localCheckpoint(eager=True)
-        if cdc_merge.read_target(sp, store) is None:
-            # one shuffle on the bucket column → one file per bucket
-            # (without it every task writes into every bucket dir:
-            # tasks × N_BUCKETS tiny files)
-            cdc_merge.with_bucket(keyed, "_merge_key").repartition(
-                F.col(cdc_merge.PART_COL)
-            ).write.mode("overwrite").partitionBy(cdc_merge.PART_COL).parquet(store)
-        else:
-            cdc_merge._merge_touched_partitions(sp, store, keyed, "_merge_key")
-
-    return merge
-
-
-def _read_store(spark: SparkSession, store: str, out: DataFrame) -> DataFrame:
-    """The final keyed store, pinned off the temp path (empty with
-    ``out``'s schema when no batch emitted)."""
-    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming import (
-        cdc_merge,
-    )
-
-    final = cdc_merge.read_target(spark, store)
-    if final is None:
-        return spark.createDataFrame([], out.schema)
-    return final.select(*out.columns).localCheckpoint(eager=True)
+    return restart_replay(spark, "restart_stream", phase1, phase2, build)
 
 
 def update_merge_phased(
@@ -596,7 +442,13 @@ def update_merge_phased(
     each phase lands as its own file (strictly increasing mtimes, so
     the file source's oldest-first ordering is deterministic) and
     ``maxFilesPerTrigger=1`` makes one micro-batch per phase in a
-    single ``availableNow`` run.
+    single ``availableNow`` run. Update output mode — the third
+    output-mode surface beside complete (``windowed_counts_once``) and
+    append (``session_windows_once``) — re-emits a window each
+    micro-batch its count changes, so the ``foreachBatch`` sink is the
+    keyed K4 MERGE of ``streaming/cdc_merge.py`` into a
+    key-hash-bucket-partitioned parquet store, keyed on
+    (window_start, *group_cols); no rows land on the driver.
 
     Cross-batch semantics this pins (and the caller's oracle must
     model) — empirically verified against Spark 4.1, see the probe
@@ -620,27 +472,66 @@ def update_merge_phased(
     late-drop counts of the ``PhasedReplay`` run, whose guards pin one
     data batch per phase, arriving in phase order.
     """
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming import (
+        cdc_merge,
+    )
+
     group_cols = group_cols or []
-    ntz_event_time, out = False, None
+    out = None
 
     def source(input_dir: str) -> DataFrame:
-        nonlocal ntz_event_time, out
-        stream, ntz_event_time = _open_event_stream(
+        nonlocal out
+        stream, ntz = _open_event_stream(
             spark, input_dir, ts_col, max_files_per_trigger=1
         )
-        out = _update_counts(stream, ts_col, duration, lateness, group_cols)
+        counts = windowed_counts(stream, ts_col, duration, lateness, group_cols)
+        out = _ntz_bounds(
+            counts.select("window_start", "window_end", *group_cols, "n_events"), ntz
+        )
         return out
 
     with PhasedReplay(spark, "update_merge_phased", partitions=16) as r:
         store = r.path("store")
-        data = r.run(
-            phases, _merge_into_store(store, group_cols), source, output_mode="update"
+
+        def merge(batch_df: DataFrame, _batch_id: int) -> None:
+            """Land the micro-batch's changed windows through the keyed
+            K4 MERGE."""
+            sp = batch_df.sparkSession
+            keyed = batch_df.withColumn(
+                "_merge_key",
+                F.concat_ws(
+                    "\x1f",
+                    F.col("window_start").cast("string"),
+                    *[F.col(c).cast("string") for c in group_cols],
+                ),
+            )
+            # pin the changed-windows batch ONCE: the merge path consumes
+            # it twice (touched-bucket collect + the upsert/write), and
+            # each reference re-executes the stateful batch plan — the
+            # foreachBatch multi-reference class (scd2_stream/
+            # apply_cdc_batch precedent, CLAUDE.md)
+            keyed = keyed.localCheckpoint(eager=True)
+            if cdc_merge.read_target(sp, store) is None:
+                # one shuffle on the bucket column → one file per bucket
+                # (without it every task writes into every bucket dir:
+                # tasks × N_BUCKETS tiny files)
+                cdc_merge.with_bucket(keyed, "_merge_key").repartition(
+                    F.col(cdc_merge.PART_COL)
+                ).write.mode("overwrite").partitionBy(cdc_merge.PART_COL).parquet(
+                    store
+                )
+            else:
+                cdc_merge._merge_touched_partitions(sp, store, keyed, "_merge_key")
+
+        data = r.run(phases, merge, source, output_mode="update")
+        # the final keyed store, pinned off the temp path (empty with
+        # the stream's schema when no batch emitted)
+        final = cdc_merge.read_target(spark, store)
+        result = (
+            spark.createDataFrame([], out.schema)
+            if final is None
+            else final.select(*out.columns).localCheckpoint(eager=True)
         )
-        result = _read_store(spark, store, out)
-    if ntz_event_time:
-        result = result.withColumn(
-            "window_start", F.col("window_start").cast("timestamp_ntz")
-        ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
     stats = {
         "data_batches": len(data),
         "rows_per_batch": [p["numInputRows"] for p in data],
@@ -687,17 +578,15 @@ def dedup_then_window_phased(
     batch-structure guards.
     """
     group_cols = group_cols or []
-    ntz_event_time = False
 
     def source(input_dir: str) -> DataFrame:
-        nonlocal ntz_event_time
-        stream, ntz_event_time = _open_event_stream(
+        stream, ntz = _open_event_stream(
             spark, input_dir, ts_col, max_files_per_trigger=1
         )
         deduped = stream.withWatermark(ts_col, lateness).dropDuplicatesWithinWatermark(
             dedup_keys
         )
-        return (
+        out = (
             deduped.groupBy(F.window(ts_col, duration).alias("w"), *group_cols)
             .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
             .select(
@@ -707,15 +596,12 @@ def dedup_then_window_phased(
                 "n_events",
             )
         )
+        return _ntz_bounds(out, ntz)
 
     with PhasedReplay(spark, "dedup_then_window_phased", partitions=16) as r:
         data = r.run(phases, "memory", source)
         # the memory sink's rows survive the temp-dir cleanup; pin them
-        result = spark.table(r.name).localCheckpoint(eager=True)
-    if ntz_event_time:
-        result = result.withColumn(
-            "window_start", F.col("window_start").cast("timestamp_ntz")
-        ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
+        result = read_memory(spark, r.query).localCheckpoint(eager=True)
     stats = {
         "data_batches": len(data),
         "rows_per_batch": [p["numInputRows"] for p in data],
@@ -749,24 +635,13 @@ def union_windowed_once(
     from functools import reduce
 
     opened = [_open_event_stream(spark, p, ts_col) for p in paths]
-    ntz_event_time = any(flag for _, flag in opened)
     stream = reduce(lambda a, b: a.unionByName(b), [s for s, _ in opened])
     out = windowed_counts(stream, ts_col, duration, lateness, group_cols)
-    sink = f"union_windowed_once_{next(_SINK_SEQ)}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    ntz = any(flag for _, flag in opened)
+    q = run_bounded(
+        spark, _ntz_bounds(out, ntz), "union_windowed_once", "memory", "complete"
     )
-    q.awaitTermination()
-    result = spark.table(sink)
-    if ntz_event_time:
-        result = result.withColumn(
-            "window_start", F.col("window_start").cast("timestamp_ntz")
-        ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
-    return result
+    return read_memory(spark, q)
 
 
 def two_level_windowed_counts_once(
@@ -796,7 +671,7 @@ def two_level_windowed_counts_once(
     really ran through the intermediate state, which a single-level
     agg cannot produce."""
     group_cols = group_cols or []
-    stream, ntz_event_time = _open_event_stream(spark, events_path, ts_col)
+    stream, ntz = _open_event_stream(spark, events_path, ts_col)
     lvl1 = (
         stream.withWatermark(ts_col, lateness)
         .groupBy(F.window(ts_col, quarter).alias("qw"), *group_cols)
@@ -816,21 +691,8 @@ def two_level_windowed_counts_once(
         .withColumn("window_end", F.col("hw.end"))
         .drop("hw")
     )
-    sink = f"two_level_windowed_{next(_SINK_SEQ)}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    result = spark.table(sink)
-    if ntz_event_time:
-        result = result.withColumn(
-            "window_start", F.col("window_start").cast("timestamp_ntz")
-        ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
-    return result
+    q = run_bounded(spark, _ntz_bounds(out, ntz), "two_level_windowed", "memory")
+    return read_memory(spark, q)
 
 
 def restart_two_level_counts(
@@ -862,17 +724,15 @@ def restart_two_level_counts(
     quarters, proving the rollup rebuilt through restored
     intermediate state."""
     group_cols = group_cols or []
-    ntz_event_time = False
 
     def build(input_dir: str) -> DataFrame:
-        nonlocal ntz_event_time
-        stream, ntz_event_time = _open_event_stream(spark, input_dir, ts_col)
+        stream, ntz = _open_event_stream(spark, input_dir, ts_col)
         lvl1 = (
             stream.withWatermark(ts_col, lateness)
             .groupBy(F.window(ts_col, quarter).alias("qw"), *group_cols)
             .agg(F.count(F.lit(1)).cast("long").alias("qn"))
         )
-        return (
+        out = (
             lvl1.groupBy(
                 F.window(F.window_time("qw"), hour).alias("hw"), *group_cols
             )
@@ -884,10 +744,6 @@ def restart_two_level_counts(
             .withColumn("window_end", F.col("hw.end"))
             .drop("hw")
         )
+        return _ntz_bounds(out, ntz)
 
-    result, stats = restart_replay(spark, "restart_two_level", phase1, phase2, build)
-    if ntz_event_time:
-        result = result.withColumn(
-            "window_start", F.col("window_start").cast("timestamp_ntz")
-        ).withColumn("window_end", F.col("window_end").cast("timestamp_ntz"))
-    return result, stats
+    return restart_replay(spark, "restart_two_level", phase1, phase2, build)

@@ -1,15 +1,21 @@
-"""The phased-replay runner (``streaming/phasing.py``): restart on one
+"""The bounded-query runner (``streaming/phasing.py``): restart on one
 checkpoint, cleanup and shuffle-setting restore on failure, the
-reserved staging column, and the shuffle-partition scope helper."""
+reserved staging column, the conf scope helpers, the memory-sink view
+drop, and the guard that keeps every bounded start in the runner."""
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
 
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming import (
+    phasing,
+)
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
     PhasedReplay,
+    session_conf,
     shuffle_partitions,
 )
 
@@ -68,3 +74,37 @@ def test_reserved_phase_column_is_rejected(spark):
             root = r.root
             r.run([bad], lambda batch_df, batch_id: None)
     assert not os.path.exists(root)
+
+
+def test_session_conf_unsets_a_key_that_was_unset(spark):
+    key = "spark.lakeflow.test.scoped"
+    with session_conf(spark, key, "on"):
+        assert spark.conf.get(key) == "on"
+    assert spark.conf.get(key, None) is None
+
+
+def test_single_run_operator_drops_its_memory_view(spark, sf_dir):
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.windowed import (
+        windowed_counts_once,
+    )
+
+    before = spark.catalog.listTables()
+    out = windowed_counts_once(spark, os.path.join(sf_dir, "events.parquet"))
+    assert spark.catalog.listTables() == before
+    assert out.collect()
+
+
+def test_only_the_runner_starts_bounded_queries():
+    """Spark-free: within ``streaming/``, only ``phasing.py`` starts and
+    awaits a bounded query or builds a memory sink (``supervisor.py``
+    restarts long-running queries and is the one exception)."""
+    here = os.path.dirname(phasing.__file__)
+    banned = ("awaitTermination(", 'format("memory")', "_SINK_SEQ")
+    hits = [
+        f"{os.path.basename(path)}: {token}"
+        for path in sorted(glob.glob(os.path.join(here, "*.py")))
+        if os.path.basename(path) not in ("phasing.py", "supervisor.py")
+        for token in banned
+        if token in open(path).read()
+    ]
+    assert not hits, hits

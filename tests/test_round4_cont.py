@@ -253,28 +253,27 @@ def test_event_rate_anomalies_flags_are_extreme(spark, sf_dir):
         assert abs(r["z"]) > 2.0 - 1e-6  # only beyond-threshold hours emitted
 
 
-def test_update_merge_converges_across_micro_batches(spark, sf_dir, tmp_path):
-    """Split the events into several RANDOMLY-ordered files and force
-    one-file micro-batches: update-mode re-emits windows as counts
+def test_update_merge_converges_across_micro_batches(spark, sf_dir):
+    """Split the events by a hash of ``event_id`` into three phases, each
+    replayed as its own micro-batch, so every batch carries events from
+    across the whole time range: update mode re-emits windows as counts
     grow and the LWW merge's final store must equal the batch
     aggregate — with a lateness wider than the cross-batch disorder
-    (a 5-minute watermark WOULD drop events from later files, the
+    (a 5-minute watermark WOULD drop events from later batches, the
     correct streaming behavior this test first demonstrated)."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.windowed import (
-        update_merge_counts_once,
+        update_merge_phased,
     )
 
     e = load_table(spark, sf_dir, "events")
-    split_dir = str(tmp_path / "events_split")
-    e.repartition(3).write.mode("overwrite").parquet(split_dir)
-
-    out = update_merge_counts_once(
+    part = F.pmod(F.hash("event_id"), F.lit(3))
+    out, stats = update_merge_phased(
         spark,
-        split_dir,
-        lateness="60 days",  # wider than the random file split's disorder
+        [e.where(part == i) for i in range(3)],
+        lateness="60 days",  # wider than the hash split's disorder
         group_cols=["event_type"],
-        max_files_per_trigger=1,
     )
+    assert stats["data_batches"] == 3
     got = {
         (r["window_start"], r["event_type"]): r["n_events"] for r in out.collect()
     }

@@ -17,7 +17,7 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.strea
 
 def test_attribution_join_matches_batch_interval_join(spark, sf_dir):
     events = os.path.join(sf_dir, "events.parquet")
-    out = attribution_join_once(spark, events, state_partitions=4)
+    out = attribution_join_once(spark, events)
     got = out.groupBy().agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("left_id").alias("sl"),
@@ -50,9 +50,7 @@ def test_attribution_join_matches_batch_interval_join(spark, sf_dir):
 
 def test_attribution_join_restores_shuffle_conf(spark, sf_dir):
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    attribution_join_once(
-        spark, os.path.join(sf_dir, "events.parquet"), state_partitions=2
-    )
+    attribution_join_once(spark, os.path.join(sf_dir, "events.parquet"))
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
