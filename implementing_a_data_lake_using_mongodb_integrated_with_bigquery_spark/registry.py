@@ -15147,6 +15147,7 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_weather_api,
     )
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.phasing import (
+        read_memory,
         shuffle_partitions,
     )
 
@@ -15162,7 +15163,6 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("temp_c") * 10).cast("long")).alias("temp_decidegrees"),
         F.sum("humidity").cast("long").alias("humidity_total"),
     )
-    sink = "pyds_stream_agg"
     # default micro-batch trigger + processAllAvailable: each offset
     # advance (one synthetic hour) is its own micro-batch — availableNow
     # would prefetch every hour into ONE batch, collapsing the
@@ -15177,7 +15177,7 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     with shuffle_partitions(spark, 8):
         q = (
             agg.writeStream.format("memory")
-            .queryName(sink)
+            .queryName("pyds_stream_agg")
             .outputMode("complete")
             .start()
         )
@@ -15192,7 +15192,8 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"python_datasource_stream: expected 6 hourly micro-batches, "
             f"saw {data_batches}"
         )
-    return spark.table(sink).localCheckpoint(eager=True)
+    # read_memory drops the sink's temp view, so no call leaves it behind
+    return read_memory(spark, q).localCheckpoint(eager=True)
 
 
 @query(oracle="""

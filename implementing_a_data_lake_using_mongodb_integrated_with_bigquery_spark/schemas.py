@@ -85,6 +85,30 @@ WEATHER_RAW = T.StructType(
     ]
 )
 
+# the flattened fact row as ``operators.flatten.flatten_weather`` writes
+# it to the CDC target: ``_id`` → ``id``, ``current.*`` at top level,
+# ``condition`` reduced to its text, ``is_day`` boolean, ``last_updated``
+# a timestamp. Nullable throughout, as Spark reads parquet back. The CDC
+# merge reads its target with this schema instead of inferring it from
+# a footer; tests/test_streaming_cdc.py pins it to the inferred one.
+WEATHER_FACT = T.StructType(
+    [
+        T.StructField("id", T.StringType()),
+        T.StructField("place_id", T.StringType()),
+        *(
+            T.StructField(
+                f.name,
+                {
+                    "last_updated": T.TimestampType(),
+                    "is_day": T.BooleanType(),
+                    "condition": T.StringType(),
+                }.get(f.name, f.dataType),
+            )
+            for f in CURRENT.fields
+        ),
+    ]
+)
+
 CDC_EVENT = T.StructType(
     [
         T.StructField("operation_type", T.StringType(), False),

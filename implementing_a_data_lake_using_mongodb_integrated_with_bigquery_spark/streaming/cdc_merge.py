@@ -7,8 +7,9 @@ change-stream loop) as ``readStream → foreachBatch(merge)``:
   per-event ``if`` ladder; unknown ops go to a dead-letter sink instead
   of ``os._exit(1)`` (the reference's poison-event halt, ``:184-187``).
 - insert path (``insert_row``, ``:97-127``): within-batch dedup → PK
-  anti-join vs target → FK semi-join vs dim (violations → DLQ) →
-  flatten → append. 2-3 RPCs/record become one joined batch.
+  anti-join vs target → FK check on the classify pass's flag
+  (violations → DLQ) → flatten → append. 2-3 RPCs/record become one
+  joined batch.
 - update path (``update_row``, ``:131-162``): last-write-wins collapse
   → upsert merge (anti-join old out, union new) scoped to the hive
   partitions that contain updated keys, committed with dynamic
@@ -21,13 +22,20 @@ change-stream loop) as ``readStream → foreachBatch(merge)``:
   on the target (plus Structured Streaming checkpointing for source
   offsets).
 
-**One dim snapshot per batch.** Every FK decision of a micro-batch —
-the probe's orphan counts, the insert path's dead-letter and filter,
-the update path's dead-letter and filter — reads ONE eager snapshot of
-the dim's key column, taken as the batch starts. The dim is evaluated
-once per batch instead of once per check, and a dim rewritten
-mid-batch cannot make an insert neither appended nor dead-lettered. A
-change to the dim takes effect at the next batch.
+**One classify pass per batch.** :func:`classify_batch` answers every
+FK question of a micro-batch at once: the batch is left-joined to the
+broadcast set of the dim's distinct ``place_id`` values and each event
+gets an ``__orphan`` flag (no dim match, NULL key included), and the
+flagged batch is pinned with an eager ``localCheckpoint``. An
+``Observation`` on that same pin gathers the batch's counters — events
+per op, FK orphans per path, the buckets the update merge touches — so
+the source scan, the one dim evaluation and every gate of the batch are
+one job plus its broadcast. Every later FK decision (the insert path's
+and the update path's dead letters and filters) is a filter on the
+pinned flag, and the flag is dropped before any write. The dim is
+evaluated once per batch, and a dim rewritten mid-batch cannot make an
+insert neither appended nor dead-lettered. A change to the dim takes
+effect at the next batch.
 
 State lives in the target table itself (as in the reference, where
 BigQuery was the state store) — no driver-side state, so a 1000-way
@@ -49,9 +57,12 @@ drops it, and the write paths recompute it from ``id``.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from functools import reduce
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.dedup import (
     dedup_against_target,
@@ -59,10 +70,10 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.opera
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.flatten import (
     flatten_weather,
 )
-from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.integrity import (
-    fk_filter,
-    fk_violations,
+from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.schemas import (
+    WEATHER_FACT,
 )
+
 KNOWN_OPS = ("insert", "update", "delete", "replace")
 
 # physical layout: key-hash partition count of the fact target. Sized so
@@ -71,12 +82,14 @@ KNOWN_OPS = ("insert", "update", "delete", "replace")
 # partition, part_date/part_bucket, to bound rewrite units further).
 N_BUCKETS = 64
 PART_COL = "part_bucket"
+# the per-event FK flag :func:`classify_batch` pins on the batch
+ORPHAN = "__orphan"
 
 
 def bucket_expr(col: F.Column) -> F.Column:
     """The partition bucket of a merge-key column — the ONE definition
-    the writers (:func:`with_bucket`) and the per-batch probe share, so
-    a probe bucket always names the partition the key is written to.
+    the writers (:func:`with_bucket`) and the classify pass share, so a
+    touched bucket always names the partition the key is written to.
     xxhash64 hashes the value's type as well as its value, so callers
     must pass the key in the written type (the string ``id``)."""
     return F.pmod(F.xxhash64(col), F.lit(N_BUCKETS)).cast("int")
@@ -95,12 +108,28 @@ def _has_files(path: str, suffix: str) -> bool:
     )
 
 
-def read_target(spark: SparkSession, path: str) -> DataFrame | None:
+def _read_store(
+    spark: SparkSession, path: str, schema: T.StructType | None
+) -> DataFrame:
+    """The hive-partitioned store at ``path``, bucket column included.
+    ``schema`` declares the data columns (no footer-inference job);
+    ``None`` infers them."""
+    if schema is None:
+        return spark.read.parquet(path)
+    stored = T.StructType([*schema.fields, T.StructField(PART_COL, T.IntegerType())])
+    return spark.read.schema(stored).parquet(path)
+
+
+def read_target(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame | None:
     """Logical view of the fact target: partition discovery over the
-    hive layout, with the physical bucket column dropped."""
+    hive layout, with the physical bucket column dropped. The CDC
+    merge passes ``schemas.WEATHER_FACT``; ``None`` infers the schema
+    (the keyed window store of ``windowed.update_merge_phased``)."""
     if not os.path.exists(path) or not _has_files(path, ".parquet"):
         return None
-    df = spark.read.parquet(path)
+    df = _read_store(spark, path, schema)
     return df.drop(PART_COL) if PART_COL in df.columns else df
 
 
@@ -110,13 +139,15 @@ def _merge_touched_partitions(
     newest: DataFrame,
     key_col: str = "id",
     touched: list[int] | None = None,
+    schema: T.StructType | None = None,
 ) -> None:
     """Partition-scoped MERGE: upsert ``newest`` into only the target
     partitions whose bucket contains an updated key, then commit with
     dynamic partition overwrite (untouched partitions' files are never
     read or rewritten). ``touched`` (≤ N_BUCKETS small ints) may be
-    precomputed by the caller — e.g. folded into an already-running
-    probe aggregate — to skip the discovery job here."""
+    precomputed by the caller — e.g. observed on an already-running
+    pin — to skip the discovery job here. ``schema`` is the target's
+    declared schema, as for :func:`read_target`."""
     from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.merge import (
         upsert,
     )
@@ -126,7 +157,7 @@ def _merge_touched_partitions(
         # data collect (the driver holds partition IDs, never rows)
         newest_b = with_bucket(newest, key_col)
         touched = [r[0] for r in newest_b.select(PART_COL).distinct().collect()]
-    target_raw = spark.read.parquet(target_path)
+    target_raw = _read_store(spark, target_path, schema)
     target_touched = target_raw.filter(F.col(PART_COL).isin(touched)).drop(PART_COL)
     merged = with_bucket(upsert(target_touched, newest, key_col), key_col)
     # one shuffle on the bucket column → ONE file per touched bucket
@@ -151,8 +182,8 @@ def _merge_touched_partitions(
 def op_predicates() -> dict[str, F.Column]:
     """The T1 dispatch predicates on ``operation_type`` — the ONE
     definition :func:`split_by_operation` filters by and
-    :func:`probe_batch` counts by. ``unknown`` collects events whose op
-    is not in KNOWN_OPS."""
+    :func:`classify_batch` counts by. ``unknown`` collects events whose
+    op is not in KNOWN_OPS."""
     op = F.col("operation_type")
     return {
         "insert": op.isin("insert", "replace"),
@@ -169,58 +200,67 @@ def split_by_operation(batch: DataFrame) -> dict[str, DataFrame]:
     return {kind: batch.filter(pred) for kind, pred in op_predicates().items()}
 
 
-def probe_batch(batch: DataFrame, places_dim: DataFrame) -> Row:
-    """Every per-batch gate of :func:`apply_cdc_batch` from ONE job.
-    Fields: ``u``/``i``/``p`` unknown-op, insert and update counts;
+def pin_observed(df: DataFrame, *aggs: F.Column) -> tuple[DataFrame, dict]:
+    """Pin ``df`` with an eager ``localCheckpoint`` and return it with
+    the aggregates ``aggs`` observed on that same job — a gate folded
+    into the pin, no job of its own."""
+    obs = Observation()
+    pinned = df.observe(obs, *aggs).localCheckpoint(eager=True)
+    return pinned, obs.get
+
+
+def _write_counted(df: DataFrame, write: Callable[[DataFrameWriter], None]) -> int:
+    """Run ``write(df.write)`` and return the rows it wrote, observed on
+    the write job itself."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("n")).write)
+    return obs.get["n"]
+
+
+def classify_batch(batch: DataFrame, places_dim: DataFrame) -> tuple[DataFrame, dict]:
+    """The classify pass of :func:`apply_cdc_batch`: the batch with a
+    boolean ``__orphan`` column, pinned, and its counters from the same
+    job. ``__orphan`` replicates ``integrity.fk_violations``' left-anti
+    semantics: an event whose ``full_document.place_id`` has no match in
+    ``places_dim`` — a NULL key included — is an orphan; the dim's key
+    set is distinct-ed, so the left join cannot duplicate an event.
+    Counters: ``u``/``i``/``p`` unknown-op, insert and update counts;
     ``io``/``po`` FK-orphan insert and update counts; ``tb`` the sorted
-    buckets of the FK-valid update keys."""
-    # ONE probe job for every per-batch gate: the former per-branch
-    # isEmpty() calls each launched their own Spark job over the batch
-    # (pure scheduling overhead at replay batch sizes — r13/r14
-    # optimization measurements). One aggregate over the pinned batch,
-    # broadcast-left-joined to the (domain-bounded) places dim's key
-    # set, answers the three branch gates AND the two FK-violation
-    # gates AND the update path's touched-bucket discovery:
-    #   - orphan flags replicate fk_violations' left_anti null
-    #     semantics exactly (no dim match — including NULL fk — means
-    #     violation); the dim key set is distinct-ed so the left join
-    #     cannot duplicate batch rows;
-    #   - `tb` collects the buckets of FK-VALID update keys (the LWW
-    #     collapse preserves the key set, so post-collapse buckets are
-    #     identical) — ≤ N_BUCKETS small ints, bounded metadata.
+    buckets of the FK-valid update keys (the LWW collapse keeps the key
+    set, so these are the buckets the merge rewrites)."""
     ops = op_predicates()
-    _is_ins, _is_upd = ops["insert"], ops["update"]
-    _orphan = F.col("__dim_pid").isNull()
-    _dim_keys = places_dim.select(
-        F.col("place_id").alias("__dim_pid")
-    ).distinct()
-    return (
+    is_ins, is_upd = ops["insert"], ops["update"]
+    orphan = F.col(ORPHAN)
+    dim_keys = places_dim.select(F.col("place_id").alias("__dim_pid")).distinct()
+    flagged = (
         batch.join(
-            F.broadcast(_dim_keys),
+            F.broadcast(dim_keys),
             F.col("full_document.place_id") == F.col("__dim_pid"),
             "left",
         )
-        .agg(
-            F.coalesce(F.sum(ops["unknown"].cast("long")), F.lit(0)).alias("u"),
-            F.coalesce(F.sum(_is_ins.cast("long")), F.lit(0)).alias("i"),
-            F.coalesce(F.sum(_is_upd.cast("long")), F.lit(0)).alias("p"),
-            F.coalesce(
-                F.sum((_is_ins & _orphan).cast("long")), F.lit(0)
-            ).alias("io"),
-            F.coalesce(
-                F.sum((_is_upd & _orphan).cast("long")), F.lit(0)
-            ).alias("po"),
-            F.sort_array(
-                F.collect_set(
-                    F.when(
-                        _is_upd & ~_orphan,
-                        # flatten_weather writes id as the string _id
-                        bucket_expr(F.col("full_document._id").cast("string")),
-                    )
+        .withColumn(ORPHAN, F.col("__dim_pid").isNull())
+        .drop("__dim_pid")
+    )
+
+    def n(pred: F.Column) -> F.Column:
+        return F.coalesce(F.sum(pred.cast("long")), F.lit(0))
+
+    return pin_observed(
+        flagged,
+        n(ops["unknown"]).alias("u"),
+        n(is_ins).alias("i"),
+        n(is_upd).alias("p"),
+        n(is_ins & orphan).alias("io"),
+        n(is_upd & orphan).alias("po"),
+        F.sort_array(
+            F.collect_set(
+                F.when(
+                    is_upd & ~orphan,
+                    # flatten_weather writes id as the string _id
+                    bucket_expr(F.col("full_document._id").cast("string")),
                 )
-            ).alias("tb"),
-        )
-        .first()
+            )
+        ).alias("tb"),
     )
 
 
@@ -236,121 +276,118 @@ def apply_cdc_batch(
     post-image in ``full_document`` (design choice per SURVEY.md §7
     risk 3 — avoids the reference's per-event re-fetch RPC).
 
-    ``places_dim`` is read ONCE, as the batch starts: every FK check of
-    the batch sees that snapshot of its ``place_id`` column, so a change
-    to the dim takes effect at the next batch.
+    ``places_dim`` is read ONCE, by the classify pass as the batch
+    starts: every FK decision of the batch sees that snapshot of its
+    ``place_id`` column, so a change to the dim takes effect at the
+    next batch.
 
     Returns the batch's pipeline counters (the reference logs each
     record decision, ``src/process_insert_update_weather_data.py:28-40``):
     ``unknown``, ``insert`` and ``update`` event counts,
     ``insert_fk_orphans`` and ``update_fk_orphans`` (events whose
-    place_id the dim lacks, before dedup and collapse) and
+    place_id the dim lacks, before dedup and collapse),
     ``touched_buckets``, the number of target partitions the update
-    merge rewrites."""
+    merge rewrites, and the rows the batch wrote: ``inserted`` (the
+    append) and ``fk_dead_lettered`` (the FK dead-letter write)."""
     spark = batch.sparkSession
-    # pin the micro-batch ONCE: the merge references it through four
-    # op-type branches plus isEmpty probes, and a foreachBatch plan
-    # that references the batch N times re-scans the source N times
-    # (and multiplies numInputRows N-fold, breaking the replay
-    # batch-structure guard) — the scd2_stream.py precedent
-    batch = batch.localCheckpoint(eager=True)
-    # pin the dim's key column ONCE for the probe and all four FK
-    # operators: each of them would otherwise re-evaluate the dim's
-    # plan (a Python RDD when built by createDataFrame), and a dim
-    # rewritten between two of them would split the batch's decisions
-    dim_keys = places_dim.select("place_id").localCheckpoint(eager=True)
+    # classify ONCE: the pin also stops a foreachBatch plan that
+    # references the batch through four op-type branches from
+    # re-scanning the source per reference (and multiplying
+    # numInputRows, which breaks the replay batch-structure guard)
+    batch, counts = classify_batch(batch, places_dim)
+    n_ins_orphans, n_upd_orphans = counts["io"], counts["po"]
+    upd_touched = list(counts["tb"])
     parts = split_by_operation(batch)
-
-    _probe = probe_batch(batch, dim_keys)
-    n_unknown, n_insert, n_update = _probe["u"], _probe["i"], _probe["p"]
-    n_ins_orphans, n_upd_orphans = _probe["io"], _probe["po"]
-    upd_touched = list(_probe["tb"])
+    orphan = F.col(ORPHAN)
 
     # poison events → DLQ (instead of the reference's os._exit(1))
-    unknown = parts["unknown"]
-    if n_unknown:
-        unknown.withColumn("batch_id", F.lit(batch_id)).write.mode("append").json(
-            os.path.join(dlq_path, "unknown_ops")
-        )
+    if counts["u"]:
+        parts["unknown"].drop(ORPHAN).withColumn(
+            "batch_id", F.lit(batch_id)
+        ).write.mode("append").json(os.path.join(dlq_path, "unknown_ops"))
 
-    target = read_target(spark, target_path)
+    target = read_target(spark, target_path, WEATHER_FACT)
+    rejects: list[DataFrame] = []
 
-    # ---- insert path: dedup → PK anti → FK semi (+DLQ) → flatten → append
-    ins_docs = parts["insert"].select("full_document.*")
-    if n_insert:
+    # ---- insert path: dedup → PK anti → FK flag (+DLQ) → flatten → append
+    inserted = 0
+    if counts["i"]:
+        ins_docs = parts["insert"].select("full_document.*", ORPHAN)
         if target is not None:
             ins_docs = dedup_against_target(
                 ins_docs, target.selectExpr("id as _id"), "_id"
             )
         else:
             ins_docs = ins_docs.dropDuplicates(["_id"])
-        # post-dedup FK rejects are a SUBSET of the raw insert orphans
-        # the probe already counted (dedup only removes rows), so a
-        # zero raw count skips both the probe and the write; only a
-        # batch that actually carries insert orphans still pays the
-        # emptiness probe (dedup against the target can in principle
-        # absorb them, and an empty JSON append would corrupt the DLQ
-        # read-back)
+        # post-dedup rejects are a SUBSET of the raw insert orphans
+        # (dedup only removes rows), so only a batch that carries
+        # insert orphans pins the deduplicated inserts — the dead-letter
+        # write and the append then read the target once — and counts
+        # its rejects on that pin (an empty JSON append would corrupt
+        # the DLQ read-back)
         if n_ins_orphans:
-            # three actions read the deduplicated inserts (the emptiness
-            # probe, the DLQ write, the append): pin them so the target
-            # is scanned once, not three times
-            ins_docs = ins_docs.localCheckpoint(eager=True)
-            rejected = fk_violations(ins_docs, dim_keys, "place_id")
-            if not rejected.isEmpty():
-                rejected.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                    "append"
-                ).json(os.path.join(dlq_path, "fk_violations"))
-        valid = fk_filter(ins_docs, dim_keys, "place_id")
-        flat = with_bucket(flatten_weather(valid))
-        flat.write.mode("append").partitionBy(PART_COL).parquet(target_path)
-        target = read_target(spark, target_path)
+            ins_docs, pinned = pin_observed(
+                ins_docs, F.count(F.when(orphan, 1)).alias("rejects")
+            )
+            if pinned["rejects"]:
+                rejects.append(ins_docs.filter(orphan))
+        # flatten_weather's projection drops the flag
+        flat = with_bucket(flatten_weather(ins_docs.filter(~orphan)))
+        inserted = _write_counted(
+            flat,
+            lambda w: w.mode("append").partitionBy(PART_COL).parquet(target_path),
+        )
 
-    # ---- update path: LWW collapse → FK check → upsert merge → swap
-    upd_docs = parts["update"].select("ts", "full_document.*")
-    if n_update:
+    # update rejects are PRE-collapse rows, so the classify pass's
+    # orphan count IS the exact emptiness decision
+    upd_docs = parts["update"].select("ts", "full_document.*", ORPHAN)
+    if n_upd_orphans:
+        rejects.append(upd_docs.filter(orphan))
+
+    # ---- FK dead letters of both paths: ONE write per batch. The JSON
+    # writer omits the inserts' NULL ts, so the read-back is unchanged.
+    fk_dead_lettered = 0
+    if rejects:
+        dead = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), rejects)
+        fk_dead_lettered = _write_counted(
+            dead.drop(ORPHAN).withColumn("batch_id", F.lit(batch_id)),
+            lambda w: w.mode("append").json(os.path.join(dlq_path, "fk_violations")),
+        )
+
+    # ---- update path: FK-valid updates → LWW collapse → upsert merge → swap
+    if counts["p"] > n_upd_orphans:
         from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.merge import (
             last_write_wins,
         )
 
-        # FK rejects dead-letter here exactly as on the insert path —
-        # the same integrity failure must not vanish silently on
-        # update. The update path checks PRE-collapse rows, so the
-        # probe's orphan count IS the exact emptiness decision (no
-        # per-branch isEmpty job — r14 probe fold).
-        if n_upd_orphans:
-            upd_rejected = fk_violations(upd_docs, dim_keys, "place_id")
-            upd_rejected.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).json(os.path.join(dlq_path, "fk_violations"))
-        upd_docs = fk_filter(upd_docs, dim_keys, "place_id")
         # ts rides THROUGH the flatten projection (passthrough) — the
         # earlier re-join by id cross-paired post-images with timestamps
         # when one batch carried two updates for one key, making the
         # LWW pick nondeterministic (regression-pinned in
         # tests/test_round10.py)
-        flat_upd = flatten_weather(upd_docs, passthrough=["ts"])
+        flat_upd = flatten_weather(upd_docs.filter(~orphan), passthrough=["ts"])
         newest = last_write_wins(flat_upd, "id", "ts").drop("ts")
-        if target is None:
+        if target is None and not inserted:
             with_bucket(newest).write.mode("overwrite").partitionBy(
                 PART_COL
             ).parquet(target_path)
         else:
-            # touched buckets were computed in the probe aggregate
-            # (FK-valid update keys; the LWW collapse preserves the
-            # key set) — skips the per-batch distinct().collect() job
+            # touched buckets came from the classify pass — skips the
+            # per-batch distinct().collect() job
             _merge_touched_partitions(
-                spark, target_path, newest, "id", touched=upd_touched
+                spark, target_path, newest, "id", upd_touched, WEATHER_FACT
             )
 
     # ---- delete path: intentionally a no-op (README.md:15)
     return {
-        "unknown": n_unknown,
-        "insert": n_insert,
-        "update": n_update,
+        "unknown": counts["u"],
+        "insert": counts["i"],
+        "update": counts["p"],
         "insert_fk_orphans": n_ins_orphans,
         "update_fk_orphans": n_upd_orphans,
         "touched_buckets": len(upd_touched),
+        "inserted": inserted,
+        "fk_dead_lettered": fk_dead_lettered,
     }
 
 
@@ -429,7 +466,7 @@ def _replay_runs(
         for phases in runs:
             r.run(phases, sink)
 
-        fact = read_target(spark, target)
+        fact = read_target(spark, target, WEATHER_FACT)
         fact = fact.localCheckpoint(eager=True) if fact is not None else None
 
         def _read_dlq(sub: str, schema: str) -> DataFrame:

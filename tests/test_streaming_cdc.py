@@ -20,16 +20,18 @@ from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.opera
 )
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.integrity import (
     fk_filter,
+    fk_violations,
 )
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.operators.merge import (
     last_write_wins,
 )
 from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.streaming.cdc_merge import (
     N_BUCKETS,
+    ORPHAN,
     PART_COL,
     apply_cdc_batch,
     cdc_merge_replay,
-    probe_batch,
+    classify_batch,
     read_target,
     split_by_operation,
     start_cdc_stream,
@@ -201,8 +203,8 @@ def test_partition_scoped_merge_leaves_untouched_partitions_alone(
     assert fact.count() == 8
 
 
-def test_probe_buckets_equal_with_bucket_buckets(spark, places_dim, tmp_path):
-    """The probe's touched-bucket list ``tb`` names exactly the
+def test_classify_buckets_equal_with_bucket_buckets(spark, places_dim, tmp_path):
+    """The classify pass's touched-bucket list ``tb`` names exactly the
     partitions ``with_bucket`` writes the batch's FK-valid updates to,
     so the partition-scoped merge reads and rewrites the right ones."""
     events_dir = str(tmp_path / "events")
@@ -226,11 +228,11 @@ def test_probe_buckets_equal_with_bucket_buckets(spark, places_dim, tmp_path):
         r[0] for r in with_bucket(newest).select(PART_COL).distinct().collect()
     )
     assert len(expected) > 1, "fixture must span more than one bucket"
-    assert list(probe_batch(batch, places_dim)["tb"]) == expected
+    assert list(classify_batch(batch, places_dim)[1]["tb"]) == expected
 
 
-def test_probe_op_counts_equal_split_by_operation(spark, places_dim, tmp_path):
-    """The probe's unknown/insert/update counts and the dispatch
+def test_classify_op_counts_equal_split_by_operation(spark, places_dim, tmp_path):
+    """The classify pass's unknown/insert/update counts and the dispatch
     branches come from one predicate definition: insert and replace
     are inserts, and an unknown op and a NULL op are both unknown."""
     events_dir = str(tmp_path / "events")
@@ -244,7 +246,7 @@ def test_probe_op_counts_equal_split_by_operation(spark, places_dim, tmp_path):
     ])
     batch = spark.read.schema(schemas.CDC_EVENT).json(events_dir)
     parts = split_by_operation(batch)
-    probe = probe_batch(batch, places_dim)
+    _, probe = classify_batch(batch, places_dim)
     counts = {kind: df.count() for kind, df in parts.items()}
     assert counts == {"insert": 2, "update": 1, "delete": 1, "unknown": 2}
     assert (probe["u"], probe["i"], probe["p"]) == (
@@ -281,11 +283,59 @@ def test_apply_cdc_batch_returns_pipeline_counters(spark, places_dim, tmp_path):
         "insert_fk_orphans": 2,
         "update_fk_orphans": 1,
         "touched_buckets": 1,
+        "inserted": 2,
+        "fk_dead_lettered": 2,
     }
     fact = read_target(spark, target)
     assert {r.id: r.temp_c for r in fact.collect()} == {"w1": 30.0, "w2": 20.0}
     rejected = spark.read.json(os.path.join(dlq, "fk_violations"))
     assert sorted(r._id for r in rejected.collect()) == ["w3", "w8"]
+
+
+def test_classify_orphans_equal_fk_violations(spark, tmp_path):
+    """The ``__orphan`` flag is ``integrity.fk_violations``: an event
+    with a NULL place_id (or no document at all) is an orphan, a dim
+    key listed twice matches once without duplicating the event, and a
+    NULL dim key matches nothing."""
+    batch = _read_events(spark, str(tmp_path / "events"), [
+        _event("insert", doc=_doc("w1", "hanoi")),
+        _event("insert", doc=_doc("w2", None)),                      # NULL fk
+        _event("update", doc=_doc("w3", "nowhere", 5.0), key="w3"),
+        _event("update", doc=_doc("w4", "hue", 6.0), key="w4"),
+        _event("delete", key="w1"),
+    ])
+    dim = spark.createDataFrame(
+        [("hanoi",), ("hanoi",), (None,), ("hue",)], "place_id string"
+    )
+    classified, counts = classify_batch(batch, dim)
+    flat = batch.select("operation_type", "full_document.*")
+    expected = fk_violations(flat, dim, "place_id").select(*flat.columns)
+    got = classified.filter(F.col(ORPHAN)).select("operation_type", "full_document.*")
+    assert classified.count() == batch.count()
+    assert sorted(map(str, got.collect())) == sorted(map(str, expected.collect()))
+    assert sorted(r._id or "" for r in got.collect()) == ["", "w2", "w3"]
+    assert (counts["io"], counts["po"]) == (1, 1)
+
+
+def test_declared_fact_schema_equals_the_written_one(spark, places_dim, tmp_path):
+    """``schemas.WEATHER_FACT``, the schema the CDC merge reads its
+    target with, is the schema an insert+update batch writes, so a
+    change to the flatten projection fails here rather than in a
+    declared-schema read."""
+    batch = _read_events(spark, str(tmp_path / "events"), [
+        _event("insert", doc=_doc("w1", "hanoi")),
+        _event("update", doc=_doc("w1", "hanoi", 30.0), key="w1"),
+        _event("update", doc=_doc("w2", "hue", 31.0), key="w2"),
+    ])
+    target = str(tmp_path / "fact")
+    apply_cdc_batch(batch, 0, target, places_dim, str(tmp_path / "dlq"))
+    inferred = spark.read.parquet(target)
+    assert inferred.drop(PART_COL).schema == schemas.WEATHER_FACT
+    assert inferred.schema[PART_COL].dataType.typeName() == "integer"
+    declared = read_target(spark, target, schemas.WEATHER_FACT)
+    assert sorted(map(str, declared.collect())) == sorted(
+        map(str, read_target(spark, target).collect())
+    )
 
 
 def test_cdc_replay_evaluates_the_dim_once_per_batch(spark, tmp_path):

@@ -107,6 +107,21 @@ def test_python_datasource_streams_hourly_microbatches(spark):
     assert got == want and len(got) == 15
 
 
+def test_python_datasource_stream_query_drops_its_memory_view(spark, sf_dir):
+    """The registry's python-datasource stream query reads its memory
+    sink through ``phasing.read_memory``: the session's tables are the
+    same after the call, and the pinned result still holds all 30
+    places."""
+    from implementing_a_data_lake_using_mongodb_integrated_with_bigquery_spark.registry import (
+        q_python_datasource_stream,
+    )
+
+    before = spark.catalog.listTables()
+    out = q_python_datasource_stream(spark, sf_dir)
+    assert spark.catalog.listTables() == before
+    assert out.count() == 30
+
+
 def test_stream_session_windows_match_batch_islands(spark, sf_dir):
     """Streaming session_window (append, watermarked) == batch
     gap-sessionization restricted to watermark-closed sessions."""
